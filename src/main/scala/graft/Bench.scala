@@ -1,42 +1,8 @@
 package graft
 
-/** Benchmark main — one JSON line with per-query seconds over the
-  * registry, plus a SELF-ADJUDICATING box-load control: a pinned
-  * control query (`q_mann_whitney`, untouched since its 0.79 s
-  * sf0.1 pin) interleaved every [[controlEvery]] entries. Each
-  * timed entry is reported raw AND control-normalized (raw divided
-  * by the local control level), and the run prints a contamination
-  * verdict: control median ratio > 1.5× the pin ⇒ the readings are
-  * flagged "indicative only". Rationale: four straight rounds
-  * (r9–r12) of driver bench runs landed in host-contention windows
-  * and needed manual outlier adjudication against exactly this
-  * control — the run now carries its own evidence.
-  *
-  * Normalization contract: `queries_norm[k] = raw / max(1, local)`
-  * where `local` = mean of the two bracketing control readings over
-  * the pin. Clamped at 1 so a faster-than-pin-window box never
-  * manufactures speedups; raw stays the recorded number and pins
-  * only move on BenchOne ×3 evidence (the standing protocol) — the
-  * normalized column is the adjudication hint, not the pin source.
-  */
+/** Storage hygiene for timed runs: the benchmark harness
+  * (`perfbench/`) calls [[clearStorage]] before every timed step. */
 object Bench {
-  /** Control cadence: one control run before entry 0, then after
-    * every 25 timed entries, then one after the last — ~13 extra
-    * sub-second runs on a ~270-entry registry. */
-  private[graft] val controlEvery = 25
-
-  /** Median of `series / pin` (1.0 for an empty series). */
-  private[graft] def medianRatio(series: Seq[Double], pin: Double): Double = {
-    val s = series.map(_ / pin).sorted
-    if (s.isEmpty) 1.0
-    else if (s.size % 2 == 1) s(s.size / 2)
-    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-  }
-
-  /** The contamination verdict: control median > 1.5× its pin. */
-  private[graft] def contaminated(series: Seq[Double], pin: Double): Boolean =
-    medianRatio(series, pin) > 1.5
-
   /** Cold storage state for a timed entry: drop the SQL cache AND
     * every persistent RDD block left behind by earlier entries.
     * Operators `localCheckpoint`/`persist` intermediates and the
@@ -44,8 +10,8 @@ object Bench {
     * `clearCache()` alone only drops catalog-tracked Dataset caches,
     * so checkpoint RDD blocks accumulated across a ~280-entry run and
     * later heavy entries paid earlier entries' eviction/GC churn —
-    * r13's in-run graph_triangles read 2.9–5.0× its pin while
-    * isolated BenchOne read AT pin. BLOCKING unpersist: the wait
+    * r13's in-run graph_triangles read 2.9–5.0× its pin while the
+    * same entry timed alone read AT pin. BLOCKING unpersist: the wait
     * lands here, BEFORE the caller starts its timer, so block
     * removal and its GC churn never run concurrently with the timed
     * query — an async removal would reintroduce exactly the
@@ -55,156 +21,5 @@ object Bench {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
-  }
-
-  /** Local control level for the entry at index `i`: mean of the
-    * bracketing control readings (controls = (position, seconds),
-    * position = index of the entry the control ran before; the final
-    * control's position is one past the last entry), over the pin,
-    * clamped at 1.0 (never inflate readings on a fast box). */
-  private[graft] def localRatio(i: Int, controls: Seq[(Int, Double)],
-                                pin: Double): Double = {
-    require(controls.nonEmpty && pin > 0, "need controls and a pin")
-    val before = controls.filter(_._1 <= i).lastOption.getOrElse(controls.head)
-    val after  = controls.find(_._1 > i).getOrElse(controls.last)
-    math.max(1.0, ((before._2 + after._2) / 2.0) / pin)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.build(cpus)
-    // Warm the JVM/codegen/IO paths AND the common execution machinery
-    // (scan, hash agg, broadcast join, window, sort) so the first
-    // timed queries aren't charged for engine bring-up — measured at
-    // ~2s of one-time JIT otherwise landing on whichever query runs
-    // first. Generic plans only: no timed query's plan is pre-run.
-    locally {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      li.groupBy("l_returnflag").count().collect()
-      li.select(col("l_orderkey"), col("l_suppkey"), col("l_extendedprice"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("l_suppkey")).orderBy(col("l_extendedprice"))))
-        .join(broadcast(spark.read.parquet(s"$sfDir/nation.parquet")),
-          col("l_suppkey") % 25 === col("n_nationkey"))
-        .groupBy(col("n_name")).agg(sum(col("l_extendedprice")).as("s"))
-        .orderBy(col("s").desc).limit(5).collect()
-      // MLlib bring-up (BLAS init, optimizer/aggregator JIT): the
-      // first estimator fit in a JVM measured 6–15s above its steady
-      // state, a one-time cost that landed on whichever MLlib entry
-      // ran first and swamped its pin. Tiny fits on a 16-row frame
-      // warm the path; the timed entries' own models still fit on
-      // the real data.
-      import org.apache.spark.ml.classification.LogisticRegression
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
-      val tiny = spark.range(16).select(col("id"),
-        array_to_vector(array((col("id") % 3).cast("double"),
-          (col("id") % 5).cast("double"))).as("features"),
-        (col("id") % 2).cast("int").as("label"))
-      new KMeans().setK(2).setSeed(1L).setMaxIter(2)
-        .setFeaturesCol("features").fit(tiny)
-      new LogisticRegression().setMaxIter(2).setFeaturesCol("features")
-        .setLabelCol("label").fit(tiny)
-    }
-    val controlName = "q_mann_whitney"
-    // the idle sf0.1 BenchOne ×3 steady (BASELINE.md pin table);
-    // overridable when benching another SF where the pin is invalid
-    val controlPin =
-      sys.env.getOrElse("SPARK_GRAFT_CONTROL_PIN", "0.79").toDouble
-    val controlFn = SparkEntry.queries(controlName)
-    def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double = {
-      clearStorage(spark)
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val controls = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-    // Fixed name order: JIT warmth and storage state then can't shift
-    // between runs just because Map iteration order changed.
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    val results = ordered.zipWithIndex.map { case ((name, fn), i) =>
-      if (i % controlEvery == 0) controls += ((i, timeOnce(controlFn)))
-      // Each query is timed from a cold storage state: SQL cache AND
-      // accumulated checkpoint/persisted RDD blocks (see clearStorage)
-      // — without the RDD sweep, later queries pay earlier queries'
-      // evictions.
-      clearStorage(spark)
-      val t0 = System.nanoTime()
-      // noop-write runs the FULL plan (final sorts/limits included —
-      // count() would let Catalyst prune them) without collect()'s
-      // driver deserialization, which at larger SF distorts the
-      // timing and can OOM the driver on wide results.
-      val ok =
-        try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(
-            s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-          false
-        }
-      (name, (System.nanoTime() - t0) / 1e9, ok)
-    }
-    controls += ((ordered.size, timeOnce(controlFn)))
-    val series = controls.map(_._2).toSeq
-    val medRatio = medianRatio(series, controlPin)
-    val isContaminated = contaminated(series, controlPin)
-    if (isContaminated)
-      System.err.println(f"[bench] CONTAMINATED RUN: control " +
-        f"$controlName median ${medRatio}%.2fx its ${controlPin}%.2fs pin " +
-        "- readings indicative only; adjudicate via queries_norm / BenchOne")
-    else
-      System.err.println(
-        f"[bench] control $controlName median ratio ${medRatio}%.2fx - ok")
-    val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val qsNorm = results.zipWithIndex.map { case ((k, v, _), i) =>
-      val n = v / localRatio(i, controls.toSeq, controlPin)
-      "\"" + k + "\":" + math.rint(n * 10000) / 10000
-    }.mkString("{", ",", "}")
-    val controlJson = {
-      val ser = series.map(v => math.rint(v * 10000) / 10000)
-        .mkString("[", ",", "]")
-      f"""{"name":"$controlName","pin":$controlPin,"every":$controlEvery,""" +
-        f""""series":$ser,"median_ratio":${math.rint(medRatio * 10000) / 10000},""" +
-        s""""contaminated":$isContaminated}"""
-    }
-    // A failing query must surface as a failure, never as a ~0s
-    // "improvement" to the total: the total sums OK queries only, and
-    // any non-empty failed list marks the whole total non-comparable.
-    val failed = results.collect { case (k, _, false) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val okCount = results.count(_._3)
-    val total = results.collect { case (_, v, true) => v }.sum
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","ok":$okCount,""" +
-        s""""queries":$qs,"queries_norm":$qsNorm,"control":$controlJson,""" +
-        s""""failed":$failed,"sf":"$sfDir"}"""
-    println(fullLine)
-    // Compact headline LAST: the driver archives a bounded tail of
-    // stdout, and with ~270 queries the full line above can exceed it —
-    // round 5's artifact lost the total and the first 11 queries to
-    // exactly that truncation. Whatever gets cut, the final short line
-    // always survives a tail capture.
-    println(f"""{"metric":"summary","total_s":$total%.2f,"ok":$okCount,"n":${results.size},"failed":$failed,"control_median_ratio":${math.rint(medRatio * 10000) / 10000},"contaminated":$isContaminated,"sf":"$sfDir"}""")
-    // The stdout tail a harness archives truncates the full per-query
-    // line (and sbt's own epilogue is the true last line, so a
-    // parse-the-last-line consumer gets nothing) — ALSO durably write
-    // the complete metric line next to the build so the full
-    // per-query table survives any stdout capture window.
-    // Anchor to an explicit root so the file lands in the repo even
-    // when the JVM's working directory is not the build root:
-    // -Dgraft.bench.dir wins, then user.dir (sbt runs from the root).
-    val benchDir = java.nio.file.Paths.get(
-      sys.props.getOrElse("graft.bench.dir", sys.props("user.dir")))
-    val benchPath = benchDir.resolve("BENCH_LOCAL.json").toAbsolutePath
-    try {
-      java.nio.file.Files.writeString(benchPath, fullLine + "\n")
-      System.err.println(s"[bench] wrote $benchPath")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] $benchPath write failed: $e") }
-    spark.stop()
   }
 }

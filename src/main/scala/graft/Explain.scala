@@ -8,8 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = GraftSession.build("8",
-      Map("spark.sql.session.timeZone" -> "UTC"))
+    val spark = GraftSession.build("8")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n########## $n")

@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The single "open the engine" entry point: every main (Bench,
-  * BenchOne, Verify) and any embedding application builds its session
-  * here, so the confs the engine needs before its FIRST table read are
-  * set in one place instead of as side effects of whichever loader
-  * happens to run first.
+/** The single "open the engine" entry point: every main (Verify,
+  * Explain, the perfbench harness) and any embedding application
+  * builds its session here, so the confs the engine needs before its
+  * FIRST table read are set in one place instead of as side effects
+  * of whichever loader happens to run first.
   *
   * Why this exists: `events.parquet` has shipped carrying
   * TIMESTAMP(NANOS), which Spark 4 rejects at scan time unless the
@@ -45,20 +45,17 @@ object GraftSession {
     * shuffle parallelism matched to the core count (not the 200
     * default — at local scale 200 tiny shuffle partitions are pure
     * scheduling overhead; on a real cluster this knob is sized to
-    * executors × cores). Extra confs layer on top. */
-  def build(cpus: String, extraConfs: Map[String, String] = Map.empty): SparkSession = {
+    * executors × cores). */
+  def build(cpus: String): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-    val all = requiredConfs ++ extraConfs
-    all.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
+    requiredConfs.foreach { case (k, v) => b.config(k, v) }
     // getOrCreate can return a pre-existing session whose builder
-    // confs were ignored — re-apply EVERYTHING requested, required
-    // and caller extras alike, so an embedding JVM's stale session
-    // can't silently drop them
-    all.foreach { case (k, v) => s.conf.set(k, v) }
+    // confs were ignored — re-apply the required confs so an
+    // embedding JVM's stale session can't silently drop them
+    val s = configure(b.getOrCreate())
     s.sparkContext.setLogLevel("WARN")
     s
   }

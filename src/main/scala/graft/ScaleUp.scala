@@ -156,7 +156,7 @@ object ScaleUp {
     // sf0.1 max keys), so modulus-based subsets (`% 97` erasure
     // subjects, `% 10` holdouts) keep selecting the same fraction of
     // every copy. With all ten tables present the output dir is a
-    // complete sf dir: Bench/BenchOne run against it directly.
+    // complete sf dir: Verify and Explain run against it directly.
     val okOff = 1000000L * offMult; val pkOff = 100000L * offMult
     val skOff = 10000L * offMult; val ckOff = 100000L * offMult
     def copies(table: String)(f: Int => org.apache.spark.sql.DataFrame): Unit =

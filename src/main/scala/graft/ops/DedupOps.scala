@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.Tables
-import graft.functions.SimHash
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,9 +13,10 @@ import org.apache.spark.sql.functions._
   *    from equality joins on band signatures (never an all-pairs
   *    product), then exact-Jaccard verification touches candidates
   *    only. This is the 100 TB path: O(n·bands) shuffle rows.
-  *  - simhash: 64-bit signatures, multi-index 4×16-bit chunks with
-  *    1-bit probe enumeration (pigeonhole guarantees recall for
-  *    hamming ≤ 2·bands-1 = 7), hamming + exact-Jaccard verification.
+  *  - simhash: 60-bit md5-prefix signatures, multi-index 4×15-bit
+  *    chunks with 1-bit probe enumeration (pigeonhole guarantees
+  *    recall for hamming ≤ 2·bands-1 = 7), hamming + exact-Jaccard
+  *    verification.
   *  - exact n-gram Jaccard: inverted-index self-join — the exact
   *    baseline the probabilistic paths are measured against.
   *  - embedding cosine: an exact all-pairs face (the oracle-checked
@@ -887,71 +887,27 @@ object DedupOps {
 
   // ---- SimHash ---------------------------------------------------------
 
-  /** Near-dup pairs by SimHash hamming distance ≤ maxHamming, found
-    * by multi-index hashing (Norouzi et al., CVPR'12): the 64-bit
-    * signature splits into `bands` chunks of 64/bands bits, the index
-    * side posts each chunk value, and the probe side enumerates each
-    * chunk's 1-bit variants. By pigeonhole a pair within hamming
-    * 2·bands-1 has some chunk with ≤ 1 differing bit, so recall is
-    * EXACT for the default (4 chunks × 16 bits ⇒ hamming ≤ 7).
-    *
-    * The 16-bit chunks are what survives scale: 8-bit chunks have 256
-    * values, so at billions of docs every bucket holds ~n/256 docs
-    * and the self-join goes ~n²/256; 16-bit chunks spread over 65536
-    * values at the price of 17 probe keys per chunk, and `maxBucket`
-    * bounds adversarial residue. SimHash scores token-*distribution*
-    * similarity — on narrow-vocabulary corpora the hamming ball is a
-    * recall-oriented candidate generator whose volume grows with the
-    * corpus, so the operator composes the exact-Jaccard verifier over
-    * the survivors and emits verified (id1, id2, hamming, jaccard)
-    * pairs, the same complete-dedup contract as minhash/ngram. */
-  def simhashPairs(s: SparkSession, d: String, maxHamming: Int = 7,
-                   bands: Int = 4, maxBucket: Int = 1000,
-                   threshold: Double = 0.8): DataFrame =
-    simhashPairsOn(s, Tables.documents(s, d), maxHamming, bands, maxBucket,
-      threshold)
-
-  /** Same over any (doc_id, text) frame. */
-  def simhashPairsOn(s: SparkSession, docs: DataFrame, maxHamming: Int = 7,
-                     bands: Int = 4, maxBucket: Int = 1000,
-                     threshold: Double = 0.8): DataFrame = {
-    // ONE scan/tokenize pass feeds both the SimHash signatures and the
-    // shingle sets the exact-Jaccard verifier needs — staged and
-    // cached together instead of two independent corpus scans
-    val staged = Tables.spread(docs)
-      .select(col("doc_id"), TextOps.toks(col("text")).as("__t"))
-      .select(col("doc_id"),
-        SimHash.simhash64(s, col("__t")).as("sig"),
-        shingleHashesExpr(col("__t")).as("hs"))
-      .withColumn("n", size(col("hs")))
-      .cache()
-    simhashCore(staged, 64, maxHamming, bands, maxBucket, threshold)
-  }
-
-  /** The CHECKED face of [[simhashPairsOn]] (the approx-tier gating
-    * pattern): the production signature hashes tokens with xxhash64,
-    * which no other engine computes — but SimHash is hash-agnostic,
-    * so this face derives each token's 60-bit hash from an md5
-    * prefix (`conv(substr(md5(tok),1,15),16,10)`; DuckDB:
-    * `('0x'||substr(md5(tok),1,15))::UBIGINT`) and builds the
-    * signature from builtin expressions only: per-token ±1 bit
-    * votes folded with `aggregate`/`zip_with` (row-local, no
-    * shuffle), sign-thresholded into a 60-bit BIGINT. Every
-    * downstream number — the multi-index candidate walk, hamming
-    * distances, exact-Jaccard verification — is then integer
-    * arithmetic both engines replay bit for bit, so the oracle
-    * re-derives the COMPLETE pair list (60 bits in 4 bands of 15
-    * keeps the pigeonhole exactness to hamming 2·bands-1 = 7; an
-    * all-pairs bit_count(xor) in SQL is the oracle's shape, the
-    * banded index is Spark's). The default maxBucket is UNCAPPED
-    * here, unlike the production face: the oracle's all-pairs scan
-    * has no cap, so a band bucket overflowing the cap (a mass-dup
-    * cluster larger than maxBucket) would drop capped-out pairs on
-    * the Spark side only and fail verification against a correct
-    * engine — exactly the completeness the checked face exists to
-    * prove. Production callers keep the capped xxhash64 kernel face,
-    * whose cap is a recall trade documented there, not a parity
-    * contract. */
+  /** Near-dup pairs by SimHash hamming distance ≤ maxHamming over any
+    * (doc_id, text) frame, exact-Jaccard verified (see [[simhashCore]]
+    * for the multi-index candidate walk). The CHECKED signature (the
+    * approx-tier gating pattern): SimHash is hash-agnostic, so each
+    * token's 60-bit hash is an md5 prefix
+    * (`conv(substr(md5(tok),1,15),16,10)`; DuckDB:
+    * `('0x'||substr(md5(tok),1,15))::UBIGINT`) and the signature is
+    * built from builtin expressions only: per-token ±1 bit votes
+    * folded with `aggregate`/`transform` (row-local, no shuffle),
+    * sign-thresholded into a 60-bit BIGINT. Every downstream number —
+    * the multi-index candidate walk, hamming distances, exact-Jaccard
+    * verification — is then integer arithmetic both engines replay
+    * bit for bit, so the oracle re-derives the COMPLETE pair list (60
+    * bits in 4 bands of 15 keeps the pigeonhole exactness to hamming
+    * 2·bands-1 = 7; an all-pairs bit_count(xor) in SQL is the
+    * oracle's shape, the banded index is Spark's). The default
+    * maxBucket is UNCAPPED: the oracle's all-pairs scan has no cap, so
+    * a band bucket overflowing the cap (a mass-dup cluster larger
+    * than maxBucket) would drop capped-out pairs on the Spark side
+    * only and fail verification against a correct engine — exactly
+    * the completeness this face exists to prove. */
   def simhashPairsCheckedOn(docs: DataFrame, maxHamming: Int = 7,
                             bands: Int = 4, maxBucket: Int = Int.MaxValue,
                             threshold: Double = 0.8): DataFrame = {
@@ -983,10 +939,6 @@ object DedupOps {
     simhashCore(staged, sigBits, maxHamming, bands, maxBucket, threshold)
   }
 
-  /** Multi-index candidate walk + hamming filter + exact-Jaccard
-    * verification over a staged (doc_id, sig, hs, n) frame — shared
-    * by the xxhash64 production face and the md5 checked face so the
-    * banding mechanics cannot drift between them. */
   /** The checked faces' DuckDB oracle, parameterized by the hamming
     * bound so the 4×15 (≤7) and 3×20 (≤5) band widths share one
     * member chain (the compareOracleSql/ensembleOracleSql
@@ -1027,6 +979,26 @@ object DedupOps {
        |WHERE round(common * 1.0 / (sx.n + sy.n - common), 4) >= 0.8
        |ORDER BY id1, id2""".stripMargin
 
+  /** Multi-index candidate walk + hamming filter + exact-Jaccard
+    * verification over a staged (doc_id, sig, hs, n) frame of
+    * `sigBits`-bit signatures. Multi-index hashing (Norouzi et al.,
+    * CVPR'12): the signature splits into `bands` chunks of
+    * sigBits/bands bits, the index side posts each chunk value, and
+    * the probe side enumerates each chunk's 1-bit variants. By
+    * pigeonhole a pair within hamming 2·bands-1 has some chunk with
+    * ≤ 1 differing bit, so recall is EXACT up to that radius.
+    *
+    * Wide (15–20-bit) chunks are what survives scale: 8-bit chunks
+    * have 256 values, so at billions of docs every bucket holds
+    * ~n/256 docs and the self-join goes ~n²/256; 15-bit chunks spread
+    * over 32768 values at the price of more probe keys per chunk, and
+    * `maxBucket` bounds adversarial residue. SimHash scores
+    * token-*distribution* similarity — on narrow-vocabulary corpora
+    * the hamming ball is a recall-oriented candidate generator whose
+    * volume grows with the corpus, so the walk composes the
+    * exact-Jaccard verifier over the survivors and emits verified
+    * (id1, id2, hamming, jaccard) pairs, the same complete-dedup
+    * contract as minhash/ngram. */
   private def simhashCore(staged: DataFrame, sigBits: Int, maxHamming: Int,
                           bands: Int, maxBucket: Int,
                           threshold: Double): DataFrame = {

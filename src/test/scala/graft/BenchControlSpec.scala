@@ -2,59 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench's box-load self-adjudication (VERDICT r12 ask #1): an
-  * artificially loaded run must demonstrably self-flag, and the
-  * control-normalized readings must deflate by the measured load
-  * level — pinned here against the pure adjudication functions the
-  * main interleaves, so the contract holds without running a loaded
-  * bench. */
+/** The storage-clean contract the benchmark harness relies on before
+  * every timed step. Runs in its own forked JVM (see build.sbt):
+  * clearStorage unpersists every RDD on its context, other suites'
+  * included. */
 class BenchControlSpec extends AnyFunSuite with SparkSpec {
-
-  private val pin = 0.79
-
-  test("idle control series adjudicates clean") {
-    // readings at/near the pin — the r12 idle re-pin shape
-    val series = Seq(0.76, 0.81, 0.79, 0.83, 0.78)
-    assert(!Bench.contaminated(series, pin))
-    assert(math.abs(Bench.medianRatio(series, pin) - 1.0) < 0.1)
-  }
-
-  test("a 2x-loaded run self-flags as contaminated") {
-    // the r12 driver-bench window: host uniformly ~2x slower
-    val loaded = Seq(1.55, 1.62, 1.49, 1.70, 1.58)
-    assert(Bench.contaminated(loaded, pin))
-    assert(Bench.medianRatio(loaded, pin) > 1.5)
-  }
-
-  test("verdict threshold is 1.5x the pin, median-robust") {
-    // one spike in an otherwise idle series must NOT flag the run
-    val spiky = Seq(0.79, 0.80, 2.50, 0.78, 0.81)
-    assert(!Bench.contaminated(spiky, pin))
-    // a majority-loaded series flags even with one idle reading
-    val mostlyLoaded = Seq(0.80, 1.30, 1.30, 1.30, 1.30)
-    assert(Bench.contaminated(mostlyLoaded, pin))
-  }
-
-  test("localRatio normalizes by the bracketing controls, clamped at 1") {
-    // controls at positions 0 and 25: idle then 2x-loaded
-    val controls = Seq((0, 0.79), (25, 1.58 * 2 - 0.79)) // mean = 1.58
-    // an entry inside the bracket sees the mean level (2x pin)
-    assert(math.abs(Bench.localRatio(10, controls, pin) - 2.0) < 1e-9)
-    // a fast box (controls below pin) clamps to 1 — raw is kept,
-    // speedups are never manufactured
-    val fast = Seq((0, 0.60), (25, 0.55))
-    assert(Bench.localRatio(10, fast, pin) == 1.0)
-    // past the last control, the last reading brackets both sides
-    val tail = Seq((0, 0.79), (25, 0.79))
-    assert(Bench.localRatio(30, tail, pin) == 1.0)
-  }
-
-  test("normalized seconds halve a reading taken on a 2x box") {
-    val controls = Seq((0, 1.58), (25, 1.58))
-    val raw = 4.0
-    val norm = raw / Bench.localRatio(5, controls, pin)
-    assert(math.abs(norm - 2.0) < 1e-9)
-  }
 
   test("clearStorage drops checkpoint RDD blocks clearCache leaves") {
     // The storage-clean contract (VERDICT r13 ask #1): operators
@@ -71,14 +23,5 @@ class BenchControlSpec extends AnyFunSuite with SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
     Bench.clearStorage(spark)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
-  }
-
-  test("control cadence covers a registry-sized run") {
-    // ~270 entries at every-25 → 12 interleaved + 1 final control:
-    // sub-second each, bounded overhead, bracketing for every index
-    assert(Bench.controlEvery == 25)
-    val positions = (0 until 270 by Bench.controlEvery) :+ 270
-    assert(positions.size == 12)
-    assert(positions.head == 0 && positions.last == 270)
   }
 }

@@ -108,21 +108,6 @@ class DedupSpec extends SparkSpec {
     assert(capped.size === 22)
   }
 
-  test("simhash pairs: verified near-dups, schema (id1,id2,hamming,jaccard)") {
-    val rows = DedupOps.simhashPairs(spark, sf, threshold = 0.8).collect()
-    val sim = rows.map(r => (r.getLong(0), r.getLong(1))).toSet
-    // every emitted pair is exact-verified at the threshold
-    rows.foreach { r =>
-      assert(r.getInt(2) <= 7)
-      assert(r.getDouble(3) >= 0.8)
-    }
-    val planted = DedupOps.ngramJaccard(spark, sf, threshold = 0.95).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // ~99%-similar docs collide in simhash space AND survive the
-    // exact-Jaccard verifier, so the planted pairs must all be present
-    assert(planted.nonEmpty && planted.subsetOf(sim))
-  }
-
   test("checked simhash face: banded index agrees with brute-force " +
        "hamming over the md5 signatures, planted pairs survive") {
     val docs = Tables.documents(spark, sf)
@@ -140,22 +125,24 @@ class DedupSpec extends SparkSpec {
 
   test("simhash rejects a maxHamming beyond the probe-exact radius") {
     intercept[IllegalArgumentException] {
-      DedupOps.simhashPairs(spark, sf, maxHamming = 8, bands = 4)
+      DedupOps.simhashPairsCheckedOn(Tables.documents(spark, sf),
+        maxHamming = 8, bands = 4)
     }
   }
 
   test("simhash multi-index recall is banding-independent at radius 7") {
-    // 4×16 (1-bit probes ⇒ exact ≤ 7) and 8×8 (exact ≤ 15, filtered
+    // 4×15 (1-bit probes ⇒ exact ≤ 7) and 6×10 (exact ≤ 11, filtered
     // to 7) must produce identical pair sets — the banding is an
-    // index layout, not a semantics knob. maxBucket pinned to ∞: 8-bit
-    // chunks have only 256 values and engage the cap far earlier than
-    // 16-bit chunks, and once a cap engages, capped-out pairs connect
+    // index layout, not a semantics knob. maxBucket pinned to ∞: 10-bit
+    // chunks have only 1024 values and engage a cap far earlier than
+    // 15-bit chunks, and once a cap engages, capped-out pairs connect
     // only via representatives and the sets may legitimately diverge.
-    val wide = DedupOps.simhashPairs(spark, sf, maxHamming = 7, bands = 4,
-        maxBucket = Int.MaxValue)
+    val docs = Tables.documents(spark, sf)
+    val wide = DedupOps.simhashPairsCheckedOn(docs, maxHamming = 7,
+        bands = 4, maxBucket = Int.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val narrow = DedupOps.simhashPairs(spark, sf, maxHamming = 7, bands = 8,
-        maxBucket = Int.MaxValue)
+    val narrow = DedupOps.simhashPairsCheckedOn(docs, maxHamming = 7,
+        bands = 6, maxBucket = Int.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(wide === narrow && wide.nonEmpty)
   }

@@ -2,35 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Registry bookkeeping invariants — the contracts the driver's gate
-  * and the benchmark baseline both depend on but nothing previously
-  * enforced mechanically:
-  *
-  *  - every `queries` entry carries an `oracleSql` entry (a missing
-  *    oracle silently downgrades the driver's check to rows-only);
-  *  - every entry has a pin row in BASELINE.md's table (round 10's
-  *    verdict caught q_scalar_subquery as the one unpinned entry —
-  *    this spec makes that class impossible to reintroduce);
-  *  - no pin row is stale (naming an entry that no longer exists),
-  *    so the baseline table and the registry can't drift apart.
-  *
-  * Reads BASELINE.md from the working directory — sbt runs specs
-  * from the repo root, same contract as the testdata paths.
-  */
+/** Registry bookkeeping invariant the oracle gate depends on:
+  * `queries` and `oracleSql` name exactly the same entries (a missing
+  * oracle silently downgrades the check to rows-only; an orphan
+  * oracle names an entry that no longer exists). */
 class RegistrySpec extends AnyFunSuite {
-
-  private lazy val pinned: Set[String] = {
-    // explicit UTF-8: the file carries multiplication signs and the
-    // test JVM's default charset is not guaranteed
-    val src = scala.io.Source.fromFile("BASELINE.md", "UTF-8")
-    try src.getLines()
-      .flatMap { l =>
-        "^\\|\\s*([a-z0-9_]+)\\s*\\|\\s*[0-9.]+\\s*\\|\\s*$".r
-          .findFirstMatchIn(l).map(_.group(1))
-      }
-      .toSet
-    finally src.close()
-  }
 
   test("every query entry has an oracle") {
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
@@ -40,15 +16,5 @@ class RegistrySpec extends AnyFunSuite {
   test("every oracle names a registered entry") {
     val orphan = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphan.isEmpty, s"oracles without a queries entry: $orphan")
-  }
-
-  test("every query entry has a BASELINE.md pin row") {
-    val unpinned = SparkEntry.queries.keySet -- pinned
-    assert(unpinned.isEmpty, s"entries without a pin: $unpinned")
-  }
-
-  test("no BASELINE.md pin row is stale") {
-    val stale = pinned -- SparkEntry.queries.keySet
-    assert(stale.isEmpty, s"pins naming no entry: $stale")
   }
 }
