@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The single "open the engine" entry point: every main (Verify,
-  * Explain, the perfbench harness) and any embedding application
-  * builds its session here, so the confs the engine needs before its
-  * FIRST table read are set in one place instead of as side effects
-  * of whichever loader happens to run first.
+  * Explain, ScaleUp, the perfbench harness) and any embedding
+  * application builds its session here, so the confs the engine needs
+  * before its FIRST table read are set in one place instead of as side
+  * effects of whichever loader happens to run first.
   *
   * Why this exists: `events.parquet` has shipped carrying
   * TIMESTAMP(NANOS), which Spark 4 rejects at scan time unless the
@@ -19,6 +19,18 @@ import org.apache.spark.sql.SparkSession
   * caller-built sessions, engaged when the nanos scan actually
   * rejects); IsolationSpec runs each entry against
   * deliberately-reset conf state to keep it that way.
+  *
+  * Two kinds of conf, two ways in:
+  *  - runtime confs ([[requiredConfs]]) can be set on a live session,
+  *    so [[configure]] (or `spark.conf.set`) applies them to any
+  *    session, a caller-built one included;
+  *  - static confs ([[engineConfs]]' codegen cache size) are read once
+  *    per JVM: `CodeGenerator` sizes its compiled-class cache from the
+  *    active conf the first time anything is compiled. They only take
+  *    effect as builder confs of the JVM's FIRST session; `configure`
+  *    and `spark.conf.set` cannot apply them, and [[build]] on a JVM
+  *    that already has a session (`getOrCreate` returns it) keeps the
+  *    cache size that session fixed.
   */
 object GraftSession {
 
@@ -34,6 +46,22 @@ object GraftSession {
     // date_trunc by the host offset
     "spark.sql.session.timeZone" -> "UTC")
 
+  /** Codegen confs every engine session is built with, the test
+    * sessions included (SparkSpec), so a repeated call reuses its
+    * compiled classes instead of recompiling them. Builder-only: the
+    * cache size is static (see the object doc). */
+  val engineConfs: Map[String, String] = Map(
+    // Spark's JVM-wide cache of compiled classes defaults to 100
+    // entries over 4 LRU segments; one pass of a graft workload
+    // compiles ~200, so every call after the first recompiled nearly
+    // all its code; the price is heap for the retained classes'
+    // source and bytecode
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    // without the stage id in the class name, stages that differ only
+    // in their position in a plan generate identical source and share
+    // one cached class
+    "spark.sql.codegen.useIdInClassName" -> "false")
+
   /** Apply [[requiredConfs]] to an existing session (all are
     * runtime-settable SQL confs). Idempotent. */
   def configure(s: SparkSession): SparkSession = {
@@ -45,13 +73,14 @@ object GraftSession {
     * shuffle parallelism matched to the core count (not the 200
     * default — at local scale 200 tiny shuffle partitions are pure
     * scheduling overhead; on a real cluster this knob is sized to
-    * executors × cores). */
+    * executors × cores) and [[engineConfs]]. */
   def build(cpus: String): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-    requiredConfs.foreach { case (k, v) => b.config(k, v) }
+      .config(engineConfs)
+      .config(requiredConfs)
     // getOrCreate can return a pre-existing session whose builder
     // confs were ignored — re-apply the required confs so an
     // embedding JVM's stale session can't silently drop them

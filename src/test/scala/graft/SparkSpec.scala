@@ -32,6 +32,10 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the engine's codegen confs: the first session in a JVM fixes
+      // the compiled-class cache size, so specs test the same engine
+      // GraftSession.build opens
+      .config(GraftSession.engineConfs)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     // INFO-level executor logs dominated the suite's wall time and
