@@ -920,7 +920,7 @@ object SparkEntry {
     }),
     // the span LOCATOR in the same tiny-reference regime: map-side
     // gram probe + broadcast span slice, the corpus never exchanged —
-    // identical values, same oracle (Routing.decontaminateSpansAuto)
+    // identical values, same oracle as dedup_decontaminate_spans
     "dedup_decontaminate_spans_bcast" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       DedupOps.decontaminateSpansBroadcast(
@@ -979,7 +979,7 @@ object SparkEntry {
     "ann_ivf_topk"        -> ((s, d) => SimilarityOps.ivfTopK(s, d)),
     // the bounded-build IVF face: md5-bucket-capped sample fit,
     // PINNED cell count past the cap, ONE linear corpus assignment —
-    // the linear-build rung of Routing.annTopKAuto
+    // the linear-build rung of the ANN ladder
     "ann_ivf_topk_sampled" -> ((s, d) => SimilarityOps.ivfTopKSampled(s, d)),
     // the routed ANN tier's recall@k MEASURED against the exact face
     // (both on the quantized cosine grid) — audit operator

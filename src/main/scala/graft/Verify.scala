@@ -15,9 +15,9 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      // isolate queries from each other's cached intermediates (same
-      // rationale as Bench: ops cache(), nothing unpersists)
-      spark.catalog.clearCache()
+      // each entry starts from cold storage, as perfbench's timed
+      // steps do
+      Bench.clearStorage(spark)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

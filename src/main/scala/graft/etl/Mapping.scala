@@ -271,11 +271,7 @@ object Mapping {
     *
     * `orderCol` must be unique for run-to-run determinism: range
     * partitioning may split ties across partitions, so tied rows
-    * would get unique but arbitrary ids.
-    *
-    * Caching contract (PrefixSum): one row-count-sized cached
-    * intermediate per call, freed by `spark.catalog.clearCache()` —
-    * long-lived sessions composing many pipelines own that call. */
+    * would get unique but arbitrary ids. */
   def assignIds(df: DataFrame, orderCol: String): DataFrame =
     // shared distributed prefix sum (see graft.ops.PrefixSum for the
     // plan shape and the exchange-reuse correctness guard): the dense

@@ -49,10 +49,13 @@ object ReferencePipeline {
     "record_id", "event_time", "rider_id", "amount", "legacy_code")
     .map(StructField(_, StringType)))
 
-  /** Stage dir under the build tree, keyed by the sf dir's name so
-    * concurrent runs at different SFs can't clobber each other. */
-  private def stageDir(d: String): String =
-    s"target/e2e_stage/${new java.io.File(d).getName}"
+  /** Stage dir under the build tree, keyed by the sf dir's name AND
+    * the session, so concurrent runs at different SFs or in different
+    * sessions on one context can't clobber each other; repeated runs
+    * in one session overwrite in place. */
+  private[graft] def stageDir(s: SparkSession, d: String): String =
+    s"target/e2e_stage/${new java.io.File(d).getName}-" +
+      Integer.toHexString(System.identityHashCode(s))
 
   /** Write the three raw CSV sources: all-string columns with
     * source-system names, timestamps as their exact string form
@@ -89,7 +92,7 @@ object ReferencePipeline {
   /** The composed pipeline; returns the final day×type matrix
     * (day, clickview, txn, err, amount_sum). */
   def run(s: SparkSession, d: String): DataFrame = {
-    val base = stageDir(d)
+    val base = stageDir(s, d)
     stageCsv(s, d, base)
     val curated = tags.map(t => etlSource(s, s"$base/$t", t))
       .reduce(_.unionByName(_))

@@ -1255,7 +1255,7 @@ object Analytics {
     * row rank is the single-partition window this repo structurally
     * forbids, while distinct 4dp values ride the shared distributed
     * [[PrefixSum]] (range partition → local sums → broadcast offsets;
-    * PrefixSum caching contract applies). Average ranks for ties are
+    * one lazy local checkpoint per call). Average ranks for ties are
     * exact in HALF-RANK integer units (2·rank̄ = 2·cum_below + n + 1),
     * tie correction Σ(n³−n) likewise integer; sums go through
     * DECIMAL(38,0) so 100 TB row counts can't overflow; the
@@ -1308,8 +1308,8 @@ object Analytics {
     * Exactness: both empirical CDFs step only at distinct 4dp values,
     * so the sup is a max over the distinct-value frame — cumulative
     * counts of BOTH samples ride ONE shared
-    * [[PrefixSum.exclusiveMulti]] pass (one range exchange; caching
-    * contract applies), never a per-row global rank. D publishes as
+    * [[PrefixSum.exclusiveMulti]] pass (one range exchange, one
+    * checkpoint), never a per-row global rank. D publishes as
     * the exact integer cross-multiply max|F_A·n_b − F_B·n_a| over
     * n_a·n_b through [[ExactRatio.r4]]; the α=0.05 verdict is the
     * fully integer comparison 250000·D_num² > 461041·(n_a+n_b)·n_a·n_b
@@ -1341,8 +1341,8 @@ object Analytics {
       // attained just after a jump, i.e. at an inclusive step)
       .select((col("__cum0") + col("ca")).as("fa"),
         (col("__cum1") + col("cb")).as("fb"))
-    // totals = the CDF's final step — an aggregate over the CACHED
-    // ranged frame, not a second events scan
+    // totals = the CDF's final step — an aggregate over the
+    // CHECKPOINTED ranged frame, not a second events scan
     val tot = c.agg(max(col("fa")).as("na"), max(col("fb")).as("nb"))
     val m = c.crossJoin(broadcast(tot))
       .groupBy(col("na"), col("nb"))
@@ -1377,13 +1377,12 @@ object Analytics {
     * is R×C-cell-sized, not row-sized. */
   def mutualInfo(df: DataFrame, a: String, b: String): DataFrame = {
     // cells feeds SEVEN downstream branches (joint, rt/ct margins and
-    // their entropies, totals); uncached, each replans the full scan +
-    // aggregation — measured 3.1 s vs 1.0 s at sf0.1. The frame is
-    // R×C-cell-sized, so the cache is label-cardinality bytes
-    // (PrefixSum's caching contract applies: one cached intermediate
-    // per call, session-owned)
+    // their entropies, totals); unmaterialized, each replans the
+    // full scan + aggregation — measured 3.1 s vs 1.0 s at sf0.1. The
+    // frame is R×C-cell-sized, so the checkpoint is label-cardinality
+    // bytes
     val cells = df.groupBy(col(a), col(b)).agg(count(lit(1)).as("o"))
-      .cache()
+      .localCheckpoint(false)
     val rt = cells.groupBy(col(a)).agg(sum(col("o")).as("ra"))
     val ct = cells.groupBy(col(b)).agg(sum(col("o")).as("cb"))
     val tot = cells.agg(sum(col("o")).as("n"))
@@ -1421,12 +1420,11 @@ object Analytics {
           round(col("__mis").cast("double") /
             sqrt(col("__ha").cast("double") * col("__hb").cast("double")),
             4)).otherwise(lit(0.0)).as("nmi"))
-      // the result is ONE row: eager-checkpoint it so the cached
-      // cells frame has no remaining lazy reader and can unpersist
-      // here — repeated calls in a long session no longer accumulate
-      // cached intermediates
+      // the result is ONE row: eager-checkpoint it so the returned
+      // plan no longer reaches the cells checkpoint, whose blocks are
+      // then reclaimed without waiting for the caller to drop the
+      // result
       .localCheckpoint(true)
-    cells.unpersist()
     out
   }
 
@@ -2260,7 +2258,8 @@ object Analytics {
     val um = events
       .select(col("user_id"), date_trunc(unit, col("ts")).as("m"))
       .distinct()
-      .cache() // four consumers: first-month, marker, classify, churn
+      // four consumers: first-month, marker, classify, churn
+      .localCheckpoint(false)
     val first = um.groupBy(col("user_id")).agg(min(col("m")).as("m0"))
     val marker = um.select(col("user_id"),
       (col("m") + expr(s"interval 1 $unit")).as("m"),
@@ -2523,12 +2522,12 @@ object Analytics {
         sum(round(col("o_totalprice") * 10000).cast("long"))
           .as("m_micro"))
     val mx = per0.agg(max(col("last_day")).as("mx"))
-    // customer-grain frame; cached because three rank passes + the
-    // final join tree all consume it
+    // customer-grain frame; checkpointed because three rank passes +
+    // the final join tree all consume it
     val per = per0.crossJoin(broadcast(mx))
       .select(col("c"), (col("mx") - col("last_day")).as("r_days"),
         col("freq"), col("m_micro"))
-      .cache()
+      .localCheckpoint(false)
     val nCust = per.agg(count(lit(1)).as("n"))
     def rankOf(metric: String, as: String): DataFrame =
       PrefixSum.exclusive(per.select(col("c"), col(metric)),

@@ -192,11 +192,7 @@ object CurateOps {
     * partition, the classic scale-killer. Keep rule: a doc survives if
     * the running total INCLUDING it fits the budget (so the output is
     * a prefix of the quality ranking, deterministic under the rounded
-    * score's doc_id tiebreak).
-    *
-    * Caching contract (PrefixSum): one row-count-sized cached
-    * intermediate per call, freed by `spark.catalog.clearCache()` —
-    * long-lived sessions composing many pipelines own that call. */
+    * score's doc_id tiebreak). */
   def tokenBudget(corpus: DataFrame, budgetTokens: Long): DataFrame = {
     require(budgetTokens > 0, s"budgetTokens must be > 0: $budgetTokens")
     val scored = TextOps.qualityScoresOn(corpus.select(col("doc_id"), col("text")))
@@ -225,9 +221,9 @@ object CurateOps {
     * Shape: terms hash to `buckets` features by the 60-bit md5-prefix
     * integer (the hashing-trick contract, TextOps.featureHashing);
     * bucket counts under target/raw fit two map-side-combinable
-    * aggregates over ONE cached token scan; per-bucket log-ratios
-    * λ_b = ln(p̂_target(b)/p̂_raw(b)) (add-one smoothed) ride a
-    * bucket-sized broadcast; a document's importance weight is the
+    * aggregates over ONE checkpointed token scan; per-bucket
+    * log-ratios λ_b = ln(p̂_target(b)/p̂_raw(b)) (add-one smoothed)
+    * ride a bucket-sized broadcast; a document's importance weight is the
     * count-weighted λ sum over its own buckets. Sampling ∝ exp(w) is
     * the Gumbel trick — add g = −ln(−ln(u)) per doc and take the top
     * k — with u an md5 coin, so the draw is deterministic and
@@ -251,15 +247,15 @@ object CurateOps {
     * ceil). */
   def dsirOn(docs: DataFrame, target: Column, buckets: Int,
              keepDenom: Long): DataFrame = {
-    // cached: the token scan feeds the bucket-count aggregate AND the
-    // per-doc feature counts (the lmScoreOn contract)
+    // checkpointed: the token scan feeds the bucket-count aggregate AND
+    // the per-doc feature counts (the lmScoreOn contract)
     val tok = Tables.spread(docs)
       .select(col("doc_id"), target.as("__t"),
         explode(TextOps.toks(col("text"))).as("term"))
       .select(col("doc_id"), col("__t"),
         (conv(substring(md5(col("term")), 1, 15), 16, 10).cast("long")
           % buckets).as("bkt"))
-      .cache()
+      .localCheckpoint(false)
     val counts = tok.groupBy(col("bkt")).agg(
       sum(when(col("__t"), 1L).otherwise(0L)).as("tb"),
       count(lit(1)).as("rb"))
@@ -287,12 +283,11 @@ object CurateOps {
           lit("_dsir"))), 1, 13), 16, 10).cast("double") + 0.5) /
           lit(4503599627370496.0))))).cast("long"))
       // eager: materializes the doc-count-sized scored frame (forcing
-      // both cached-tok consumers), so the corpus-token-scale cache
-      // can be released before returning — a long-lived session
-      // calling dsirSample repeatedly must not accumulate token
-      // blocks until LRU eviction
+      // both checkpointed-tok consumers), so the returned plan no
+      // longer reaches the corpus-token-scale checkpoint and its
+      // blocks are reclaimed without waiting for the caller to drop
+      // the result
       .localCheckpoint(true)
-    tok.unpersist()
     val nDocs = docs.count()
     val keepN = (nDocs + keepDenom - 1) / keepDenom
     PrefixSum.exclusive(scored,

@@ -60,22 +60,24 @@ object DedupOps {
     if (cap == Int.MaxValue) {
       // cap can never fire: skip the per-bucket rank window (a full
       // extra shuffle on the bucket keys) entirely — kept is the input
-      // (cached: callers consume it multiple times), overflow is empty
-      val kept = df.cache()
+      // (checkpointed: callers consume it multiple times), overflow is
+      // empty
+      val kept = df.localCheckpoint(false)
       val overflow = df.limit(0)
         .select(col(idCol).as("id1"), col(idCol).as("id2"))
       return (kept, overflow)
     }
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(idCol))
-    // Cached HERE so kept and overflow share one materialization of
-    // the upstream pipeline (signature aggregation / bucketing): both
-    // returned frames are consumed downstream, and without the cache
-    // whichever side the caller didn't cache re-runs the whole
-    // expensive input plan a second time.
+    // Checkpointed HERE so kept and overflow share one
+    // materialization of the upstream pipeline (signature aggregation
+    // / bucketing): both returned frames are consumed downstream, and
+    // without the checkpoint whichever side the caller didn't
+    // materialize re-runs the whole expensive input plan a second
+    // time.
     val ranked = df.withColumn("__rn", row_number().over(w))
       // default frame = rows up to CURRENT ROW, so first = bucket min id
       .withColumn("__rep", first(col(idCol)).over(w))
-      .cache()
+      .localCheckpoint(false)
     val kept = ranked.filter(col("__rn") <= cap).drop("__rn", "__rep")
     // id order inside the window makes rep strictly < the capped id
     val overflow = ranked.filter(col("__rn") > cap)
@@ -217,10 +219,10 @@ object DedupOps {
                    numPerm: Int = 64, bands: Int = 16,
                    maxBucket: Int = 1000): DataFrame =
     // reused by signature build AND exact verification — materialize once
-    minhashLshOnSets(docShingleSets(docs).cache(), threshold, numPerm,
-      bands, maxBucket)
+    minhashLshOnSets(docShingleSets(docs).localCheckpoint(false),
+      threshold, numPerm, bands, maxBucket)
 
-  /** [[minhashLshOn]] over an already-staged (cached) shingle-set
+  /** [[minhashLshOn]] over an already-staged (checkpointed) shingle-set
     * frame — lets a caller that also needs the sets for another stage
     * ([[incrementalIndex]]'s state construction) shingle the corpus
     * exactly once. */
@@ -237,9 +239,9 @@ object DedupOps {
   private def lshPairsFromIndex(index: DataFrame, sets: DataFrame,
                                 threshold: Double,
                                 maxBucket: Int): DataFrame = {
-    // capBucketsRep caches the ranked frame, so the 64-aggregate
+    // capBucketsRep checkpoints the ranked frame, so the 64-aggregate
     // signature pass runs once and both self-join sides (and the
-    // overflow frame) read the cached copy
+    // overflow frame) read the checkpointed copy
     val (banded, overflow) = capBucketsRep(
       index, Seq("band", "bsig"), "doc_id", maxBucket)
     val cand = banded.as("a")
@@ -307,11 +309,11 @@ object DedupOps {
     val history = docs.filter(col("doc_id") % 4 =!= 0)
     val delta = docs.filter(col("doc_id") % 4 === 0)
     // yesterday's persisted state, constructed here from the data (in
-    // production both are parquet reads): ONE cached shingle pass and
-    // ONE cached signature/banding pass over history serve both the
+    // production both are parquet reads): ONE checkpointed shingle pass and
+    // ONE checkpointed signature/banding pass over history serve both the
     // index and the pair table
-    val hSets = docShingleSets(history).cache()
-    val hIndex = bandIndexOnSets(hSets, numPerm, bands).cache()
+    val hSets = docShingleSets(history).localCheckpoint(false)
+    val hIndex = bandIndexOnSets(hSets, numPerm, bands).localCheckpoint(false)
     incrementalFold(hIndex,
       lshPairsFromIndex(hIndex, hSets, threshold, maxBucket),
       history, delta, threshold, numPerm, bands, maxBucket)
@@ -353,8 +355,8 @@ object DedupOps {
     val dir =
       if (stateDir.nonEmpty) stateDir
       else graft.TempDirs.create("graft_inc_state_").toString
-    val hSets = docShingleSets(history).cache()
-    val hIndex = bandIndexOnSets(hSets, numPerm, bands).cache()
+    val hSets = docShingleSets(history).localCheckpoint(false)
+    val hIndex = bandIndexOnSets(hSets, numPerm, bands).localCheckpoint(false)
     hIndex.write.mode("overwrite").partitionBy("band")
       .parquet(s"$dir/band_index.parquet")
     lshPairsFromIndex(hIndex, hSets, threshold, maxBucket)
@@ -422,15 +424,15 @@ object DedupOps {
                       bands: Int, maxBucket: Int = Int.MaxValue): DataFrame = {
     // today's shingle sets feed signatures AND verification — one
     // materialization (the minhashLshOn posture)
-    val dSets = docShingleSets(delta).cache()
+    val dSets = docShingleSets(delta).localCheckpoint(false)
     val dSig = minhashSignatures(
       dSets.select(col("doc_id"), explode(col("hs")).as("h")), numPerm)
     val bandSigs = bandCols(numPerm, bands, j => col(s"mh$j"))
     // the delta's band rows join twice (vs history, vs itself):
-    // cache ends the signature aggregation after one run
+    // checkpoint ends the signature aggregation after one run
     val dIndex = dSig.select(col("doc_id"),
         posexplode(array(bandSigs: _*)).as(Seq("band", "bsig")))
-      .cache()
+      .localCheckpoint(false)
     val cand = (if (maxBucket == Int.MaxValue) {
       // delta vs HISTORY: equi-join on the persisted index — at scale
       // the delta side is day-sized and broadcasts; ids interleave
@@ -451,12 +453,13 @@ object DedupOps {
       // the ranking window shuffles on the same (band, bsig) keys the
       // candidate joins use, so the exchange is reused, not added;
       // both ranked frames serve three consumers each (kept rows,
-      // bucket minimum, overflow) — cache once
+      // bucket minimum, overflow) — checkpoint once
       val w = Window.partitionBy(col("band"), col("bsig"))
         .orderBy(col("doc_id"))
-      val rankedD = dIndex.withColumn("__rn", row_number().over(w)).cache()
+      val rankedD = dIndex.withColumn("__rn", row_number().over(w))
+        .localCheckpoint(false)
       val rankedH = histIndex
-        .withColumn("__rn", row_number().over(w)).cache()
+        .withColumn("__rn", row_number().over(w)).localCheckpoint(false)
       val dKept = rankedD.filter(col("__rn") <= maxBucket)
       val hKept = rankedH.filter(col("__rn") <= maxBucket)
       val dMin = rankedD.filter(col("__rn") === 1)
@@ -503,10 +506,11 @@ object DedupOps {
     // ONLY the candidate members, fetched by id
     val candIds = cand.select(col("id1").as("doc_id"))
       .union(cand.select(col("id2").as("doc_id"))).distinct()
-    // verifyJaccard reads the set frame twice (id1/id2 sides) — cache
+    // verifyJaccard reads the set frame twice (id1/id2 sides) — checkpoint
     // the candidate-bounded history shingling so it runs once
     val hSets = docShingleSets(
-      histDocs.join(candIds, Seq("doc_id"), "left_semi")).cache()
+      histDocs.join(candIds, Seq("doc_id"), "left_semi"))
+      .localCheckpoint(false)
     val newPairs = verifyJaccard(cand, dSets.unionByName(hSets))
       .filter(col("jaccard") >= threshold)
     // the updated pair table: yesterday's verified pairs are
@@ -542,7 +546,8 @@ object DedupOps {
     // be disjoint across the two corpora — they key the verify join).
     val tagged = corpus.select(col("doc_id"), col("text"), lit(0).as("__ref"))
       .unionByName(reference.select(col("doc_id"), col("text"), lit(1).as("__ref")))
-    val sets = docShingleSetsCarry(tagged, 3, Seq("__ref")).cache()
+    val sets = docShingleSetsCarry(tagged, 3, Seq("__ref"))
+      .localCheckpoint(false)
     val sig = minhashSignatures(
       sets.select(col("doc_id"), col("__ref"), explode(col("hs")).as("h")),
       numPerm, carry = Seq("__ref"))
@@ -553,12 +558,12 @@ object DedupOps {
       .orderBy(col("doc_id"))
     val ranked = sig.select(col("doc_id"), col("__ref"),
         posexplode(array(bandSigs: _*)).as(Seq("band", "bsig")))
-      .withColumn("__rn", row_number().over(w)).cache()
+      .withColumn("__rn", row_number().over(w)).localCheckpoint(false)
     val kept = ranked.filter(col("__rn") <= maxBucket)
     val cKept = kept.filter(col("__ref") === 0)
     val rKept = kept.filter(col("__ref") === 1)
     // per-(bucket, side) minimum id == the row the window ranked
-    // first: a filter on the cached ranked frame, not a groupBy —
+    // first: a filter on the checkpointed ranked frame, not a groupBy —
     // no aggregation shuffle, and the overflow joins below see a
     // frame AQE can broadcast
     val rMin = ranked.filter(col("__ref") === 1 && col("__rn") === 1)
@@ -683,14 +688,11 @@ object DedupOps {
     * pair is exact-Jaccard verified, so the output is identical to
     * [[decontaminate]]'s (uncapped) — the operators share one oracle.
     * The build-side `count()` is one scalar driver action on the
-    * cached reference (the same concession IVF's cell count makes);
-    * the filter build itself is LAZY (a scalar subquery in the plan —
-    * see BloomProbe, incl. the maxNumBits build-side ceiling that
-    * marks the hand-off to the shuffled [[decontaminate]] tier).
-    *
-    * Caching contract: the staged reference stays cached for the
-    * band/set joins and is freed by `spark.catalog.clearCache()` —
-    * long-lived sessions composing many pipelines own that call.
+    * checkpointed reference (the same concession IVF's cell count
+    * makes); the filter build itself is LAZY (a scalar subquery in
+    * the plan — see BloomProbe, incl. the maxNumBits build-side
+    * ceiling that marks the hand-off to the shuffled [[decontaminate]]
+    * tier).
     */
   def decontaminateBloom(corpus: DataFrame, reference: DataFrame,
                          threshold: Double = 0.8,
@@ -699,7 +701,7 @@ object DedupOps {
     def staged(df: DataFrame): DataFrame = Tables.spread(df)
       .select(col("doc_id"), TextOps.toks(col("text")).as("__t"))
       .select(col("doc_id"), shingleHashesExpr(col("__t")).as("hs"))
-    val ref = staged(reference).cache()
+    val ref = staged(reference).localCheckpoint(false)
     def bandKey: Column = xxhash64(col("band"), col("bsig"))
     val refBands = ref.select(col("doc_id").as("ref_id"),
       posexplode(array(bandSigsExpr(col("hs"), numPerm, bands): _*))
@@ -775,8 +777,8 @@ object DedupOps {
                     threshold: Double = 0.6, maxDf: Int = 0): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"containment threshold must be in (0, 1], got $threshold")
-    val cSets = docShingleSets(corpus).cache()
-    val rSets = docShingleSets(reference).cache()
+    val cSets = docShingleSets(corpus).localCheckpoint(false)
+    val rSets = docShingleSets(reference).localCheckpoint(false)
     val cPost0 = cSets.select(col("doc_id"), col("n").as("cn"),
       posexplode(col("hs")).as(Seq("cp", "h")))
     val cPost =
@@ -823,7 +825,7 @@ object DedupOps {
     * not clusters). */
   def connectedComponents(pairs: DataFrame): DataFrame = {
     // symmetric edge list, hash-partitioned on the join key ONCE and
-    // cached: every round's propagation join then reads co-located
+    // checkpointed: every round's propagation join then reads co-located
     // edge partitions instead of re-shuffling the (potentially huge)
     // edge set per iteration.
     // Symmetrization is a row-local explode of both directions, NOT
@@ -837,7 +839,7 @@ object DedupOps {
         struct(col("id2").as("src"), col("id1").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(col("dst"))
-      .cache()
+      .localCheckpoint(false)
     // convergence via the label-sum invariant: propagation only ever
     // DECREASES labels, so the (exact, decimal) sum is strictly
     // monotone until the fixpoint — one cheap aggregate per round
@@ -874,13 +876,12 @@ object DedupOps {
       val s = labelSum(next)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
-      // `next` is materialized by the sum above; the previous round's
-      // checkpoint blocks are dead — free them so storage stays
-      // constant in the iteration count, not linear
-      labels.unpersist()
+      // `next` is materialized by the sum above; once `labels` is
+      // reassigned nothing reaches the previous round's checkpoint,
+      // and the ContextCleaner reclaims its blocks when it is
+      // garbage-collected
       labels = next
     }
-    edges.unpersist()
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
       .orderBy(col("doc_id"))
   }
@@ -935,7 +936,7 @@ object DedupOps {
         shingleHashesExpr(col("__t")).as("hs"))
       .select(col("doc_id"), sigFromHashes.as("sig"), col("hs"))
       .withColumn("n", size(col("hs")))
-      .cache()
+      .localCheckpoint(false)
     simhashCore(staged, sigBits, maxHamming, bands, maxBucket, threshold)
   }
 
@@ -1013,7 +1014,7 @@ object DedupOps {
     val sets = staged.select(col("doc_id"), col("hs"), col("n"))
     val chunks = (0 until bands).map(i =>
       shiftright(col("sig"), i * chunkBits).bitwiseAND(mask))
-    // capBucketsRep caches the ranked frame: the SimHash aggregation
+    // capBucketsRep checkpoints the ranked frame: the SimHash aggregation
     // pipeline materializes once for the index, probes, and overflow
     val (index, overflow) = capBucketsRep(
       sigs.select(col("doc_id"), col("sig"),
@@ -1080,7 +1081,7 @@ object DedupOps {
   def ngramJaccardOn(docs: DataFrame, threshold: Double = 0.8,
                      maxDf: Int = 0): DataFrame = {
     // one scan-side pass feeds prefix build and verification alike
-    val sets = docShingleSets(docs).cache()
+    val sets = docShingleSets(docs).localCheckpoint(false)
     // every ceil of a threshold product goes through ceilSafe: an FP
     // overshoot here shortens the prefix / raises a bound and silently
     // prunes genuine J == threshold pairs (the shipped defaults happen
@@ -1182,7 +1183,7 @@ object DedupOps {
         SimilarityOps.lshBucket(col("embedding"), bits, seed = 42L + t)
           .as("bucket"))
     }.reduce(_.union(_))
-    // capBucketsRep caches the ranked frame — both self-join sides and
+    // capBucketsRep checkpoints the ranked frame — both self-join sides and
     // the overflow read one materialization of the bucketing pipeline
     val (bucketed, overflow) = capBucketsRep(tables,
       Seq("table", "bucket"), "vec_id", maxBucket)
@@ -1441,16 +1442,16 @@ object DedupOps {
 
   /** Shared word-n-gram inverted index: (doc_id, ws, n_ngrams) base,
     * positioned 64-bit gram stream, and the cross-doc duplicated gram
-    * set. `base` is cached — it feeds per-doc totals AND the gram
-    * explode (ownership: materialized by the caller's action, cleared
-    * by the session's cache lifecycle). */
+    * set. `base` is checkpointed — it feeds per-doc totals AND the
+    * gram explode (materialized by the caller's action, reclaimed
+    * with the returned plan). */
   private def gramIndex(docs: DataFrame, n: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     val base = Tables.spread(docs)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .withColumn("n_ngrams",
         greatest(size(col("ws")) - (n - 1), lit(0)).cast("long"))
-      .cache()
+      .localCheckpoint(false)
     val grams = base.filter(size(col("ws")) >= n)
       .select(col("doc_id"), posexplode(transform(
         sequence(lit(0), size(col("ws")) - n),
@@ -1540,7 +1541,7 @@ object DedupOps {
     def words(docs: DataFrame): DataFrame =
       Tables.spread(docs).select(col("doc_id"),
         split(col("text"), " ").as("ws"))
-    val base = words(corpus).cache()
+    val base = words(corpus).localCheckpoint(false)
     val cg = base.filter(size(col("ws")) >= n)
       .select(col("doc_id"), posexplode(transform(
         sequence(lit(0), size(col("ws")) - n),
@@ -1586,7 +1587,7 @@ object DedupOps {
     // positioned 1-based corpus grams; reference grams keep only the
     // key, distinct per (ref_id, gram) so a gram repeated inside one
     // reference doc can't multiply match rows
-    val base = withWords(corpus, "doc_id").cache()
+    val base = withWords(corpus, "doc_id").localCheckpoint(false)
     val cg = base.filter(size(col("ws")) >= n)
       .select(col("doc_id"), explode(transform(
         sequence(lit(1), size(col("ws")) - (n - 1)),
@@ -1618,14 +1619,13 @@ object DedupOps {
     * only exchange anywhere is hits-sized (the per-(doc, ref) island
     * window — genuine output mass). Output contract and values are
     * identical to [[decontaminateSpans]] — the faces share one
-    * oracle; only the plan shape tiers.
-    * [[graft.ops.Routing.decontaminateSpansAuto]] arbitrates. */
+    * oracle; only the plan shape tiers. */
   def decontaminateSpansBroadcast(corpus: DataFrame, reference: DataFrame,
                                   n: Int = 10): DataFrame = {
     def withWords(docs: DataFrame, idAs: String): DataFrame =
       Tables.spread(docs).select(col("doc_id").as(idAs),
         split(col("text"), " ").as("ws"))
-    val base = withWords(corpus, "doc_id").cache()
+    val base = withWords(corpus, "doc_id").localCheckpoint(false)
     val cg = base.filter(size(col("ws")) >= n)
       .select(col("doc_id"), explode(transform(
         sequence(lit(1), size(col("ws")) - (n - 1)),
@@ -1743,7 +1743,7 @@ object DedupOps {
       .agg(mins.head, mins.tail: _*)
       .select(col("doc_id"),
         array((0 until numPerm).map(j => col(s"mh$j")): _*).as("sig"))
-      .cache()
+      .localCheckpoint(false)
     // the band key is the rows-long component slice itself (each
     // engine needs only an injective per-band encoding for ITS OWN
     // equi-join — arrays join by value in Spark, lists in DuckDB)
@@ -1794,7 +1794,7 @@ object DedupOps {
           i => xxhash64(concat_ws(" ", slice(col("ws"), i + 1, lit(n))))))
           .as("g"))
         .distinct()
-    val rg = gramSet(reference, "ref_id").cache()
+    val rg = gramSet(reference, "ref_id").localCheckpoint(false)
     val cg = gramSet(corpus, "doc_id")
     val totals = rg.groupBy(col("ref_id"))
       .agg(count(lit(1)).as("n_grams"))

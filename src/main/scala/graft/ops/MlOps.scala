@@ -25,7 +25,7 @@ object MlOps {
     * fitted centroids are broadcast by MLlib's transform — scoring
     * is a narrow map over the corpus. */
   def cluster(s: SparkSession, d: String, k: Int = 8): DataFrame = {
-    val df = featurized(s, d).cache()
+    val df = featurized(s, d).localCheckpoint(false)
     val model = new KMeans().setK(k).setSeed(42L).setMaxIter(10)
       .setFeaturesCol("features").fit(df)
     model.transform(df)
@@ -52,7 +52,7 @@ object MlOps {
     * assignment is off by far more. The oracle is every vec_id +
     * TRUE. */
   def clusterChecked(s: SparkSession, d: String, k: Int = 8): DataFrame = {
-    val df = featurized(s, d).cache()
+    val df = featurized(s, d).localCheckpoint(false)
     val model = new KMeans().setK(k).setSeed(42L).setMaxIter(10)
       .setFeaturesCol("features").fit(df)
     val centerDists = model.clusterCenters.map { c =>
@@ -78,7 +78,7 @@ object MlOps {
   /** Scaler → logistic-regression Pipeline predicting the label
     * column; time-honored 80/20 split on a deterministic key. */
   def classify(s: SparkSession, d: String): DataFrame = {
-    val df = featurized(s, d).cache()
+    val df = featurized(s, d).localCheckpoint(false)
     val train = df.filter(col("vec_id") % 5 =!= 0)
     val test  = df.filter(col("vec_id") % 5 === 0)
     val pipeline = new Pipeline().setStages(Array(
@@ -104,7 +104,7 @@ object MlOps {
     * probability mismatch flips a flag on some row and breaks the
     * cross-engine hash. */
   def classifyChecked(s: SparkSession, d: String): DataFrame = {
-    val df = featurized(s, d).cache()
+    val df = featurized(s, d).localCheckpoint(false)
     val train = df.filter(col("vec_id") % 5 =!= 0)
     val test  = df.filter(col("vec_id") % 5 === 0)
     val pipeline = new Pipeline().setStages(Array(
@@ -487,13 +487,13 @@ object MlOps {
                      key: Column, nFolds: Int = 5, m: Int = 20): DataFrame = {
     val fold = conv(substring(md5(key.cast("string")), 1, 8), 16, 10)
       .cast("long") % nFolds
-    // (category × fold) grain is tiny; cached because three consumers
+    // (category × fold) grain is tiny; checkpointed because three consumers
     // (per-category rollup, global prior, final projection) would
     // otherwise re-scan the fact table three times
     val cf = df.select(cat.as("category"), target.as("t"), fold.as("fold"))
       .groupBy(col("category"), col("fold"))
       .agg(count(lit(1)).as("n_cf"), sum(col("t")).as("s_cf"))
-      .cache()
+      .localCheckpoint(false)
     val perCat = cf.groupBy(col("category"))
       .agg(sum(col("n_cf")).as("n_c"), sum(col("s_cf")).as("s_c"))
     val prior = cf.agg(

@@ -14,29 +14,22 @@ import org.apache.spark.sql.functions._
   * per partition; the only partition-less window runs over ONE row
   * per partition.
   *
-  * CORRECTNESS GUARD — why the ranged frame is cached: the result
-  * joins two plan branches (the rows and the per-partition offsets)
-  * that both descend from the range exchange, and `spark_partition_id`
-  * is evaluated independently in each physical instance. Range
-  * boundaries come from SAMPLING, seeded per physical exchange — with
-  * exchange reuse on (the default) the planner collapses the two
-  * branches onto one exchange, but with reuse disabled (or any rule
-  * that makes the branch plans non-identical) each branch would
-  * sample its OWN boundaries, a row could land in partition p on one
-  * side and p+1 on the other, and every offset downstream would be
-  * silently wrong. Caching pins one materialized partitioning that
-  * both branches read, making correctness independent of the
-  * exchange-reuse optimization. The cache is row-count-sized (keys +
-  * one long) and deliberately NOT unpersisted here — the result plan
-  * still reads it lazily, so there is no safe unpersist point inside
-  * the operator.
+  * CORRECTNESS GUARD — why the ranged frame is checkpointed: the
+  * result joins two plan branches (the rows and the per-partition
+  * offsets) that both descend from the range exchange, and
+  * `spark_partition_id` is evaluated independently in each physical
+  * instance. Range boundaries come from SAMPLING, seeded per physical
+  * exchange — with exchange reuse on (the default) the planner
+  * collapses the two branches onto one exchange, but with reuse
+  * disabled (or any rule that makes the branch plans non-identical)
+  * each branch would sample its OWN boundaries, a row could land in
+  * partition p on one side and p+1 on the other, and every offset
+  * downstream would be silently wrong. The checkpoint pins one
+  * materialized partitioning that both branches read, making
+  * correctness independent of the exchange-reuse optimization.
   *
-  * CACHING CONTRACT (restated on every public operator built on
-  * this): one cached intermediate per call survives until the session
-  * drops it. Long-lived sessions composing many pipelines should
-  * `spark.catalog.clearCache()` between pipelines (the bench/verify
-  * harnesses do exactly that); a single ETL job per session — the
-  * production shape — never notices.
+  * One lazy local checkpoint per call (row-count-sized: keys + one
+  * long), reclaimed with the returned plan.
   */
 private[graft] object PrefixSum {
 
@@ -53,19 +46,19 @@ private[graft] object PrefixSum {
       .withColumnRenamed("__cum0", "__cum")
 
   /** [[exclusive]] over SEVERAL value columns at once, appending
-    * `__cum0..__cumN` — ONE range exchange, one cached ranged frame,
-    * and one broadcast offset row per partition shared by every
-    * column, where N separate [[exclusive]] calls would pay N
-    * exchanges and N caches (and, worse, could range-sample different
-    * partition boundaries per call). A caller needing the running
+    * `__cum0..__cumN` — ONE range exchange, one checkpointed ranged
+    * frame, and one broadcast offset row per partition shared by
+    * every column, where N separate [[exclusive]] calls would pay N
+    * exchanges and N checkpoints (and, worse, could range-sample
+    * different partition boundaries per call). A caller needing the running
     * totals of two interleaved samples in the same global order — the
     * two-sample CDF comparison behind the KS test — is the motivating
-    * shape. Same caching contract as [[exclusive]]. */
+    * shape. */
   def exclusiveMulti(df: DataFrame, keys: Seq[Column],
                      values: Seq[Column]): DataFrame = {
     val parts = df.repartitionByRange(keys: _*)
       .withColumn("__pid", spark_partition_id())
-      .cache()
+      .localCheckpoint(false)
     val wLocal = Window.partitionBy(col("__pid")).orderBy(keys: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
     val local = values.zipWithIndex.foldLeft(parts) { case (acc, (v, i)) =>

@@ -223,7 +223,7 @@ object SimilarityOps {
     * O(nProbe·√n) instead of O(n). */
   def knnClassifyIvf(s: SparkSession, d: String,
                      k: Int = 5, nProbe: Int = 2): DataFrame =
-    knnClassifyIvfOn(Tables.embeddings(s, d).cache(), k, nProbe)
+    knnClassifyIvfOn(Tables.embeddings(s, d).localCheckpoint(false), k, nProbe)
 
   /** Same over any (vec_id, embedding, label) frame. */
   def knnClassifyIvfOn(emb: DataFrame, k: Int, nProbe: Int): DataFrame = {
@@ -399,7 +399,7 @@ object SimilarityOps {
     * Plan shape: ONE corpus-scale pass builds the per-query shortlist
     * (the [[bruteForceTopK]] posture — broadcast queries, corpus
     * never self-joined; a 100 TB caller swaps the shortlist stage to
-    * the IVF tier via `Routing.annTopKAuto`, the declared partner);
+    * the IVF tier, the declared partner);
     * everything after is CONFIG-bounded — candidate-pair sims are
     * shortlist² per query, the k greedy rounds join ≤(queries ×
     * shortlist)-row frames, each round's pick eager-checkpointed so
@@ -862,8 +862,8 @@ object SimilarityOps {
               k: Int = 5, nQueries: Int = 10, nCells: Int = 0,
               nProbe: Int = 2): DataFrame = {
     // scanned four times (cell-count fit, two assignment passes, the
-    // query subset) — cache once
-    val emb = Tables.embeddings(s, d).cache()
+    // query subset) — checkpoint once
+    val emb = Tables.embeddings(s, d).localCheckpoint(false)
     val cellCount =
       if (nCells > 0) nCells
       else math.max(8, math.sqrt(emb.count().toDouble).toInt)
@@ -958,7 +958,7 @@ object SimilarityOps {
                      k: Int = 5, nQueries: Int = 10, nProbe: Int = 2,
                      buildMaxVectors: Int = 16384): DataFrame = {
     require(buildMaxVectors >= 8, s"buildMaxVectors too small: $buildMaxVectors")
-    val emb = Tables.embeddings(s, d).cache()
+    val emb = Tables.embeddings(s, d).localCheckpoint(false)
     val n = emb.count()
     val bk = math.min(256L, math.max(1L,
       (256L * buildMaxVectors + n - 1) / n))
@@ -1033,7 +1033,7 @@ object SimilarityOps {
     * per-cell window partitions on the cell key (never global). */
   def diversitySample(s: SparkSession, d: String, perCell: Int = 3,
                       nCells: Int = 0): DataFrame = {
-    val emb = Tables.embeddings(s, d).cache()
+    val emb = Tables.embeddings(s, d).localCheckpoint(false)
     val cellCount =
       if (nCells > 0) nCells
       else math.max(8, math.sqrt(emb.count().toDouble).toInt)
@@ -1127,7 +1127,7 @@ object SimilarityOps {
              m: Int = 8, nCodes: Int = 16, rerank: Int = 50): DataFrame = {
     require(dim % m == 0, s"dim $dim must split into $m subspaces")
     val sub = dim / m
-    val emb = Tables.embeddings(s, d).cache()
+    val emb = Tables.embeddings(s, d).localCheckpoint(false)
 
     // one row per (vector, subspace): the slice the codebook quantizes
     def subvecs(df: DataFrame, idOut: String): DataFrame =
@@ -1136,7 +1136,7 @@ object SimilarityOps {
           col("embedding"))
         .withColumn("sv", expr(s"slice(embedding, j * $sub + 1, $sub)"))
         .drop("embedding")
-    val corpusSub = subvecs(emb, "vec_id").cache()
+    val corpusSub = subvecs(emb, "vec_id").localCheckpoint(false)
 
     // 4dp-rounded squared L2 from the codegen'd dot kernel, written
     // (a·a + c·c) − 2(a·c) so the oracle can mirror the exact IEEE
@@ -1229,7 +1229,7 @@ object SimilarityOps {
                 rerank: Int = 50): DataFrame = {
     require(dim % m == 0, s"dim $dim must split into $m subspaces")
     val sub = dim / m
-    val emb = Tables.embeddings(s, d).cache()
+    val emb = Tables.embeddings(s, d).localCheckpoint(false)
     val cellCount = math.max(8, math.sqrt(emb.count().toDouble).toInt)
 
     // ---- IVF side: cells + per-query probe set (the ivfTopK fit) ----
@@ -1265,7 +1265,7 @@ object SimilarityOps {
           col("embedding"))
         .withColumn("sv", expr(s"slice(embedding, j * $sub + 1, $sub)"))
         .drop("embedding")
-    val corpusSub = subvecs(emb, "vec_id").cache()
+    val corpusSub = subvecs(emb, "vec_id").localCheckpoint(false)
     def d2(a: Column, c: Column): Column =
       round(graft.functions.VectorExprs.dotProduct(a, a) +
         graft.functions.VectorExprs.dotProduct(c, c) -
@@ -1558,8 +1558,8 @@ object SimilarityOps {
 
   /** Measured recall@k of an ANN tier against the exact brute-force
     * face — the routed tiers' retrieval quality as CHECKED numbers
-    * instead of asserted ones (every other property of the Routing
-    * pairs is oracled; these close the recall gap for the ANN dial).
+    * instead of asserted ones (every other property of the tier pairs
+    * is oracled; these close the recall gap for the ANN tiers).
     * One row per query: how many of the exact top-k the approximate
     * retrieval found, and the half-up 4dp recall. Both retrievals
     * share the quantized cosine grid and the (cosine DESC, vec_id)

@@ -41,11 +41,10 @@ object TextOps {
     * never a doc×doc product), one per-doc count aggregate. At a
     * 100 TB reference the gram set tiers exactly like
     * decontamination's ladder (broadcast / Bloom-probe / shuffled —
-    * `Routing.decontaminateAuto`'s regimes apply verbatim since the
-    * reference side is the only thing that changes). Novelty
-    * publishes through [[ExactRatio.r4]]. Contract: candidates with
-    * fewer than k tokens carry no grams and drop (matching the
-    * oracle's derivation). */
+    * the regimes apply verbatim since the reference side is the only
+    * thing that changes). Novelty publishes through
+    * [[ExactRatio.r4]]. Contract: candidates with fewer than k tokens
+    * carry no grams and drop (matching the oracle's derivation). */
   def novelty(s: SparkSession, d: String, k: Int = 3): DataFrame = {
     val docs = Tables.documents(s, d)
     noveltyOn(docs.filter(col("doc_id") % 2 === 0),
@@ -264,7 +263,7 @@ object TextOps {
     val mg = udaf(new graft.functions.MisraGriesAgg(capacity))
     val terms = graft.Tables.spread(Tables.documents(s, d))
       .select(explode(toks(lower(col("text")))).as("term"))
-      .cache()
+      .localCheckpoint(false)
     val sketch = terms.agg(mg(col("term")).as("sk"))
       .select(explode(col("sk")).as(Seq("term", "est")))
     val totals = terms.agg(count(lit(1)).as("__total"))
@@ -389,11 +388,7 @@ object TextOps {
     * partition — the classic scale-killer): range-partition by
     * doc_id, running-sum within each partition, then add each
     * partition's broadcast cumulative offset. The only global window
-    * runs over one row per partition.
-    *
-    * Caching contract (PrefixSum): one row-count-sized cached
-    * intermediate per call, freed by `spark.catalog.clearCache()` —
-    * long-lived sessions composing many pipelines own that call. */
+    * runs over one row per partition. */
   def pack(s: SparkSession, d: String, ctxLen: Int = 128): DataFrame =
     packOn(Tables.documents(s, d), ctxLen)
 
@@ -592,12 +587,12 @@ object TextOps {
 
   /** Same over any (doc_id, text) frame. */
   def lmScoreOn(docs: DataFrame): DataFrame = {
-    // cached: tok feeds BOTH the vocabulary count and the join probe —
-    // without the cache the scan+split+explode (the expensive stage)
+    // checkpointed: tok feeds BOTH the vocabulary count and the join
+    // probe — without it the scan+split+explode (the expensive stage)
     // runs once per subtree
     val tok = graft.Tables.spread(docs)
       .select(col("doc_id"), explode(toks(col("text"))).as("tok"))
-      .cache()
+      .localCheckpoint(false)
     val counts = tok.groupBy(col("tok")).agg(count(lit(1)).as("c"))
     val totals = counts.agg(sum(col("c")).as("n"), count(lit(1)).as("v"))
     tok.join(counts, "tok")
@@ -638,10 +633,7 @@ object TextOps {
 
   /** Same over any (doc_id, text) frame. */
   def lmScoreBigramOn(docs: DataFrame): DataFrame = {
-    // lazy localCheckpoint, not cache(): tok feeds the model fit AND
-    // the scoring pass, but a cache() pinned in the session manager
-    // outlives the query — checkpoint blocks are GC-reclaimed with
-    // the plan instead
+    // tok feeds the model fit AND the scoring pass
     val tok = graft.Tables.spread(docs)
       .select(col("doc_id"), toks(col("text")).as("ws"))
       .localCheckpoint(false)
@@ -873,7 +865,7 @@ object TextOps {
                      topN: Int = 20, minCount: Int = 5): DataFrame = {
     val tok = graft.Tables.spread(docs)
       .select(col("doc_id"), toks(col("text")).as("ws"))
-      .cache()
+      .localCheckpoint(false)
     val uni = tok.select(explode(col("ws")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
     val totals = uni.agg(sum(col("c")).as("nt"))
@@ -1263,7 +1255,7 @@ object TextOps {
       .select(col("lang"), col("fold"), explode(col("ws")).as("term"))
       .groupBy(col("lang"), col("term"), col("fold"))
       .agg(count(lit(1)).as("c"))
-      .cache()
+      .localCheckpoint(false)
     val ctk = ctkf.groupBy(col("lang"), col("term"))
       .agg(sum(col("c")).as("ctk"))
     val tt = ctkf.groupBy(col("term")).agg(sum(col("c")).as("tt"))

@@ -167,8 +167,8 @@ object ChangeStreams {
     require(epochs >= 1 && keepVersions >= 1 && keepVersions <= epochs,
       s"need 1 <= keepVersions <= epochs: $keepVersions/$epochs")
     // each retained version's audit re-reads its whole fold prefix;
-    // cache the shared leaf so the epoch slices scan it once
-    val ch = changes.cache()
+    // checkpoint the shared leaf so the epoch slices scan it once
+    val ch = changes.localCheckpoint(false)
     val base0 = ch.select(col("user_id"), col("v_micro")).limit(0)
     // snaps(k) = snapshot AFTER folding epoch k (version id k).
     // Each snapshot rides a LAZY localCheckpoint: version k+1's fold

@@ -344,7 +344,7 @@ object EventStreams {
     * oracled value, the attribution posture). Version k publishes
     * q_funnel's per-stage user counts over every advance EMITTED
     * through epoch k, i.e. advances whose fold tuple sits in epochs
-    * ≤ k. Each stage's advance frame computes once (cached) and
+    * ≤ k. Each stage's advance frame computes once (checkpointed) and
     * every retained version adds one filtered count.
     * StreamingSpec replays the identical epochs through
     * [[funnelStream]] and asserts the per-stage cumulative emitted
@@ -376,7 +376,7 @@ object EventStreams {
           .filter(tup(i + 1) > col("__pt") &&
             col("tus") >= col("__pt.tus"))
           .groupBy(col("user_id")).agg(min(tup(i + 1)).as("__t"))
-    }.map(_.cache()) // every retained version counts each frame
+    }.map(_.localCheckpoint(false)) // every retained version counts each frame
     (epochs - keepVersions until epochs).flatMap { k =>
       stages.zip(reached).zipWithIndex.map { case ((stage, users), i) =>
         users.filter(col("__t.epoch") <= k)
@@ -507,7 +507,7 @@ object EventStreams {
     * epochs, the fold credits by arrival, not by global time — the
     * documented late-data caveat, here made an oracled value instead
     * of a disclaimer. One windowed pass is shared by all versions
-    * (cached conversion frame); each version adds one filtered
+    * (checkpointed conversion frame); each version adds one filtered
     * aggregate over it. StreamingSpec replays the identical epochs
     * through [[attributionStream]] and asserts each version's
     * cumulative emitted rows aggregate to exactly these audit rows. */
@@ -539,7 +539,8 @@ object EventStreams {
             col("tus") - col("touch_ts") <=
               lit(windowDays * 86400000000L),
           col("touch_type")).otherwise(lit("none")).as("touch_type"))
-      .cache() // every retained version aggregates this one pass
+      // every retained version aggregates this one pass
+      .localCheckpoint(false)
     (epochs - keepVersions until epochs).map { k =>
       val cnt = conv.filter(col("epoch") <= k)
         .groupBy(col("touch_type")).agg(count(lit(1)).as("n_purchases"))
@@ -634,7 +635,7 @@ object EventStreams {
     * ([[graft.ops.TimeSeriesOps.anomalyZScore]]). The trailing
     * window scores a day the moment it finalizes, so version k =
     * the batch rows whose day sits in epochs ≤ k — one batch pass
-    * cached, one filtered projection per version. StreamingSpec
+    * checkpointed, one filtered projection per version. StreamingSpec
     * replays the identical epochs through [[anomalyStream]] and
     * asserts each version's cumulative emitted rows equal exactly
     * these audit rows. */
@@ -648,7 +649,7 @@ object EventStreams {
     val scored = graft.ops.TimeSeriesOps
       .anomalyZScore(s, d, windowDays, threshold)
       .join(broadcast(dayEpochs(days, epochs)), Seq("day"))
-      .cache() // every retained version filters this one pass
+      .localCheckpoint(false) // every retained version filters this one pass
     (epochs - keepVersions until epochs).map { k =>
       scored.filter(col("epoch") <= k)
         .select(lit(k.toLong).as("version"), col("event_type"),
@@ -722,7 +723,7 @@ object EventStreams {
     * batch rows ([[graft.ops.TimeSeriesOps.changepointsOn]]) whose
     * trigger day sits in epochs ≤ k: the monitor's inherent
     * emission lag promoted from a scaladoc disclaimer to an oracled
-    * value. Same shared [[dayEpochs]] timeline, one cached scored
+    * value. Same shared [[dayEpochs]] timeline, one checkpointed scored
     * pass, one filtered projection per retained version;
     * StreamingSpec replays the epochs through the live stream and
     * asserts cumulative-emitted ≡ audit per version. */
@@ -743,7 +744,7 @@ object EventStreams {
     val scored = graft.ops.TimeSeriesOps.changepointsOn(daily, w, minScore)
       .join(trig, Seq("event_type", "day"))
       .join(broadcast(ep), Seq("__trigger"))
-      .cache() // every retained version filters this one pass
+      .localCheckpoint(false) // every retained version filters this one pass
     (epochs - keepVersions until epochs).map { k =>
       scored.filter(col("epoch") <= k)
         .select(lit(k.toLong).as("version"), col("event_type"),
@@ -798,7 +799,7 @@ object EventStreams {
     * ([[graft.ops.TimeSeriesOps.ewma]]) whose day sits in epochs
     * ≤ k — the [[anomalyVersionsBatch]] emission rule carried onto
     * the O(1)-state smoother. Shared [[dayEpochs]] timeline, one
-    * cached batch pass, one filtered projection per retained
+    * checkpointed batch pass, one filtered projection per retained
     * version; StreamingSpec replays the epochs live and pins
     * cumulative-output equality. */
   def ewmaVersionsBatch(s: SparkSession, d: String, epochs: Int = 5,
@@ -810,7 +811,7 @@ object EventStreams {
       .select(date_trunc("day", col("ts")).as("day")).distinct()
     val scored = graft.ops.TimeSeriesOps.ewma(s, d, alpha)
       .join(broadcast(dayEpochs(days, epochs)), Seq("day"))
-      .cache() // every retained version filters this one pass
+      .localCheckpoint(false) // every retained version filters this one pass
     (epochs - keepVersions until epochs).map { k =>
       scored.filter(col("epoch") <= k)
         .select(lit(k.toLong).as("version"), col("event_type"),
@@ -957,7 +958,7 @@ object EventStreams {
     val scored = conformalMonitorBatch(s, d, period, alphaPct,
         calWindow, minCal)
       .join(broadcast(dayEpochs(days, epochs)), Seq("day"))
-      .cache() // every retained version filters this one pass
+      .localCheckpoint(false) // every retained version filters this one pass
     (epochs - keepVersions until epochs).map { k =>
       scored.filter(col("epoch") <= k)
         .select(lit(k.toLong).as("version"), col("event_type"),

@@ -371,14 +371,14 @@ object SketchStreams {
     require(epochs >= 1 && keepVersions >= 1 && keepVersions <= epochs,
       s"need 1 <= keepVersions <= epochs: $keepVersions/$epochs")
     val mg = udaf(new MisraGriesAgg(capacity))
-    // ONE corpus-scale tokenize, cached; everything exact below reads
+    // ONE corpus-scale tokenize, checkpointed; everything exact below reads
     // the (epoch, term, n) count frame — vocabulary-sized — instead
     // of re-scanning tokens per version
-    val terms = epochTerms(s, d, epochs).cache()
+    val terms = epochTerms(s, d, epochs).localCheckpoint(false)
     val counts = terms.groupBy(col("epoch"), col("term"))
       .agg(count(lit(1)).as("n")).localCheckpoint(false)
     val empty = terms.select(col("term"), lit(0L).as("est")).limit(0)
-    // ALL per-epoch slice summaries in ONE pass over the cached
+    // ALL per-epoch slice summaries in ONE pass over the checkpointed
     // tokens (groupBy epoch + the same MisraGriesAgg — identical
     // slice semantics, partials merged by the same UDAF machinery),
     // where the previous per-epoch agg paid `epochs` full token

@@ -208,7 +208,7 @@ class EtlSpec extends SparkSpec {
     // the curated table's schema: the all-null legacy_code column must
     // be gone (DropNullFields fired in every source branch)
     val curated = graft.sources.Sources.readPartitioned(spark,
-      s"target/e2e_stage/${new java.io.File(sf).getName}/curated")
+      s"${graft.etl.ReferencePipeline.stageDir(spark, sf)}/curated")
     assert(curated.columns.toSeq.sorted ===
       Seq("amount", "event_id", "ts", "type", "user_id"))
     // downstream per-source consumption prunes on the partition tag

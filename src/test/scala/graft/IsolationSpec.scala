@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+
 /** Every registry entry must be self-contained in a FRESH session: no
   * entry may depend on a session-global side effect (a legacy-parquet
   * conf, a cached frame, a temp view) left behind by a different entry
@@ -12,15 +14,21 @@ package graft
   * Spinning up 75 actual SparkSessions would take minutes, so instead
   * each entry runs against deliberately-RESET session state: every
   * [[GraftSession.requiredConfs]] key is unset back to its Spark
-  * default, the cache is cleared, and temp views are dropped. Any
-  * entry that leans on another entry's leftovers fails here exactly
-  * the way it would fail alone in a fresh session.
+  * default and temp views are dropped. Any entry that leans on
+  * another entry's leftovers fails here exactly the way it would fail
+  * alone in a fresh session.
+  *
+  * No entry may read the context-wide CacheManager either: a
+  * `.cache()` registers its plan there for EVERY session on the
+  * context, so another session's run of the same operator would read
+  * (or clear) it. Operators reuse intermediates through
+  * `localCheckpoint` only, and each entry's plan must hold no
+  * `InMemoryRelation`.
   */
 class IsolationSpec extends SparkSpec {
 
   private def resetSessionState(): Unit = {
     GraftSession.requiredConfs.keys.foreach(spark.conf.unset)
-    spark.catalog.clearCache()
     spark.catalog.listTables().collect()
       .filter(_.isTemporary).foreach(t => spark.catalog.dropTempView(t.name))
   }
@@ -35,8 +43,12 @@ class IsolationSpec extends SparkSpec {
       resetSessionState()
       // noop write materializes the FULL plan (count() would let
       // Catalyst prune sorts/projects that might hide the hazard)
-      SparkEntry.queries(name)(spark, sf)
-        .write.mode("overwrite").format("noop").save()
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.write.mode("overwrite").format("noop").save()
+      val cached = df.queryExecution.withCachedData
+        .collectWithSubqueries { case r: InMemoryRelation => r }
+      assert(cached.isEmpty,
+        s"$name reads the shared cache: ${cached.map(_.cacheBuilder.cachedName)}")
     }
   }
 }

@@ -128,14 +128,11 @@ class PlanSpec extends SparkSpec {
     // optimized plan contains one, something regressed.
     // NOT free: planning is lazy for most entries, but some run real
     // work while BUILDING their frame (MLlib fits, ANN fit counts)
-    // and several cache() intermediates — hence the clearCache below
-    // so the sweep's leftovers can't distort later tests
     val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
       val plan = SparkEntry.queries(name)(spark, sf)
         .queryExecution.executedPlan.toString
       if (plan.contains("CartesianProduct")) Some(name) else None
     }
-    spark.catalog.clearCache()
     assert(offenders.isEmpty, s"cartesian products in: $offenders")
   }
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class SupplySpec extends SparkSpec {
 
   test("derived partsupp: 4 real suppliers per part, closed-form columns in range") {
-    val ps = Supply.partsupp(spark, sf).cache()
+    val ps = Supply.partsupp(spark, sf).localCheckpoint(false)
     val nPart = Tables.part(spark, sf).count()
     assert(ps.count() === nPart * 4)
     // distinct (part, supplier) pairs — the stride never collides
@@ -24,7 +24,6 @@ class SupplySpec extends SparkSpec {
     val bad = ps.filter(!col("ps_availqty").between(1, 9999) ||
       !col("ps_cost_cents").between(1, 99999))
     assert(bad.count() === 0)
-    ps.unpersist()
   }
 
   test("q2: every published cost is the true per-part min over region suppliers") {
