@@ -17,8 +17,8 @@ import org.apache.spark.sql.SparkSession
   * session build makes every registry entry self-contained
   * ([[Tables.events]] keeps only a fail-then-set fallback for
   * caller-built sessions, engaged when the nanos scan actually
-  * rejects); IsolationSpec runs each entry against
-  * deliberately-reset conf state to keep it that way.
+  * rejects); IsolationSpec's registry sweep builds and runs each
+  * entry against deliberately-reset conf state to keep it that way.
   *
   * Two kinds of conf, two ways in:
   *  - runtime confs ([[requiredConfs]]) can be set on a live session,

@@ -204,9 +204,6 @@ object VectorExprs {
     ColumnBridge.column(
       DotProductQ6(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  def cosineSim(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      CosineSim(ColumnBridge.expression(a), ColumnBridge.expression(b)))
   def cosineSimQ6(a: Column, b: Column): Column =
     ColumnBridge.column(
       CosineSimQ6(ColumnBridge.expression(a), ColumnBridge.expression(b)))

@@ -34,8 +34,8 @@ object SimilarityOps {
     * within an ulp of a .5 boundary splits the engines (caught live
     * by the sf0.007 sweep); the oracles replay the same quantized
     * chain via [[qcosSql]]. The plain float kernel remains available
-    * as `graft.functions.VectorExprs.cosineSim` (and the cosine_sim
-    * SQL function) for callers that rank without publishing. */
+    * as the `cosine_sim` SQL function ([[graft.GraftExtensions]]) for
+    * callers that rank without publishing. */
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorExprs.cosineSimQ6(a, b)
 
@@ -1857,11 +1857,13 @@ object SimilarityOps {
 
     val v0 = cov.select(col("i").as("dim")).distinct()
       .select(col("dim"), lit(1000000L).as("v6"))
-    // each round's 64-row state rides its own lazy localCheckpoint:
+    // each round's 64-row state rides its own localCheckpoint(false):
     // without it the fold is a recomputation TREE — round r re-derives
     // rounds 1..r−1 and renorm's scalar crossJoin doubles each level
     // (measured: 17.6s at sf0.1 for what is 4096-row arithmetic;
-    // checkpointed: sub-second rounds)
+    // checkpointed: sub-second rounds). Under AQE the rounds' shuffle
+    // stages run while the frame is built (emb_pca_power at sf0.001:
+    // 32 jobs to build, 14 with AQE off)
     val vf = (1 to iters).foldLeft(v0) { (v, _) =>
       renorm(applyC(v).localCheckpoint(false)).localCheckpoint(false)
     }

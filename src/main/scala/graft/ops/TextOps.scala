@@ -1331,10 +1331,11 @@ object TextOps {
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("score").desc, col("lang"))
     // EAGER checkpoint: the frame feeds THREE sibling branches of one
-    // job (margins, top-1, top-2); a lazy checkpoint materializes on
-    // first compute, so concurrent branch tasks would race and re-run
-    // the whole NB chain up to 3x (measured: 10.4s lazy vs ~4s eager
-    // at sf0.1). Eager pays the chain exactly once, before the joins.
+    // job (margins, top-1, top-2); a lazy checkpoint fills its blocks
+    // on first compute, so concurrent branch tasks would race and
+    // re-run its last stage up to 3x (under AQE the shuffle stages
+    // below it already ran at build; measured: 10.4s lazy vs ~4s
+    // eager at sf0.1). Eager pays it exactly once, before the joins.
     val ranked = nbScoredOn(corpus)
       .withColumn("rk", row_number().over(w))
       .localCheckpoint(true)
@@ -1400,8 +1401,12 @@ object TextOps {
     * (the text_lm_bigram pattern — no window, no sequence shuffle);
     * the winning pair is a 1-row TakeOrdered broadcast back onto a
     * row-local string rewrite. `rounds` scans of the corpus total,
-    * with a lazy localCheckpoint per round so the plan does not
-    * re-derive earlier rounds (the ml_kmeans_plan lesson).
+    * with a localCheckpoint(false) per round so the plan does not
+    * re-derive earlier rounds (the ml_kmeans_plan lesson). The
+    * rounds run while the frame is BUILT, not at its action: each
+    * round's rewrite needs its `top` broadcast, so building it runs
+    * the pair count (text_bpe_merges at sf0.001: 8 jobs to build, 4
+    * with AQE off).
     *
     * Merge application = greedy left-to-right non-overlapping, the
     * BPE standard. The corpus rides as one ``-delimited string

@@ -49,11 +49,6 @@ object Sources {
   def readJsonl(s: SparkSession, path: String, schema: StructType): DataFrame =
     s.read.schema(schema).option("mode", "PERMISSIVE").json(path)
 
-  /** JSON-Lines source with schema inference (discovery path; costs
-    * an extra pass). */
-  def readJsonlInferred(s: SparkSession, path: String): DataFrame =
-    s.read.json(path)
-
   /** JSON-Lines sink, one JSON object per line, optionally
     * partitioned — the dataset-export face ([[graft.ops.TimeSeriesOps
     * .deeparExport]] produces the same shape row-wise). */

@@ -171,11 +171,15 @@ object ChangeStreams {
     val ch = changes.localCheckpoint(false)
     val base0 = ch.select(col("user_id"), col("v_micro")).limit(0)
     // snaps(k) = snapshot AFTER folding epoch k (version id k).
-    // Each snapshot rides a LAZY localCheckpoint: version k+1's fold
+    // Each snapshot rides a localCheckpoint(false): version k+1's fold
     // and version k's audit then read ONE materialized copy — the
     // un-checkpointed chain re-evaluated the whole fold prefix per
     // retained version (12 applyChanges windows for 5 epochs × 3
-    // versions instead of 5). Still zero driver-side collection.
+    // versions instead of 5). Still zero driver-side collection, but
+    // not zero jobs before the action: under AQE building each
+    // checkpoint runs the fold's shuffle stages below it
+    // (cdc_snapshot_versions at sf0.001: 14 jobs to build, 5 with AQE
+    // off).
     val snaps = (0 until epochs).scanLeft(base0) { (base, k) =>
       Mapping.applyChanges(base, ch.filter(col("epoch") === k),
         keys = Seq("user_id"), opCol = "op", ord = Seq("event_id"))

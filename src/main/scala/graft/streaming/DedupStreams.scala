@@ -4,7 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One banded row of an arriving document: its LSH bucket key plus
   * everything in-state verification needs (the shingle set for exact
@@ -143,13 +143,12 @@ object DedupStreams extends Serializable {
     i
   }
 
-  /** The per-bucket matching core SHARED by both streaming faces
-    * (flatMapGroupsWithState and transformWithState), so their
-    * contracts cannot drift: process one micro-batch's arrivals in
-    * (event time, doc_id) order against the bucket's live members,
-    * emit verified hits oriented later-flags-earlier, and admit new
-    * arrivals up to `maxBucket`. Mutates `members`/`memberIds` in
-    * place; a doc already present is a redelivery no-op. */
+  /** The per-bucket matching core of [[nearDedupStream]]: process
+    * one micro-batch's arrivals in (event time, doc_id) order against
+    * the bucket's live members, emit verified hits oriented
+    * later-flags-earlier, and admit new arrivals up to `maxBucket`.
+    * Mutates `members`/`memberIds` in place; a doc already present is
+    * a redelivery no-op. */
   private def processBucket(band: Int, arrivals: Seq[NearDupBandRow],
       members: scala.collection.mutable.ArrayBuffer[NearDupMember],
       memberIds: scala.collection.mutable.Set[Long],
@@ -188,7 +187,7 @@ object DedupStreams extends Serializable {
     out.result()
   }
 
-  /** Shared banding stage: row-local shingle hashes + banded MinHash
+  /** Banding stage: row-local shingle hashes + banded MinHash
     * signatures, watermarked, exploded to one row per (band, bsig). */
   private def bandedRows(docs: DataFrame, numPerm: Int, bands: Int,
                          horizonMs: Long): org.apache.spark.sql.Dataset[NearDupBandRow] = {
@@ -290,90 +289,6 @@ object DedupStreams extends Serializable {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(onBucket)
       .toDF()
-  }
-
-  /** The same bucket state machine on Spark 4's arbitrary-state v2
-    * API ([[org.apache.spark.sql.streaming.StatefulProcessor]] via
-    * `transformWithState`): one ListState row per bucket member
-    * instead of one serialized blob per bucket. That is the 100 TB
-    * win over [[nearDedupStream]] — the state store appends a new
-    * member without rewriting the bucket (RocksDB merge), a hot
-    * bucket's update cost stays O(1) per arrival rather than
-    * O(members), and expiry prunes via timers per bucket. Matching
-    * semantics are [[processBucket]] — literally the same function
-    * the flatMapGroupsWithState face runs, so the two faces cannot
-    * drift; StreamingSpec replays the same corpus through both and
-    * asserts equality with the oracled batch face.
-    *
-    * Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass` =
-    * `...state.RocksDBStateStoreProvider`) — transformWithState does
-    * not run on the default HDFS-backed store. */
-  def nearDedupStreamTws(docs: DataFrame, threshold: Double = 0.8,
-                         numPerm: Int = 64, bands: Int = 16,
-                         maxBucket: Int = 1000,
-                         horizon: java.time.Duration =
-                           java.time.Duration.ofHours(1)): DataFrame = {
-    require(maxBucket > 0 && !horizon.isZero && !horizon.isNegative)
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val horizonMs = horizon.toMillis
-    bandedRows(docs, numPerm, bands, horizonMs)
-      .groupByKey(r => (r.band, r.bsig))
-      .transformWithState(
-        new NearDupProcessor(threshold, maxBucket, horizonMs),
-        TimeMode.EventTime(), OutputMode.Append())
-      .toDF()
-  }
-
-  /** The arbitrary-state-v2 bucket state machine behind
-    * [[nearDedupStreamTws]]. State: one ListState row per live bucket
-    * member; timers: one per bucket at (newest member's event time +
-    * horizon), re-armed on every update, clearing the bucket when the
-    * watermark passes it. Members the watermark has already passed
-    * are additionally pruned lazily on access — same two-tier expiry
-    * as the GroupState face. */
-  private class NearDupProcessor(threshold: Double, maxBucket: Int,
-                                 horizonMs: Long)
-      extends StatefulProcessor[(Int, Long), NearDupBandRow, NearDupHit] {
-    @transient private var members: ListState[NearDupMember] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      members = getHandle.getListState[NearDupMember]("members",
-        org.apache.spark.sql.Encoders.product[NearDupMember], TTLConfig.NONE)
-
-    override def handleInputRows(key: (Int, Long),
-        rows: Iterator[NearDupBandRow],
-        timers: TimerValues): Iterator[NearDupHit] = {
-      val wm = timers.getCurrentWatermarkInMs()
-      val live = scala.collection.mutable.ArrayBuffer.from(
-        members.get().filter(_.tsMillis >= wm))
-      val ids = scala.collection.mutable.Set.from(live.map(_.doc_id))
-      val out = processBucket(key._1, rows.toSeq, live, ids,
-        threshold, maxBucket)
-      if (live.isEmpty) members.clear()
-      else {
-        // full rewrite here keeps put/get simple; the append-only
-        // fast path (appendValue for admitted members, lazy prune on
-        // read) applies when buckets run hot — correctness is
-        // identical, so start with the simpler shape
-        members.put(live.toArray)
-        getHandle.listTimers().foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(live.map(_.tsMillis).max + horizonMs)
-      }
-      out.iterator
-    }
-
-    override def handleExpiredTimer(key: (Int, Long), timers: TimerValues,
-        info: ExpiredTimerInfo): Iterator[NearDupHit] = {
-      // the single timer is deleted and re-armed at newest-member +
-      // horizon on every update, so at fire time the watermark has
-      // necessarily passed EVERY member — the whole bucket clears (no
-      // partial-prune branch exists on this path; lazy pruning in
-      // handleInputRows covers mid-horizon access)
-      members.clear()
-      Iterator.empty
-    }
   }
 
   /** Batch face of [[nearDedupStream]] for the oracle gate: replayed

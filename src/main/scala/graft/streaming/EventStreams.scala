@@ -268,15 +268,6 @@ object EventStreams {
   def qualityMonitorBatch(s: SparkSession, d: String): DataFrame =
     qualityMonitor(Tables.events(s, d), defaultQualityRules).orderBy(col("ws"))
 
-  /** Streaming face: watermark-bounded windowed aggregate, valid in
-    * APPEND mode — a window's final counts emit once the watermark
-    * passes it, and state stays bounded by the watermark horizon. */
-  def qualityMonitorStream(s: SparkSession, sourceDir: String,
-                           schema: org.apache.spark.sql.types.StructType): DataFrame =
-    qualityMonitor(
-      s.readStream.schema(schema).parquet(sourceDir).withWatermark("ts", "2 hours"),
-      defaultQualityRules)
-
   // ---- streaming funnel ------------------------------------------------
 
   case class FunnelEvent(user_id: Long, event_type: String,

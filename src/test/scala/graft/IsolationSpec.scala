@@ -2,21 +2,32 @@ package graft
 
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
-/** Every registry entry must be self-contained in a FRESH session: no
-  * entry may depend on a session-global side effect (a legacy-parquet
-  * conf, a cached frame, a temp view) left behind by a different entry
-  * that happened to run earlier. Round 5's q_union_counts crashed on
-  * its own because Verify/Bench run entries in sorted order and an
-  * earlier query's `Tables.events` call had already set the
-  * nanos-timestamp conf — the green oracle row masked an operator a
-  * first-query user couldn't run.
+/** The registry sweep: the one place tier-1 builds and runs every
+  * registry entry. Each entry is built ONCE and run ONCE, and every
+  * registry-wide property is checked on that same frame, so no other
+  * spec needs to loop over [[SparkEntry.queries]].
   *
-  * Spinning up 75 actual SparkSessions would take minutes, so instead
+  * Self-contained in a FRESH session: no entry may depend on a
+  * session-global side effect (a legacy-parquet conf, a cached frame,
+  * a temp view) left behind by a different entry that happened to
+  * run earlier. Round 5's q_union_counts crashed on its own because
+  * Verify/Bench run entries in sorted order and an earlier query's
+  * `Tables.events` call had already set the nanos-timestamp conf —
+  * the green oracle row masked an operator a first-query user
+  * couldn't run.
+  *
+  * Spinning up 306 actual SparkSessions would take minutes, so instead
   * each entry runs against deliberately-RESET session state: every
   * [[GraftSession.requiredConfs]] key is unset back to its Spark
   * default and temp views are dropped. Any entry that leans on
   * another entry's leftovers fails here exactly the way it would fail
   * alone in a fresh session.
+  *
+  * No shuffle cartesian product: a `CartesianProduct` node means two
+  * distributed frames are paired row-by-row through a full shuffle,
+  * the one plan shape with no excuse at any scale. Broadcast nested
+  * loops over single-row stats frames (histogram bounds, split
+  * thresholds, ANN query sets) are idiomatic and allowed.
   *
   * No entry may read the context-wide CacheManager either: a
   * `.cache()` registers its plan there for EVERY session on the
@@ -45,10 +56,23 @@ class IsolationSpec extends SparkSpec {
       // Catalyst prune sorts/projects that might hide the hazard)
       val df = SparkEntry.queries(name)(spark, sf)
       df.write.mode("overwrite").format("noop").save()
-      val cached = df.queryExecution.withCachedData
+      val qe = df.queryExecution
+      assert(!qe.executedPlan.toString.contains("CartesianProduct"),
+        s"$name plans a shuffle cartesian product:\n${qe.executedPlan}")
+      val cached = qe.withCachedData
         .collectWithSubqueries { case r: InMemoryRelation => r }
       assert(cached.isEmpty,
         s"$name reads the shared cache: ${cached.map(_.cacheBuilder.cachedName)}")
     }
+  }
+
+  // the oracle gate's bookkeeping: a missing oracle silently
+  // downgrades an entry's check to rows-only; an orphan oracle names
+  // an entry that no longer exists
+  test("queries and oracleSql name the same entries") {
+    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    assert(missing.isEmpty, s"entries without oracleSql: $missing")
+    val orphan = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    assert(orphan.isEmpty, s"oracles without a queries entry: $orphan")
   }
 }

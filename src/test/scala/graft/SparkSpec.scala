@@ -8,9 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * ONE SparkContext per test JVM (object-level, built on first use),
   * but each SUITE gets its own `newSession()` view of it: suites run
   * CONCURRENTLY (`Test / testForkedParallel`), and session-level
-  * state — SQL confs (DedupSpec/LayoutSpec toggle AQE, StreamingSpec
-  * swaps the state-store provider, IsolationSpec deliberately unsets
-  * the required confs), temp views, current database — must not leak
+  * state — SQL confs (DedupSpec/LayoutSpec toggle AQE, IsolationSpec
+  * deliberately unsets the required confs), temp views, current
+  * database — must not leak
   * between suites mid-flight. `newSession()` isolates exactly that
   * per-session state while sharing the context, block manager and
   * cache, so suite parallelism costs no extra JVMs or contexts.

@@ -826,20 +826,10 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  /** transformWithState runs only on the RocksDB state store. */
-  private def withRocksDbStateStore[T](f: => T): T = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  /** Replay the sf0.01 corpus (arrival order = doc_id order, ts
-    * monotone in doc_id) through a streaming near-dup face and assert
-    * exactly-once emission of exactly the oracled batch pair set. */
-  private def nearDupMatchesBatch(
-      face: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      sink: String): Unit = {
+  test("streaming near-dup dedup flags the batch pair set on the sf0.01 corpus") {
+    // replay the sf0.01 corpus (arrival order = doc_id order, ts
+    // monotone in doc_id) and assert exactly-once emission of exactly
+    // the oracled batch pair set
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val d = "/root/testdata/sf0.01"
@@ -851,12 +841,13 @@ class StreamingSpec extends SparkSpec {
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, java.sql.Timestamp, String)]
     mem.addData(rows.toIndexedSeq)
-    val q = face(mem.toDF().toDF("doc_id", "ts", "text"))
+    val q = graft.streaming.DedupStreams
+      .nearDedupStream(mem.toDF().toDF("doc_id", "ts", "text"))
       .writeStream.outputMode("append")
-      .format("memory").queryName(sink).start()
+      .format("memory").queryName("neardup_out").start()
     try {
       q.processAllAvailable()
-      val streamed = spark.table(sink).collect()
+      val streamed = spark.table("neardup_out").collect()
         .map(r => (r.getLong(0), r.getLong(2), r.getDouble(3)))
       // exactly-once: no pair may be emitted twice across buckets
       assert(streamed.length === streamed.distinct.length)
@@ -867,27 +858,9 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming near-dup dedup flags the batch pair set on the sf0.01 corpus") {
-    import spark.implicits._
-    nearDupMatchesBatch(
-      df => graft.streaming.DedupStreams.nearDedupStream(df), "neardup_out")
-  }
-
-  test("transformWithState near-dup face flags the same batch pair set") {
-    import spark.implicits._
-    withRocksDbStateStore {
-      nearDupMatchesBatch(
-        df => graft.streaming.DedupStreams.nearDedupStreamTws(df),
-        "neardup_tws_out")
-    }
-  }
-
-  /** The multi-batch scenario both faces must pass identically:
-    * cross-batch bucket state, redelivery no-op, out-of-order
-    * orientation, horizon expiry. */
-  private def nearDupMultiBatch(
-      face: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      sink: String): Unit = {
+  test("near-dup stream state spans micro-batches and expires with the horizon") {
+    // cross-batch bucket state, redelivery no-op, out-of-order
+    // orientation, horizon expiry
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val text = "the quick brown fox jumps over the lazy dog again and again"
@@ -895,9 +868,11 @@ class StreamingSpec extends SparkSpec {
       java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime + m * 60000L)
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, java.sql.Timestamp, String)]
-    val q = face(mem.toDF().toDF("doc_id", "ts", "text"))
+    val q = graft.streaming.DedupStreams
+      .nearDedupStream(mem.toDF().toDF("doc_id", "ts", "text"),
+        horizon = java.time.Duration.ofMinutes(10))
       .writeStream.outputMode("append")
-      .format("memory").queryName(sink).start()
+      .format("memory").queryName("neardup_mb").start()
     try {
       // docs 7/8 have < 3 tokens → no shingles: they must be dropped
       // before state (shared null-fed signatures would bucket every
@@ -928,84 +903,11 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       mem.addData((5L, ts(61), text))
       q.processAllAvailable()
-      val out = spark.table(sink).collect()
+      val out = spark.table("neardup_mb").collect()
         .map(r => (r.getLong(0), r.getLong(2)))
       assert(out.toSet === Set((3L, 1L), (6L, 1L), (3L, 6L)))
       assert(out.length === 3) // exactly-once even under redelivery
     } finally q.stop()
-  }
-
-  test("near-dup stream state spans micro-batches and expires with the horizon") {
-    import spark.implicits._
-    nearDupMultiBatch(df => graft.streaming.DedupStreams.nearDedupStream(
-      df, horizon = java.time.Duration.ofMinutes(10)), "neardup_mb")
-  }
-
-  test("transformWithState near-dup: cross-batch state, expiry, redelivery") {
-    import spark.implicits._
-    withRocksDbStateStore {
-      nearDupMultiBatch(df => graft.streaming.DedupStreams.nearDedupStreamTws(
-        df, horizon = java.time.Duration.ofMinutes(10)), "neardup_tws_mb")
-    }
-  }
-
-  test("near-dup state backends MEASURED: GroupState-blob vs " +
-       "TWS/RocksDB row-per-member on the same corpus, same store — " +
-       "equal output, recorded wall time and state size") {
-    // VERDICT r15 ask #5: the TWS twin is the declared 100 TB state
-    // backend and had zero measurements. Both faces run on RocksDB so
-    // the comparison isolates the STATE LAYOUT (one serialized blob
-    // per bucket vs one ListState row per member), not the provider.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val d = "/root/testdata/sf0.01"
-    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    val rows = Tables.documents(spark, d).select("doc_id", "text").collect()
-      .sortBy(_.getLong(0))
-      .map(r => (r.getLong(0), new java.sql.Timestamp(base + r.getLong(0)),
-        r.getString(1)))
-    def run(face: org.apache.spark.sql.DataFrame =>
-              org.apache.spark.sql.DataFrame, sink: String)
-        : (Set[(Long, Long, Double)], Double, Long, Long) = {
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, String)]
-      mem.addData(rows.toIndexedSeq)
-      val q = face(mem.toDF().toDF("doc_id", "ts", "text"))
-        .writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      try {
-        val t0 = System.nanoTime()
-        q.processAllAvailable()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val so = q.recentProgress.flatMap(_.stateOperators)
-          .filter(_.numRowsTotal > 0)
-        assert(so.nonEmpty, "no stateful operator progress recorded")
-        val last = so.last
-        val out = spark.table(sink).collect()
-          .map(r => (r.getLong(0), r.getLong(2), r.getDouble(3))).toSet
-        (out, sec, last.numRowsTotal, last.memoryUsedBytes)
-      } finally q.stop()
-    }
-    withRocksDbStateStore {
-      val (outG, secG, rowsG, memG) = run(
-        df => graft.streaming.DedupStreams.nearDedupStream(df),
-        "neardup_meas_gs")
-      val (outT, secT, rowsT, memT) = run(
-        df => graft.streaming.DedupStreams.nearDedupStreamTws(df),
-        "neardup_meas_tws")
-      assert(outG === outT, "state backends diverged on the same corpus")
-      assert(outG.nonEmpty)
-      // blob-per-bucket stores one state row per BUCKET; row-per-member
-      // stores one per MEMBER — the row counts must reflect that shape
-      // (members >= buckets, every bucket has >= 1 member)
-      assert(rowsT >= rowsG,
-        s"TWS rows $rowsT < GroupState rows $rowsG — layout claim broken")
-      assert(memG > 0 && memT > 0)
-      info(f"[state-meas] groupstate: ${secG}%.2f s, state rows $rowsG, " +
-        f"memoryUsedBytes $memG")
-      info(f"[state-meas] tws/rocksdb: ${secT}%.2f s, state rows $rowsT, " +
-        f"memoryUsedBytes $memT")
-    }
   }
 
   test("streaming CDC apply maintains the snapshot the batch merge defines") {
