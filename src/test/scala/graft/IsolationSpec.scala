@@ -4,8 +4,9 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 /** The registry sweep: the one place tier-1 builds and runs every
   * registry entry. Each entry is built ONCE and run ONCE, and every
-  * registry-wide property is checked on that same frame, so no other
-  * spec needs to loop over [[SparkEntry.queries]].
+  * per-entry property is checked on that same frame, so no other spec
+  * needs to loop over [[SparkEntry.queries]] (RegistrySpec only
+  * compares its key set with `oracleSql`'s, building nothing).
   *
   * Self-contained in a FRESH session: no entry may depend on a
   * session-global side effect (a legacy-parquet conf, a cached frame,
@@ -64,15 +65,5 @@ class IsolationSpec extends SparkSpec {
       assert(cached.isEmpty,
         s"$name reads the shared cache: ${cached.map(_.cacheBuilder.cachedName)}")
     }
-  }
-
-  // the oracle gate's bookkeeping: a missing oracle silently
-  // downgrades an entry's check to rows-only; an orphan oracle names
-  // an entry that no longer exists
-  test("queries and oracleSql name the same entries") {
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(missing.isEmpty, s"entries without oracleSql: $missing")
-    val orphan = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphan.isEmpty, s"oracles without a queries entry: $orphan")
   }
 }
