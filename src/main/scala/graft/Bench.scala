@@ -5,8 +5,8 @@ package graft
 object Bench {
   /** Cold storage state for a timed entry: drop the SQL cache AND
     * every persistent RDD block left behind by earlier entries.
-    * Operators `localCheckpoint`/`persist` intermediates and the
-    * returned plan cannot unpersist the blocks that back it;
+    * Operators `localCheckpoint` intermediates and the returned plan
+    * cannot unpersist the blocks that back it;
     * `clearCache()` alone only drops catalog-tracked Dataset caches,
     * so checkpoint RDD blocks accumulated across a ~280-entry run and
     * later heavy entries paid earlier entries' eviction/GC churn —

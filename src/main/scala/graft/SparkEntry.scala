@@ -865,7 +865,7 @@ object SparkEntry {
       DedupOps.simhashPairsCheckedOn(Tables.documents(s, d))),
     // the corpus-scale band width: 3 bands of 20 bits (hamming ≤ 5)
     // — 32× fewer random band collisions than 4×15, the measured
-    // n²/2^15 term's dial (SCALING round 13); routed by simhashAuto
+    // n²/2^15 term's dial (SCALING round 13)
     "dedup_simhash_wide"  -> ((s, d) =>
       DedupOps.simhashPairsCheckedOn(Tables.documents(s, d),
         maxHamming = 5, bands = 3)),
@@ -1208,7 +1208,8 @@ object SparkEntry {
     // per-dimension z-scoring (diagonal whitening) on the same
     // integer lattice, diagonal-only — no d² grid
     "emb_standardize" -> ((s, d) => SimilarityOps.standardize(s, d)),
-    // §2.8 streaming (batch faces; streaming faces spec-tested)
+    // §2.8 stream-shaped operators, run in batch (transforms that work
+    // on batch and streaming frames alike)
     "stream_window_counts" -> (graft.streaming.EventStreams.windowCountsBatch _),
     "stream_sliding_counts" -> (graft.streaming.EventStreams.slidingCountsBatch _),
     // stream-static dimension lookup: LEFT join against the even half
@@ -1233,22 +1234,20 @@ object SparkEntry {
       .orderBy(col("relationship"))),
     "stream_sessionize"    -> (graft.streaming.EventStreams.sessionizeBatch _),
     "stream_dedup"         -> (graft.streaming.DedupStreams.dedupBatch _),
-    // within-stream NEAR-dup dedup: the oracled batch face of the
-    // stateful-LSH streaming operator (StreamingSpec replays this
-    // corpus through nearDedupStream and asserts set equality)
+    // within-stream NEAR-dup dedup in arrival (doc_id) order: each
+    // later doc flagged against the earlier one of every verified
+    // minhash LSH pair
     "stream_dedup_near"    -> (graft.streaming.DedupStreams.nearDedupBatch _),
     // windowed data-quality drift: etl_expectations' rules on the
-    // time axis, the live-ingest monitoring face (+ streaming spec)
+    // time axis, the live-ingest monitoring shape
     "stream_expectations"  -> (graft.streaming.EventStreams.qualityMonitorBatch _),
-    // versioned-snapshot audit: the CDC stream's retained batch=N
-    // versions re-derived through the SAME applyChanges fold, one
-    // audit row per retained version (StreamingSpec asserts the
-    // stream's directories reproduce these rows + marker invariants)
+    // versioned-snapshot audit: change epochs folded through
+    // applyChanges, one audit row per retained version
     "cdc_snapshot_versions" -> ((s, d) =>
       graft.streaming.ChangeStreams.snapshotVersionsBatch(s, d)),
-    // the attribution stream's versioned audit (the cdc pattern):
-    // per retained version, the published credit table re-derived
-    // through the stream's own epoch-major fold order
+    // the attribution fold's versioned audit (the cdc pattern):
+    // per retained version, the published credit table derived
+    // in epoch-major arrival order
     "attribution_versions" -> ((s, d) =>
       graft.streaming.EventStreams.attributionVersionsBatch(s, d)),
     // the anomaly monitor's versioned audit (the cdc pattern, round
@@ -1269,38 +1268,36 @@ object SparkEntry {
     // <= k — the anomaly rule on the O(1)-state monitor
     "ewma_versions" -> ((s, d) =>
       graft.streaming.EventStreams.ewmaVersionsBatch(s, d)),
-    // the funnel stream's versioned audit (the attribution posture):
+    // the funnel fold's versioned audit (the attribution posture):
     // the greedy stage machine folded in epoch-major arrival order —
     // chained min-tuple selections with the two explicit gates
     // (processed-after + event-time >=); version k counts advances
     // emitted through epoch k
     "funnel_versions" -> ((s, d) =>
       graft.streaming.EventStreams.funnelVersionsBatch(s, d)),
-    // the conformal monitor's ORACLED rolling-band face: the
-    // stream's own adaptive fold (seasonal-naive lag + FIFO
-    // calibration + the exact integer rank), not forecast_conformal's
-    // one-shot split — every published value an exact integer
+    // the conformal monitor's ORACLED rolling band: an adaptive fold
+    // (seasonal-naive lag + FIFO calibration + the exact integer
+    // rank), not forecast_conformal's one-shot split — every
+    // published value an exact integer
     "stream_conformal" -> ((s, d) =>
       graft.streaming.EventStreams.conformalMonitorBatch(s, d)),
-    // and its versioned audit — the LAST live face in the promotion
-    // series: bands publish on arrival and never revise, so version
-    // k = rows with day in epochs <= k
+    // and its versioned audit: bands publish on arrival and never
+    // revise, so version k = rows with day in epochs <= k
     "conformal_versions" -> ((s, d) =>
       graft.streaming.EventStreams.conformalVersionsBatch(s, d)),
-    // sketch-stream versioned-snapshot audits (the cdc pattern): each
-    // retained version re-derived through the stream's own merge code
-    // — MG guarantee verdicts, the exactly-replayable CM grid+probes,
-    // HLL union-fold tolerance verdicts
+    // sketch-fold versioned-snapshot audits (the cdc pattern): each
+    // retained version derived through the sketch's merge — MG
+    // guarantee verdicts, the exactly-replayable CM grid+probes, HLL
+    // union-fold tolerance verdicts
     "sketch_topk_versions" -> ((s, d) =>
       graft.streaming.SketchStreams.topkVersionsBatch(s, d)),
     "sketch_cm_versions" -> ((s, d) =>
       graft.streaming.SketchStreams.countMinVersionsBatch(s, d)),
     "sketch_hll_versions" -> ((s, d) =>
       graft.streaming.SketchStreams.hllVersionsBatch(s, d)),
-    // the FOURTH sketch stream's versioned contract: the PSI
-    // histogram fold is lossless, so every published value (bin
-    // counts, smoothed shares, terms, PSI, drift verdict) replays
-    // value-for-value per retained version
+    // the PSI histogram fold is lossless, so every published value
+    // (bin counts, smoothed shares, terms, PSI, drift verdict)
+    // replays value-for-value per retained version
     "sketch_psi_versions" -> ((s, d) =>
       graft.streaming.SketchStreams.psiVersionsBatch(s, d)),
   )

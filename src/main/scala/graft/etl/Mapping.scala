@@ -424,8 +424,8 @@ object Mapping {
     * scan (zero shuffles at any scale); output volume is the true
     * element count, the same growth any downstream shuffle would pay
     * anyway. Malformed JSON parses to null (PERMISSIVE) and
-    * posexplode drops the row — the same corrupt-line posture as
-    * [[graft.sources.Sources.readJsonl]]. */
+    * posexplode drops the row — a corrupt line costs its row, never
+    * the scan. */
   /** k-anonymity GENERALIZATION — the ACTION the q_kanonymity audit
     * drives (the audit counts violating classes; this REPAIRS them):
     * coarsen the numeric quasi-identifier up a fixed generalization
@@ -537,7 +537,7 @@ object Mapping {
     * The merge is one keyed full-outer join + coalesced monoid adds;
     * it is correct ONLY for commutative-monoid stats (counts, sums —
     * never raw distincts or percentiles: those need mergeable
-    * sketches, see SketchStreams.hllStream), which is exactly what
+    * sketches, see SketchStreams.hllVersionsBatch), which is exactly what
     * this entry PROVES: the oracle recomputes the aggregate FROM
     * SCRATCH over all rows and knows nothing about the split, so
     * hash equality is a cross-engine proof that merged ≡ recomputed.

@@ -1,12 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.XXH64
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** 64-bit SimHash over a token array (Charikar's scheme: each
@@ -58,14 +56,4 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.functions.SimHashImpl.compute($c)")
   override protected def withNewChildInternal(c: Expression): SimHash64 = copy(c)
   override def prettyName: String = "simhash64"
-}
-
-object SimHash {
-  /** Register `simhash64` in the session's function registry (idempotent)
-    * and return a Column applying it. */
-  def simhash64(spark: SparkSession, tokens: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "scala_udf")
-    call_function("simhash64", tokens)
-  }
 }

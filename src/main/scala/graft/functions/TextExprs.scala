@@ -58,9 +58,6 @@ case class CountInSet(child: Expression, words: Seq[String])
 object TextExprs {
   def countInSet(tokens: Column, words: Seq[String]): Column =
     ColumnBridge.column(CountInSet(ColumnBridge.expression(tokens), words))
-
-  def winnowFingerprint(tokens: Column, k: Int, w: Int): Column =
-    ColumnBridge.column(WinnowFingerprint(ColumnBridge.expression(tokens), k, w))
 }
 
 /** Winnowing fingerprint kernel (Schleimer et al., SIGMOD'03) as one

@@ -587,9 +587,9 @@ object Analytics {
       .orderBy(col("user_id"), col("event_id"))
   }
 
-  /** Exact distinct counts (the oracle-checked half; the HLL
-    * approx_count_distinct variant is spec-tested — see
-    * AnalyticsSpec — since its value is estimator-specific). */
+  /** Exact distinct counts. The HLL approx_count_distinct variant,
+    * [[distinctCountChecked]], checks its estimator-specific values
+    * against these counts in-plan. */
   def distinctCount(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
       .agg(countDistinct(col("user_id")).as("users"),
@@ -741,21 +741,13 @@ object Analytics {
       .orderBy(col("column"))
   }
 
-  /** HLL++ approximate distinct counts — the shape that survives
-    * 100 TB: the sketch is fixed-size and mergeable, so the aggregate
-    * stays map-side-combinable with no exact-distinct row expansion.
-    * Estimator-specific values ⇒ no cross-engine oracle; the spec
-    * asserts the rsd tolerance against the exact counts instead. */
-  def distinctCountApprox(s: SparkSession, d: String,
-                          rsd: Double = 0.02): DataFrame =
-    Tables.events(s, d)
-      .agg(approx_count_distinct(col("user_id"), rsd).as("users_approx"),
-           approx_count_distinct(col("event_type"), rsd).as("types_approx"))
-
-  /** Driver-checkable face of [[distinctCountApprox]]: sketch and
-    * exact distinct side by side, collapsed to the exact counts plus
-    * an IN-PLAN tolerance verdict (|approx − exact| ≤ 5·rsd·exact,
-    * absolute floor 1 for tiny cardinalities). The oracle emits the
+  /** HLL++ approximate distinct counts, checked — the shape that
+    * survives 100 TB: the sketch is fixed-size and mergeable, so the
+    * aggregate stays map-side-combinable with no exact-distinct row
+    * expansion. Sketch and exact distinct run side by side,
+    * collapsed to the exact counts plus an IN-PLAN tolerance verdict
+    * (|approx − exact| ≤ 5·rsd·exact, absolute floor 1 for tiny
+    * cardinalities). The oracle emits the
     * same exact counts with literal TRUE flags, so the cross-engine
     * hash compare FAILS exactly when the sketch drifts out of
     * tolerance — the emb_mrl_recall pattern, promoting the approx
@@ -776,23 +768,10 @@ object Analytics {
           .as("types_within_tol"))
 
   /** Per-type approximate percentiles (Greenwald-Khanna quantile
-    * sketch via percentile_approx) — bounded-memory, mergeable, the
-    * 100 TB replacement for the exact per-group sort. Spec-checked
-    * against the exact interpolated percentiles at a rank-error
-    * tolerance; no cross-engine oracle (sketch-specific values). */
-  def percentilesApprox(s: SparkSession, d: String,
-                        accuracy: Int = 10000): DataFrame =
-    Tables.events(s, d)
-      .groupBy(col("event_type"))
-      .agg(
-        round(expr(s"percentile_approx(value, 0.5, $accuracy)"), 4).as("p50"),
-        round(expr(s"percentile_approx(value, 0.95, $accuracy)"), 4).as("p95"),
-        round(expr(s"percentile_approx(value, 0.99, $accuracy)"), 4).as("p99"))
-      .orderBy(col("event_type"))
-
-  /** Driver-checkable face of [[percentilesApprox]]: GK guarantees
-    * RANK error (≤ 1/accuracy), not value error, so the in-plan
-    * verdict brackets each sketch quantile between the EXACT
+    * sketch via percentile_approx — bounded-memory, mergeable, the
+    * 100 TB replacement for the exact per-group sort), checked: GK
+    * guarantees RANK error (≤ 1/accuracy), not value error, so the
+    * in-plan verdict brackets each sketch quantile between the EXACT
     * quantiles at p ± δ (δ = 0.005 ≫ the 1e-4 guarantee; p99's
     * upper bracket is the max). Output = exact percentiles + the
     * three verdicts; the oracle replays the exact side (quantile_cont
@@ -828,8 +807,8 @@ object Analytics {
     * one exchange on the group key — audited in BASELINE.md), but the
     * buffer is a value→count map that grows with the group's distinct
     * values, the honest cost of exactness. At 100 TB with huge groups
-    * switch to [[percentilesApprox]] (GK sketch: fixed-size mergeable
-    * buffers) and accept the spec-bounded rank error. */
+    * switch to the GK sketch of [[percentilesChecked]] (fixed-size
+    * mergeable buffers) and accept its bounded rank error. */
   def percentiles(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
       .groupBy(col("event_type"))

@@ -91,7 +91,7 @@ object DedupOps {
     * sorted array — computed entirely inside the scan projection (no
     * shuffle), and the base for signatures, prefixes, and
     * verification alike. */
-  private[ops] def docShingleSets(docs: DataFrame, k: Int = 3): DataFrame =
+  private[graft] def docShingleSets(docs: DataFrame, k: Int = 3): DataFrame =
     docShingleSetsCarry(docs, k, Nil)
 
   /** docShingleSets carrying extra per-doc columns through the scan
@@ -121,8 +121,8 @@ object DedupOps {
   /** Column expression: sorted distinct xxhash64 k-token shingle
     * hashes of a STAGED token-array column (stage the array first —
     * lambda bodies re-evaluate their subtrees per element). Per-row,
-    * no shuffle: this is what lets the streaming faces compute
-    * signatures without a stateful aggregation. */
+    * no shuffle: signatures come out of the scan projection, with no
+    * aggregation. */
   private[graft] def shingleHashesExpr(t: Column, k: Int = 3): Column = {
     val n = size(t)
     val starts = when(n >= k, sequence(lit(1), n - (k - 1)))
@@ -252,18 +252,13 @@ object DedupOps {
       .orderBy(col("id1"), col("id2"))
   }
 
-  /** The PERSISTED near-dup index over a corpus: one row per
-    * (doc_id, band, bsig) — the banded-MinHash signature table a
-    * daily pipeline writes beside the corpus (in production: a
+  /** The PERSISTED near-dup index over a staged shingle-set frame:
+    * one row per (doc_id, band, bsig) — the banded-MinHash signature
+    * table a daily pipeline writes beside the corpus (in production: a
     * parquet table partitioned by band). Values are identical to
     * [[minhashLshOn]]'s internal banding, so an index built once
     * keeps serving folds as the corpus grows. */
-  def bandIndexOn(docs: DataFrame, numPerm: Int = 64,
-                  bands: Int = 16): DataFrame =
-    bandIndexOnSets(docShingleSets(docs), numPerm, bands)
-
-  /** [[bandIndexOn]] over an already-staged shingle-set frame. */
-  private def bandIndexOnSets(sets: DataFrame, numPerm: Int,
+  private[graft] def bandIndexOnSets(sets: DataFrame, numPerm: Int,
                               bands: Int): DataFrame = {
     val sh = sets.select(col("doc_id"), explode(col("hs")).as("h"))
     val sig = minhashSignatures(sh, numPerm)
@@ -317,7 +312,7 @@ object DedupOps {
 
   /** [[incrementalIndex]] with the persisted state crossing a REAL
     * parquet boundary — the production claim made checkable: the
-    * band index (partitioned by band, the layout [[bandIndexOn]]
+    * band index (partitioned by band, the layout [[bandIndexOnSets]]
     * declares) and the verified pair table are WRITTEN to parquet,
     * and today's fold reads them BACK — so the state that serves the
     * fold is exactly what a 2am re-run would load (reference:

@@ -76,24 +76,9 @@ object MlOps {
   }
 
   /** Scaler → logistic-regression Pipeline predicting the label
-    * column; time-honored 80/20 split on a deterministic key. */
-  def classify(s: SparkSession, d: String): DataFrame = {
-    val df = featurized(s, d).localCheckpoint(false)
-    val train = df.filter(col("vec_id") % 5 =!= 0)
-    val test  = df.filter(col("vec_id") % 5 === 0)
-    val pipeline = new Pipeline().setStages(Array(
-      new StandardScaler().setInputCol("features").setOutputCol("scaled"),
-      new LogisticRegression().setFeaturesCol("scaled").setLabelCol("label")
-        .setMaxIter(20)))
-    val model = pipeline.fit(train)
-    model.transform(test)
-      .select(col("vec_id"), col("label"),
-        col("prediction").cast("int").as("predicted"))
-      .orderBy(col("vec_id"))
-  }
-
-  /** The CHECKED face of [[classify]]: fitted logistic weights are
-    * not replayable cross-engine, but the scoring CONTRACT is — per
+    * column on a time-honored 80/20 split by a deterministic key,
+    * checked: fitted logistic weights are not replayable
+    * cross-engine, but the scoring CONTRACT is — per
     * test row the probability vector must be a distribution (sums to
     * 1), the prediction must index into it, and it must be the
     * argmax of that vector. The entry emits the deterministic split
@@ -510,7 +495,7 @@ object MlOps {
   }
 
   /** Transparent logistic regression by fixed-round gradient descent
-    * — the VALUE-ORACLED counterpart of [[classify]] (whose MLlib
+    * — the VALUE-ORACLED counterpart of [[classifyChecked]] (whose MLlib
     * L-BFGS fit is implementation-specific and therefore only
     * guarantee-checked): every number this face produces, including
     * the trained weights, replays bit-for-bit in DuckDB because the

@@ -4,14 +4,6 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Input row: an opaque binary payload plus typed metadata — the
-  * shape image/audio/video columns take in a multimodal pipeline. */
-case class MmRecord(doc_id: Long, payload: Array[Byte], source: String)
-
-/** Extracted features per payload. */
-case class MmFeatures(doc_id: Long, source: String, byte_len: Int,
-                      width: Int, height: Int, features: Array[Float])
-
 /** Decoded audio features per WAV payload. */
 case class WavFeatures(doc_id: Long, sample_rate: Int, channels: Int,
                        bits_per_sample: Int, n_frames: Long,
@@ -646,62 +638,12 @@ object MmSynth {
   }
 }
 
-/** Multimodal-column plumbing: carry media as opaque `binary` with
-  * typed metadata, decode + feature-extract per partition.
-  *
-  * The decode kernel is a STUB — this container has no image/audio
-  * codecs — but everything around it is the real pattern: a typed
-  * Dataset of (id, payload, meta), `mapPartitions` so a real decoder
-  * would be initialized once per partition (not per row), fixed
-  * batch-friendly output schema, and a deterministic feature vector
-  * so results are testable. Swapping `FakeDecoder` for libjpeg/ffmpeg
-  * bindings changes no Spark-side code.
+/** Multimodal operators: media payloads synthesized per document
+  * ([[MmSynth]]) and decoded row-locally by the pure-JVM codecs above
+  * (WAV, BMP, video) into features, quality gates and near-dup
+  * fingerprints.
   */
 object MultimodalOps {
-
-  /** Deterministic stand-in for a media codec. A real implementation
-    * holds native handles, so it is modeled as a per-partition
-    * resource with an explicit open(). */
-  private object FakeDecoder {
-    def open(): FakeDecoder = new FakeDecoder
-  }
-  private final class FakeDecoder {
-    /** "Decode" = derive stable pseudo-dimensions and an 8-dim
-      * feature vector from a rolling hash of the payload bytes. */
-    def decode(r: MmRecord): MmFeatures = {
-      var h = 1125899906842597L
-      val feats = new Array[Float](8)
-      var i = 0
-      while (i < r.payload.length) {
-        h = 31 * h + r.payload(i)
-        feats(i % 8) += (r.payload(i) & 0xFF) / 255.0f
-        i += 1
-      }
-      val w = ((h & 0x3F) + 1).toInt * 16
-      val ht = (((h >>> 6) & 0x3F) + 1).toInt * 16
-      MmFeatures(r.doc_id, r.source, r.payload.length, w, ht, feats)
-    }
-  }
-
-  /** documents.text reinterpreted as an opaque payload column; at
-    * scale this is the parquet binary column written by ingestion. */
-  def extractFeatures(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    // spread() before decode: codecs are CPU-bound and a single-file
-    // corpus would otherwise decode on one core
-    val ds = Tables.spread(Tables.documents(s, d)
-        .select(col("doc_id"), col("text").cast("binary").as("payload"),
-          col("source")))
-      .as[MmRecord]
-    ds.mapPartitions { it =>
-      val decoder = FakeDecoder.open() // once per partition, like a real codec
-      it.map(decoder.decode)
-    }.toDF()
-      // feature vector surfaces as a JSON string (checker-portable);
-      // downstream consumers wanting the array use from_json
-      .withColumn("features", to_json(col("features")))
-      .orderBy(col("doc_id"))
-  }
 
   /** The registry's multimodal entry: REAL codec work end to end.
     * Each document row materializes a byte-level media payload
@@ -930,50 +872,5 @@ object MultimodalOps {
     hashed.join(fams, Seq("fp"))
       .select(col("fp"), col("n_docs"), col("doc_id"))
       .orderBy(col("fp"), col("doc_id"))
-  }
-
-  /** Genuinely decode WAV payloads (stateless pure-JVM parser, so a
-    * flatMap suffices — no per-partition resource to open); malformed
-    * rows drop instead of failing the stage. Same typed-Dataset shape
-    * as [[extractFeatures]]: swap the source column for a parquet
-    * binary column at scale. */
-  def decodeWav(ds: org.apache.spark.sql.Dataset[MmRecord]):
-      org.apache.spark.sql.Dataset[WavFeatures] = {
-    import ds.sparkSession.implicits._
-    ds.flatMap(r => WavCodec.decode(r.doc_id, r.payload))
-  }
-
-  /** Genuinely decode uncompressed 24-bit BMP payloads — same
-    * contract and shape as [[decodeWav]]: stateless pure-JVM parser,
-    * malformed rows drop instead of failing the stage. */
-  def decodeBmp(ds: org.apache.spark.sql.Dataset[MmRecord]):
-      org.apache.spark.sql.Dataset[BmpFeatures] = {
-    import ds.sparkSession.implicits._
-    ds.flatMap(r => BmpCodec.decode(r.doc_id, r.payload))
-  }
-
-  /** Clip extraction over a binary audio column — payload→payload
-    * like [[resizeBmp]], so clip stages chain with [[decodeWav]]
-    * (the codec is closed under clipping): row-local, scan-speed,
-    * malformed payloads drop. */
-  def clipWav(ds: org.apache.spark.sql.Dataset[MmRecord],
-              fromMs: Long, toMs: Long):
-      org.apache.spark.sql.Dataset[MmRecord] = {
-    import ds.sparkSession.implicits._
-    ds.flatMap(r => WavCodec.clip(r.payload, fromMs, toMs)
-      .map(p => MmRecord(r.doc_id, p, r.source)))
-  }
-
-  /** Nearest-neighbor resize over a binary image column — the
-    * thumbnail/downsample stage of an image-curation pipeline, as a
-    * payload→payload transform so it CHAINS with [[decodeBmp]] (the
-    * codec is closed under resize): row-local, scan-speed, malformed
-    * payloads drop. */
-  def resizeBmp(ds: org.apache.spark.sql.Dataset[MmRecord],
-                outW: Int, outH: Int):
-      org.apache.spark.sql.Dataset[MmRecord] = {
-    import ds.sparkSession.implicits._
-    ds.flatMap(r => BmpCodec.resize(r.payload, outW, outH)
-      .map(p => MmRecord(r.doc_id, p, r.source)))
   }
 }

@@ -160,16 +160,13 @@ object TextOps {
     ("ips",    "\\b(\\d{1,3}\\.){3}\\d{1,3}\\b",                "<IP>"),
     ("digits", "\\d{6,}",                                       "<NUM>"))
 
-  /** PII scrub — the pre-training redaction pass: URLs, emails, IPv4
-    * addresses, and long digit runs (phone/account numbers) replaced
-    * by typed placeholders, with per-category match counts for
-    * auditability. A pure regexp chain inside the row projection
-    * (codegen'd, no shuffle); patterns apply in a fixed order so
-    * overlapping matches resolve deterministically. */
-  def redact(s: SparkSession, d: String): DataFrame =
-    redactOn(Tables.documents(s, d))
-
-  /** Same over any (doc_id, text) frame. */
+  /** PII scrub over any (doc_id, text) frame — the pre-training
+    * redaction pass: URLs, emails, IPv4 addresses, and long digit runs
+    * (phone/account numbers) replaced by typed placeholders, with
+    * per-category match counts for auditability. A pure regexp chain
+    * inside the row projection (codegen'd, no shuffle); patterns apply
+    * in a fixed order so overlapping matches resolve
+    * deterministically. */
   def redactOn(docs: DataFrame): DataFrame = {
     val counted = redactPatterns.foldLeft(graft.Tables.spread(docs)) {
       case (df, (name, pat, _)) =>
@@ -228,27 +225,12 @@ object TextOps {
       .orderBy(col("n").desc, col("term"))
       .limit(k)
 
-  /** Misra–Gries top-k terms — the 100 TB face: the exact groupBy's
-    * keyspace IS the problem at web-corpus vocabulary sizes, while
-    * this sketch holds `capacity` counters per partial aggregate and
-    * merges map-side. Estimates undercount by at most
-    * n_tokens/capacity (error-bound spec in TextOpsSpec); like every
-    * sketch entry this is rows-only, and estimates are
-    * merge-order-dependent within the bound. */
-  def topTermsSketch(s: SparkSession, d: String, k: Int = 10,
-                     capacity: Int = 64): DataFrame = {
-    val mg = udaf(new graft.functions.MisraGriesAgg(capacity))
-    graft.Tables.spread(Tables.documents(s, d))
-      .select(explode(toks(lower(col("text")))).as("term"))
-      .agg(mg(col("term")).as("sk"))
-      .select(explode(col("sk")).as(Seq("term", "est")))
-      .orderBy(col("est").desc, col("term"))
-      .limit(k)
-  }
-
-  /** The CHECKED face of [[topTermsSketch]] (the approx-tier gating
-    * pattern): one token explode feeds the Misra–Gries sketch AND the
-    * exact counts, and the entry itself asserts the sketch's
+  /** Misra–Gries top-k terms, checked — the 100 TB face: the exact
+    * groupBy's keyspace IS the problem at web-corpus vocabulary sizes,
+    * while this sketch holds `capacity` counters per partial aggregate
+    * and merges map-side. The approx-tier gating pattern: one token
+    * explode feeds the Misra–Gries sketch AND the exact counts, and
+    * the entry itself asserts the sketch's
     * guarantees against the exact answer per top-k term — presence
     * (any term with n > N/capacity must hold a counter), undercount
     * (est ≤ n), and the merge-safe error bound (n − est ≤
@@ -283,7 +265,7 @@ object TextOps {
   }
 
   /** Count-Min sketch term-frequency estimates — the POINT-QUERY
-    * sketch beside [[topTermsSketch]]'s heavy-hitter list (MG answers
+    * sketch beside [[topTermsSketchChecked]]'s heavy-hitter list (MG answers
     * "who is frequent"; CM answers "how often is THIS term" for any
     * queried term, from a fixed d×w counter grid): counter(i, b) =
     * tokens hashing to bucket b under row i's hash, est(term) =
@@ -777,9 +759,12 @@ object TextOps {
       when(q2 =!= "", concat(lit("?"), q2)).otherwise(lit("")))
   }
 
-  /** The CHECKED face of [[fingerprints]]: winnowing is hash-
-    * agnostic, so swapping the kernel's xxhash64 (which no other
-    * engine computes) for a 60-bit md5 prefix — Spark
+  /** Winnowing fingerprint (Schleimer et al., SIGMOD'03), checked:
+    * hash every k-token shingle, take the minimum hash of each
+    * sliding window of w shingles, dedupe — a compact, position-robust
+    * signature. Winnowing is hash-agnostic, so swapping the
+    * `winnow_fingerprint` kernel's xxhash64 (which no other engine
+    * computes) for a 60-bit md5 prefix — Spark
     * `conv(substr(md5(g),1,15),16,10)`, DuckDB
     * `('0x'||substr(md5(g),1,15))::ubigint` — makes EVERY
     * fingerprint value replayable cross-engine: the oracle re-runs
@@ -790,7 +775,8 @@ object TextOps {
     * checked face also serves as an independent reimplementation of
     * the winnow algorithm itself; 60 bits keeps the unsigned hex
     * parse inside a signed BIGINT in both engines. Production
-    * callers keep the faster xxhash64 kernel face. */
+    * callers keep the faster xxhash64 kernel (the `winnow_fingerprint`
+    * SQL function, [[graft.GraftExtensions]]). */
   def fingerprintsChecked(s: SparkSession, d: String,
                           k: Int = 3, w: Int = 4): DataFrame = {
     val t = toks(col("text"))
@@ -813,30 +799,6 @@ object TextOps {
         array_join(col("__fp").cast("array<string>"), ",").as("fingerprint"),
         size(col("__fp")).as("fp_size"),
         element_at(col("__fp"), 1).as("fp_min"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Winnowing fingerprint (Schleimer et al., SIGMOD'03): hash every
-    * k-token shingle, take the minimum hash of each sliding window of
-    * w shingles, dedupe — a compact, position-robust signature. The
-    * whole pipeline (shingle → xxhash64 → deque sliding-min →
-    * distinct+sort) is one codegen'd kernel call per document
-    * (graft.functions.WinnowKernel); TextOpsSpec checks it against a
-    * directly-computed reference. */
-  def fingerprints(s: SparkSession, d: String,
-                   k: Int = 3, w: Int = 4): DataFrame = {
-    val fp = col("__fp")
-    graft.Tables.spread(Tables.documents(s, d))
-      .select(col("doc_id"),
-        graft.functions.TextExprs.winnowFingerprint(toks(col("text")), k, w)
-          .as("__fp"))
-      .select(
-        col("doc_id"),
-        // JSON string, not a raw array: portable across result checkers
-        // and writers while keeping the full signature inspectable
-        to_json(fp).as("fingerprint"),
-        size(fp).as("fp_size"),
-        element_at(fp, 1).as("fp_min"))
       .orderBy(col("doc_id"))
   }
 

@@ -553,13 +553,13 @@ object TimeSeriesOps {
          |FROM f WHERE n >= $windowDays
          |ORDER BY event_type, day""".stripMargin
 
-  /** The versioned audit of the LIVE anomaly monitor
-    * ([[graft.streaming.EventStreams.anomalyStream]]) — the
+  /** DuckDB replica of the versioned anomaly-monitor audit
+    * ([[graft.streaming.EventStreams.anomalyVersionsBatch]]) — the
     * cdc_snapshot_versions pattern: the day timeline splits into
-    * `epochs` contiguous chunks (the stream's arrival order IS day
-    * order — finalized days arrive monotonically), and version k
-    * holds every row the stream has emitted once all days of epochs
-    * ≤ k are in: the trailing window scores a day the moment it
+    * `epochs` contiguous chunks (arrival order IS day order —
+    * finalized days arrive monotonically), and version k holds every
+    * row the monitor has emitted once all days of epochs ≤ k are in:
+    * the trailing window scores a day the moment it
     * arrives, so version k = the batch rows whose day sits in epochs
     * ≤ k — re-derived here through the SAME window chain. */
   private[graft] def anomalyVersionsOracleSql(
@@ -615,8 +615,8 @@ object TimeSeriesOps {
          |  round(score, 4) AS score, (abs(score) >= $minScore) AS is_change
          |FROM g ORDER BY event_type, day""".stripMargin
 
-  /** The versioned audit of the LIVE changepoint monitor
-    * ([[graft.streaming.EventStreams.changepointStream]]): the
+  /** DuckDB replica of the versioned changepoint-monitor audit
+    * ([[graft.streaming.EventStreams.changepointVersionsBatch]]): the
     * statistic is FORWARD-looking, so day D's row is emitted only
     * when day at per-series rank rank(D)+w−1 — its TRIGGER day —
     * has finalized; version k therefore holds the batch rows whose
@@ -683,8 +683,8 @@ object TimeSeriesOps {
         |SELECT event_type, day, cnt, ewma
         |FROM rows_ ORDER BY event_type, day""".stripMargin
 
-  /** The versioned audit of the LIVE EWMA smoother
-    * ([[graft.streaming.EventStreams.ewmaStream]]): eₜ depends only
+  /** DuckDB replica of the versioned EWMA-smoother audit
+    * ([[graft.streaming.EventStreams.ewmaVersionsBatch]]): eₜ depends only
     * on days ≤ t and published values never revise, so version k =
     * the batch rows whose day sits in epochs ≤ k — the anomaly
     * audit's emission rule with the O(1)-state fold's values. */

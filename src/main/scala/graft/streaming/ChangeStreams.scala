@@ -4,124 +4,14 @@ import graft.Tables
 import graft.etl.Mapping
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Streaming CDC apply: keep a queryable snapshot continuously merged
-  * from a change STREAM — the composition of [[Mapping.applyChanges]]
-  * with Structured Streaming that turns "MERGE INTO, but it never
-  * stops" into one operator. Each micro-batch folds into the current
-  * snapshot via the same latest-change-wins/upsert/delete semantics
-  * the batch operator defines (ONE definition, the faces cannot
-  * drift), and lands as an immutable `batch=<id>` version directory:
-  *
-  *  - exactly-once WITHOUT a table format: a retried micro-batch
-  *    rewrites its own version directory with deterministic content —
-  *    the previous version is never touched, so readers are never
-  *    exposed to a half-written snapshot (the same swap-on-success
-  *    rule Sources.compact enforces);
-  *  - versions double as time travel: `readSnapshot` serves the
-  *    newest COMPLETE version, `readSnapshot(version = n)` any older
-  *    one still retained;
-  *  - `keepVersions` bounds storage: older versions are pruned only
-  *    AFTER the new one is fully written.
-  *
-  * Scale: the per-batch merge cost is the batch operator's — a window
-  * over the (small) change batch plus an anti join the AQE broadcast
-  * serves — so the snapshot is never shuffled; the rewrite cost is
-  * proportional to snapshot size, which is the no-table-format
-  * trade documented here rather than hidden. */
+/** Versioned CDC snapshots: fold a change feed, epoch by epoch,
+  * into a snapshot through [[Mapping.applyChanges]]
+  * (latest-change-wins upsert/delete) and audit the retained
+  * versions. Version k is the snapshot after folding epochs 0..k;
+  * only the newest `keepVersions` are retained, the time-travel
+  * window a versioned store keeps. */
 object ChangeStreams {
-
-  private[graft] val donePrefix = "_done_"
-
-  private[graft] def fs(s: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** Completed version ids, newest first. A version counts only once
-    * its `_done_<id>` marker exists — directory listing alone would
-    * see a version the writer is still materializing. */
-  private[graft] def versions(s: SparkSession, dir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(s, dir)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith(donePrefix))
-      .map(_.drop(donePrefix.length).toLong).sorted.reverse.toSeq
-  }
-
-  /** Read the newest complete snapshot version (or an explicit one). */
-  def readSnapshot(s: SparkSession, dir: String,
-                   version: Long = -1L): DataFrame = {
-    val vs = versions(s, dir)
-    require(vs.nonEmpty, s"no complete snapshot under $dir")
-    val v = if (version >= 0) {
-      require(vs.contains(version), s"version $version not present in $vs")
-      version
-    } else vs.head
-    s.read.parquet(s"$dir/batch=$v")
-  }
-
-  /** Start the continuous merge. `changes` is a STREAMING frame whose
-    * columns are the snapshot's data columns + `opCol` + `ord`. */
-  def applyChangesStream(changes: DataFrame, snapshotDir: String,
-                         checkpoint: String, keys: Seq[String],
-                         opCol: String = "op", ord: Seq[String] = Seq("seq"),
-                         keepVersions: Int = 3): StreamingQuery = {
-    // >= 2: with a single retained version, the running stream's
-    // prune can delete the exact version a CONCURRENT reader's lazy
-    // DataFrame just selected, failing its first action — one version
-    // of headroom makes read-while-streaming safe
-    require(keepVersions >= 2,
-      "keepVersions must be >= 2 so concurrent readers always have headroom")
-    val dataCols = changes.columns.filterNot(c => c == opCol || ord.contains(c)).toSeq
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val s = batch.sparkSession
-        val vs = versions(s, snapshotDir)
-        // version ids ARE the checkpoint's batch ids — a mismatch
-        // between the two lineages must fail loudly, not silently
-        // corrupt the progression: a fresh checkpoint over an old
-        // snapshot restarts ids at 0 (each batch would merge into an
-        // EMPTY base and be pruned as "old" while readers keep
-        // serving the stale newest version), and a wiped snapshot
-        // under a kept checkpoint resumes mid-lineage with all prior
-        // state silently gone.
-        require(vs.isEmpty || id >= vs.head,
-          s"batch id $id is behind newest snapshot version ${vs.headOption}" +
-            s" — checkpoint and snapshotDir lineages do not match")
-        require(vs.nonEmpty || id == 0,
-          s"first observed batch id is $id but $snapshotDir has no versions" +
-            s" — the snapshot was deleted under a live checkpoint")
-        // two legitimate skips: a RETRY of the already-complete
-        // newest version (re-deriving it would read batch=id while
-        // overwriting it), and a replayed/empty epoch (a full
-        // snapshot-size write plus one retention slot of real
-        // history evicted, for a no-op)
-        if (!vs.contains(id) && !batch.isEmpty) {
-          val base = vs.headOption match {
-            case Some(v) => s.read.parquet(s"$snapshotDir/batch=$v")
-            case None => batch.select(dataCols.map(col): _*).limit(0)
-          }
-          val next = Mapping.applyChanges(base, batch, keys, opCol, ord)
-          next.write.mode("overwrite").parquet(s"$snapshotDir/batch=$id")
-          val f = fs(s, snapshotDir)
-          f.create(new org.apache.hadoop.fs.Path(
-            s"$snapshotDir/$donePrefix$id"), true).close()
-          // prune beyond the retention AFTER the new version is
-          // complete — marker FIRST (un-publish), data second, so a
-          // crash between the deletes can never leave a published
-          // marker pointing at deleted data
-          versions(s, snapshotDir).drop(keepVersions).foreach { old =>
-            f.delete(new org.apache.hadoop.fs.Path(s"$snapshotDir/$donePrefix$old"), false)
-            f.delete(new org.apache.hadoop.fs.Path(s"$snapshotDir/batch=$old"), true)
-          }
-        }
-        ()
-      }
-      .start()
-  }
 
   /** Deterministic change feed for the versioned-snapshot audit:
     * events become CDC rows keyed on `user_id` — an `error` event is
@@ -139,22 +29,15 @@ object ChangeStreams {
       (col("event_id") % epochs).as("epoch"),
       col("event_id"))
 
-  /** The ORACLED batch face of the versioned-snapshot contract: fold
-    * the change epochs through the SAME [[Mapping.applyChanges]]
-    * merge [[applyChangesStream]] runs per micro-batch, and emit one
-    * audit row per RETAINED version (the newest `keepVersions`, the
-    * streaming face's retention) — version id, row count, 4dp value
-    * total (BIGINT micro-units until the face), max key. The fold is
-    * lazy plan composition end to end: each version's snapshot is the
-    * previous version's plan + one window over its (1/epochs-sized)
-    * change slice + one AQE-broadcast anti join, so nothing here
-    * collects or materializes driver-side, and the audit aggregates
-    * are single-row reductions. StreamingSpec replays the identical
-    * epochs through [[applyChangesStream]] and asserts each retained
-    * version directory reproduces these audit rows exactly, plus the
-    * marker-first publication invariant (every `batch=` directory has
-    * its `_done_` marker and vice versa) — which is what makes this
-    * entry the driver-checkable face of the time-travel read. */
+  /** The ORACLED versioned-snapshot audit: fold the change epochs
+    * through [[Mapping.applyChanges]] and emit one audit row per
+    * RETAINED version (the newest `keepVersions`) — version id, row
+    * count, 4dp value total (BIGINT micro-units until the face), max
+    * key. The fold is lazy plan composition end to end: each
+    * version's snapshot is the previous version's plan + one window
+    * over its (1/epochs-sized) change slice + one AQE-broadcast anti
+    * join, so nothing here collects or materializes driver-side, and
+    * the audit aggregates are single-row reductions. */
   def snapshotVersionsBatch(s: SparkSession, d: String,
                             epochs: Int = 5,
                             keepVersions: Int = 3): DataFrame =

@@ -1,18 +1,19 @@
 package graft.streaming
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Streaming surface over the events table. Each operator has two
-  * faces with identical semantics:
-  *  - a batch face (used by the correctness oracle), and
-  *  - a Structured Streaming face (readStream → transform →
-  *    writeStream), spec-driven via the memory sink.
-  * The batch face IS the streaming computation — same expressions —
-  * so correctness checked on one transfers to the other.
+/** Stream-shaped operators over the events table, run in batch and
+  * checked by the oracle: windowed aggregates, stream-static and
+  * stream-stream joins, a windowed quality monitor and
+  * sessionization, each a shared transform that works on batch and
+  * streaming frames alike; plus versioned audits of per-key folds
+  * (funnel, attribution, anomaly, changepoint, EWMA, conformal band)
+  * that split the events into `epochs` arrival micro-batches and
+  * emit, per retained version, everything the fold has published
+  * through that epoch.
   */
 object EventStreams {
 
@@ -32,18 +33,6 @@ object EventStreams {
         col("total_value"))
       .orderBy(col("ws"), col("event_type"))
 
-  /** Streaming face: a parquet directory source (files appear over
-    * time in production; the spec stages a static copy) with an
-    * event-time watermark bounding aggregate state. */
-  def windowCountsStream(s: SparkSession, sourceDir: String,
-                         schema: org.apache.spark.sql.types.StructType): DataFrame =
-    s.readStream.schema(schema).parquet(sourceDir)
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("total_value"))
-      .select(col("window.start").as("ws"), col("event_type"), col("n"),
-        col("total_value"))
-
   // ---- sliding-window aggregate ---------------------------------------
 
   /** Shared transform: SLIDING windows (each event lands in
@@ -61,13 +50,6 @@ object EventStreams {
   /** Batch face for the oracle gate. */
   def slidingCountsBatch(s: SparkSession, d: String): DataFrame =
     slidingCounts(Tables.events(s, d)).orderBy(col("ws"), col("event_type"))
-
-  /** Streaming face, watermark-bounded like the tumbling one. */
-  def slidingCountsStream(s: SparkSession, sourceDir: String,
-                          schema: org.apache.spark.sql.types.StructType): DataFrame =
-    slidingCounts(
-      s.readStream.schema(schema).parquet(sourceDir)
-        .withWatermark("ts", "2 hours"))
 
   // ---- stream-static dimension enrichment -----------------------------
 
@@ -96,8 +78,8 @@ object EventStreams {
     *    pinned, not left to size estimates, for the same
     *    no-per-batch-flips reason as above. The stream side pays a
     *    per-batch exchange; store the dimension BUCKETED on the key
-    *    ([[graft.sources.Sources.writeBucketed]]) and the dimension
-    *    side reads exchange-free each batch. Beyond that regime the
+    *    and the dimension side reads exchange-free each batch.
+    *    Beyond that regime the
     *    shape is a keyed state-store lookup (mapGroupsWithState over
     *    a CDC feed of the dimension), which is a different operator,
     *    not a flag.
@@ -117,68 +99,12 @@ object EventStreams {
       customerDim(s, d))
       .orderBy(col("event_id"))
 
-  /** The dimension both faces share. */
+  /** The dimension [[enrichBatch]] joins. */
   def customerDim(s: SparkSession, d: String): DataFrame =
     Tables.customer(s, d)
       .filter(col("c_custkey") % 2 === 0)
       .select(col("c_custkey").as("user_id"),
         col("c_mktsegment").as("segment"))
-
-  /** Streaming face: same transform over a file stream; no watermark
-    * needed — the join is stateless (the static side is re-planned
-    * per micro-batch, which is also how dimension updates between
-    * batches become visible). */
-  def enrichStream(s: SparkSession, sourceDir: String,
-                   schema: org.apache.spark.sql.types.StructType,
-                   dim: DataFrame,
-                   broadcastDim: Boolean = true): DataFrame =
-    enrich(
-      s.readStream.schema(schema).parquet(sourceDir)
-        .select(col("event_id"), col("user_id")),
-      dim, broadcastDim = broadcastDim)
-
-  /** THIRD REGIME — keyed state-store lookup, for the dimension past
-    * both broadcast (regime 1) and per-batch shuffle (regime 2): the
-    * dimension is loaded ONCE into the query's keyed state store
-    * (`flatMapGroupsWithState` initial state, seeded from the
-    * dimension table — store it bucketed on the key and the seed scan
-    * is exchange-free), and from then on each micro-batch pays only
-    * the stream side's exchange on the key; the dimension is never
-    * rescanned, reshuffled, or reshipped per batch. State shards by
-    * key with the stream's partitioning and persists in the state
-    * store across batches (checkpoint-backed in production), so the
-    * per-batch marginal cost is O(batch), independent of dimension
-    * size — the only regime where that holds.
-    *
-    * Trade vs regime 1/2: dimension updates between batches are no
-    * longer visible (the static-join faces re-plan the dim every
-    * batch); refreshing state means feeding a CDC stream of dim
-    * upserts through the same keyed function — a composition of this
-    * operator with [[graft.streaming.ChangeStreams]], not a flag.
-    * Semantics match [[enrich]]'s left join exactly: every event
-    * emits once, null-filled when its key has no dimension row. */
-  def enrichStateStream(s: SparkSession, sourceDir: String,
-                        schema: org.apache.spark.sql.types.StructType,
-                        dim: DataFrame): DataFrame = {
-    import s.implicits._
-    val initial = dim
-      .select(col("user_id"), col("segment"))
-      .as[(Long, String)]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-    s.readStream.schema(schema).parquet(sourceDir)
-      .select(col("event_id"), col("user_id"))
-      .as[(Long, Long)]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout, initial) {
-        (uid: Long, rows: Iterator[(Long, Long)],
-         state: GroupState[String]) =>
-          val seg = state.getOption.orNull
-          rows.map { case (eid, _) => (eid, uid, seg) }
-      }
-      .toDF("event_id", "user_id", "segment")
-  }
 
   // ---- stream-stream join ---------------------------------------------
 
@@ -210,22 +136,6 @@ object EventStreams {
       ev.filter(col("event_type") === "click").drop("event_type"),
       ev.filter(col("event_type") === "view").drop("event_type"))
       .orderBy(col("click_id"), col("view_id"))
-  }
-
-  /** Streaming face: two file streams over the same source, each
-    * watermarked — inner stream-stream joins require a watermark +
-    * time constraint to expire buffered rows; the watermark delay
-    * must cover the join range (a view stays joinable for `within`
-    * after its own event time, so the delay is range + reorder
-    * slack). */
-  def clickViewJoinStream(s: SparkSession, sourceDir: String,
-                          schema: org.apache.spark.sql.types.StructType,
-                          within: String = "4 hours"): DataFrame = {
-    def side(t: String) = s.readStream.schema(schema).parquet(sourceDir)
-      .filter(col("event_type") === t)
-      .select(col("event_id"), col("user_id"), col("ts"))
-      .withWatermark("ts", "5 hours")
-    clickViewJoin(side("click"), side("view"), within)
   }
 
   // ---- windowed data-quality monitor ----------------------------------
@@ -268,60 +178,14 @@ object EventStreams {
   def qualityMonitorBatch(s: SparkSession, d: String): DataFrame =
     qualityMonitor(Tables.events(s, d), defaultQualityRules).orderBy(col("ws"))
 
-  // ---- streaming funnel ------------------------------------------------
+  // ---- funnel fold, versioned ------------------------------------------
 
-  case class FunnelEvent(user_id: Long, event_type: String,
-                         ts: java.sql.Timestamp, event_id: Long)
-  case class FunnelState(stage: Int, lastTsMicros: Long)
-  case class FunnelRow(user_id: Long, stage: Int, event_type: String,
-                       ts: java.sql.Timestamp)
-
-  /** Streaming face of [[graft.ops.Analytics.funnelOn]]: per-user
-    * stage state advanced by an in-order fold. The batch definition
-    * (stage k = EARLIEST qualifying event at or after the stage-k−1
-    * timestamp) is exactly what a greedy fold over the user's events
-    * in event-time order computes, so the state is two fields (stage
-    * index + its timestamp) — no buffered history. Within a
-    * micro-batch events arrive unordered → sort by (ts, stage rank,
-    * event_id); the stage rank in the tie-break mirrors the batch
-    * face's `>=`: a click at the SAME instant as the view converts,
-    * so same-timestamp events must fold funnel-order first. Emits one
-    * row per stage ADVANCE (append mode); conversion counts are a
-    * grouBy away. Late data beyond the source's delivery order is the
-    * documented caveat — reordered cross-batch arrivals can under-
-    * count conversions the batch face would find, the standard
-    * trade of per-event streaming funnels. */
-  def funnelStream(events: Dataset[FunnelEvent],
-                   stages: Seq[String] = Seq("view", "click", "purchase")): Dataset[FunnelRow] = {
-    import events.sparkSession.implicits._
-    val stageIdx = stages.zipWithIndex.toMap
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (userId, it, state: GroupState[FunnelState]) =>
-          def micros(e: FunnelEvent): Long =
-            Math.floorDiv(e.ts.getTime, 1000L) * 1000000L + e.ts.getNanos / 1000L
-          val sorted = it.toSeq.sortBy(e =>
-            (micros(e), stageIdx.getOrElse(e.event_type, Int.MaxValue), e.event_id))
-          var st = state.getOption.getOrElse(FunnelState(0, Long.MinValue))
-          val out = scala.collection.mutable.ArrayBuffer.empty[FunnelRow]
-          sorted.foreach { e =>
-            if (st.stage < stages.length && e.event_type == stages(st.stage) &&
-                (st.stage == 0 || micros(e) >= st.lastTsMicros)) {
-              st = FunnelState(st.stage + 1, micros(e))
-              out += FunnelRow(userId, st.stage, e.event_type, e.ts)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** The ORACLED batch face of [[funnelStream]]'s versioned
-    * contract — the attribution audit's epoch-major fold applied to
-    * the greedy stage machine: events split into `epochs`
-    * micro-batches by `event_id % epochs`, and the stream's arrival
+  /** Versioned audit of a per-user greedy funnel fold
+    * ([[graft.ops.Analytics.funnelOn]]'s stages: stage k = the
+    * earliest stage-k event at or after the stage-(k−1) timestamp),
+    * folded in arrival order — the attribution audit's epoch-major
+    * fold applied to the greedy stage machine: events split into
+    * `epochs` micro-batches by `event_id % epochs`, and the arrival
     * order is the lexicographic tuple (epoch, µs, stageIdx,
     * event_id) — the batch sort with epoch prepended. The greedy
     * fold then IS a chain of min-tuple selections: the user's
@@ -331,15 +195,12 @@ object EventStreams {
     * because with epochs prepended, later-in-fold no longer implies
     * later-in-time (an early-time event in a late epoch can advance
     * the stage; an early-epoch event can never advance a stage
-    * reached later — the funnelStream late-data caveat made an
-    * oracled value, the attribution posture). Version k publishes
-    * q_funnel's per-stage user counts over every advance EMITTED
-    * through epoch k, i.e. advances whose fold tuple sits in epochs
-    * ≤ k. Each stage's advance frame computes once (checkpointed) and
-    * every retained version adds one filtered count.
-    * StreamingSpec replays the identical epochs through
-    * [[funnelStream]] and asserts the per-stage cumulative emitted
-    * rows match these counts exactly. */
+    * reached later — late data made an oracled value, the
+    * attribution posture). Version k publishes q_funnel's per-stage
+    * user counts over every advance EMITTED through epoch k, i.e.
+    * advances whose fold tuple sits in epochs ≤ k. Each stage's
+    * advance frame computes once (checkpointed) and every retained
+    * version adds one filtered count. */
   def funnelVersionsBatch(s: SparkSession, d: String, epochs: Int = 5,
                           keepVersions: Int = 3,
                           stages: Seq[String] =
@@ -426,82 +287,29 @@ object EventStreams {
        |ORDER BY version, stage""".stripMargin
   }
 
-  // ---- streaming last-touch attribution ----------------------------------
+  // ---- last-touch attribution fold, versioned ----------------------------
 
-  case class TouchState(touchTsMicros: Long, touchType: String)
-  case class AttributionRow(user_id: Long, event_id: Long,
-                            touch_type: String)
-
-  /** Streaming face of [[graft.ops.Analytics.attributionLastTouch]]:
-    * credit each purchase to the user's LATEST preceding view/click
-    * within the lookback window, live. The batch face's keyed window
-    * (carry-forward last touch in (µs, tag, id) order) is exactly a
-    * greedy fold over per-user events in event-time order, so the
-    * state is ONE touch (timestamp + type) — no history. Within a
-    * micro-batch events sort by (µs, tag, id) with touches (tag 0)
-    * before conversions at the same instant — the equal-timestamp
-    * touch receives credit, the batch contract. Cross-batch state
-    * carries a batch-0 touch to a batch-N conversion; stale touches
-    * (beyond `windowDays`) and touchless users credit 'none'. Emits
-    * one row per conversion (append mode) — the batch face's share
-    * table is a groupBy away. Shares [[FunnelEvent]]'s shape; the
-    * funnelStream late-data caveat applies (delivery-order reorder
-    * across batches can mis-credit vs the batch replay). */
-  def attributionStream(events: Dataset[FunnelEvent],
-                        touchTypes: Seq[String] = Seq("view", "click"),
-                        convType: String = "purchase",
-                        windowDays: Int = 7): Dataset[AttributionRow] = {
-    import events.sparkSession.implicits._
-    val touches = touchTypes.toSet
-    events
-      .filter(e => touches.contains(e.event_type) || e.event_type == convType)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TouchState, AttributionRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (userId, it, state: GroupState[TouchState]) =>
-          def micros(e: FunnelEvent): Long =
-            Math.floorDiv(e.ts.getTime, 1000L) * 1000000L + e.ts.getNanos / 1000L
-          val sorted = it.toSeq.sortBy(e =>
-            (micros(e), if (e.event_type == convType) 1 else 0, e.event_id))
-          var st = state.getOption.getOrElse(TouchState(Long.MinValue, null))
-          val out = scala.collection.mutable.ArrayBuffer.empty[AttributionRow]
-          sorted.foreach { e =>
-            if (e.event_type == convType) {
-              val credit =
-                if (st.touchType != null &&
-                    micros(e) - st.touchTsMicros <= windowDays * 86400000000L)
-                  st.touchType
-                else "none"
-              out += AttributionRow(userId, e.event_id, credit)
-            } else st = TouchState(micros(e), e.event_type)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** The ORACLED batch face of [[attributionStream]]'s versioned
-    * contract — the `cdc_snapshot_versions` pattern applied to the
-    * live attribution fold: events split into `epochs` micro-batches
-    * by `event_id % epochs`, and for each RETAINED version k (the
-    * newest `keepVersions`) the PUBLISHED credit table — the batch
-    * twin `q_attribution`'s (touch_type, n_purchases, share) summary
-    * over every conversion the stream has emitted through epoch k —
-    * is re-derived through the stream's OWN fold semantics.
+  /** Versioned audit of a last-touch attribution fold — the
+    * `cdc_snapshot_versions` pattern applied to
+    * [[graft.ops.Analytics.attributionLastTouch]]: each purchase is
+    * credited to the user's latest preceding view/click within
+    * `windowDays` ('none' otherwise). Events split into `epochs`
+    * micro-batches by `event_id % epochs`, and for each RETAINED
+    * version k (the newest `keepVersions`) the PUBLISHED credit
+    * table — `q_attribution`'s (touch_type, n_purchases, share)
+    * summary over every conversion credited through epoch k — is
+    * derived in arrival order.
     *
-    * Those semantics are epoch-major: the stream's arrival order IS
-    * epoch order, with the batch contract's (µs, tag, id) sort
-    * inside each micro-batch — so the greedy one-touch state is
-    * exactly a carry-forward last over the (epoch, µs, tag, id)
+    * Arrival order is epoch-major: epoch order, with the batch
+    * contract's (µs, tag, id) sort inside each micro-batch — so the
+    * one-touch fold state is exactly a carry-forward last over the
+    * (epoch, µs, tag, id)
     * lexicographic order, ONE keyed window (q_attribution's window
     * with epoch prepended). Where event time interleaves across
     * epochs, the fold credits by arrival, not by global time — the
-    * documented late-data caveat, here made an oracled value instead
-    * of a disclaimer. One windowed pass is shared by all versions
-    * (checkpointed conversion frame); each version adds one filtered
-    * aggregate over it. StreamingSpec replays the identical epochs
-    * through [[attributionStream]] and asserts each version's
-    * cumulative emitted rows aggregate to exactly these audit rows. */
+    * late-data effect, here made an oracled value. One windowed pass
+    * is shared by all versions (checkpointed conversion frame); each
+    * version adds one filtered aggregate over it. */
   def attributionVersionsBatch(s: SparkSession, d: String,
                                epochs: Int = 5, keepVersions: Int = 3,
                                touchTypes: Seq[String] = Seq("view", "click"),
@@ -544,65 +352,12 @@ object EventStreams {
     }.reduce(_ unionAll _).orderBy(col("version"), col("touch_type"))
   }
 
-  // ---- streaming anomaly monitor ----------------------------------------
-
-  case class DailyCount(event_type: String, day: java.sql.Timestamp, cnt: Long)
-  case class AnomalyState(seen: Long, recent: List[Long])
-  case class AnomalyRow(event_type: String, day: java.sql.Timestamp,
-                        cnt: Long, z: Double, is_anomaly: Boolean)
-
-  /** Streaming face of [[graft.ops.TimeSeriesOps.anomalyZScore]]: the
-    * live monitor that scores each FINALIZED day's count against the
-    * trailing `windowDays`-day window as soon as the day closes. In
-    * production the input is the watermark-finalized output of the
-    * daily windowed count (append mode emits each (type, day, cnt)
-    * exactly once); state per series is the last `windowDays − 1`
-    * counts plus a seen-counter — O(windowDays) longs, not history.
-    * Same contract as the batch face: warm-up days (fewer than
-    * `windowDays` observed) emit nothing, zero-variance windows pin
-    * z = 0, the window is ROW-based (calendar gaps don't widen it),
-    * and the trailing window never peeks at the future. Within a
-    * micro-batch days fold in event-time order; finalized days arrive
-    * monotonically per series because the upstream watermark is. */
-  def anomalyStream(daily: Dataset[DailyCount], windowDays: Int = 7,
-                    threshold: Double = 2.0): Dataset[AnomalyRow] = {
-    import daily.sparkSession.implicits._
-    daily
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[AnomalyState, AnomalyRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (typ, it, state: GroupState[AnomalyState]) =>
-          val sorted = it.toSeq.sortBy(_.day.getTime)
-          var st = state.getOption.getOrElse(AnomalyState(0L, Nil))
-          val out = scala.collection.mutable.ArrayBuffer.empty[AnomalyRow]
-          sorted.foreach { e =>
-            val win = (st.recent :+ e.cnt).takeRight(windowDays)
-            st = AnomalyState(st.seen + 1,
-              (st.recent :+ e.cnt).takeRight(windowDays - 1))
-            if (st.seen >= windowDays) {
-              // counts are integers ≤ 2^53: the double sums below are
-              // EXACT, so mean/variance match the batch face's window
-              // aggregates to rounding
-              val n = win.length
-              val mean = win.map(_.toDouble).sum / n
-              val m2 = win.map(c => { val d = c - mean; d * d }).sum
-              val sd = if (n > 1) math.sqrt(m2 / (n - 1)) else 0.0
-              val z = if (sd == 0) 0.0 else (e.cnt - mean) / sd
-              out += AnomalyRow(typ, e.day, e.cnt,
-                BigDecimal(z).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-                  .toDouble,
-                math.abs(z) >= threshold)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
+  // ---- daily monitors, versioned ----------------------------------------
 
   /** The day-timeline epoch map both versioned monitor audits share:
     * the global distinct-day timeline splits into `epochs` contiguous
     * chunks (epoch of the day at global rank r, 1-based, is
-    * ((r−1)·epochs) div n) — day order IS the stream's arrival order
+    * ((r−1)·epochs) div n) — day order IS the arrival order
     * (finalized days arrive monotonically), so "epochs ≤ k have
     * arrived" is exactly a day-prefix. The partition-less window runs
     * on the DISTINCT-DAY frame — calendar-bounded (≤366 rows/year),
@@ -617,19 +372,16 @@ object EventStreams {
           .as("epoch"))
   }
 
-  /** The ORACLED batch face of [[anomalyStream]]'s versioned
-    * contract — the cdc_snapshot_versions pattern applied to the
-    * live z-score monitor: the day timeline splits into `epochs`
-    * contiguous chunks and, for each RETAINED version k (the newest
-    * `keepVersions`), the monitor's cumulative published rows are
-    * re-derived through the batch twin's own window chain
-    * ([[graft.ops.TimeSeriesOps.anomalyZScore]]). The trailing
-    * window scores a day the moment it finalizes, so version k =
-    * the batch rows whose day sits in epochs ≤ k — one batch pass
-    * checkpointed, one filtered projection per version. StreamingSpec
-    * replays the identical epochs through [[anomalyStream]] and
-    * asserts each version's cumulative emitted rows equal exactly
-    * these audit rows. */
+  /** Versioned audit of a daily z-score monitor — the
+    * cdc_snapshot_versions pattern applied to
+    * [[graft.ops.TimeSeriesOps.anomalyZScore]]: the day timeline
+    * splits into `epochs` contiguous chunks and, for each RETAINED
+    * version k (the newest `keepVersions`), the monitor's cumulative
+    * published rows are derived through the batch window chain. The
+    * trailing window scores a day the moment it finalizes, so
+    * version k = the batch rows whose day sits in epochs ≤ k — one
+    * batch pass checkpointed, one filtered projection per
+    * version. */
   def anomalyVersionsBatch(s: SparkSession, d: String, epochs: Int = 5,
                            keepVersions: Int = 3, windowDays: Int = 7,
                            threshold: Double = 2.0): DataFrame = {
@@ -649,75 +401,16 @@ object EventStreams {
       .orderBy(col("version"), col("event_type"), col("day"))
   }
 
-  case class CpState(buf: List[(Long, Long)])
-  case class ChangepointRow(event_type: String, day: java.sql.Timestamp,
-                            cnt: Long, pre_mean: Double, post_mean: Double,
-                            score: Double, is_change: Boolean)
-
-  /** Streaming face of [[graft.ops.TimeSeriesOps.changepoints]]: the
-    * live regime-shift monitor over watermark-finalized daily counts.
-    * The batch statistic is FORWARD-looking (a candidate day is
-    * scored by its own w-day window against the w days before it), so
-    * the stream can only score day D once day D+w−1 has finalized —
-    * emission lags the newest closed day by w−1 days, the inherent
-    * latency of a two-sided statistic (the anomaly monitor's one-
-    * sided z has no such lag; that is the trade between them). State
-    * per series is a ring of the last 2w−1 (day, count) pairs —
-    * O(w), not history. Arithmetic matches the batch face's window
-    * aggregates (integer counts ⇒ exact double sums; sample sd;
-    * zero-variance pre-window scores by the raw shift), so a corpus
-    * replay reproduces the batch rows at 4dp exactly (spec'd).
-    * Within a micro-batch days fold in event-time order; finalized
-    * days arrive monotonically per series because the upstream
-    * watermark is. */
-  def changepointStream(daily: Dataset[DailyCount], w: Int = 7,
-                        minScore: Double = 3.0): Dataset[ChangepointRow] = {
-    require(w >= 2, s"window must be >= 2: $w")
-    import daily.sparkSession.implicits._
-    daily
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[CpState, ChangepointRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (typ, it, state: GroupState[CpState]) =>
-          val sorted = it.toSeq.sortBy(_.day.getTime)
-          var buf = state.getOption.map(_.buf).getOrElse(Nil)
-          val out = scala.collection.mutable.ArrayBuffer.empty[ChangepointRow]
-          def r4(x: Double): Double =
-            BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-          sorted.foreach { d =>
-            buf = buf :+ (d.day.getTime, d.cnt)
-            if (buf.length == 2 * w) {
-              val pre = buf.take(w)
-              val post = buf.slice(w, 2 * w)
-              val preMean = pre.map(_._2.toDouble).sum / w
-              val postMean = post.map(_._2.toDouble).sum / w
-              val m2 = pre.map(c => { val dd = c._2 - preMean; dd * dd }).sum
-              val sd = math.sqrt(m2 / (w - 1))
-              val shift = postMean - preMean
-              val score = if (sd == 0) shift else shift / sd
-              val (dayMs, cnt) = buf(w)
-              out += ChangepointRow(typ, new java.sql.Timestamp(dayMs), cnt,
-                r4(preMean), r4(postMean), r4(score),
-                math.abs(score) >= minScore)
-              buf = buf.drop(1)
-            }
-          }
-          state.update(CpState(buf))
-          out.iterator
-      }
-  }
-
-  /** The ORACLED batch face of [[changepointStream]]'s versioned
-    * contract: the forward-looking statistic can only score day D
+  /** Versioned audit of a daily changepoint monitor
+    * ([[graft.ops.TimeSeriesOps.changepoints]]): the forward-looking
+    * statistic can only score day D
     * once day D+w−1 — D's TRIGGER day, the (w−1)-lead on the
     * per-series day order — has finalized, so version k holds the
     * batch rows ([[graft.ops.TimeSeriesOps.changepointsOn]]) whose
     * trigger day sits in epochs ≤ k: the monitor's inherent
-    * emission lag promoted from a scaladoc disclaimer to an oracled
-    * value. Same shared [[dayEpochs]] timeline, one checkpointed scored
-    * pass, one filtered projection per retained version;
-    * StreamingSpec replays the epochs through the live stream and
-    * asserts cumulative-emitted ≡ audit per version. */
+    * emission lag as an oracled value. Same shared [[dayEpochs]]
+    * timeline, one checkpointed scored pass, one filtered projection
+    * per retained version. */
   def changepointVersionsBatch(s: SparkSession, d: String,
                                epochs: Int = 5, keepVersions: Int = 3,
                                w: Int = 7,
@@ -745,54 +438,13 @@ object EventStreams {
       .orderBy(col("version"), col("event_type"), col("day"))
   }
 
-  case class EwmaState(seen: Long, e: Double)
-  case class EwmaRow(event_type: String, day: java.sql.Timestamp,
-                     cnt: Long, ewma: Double)
-
-  /** Streaming face of [[graft.ops.TimeSeriesOps.ewma]]: the live
-    * smoother over watermark-finalized daily counts. EWMA is the
-    * ideal streaming statistic — the ENTIRE history folds into one
-    * double per series (e₁ = y₁, eₜ = α·yₜ + (1−α)·eₜ₋₁), so state is
-    * O(1) regardless of stream age, unlike the anomaly monitor's
-    * O(window) ring. The recursion is written term-for-term as the
-    * batch face's fold (`alpha * y + (1 - alpha) * e`), so replaying
-    * a corpus through this face reproduces the batch values at 4dp
-    * EXACTLY (spec'd). Within a micro-batch days fold in event-time
-    * order; finalized days arrive monotonically per series because
-    * the upstream watermark is. */
-  def ewmaStream(daily: Dataset[DailyCount],
-                 alpha: Double = 0.3): Dataset[EwmaRow] = {
-    import daily.sparkSession.implicits._
-    daily
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[EwmaState, EwmaRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (typ, it, state: GroupState[EwmaState]) =>
-          val sorted = it.toSeq.sortBy(_.day.getTime)
-          var st = state.getOption.getOrElse(EwmaState(0L, 0.0))
-          val out = sorted.map { d =>
-            val e = if (st.seen == 0L) d.cnt.toDouble
-                    else alpha * d.cnt + (1 - alpha) * st.e
-            st = EwmaState(st.seen + 1, e)
-            // same explicit 4dp quantization as the batch face (floor
-            // arithmetic, not BigDecimal) so face equality is exact
-            EwmaRow(typ, d.day, d.cnt,
-              math.floor(e * 10000.0 + 0.5) / 10000.0)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** The ORACLED batch face of [[ewmaStream]]'s versioned contract:
-    * eₜ folds only days ≤ t and a published value never revises, so
-    * version k = the batch twin's rows
-    * ([[graft.ops.TimeSeriesOps.ewma]]) whose day sits in epochs
-    * ≤ k — the [[anomalyVersionsBatch]] emission rule carried onto
-    * the O(1)-state smoother. Shared [[dayEpochs]] timeline, one
-    * checkpointed batch pass, one filtered projection per retained
-    * version; StreamingSpec replays the epochs live and pins
-    * cumulative-output equality. */
+  /** Versioned audit of a daily EWMA smoother
+    * ([[graft.ops.TimeSeriesOps.ewma]]): eₜ folds only days ≤ t and a
+    * published value never revises, so version k = the batch rows
+    * whose day sits in epochs ≤ k — the [[anomalyVersionsBatch]]
+    * emission rule carried onto the O(1)-state smoother. Shared
+    * [[dayEpochs]] timeline, one checkpointed batch pass, one
+    * filtered projection per retained version. */
   def ewmaVersionsBatch(s: SparkSession, d: String, epochs: Int = 5,
                         keepVersions: Int = 3,
                         alpha: Double = 0.3): DataFrame = {
@@ -811,90 +463,16 @@ object EventStreams {
       .orderBy(col("version"), col("event_type"), col("day"))
   }
 
-  case class ConformalState(lastP: List[Long], cal: List[Long],
-                            lastDayMs: Long = Long.MinValue)
-  case class ConformalRow(event_type: String, day: java.sql.Timestamp,
-                          cnt: Long, pred: Long, lo: Long, hi: Long,
-                          covered: Boolean, n_cal: Int)
-
-  /** Streaming face of [[graft.ops.Forecast.conformalForecast]]: the
-    * live finite-sample band monitor. Where the EWMA/z-score monitor
-    * promises nothing about its alert rate, the conformal band's
-    * miss rate is ≤ α by construction (for exchangeable residuals) —
-    * the difference between "this looks unusual" and "this is
-    * outside the 90% band".
-    *
-    * Per series the state is BOUNDED whatever the stream age: the
-    * trailing `period` counts (the seasonal-naive reference) and a
-    * FIFO calibration window of the last `calWindow` absolute
-    * residuals. q̂ recomputes per finalized day as the
-    * ⌈keep·(n+1)/100⌉-th smallest calibration residual — the SAME
-    * integer rank arithmetic as the batch face ((keep(n+1)+99) div
-    * 100, clamped to n), so a corpus replayed through this face
-    * reproduces the batch q̂ exactly once the calibration windows
-    * align. The rolling window also makes the band ADAPTIVE — a
-    * variance regime change ages out of q̂ in `calWindow` days,
-    * which the one-shot batch face cannot do. Emission starts after
-    * `minCal` residuals; earlier days only calibrate.
-    *
-    * ORDERING GUARD: days sort within a micro-batch, but a day that
-    * arrives in a LATER batch than its successor would append to the
-    * seasonal reference and calibration window out of order,
-    * silently corrupting both. The state carries the last finalized
-    * day per key and DROPS such late arrivals (the same
-    * at-the-state's-frontier contract the other stateful faces
-    * document) — a dropped day is a visibly missing output row, not
-    * a silently wrong band. */
-  def conformalStream(daily: Dataset[DailyCount], period: Int = 7,
-                      alphaPct: Int = 10, calWindow: Int = 50,
-                      minCal: Int = 10): Dataset[ConformalRow] = {
-    import daily.sparkSession.implicits._
-    val keep = 100 - alphaPct
-    daily
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[ConformalState, ConformalRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (typ, it, state: GroupState[ConformalState]) =>
-          val sorted = it.toSeq.sortBy(_.day.getTime)
-          var st = state.getOption.getOrElse(ConformalState(Nil, Nil))
-          val out = scala.collection.mutable.ArrayBuffer.empty[ConformalRow]
-          sorted.foreach { d =>
-            if (d.day.getTime <= st.lastDayMs) {
-              // cross-batch straggler behind the state frontier:
-              // folding it in would corrupt the reference/calibration
-            } else {
-            st = st.copy(lastDayMs = d.day.getTime)
-            if (st.lastP.length >= period) {
-              val pred = st.lastP.head // the count `period` days back
-              val resid = math.abs(d.cnt - pred)
-              if (st.cal.length >= minCal) {
-                val n = st.cal.length
-                val k = math.min((keep * (n + 1) + 99) / 100, n)
-                val qhat = st.cal.sorted.apply(k - 1)
-                out += ConformalRow(typ, d.day, d.cnt, pred,
-                  pred - qhat, pred + qhat,
-                  d.cnt >= pred - qhat && d.cnt <= pred + qhat, n)
-              }
-              st = st.copy(cal = (st.cal :+ resid).takeRight(calWindow))
-            }
-            st = st.copy(lastP = (st.lastP :+ d.cnt).takeRight(period))
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** The ORACLED batch face of [[conformalStream]]'s ROLLING band —
-    * the stream's own adaptive fold (seasonal-naive reference +
-    * FIFO calibration window), not the one-shot split of
+  /** A ROLLING conformal band over daily counts — an adaptive fold
+    * (seasonal-naive reference + FIFO calibration window), not the
+    * one-shot split of
     * `forecast_conformal`: per series day t (rank order), pred =
     * the count `period` days back (row lag), residuals enter a
     * FIFO window of the last `calWindow`, and the day emits once
     * `minCal` residuals have accumulated, with q̂ = the
-    * ⌈keep·(n+1)/100⌉-th smallest calibration residual — the SAME
-    * integer rank arithmetic as the stream, on INTEGER residuals,
-    * so every published value (pred, lo, hi, covered, n_cal) is
+    * ⌈keep·(n+1)/100⌉-th smallest calibration residual — integer
+    * rank arithmetic on INTEGER residuals, so every published value
+    * (pred, lo, hi, covered, n_cal) is
     * exact cross-engine. Shape: two per-series windows (the lag and
     * the bounded preceding-frame residual list) on ONE series-key
     * shuffle — the calibration list is ≤ `calWindow` longs per row,
@@ -912,11 +490,11 @@ object EventStreams {
       .filter(col("pred").isNotNull) // t > period: the residual rows
       .withColumn("resid", abs(col("cnt") - col("pred")))
     // every residual row carries one, so the bounded preceding frame
-    // over THIS subframe is exactly the stream's FIFO window
+    // over THIS subframe is exactly the FIFO calibration window
     val wCal = Window.partitionBy(col("event_type")).orderBy(col("day"))
       .rowsBetween(-calWindow, -1)
     val n = col("__ncal")
-    // the stream's exact rank arithmetic: k = min(⌈keep(n+1)/100⌉, n)
+    // the exact rank arithmetic: k = min(⌈keep(n+1)/100⌉, n)
     val k = expr(s"least(((__ncal + 1) * $keep + 99) div 100, __ncal)")
     withPred
       .withColumn("__cal", collect_list(col("resid")).over(wCal))
@@ -933,9 +511,8 @@ object EventStreams {
       .orderBy(col("event_type"), col("day"))
   }
 
-  /** The versioned audit of the conformal monitor — the LAST live
-    * face in the promotion series: bands publish on day arrival and
-    * never revise (q̂ reads only PRIOR residuals), so version k =
+  /** The versioned audit of the conformal band: bands publish on day
+    * arrival and never revise (q̂ reads only PRIOR residuals), so version k =
     * [[conformalMonitorBatch]]'s rows whose day sits in epochs ≤ k —
     * the anomaly/ewma emission rule on the bounded-state band. */
   def conformalVersionsBatch(s: SparkSession, d: String, epochs: Int = 5,
@@ -961,7 +538,7 @@ object EventStreams {
 
   /** The rolling-band CTE chain both conformal oracles share:
     * seasonal-naive lag, residual subframe, the FIFO preceding-frame
-    * calibration list, the stream's integer rank — every value an
+    * calibration list, the integer rank — every value an
     * exact integer, so the band replays bit for bit. */
   private def conformalCoreSql(period: Int, keep: Int, calWindow: Int,
                                minCal: Int): String =
@@ -1038,47 +615,5 @@ object EventStreams {
       .agg(count(lit(1)).as("n_events"),
         min(col("ts")).as("start_ts"), max(col("ts")).as("end_ts"))
       .orderBy(col("user_id"), col("session_id"))
-  }
-
-  // Streaming face: arbitrary stateful processing. State is the
-  // last-seen timestamp + running session counter per user.
-  case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, event_id: Long)
-  case class SessionState(lastTsMicros: Long, sessionId: Long)
-  case class SessionRow(user_id: Long, session_id: Long, n_events: Long,
-                        start_ts: java.sql.Timestamp, end_ts: java.sql.Timestamp)
-
-  /** flatMapGroupsWithState sessionizer. Within a micro-batch the
-    * group's events arrive unordered — sort, then fold with the
-    * carried state so sessions continue across micro-batches. */
-  def sessionizeStream(events: Dataset[SessionEvent]): Dataset[SessionRow] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (userId, it, state: GroupState[SessionState]) =>
-          val sorted = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var st = state.getOption.getOrElse(SessionState(Long.MinValue, 0L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, SessionEvent)]
-          sorted.foreach { e =>
-            // full µs precision (getTime alone drops sub-ms nanos) so
-            // the gap predicate matches the batch face's unix_micros
-            val tsMicros =
-              Math.floorDiv(e.ts.getTime, 1000L) * 1000000L + e.ts.getNanos / 1000L
-            val sid =
-              if (st.lastTsMicros == Long.MinValue ||
-                  tsMicros - st.lastTsMicros > sessionGapSec * 1000000L)
-                st.sessionId + 1
-              else st.sessionId
-            st = SessionState(tsMicros, sid)
-            out += ((sid, e))
-          }
-          state.update(st)
-          out.groupBy(_._1).iterator.map { case (sid, evts) =>
-            val ts = evts.map(_._2.ts)
-            SessionRow(userId, sid, evts.size.toLong,
-              ts.minBy(_.getTime), ts.maxBy(_.getTime))
-          }
-      }
   }
 }

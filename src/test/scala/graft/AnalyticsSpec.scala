@@ -220,44 +220,6 @@ class AnalyticsSpec extends SparkSpec {
     }
   }
 
-  test("q_distinct_approx entry tracks the exact counts within rsd tolerance") {
-    val exact = Analytics.distinctCount(spark, sf).first()
-    val approx = Analytics.distinctCountApprox(spark, sf).first()
-    // rsd=0.02 ⇒ ±3σ = 6%; types has tiny cardinality so HLL is exact
-    assert(math.abs(approx.getLong(0) - exact.getLong(0)).toDouble /
-      exact.getLong(0) < 0.06)
-    assert(approx.getLong(1) === exact.getLong(1))
-  }
-
-  test("q_percentiles_approx entry tracks exact percentiles per group") {
-    // GK guarantees RANK error (≤ 1/accuracy), not value error — at a
-    // long-tailed p99 neighboring order statistics can be far apart in
-    // value, so the correct invariant is: each approx quantile lies
-    // between the exact quantiles at p ± δ (δ = 0.005 ≫ 1e-4 slack).
-    val d = 0.005
-    val bounds = Tables.events(spark, sf)
-      .groupBy(col("event_type"))
-      .agg(
-        expr(s"percentile(value, ${0.50 - d})").as("lo50"),
-        expr(s"percentile(value, ${0.50 + d})").as("hi50"),
-        expr(s"percentile(value, ${0.95 - d})").as("lo95"),
-        expr(s"percentile(value, ${0.95 + d})").as("hi95"),
-        expr(s"percentile(value, ${0.99 - d})").as("lo99"),
-        expr(s"percentile(value, ${0.99 + d})").as("hi99"))
-      .collect().map(r => r.getString(0) -> r).toMap
-    val rows = Analytics.percentilesApprox(spark, sf).collect()
-    assert(rows.length === bounds.size)
-    rows.foreach { r =>
-      val b = bounds(r.getString(0))
-      for ((i, lo, hi) <- Seq((1, "lo50", "hi50"), (2, "lo95", "hi95"),
-                              (3, "lo99", "hi99"))) {
-        val v = r.getDouble(i)
-        assert(v >= b.getAs[Double](lo) - 1e-4 && v <= b.getAs[Double](hi) + 1e-4,
-          s"${r.getString(0)} col$i: $v outside [${b.getAs[Double](lo)}, ${b.getAs[Double](hi)}]")
-      }
-    }
-  }
-
   test("q_dau_wau_approx: exact pair matches dauWau, every verdict true") {
     val exact = Analytics.dauWau(spark, sf).collect()
       .map(r => r.get(0) -> (r.getLong(1), r.getLong(2))).toMap

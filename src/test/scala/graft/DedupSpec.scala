@@ -41,7 +41,7 @@ class DedupSpec extends SparkSpec {
     val delta = Seq((4L, base + " extra"),
       (8L, "totally different content again")).toDF("doc_id", "text")
     val out = DedupOps.incrementalFold(
-      DedupOps.bandIndexOn(hist),
+      DedupOps.bandIndexOnSets(DedupOps.docShingleSets(hist), 64, 16),
       DedupOps.minhashLshOn(hist),
       hist, delta, threshold = 0.8, numPerm = 64, bands = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -75,7 +75,8 @@ class DedupSpec extends SparkSpec {
       (8L, "totally different content again")).toDF("doc_id", "text")
     def fold(h: org.apache.spark.sql.DataFrame,
              d: org.apache.spark.sql.DataFrame, cap: Int) =
-      DedupOps.incrementalFold(DedupOps.bandIndexOn(h),
+      DedupOps.incrementalFold(
+        DedupOps.bandIndexOnSets(DedupOps.docShingleSets(h), 64, 16),
         DedupOps.minhashLshOn(h), h, d,
         threshold = 0.8, numPerm = 64, bands = 16, maxBucket = cap)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq

@@ -94,90 +94,4 @@ class LayoutSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.adaptive.enabled")
   }
 
-  test("z-order: BOTH clustered columns skip; linear sort only its leading one") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      // 2-D uniform points whose two coordinates are independent of
-      // insertion order and of each other
-      val data = spark.range(200000).select(
-        col("id"),
-        pmod(xxhash64(col("id")), lit(100000L)).as("x"),
-        pmod(xxhash64(col("id"), lit(1)), lit(100000L)).as("y"))
-      val opts = Map(
-        "parquet.block.size" -> (64 * 1024).toString,
-        "parquet.page.size" -> (8 * 1024).toString)
-      Sources.writeSorted(data, s"$dir/linear", Seq("x"),
-        numFiles = 4, writerOptions = opts)
-      Sources.writeZOrdered(data, s"$dir/z", Seq("x", "y"),
-        numFiles = 4, writerOptions = opts)
-
-      // ~6% selectivity on each axis
-      def onY(path: String) = spark.read.parquet(path)
-        .filter(col("y") >= 50000L && col("y") < 56000L).select(col("id"))
-      def onX(path: String) = spark.read.parquet(path)
-        .filter(col("x") >= 50000L && col("x") < 56000L).select(col("id"))
-
-      val (linYKeys, linYScan) = runAndMeasure(onY(s"$dir/linear"))
-      val (zYKeys, zYScan) = runAndMeasure(onY(s"$dir/z"))
-      val (linXKeys, linXScan) = runAndMeasure(onX(s"$dir/linear"))
-      val (zXKeys, zXScan) = runAndMeasure(onX(s"$dir/z"))
-
-      // identical answers from identical data on every path
-      assert(zYKeys === linYKeys && zXKeys === linXKeys)
-      assert(zYKeys.nonEmpty && zXKeys.nonEmpty)
-      // x-sorted layout: y spans the full range in every row group —
-      // nothing skips on the non-leading column
-      assert(linYScan === 200000L, s"linear layout scanned $linYScan on y")
-      // z-order: each row group is a compact cell of (x, y) space, so
-      // the y predicate prunes groups too — at least 2x here, ~4-8x
-      // at this shape
-      assert(zYScan * 2 < linYScan,
-        s"z-order scanned $zYScan of $linYScan on the second column")
-      // and x skips on BOTH layouts (linear is best on its leading
-      // column; z still prunes substantially)
-      assert(linXScan * 4 < 200000L, s"linear scanned $linXScan on x")
-      assert(zXScan * 2 < 200000L, s"z-order scanned $zXScan on x")
-    } finally spark.conf.unset("spark.sql.adaptive.enabled")
-  }
-
-  test("skewed column: min/max z-codes quietly degrade, rank codes hold") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zskew").toString
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      // s is heavy-tailed: 99.5% of values in [0, 1000), 0.5% outliers
-      // around 10^12. Min/max normalization maps the BULK to code 0
-      // (the range is outlier-stretched 10^9×), so every row group
-      // spans the whole bulk and nothing skips on in-bulk predicates;
-      // rank codes follow the population, so the bulk still spreads
-      // over the full code space.
-      val data = spark.range(200000).select(
-        col("id"),
-        pmod(xxhash64(col("id")), lit(100000L)).as("x"),
-        when(pmod(xxhash64(col("id"), lit(7)), lit(200L)) === 0,
-          lit(1000000000000L) + pmod(xxhash64(col("id"), lit(8)), lit(1000L)))
-          .otherwise(pmod(xxhash64(col("id"), lit(9)), lit(1000L))).as("s"))
-      val opts = Map(
-        "parquet.block.size" -> (64 * 1024).toString,
-        "parquet.page.size" -> (8 * 1024).toString)
-      Sources.writeZOrdered(data, s"$dir/minmax", Seq("x", "s"),
-        numFiles = 4, writerOptions = opts, codeScheme = "minmax")
-      Sources.writeZOrdered(data, s"$dir/rank", Seq("x", "s"),
-        numFiles = 4, writerOptions = opts, codeScheme = "rank")
-
-      // ~10% of the bulk — the everyday predicate the outliers break
-      def onS(path: String) = spark.read.parquet(path)
-        .filter(col("s") >= 400L && col("s") < 500L).select(col("id"))
-
-      val (mmKeys, mmScan) = runAndMeasure(onS(s"$dir/minmax"))
-      val (rkKeys, rkScan) = runAndMeasure(onS(s"$dir/rank"))
-      assert(rkKeys === mmKeys)
-      assert(rkKeys.nonEmpty)
-      // min/max: the bulk all carries code 0 on s — row groups cannot
-      // reject an in-bulk range, the reader surfaces ~everything
-      assert(mmScan > 150000L, s"minmax unexpectedly skipped: $mmScan")
-      // rank codes keep skipping under the same skew
-      assert(rkScan * 2 < mmScan, s"rank scanned $rkScan of $mmScan")
-    } finally spark.conf.unset("spark.sql.adaptive.enabled")
-  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{BmpCodec, MmRecord, MmSynth, MultimodalOps, WavCodec}
+import graft.ops.{BmpCodec, MmSynth, MultimodalOps, WavCodec}
 
 class MultimodalSpec extends SparkSpec {
 
@@ -22,18 +22,14 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("decodeWav genuinely parses PCM headers and computes RMS") {
-    import spark.implicits._
     // 1 second of a constant-amplitude square-ish signal: RMS is exact
     val amp = 16384 // = 0.5 full scale
     val mono = wavBytes(8000, 1,
       Array.tabulate(8000)(i => (if (i % 2 == 0) amp else -amp).toShort))
     val stereo = wavBytes(44100, 2, Array.fill(44100 * 2)(amp.toShort))
     val junk = "not a wav at all".getBytes("US-ASCII")
-    val ds = Seq(
-      MmRecord(1L, mono, "audio"),
-      MmRecord(2L, stereo, "audio"),
-      MmRecord(3L, junk, "audio")).toDS()
-    val out = MultimodalOps.decodeWav(ds).collect()
+    val out = Seq(1L -> mono, 2L -> stereo, 3L -> junk)
+      .flatMap { case (id, b) => WavCodec.decode(id, b) }
       .map(f => f.doc_id -> f).toMap
     assert(out.keySet === Set(1L, 2L)) // junk dropped, not crashed
     val m = out(1L)
@@ -78,13 +74,12 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("clipWav chains with decodeWav; malformed payloads drop") {
-    import spark.implicits._
     val wav = wavBytes(8000, 1, Array.fill(8000)(1000.toShort))
     val junk = "RIFFnope".getBytes("US-ASCII")
-    val ds = Seq(MmRecord(1L, wav, "audio"), MmRecord(2L, junk, "audio")).toDS()
-    val out = MultimodalOps
-      .decodeWav(MultimodalOps.clipWav(ds, 250, 500))
-      .collect().map(f => f.doc_id -> f).toMap
+    val out = Seq(1L -> wav, 2L -> junk)
+      .flatMap { case (id, b) =>
+        WavCodec.clip(b, 250, 500).flatMap(WavCodec.decode(id, _)) }
+      .map(f => f.doc_id -> f).toMap
     assert(out.keySet === Set(1L))
     assert(out(1L).n_frames === 2000L)
   }
@@ -148,14 +143,12 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("decodeBmp genuinely parses 24-bit BMPs and computes channel means") {
-    import spark.implicits._
     // 3x2 image with known per-channel means; w=3 forces row padding
     val img = bmpBytes(3, 2, (x, y) => (10 * (x + 1), 100, 20 * y))
     val junk = "BMnot really a bitmap".getBytes("US-ASCII") ++ new Array[Byte](60)
-    val ds = Seq(
-      MmRecord(1L, img, "image"),
-      MmRecord(2L, junk, "image")).toDS()
-    val out = MultimodalOps.decodeBmp(ds).collect().map(f => f.doc_id -> f).toMap
+    val out = Seq(1L -> img, 2L -> junk)
+      .flatMap { case (id, b) => BmpCodec.decode(id, b) }
+      .map(f => f.doc_id -> f).toMap
     assert(out.keySet === Set(1L)) // junk dropped, not crashed
     val f = out(1L)
     assert(f.width === 3 && f.height === 2 && f.bits_per_pixel === 24 &&
@@ -266,31 +259,14 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("resizeBmp chains with decodeBmp; malformed payloads drop") {
-    import spark.implicits._
     val img = bmpBytes(4, 4, (x, y) => (x * 10, y * 10, 128))
     val junk = "BMnope".getBytes("US-ASCII") ++ new Array[Byte](80)
-    val ds = Seq(MmRecord(1L, img, "image"), MmRecord(2L, junk, "image")).toDS()
-    val out = MultimodalOps
-      .decodeBmp(MultimodalOps.resizeBmp(ds, 2, 2))
-      .collect().map(f => f.doc_id -> f).toMap
+    val out = Seq(1L -> img, 2L -> junk)
+      .flatMap { case (id, b) =>
+        BmpCodec.resize(b, 2, 2).flatMap(BmpCodec.decode(id, _)) }
+      .map(f => f.doc_id -> f).toMap
     assert(out.keySet === Set(1L))
     assert(out(1L).width === 2 && out(1L).height === 2)
-  }
-
-  test("extractFeatures: one row per document, deterministic features") {
-    val out = MultimodalOps.extractFeatures(spark, sf)
-    assert(out.columns.toSeq === Seq(
-      "doc_id", "source", "byte_len", "width", "height", "features"))
-    val rows = out.collect()
-    assert(rows.length === Tables.documents(spark, sf).count())
-    rows.foreach { r =>
-      assert(r.getInt(2) > 0)            // byte_len
-      assert(r.getInt(3) % 16 === 0)     // width from stub decoder grid
-      assert(r.getString(5).split(",").length === 8) // 8-dim JSON vector
-    }
-    // determinism: second run yields identical features
-    val again = MultimodalOps.extractFeatures(spark, sf).collect()
-    assert(rows.map(_.toString).toSeq === again.map(_.toString).toSeq)
   }
 
   test("MmSynth payloads decode through the REAL codecs to closed forms") {

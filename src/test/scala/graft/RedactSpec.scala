@@ -31,7 +31,7 @@ class RedactSpec extends SparkSpec {
   }
 
   test("redaction is a verified pass-through on the PII-free corpus") {
-    val out = TextOps.redact(spark, sf)
+    val out = TextOps.redactOn(Tables.documents(spark, sf))
     assert(out.filter(
       org.apache.spark.sql.functions.col("n_urls") +
         org.apache.spark.sql.functions.col("n_emails") +

@@ -4,6 +4,7 @@ import graft.etl.Mapping
 import graft.sources.Sources
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 class SourcesSpec extends SparkSpec {
@@ -23,23 +24,17 @@ class SourcesSpec extends SparkSpec {
     assert(a.sameElements(b))
   }
 
-  test("CSV inference discovers workable types") {
-    val dir = tmp()
-    Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")
-      .write.mode("overwrite").option("header", "true").csv(dir)
-    val inferred = Sources.readCsvInferred(spark, dir)
-    assert(inferred.schema("o_orderkey").dataType.typeName === "integer" ||
-           inferred.schema("o_orderkey").dataType.typeName === "long")
-    assert(inferred.schema("o_totalprice").dataType.typeName === "double")
-  }
-
   test("reference ETL pipeline shape: csv -> applyMapping -> tagged parquet") {
     val dir = tmp()
     Tables.events(spark, sf)
       .select(col("event_id"), col("ts").cast("string").as("event_time"),
         col("user_id"), col("event_type"))
       .write.mode("overwrite").option("header", "true").csv(s"$dir/raw")
-    val raw = Sources.readCsvInferred(spark, s"$dir/raw")
+    // the declared-schema read: every raw column lands as a string and
+    // applyMapping owns the casts
+    val raw = Sources.readCsv(spark, s"$dir/raw", StructType(
+      Seq("event_id", "event_time", "user_id", "event_type")
+        .map(StructField(_, StringType))))
     val mapped = Mapping.applyMapping(raw, Seq(
       ("event_id", "event_id", "long"),
       ("event_time", "event_ts", "timestamp"),
@@ -63,123 +58,6 @@ class SourcesSpec extends SparkSpec {
       Tables.events(spark, sf).filter(col("event_type") === "click").count())
     // partition pruning shows up as a pushed partition filter in the scan
     assert(plan.contains("PartitionFilters") || plan.contains("partitionFilters"))
-  }
-
-  test("registerTable persists an external catalog table over files in place") {
-    val dir = tmp()
-    Tables.nation(spark, sf).write.mode("overwrite").parquet(s"$dir/nation")
-    Sources.registerTable(spark, "graft_nation", s"$dir/nation")
-    // registration is idempotent and the table is queryable by name
-    Sources.registerTable(spark, "graft_nation", s"$dir/nation")
-    assert(spark.sql("SELECT count(*) AS n FROM graft_nation").first().getLong(0)
-      === Tables.nation(spark, sf).count())
-    assert(spark.catalog.tableExists("graft_nation"))
-    // external: dropping the table leaves the files untouched
-    spark.sql("DROP TABLE graft_nation")
-    assert(spark.read.parquet(s"$dir/nation").count() > 0)
-  }
-
-  test("JSONL roundtrip: declared schema, corrupt lines don't kill the scan") {
-    val dir = tmp()
-    val docs = Tables.documents(spark, sf)
-      .select("doc_id", "lang", "n_chars", "text")
-    Sources.writeJsonl(docs, s"$dir/docs", Seq("lang"))
-    val back = Sources.readJsonl(spark, s"$dir/docs", docs.schema)
-    assert(back.count() === docs.count())
-    // value-level parity (jsonl partitioned by lang restores the column)
-    val a = docs.orderBy("doc_id").collect().map(_.toString)
-    val b = back.select("doc_id", "lang", "n_chars", "text")
-      .orderBy("doc_id").collect().map(_.toString)
-    assert(a.sameElements(b))
-    // a corrupt line yields a null-field row, not a failed scan
-    val corrupt = s"$dir/corrupt"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(corrupt))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$corrupt/part-0.json"),
-      """{"doc_id": 1, "lang": "en", "n_chars": 5, "text": "hello"}
-        |not json at all
-        |""".stripMargin)
-    val parsed = Sources.readJsonl(spark, corrupt, docs.schema)
-    assert(parsed.count() === 2)
-    assert(parsed.filter(col("doc_id").isNull).count() === 1)
-  }
-
-  test("ORC faces: partitioned roundtrip with pruning, same as parquet") {
-    val dir = tmp()
-    Sources.writeOrc(
-      Tables.events(spark, sf).withColumn("day", to_date(col("ts"))),
-      dir, Seq("event_type"))
-    val pruned = Sources.readOrc(spark, dir)
-      .filter(col("event_type") === "click")
-    assert(pruned.count() ===
-      Tables.events(spark, sf).filter(col("event_type") === "click").count())
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") || plan.contains("partitionFilters"))
-  }
-
-  test("binaryFile source: glob prunes at listing, codecs decode content") {
-    val dir = tmp()
-    val p = java.nio.file.Paths.get(dir)
-    // a mixed media directory: BMPs, WAVs, and an oversized blob
-    for (id <- 0L until 4L) {
-      java.nio.file.Files.write(p.resolve(s"img_$id.bmp"),
-        graft.ops.MmSynth.bmpBytes(id))
-      java.nio.file.Files.write(p.resolve(s"snd_$id.wav"),
-        graft.ops.MmSynth.wavBytes(id))
-    }
-    java.nio.file.Files.write(p.resolve("huge.bmp"), new Array[Byte](2048))
-    // glob filter: only BMPs enter the scan; size guard drops the blob
-    val bmps = Sources.readBinaryFiles(spark, dir, glob = "*.bmp",
-      maxBytes = 1024)
-    val rows = bmps.select("path", "content").collect()
-    assert(rows.length === 4)
-    assert(rows.forall(_.getString(0).endsWith(".bmp")))
-    // the ingested bytes ARE the codec's input: every payload decodes
-    rows.foreach { r =>
-      val bytes = r.getAs[Array[Byte]]("content")
-      assert(graft.ops.BmpCodec.decode(0L, bytes).isDefined)
-    }
-    // and the WAV face sees only WAVs
-    val wavs = Sources.readBinaryFiles(spark, dir, glob = "*.wav")
-    assert(wavs.count() === 4)
-  }
-
-  test("schema evolution: mergeSchema reconciles old and new file footers") {
-    val dir = tmp()
-    // v1 files: (event_id, user_id); later files add `score`
-    Tables.events(spark, sf).select("event_id", "user_id")
-      .limit(100).write.mode("append").parquet(dir)
-    Tables.events(spark, sf).select(col("event_id"), col("user_id"),
-        col("value").as("score"))
-      .limit(50).write.mode("append").parquet(dir)
-    val merged = Sources.readEvolved(spark, dir)
-    assert(merged.columns.toSet === Set("event_id", "user_id", "score"))
-    assert(merged.count() === 150)
-    // old files surface the new column as null
-    assert(merged.filter(col("score").isNull).count() === 100)
-  }
-
-  test("schemaDiff reports added, removed, and retyped columns exactly") {
-    import org.apache.spark.sql.types._
-    val before = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("name", StringType),
-      StructField("score", DoubleType), StructField("tag", StringType)))
-    val after = StructType(Seq(
-      StructField("id", LongType, nullable = true), // relaxed: quiet 3am
-      StructField("name", StringType),              // unchanged → absent
-      StructField("score", StringType),             // retyped: loud 3am
-      StructField("geo", StringType)))              // added; tag removed
-    val diff = Sources.schemaDiff(before, after)
-    assert(diff === Seq(
-      ("geo", "added", "", "string"),
-      ("id", "nullability", "required", "nullable"),
-      ("score", "retyped", "double", "string"),
-      ("tag", "removed", "string", "")))
-    // drift the audit flags as retyped is exactly what mergeSchema
-    // refuses at read time — catching it here keeps the failure in
-    // the gate
-    assert(Sources.schemaDiff(before, before).isEmpty)
   }
 
   test("stats manifest: pruned read opens only intersecting files, " +

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.TextOps
-import graft.functions.SimHash
 import org.apache.spark.sql.functions._
 
 class TextOpsSpec extends SparkSpec {
@@ -216,26 +215,26 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("Misra-Gries sketch: undercounts within n/capacity, finds heavy hitters") {
-    val capacity = 64
+    // the checked face over the WHOLE vocabulary, not just a top-k:
+    // every term's three MG verdicts (present if heavier than
+    // n/capacity, never overcounts, undercounts by at most n/capacity)
     val exact = TextOps.topTerms(spark, sf, k = Int.MaxValue >> 1).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val nTokens = exact.values.sum
-    val bound = nTokens / capacity
-    val sketch = TextOps.topTermsSketch(spark, sf, k = Int.MaxValue >> 1,
-      capacity = capacity).collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-    assert(sketch.nonEmpty && sketch.length <= capacity)
-    sketch.foreach { case (term, est) =>
-      val truth = exact.getOrElse(term, 0L)
-      assert(est <= truth, s"'$term' overcounted: est=$est true=$truth")
-      assert(truth - est <= bound,
-        s"'$term' undercounted past n/capacity: est=$est true=$truth bound=$bound")
+      .map(r => (r.getString(0), r.getLong(1)))
+    val rows = TextOps.topTermsSketchChecked(spark, sf,
+      k = Int.MaxValue >> 1, capacity = 64).collect()
+    assert(rows.map(r => (r.getString(0), r.getLong(1))).toSet === exact.toSet)
+    rows.foreach { r =>
+      assert(r.getBoolean(2), s"heavy hitter '${r.getString(0)}' missing")
+      assert(r.getBoolean(3), s"'${r.getString(0)}' overcounted")
+      assert(r.getBoolean(4), s"'${r.getString(0)}' undercounted past n/capacity")
     }
-    // every item heavier than n/capacity is guaranteed present
-    val mustHave = exact.filter(_._2 > bound).keySet
-    val got = sketch.map(_._1).toSet
-    assert(mustHave.subsetOf(got),
-      s"missing guaranteed heavy hitters: ${mustHave -- got}")
+    // and the summary itself stays within `capacity` counters
+    val mg = udaf(new graft.functions.MisraGriesAgg(64))
+    val held = Tables.documents(spark, sf)
+      .select(explode(split(trim(lower(col("text"))), "\\s+")).as("term"))
+      .agg(size(mg(col("term"))))
+      .first().getInt(0)
+    assert(held > 0 && held <= 64, s"$held counters")
   }
 
   test("checked sketch face: exact top-k rows with every verdict TRUE") {
@@ -313,14 +312,6 @@ class TextOpsSpec extends SparkSpec {
     }
   }
 
-  test("fingerprints: identical docs share fingerprints, winnowing shrinks") {
-    val out = TextOps.fingerprints(spark, sf).collect()
-    out.foreach { r =>
-      val fpSize = r.getInt(2)
-      assert(fpSize > 0)
-    }
-  }
-
   test("winnow kernel matches a directly computed reference fingerprint") {
     import org.apache.spark.sql.catalyst.expressions.XXH64
     import org.apache.spark.unsafe.types.UTF8String
@@ -340,8 +331,11 @@ class TextOpsSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
       .select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val got = TextOps.fingerprints(spark, sf).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    // the kernel as the winnow_fingerprint SQL function (GraftExtensions)
+    val got = Tables.documents(spark, sf)
+      .select(col("doc_id"), to_json(
+        expr("winnow_fingerprint(split(trim(text), '\\\\s+'), 3, 4)")))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     docs.foreach { case (id, text) =>
       val want = reference(text).mkString("[", ",", "]")
       assert(got(id) === want, s"doc $id")
@@ -364,7 +358,7 @@ class TextOpsSpec extends SparkSpec {
       (2L, "spark is a fast engine for big data"),
       (3L, "completely different words entirely here now")).toDF("id", "text")
     val sigs = df.select(col("id"),
-      SimHash.simhash64(spark, split(col("text"), " ")).as("sig"))
+      expr("simhash64(split(text, ' '))").as("sig"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sigs(1L) === sigs(2L))
     assert(sigs(1L) !== sigs(3L))
