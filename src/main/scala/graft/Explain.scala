@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for selected queries so
   * pushdown / broadcast / codegen spans can be audited. */
 object Explain {

@@ -49,14 +49,6 @@ object ReferencePipeline {
     "record_id", "event_time", "rider_id", "amount", "legacy_code")
     .map(StructField(_, StringType)))
 
-  /** Stage dir under the build tree, keyed by the sf dir's name AND
-    * the session, so concurrent runs at different SFs or in different
-    * sessions on one context can't clobber each other; repeated runs
-    * in one session overwrite in place. */
-  private[graft] def stageDir(s: SparkSession, d: String): String =
-    s"target/e2e_stage/${new java.io.File(d).getName}-" +
-      Integer.toHexString(System.identityHashCode(s))
-
   /** Write the three raw CSV sources: all-string columns with
     * source-system names, timestamps as their exact string form
     * (timestamp→string→timestamp is lossless at micros precision),
@@ -90,9 +82,26 @@ object ReferencePipeline {
   }
 
   /** The composed pipeline; returns the final day×type matrix
-    * (day, clickview, txn, err, amount_sum). */
+    * (day, clickview, txn, err, amount_sum). The staged CSV and the
+    * curated sink land in a fresh per-invocation temp directory, so
+    * concurrent runs never share a path; the matrix (one row per day,
+    * bounded by construction) is COLLECTED and re-lifted before the
+    * directory is deleted, so repeated invocations in a long-lived
+    * process hold no disk (the [[DailyPipeline.dailyE2e]] posture). */
   def run(s: SparkSession, d: String): DataFrame = {
-    val base = stageDir(s, d)
+    val tmp = graft.TempDirs.create("graft_reference_e2e_")
+    try {
+      val out = runOn(s, d, tmp.toString)
+      val rows = out.collect()
+      import scala.jdk.CollectionConverters._
+      s.createDataFrame(rows.toSeq.asJava, out.schema)
+    } finally graft.TempDirs.delete(tmp)
+  }
+
+  /** The chain body over the working directory `base`; the returned
+    * frame reads the curated parquet under `base` lazily. */
+  private[graft] def runOn(s: SparkSession, d: String,
+                           base: String): DataFrame = {
     stageCsv(s, d, base)
     val curated = tags.map(t => etlSource(s, s"$base/$t", t))
       .reduce(_.unionByName(_))

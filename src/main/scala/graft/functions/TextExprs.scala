@@ -59,77 +59,3 @@ object TextExprs {
   def countInSet(tokens: Column, words: Seq[String]): Column =
     ColumnBridge.column(CountInSet(ColumnBridge.expression(tokens), words))
 }
-
-/** Winnowing fingerprint kernel (Schleimer et al., SIGMOD'03) as one
-  * static call: k-token shingles hashed with the same xxhash64(seed 42)
-  * Spark's builtin uses, sliding-window minima via a monotonic deque
-  * (O(shingles), not O(shingles·w)), then distinct+sort. The composed
-  * column equivalent needs two nested interpreted transforms and
-  * materializes every intermediate array; this stays in whole-stage
-  * codegen and allocates only the result. */
-object WinnowKernel {
-  import org.apache.spark.sql.catalyst.expressions.XXH64
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
-
-  private val SPACE = UTF8String.fromString(" ")
-
-  def winnow(tokens: ArrayData, k: Int, w: Int): ArrayData = {
-    val n = tokens.numElements()
-    if (n < k) return new GenericArrayData(Array.empty[Long])
-    val m = n - k + 1
-    val hashes = new Array[Long](m)
-    var i = 0
-    while (i < m) {
-      val parts = new Array[UTF8String](k)
-      var j = 0
-      while (j < k) { parts(j) = tokens.getUTF8String(i + j); j += 1 }
-      val s = UTF8String.concatWs(SPACE, parts: _*)
-      hashes(i) = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset,
-        s.numBytes, 42L)
-      i += 1
-    }
-    val mins =
-      if (m <= w) Array(hashes.min)
-      else {
-        // monotonic deque of indices: front always holds the window min
-        val out = new Array[Long](m - w + 1)
-        val dq = new Array[Int](m)
-        var (head, tail) = (0, -1)
-        var x = 0
-        while (x < m) {
-          if (tail >= head && dq(head) <= x - w) head += 1
-          while (tail >= head && hashes(dq(tail)) >= hashes(x)) tail -= 1
-          tail += 1; dq(tail) = x
-          if (x >= w - 1) out(x - w + 1) = hashes(dq(head))
-          x += 1
-        }
-        out
-      }
-    java.util.Arrays.sort(mins)
-    var uniq = 0
-    var y = 0
-    while (y < mins.length) {
-      if (y == 0 || mins(y) != mins(y - 1)) { mins(uniq) = mins(y); uniq += 1 }
-      y += 1
-    }
-    new GenericArrayData(java.util.Arrays.copyOf(mins, uniq))
-  }
-}
-
-case class WinnowFingerprint(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"winnow_fingerprint requires array<string>, got ${other.simpleString}")
-  }
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    WinnowKernel.winnow(v.asInstanceOf[ArrayData], k, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WinnowKernel.winnow($c, $k, $w)")
-  override protected def withNewChildInternal(c: Expression): WinnowFingerprint =
-    copy(child = c)
-  override def prettyName: String = "winnow_fingerprint"
-}

@@ -15,18 +15,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * scoring stays inside whole-stage codegen — the difference between
   * an ANN scan being CPU-bound on boxed iteration vs on FMA. */
 object VectorKernels {
-  def cosine(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = a.getFloat(i); val y = b.getFloat(i)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-  }
-
   def dot(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var s = 0.0
@@ -41,7 +29,7 @@ object VectorKernels {
     * accumulation order below 2^53), and the final
     * dot/(√na·√nb) is one correctly-rounded sqrt+multiply+divide
     * chain: BIT-DETERMINISTIC across engines that replay the same
-    * formula shape, unlike [[cos]]'s float accumulation whose last
+    * formula shape, unlike a float accumulation whose last
     * ulp differs per engine and splits a round(cos·10⁴) landing
     * within an ulp of a .5 boundary (found by the sf0.007 off-grid
     * sweep, round 13: ann_mmr_rerank 0.2473 vs 0.2474). */
@@ -161,15 +149,6 @@ case class SqDistLong(left: Expression, right: Expression) extends LongVecBinary
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(l, r)
   override def prettyName: String = "sq_dist_long"
-}
-
-case class CosineSim(left: Expression, right: Expression) extends FloatVecBinary {
-  override protected def kernel: String = "cosine"
-  override protected def eval0(a: Any, b: Any): Double =
-    VectorKernels.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(l, r)
-  override def prettyName: String = "cosine_sim"
 }
 
 case class DotProduct(left: Expression, right: Expression) extends FloatVecBinary {

@@ -2296,7 +2296,6 @@ object Analytics {
 
   /** Same over any (ts, value) frame. */
   def psiDriftOn(events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val staged = events.select(
       expr("unix_micros(ts) div 86400000000").as("ed"),
       round(col("value"), 4).cast("double").as("x"))

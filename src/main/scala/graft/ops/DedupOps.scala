@@ -1216,9 +1216,8 @@ object DedupOps {
     * k·(n/k)²/2 = n·cell/2, LINEAR in the corpus (vs the all-pairs
     * n²/2 of dedup_embedding, which exists as the exact baseline).
     * The count behind k is one metadata-cheap job (the adaptiveBits
-    * posture). Assignment reuses [[MlOps.kmeansAssign]] — narrow
-    * dim-keyed joins, no array rebuilds; the pair stage self-joins on
-    * the cluster key only.
+    * posture). Assignment is [[MlOps.kmeansAssignArr]], the one
+    * Lloyd's loop; the pair stage self-joins on the cluster key only.
     *
     * Parity engineering: coordinates quantize ONCE to 1e-6 BIGINTs;
     * the assignment is the kmeansPlan fixed-point integer contract,
@@ -1229,12 +1228,11 @@ object DedupOps {
     * squared — the q8 widening precedent). No double ever forms, so
     * no rounding boundary exists for the engines to disagree on.
     * Per-pair dots and norms run through the codegen'd exact-integer
-    * [[graft.functions.VectorKernels.dotLong]] kernel (the CosineSim
-    * posture — interpreted zip_with lambdas measured ~3× slower over
+    * [[graft.functions.VectorKernels.dotLong]] kernel (the native-
+    * kernel posture — interpreted zip_with lambdas measured ~3× slower over
     * the sf1 candidate volume), and the many-cluster assignment is
-    * [[MlOps.kmeansAssignArr]]'s broadcast-centroid row-local argmin
-    * rather than the exploded dim join (whose n·d·k rows per round
-    * measured 77s vs 8s at derived sf1). */
+    * [[MlOps.kmeansAssignArr]]'s broadcast-centroid row-local
+    * argmin. */
   def semanticDedup(s: SparkSession, d: String, tauMicro4: Long = 2000L,
                     iters: Int = 2, cell: Long = 256L): DataFrame =
     semanticDedupOn(
@@ -1295,7 +1293,7 @@ object DedupOps {
 
   /** DuckDB replica of [[semanticDedupOn]]: k from count(*) in SQL,
     * the Lloyd's loop unrolled (`iters` assignment/update rounds on
-    * shifted 1e-6 integer coordinates, exactly kmeansAssign), then
+    * shifted 1e-6 integer coordinates, exactly kmeansAssignArr), then
     * in-cluster pairs gated by the same HUGEINT cross-multiplication.
     */
   private[graft] def semanticDedupOracleSql(tauMicro4: Long = 2000L,
@@ -1574,7 +1572,35 @@ object DedupOps {
     * Two matched grams merge into one span when their covered ranges
     * touch or overlap (next.pos ≤ prev.pos + n). */
   def decontaminateSpans(corpus: DataFrame, reference: DataFrame,
-                         n: Int = 10): DataFrame = {
+                         n: Int = 10): DataFrame =
+    locateSpans(corpus, reference, n, broadcastRef = false)
+
+  /** [[decontaminateSpans]] for the reference regime production
+    * actually runs (the [[decontaminateBroadcast]] posture applied to
+    * the LOCATOR): the eval reference is megabytes, so its distinct
+    * (ref_id, gram-key) set BROADCASTS and candidate generation is
+    * entirely map-side — the corpus is never exchanged to find its
+    * leak sites: grams stay in the scan projection, the gram join is
+    * a broadcast hash join, and the final text slice joins the
+    * (leak-sized, broadcast) span table back INTO the corpus scan
+    * instead of shuffling corpus word arrays toward the spans. The
+    * only exchange anywhere is hits-sized (the per-(doc, ref) island
+    * window — genuine output mass). Output contract and values are
+    * identical to [[decontaminateSpans]] — the faces share one
+    * oracle; only the plan shape tiers. */
+  def decontaminateSpansBroadcast(corpus: DataFrame, reference: DataFrame,
+                                  n: Int = 10): DataFrame =
+    locateSpans(corpus, reference, n, broadcastRef = true)
+
+  /** Both span locators: positioned gram hits of `corpus` against the
+    * distinct (ref_id, gram) keys of `reference`, merged into maximal
+    * islands per (doc, ref) pair, then the leaked text sliced back out
+    * of the corpus word arrays. `broadcastRef` pins the reference keys
+    * as the gram join's build side and the (leak-sized) span table as
+    * the slice join's, so the corpus never shuffles; without it AQE
+    * picks both sides. */
+  private def locateSpans(corpus: DataFrame, reference: DataFrame, n: Int,
+                          broadcastRef: Boolean): DataFrame = {
     def withWords(docs: DataFrame, idAs: String): DataFrame =
       Tables.spread(docs).select(col("doc_id").as(idAs),
         split(col("text"), " ").as("ws"))
@@ -1596,59 +1622,11 @@ object DedupOps {
         sequence(lit(1), size(col("ws")) - (n - 1)),
         i => xxhash64(concat_ws(" ", slice(col("ws"), i, lit(n)))))).as("g"))
       .distinct()
-    val hits = cg.join(rg, Seq("g"))
+    val hits = cg.join(if (broadcastRef) broadcast(rg) else rg, Seq("g"))
       .select(col("doc_id"), col("ref_id"), col("pos")).distinct()
-    spansFromHits(hits, base, n, broadcastSpans = false)
-  }
-
-  /** [[decontaminateSpans]] for the reference regime production
-    * actually runs (the [[decontaminateBroadcast]] posture applied to
-    * the LOCATOR): the eval reference is megabytes, so its distinct
-    * (ref_id, gram-key) set BROADCASTS and candidate generation is
-    * entirely map-side — the corpus is never exchanged to find its
-    * leak sites: grams stay in the scan projection, the gram join is
-    * a broadcast hash join, and the final text slice joins the
-    * (leak-sized, broadcast) span table back INTO the corpus scan
-    * instead of shuffling corpus word arrays toward the spans. The
-    * only exchange anywhere is hits-sized (the per-(doc, ref) island
-    * window — genuine output mass). Output contract and values are
-    * identical to [[decontaminateSpans]] — the faces share one
-    * oracle; only the plan shape tiers. */
-  def decontaminateSpansBroadcast(corpus: DataFrame, reference: DataFrame,
-                                  n: Int = 10): DataFrame = {
-    def withWords(docs: DataFrame, idAs: String): DataFrame =
-      Tables.spread(docs).select(col("doc_id").as(idAs),
-        split(col("text"), " ").as("ws"))
-    val base = withWords(corpus, "doc_id").localCheckpoint(false)
-    val cg = base.filter(size(col("ws")) >= n)
-      .select(col("doc_id"), explode(transform(
-        sequence(lit(1), size(col("ws")) - (n - 1)),
-        i => struct(i.as("pos"),
-          xxhash64(concat_ws(" ", slice(col("ws"), i, lit(n)))).as("g"))))
-        .as("pg"))
-      .select(col("doc_id"), col("pg.pos").cast("long").as("pos"),
-        col("pg.g").as("g"))
-    val rg = withWords(reference, "ref_id")
-      .filter(size(col("ws")) >= n)
-      .select(col("ref_id"), explode(transform(
-        sequence(lit(1), size(col("ws")) - (n - 1)),
-        i => xxhash64(concat_ws(" ", slice(col("ws"), i, lit(n)))))).as("g"))
-      .distinct()
-    val hits = cg.join(broadcast(rg), Seq("g"))
-      .select(col("doc_id"), col("ref_id"), col("pos")).distinct()
-    spansFromHits(hits, base, n, broadcastSpans = true)
-  }
-
-  /** The shared back half of both span locators: merge positioned
-    * gram hits into maximal islands per (doc, ref) pair, then slice
-    * the leaked text back out of the corpus word arrays. Two matched
-    * grams merge into one span when their covered ranges touch or
-    * overlap (next.pos ≤ prev.pos + n). `broadcastSpans` picks which
-    * side of the slice join moves: the symmetric face lets AQE
-    * decide; the broadcast face pins the (leak-sized) span table as
-    * the build side so the corpus never shuffles. */
-  private def spansFromHits(hits: DataFrame, base: DataFrame, n: Int,
-                            broadcastSpans: Boolean): DataFrame = {
+    // maximal islands per (doc, ref) pair: two matched grams merge
+    // into one span when their covered ranges touch or overlap
+    // (next.pos ≤ prev.pos + n)
     val wp = Window.partitionBy(col("doc_id"), col("ref_id"))
       .orderBy(col("pos"))
     val spans = hits
@@ -1662,7 +1640,7 @@ object DedupOps {
         (max(col("pos")) + (n - 1)).as("span_end"))
       .withColumn("span_words", col("span_end") - col("span_start") + 1)
     val sliced =
-      if (broadcastSpans) base.join(broadcast(spans), Seq("doc_id"))
+      if (broadcastRef) base.join(broadcast(spans), Seq("doc_id"))
       else spans.join(base, Seq("doc_id"))
     sliced
       .select(col("doc_id"), col("ref_id"), col("span_start"),

@@ -115,29 +115,27 @@ object MlOps {
   /** Lloyd's k-means trained and scored ENTIRELY in the plan — the
     * fully-oracle-checkable counterpart to the MLlib fit above
     * (ml_cluster is rows-only; every number here replays in ANSI
-    * SQL). Vectors explode to (vec_id, dim, value) and stay exploded
-    * throughout: assignment is a dim-key join + per-(vec, cluster)
-    * sum and an argmin window, the centroid update is one aggregation
-    * on (cluster, dim) — per round that is O(n·d·k) work through
-    * narrow shuffles, the same complexity any Lloyd's does, with no
-    * array rebuilds. A FIXED `iters` rounds (deterministic plan, no
+    * SQL). The loop is [[kmeansAssignArr]]: broadcast array centroids,
+    * a row-local integer distance and a min(struct) argmin, so per
+    * round the only corpus-sized exchange is the n-row argmin
+    * aggregate. A FIXED `iters` rounds (deterministic plan, no
     * convergence loop); empty clusters drop (documented — both
     * engines drop the same ones).
     *
     * FIXED-POINT INTEGER arithmetic (the [[GraphOps.pageRankOn]]
-    * contract): coordinates quantize once to 1e-6 units as BIGINTs —
-    * float-origin doubles have long shortest-representations, so the
-    * single round() cannot hit a Java-vs-C false tie — and are
-    * SHIFTED +1e6 so every value is positive (floor vs
-    * truncate-toward-zero integer division differ on negatives
-    * across engines; distances and means are shift-invariant).
-    * Distances, argmins (cluster-id tiebreak), centroid means, and
-    * inertia are then pure integer ops — bit-identical in any
-    * engine. Per-coordinate mean truncation is < 1e-6, far below the
-    * 4dp output. Output: per-cluster size, mean squared distance,
-    * majority label (count-desc, label tiebreak).
+    * contract): coordinates quantize once to 1e-6 units as BIGINTs
+    * ([[lattice6]]) — float-origin doubles have long
+    * shortest-representations, so the single round() cannot hit a
+    * Java-vs-C false tie — and are SHIFTED +1e6 so every value is
+    * positive (floor vs truncate-toward-zero integer division differ
+    * on negatives across engines; distances and means are
+    * shift-invariant). Distances, argmins (cluster-id tiebreak),
+    * centroid means, and inertia are then pure integer ops —
+    * bit-identical in any engine. Per-coordinate mean truncation is
+    * < 1e-6, far below the 4dp output. Output: per-cluster size, mean
+    * squared distance, majority label (count-desc, label tiebreak).
     *
-    * The exploded frame rides a lazy localCheckpoint: every round
+    * The quantized frame rides a lazy localCheckpoint: every round
     * references it, and inlining its derivation per round is the 104-
     * scan pathology pageRank measured. Long-lived sessions own the
     * storage via the RDD reference (PrefixSum ownership contract). */
@@ -145,64 +143,36 @@ object MlOps {
                  iters: Int = 3): DataFrame =
     kmeansPlanOn(Tables.embeddings(s, d), k, iters)
 
+  /** The 1e-6 fixed-point lattice of a float-array column: each
+    * element rounded to 1e-6 units as a BIGINT and shifted +1e6 so
+    * every coordinate is positive — the integer contract documented
+    * on [[kmeansPlan]], shared by the k-means, PCA and
+    * standardization faces. */
+  private[graft] def lattice6(v: Column): Column =
+    transform(v, x => round(x.cast("double") * 1000000, 0).cast("long") +
+      1000000L)
+
   /** The Lloyd's loop itself, shared by [[kmeansPlanOn]] and
     * [[graft.ops.DedupOps.semanticDedupOn]] (SemDeDup's clustering
-    * stage): over a pre-quantized exploded frame `v` with columns
-    * (vec_id, dim, v6) — 1e-6-unit POSITIVE-SHIFTED BIGINT
-    * coordinates, the fixed-point contract documented on
-    * [[kmeansPlan]] — seed centroids from the first `k` vec_ids, run
-    * `iters` fixed assignment/update rounds, and return the final
-    * assignment (vec_id, cluster, d2). Every iterate is pure integer
-    * arithmetic, bit-identical in any engine; extra columns riding on
-    * `v` (kmeansPlanOn's label) pass through the joins untouched and
-    * drop at the aggregates. */
-  private[graft] def kmeansAssign(v: DataFrame, k: Long,
-                                  iters: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val c0 = v.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cluster"), col("dim"), col("v6").as("c6"))
-    def assign(cent: DataFrame): DataFrame = {
-      val d2 = v.join(cent, "dim")
-        .groupBy(col("vec_id"), col("cluster"))
-        .agg(sum((col("v6") - col("c6")) * (col("v6") - col("c6"))).as("d2"))
-      d2.withColumn("rk", row_number().over(
-          Window.partitionBy(col("vec_id"))
-            .orderBy(col("d2"), col("cluster"))))
-        .filter(col("rk") === 1)
-        .select(col("vec_id"), col("cluster"), col("d2"))
-    }
-    val cFinal = (1 to iters).foldLeft(c0) { (cent, _) =>
-      // k·d rows: checkpoint each round's centroids so round r+1's
-      // plan reads a materialized copy instead of inlining every
-      // prior round's assignment chain (quadratic plan growth)
-      v.join(assign(cent).select("vec_id", "cluster"), "vec_id")
-        .groupBy(col("cluster"), col("dim"))
-        .agg(expr("sum(v6) div count(1)").as("c6"))
-        .localCheckpoint(false)
-    }
-    assign(cFinal)
-  }
-
-  /** [[kmeansAssign]] in ARRAY form for the many-cluster regime
-    * (semantic dedup runs k ∝ n/cell clusters, where the exploded
-    * dim-join's n·d·k rows per round become the whole operator's
-    * cost — measured 77s vs 8s at derived sf1). Identical integer
-    * arithmetic — same distances, same (d2, cluster) argmin, same
-    * truncating per-dim centroid means — through a different plan:
-    * centroids stay arrays and BROADCAST (k·d longs), distance is
-    * the codegen'd [[graft.functions.VectorKernels.sqDistLong]]
-    * kernel evaluated row-locally, and the argmin is a min(struct)
+    * stage, k ∝ n/cell clusters). Input: (vec_id, a6) with a6 the
+    * SHIFTED 1e-6-unit BIGINT coordinate array ([[lattice6]]).
+    * Centroids stay arrays and BROADCAST (k·d longs), distance is the
+    * codegen'd [[graft.functions.VectorKernels.sqDistLong]] kernel
+    * evaluated row-locally, and the argmin is a min(struct)
     * aggregate (lexicographic struct order = the (d2, cluster)
-    * tiebreak), so per round the only exchange is the n-row partial
-    * aggregate. Input: (vec_id, a6) with a6 the SHIFTED 1e-6-unit
-    * BIGINT coordinate array. Returns (vec_id, cluster, d2).
+    * tiebreak), so per round the only corpus-sized exchange is the
+    * n-row argmin aggregate, which carries each member's coordinates
+    * on to the k·d-row centroid update — an exploded dim-join would
+    * move n·d·k rows per round (measured 77s vs 8s at derived sf1). Centroid means truncate per
+    * dimension (Σv6 div n). Returns the final assignment (vec_id,
+    * cluster, d2) after `iters` fixed rounds.
     *
     * Seeding contract: centroids are the rows with the min(k, n)
     * SMALLEST vec_ids, labeled by those ids — by RANK, not by the
     * raw `vec_id < k` cut, so a frame whose ids are not dense from 0
-    * (any caller-supplied (vec_id, a6)) still gets its full seed set
-    * instead of a silently empty assignment. Dense-id frames get the
-    * identical {0..k−1} seeds either way (the oracle convention). */
+    * still gets its full seed set instead of a silently empty
+    * assignment. Dense-id frames get the identical {0..k−1} seeds
+    * either way (the oracle convention). */
   private[graft] def kmeansAssignArr(q: DataFrame, k: Long,
                                      iters: Int): DataFrame = {
     val seeds = PrefixSum.exclusive(q.select(col("vec_id")),
@@ -210,18 +180,23 @@ object MlOps {
       .filter(col("__cum") < k).select(col("vec_id"))
     val c0 = q.join(seeds, "vec_id")
       .select(col("vec_id").as("cluster"), col("a6").as("c6"))
+    // the member's coordinates ride through the argmin aggregate, so
+    // the centroid update reads the assignment without a join back
     def assign(cent: DataFrame): DataFrame =
       q.crossJoin(broadcast(cent))
-        .select(col("vec_id"), col("cluster"),
+        .select(col("vec_id"), col("a6"), col("cluster"),
           graft.functions.VectorExprs.sqDistLong(col("a6"), col("c6"))
             .as("d2"))
         .groupBy(col("vec_id"))
-        .agg(min(struct(col("d2"), col("cluster"))).as("__m"))
+        .agg(min(struct(col("d2"), col("cluster"))).as("__m"),
+          first(col("a6")).as("a6"))
         .select(col("vec_id"), col("__m.cluster").as("cluster"),
-          col("__m.d2").as("d2"))
+          col("__m.d2").as("d2"), col("a6"))
     val cFinal = (1 to iters).foldLeft(c0) { (cent, _) =>
-      // k rows: checkpoint per round (same rationale as kmeansAssign)
-      q.join(assign(cent).select("vec_id", "cluster"), "vec_id")
+      // k rows: checkpoint each round's centroids so round r+1's
+      // plan reads a materialized copy instead of inlining every
+      // prior round's assignment chain (quadratic plan growth)
+      assign(cent)
         .select(col("cluster"), posexplode(col("a6")).as(Seq("dim0", "v6")))
         .groupBy(col("cluster"), col("dim0"))
         .agg(expr("sum(v6) div count(1)").as("c6d"))
@@ -231,25 +206,23 @@ object MlOps {
           transform(array_sort(col("__l")), x => x.getField("c6d")).as("c6"))
         .localCheckpoint(false)
     }
-    assign(cFinal)
+    assign(cFinal).drop("a6")
   }
 
   /** Same over any (vec_id, label, embedding) frame. */
   def kmeansPlanOn(emb: DataFrame, k: Int, iters: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val v = graft.Tables.spread(emb)
+    val q = graft.Tables.spread(emb)
       .select(col("vec_id"), col("label"),
-        posexplode(col("embedding")).as(Seq("dim", "fval")))
-      .select(col("vec_id"), col("label"), col("dim"),
-        (round(col("fval").cast("double") * 1000000, 0).cast("long") +
-          1000000L).as("v6"))
+        lattice6(col("embedding")).as("a6"))
       .localCheckpoint(false)
     // af feeds sizes AND the label majority — materialize once
-    val af = kmeansAssign(v, k, iters).localCheckpoint(false)
+    val af = kmeansAssignArr(q.select(col("vec_id"), col("a6")), k, iters)
+      .localCheckpoint(false)
     val sizes = af.groupBy(col("cluster")).agg(count(lit(1)).as("n"),
       expr("sum(d2 div 1000000) div count(1)").as("__md6"))
     val lab = af.select(col("vec_id"), col("cluster"))
-      .join(v.select(col("vec_id"), col("label")).distinct(), "vec_id")
+      .join(q.select(col("vec_id"), col("label")), "vec_id")
       .groupBy(col("cluster"), col("label")).agg(count(lit(1)).as("__c"))
     val maj = lab.withColumn("rk", row_number().over(
         Window.partitionBy(col("cluster"))
@@ -396,20 +369,25 @@ object MlOps {
       round(col("o_totalprice"), 4).cast("double"),
       (col("o_orderstatus") === "F").cast("long"))
 
+  /** The stump family's candidate thresholds: the nine exact deciles
+    * of `x` as one row (t1 … t9). Each is 4dp-rounded BEFORE the
+    * split comparisons: the interpolated percentile is an
+    * engine-shared value only to ~1 ulp (Spark (1−d)a+db vs DuckDB
+    * a+d(b−a)), and an unrounded threshold could land a boundary row
+    * differently; quantized against the 4dp feature, the comparison
+    * is exact in both. */
+  private def deciles(df: DataFrame): DataFrame =
+    df.agg(expr(
+      "percentile(x, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))").as("ts"))
+      .select((1 to 9).map(i =>
+        round(element_at(col("ts"), i), 4).as(s"t$i")): _*)
+
   /** Same over any frame: continuous `feature`, 0/1 `target`. */
   def decisionStumpOn(df: DataFrame, feature: Column,
                       target: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val staged = df.select(feature.as("x"), target.as("pos"))
-    // 4dp-round each decile BEFORE the split comparisons: the
-    // interpolated percentile is an engine-shared value only to ~1
-    // ulp (Spark (1−d)a+db vs DuckDB a+d(b−a)), and an unrounded
-    // threshold could land a boundary row differently; quantized
-    // against the 4dp feature, the comparison is exact in both
-    val dec = staged.agg(expr(
-      "percentile(x, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))").as("ts"))
-      .select((1 to 9).map(i =>
-        round(element_at(col("ts"), i), 4).as(s"t$i")): _*)
+    val dec = deciles(staged)
     val aggCols =
       Seq(sum(col("pos")).as("pos")) ++
       (1 to 9).flatMap(k => Seq(
@@ -656,11 +634,7 @@ object MlOps {
     val base = df.select(feature.as("x"),
         when(target === 1L, 1.0).otherwise(-1.0).as("y"))
       .localCheckpoint(false) // feeds every round twice
-    val dec = base.agg(expr(
-      "percentile(x, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))").as("ts"))
-      .select((1 to 9).map(i =>
-        round(element_at(col("ts"), i), 4).as(s"t$i")): _*)
-      .localCheckpoint(true) // 1 row, shared by all rounds
+    val dec = deciles(base).localCheckpoint(true) // shared by all rounds
     val n = base.agg(count(lit(1)).as("n")).localCheckpoint(true)
     val d6 = "decimal(20,6)"
     val zero6 = lit(0).cast(d6)
@@ -778,11 +752,7 @@ object MlOps {
     import org.apache.spark.sql.expressions.Window
     val base = df.select(feature.as("x"), target.as("y"))
       .localCheckpoint(false) // feeds the decile fit + every round
-    val dec = base.agg(expr(
-      "percentile(x, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))").as("ts"))
-      .select((1 to 9).map(i =>
-        round(element_at(col("ts"), i), 4).as(s"t$i")): _*)
-      .localCheckpoint(true) // 1 row, shared by all rounds
+    val dec = deciles(base).localCheckpoint(true) // shared by all rounds
     val d6 = "decimal(20,6)"
     val zero6 = lit(0).cast(d6)
     val q6 = (e: String) => s"floor(($e) * 1e6) / 1e6"

@@ -21,11 +21,10 @@ import org.apache.spark.sql.functions._
   */
 object SimilarityOps {
 
-  /** Cosine similarity of two float-array columns — a native
-    * codegen'd Catalyst expression (graft.functions.CosineSim); the
-    * equivalent zip_with/aggregate composition evaluates its lambdas
-    * interpreted and is ~5× slower in the ANN hot loop. */
-  /** Bit-deterministic cross-engine cosine: both sides quantized to
+  /** Bit-deterministic cross-engine cosine of two float-array
+    * columns — a native codegen'd Catalyst expression (the equivalent
+    * zip_with/aggregate composition evaluates its lambdas interpreted
+    * and is ~5× slower in the ANN hot loop): both sides quantized to
     * 1e-6 integer units inside the kernel, exact order-free sums, one
     * correctly-rounded sqrt/multiply/divide chain (see
     * VectorKernels.cosineQ6). EVERY published/rounded cosine in the
@@ -33,15 +32,9 @@ object SimilarityOps {
     * cosine's last ulp differs per engine and a round(·) landing
     * within an ulp of a .5 boundary splits the engines (caught live
     * by the sf0.007 sweep); the oracles replay the same quantized
-    * chain via [[qcosSql]]. The plain float kernel remains available
-    * as the `cosine_sim` SQL function ([[graft.GraftExtensions]]) for
-    * callers that rank without publishing. */
+    * chain via [[qcosSql]]. */
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorExprs.cosineSimQ6(a, b)
-
-  /** Alias kept for call sites that want the determinism contract in
-    * their name. */
-  def cosineQ6(a: Column, b: Column): Column = cosine(a, b)
 
   /** DuckDB text of [[cosine]]'s quantized chain — the replacement
     * for DuckDB's own float cosine builtin everywhere an oracle
@@ -63,10 +56,25 @@ object SimilarityOps {
     s"(CASE WHEN $na = 0 OR $nb = 0 THEN 0.0 ELSE list_dot_product(${q(a)}, ${q(b)}) / (sqrt($na) * sqrt($nb)) END)"
   }
 
-  private def queries(s: SparkSession, d: String, nQueries: Int): DataFrame =
-    Tables.embeddings(s, d)
-      .filter(col("vec_id") < nQueries)
+  /** The shared ANN-face query set: the `vec_id < nQueries` rows of
+    * `emb` as (q_id, q_emb). */
+  private def queries(emb: DataFrame, nQueries: Int): DataFrame =
+    emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+
+  /** Score (q_id, q_emb, vec_id, embedding) pairs by 4dp cosine and
+    * keep each query's k best by (cosine desc, vec_id) — a total
+    * order — as (q_id, vec_id, cosine, rank). The serving tail of
+    * every top-k tier. */
+  private def rankTopK(pairs: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(col("cosine").desc, col("vec_id"))
+    pairs.select(col("q_id"), col("vec_id"),
+        round(cosine(col("q_emb"), col("embedding")), 4).as("cosine"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .orderBy(col("q_id"), col("rank"))
+  }
 
   /** Per-label embedding centroids — class prototypes / mean pooling:
     * the building block behind prototype classifiers, IVF coarse
@@ -228,44 +236,14 @@ object SimilarityOps {
   /** Same over any (vec_id, embedding, label) frame. */
   def knnClassifyIvfOn(emb: DataFrame, k: Int, nProbe: Int): DataFrame = {
     val corpus = emb.filter(col("vec_id") % 10 =!= 0)
-    val q = emb.filter(col("vec_id") % 10 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("label").as("true_label"))
-    // ~√corpus cells (floor 8), like ivfTopK: one scalar count action
-    val cellCount = math.max(8, math.sqrt(corpus.count().toDouble).toInt)
     // seeds = the cellCount lowest corpus ids — TakeOrdered (per-
     // partition top-n then merge), never a global sort
-    val seeds = corpus.orderBy(col("vec_id")).limit(cellCount)
-      .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
-
-    // argmax assignment as a map-side-combinable aggregate (one narrow
-    // row per vector through the exchange — see ivfTopK); label rides
-    // along for the vote stage
-    def assign(cents: DataFrame): DataFrame =
-      corpus.crossJoin(broadcast(cents))
-        .withColumn("sim", round(cosine(col("embedding"), col("c_emb")), 4))
-        .groupBy(col("vec_id"))
-        .agg(first(col("embedding")).as("embedding"),
-          first(col("label")).as("label"),
-          max_by(col("cell"), struct(col("sim"), -col("cell"))).as("cell"))
-
-    val centroids = assign(seeds)
-      .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("cell"), col("pos")).agg(avg(col("v")).as("m"))
-      .groupBy(col("cell"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("cell"), transform(col("pm"), x => x.getField("m"))
-        .cast("array<float>").as("c_emb"))
-
-    val cells = assign(centroids)
-    val wq = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("cell"))
-    val qCells = q.crossJoin(broadcast(centroids))
-      .withColumn("sim", round(cosine(col("q_emb"), col("c_emb")), 4))
-      .withColumn("__rnk", row_number().over(wq))
-      .filter(col("__rnk") <= nProbe)
-      .select(col("q_id"), col("q_emb"), col("true_label"), col("cell"))
-
+    val centroids = ivfCentroids(corpus,
+      corpus.orderBy(col("vec_id")).limit(cellCount(corpus)))
+    // label rides along for the vote stage
+    val cells = ivfAssign(corpus, centroids, first(col("label")).as("label"))
+    val qCells = probeCells(emb.filter(col("vec_id") % 10 === 0),
+      centroids, nProbe, col("label").as("true_label"))
     // deliberately un-hinted: qCells scales with the corpus, so the
     // broadcast decision belongs to AQE, not a hint (the brute-force
     // face's broadcast-the-holdout shape is exactly what this tier
@@ -378,15 +356,8 @@ object SimilarityOps {
   def bruteForceTopK(s: SparkSession, d: String,
                      k: Int = 5, nQueries: Int = 10): DataFrame = {
     val corpus = Tables.embeddings(s, d)
-    val scored = corpus.crossJoin(broadcast(queries(s, d, nQueries)))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 4).as("cosine"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("q_id"), col("rank"))
+    rankTopK(corpus.crossJoin(broadcast(queries(corpus, nQueries)))
+      .filter(col("vec_id") =!= col("q_id")), k)
   }
 
   /** MMR diversified re-ranking — the step between retrieval and the
@@ -426,17 +397,14 @@ object SimilarityOps {
     require(k >= 1 && shortlist >= k && lam10 >= 0 && lam10 <= 10,
       s"need 1 <= k <= shortlist and lambda tenths in 0..10: " +
         s"$k/$shortlist/$lam10")
-    val corpus = emb
-    val scored = corpus.crossJoin(broadcast(
-      emb.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))))
+    val scored = emb.crossJoin(broadcast(queries(emb, nQueries)))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"), col("embedding"),
-        // quantized-exact cosine (cosineQ6): a raw float cosine's
-        // last ulp differs per engine, and round(cos·10⁴) splits
-        // when the product lands within an ulp of a .5 boundary —
-        // the sf0.007 off-grid sweep caught exactly that (round 13)
-        round(cosineQ6(col("q_emb"), col("embedding")) * 10000.0)
+        // quantized-exact cosine: a raw float cosine's last ulp
+        // differs per engine, and round(cos·10⁴) splits when the
+        // product lands within an ulp of a .5 boundary — the sf0.007
+        // off-grid sweep caught exactly that (round 13)
+        round(cosine(col("q_emb"), col("embedding")) * 10000.0)
           .cast("long").as("rel_i"))
     val wTop = Window.partitionBy(col("q_id"))
       .orderBy(col("rel_i").desc, col("vec_id"))
@@ -484,8 +452,8 @@ object SimilarityOps {
         col("embedding").as("eb")), Seq("q_id"))
       .filter(col("ca") =!= col("cb"))
       .select(col("q_id"), col("ca"), col("cb"),
-        // cosineQ6 for the same .5-boundary determinism as rel_i
-        round(cosineQ6(col("ea"), col("eb")) * 10000.0)
+        // quantized cosine for the same .5-boundary determinism as rel_i
+        round(cosine(col("ea"), col("eb")) * 10000.0)
           .cast("long").as("sim_i"))
       .localCheckpoint(true)
     val wPick = Window.partitionBy(col("q_id"))
@@ -728,8 +696,7 @@ object SimilarityOps {
   /** Same over any (vec_id, embedding) frame; queries are the first
     * `nQueries` vec_ids. */
   def binaryRecallOn(corpus: DataFrame, k: Int, nQueries: Int): DataFrame = {
-    val qs = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val qs = queries(corpus, nQueries)
     val paired = corpus.crossJoin(broadcast(qs))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
@@ -762,8 +729,7 @@ object SimilarityOps {
     * `nQueries` vec_ids. */
   def mrlRecallOn(corpus: DataFrame, k: Int, nQueries: Int,
                   tiers: Seq[Int]): DataFrame = {
-    val qs = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val qs = queries(corpus, nQueries)
     val full = Int.MaxValue // slice caps at the array length: full vector
     val scoredAll = (tiers :+ full).map { t =>
       corpus.crossJoin(broadcast(qs))
@@ -832,95 +798,117 @@ object SimilarityOps {
               k: Int = 5, nQueries: Int = 10, nBits: Int = 4): DataFrame = {
     val corpus = Tables.embeddings(s, d)
       .withColumn("bucket", lshBucket(col("embedding"), nBits))
-    val q = queries(s, d, nQueries)
+    val q = queries(Tables.embeddings(s, d), nQueries)
       .withColumn("bucket", lshBucket(col("q_emb"), nBits))
-    val scored = corpus.join(broadcast(q), Seq("bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 4).as("cosine"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("q_id"), col("rank"))
+    rankTopK(corpus.join(broadcast(q), Seq("bucket"))
+      .filter(col("vec_id") =!= col("q_id")), k)
   }
 
   /** IVF approximate top-k. Cells come from a deterministic seed set
-    * (first nCells vectors) refined by one mean-update pass — a
+    * (the first ~√corpus vectors) refined by one mean-update pass — a
     * k-means-lite fit done entirely with joins and aggregates; the
     * centroid table stays small and is broadcast everywhere. Queries
     * probe their nProbe nearest cells (multi-probe recovers most of
     * the recall single-probe IVF loses at cell boundaries).
     *
-    * nCells defaults to ~√corpus (floor 8): cell population ~√n keeps
+    * The cell count is ~√corpus (floor 8): cell population ~√n keeps
     * both the probe fan-out and the per-cell scan sublinear as the
     * corpus grows — a fixed cell count would collapse to
     * scan-everything at 100× the data. Assignment similarity is
     * rounded to 4dp with a cell-id tiebreak so the fit is bit-stable
     * across engines and float-summation orders. */
   def ivfTopK(s: SparkSession, d: String,
-              k: Int = 5, nQueries: Int = 10, nCells: Int = 0,
-              nProbe: Int = 2): DataFrame = {
+              k: Int = 5, nQueries: Int = 10, nProbe: Int = 2): DataFrame = {
     // scanned four times (cell-count fit, two assignment passes, the
     // query subset) — checkpoint once
     val emb = Tables.embeddings(s, d).localCheckpoint(false)
-    val cellCount =
-      if (nCells > 0) nCells
-      else math.max(8, math.sqrt(emb.count().toDouble).toInt)
-    val seeds = emb.filter(col("vec_id") < cellCount)
-      .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
+    ivfSearch(emb, emb, emb.filter(col("vec_id") < cellCount(emb)),
+      k, nQueries, nProbe)
+  }
 
-    // Single-probe argmax as a map-side-combinable aggregate: the
-    // shuffle carries ONE narrow row per vector instead of the full
-    // |vectors|×|cells| scored frame (embeddings included) through a
-    // window exchange — the difference between an O(n·cells) and an
-    // O(n) exchange, which is what the fit's two corpus-wide
-    // assignment passes are made of. Tiebreak matches the oracle's
-    // ranking exactly: max sim, then lowest cell.
-    def assign1(cents: DataFrame): DataFrame =
-      emb.crossJoin(broadcast(cents))
-        .withColumn("sim", round(cosine(col("embedding"), col("c_emb")), 4))
-        .groupBy(col("vec_id"))
-        .agg(first(col("embedding")).as("embedding"),
-          max_by(col("cell"), struct(col("sim"), -col("cell"))).as("cell"))
+  /** ~√n IVF cells (floor 8) for an n-row frame: one scalar count
+    * action. */
+  private def cellCount(df: DataFrame): Int =
+    math.max(8, math.sqrt(df.count().toDouble).toInt)
 
-    // one refinement pass: assign to seeds, recompute cell means.
-    // Element-wise means via posexplode + per-(cell, pos) avg instead
-    // of 64 parallel avg(element_at) aggregates: this shape compiles
-    // small (the wide-agg codegen class was measured at over a second
-    // of Janino per run) and shuffles narrow (cell, pos, partial-avg)
-    // rows with map-side combine — same O(n·dim) work, same means.
-    val centroids = assign1(seeds)
-      .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("cell"), col("pos")).agg(avg(col("v")).as("m"))
-      .groupBy(col("cell"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("cell"), transform(col("pm"), x => x.getField("m"))
-        .cast("array<float>").as("c_emb"))
-
-    val cells = assign1(centroids)
-    // query cells come from the SAME scored frame the corpus pass
-    // reads (restricted to the query ids, ranked to nProbe) — exactly
-    // the oracle's a2r CTE, and one whole plan subtree fewer than an
-    // independent query-side assignment.
-    val w2 = Window.partitionBy(col("vec_id"))
-      .orderBy(col("sim").desc, col("cell"))
-    val qCells = emb.filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(centroids))
+  /** Single-probe IVF assignment of `src` (vec_id, embedding, …) to
+    * the broadcast centroids (cell, c_emb) as a map-side-combinable
+    * aggregate: the shuffle carries ONE narrow row per vector instead
+    * of the full |vectors|×|cells| scored frame (embeddings included)
+    * through a window exchange — the difference between an O(n·cells)
+    * and an O(n) exchange, which is what the fit's corpus-wide
+    * assignment passes are made of. Tiebreak matches the oracles'
+    * ranking exactly: max 4dp sim, then lowest cell. `carry` are
+    * extra per-vector aggregates over the scored (src…, cell, c_emb,
+    * sim) rows. Returns (vec_id, embedding, carry…, cell). */
+  private def ivfAssign(src: DataFrame, cents: DataFrame,
+                        carry: Column*): DataFrame =
+    src.crossJoin(broadcast(cents))
       .withColumn("sim", round(cosine(col("embedding"), col("c_emb")), 4))
-      .withColumn("rnk", row_number().over(w2))
-      .filter(col("rnk") <= nProbe)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("cell"))
+      .groupBy(col("vec_id"))
+      .agg(first(col("embedding")).as("embedding"),
+        carry :+
+          max_by(col("cell"), struct(col("sim"), -col("cell"))).as("cell"): _*)
 
-    val scored = cells.join(broadcast(qCells), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 4).as("cosine"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("q_id"), col("rank"))
+  /** Element-wise means of the `vec` arrays per `keys` group, cast to
+    * FLOAT so last-ulp summation-order noise cannot survive into the
+    * result: posexplode + per-(keys, pos) avg instead of one
+    * avg(element_at) aggregate per dimension — this shape compiles
+    * small (the wide-agg codegen class was measured at over a second
+    * of Janino per run) and shuffles narrow (keys, pos, partial-avg)
+    * rows with map-side combine. Returns (keys…, out). */
+  private def meanArrays(df: DataFrame, keys: Seq[String], vec: String,
+                         out: String): DataFrame = {
+    val ks = keys.map(col)
+    df.select(ks :+ posexplode(col(vec)).as(Seq("pos", "v")): _*)
+      .groupBy(ks :+ col("pos"): _*).agg(avg(col("v")).as("m"))
+      .groupBy(ks: _*)
+      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
+      .select(ks :+ transform(col("pm"), x => x.getField("m"))
+        .cast("array<float>").as(out): _*)
+  }
+
+  /** The IVF coarse fit every IVF face shares: `fitOn` assigned to
+    * the `seeds` rows (vec_id, embedding — how seeds are chosen is the
+    * caller's), then one refinement to the member means. Returns the
+    * centroids (cell, c_emb), cells labeled by their seed's vec_id. */
+  private def ivfCentroids(fitOn: DataFrame, seeds: DataFrame): DataFrame =
+    meanArrays(ivfAssign(fitOn, seeds.select(col("vec_id").as("cell"),
+      col("embedding").as("c_emb"))), Seq("cell"), "embedding", "c_emb")
+
+  /** Each query's `nProbe` nearest cells by (4dp sim desc, cell):
+    * `qs` (vec_id, embedding, …) becomes (q_id, q_emb, cell, carry…),
+    * nProbe rows per query. */
+  private def probeCells(qs: DataFrame, centroids: DataFrame, nProbe: Int,
+                         carry: Column*): DataFrame = {
+    val w = Window.partitionBy(col("vec_id"))
+      .orderBy(col("sim").desc, col("cell"))
+    qs.crossJoin(broadcast(centroids))
+      .withColumn("sim", round(cosine(col("embedding"), col("c_emb")), 4))
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= nProbe)
+      .select(Seq(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+        col("cell")) ++ carry: _*)
+  }
+
+  /** The IVF index over `emb`: centroids fit on `fitOn` from `seeds`,
+    * then (cells, qCells) — every vector's cell (one assignment pass
+    * with the final centroids) and the probe cells of the
+    * `vec_id < nQueries` queries. */
+  private def ivfIndex(emb: DataFrame, fitOn: DataFrame, seeds: DataFrame,
+                       nQueries: Int, nProbe: Int): (DataFrame, DataFrame) = {
+    val centroids = ivfCentroids(fitOn, seeds)
+    (ivfAssign(emb, centroids),
+      probeCells(emb.filter(col("vec_id") < nQueries), centroids, nProbe))
+  }
+
+  /** IVF serving: every member of a query's probe cells is scored by
+    * exact 4dp cosine and ranked (cosine desc, vec_id). */
+  private def ivfSearch(emb: DataFrame, fitOn: DataFrame, seeds: DataFrame,
+                        k: Int, nQueries: Int, nProbe: Int): DataFrame = {
+    val (cells, qCells) = ivfIndex(emb, fitOn, seeds, nQueries, nProbe)
+    rankTopK(cells.join(broadcast(qCells), Seq("cell"))
+      .filter(col("vec_id") =!= col("q_id")), k)
   }
 
   /** [[ivfTopK]] with a BOUNDED build — the linear-build face of the
@@ -940,10 +928,9 @@ object SimilarityOps {
     *    ≤ 256 rows, bounded by construction) and the one mean-update
     *    refinement runs over the SAMPLE only (O(cap^1.5·d), a
     *    constant);
-    *  - the serving path is [[ivfTopK]]'s verbatim: one assignment
-    *    pass with the final centroids, nProbe query gating from the
-    *    same scored frame, exact 4dp-cosine rescoring and
-    *    (cosine DESC, vec_id) ranking.
+    *  - the serving path is [[ivfTopK]]'s: one assignment pass with
+    *    the final centroids, nProbe query gating, exact 4dp-cosine
+    *    rescoring and (cosine DESC, vec_id) ranking.
     *
     * The declared trade vs [[ivfTopK]]: per-query candidate work is
     * O(nProbe·n/nCells) — linear with a 1/√cap constant instead of
@@ -966,46 +953,12 @@ object SimilarityOps {
       if (bk >= 256L) emb
       else emb.filter(
         substring(md5(col("vec_id").cast("string")), 1, 2) < lit(f"$bk%02x"))
-    val cellCount = math.max(8L,
+    val nCells = math.max(8L,
       math.sqrt(math.min(n, buildMaxVectors.toLong).toDouble).toLong).toInt
-    val seeds = samp.orderBy(col("vec_id")).limit(cellCount)
-      .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
-    // ivfTopK's map-side-combinable single-probe argmax, parameterized
-    // by the frame it assigns (sample for the fit, corpus to serve)
-    def assign1(src: DataFrame, cents: DataFrame): DataFrame =
-      src.crossJoin(broadcast(cents))
-        .withColumn("sim", round(cosine(col("embedding"), col("c_emb")), 4))
-        .groupBy(col("vec_id"))
-        .agg(first(col("embedding")).as("embedding"),
-          max_by(col("cell"), struct(col("sim"), -col("cell"))).as("cell"))
-    // one refinement pass over the SAMPLE only — the bounded build
-    val centroids = assign1(samp, seeds)
-      .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("cell"), col("pos")).agg(avg(col("v")).as("m"))
-      .groupBy(col("cell"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("cell"), transform(col("pm"), x => x.getField("m"))
-        .cast("array<float>").as("c_emb"))
-    // the ONE linear full-corpus pass; query cells from the same
-    // scored subtree, exactly the ivfTopK serving tail
-    val cells = assign1(emb, centroids)
-    val w2 = Window.partitionBy(col("vec_id"))
-      .orderBy(col("sim").desc, col("cell"))
-    val qCells = emb.filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(centroids))
-      .withColumn("sim", round(cosine(col("embedding"), col("c_emb")), 4))
-      .withColumn("rnk", row_number().over(w2))
-      .filter(col("rnk") <= nProbe)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("cell"))
-    val scored = cells.join(broadcast(qCells), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 4).as("cosine"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("q_id"), col("rank"))
+    // the refinement runs over the SAMPLE only — the bounded build;
+    // the one linear pass is the serving assignment of the corpus
+    ivfSearch(emb, samp, samp.orderBy(col("vec_id")).limit(nCells),
+      k, nQueries, nProbe)
   }
 
   /** Recall@k of the bounded-build IVF face (see `recallVsExact`):
@@ -1023,41 +976,22 @@ object SimilarityOps {
     * but "which subset COVERS the corpus" (the training-data
     * deduplication complement: near-dup removal prunes redundancy,
     * diversity sampling allocates a budget across semantic regions).
-    * Reuses the IVF fit verbatim ([[ivfTopK]]'s seed → one-refine →
-    * assign chain, identical rounding/tiebreaks) and takes, per
-    * cell, the `perCell` members CLOSEST to the cell centroid
-    * (sim desc, vec_id tiebreak) — per-region exemplars with cell
-    * sizes beside them, so downstream curation can weight regions by
-    * mass. Cost = the IVF fit's two corpus passes + one keyed
-    * window; output cells × perCell rows at any corpus size, and the
-    * per-cell window partitions on the cell key (never global). */
-  def diversitySample(s: SparkSession, d: String, perCell: Int = 3,
-                      nCells: Int = 0): DataFrame = {
+    * Reuses [[ivfTopK]]'s fit (seed → one-refine → assign, identical
+    * rounding/tiebreaks) and takes, per cell, the `perCell` members
+    * CLOSEST to the cell centroid (sim desc, vec_id tiebreak) —
+    * per-region exemplars with cell sizes beside them, so downstream
+    * curation can weight regions by mass. Cost = the IVF fit's two
+    * corpus passes + one keyed window; output cells × perCell rows
+    * at any corpus size, and the per-cell window partitions on the
+    * cell key (never global). */
+  def diversitySample(s: SparkSession, d: String,
+                      perCell: Int = 3): DataFrame = {
     val emb = Tables.embeddings(s, d).localCheckpoint(false)
-    val cellCount =
-      if (nCells > 0) nCells
-      else math.max(8, math.sqrt(emb.count().toDouble).toInt)
-    val seeds = emb.filter(col("vec_id") < cellCount)
-      .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
-    // ivfTopK's single-probe argmax, with the winning sim kept beside
-    // the cell (the exemplar ranking needs it)
-    def assignSim(cents: DataFrame): DataFrame =
-      emb.crossJoin(broadcast(cents))
-        .withColumn("sim", round(cosine(col("embedding"), col("c_emb")), 4))
-        .groupBy(col("vec_id"))
-        .agg(first(col("embedding")).as("embedding"),
-          max_by(struct(col("cell"), col("sim")),
-            struct(col("sim"), -col("cell"))).as("cs"))
-        .select(col("vec_id"), col("embedding"),
-          col("cs.cell").as("cell"), col("cs.sim").as("sim"))
-    val centroids = assignSim(seeds)
-      .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("cell"), col("pos")).agg(avg(col("v")).as("m"))
-      .groupBy(col("cell"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("cell"), transform(col("pm"), x => x.getField("m"))
-        .cast("array<float>").as("c_emb"))
-    val asg = assignSim(centroids)
+    val centroids = ivfCentroids(emb,
+      emb.filter(col("vec_id") < cellCount(emb)))
+    // the winning cell's sim — the max, whatever the cell tiebreak —
+    // rides beside it (the exemplar ranking needs it)
+    val asg = ivfAssign(emb, centroids, max(col("sim")).as("sim"))
     val wCell = Window.partitionBy(col("cell"))
     val wRank = wCell.orderBy(col("sim").desc, col("vec_id"))
     asg
@@ -1125,10 +1059,23 @@ object SimilarityOps {
     * the candidate ranking cannot depend on partial-agg order. */
   def pqTopK(s: SparkSession, d: String, k: Int = 5, nQueries: Int = 10,
              m: Int = 8, nCodes: Int = 16, rerank: Int = 50): DataFrame = {
+    val emb = Tables.embeddings(s, d).localCheckpoint(false)
+    val (codes, dtable) = pqIndex(emb, nQueries, m, nCodes)
+    adcRescore(codes.join(broadcast(dtable), Seq("j", "code"))
+      .filter(col("vec_id") =!= col("q_id")), emb, k, nQueries, rerank)
+  }
+
+  /** The PQ fit every PQ face shares: the global per-subspace
+    * codebook over `emb` (seed codewords → one refinement → encode),
+    * returned as (codes, dtable) — every vector's (vec_id, j, code)
+    * and the ADC distance table (q_id, j, code, qdot) of the
+    * `vec_id < nQueries` queries, m × nCodes 4dp dot products each,
+    * DECIMAL so a sum of lookups is exact under any aggregation
+    * order. */
+  private def pqIndex(emb: DataFrame, nQueries: Int, m: Int,
+                      nCodes: Int): (DataFrame, DataFrame) = {
     require(dim % m == 0, s"dim $dim must split into $m subspaces")
     val sub = dim / m
-    val emb = Tables.embeddings(s, d).localCheckpoint(false)
-
     // one row per (vector, subspace): the slice the codebook quantizes
     def subvecs(df: DataFrame, idOut: String): DataFrame =
       df.select(col("vec_id").as(idOut),
@@ -1142,8 +1089,9 @@ object SimilarityOps {
     // (a·a + c·c) − 2(a·c) so the oracle can mirror the exact IEEE
     // evaluation order
     def d2(a: Column, c: Column): Column =
-      round(graft.functions.VectorExprs.dotProduct(a, a) + graft.functions.VectorExprs.dotProduct(c, c)
-        - lit(2) * graft.functions.VectorExprs.dotProduct(a, c), 4)
+      round(graft.functions.VectorExprs.dotProduct(a, a) +
+        graft.functions.VectorExprs.dotProduct(c, c) -
+        lit(2) * graft.functions.VectorExprs.dotProduct(a, c), 4)
 
     // nearest codeword per (vector, subspace) — min_by keeps the
     // shuffle at one narrow row per subvector (the IVF argmax shape)
@@ -1156,49 +1104,34 @@ object SimilarityOps {
 
     val seeds = corpusSub.filter(col("vec_id") < nCodes)
       .select(col("j"), col("vec_id").cast("int").as("code"), col("sv").as("cw"))
-    // one refinement pass: element-wise member means per (subspace,
-    // code), cast to FLOAT so last-ulp summation-order noise cannot
-    // survive into the refined codebook
-    val refined = assign(seeds)
-      .select(col("j"), col("code"), posexplode(col("sv")).as(Seq("pos", "v")))
-      .groupBy(col("j"), col("code"), col("pos")).agg(avg(col("v")).as("mv"))
-      .groupBy(col("j"), col("code"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("mv")))).as("pm"))
-      .select(col("j"), col("code"),
-        transform(col("pm"), x => x.getField("mv")).cast("array<float>").as("cw"))
+    val refined = meanArrays(assign(seeds), Seq("j", "code"), "sv", "cw")
     val codes = assign(refined).select(col("vec_id"), col("j"), col("code"))
-
-    // ADC: per-query distance table (m × nCodes dot products), then
-    // the approx dot of every corpus vector is a sum of m lookups —
-    // DECIMAL so the sum is exact under any aggregation order
     val dtable = subvecs(emb.filter(col("vec_id") < nQueries), "q_id")
       .join(broadcast(refined), "j")
       .select(col("q_id"), col("j"), col("code"),
         round(graft.functions.VectorExprs.dotProduct(col("sv"), col("cw")), 4)
           .cast("decimal(14,4)").as("qdot"))
+    (codes, dtable)
+  }
+
+  /** The PQ serving tail: `lookups` holds one (q_id, vec_id, qdot) row
+    * per (candidate, subspace); their sum is the ADC approx dot, the
+    * top `rerank` by (adot desc, vec_id) form the short list, and
+    * only those are exactly rescored — output scores are true
+    * cosines, PQ decided only WHICH vectors got scored. */
+  private def adcRescore(lookups: DataFrame, emb: DataFrame, k: Int,
+                         nQueries: Int, rerank: Int): DataFrame = {
     val wA = Window.partitionBy(col("q_id"))
       .orderBy(col("adot").desc, col("vec_id"))
-    val shortlist = codes.join(broadcast(dtable), Seq("j", "code"))
-      .filter(col("vec_id") =!= col("q_id"))
+    val shortlist = lookups
       .groupBy(col("q_id"), col("vec_id"))
       .agg(sum(col("qdot")).as("adot"))
       .withColumn("__r", row_number().over(wA))
       .filter(col("__r") <= rerank)
       .select(col("q_id"), col("vec_id"))
-
-    // exact rescore of the short list only — output scores are true
-    // cosines, PQ decided only WHICH vectors got scored
-    val wK = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    shortlist
+    rankTopK(shortlist
       .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
-      .join(broadcast(emb.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 4).as("cosine"))
-      .withColumn("rank", row_number().over(wK))
-      .filter(col("rank") <= k)
-      .orderBy(col("q_id"), col("rank"))
+      .join(broadcast(queries(emb, nQueries)), "q_id"), k)
   }
 
   /** IVF·PQ — the two approximate tiers COMPOSED the way a production
@@ -1214,111 +1147,31 @@ object SimilarityOps {
     * of float arrays) and compute (cell-gated candidates instead of
     * corpus) are sublinear in what brute force pays.
     *
-    * Fit recipes are verbatim [[ivfTopK]] (seed cells → one
+    * The fits are [[ivfTopK]]'s ([[ivfIndex]]: seed cells → one
     * FLOAT-cast mean refinement → 4dp assignment, lowest-cell
-    * tiebreak) and [[pqTopK]] (per-subspace seed codewords → one
-    * refinement → encode; global codebook on raw vectors — the
-    * residual-encoding variant is a documented non-goal, the oracle
-    * replays THIS recipe). Candidate gating is one equi-join of the
-    * cell assignment against the broadcast probe table; ADC rides the
-    * SAME DECIMAL-sum contract as pqTopK so candidate ranking is
-    * aggregation-order free, and the whole pipeline — both fits
-    * included — replays in the DuckDB oracle. */
+    * tiebreak) and [[pqTopK]]'s ([[pqIndex]]: per-subspace seed
+    * codewords → one refinement → encode; global codebook on raw
+    * vectors — the residual-encoding variant is a documented
+    * non-goal, the oracle replays THIS recipe). Candidate gating is
+    * one equi-join of the cell assignment against the broadcast probe
+    * table; ADC rides the SAME DECIMAL-sum contract as pqTopK so
+    * candidate ranking is aggregation-order free, and the whole
+    * pipeline — both fits included — replays in the DuckDB oracle. */
   def ivfPqTopK(s: SparkSession, d: String, k: Int = 5, nQueries: Int = 10,
                 nProbe: Int = 2, m: Int = 8, nCodes: Int = 16,
                 rerank: Int = 50): DataFrame = {
-    require(dim % m == 0, s"dim $dim must split into $m subspaces")
-    val sub = dim / m
     val emb = Tables.embeddings(s, d).localCheckpoint(false)
-    val cellCount = math.max(8, math.sqrt(emb.count().toDouble).toInt)
-
-    // ---- IVF side: cells + per-query probe set (the ivfTopK fit) ----
-    val seeds = emb.filter(col("vec_id") < cellCount)
-      .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
-    def assign1(cents: DataFrame): DataFrame =
-      emb.crossJoin(broadcast(cents))
-        .withColumn("sim", round(cosine(col("embedding"), col("c_emb")), 4))
-        .groupBy(col("vec_id"))
-        .agg(first(col("embedding")).as("embedding"),
-          max_by(col("cell"), struct(col("sim"), -col("cell"))).as("cell"))
-    val centroids = assign1(seeds)
-      .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("cell"), col("pos")).agg(avg(col("v")).as("m"))
-      .groupBy(col("cell"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("cell"), transform(col("pm"), x => x.getField("m"))
-        .cast("array<float>").as("c_emb"))
-    val cells = assign1(centroids).select(col("vec_id"), col("cell"))
-    val w2 = Window.partitionBy(col("vec_id"))
-      .orderBy(col("sim").desc, col("cell"))
-    val qCells = emb.filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(centroids))
-      .withColumn("sim", round(cosine(col("embedding"), col("c_emb")), 4))
-      .withColumn("rnk", row_number().over(w2))
-      .filter(col("rnk") <= nProbe)
-      .select(col("vec_id").as("q_id"), col("cell"))
-
-    // ---- PQ side: global codebook + codes (the pqTopK fit) ----
-    def subvecs(df: DataFrame, idOut: String): DataFrame =
-      df.select(col("vec_id").as(idOut),
-          explode(sequence(lit(0), lit(m - 1))).as("j"),
-          col("embedding"))
-        .withColumn("sv", expr(s"slice(embedding, j * $sub + 1, $sub)"))
-        .drop("embedding")
-    val corpusSub = subvecs(emb, "vec_id").localCheckpoint(false)
-    def d2(a: Column, c: Column): Column =
-      round(graft.functions.VectorExprs.dotProduct(a, a) +
-        graft.functions.VectorExprs.dotProduct(c, c) -
-        lit(2) * graft.functions.VectorExprs.dotProduct(a, c), 4)
-    def assignPq(codebook: DataFrame): DataFrame =
-      corpusSub.join(broadcast(codebook), "j")
-        .withColumn("__d2", d2(col("sv"), col("cw")))
-        .groupBy(col("vec_id"), col("j"))
-        .agg(first(col("sv")).as("sv"),
-          min_by(col("code"), struct(col("__d2"), col("code"))).as("code"))
-    val pqSeeds = corpusSub.filter(col("vec_id") < nCodes)
-      .select(col("j"), col("vec_id").cast("int").as("code"),
-        col("sv").as("cw"))
-    val refined = assignPq(pqSeeds)
-      .select(col("j"), col("code"), posexplode(col("sv")).as(Seq("pos", "v")))
-      .groupBy(col("j"), col("code"), col("pos")).agg(avg(col("v")).as("mv"))
-      .groupBy(col("j"), col("code"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("mv")))).as("pm"))
-      .select(col("j"), col("code"),
-        transform(col("pm"), x => x.getField("mv")).cast("array<float>")
-          .as("cw"))
-    val codes = assignPq(refined).select(col("vec_id"), col("j"), col("code"))
-    val dtable = subvecs(emb.filter(col("vec_id") < nQueries), "q_id")
-      .join(broadcast(refined), "j")
-      .select(col("q_id"), col("j"), col("code"),
-        round(graft.functions.VectorExprs.dotProduct(col("sv"), col("cw")), 4)
-          .cast("decimal(14,4)").as("qdot"))
-
-    // ---- compose: cell-gated candidates → ADC → exact rescore ----
-    val cand = cells.join(broadcast(qCells), Seq("cell"))
+    val (cells, qCells) = ivfIndex(emb, emb,
+      emb.filter(col("vec_id") < cellCount(emb)), nQueries, nProbe)
+    val (codes, dtable) = pqIndex(emb, nQueries, m, nCodes)
+    // cell-gated candidates → ADC → exact rescore
+    val cand = cells.select(col("vec_id"), col("cell"))
+      .join(broadcast(qCells.select(col("q_id"), col("cell"))), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"))
-    val wA = Window.partitionBy(col("q_id"))
-      .orderBy(col("adot").desc, col("vec_id"))
-    val shortlist = cand.join(codes, "vec_id")
-      .join(broadcast(dtable), Seq("q_id", "j", "code"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("qdot")).as("adot"))
-      .withColumn("__r", row_number().over(wA))
-      .filter(col("__r") <= rerank)
-      .select(col("q_id"), col("vec_id"))
-    val wK = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    shortlist
-      .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
-      .join(broadcast(emb.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))),
-        "q_id")
-      .select(col("q_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 4).as("cosine"))
-      .withColumn("rank", row_number().over(wK))
-      .filter(col("rank") <= k)
-      .orderBy(col("q_id"), col("rank"))
+    adcRescore(cand.join(codes, "vec_id")
+      .join(broadcast(dtable), Seq("q_id", "j", "code")),
+      emb, k, nQueries, rerank)
   }
 
   // ---- SQL oracle generators ------------------------------------------
@@ -1826,18 +1679,7 @@ object SimilarityOps {
     * [[pcaProjectOn]] applies it. */
   private def pcaFit(emb: DataFrame, iters: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    val x = Tables.spread(emb).select(col("vec_id"),
-      transform(col("embedding"),
-        v => round(v.cast("double") * 1000000, 0).cast("long") + 1000000L)
-        .as("x6"))
-    val mu = x.select(posexplode(col("x6")).as(Seq("dim", "v6")))
-      .groupBy(col("dim")).agg(expr("sum(v6) div count(1)").as("mu6"))
-    val muArr = mu
-      .agg(array_sort(collect_list(struct(col("dim"), col("mu6")))).as("pm"))
-      .select(transform(col("pm"), p => p.getField("mu6")).as("mu6s"))
-    val cx = x.crossJoin(broadcast(muArr))
-      .select(col("vec_id"),
-        zip_with(col("x6"), col("mu6s"), (a, b) => a - b).as("dx"))
+    val cx = centered(emb)
     val cov = cx
       .select(col("dx"), posexplode(col("dx")).as(Seq("i", "dxi")))
       .select(col("i"), col("dxi"), posexplode(col("dx")).as(Seq("j", "dxj")))
@@ -1847,10 +1689,6 @@ object SimilarityOps {
       .select(col("i"), col("j"), expr("ss div (n * 10000)").as("c8"))
       .localCheckpoint(false)
 
-    def applyC(v: DataFrame): DataFrame =
-      cov.join(v, cov("j") === v("dim"))
-        .groupBy(col("i"))
-        .agg(sum(col("c8").cast("decimal(38,0)") * col("v6")).as("w"))
     def renorm(w: DataFrame): DataFrame =
       w.crossJoin(w.agg(max(abs(col("w"))).as("m")))
         .select(col("i").as("dim"), expr("(w * 1000000) div m").as("v6"))
@@ -1865,20 +1703,38 @@ object SimilarityOps {
     // stages run while the frame is built (emb_pca_power at sf0.001:
     // 32 jobs to build, 14 with AQE off)
     val vf = (1 to iters).foldLeft(v0) { (v, _) =>
-      renorm(applyC(v).localCheckpoint(false)).localCheckpoint(false)
+      renorm(applyCov(cov, v).localCheckpoint(false)).localCheckpoint(false)
     }
     (cx, cov, vf)
   }
 
+  /** The embeddings on the shifted 1e-6 lattice
+    * ([[MlOps.lattice6]]), centered by the integer per-dimension
+    * mean Σx6 div n: (vec_id, dx), dx an exact long array. */
+  private def centered(emb: DataFrame): DataFrame = {
+    val x = Tables.spread(emb).select(col("vec_id"),
+      MlOps.lattice6(col("embedding")).as("x6"))
+    val mu = x.select(posexplode(col("x6")).as(Seq("dim", "v6")))
+      .groupBy(col("dim")).agg(expr("sum(v6) div count(1)").as("mu6"))
+    val muArr = mu
+      .agg(array_sort(collect_list(struct(col("dim"), col("mu6")))).as("pm"))
+      .select(transform(col("pm"), p => p.getField("mu6")).as("mu6s"))
+    x.crossJoin(broadcast(muArr))
+      .select(col("vec_id"),
+        zip_with(col("x6"), col("mu6s"), (a, b) => a - b).as("dx"))
+  }
+
+  /** One power-iteration product: the covariance grid (i, j, c8)
+    * applied to the component state (dim, v6), as (i, w). */
+  private def applyCov(cov: DataFrame, v: DataFrame): DataFrame =
+    cov.join(v, cov("j") === v("dim"))
+      .groupBy(col("i"))
+      .agg(sum(col("c8").cast("decimal(38,0)") * col("v6")).as("w"))
+
   /** Same over any (vec_id, embedding) frame. */
   def pcaPowerOn(emb: DataFrame, iters: Int): DataFrame = {
     val (_, cov, vf) = pcaFit(emb, iters)
-    def applyC(v: DataFrame): DataFrame =
-      cov.join(v, cov("j") === v("dim"))
-        .groupBy(col("i"))
-        .agg(sum(col("c8").cast("decimal(38,0)") * col("v6")).as("w"))
-
-    val wf = applyC(vf)
+    val wf = applyCov(cov, vf)
     val stats = wf.join(vf, wf("i") === vf("dim"))
       .agg(sum(col("v6").cast("decimal(38,0)") * col("w")).as("num"),
         sum((col("v6") * col("v6")).cast("decimal(38,0)")).as("den"))
@@ -2074,18 +1930,7 @@ object SimilarityOps {
 
   /** Same over any (vec_id, embedding) frame. */
   def standardizeOn(emb: DataFrame): DataFrame = {
-    val x = Tables.spread(emb).select(col("vec_id"),
-      transform(col("embedding"),
-        v => round(v.cast("double") * 1000000, 0).cast("long") + 1000000L)
-        .as("x6"))
-    val mu = x.select(posexplode(col("x6")).as(Seq("dim", "v6")))
-      .groupBy(col("dim")).agg(expr("sum(v6) div count(1)").as("mu6"))
-    val muArr = mu
-      .agg(array_sort(collect_list(struct(col("dim"), col("mu6")))).as("pm"))
-      .select(transform(col("pm"), p => p.getField("mu6")).as("mu6s"))
-    val cx = x.crossJoin(broadcast(muArr))
-      .select(col("vec_id"),
-        zip_with(col("x6"), col("mu6s"), (a, b) => a - b).as("dx"))
+    val cx = centered(emb)
     val vars = cx.select(posexplode(col("dx")).as(Seq("dim", "dxi")))
       .groupBy(col("dim"))
       .agg(sum((col("dxi") * col("dxi")).cast("decimal(38,0)")).as("ss"),

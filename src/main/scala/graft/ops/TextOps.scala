@@ -376,7 +376,6 @@ object TextOps {
 
   /** Same over any (doc_id, text) frame. */
   def packOn(docs: DataFrame, ctxLen: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(ctxLen > 0)
     // coalesce for null-vs-empty consistency with chunkOn (a null
     // text packs like an empty one: one "" token), and keep only
@@ -762,10 +761,9 @@ object TextOps {
   /** Winnowing fingerprint (Schleimer et al., SIGMOD'03), checked:
     * hash every k-token shingle, take the minimum hash of each
     * sliding window of w shingles, dedupe — a compact, position-robust
-    * signature. Winnowing is hash-agnostic, so swapping the
-    * `winnow_fingerprint` kernel's xxhash64 (which no other engine
-    * computes) for a 60-bit md5 prefix — Spark
-    * `conv(substr(md5(g),1,15),16,10)`, DuckDB
+    * signature. Winnowing is hash-agnostic, so hashing with a
+    * 60-bit md5 prefix instead of xxhash64 (which no other engine
+    * computes) — Spark `conv(substr(md5(g),1,15),16,10)`, DuckDB
     * `('0x'||substr(md5(g),1,15))::ubigint` — makes EVERY
     * fingerprint value replayable cross-engine: the oracle re-runs
     * the full shingle → hash → sliding-window-min → distinct+sort
@@ -774,9 +772,7 @@ object TextOps {
     * transform/array_min — no custom kernel, no shuffle), so the
     * checked face also serves as an independent reimplementation of
     * the winnow algorithm itself; 60 bits keeps the unsigned hex
-    * parse inside a signed BIGINT in both engines. Production
-    * callers keep the faster xxhash64 kernel (the `winnow_fingerprint`
-    * SQL function, [[graft.GraftExtensions]]). */
+    * parse inside a signed BIGINT in both engines. */
   def fingerprintsChecked(s: SparkSession, d: String,
                           k: Int = 3, w: Int = 4): DataFrame = {
     val t = toks(col("text"))

@@ -196,27 +196,32 @@ class EtlSpec extends SparkSpec {
 
   test("reference e2e: legacy column dropped, curated schema is the " +
       "canonical one, and single-type consumption prunes partitions") {
-    val out = graft.etl.ReferencePipeline.run(spark, sf)
-    assert(out.columns.toSeq ===
-      Seq("day", "clickview", "txn", "err", "amount_sum"))
-    val rows = out.collect()
-    assert(rows.nonEmpty)
-    // total pivot count equals the staged event count — no source
-    // lost rows through the CSV → ETL → parquet chain
-    val total = rows.map(r => r.getLong(1) + r.getLong(2) + r.getLong(3)).sum
-    assert(total === Tables.events(spark, sf).count())
-    // the curated table's schema: the all-null legacy_code column must
-    // be gone (DropNullFields fired in every source branch)
-    val curated = graft.sources.Sources.readPartitioned(spark,
-      s"${graft.etl.ReferencePipeline.stageDir(spark, sf)}/curated")
-    assert(curated.columns.toSeq.sorted ===
-      Seq("amount", "event_id", "ts", "type", "user_id"))
-    // downstream per-source consumption prunes on the partition tag
-    val one = curated.filter(col("type") === "txn")
-    one.collect()
-    val plan = one.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters:") &&
-      "PartitionFilters: \\[[^\\]]*type".r.findFirstIn(plan).isDefined, plan)
+    // the chain body over a test-owned working dir, so the curated
+    // sink can be inspected before the dir is deleted
+    val dir = graft.TempDirs.create("etl_spec_reference_")
+    try {
+      val out = graft.etl.ReferencePipeline.runOn(spark, sf, dir.toString)
+      assert(out.columns.toSeq ===
+        Seq("day", "clickview", "txn", "err", "amount_sum"))
+      val rows = out.collect()
+      assert(rows.nonEmpty)
+      // total pivot count equals the staged event count — no source
+      // lost rows through the CSV → ETL → parquet chain
+      val total = rows.map(r => r.getLong(1) + r.getLong(2) + r.getLong(3)).sum
+      assert(total === Tables.events(spark, sf).count())
+      // the curated table's schema: the all-null legacy_code column must
+      // be gone (DropNullFields fired in every source branch)
+      val curated = graft.sources.Sources.readPartitioned(spark,
+        s"$dir/curated")
+      assert(curated.columns.toSeq.sorted ===
+        Seq("amount", "event_id", "ts", "type", "user_id"))
+      // downstream per-source consumption prunes on the partition tag
+      val one = curated.filter(col("type") === "txn")
+      one.collect()
+      val plan = one.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters:") &&
+        "PartitionFilters: \\[[^\\]]*type".r.findFirstIn(plan).isDefined, plan)
+    } finally graft.TempDirs.delete(dir)
   }
 
   test("expectations edges: empty rule list refuses, empty frame reports zeros") {

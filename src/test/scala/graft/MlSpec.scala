@@ -33,17 +33,18 @@ class MlSpec extends SparkSpec {
     }
   }
 
+  // blob A at (0, 0) with label 0, blob B at (1, 1) with label 1;
+  // seeds are vec_ids 0 (in A) and 1 (in B)
+  private val blobs = Seq(
+    (0L, 0, Array(0.0f, 0.1f)), (2L, 0, Array(0.1f, 0.0f)),
+    (4L, 0, Array(0.05f, 0.05f)),
+    (1L, 1, Array(1.0f, 0.9f)), (3L, 1, Array(0.9f, 1.0f)),
+    (5L, 1, Array(0.95f, 0.95f)))
+
   test("in-plan kmeans separates two obvious blobs and reports their " +
        "true majority labels") {
     import spark.implicits._
-    // blob A at (0, 0) with label 0, blob B at (1, 1) with label 1;
-    // seeds are vec_ids 0 (in A) and 1 (in B)
-    val emb = Seq(
-      (0L, 0, Array(0.0f, 0.1f)), (2L, 0, Array(0.1f, 0.0f)),
-      (4L, 0, Array(0.05f, 0.05f)),
-      (1L, 1, Array(1.0f, 0.9f)), (3L, 1, Array(0.9f, 1.0f)),
-      (5L, 1, Array(0.95f, 0.95f)))
-      .toDF("vec_id", "label", "embedding")
+    val emb = blobs.toDF("vec_id", "label", "embedding")
     val rows = MlOps.kmeansPlanOn(emb, k = 2, iters = 2).collect()
     assert(rows.length === 2)
     val byCluster = rows.map(r =>
@@ -52,6 +53,24 @@ class MlSpec extends SparkSpec {
     assert(byCluster(1L)._1 === 3L && byCluster(1L)._3 === 1)
     // within-blob spread is tiny relative to the blob separation
     rows.foreach(r => assert(r.getDouble(2) < 0.05, r.toString))
+  }
+
+  test("in-plan kmeans seeds by id rank: ids 10..15 cluster exactly " +
+       "like ids 0..5") {
+    import spark.implicits._
+    // the two-blob fixture, once at ids 0..5 and once shifted to
+    // 10..15: seeds are the k LOWEST ids, not the ids below k, so the
+    // shifted frame still gets both seeds (10 in A, 11 in B)
+    def clusters(offset: Long): Seq[(Long, Long, Double, Int)] =
+      MlOps.kmeansPlanOn(
+          blobs.map { case (id, l, e) => (id + offset, l, e) }
+            .toDF("vec_id", "label", "embedding"), k = 2, iters = 2)
+        .collect().toSeq
+        .map(r => (r.getLong(0) - offset, r.getLong(1), r.getDouble(2),
+          r.getInt(3)))
+    val dense = clusters(0L)
+    assert(dense.length === 2)
+    assert(clusters(10L) === dense)
   }
 
   test("in-plan kmeans on sf embeddings: clusters cover every vector") {

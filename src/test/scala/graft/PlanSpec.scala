@@ -131,7 +131,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("reference e2e readback pushes the anomaly filter into the scan") {
-    val plan = executedPlan(graft.etl.ReferencePipeline.run(spark, sf))
+    // the chain body's lazy frame: the registry face returns the
+    // collected matrix, whose plan no longer shows the readback scan
+    val dir = graft.TempDirs.create("plan_spec_reference_")
+    val plan =
+      try executedPlan(graft.etl.ReferencePipeline.runOn(spark, sf, dir.toString))
+      finally graft.TempDirs.delete(dir)
     // the final pivot reads the curated PARQUET (not the staged CSV),
     // and the notebook's timestamp gate must reach that scan — an
     // unpushed filter here means the whole curated table streams

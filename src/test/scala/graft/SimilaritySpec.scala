@@ -156,7 +156,7 @@ class SimilaritySpec extends SparkSpec {
       rs.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getInt(3))).toSeq
     // below the cap the md5 cut keeps every bucket and, with dense
-    // vec_ids, the lowest-id seeds ARE ivfTopK's vec_id < nCells
+    // vec_ids, the lowest-id seeds ARE ivfTopK's vec_id < cellCount
     // seeds — the faces must agree row for row
     assert(canon(SimilarityOps.ivfTopKSampled(spark, sf, k = 3,
         nQueries = 5).collect())

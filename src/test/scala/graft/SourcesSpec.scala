@@ -119,30 +119,4 @@ class SourcesSpec extends SparkSpec {
     assert(again.filter(col("event_id") === 999999L).count() === 1)
   }
 
-  test("GraftExtensions: SQL functions resolve in an extended session") {
-    // The shared test context is built withExtensions(GraftExtensions)
-    // (SparkSpec.shared) and newSession() re-derives its session state
-    // from those extensions — so a fresh session view proves the
-    // injection works without stopping the shared context (the old
-    // stop-and-rebuild here was fatal once suites ran concurrently).
-    val s2 = SparkSpec.shared.newSession()
-    try {
-      val r = s2.sql(
-        """SELECT simhash64(array('a','b')) AS sh,
-          |  cosine_sim(array(cast(1.0 as float), cast(0.0 as float)),
-          |             array(cast(1.0 as float), cast(0.0 as float))) AS cs,
-          |  dot_product(array(cast(2.0 as float)), array(cast(3.0 as float))) AS dp,
-          |  count_in_set(array('a','b','a','c'), array('a','c')) AS cis,
-          |  winnow_fingerprint(array('a','b','c','d','e','f'), 3, 4) AS wf,
-          |  sorted_intersect_count(array(1L, 3L, 5L, 9L),
-          |                         array(2L, 3L, 5L, 8L, 9L)) AS sic
-          |""".stripMargin).first()
-      assert(math.abs(r.getDouble(1) - 1.0) < 1e-9)
-      assert(math.abs(r.getDouble(2) - 6.0) < 1e-9)
-      assert(r.getInt(3) === 3)
-      assert(r.getSeq[Long](4).nonEmpty)
-      assert(r.getInt(5) === 3)
-    } finally { /* shared-JVM session: leave running for other suites */ }
-  }
-
 }

@@ -14,12 +14,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * between suites mid-flight. `newSession()` isolates exactly that
   * per-session state while sharing the context, block manager and
   * cache, so suite parallelism costs no extra JVMs or contexts.
-  *
-  * The context is built WITH [[GraftExtensions]] so the extension
-  * surface is testable without stopping the shared context to build
-  * a fresh extended session (SourcesSpec used to do that stop — fatal
-  * once suites run concurrently). Extensions only ADD SQL function
-  * names; no existing behavior changes.
   */
 object SparkSpec {
   lazy val shared: SparkSession = {
@@ -36,7 +30,6 @@ object SparkSpec {
       // the compiled-class cache size, so specs test the same engine
       // GraftSession.build opens
       .config(GraftSession.engineConfs)
-      .withExtensions(new GraftExtensions)
       .getOrCreate()
     // INFO-level executor logs dominated the suite's wall time and
     // drowned the driver's captured tail — WARN is enough for specs

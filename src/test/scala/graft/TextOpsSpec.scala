@@ -312,36 +312,6 @@ class TextOpsSpec extends SparkSpec {
     }
   }
 
-  test("winnow kernel matches a directly computed reference fingerprint") {
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    import org.apache.spark.unsafe.types.UTF8String
-    val (k, w) = (3, 4)
-    def reference(text: String): Seq[Long] = {
-      val toks = text.trim.split("\\s+").toSeq
-      if (toks.length < k) return Seq.empty
-      val hashes = toks.sliding(k).map { sh =>
-        val u = UTF8String.fromString(sh.mkString(" "))
-        XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)
-      }.toSeq
-      val mins =
-        if (hashes.length <= w) Seq(hashes.min)
-        else hashes.sliding(w).map(_.min).toSeq
-      mins.distinct.sorted
-    }
-    val docs = Tables.documents(spark, sf)
-      .select("doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    // the kernel as the winnow_fingerprint SQL function (GraftExtensions)
-    val got = Tables.documents(spark, sf)
-      .select(col("doc_id"), to_json(
-        expr("winnow_fingerprint(split(trim(text), '\\\\s+'), 3, 4)")))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    docs.foreach { case (id, text) =>
-      val want = reference(text).mkString("[", ",", "]")
-      assert(got(id) === want, s"doc $id")
-    }
-  }
-
   test("countInSet expression counts repeats through the codegen path") {
     val df = Seq(
       (1L, Seq("the", "cat", "the", "dog", "und")),
@@ -350,18 +320,6 @@ class TextOpsSpec extends SparkSpec {
       graft.functions.TextExprs.countInSet(col("toks"), Seq("the", "und")))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(got === Map(1L -> 3, 2L -> 0))
-  }
-
-  test("simhash64 expression: identical arrays hash equal, codegen path works") {
-    val df = Seq(
-      (1L, "spark is a fast engine for big data"),
-      (2L, "spark is a fast engine for big data"),
-      (3L, "completely different words entirely here now")).toDF("id", "text")
-    val sigs = df.select(col("id"),
-      expr("simhash64(split(text, ' '))").as("sig"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(sigs(1L) === sigs(2L))
-    assert(sigs(1L) !== sigs(3L))
   }
 
   test("collocations: a glued pair out-scores a frequent independent pair") {

@@ -4,9 +4,9 @@
 A top-level or object-member `def`/`val`/`object`/`class`/`trait` counts
 when, with comments and string literals stripped, its name appears
 nowhere in src/main except at its own definition and nowhere in
-perfbench/src. Private and overriding members are skipped. Mains,
-`SparkEntry.entry` and classes Spark loads by name (`GraftExtensions`)
-show up too; they have callers outside the code base.
+perfbench/src. Private and overriding members are skipped. The mains
+and `SparkEntry.entry` show up too; they have callers outside the code
+base.
 
 Run from the repo root: python3 tools/spec_only_scan.py
 """
