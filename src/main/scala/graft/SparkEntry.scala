@@ -2989,7 +2989,7 @@ object SparkEntry {
         |FROM events GROUP BY 1, 2
         |ORDER BY event_type, ed""".stripMargin,
     "layout_pruned_checksum" ->
-      graft.sources.Sources.prunedChecksumOracleSql(),
+      graft.sources.Sources.prunedChecksumOracleSql,
     "etl_table_checksum" ->
       """WITH oh AS (SELECT CAST(list_sum([(strpos('0123456789abcdef', h[i]) - 1) *
         |      (CAST(1 AS BIGINT) << (4*(15 - i))) for i in range(1, 16)])
@@ -3106,11 +3106,11 @@ object SparkEntry {
         |GROUP BY t.dims, t.q_id ORDER BY t.dims, t.q_id""".stripMargin,
     // the whole 8-round optimization unrolled programmatically —
     // oracle and iteration count cannot drift apart
-    "ml_logreg_gd" -> MlOps.logregOracleSql(),
+    "ml_logreg_gd" -> MlOps.logregOracleSql,
     // ml_adaboost_stumps: programmatically unrolled round replay —
     // the logreg discipline, so a round-count change cannot drift
-    "ml_adaboost_stumps" -> MlOps.adaboostOracleSql(),
-    "ml_gbt_stumps" -> MlOps.gbtOracleSql(),
+    "ml_adaboost_stumps" -> MlOps.adaboostOracleSql,
+    "ml_gbt_stumps" -> MlOps.gbtOracleSql,
     // ranking metrics in integer micro-units: per-hit ⌊1e6/log2(r+1)⌋
     // gains, integer divisions for MRR/NDCG/recall — no float is
     // ever summed or compared; sums cast to BIGINT for pandas
@@ -4935,19 +4935,19 @@ object SparkEntry {
     // replays the identical EWMA recursion in a recursive CTE —
     // arithmetic written term-for-term as the Scala fold, so the 4dp
     // values match bit-for-bit (the forecast_hw contract)
-    "ts_ewma" -> graft.ops.TimeSeriesOps.ewmaOracleSql(),
+    "ts_ewma" -> graft.ops.TimeSeriesOps.ewmaOracleSql,
     "ewma_versions" ->
-      graft.ops.TimeSeriesOps.ewmaVersionsOracleSql(),
+      graft.ops.TimeSeriesOps.ewmaVersionsOracleSql,
     // trailing-window z-score; both engines share the stddev_samp
     // parity ts_rolling already relies on, the zero-variance window
     // pins z = 0, and warm-up days (partial window) emit nothing
-    "ts_anomaly" -> graft.ops.TimeSeriesOps.anomalyOracleSql(),
+    "ts_anomaly" -> graft.ops.TimeSeriesOps.anomalyOracleSql,
     // the monitor audits share the batch chains via the builders —
     // one text per statistic, plain + versioned faces cannot drift
     "anomaly_versions" ->
-      graft.ops.TimeSeriesOps.anomalyVersionsOracleSql(),
+      graft.ops.TimeSeriesOps.anomalyVersionsOracleSql,
     "changepoint_versions" ->
-      graft.ops.TimeSeriesOps.changepointVersionsOracleSql(),
+      graft.ops.TimeSeriesOps.changepointVersionsOracleSql,
     // Spark's lag(l) over the day order == the row at rn−l: the
     // oracle replays it as a row-number self-join (DuckDB's lag
     // offset must be constant, the lags come from an unnested range).
@@ -4977,7 +4977,7 @@ object SparkEntry {
         |ORDER BY event_type, lag""".stripMargin,
     // same mean/deviation/DECIMAL machinery as ts_acf, pair join on
     // the shifted day index
-    "ts_pacf" -> TimeSeriesOps.pacfOracleSql(),
+    "ts_pacf" -> TimeSeriesOps.pacfOracleSql,
     // identical reduced-phase trig arguments, identical 6dp term
     // quantization, identical left-assoc 2.0*pi()*ph/p arithmetic
     "ts_periodogram" ->
@@ -5047,7 +5047,7 @@ object SparkEntry {
         |JOIN den da2 ON da2.event_type = num.ta
         |JOIN den db2 ON db2.event_type = num.tb
         |ORDER BY ta, tb, lag""".stripMargin,
-    "ts_changepoint" -> graft.ops.TimeSeriesOps.changepointOracleSql(),
+    "ts_changepoint" -> graft.ops.TimeSeriesOps.changepointOracleSql,
     // Phase = epoch-day mod 7 (dow functions differ in origin across
     // engines); the seasonal mean divides an exact DECIMAL(20,10) sum
     // once, so partial-aggregation order can't move the 4th decimal.
@@ -5525,19 +5525,19 @@ object SparkEntry {
     // pair for pair (the etl_incremental_agg proof shape); text is
     // the dedup_minhash oracle verbatim
     "dedup_incremental_index" ->
-      graft.ops.DedupOps.minhashRecomputeOracleSql(),
+      graft.ops.DedupOps.minhashRecomputeOracleSql,
     // the persisted round-trip face answers to the SAME recompute
     "dedup_incremental_index_persisted" ->
-      graft.ops.DedupOps.minhashRecomputeOracleSql(),
+      graft.ops.DedupOps.minhashRecomputeOracleSql,
     // the capped face's DECLARED contract is weaker — "equal to the
     // recompute when no bucket exceeds the cap" — and this corpus
     // satisfies the premise (largest (band,bsig) bucket << 1000), so
     // the same recompute oracle checks the equality branch; the
     // hot-bucket branch is DedupSpec-pinned (strict subset, linear)
     "dedup_incremental_index_capped" ->
-      graft.ops.DedupOps.minhashRecomputeOracleSql(),
+      graft.ops.DedupOps.minhashRecomputeOracleSql,
     "dedup_minhash" ->
-      graft.ops.DedupOps.minhashRecomputeOracleSql(),
+      graft.ops.DedupOps.minhashRecomputeOracleSql,
     // complete cross-engine replay of the md5-60bit SimHash face:
     // per-token bit votes → sign-thresholded signature → all-pairs
     // hamming ≤ 7 (the oracle's shape for Spark's exact banded
@@ -5985,39 +5985,39 @@ object SparkEntry {
     // Deterministic fixed-seed LSH/IVF — replicated plane-for-plane in
     // SQL by the generators in SimilarityOps (see the precision
     // contract documented there).
-    "dedup_embedding_lsh" -> graft.ops.SimilarityOps.embeddingLshOracleSql(),
+    "dedup_embedding_lsh" -> graft.ops.SimilarityOps.embeddingLshOracleSql,
     // SemDeDup: the Lloyd's loop unrolled on shifted integer
     // coordinates, then the in-cluster HUGEINT cosine gate
-    "dedup_semantic" -> graft.ops.DedupOps.semanticDedupOracleSql(),
-    "curate_dsir" -> graft.ops.CurateOps.dsirOracleSql(),
+    "dedup_semantic" -> graft.ops.DedupOps.semanticDedupOracleSql,
+    "curate_dsir" -> graft.ops.CurateOps.dsirOracleSql,
     "curate_mix_temperature" ->
-      graft.ops.CurateOps.mixTemperatureOracleSql(),
+      graft.ops.CurateOps.mixTemperatureOracleSql,
     "curate_shard_export" ->
-      graft.ops.CurateOps.shardExportOracleSql(),
+      graft.ops.CurateOps.shardExportOracleSql,
     "curate_pack_sequences" ->
-      graft.ops.CurateOps.packSequencesOracleSql(),
+      graft.ops.CurateOps.packSequencesOracleSql,
     "curate_pack_stats" ->
-      graft.ops.CurateOps.packStatsOracleSql(),
+      graft.ops.CurateOps.packStatsOracleSql,
     "curate_pack_bpe" ->
-      graft.ops.CurateOps.packSequencesBpeOracleSql(),
+      graft.ops.CurateOps.packSequencesBpeOracleSql,
     "curate_pack_bpe_stats" ->
-      graft.ops.CurateOps.packStatsBpeOracleSql(),
+      graft.ops.CurateOps.packStatsBpeOracleSql,
     "text_ccnet_buckets" -> graft.ops.TextOps.ccnetBucketsOracleSql(),
     "ann_lsh_topk" -> graft.ops.SimilarityOps.lshOracleSql(),
     "ann_ivf_topk" -> graft.ops.SimilarityOps.ivfOracleSql(),
     "ann_ivf_topk_sampled" -> graft.ops.SimilarityOps.ivfSampledOracleSql(),
-    "ann_ivf_recall" -> graft.ops.SimilarityOps.ivfRecallOracleSql(),
+    "ann_ivf_recall" -> graft.ops.SimilarityOps.ivfRecallOracleSql,
     "ann_ivf_sampled_recall" ->
-      graft.ops.SimilarityOps.ivfSampledRecallOracleSql(),
-    "ann_lsh_recall" -> graft.ops.SimilarityOps.lshRecallOracleSql(),
-    "ann_pq_recall" -> graft.ops.SimilarityOps.pqRecallOracleSql(),
-    "ann_ivfpq_recall" -> graft.ops.SimilarityOps.ivfPqRecallOracleSql(),
-    "emb_project_rp" -> graft.ops.SimilarityOps.rpOracleSql(),
+      graft.ops.SimilarityOps.ivfSampledRecallOracleSql,
+    "ann_lsh_recall" -> graft.ops.SimilarityOps.lshRecallOracleSql,
+    "ann_pq_recall" -> graft.ops.SimilarityOps.pqRecallOracleSql,
+    "ann_ivfpq_recall" -> graft.ops.SimilarityOps.ivfPqRecallOracleSql,
+    "emb_project_rp" -> graft.ops.SimilarityOps.rpOracleSql,
     "ann_pq_topk" -> graft.ops.SimilarityOps.pqOracleSql(),
     "ann_ivfpq_topk" -> graft.ops.SimilarityOps.ivfPqOracleSql(),
-    "emb_diversity_sample" -> graft.ops.SimilarityOps.diversityOracleSql(),
-    "graph_kcore" -> graft.ops.GraphOps.kCoreOracleSql(),
-    "graph_lpa" -> graft.ops.GraphOps.lpaOracleSql(),
+    "emb_diversity_sample" -> graft.ops.SimilarityOps.diversityOracleSql,
+    "graph_kcore" -> graft.ops.GraphOps.kCoreOracleSql,
+    "graph_lpa" -> graft.ops.GraphOps.lpaOracleSql,
     // exact decimal sums make the partial-aggregation order (and the
     // engine) irrelevant; one double division + round at the end
     "emb_centroids" ->
@@ -6050,10 +6050,10 @@ object SparkEntry {
         |FROM q ORDER BY vec_id""".stripMargin,
     // ann_mmr_rerank: greedy rounds unrolled with MATERIALIZED CTEs,
     // all selection arithmetic BIGINT over the shared cos·1e4 grid
-    "ann_mmr_rerank" -> SimilarityOps.mmrOracleSql(),
+    "ann_mmr_rerank" -> SimilarityOps.mmrOracleSql,
     // the IVF-shortlist face: the ann_ivf_topk assignment chain
     // verbatim, rel re-integerized from its 4dp cosine, same greedy
-    "ann_mmr_rerank_ivf" -> SimilarityOps.mmrIvfOracleSql(),
+    "ann_mmr_rerank_ivf" -> SimilarityOps.mmrIvfOracleSql,
     "ann_bruteforce_topk" ->
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb
         |           FROM embeddings WHERE vec_id < 10),
@@ -6113,13 +6113,13 @@ object SparkEntry {
     // the scale tier replayed end to end: corpus-fit IVF cells →
     // multi-probe shortlist → the SAME vote (generated beside the
     // operator so fit parameters can't drift between engines)
-    "ml_knn_classify_ivf" -> SimilarityOps.knnIvfOracleSql(),
+    "ml_knn_classify_ivf" -> SimilarityOps.knnIvfOracleSql,
     // generated beside the operator: same quantization, same integer
     // covariance codes, same unrolled power rounds (HUGEINT stands in
     // for DECIMAL(38,0); both engines' integer division truncates)
-    "emb_pca_power" -> SimilarityOps.pcaOracleSql(),
-    "emb_pca_project" -> SimilarityOps.pcaProjectOracleSql(),
-    "emb_pca_remove_top" -> SimilarityOps.pcaRemoveTopOracleSql(),
+    "emb_pca_power" -> SimilarityOps.pcaOracleSql,
+    "emb_pca_project" -> SimilarityOps.pcaProjectOracleSql,
+    "emb_pca_remove_top" -> SimilarityOps.pcaRemoveTopOracleSql,
     "emb_standardize" -> SimilarityOps.standardizeOracleSql(),
     // Generated from the same pattern table the operator folds over
     // (Java regex and RE2 agree on this subset); counts on the
@@ -6282,7 +6282,7 @@ object SparkEntry {
         |FROM kept GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     // Spark ln == DuckDB ln on the same doubles; scores round to 4dp
     // BEFORE ranking (term tiebreak) so rankings are engine-stable.
-    // ctxLen literal mirrors TextOps.pack's default (128); the
+    // ctxLen literal mirrors TextOps.pack's ctxLen (128); the
     // oracle's single global cumsum window IS the thing the operator
     // replaces with a distributed prefix sum — same values either way
     "text_pack" ->
@@ -6298,7 +6298,7 @@ object SparkEntry {
         |  CAST(greatest(0, ctx_id * 128 - cum) AS INT) AS from_tok,
         |  CAST(least(n, (ctx_id + 1) * 128 - cum) AS INT) AS to_tok
         |FROM x ORDER BY ctx_id, doc_id""".stripMargin,
-    // chunk/overlap literals mirror TextOps.chunk defaults (64/16 →
+    // chunk/overlap literals mirror TextOps.chunk's settings (64/16 →
     // stride 48); chunk_id = (start-1) integer-div stride
     "text_chunk" ->
       """WITH tok AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
@@ -6563,11 +6563,11 @@ object SparkEntry {
     // later-in-fold no longer implies later-in-time, so both gates
     // are explicit); structs never cross engines, only counts do
     "stream_conformal" ->
-      graft.streaming.EventStreams.conformalMonitorOracleSql(),
+      graft.streaming.EventStreams.conformalMonitorOracleSql,
     "conformal_versions" ->
-      graft.streaming.EventStreams.conformalVersionsOracleSql(),
+      graft.streaming.EventStreams.conformalVersionsOracleSql,
     "funnel_versions" ->
-      graft.streaming.EventStreams.funnelVersionsOracleSql(),
+      graft.streaming.EventStreams.funnelVersionsOracleSql,
     "attribution_versions" ->
       """WITH tagged AS (SELECT user_id, event_id,
         |    event_id % 5 AS epoch,
@@ -6770,7 +6770,7 @@ object SparkEntry {
     // bit-for-bit across engines.
     // frame sampling: every pixel of every SAMPLED frame recomputed
     // from the synth formula over ranges — integer means, lag window
-    "mm_video_sample" -> graft.ops.MultimodalOps.videoSampleOracleSql(),
+    "mm_video_sample" -> graft.ops.MultimodalOps.videoSampleOracleSql,
     // the clip probes frames [16, 48) (2ms·8kHz .. 6ms·8kHz) of the
     // synth sequence; the 2×2 thumbnail samples file rows {0, h//2} ×
     // cols {0, w//2} of the synth pixel formula — nearest-neighbor's

@@ -155,7 +155,7 @@ object DailyPipeline {
        |        coalesce(CAST(CAST(round(jaccard * 10000) AS BIGINT)
        |          AS VARCHAR), 'null'))) AS h
        |      FROM (
-       |${graft.ops.DedupOps.minhashRecomputeOracleSql()})))
+       |${graft.ops.DedupOps.minhashRecomputeOracleSql})))
        |SELECT 'daily_agg' AS tbl, count(*) AS n_rows,
        |  bit_xor(hv) AS xor_sig,
        |  CAST(sum(CAST(hv AS HUGEINT)) AS VARCHAR) AS sum_sig FROM agg

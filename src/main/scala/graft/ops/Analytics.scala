@@ -124,6 +124,9 @@ object Analytics {
       .na.fill(0, eventTypes)
       .orderBy(col("day"))
 
+  /** The q_funnel stages, which the versioned funnel audit replays. */
+  private[graft] val funnelStages = Seq("view", "click", "purchase")
+
   /** Funnel analysis — the ordered-stage conversion count every
     * product-analytics pipeline runs on an events table: of the users
     * who VIEWED, how many then CLICKED (at or after their first
@@ -138,9 +141,8 @@ object Analytics {
     * is the high-cardinality user id, no windows, no self-join of the
     * full table. Output: one row per stage with the surviving user
     * count (conversion reads top-down). */
-  def funnel(s: SparkSession, d: String,
-             stages: Seq[String] = Seq("view", "click", "purchase")): DataFrame =
-    funnelOn(Tables.events(s, d), stages)
+  def funnel(s: SparkSession, d: String): DataFrame =
+    funnelOn(Tables.events(s, d), funnelStages)
 
   /** Same over any (user_id, event_type, ts) frame. */
   def funnelOn(events: DataFrame, stages: Seq[String]): DataFrame = {
@@ -188,10 +190,8 @@ object Analytics {
     * subset of stage i's by construction) + one percentile aggregate
     * — the q_percentiles plan shape over frames that SHRINK with
     * funnel depth. */
-  def funnelLatency(s: SparkSession, d: String,
-                    stages: Seq[String] = Seq("view", "click", "purchase"))
-      : DataFrame =
-    funnelLatencyOn(Tables.events(s, d), stages)
+  def funnelLatency(s: SparkSession, d: String): DataFrame =
+    funnelLatencyOn(Tables.events(s, d), funnelStages)
 
   /** Same over any (user_id, event_type, ts) frame. */
   def funnelLatencyOn(events: DataFrame, stages: Seq[String]): DataFrame = {
@@ -260,6 +260,10 @@ object Analytics {
       .orderBy(col("day"))
   }
 
+  /** The HLL relative standard deviation of the checked distinct
+    * faces and the profiles. */
+  private val rsd = 0.02
+
   /** Driver-checkable face of [[dauWau]]'s 100 TB variant: the
     * trailing-window distinct is where exact dedup hurts at scale
     * (every user-day materializes 7 support rows into an exact
@@ -273,8 +277,7 @@ object Analytics {
     * tolerance breaks the cross-engine hash (the q_distinct_approx
     * pattern). Single-distinct + HLL in one aggregate stays on the
     * object-hash path — no multi-distinct Expand rewrite fires. */
-  def dauWauChecked(s: SparkSession, d: String,
-                    rsd: Double = 0.02): DataFrame = {
+  def dauWauChecked(s: SparkSession, d: String): DataFrame = {
     val ud = Tables.events(s, d)
       .select(date_trunc("day", col("ts")).as("day"), col("user_id"))
       .distinct()
@@ -320,7 +323,8 @@ object Analytics {
       .select(col("event_type"), col("user_id")))
 
   /** Same over any (event_type, user_id) membership frame. */
-  def distinctUnionCheckedOn(ev: DataFrame, lgK: Int = 14): DataFrame = {
+  def distinctUnionCheckedOn(ev: DataFrame): DataFrame = {
+    val lgK = 14
     val rsd = 1.04 / math.sqrt(math.pow(2.0, lgK.toDouble))
     val u = ev.select(col("event_type"), col("user_id")).distinct()
       .localCheckpoint(false) // feeds per-type agg + the overlap join
@@ -358,6 +362,10 @@ object Analytics {
       .orderBy(col("type_a"), col("type_b"))
   }
 
+  /** The length of the Q10, session-path, event-n-gram and
+    * market-basket top lists. */
+  private val topN = 20
+
   /** TPC-H Q10 (returned-item reporting): which customers returned
     * the most revenue in a quarter — the churn-risk outreach list.
     * Customer/nation broadcast onto the orders∧lineitem join (AQE
@@ -366,8 +374,7 @@ object Analytics {
     * BEFORE the join). Revenue quantizes per-row to DECIMAL before
     * summing — exact, order-independent (the rounded-metric rule;
     * q5's raw double sum predates it and is pinned). */
-  def returnedItemReport(s: SparkSession, d: String,
-                         topN: Int = 20): DataFrame = {
+  def returnedItemReport(s: SparkSession, d: String): DataFrame = {
     val o = Tables.orders(s, d)
       .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
         col("o_orderdate") < lit("1996-04-01").cast("timestamp"))
@@ -574,8 +581,8 @@ object Analytics {
     * windowed-double association (Spark rebuilds sliding frames
     * left-to-right, DuckDB uses segment trees), and an exact
     * associative sum makes that implementation detail unobservable. */
-  def windowTimeRange(s: SparkSession, d: String,
-                      trailingSec: Long = 1800): DataFrame = {
+  def windowTimeRange(s: SparkSession, d: String): DataFrame = {
+    val trailingSec = 1800L
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("__sec"))
       .rangeBetween(-trailingSec, 0)
@@ -602,7 +609,8 @@ object Analytics {
     * and capped — because IEEE subtract/multiply/divide/floor are
     * bit-identical across engines (width_bucket is not universally
     * available and its edge semantics vary). */
-  def histogram(s: SparkSession, d: String, nBins: Int = 10): DataFrame = {
+  def histogram(s: SparkSession, d: String): DataFrame = {
+    val nBins = 10
     val ev = Tables.events(s, d)
     val bounds = ev.agg(min(col("value")).as("lo"), max(col("value")).as("hi"))
     // hi == lo (constant column) guard: the division is NaN and
@@ -636,8 +644,8 @@ object Analytics {
   private def sqLit(n: String): String =
     "'" + n.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-  def profile(df: DataFrame, cols: Seq[String], approx: Boolean = false,
-              rsd: Double = 0.02): DataFrame = {
+  def profile(df: DataFrame, cols: Seq[String],
+              approx: Boolean = false): DataFrame = {
     val aggs = cols.flatMap { c => Seq(
       count(lit(1)).as(s"__n_$c"),
       sum(when(col(bqId(c)).isNull, 1L).otherwise(0L)).as(s"__null_$c"),
@@ -667,8 +675,8 @@ object Analytics {
     * the [[profile]] plan with min/max riding the same pass; the
     * stack to long format is row-cardinality m (columns), free at
     * any scale. */
-  def suggestRules(df: DataFrame, cols: Seq[String],
-                   inSetMax: Long = 20L): DataFrame = {
+  def suggestRules(df: DataFrame, cols: Seq[String]): DataFrame = {
+    val inSetMax = 20L
     import org.apache.spark.sql.types.NumericType
     val numeric = df.schema.fields
       .filter(f => f.dataType.isInstanceOf[NumericType]).map(_.name).toSet
@@ -717,8 +725,7 @@ object Analytics {
     * for the split at sf0.1. A verification face pays the second
     * scan; the production 100 TB profile is the sketch-only
     * [[profile]] (one pass, mergeable, no Expand). */
-  def profileChecked(df: DataFrame, cols: Seq[String],
-                     rsd: Double = 0.02): DataFrame = {
+  def profileChecked(df: DataFrame, cols: Seq[String]): DataFrame = {
     val exactAggs = cols.flatMap { c => Seq(
       count(lit(1)).as(s"__n_$c"),
       sum(when(col(bqId(c)).isNull, 1L).otherwise(0L)).as(s"__null_$c"),
@@ -752,8 +759,7 @@ object Analytics {
     * hash compare FAILS exactly when the sketch drifts out of
     * tolerance — the emb_mrl_recall pattern, promoting the approx
     * tier from rows-only to a real correctness gate. */
-  def distinctCountChecked(s: SparkSession, d: String,
-                           rsd: Double = 0.02): DataFrame =
+  def distinctCountChecked(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
       .agg(countDistinct(col("user_id")).as("users_exact"),
            countDistinct(col("event_type")).as("types_exact"),
@@ -777,9 +783,9 @@ object Analytics {
     * three verdicts; the oracle replays the exact side (quantile_cont
     * ≡ Spark percentile interpolation) with literal TRUE flags, so
     * a sketch outside its bracket breaks the cross-engine hash. */
-  def percentilesChecked(s: SparkSession, d: String,
-                         accuracy: Int = 10000,
-                         delta: Double = 0.005): DataFrame =
+  def percentilesChecked(s: SparkSession, d: String): DataFrame = {
+    val accuracy = 10000
+    val delta = 0.005
     Tables.events(s, d)
       .groupBy(col("event_type"))
       .agg(
@@ -800,6 +806,7 @@ object Analytics {
         (col("__a99") >= element_at(col("__br"), 5) &&
          col("__a99") <= col("__mx")).as("p99_within_tol"))
       .orderBy(col("event_type"))
+  }
 
   /** Per-type exact interpolated percentiles — the declared
     * SMALL-GROUP face (like dedup_embedding's exact baseline): the
@@ -851,7 +858,8 @@ object Analytics {
     * event_id — ties must not depend on partitioning) and summarize
     * each bin. One shuffle on the series key; the window and the
     * summary aggregate share that partitioning. */
-  def ntileBins(s: SparkSession, d: String, bins: Int = 10): DataFrame = {
+  def ntileBins(s: SparkSession, d: String): DataFrame = {
+    val bins = 10
     val w = Window.partitionBy(col("event_type"))
       .orderBy(col("value"), col("event_id"))
     Tables.events(s, d)
@@ -939,8 +947,9 @@ object Analytics {
     * (the emb_centroids contract). Plan: one percentile aggregation,
     * a broadcast-sized threshold join back, row-local clipping, one
     * summary aggregation — two shuffles on the series key total. */
-  def winsorize(s: SparkSession, d: String,
-                lo: Double = 0.05, hi: Double = 0.95): DataFrame = {
+  def winsorize(s: SparkSession, d: String): DataFrame = {
+    val lo = 0.05
+    val hi = 0.95
     val bounds = Tables.events(s, d)
       .groupBy(col("event_type"))
       .agg(round(expr(s"percentile(value, $lo)"), 4).as("lo"),
@@ -1046,6 +1055,10 @@ object Analytics {
       .orderBy(col("from_type"), col("to_type"))
   }
 
+  /** The two arms the A/B tests (Welch, Mann-Whitney, KS) compare. */
+  private val typeA = "click"
+  private val typeB = "purchase"
+
   /** Welch's unequal-variance t-test between two series — the A/B
     * significance check run before trusting a mean difference. All
     * moments come from ONE conditional aggregation over a single scan
@@ -1054,8 +1067,7 @@ object Analytics {
     * mean/variance/t/Welch–Satterthwaite dof then derive in scalar
     * double arithmetic, identical in any engine. Scalar output — the
     * plan is the same shape as a SUM at any data size. */
-  def welchTTest(s: SparkSession, d: String,
-                 typeA: String = "click", typeB: String = "purchase"): DataFrame =
+  def welchTTest(s: SparkSession, d: String): DataFrame =
     welchTTestOn(Tables.events(s, d), typeA, typeB)
 
   /** Same over any (event_type, value) frame. */
@@ -1242,9 +1254,7 @@ object Analytics {
     * double arithmetic from exact integers. One aggregation over
     * distinct values + the prefix sum — the same exchange budget as a
     * groupBy. */
-  def mannWhitney(s: SparkSession, d: String,
-                  typeA: String = "click",
-                  typeB: String = "purchase"): DataFrame =
+  def mannWhitney(s: SparkSession, d: String): DataFrame =
     mannWhitneyOn(Tables.events(s, d), typeA, typeB)
 
   /** Same over any (event_type, value) frame. */
@@ -1300,9 +1310,7 @@ object Analytics {
     * tree of +,·,/,√ over exact integers, bit-reproducible on both
     * engines (no libm transcendentals). Contract: both arms
     * non-empty. */
-  def ksTest(s: SparkSession, d: String,
-             typeA: String = "click",
-             typeB: String = "purchase"): DataFrame =
+  def ksTest(s: SparkSession, d: String): DataFrame =
     ksTestOn(Tables.events(s, d), typeA, typeB)
 
   /** Same over any (event_type, value) frame. */
@@ -1586,7 +1594,8 @@ object Analytics {
     survivalKmOn(Tables.events(s, d))
 
   /** Same over any (user_id, ts) frame. */
-  def survivalKmOn(events: DataFrame, graceDays: Int = 7): DataFrame = {
+  def survivalKmOn(events: DataFrame): DataFrame = {
+    val graceDays = 7
     val ed = expr("unix_micros(ts) div 86400000000")
     val users0 = events.groupBy(col("user_id"))
       .agg(min(ed).as("d0"), max(ed).as("d1"))
@@ -1616,6 +1625,12 @@ object Analytics {
       .orderBy(col("t"))
   }
 
+  /** q_attribution's touches, conversion and lookback, which the
+    * versioned attribution audit replays. */
+  private[graft] val attributionTouchTypes = Seq("view", "click")
+  private[graft] val attributionConvType = "purchase"
+  private[graft] val attributionWindowDays = 7
+
   /** Last-touch marketing attribution — which touch gets credit for
     * each conversion (the question funnel counts and session paths
     * circle but don't answer): every purchase attributes to the
@@ -1631,11 +1646,9 @@ object Analytics {
     * documented contract, replayed identically in the oracle); the
     * lookback test is pure integer µs arithmetic. Output is
     * touch-type-cardinality tiny at any scale. */
-  def attributionLastTouch(s: SparkSession, d: String,
-                           touchTypes: Seq[String] = Seq("view", "click"),
-                           convType: String = "purchase",
-                           windowDays: Int = 7): DataFrame =
-    attributionOn(Tables.events(s, d), touchTypes, convType, windowDays)
+  def attributionLastTouch(s: SparkSession, d: String): DataFrame =
+    attributionOn(Tables.events(s, d), attributionTouchTypes,
+      attributionConvType, attributionWindowDays)
 
   /** Same over any (user_id, event_id, event_type, ts) frame. */
   def attributionOn(events: DataFrame, touchTypes: Seq[String],
@@ -1693,8 +1706,10 @@ object Analytics {
     * moments of the same 4dp means. `reps` is the accuracy dial; the
     * per-replicate means are already exact over the full corpus, so
     * modest reps (20) give usable intervals. */
-  def bootstrapCi(s: SparkSession, d: String, reps: Int = 20): DataFrame =
+  def bootstrapCi(s: SparkSession, d: String): DataFrame = {
+    val reps = 20
     bootstrapCiOn(Tables.events(s, d), reps)
+  }
 
   /** Same over any (event_id, event_type, value) frame. */
   def bootstrapCiOn(events: DataFrame, reps: Int): DataFrame = {
@@ -1774,11 +1789,13 @@ object Analytics {
     * One aggregation to group sizes (map-side combinable), one scalar
     * reduction over the GROUPS (cardinality = distinct QI tuples, not
     * rows) — a privacy audit at the cost of a count(*). */
-  def kAnonymity(s: SparkSession, d: String, k: Int = 5): DataFrame =
+  def kAnonymity(s: SparkSession, d: String): DataFrame = {
+    val k = 5
     kAnonymityOn(Tables.events(s, d)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"),
         (col("user_id") % 20).as("uid_bucket"))
       .agg(count(lit(1)).as("sz")), k)
+  }
 
   /** l-diversity privacy gate — [[kAnonymity]]'s second axis: a class
     * can be k-large yet still leak (every member sharing ONE sensitive
@@ -1791,12 +1808,14 @@ object Analytics {
     * distinct rides a (QI, sensitive) pre-aggregation, never a
     * per-class set) + a class-cardinality scalar reduction — the gate
     * costs what the k gate costs. */
-  def lDiversity(s: SparkSession, d: String, l: Int = 3): DataFrame =
+  def lDiversity(s: SparkSession, d: String): DataFrame = {
+    val l = 3
     lDiversityOn(Tables.events(s, d)
       .select(col("event_type"), date_trunc("day", col("ts")).as("day"),
         (col("user_id") % 20).as("uid_bucket"),
         floor(col("value")).cast("long").as("sens")),
       Seq("event_type", "day", "uid_bucket"), "sens", l)
+  }
 
   /** Same over any (QI..., sensitive) row frame. */
   def lDiversityOn(df: DataFrame, qi: Seq[String], sens: String,
@@ -1835,13 +1854,14 @@ object Analytics {
     * grid materializes absent buckets (p_j = 0 rows the EMD needs)
     * via a class × global-bucket cross join — classes × m rows,
     * bounded by QI cardinality, never row-cardinality. */
-  def tCloseness(s: SparkSession, d: String,
-                 tMicro: Long = 200000L): DataFrame =
+  def tCloseness(s: SparkSession, d: String): DataFrame = {
+    val tMicro = 200000L
     tClosenessOn(Tables.events(s, d)
       .select(col("event_type"), date_trunc("day", col("ts")).as("day"),
         (col("user_id") % 20).as("uid_bucket"),
         floor(col("value") / 10.0).cast("long").as("sens")),
       Seq("event_type", "day", "uid_bucket"), "sens", tMicro)
+  }
 
   /** Same over any (QI..., sensitive) row frame. */
   def tClosenessOn(df: DataFrame, qi: Seq[String], sens: String,
@@ -1942,9 +1962,11 @@ object Analytics {
     * aggregation on (user, session) and a TakeOrdered top-N on path
     * counts. Path strings assemble by sorting the collected (rank,
     * type) structs, never relying on collect_list order. */
-  def sessionPaths(s: SparkSession, d: String, gapMin: Int = 2880,
-                   pathLen: Int = 3, topN: Int = 20): DataFrame =
+  def sessionPaths(s: SparkSession, d: String): DataFrame = {
+    val gapMin = 2880
+    val pathLen = 3
     sessionPathsOn(Tables.events(s, d), gapMin, pathLen, topN)
+  }
 
   /** Same over any (user_id, ts, event_id, event_type) frame. */
   def sessionPathsOn(events: DataFrame, gapMin: Int, pathLen: Int,
@@ -1980,7 +2002,7 @@ object Analytics {
     * shuffle rows = events once + distinct grams (≤ |types|³). The
     * (ts, event_id) ordering is total, so the gram stream is
     * deterministic cross-engine. */
-  def eventNgrams(s: SparkSession, d: String, topN: Int = 20): DataFrame =
+  def eventNgrams(s: SparkSession, d: String): DataFrame =
     eventNgramsOn(Tables.events(s, d), topN)
 
   /** Same over any (user_id, ts, event_id, event_type) frame. */
@@ -2101,8 +2123,9 @@ object Analytics {
     * scale while DuckDB raises, an engine-parity trap; IEEE double
     * multiply/divide is bit-identical on both. Ordered by rounded
     * lift with pair tiebreaks under a TakeOrdered top-k. */
-  def marketBasket(s: SparkSession, d: String, minCount: Long = 50,
-                   topN: Int = 20, maxBasket: Int = 32): DataFrame = {
+  def marketBasket(s: SparkSession, d: String): DataFrame = {
+    val minCount = 50L
+    val maxBasket = 32
     val baskets = Tables.lineitem(s, d)
       .join(Tables.part(s, d), col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("basket"), col("p_brand").as("item"))
@@ -2232,8 +2255,8 @@ object Analytics {
     * period — the registry runs WEEKLY so the gate corpus (a ~30-day
     * span) exercises every status including churn/resurrection;
     * monthly is the same code with unit = "month". */
-  def growthAccountingOn(events: DataFrame,
-                         unit: String = "week"): DataFrame = {
+  def growthAccountingOn(events: DataFrame): DataFrame = {
+    val unit = "week"
     val um = events
       .select(col("user_id"), date_trunc(unit, col("ts")).as("m"))
       .distinct()
@@ -2377,8 +2400,9 @@ object Analytics {
     sequentialTestOn(Tables.events(s, d))
 
   /** Same over any (user_id, ts, value) frame. */
-  def sequentialTestOn(events: DataFrame, looks: Int = 5,
-                       cK: Double = 2.04): DataFrame = {
+  def sequentialTestOn(events: DataFrame): DataFrame = {
+    val looks = 5
+    val cK = 2.04
     val x = round(col("value"), 4).cast("decimal(14,4)")
     val base = events.select(
       expr("unix_micros(ts) div 86400000000").as("ed"),
@@ -2556,9 +2580,9 @@ object Analytics {
     * carries only the two nations' lines. customer/supplier join
     * strategy is left to AQE (broadcast while they fit the
     * threshold, shuffle past it — the q5 posture). */
-  def nationVolume(s: SparkSession, d: String,
-                   nationA: String = "NATION_3",
-                   nationB: String = "NATION_8"): DataFrame = {
+  def nationVolume(s: SparkSession, d: String): DataFrame = {
+    val nationA = "NATION_3"
+    val nationB = "NATION_8"
     val n1 = Tables.nation(s, d)
       .select(col("n_nationkey").as("sk"), col("n_name").as("supp_nation"))
     val n2 = Tables.nation(s, d)
@@ -2587,10 +2611,10 @@ object Analytics {
     * to DECIMAL(38,0) before the integral divide (the q_cuped moment-
     * product precedent). part is filtered BEFORE the join and the
     * share nation resolves through the broadcast nation dim. */
-  def marketShare(s: SparkSession, d: String,
-                  regionName: String = "ASIA",
-                  partType: String = "PROMO",
-                  shareNation: String = "NATION_3"): DataFrame = {
+  def marketShare(s: SparkSession, d: String): DataFrame = {
+    val regionName = "ASIA"
+    val partType = "PROMO"
+    val shareNation = "NATION_3"
     val r = Tables.region(s, d).filter(col("r_name") === regionName)
     val n = Tables.nation(s, d)
     val p = Tables.part(s, d).filter(col("p_type") === partType)
@@ -2667,8 +2691,8 @@ object Analytics {
     * come from a self-aggregate of the brand's lines joined back on
     * partkey — the scan prunes on the broadcast part-filter FIRST,
     * so the self-join is brand-cardinality, never full lineitem². */
-  def smallQtyRevenue(s: SparkSession, d: String,
-                      brand: String = "Brand#1"): DataFrame = {
+  def smallQtyRevenue(s: SparkSession, d: String): DataFrame = {
+    val brand = "Brand#1"
     val p = Tables.part(s, d).filter(col("p_brand") === brand)
       .select(col("p_partkey"))
     val li = Tables.lineitem(s, d)
@@ -2763,8 +2787,9 @@ object Analytics {
     * LONG arithmetic. Output ordered (o_totalprice DESC, orderkey)
     * with a top-N cap — o_totalprice is a raw 2dp column, not an
     * aggregate, so publishing it raw is rendering-safe. */
-  def largeOrders(s: SparkSession, d: String, minQty: Long = 250,
-                  topN: Int = 100): DataFrame = {
+  def largeOrders(s: SparkSession, d: String): DataFrame = {
+    val minQty = 250L
+    val topN = 100
     val big = Tables.lineitem(s, d)
       .groupBy(col("l_orderkey"))
       .agg(sum(col("l_quantity").cast("long")).as("sum_qty"))

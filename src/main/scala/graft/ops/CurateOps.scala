@@ -19,8 +19,10 @@ import org.apache.spark.sql.functions._
   */
 object CurateOps {
 
-  def curate(corpus: DataFrame, reference: DataFrame,
-             threshold: Double = 0.8): DataFrame = {
+  /** The decontamination Jaccard threshold of both curation chains. */
+  private val contamThreshold = 0.8
+
+  def curate(corpus: DataFrame, reference: DataFrame): DataFrame = {
     val good = corpus.join(
       TextOps.qualityScoresOn(corpus.select(col("doc_id"), col("text")))
         .filter(col("quality_flag") === "good").select(col("doc_id")),
@@ -37,7 +39,7 @@ object CurateOps {
       .select(col("doc_id"))
       .localCheckpoint(false)
     val deduped = corpus.join(keep, Seq("doc_id"), "left_semi")
-    val contaminated = DedupOps.decontaminate(deduped, reference, threshold)
+    val contaminated = DedupOps.decontaminate(deduped, reference, contamThreshold)
       .select(col("doc_id")).distinct()
     keep.join(contaminated, Seq("doc_id"), "left_anti")
       .select(col("doc_id"))
@@ -61,12 +63,11 @@ object CurateOps {
     * decontamination stage (the heavy shingle join) runs once.
     * Hash equality of the funnel against the oracle proves every
     * stage's survivor SET cross-engine, not just the final one. */
-  def curateFunnel(s: SparkSession, d: String,
-                   budgetTokens: Long = 20000L,
-                   threshold: Double = 0.8): DataFrame = {
+  def curateFunnel(s: SparkSession, d: String): DataFrame = {
+    val budgetTokens = 20000L
     val docs = Tables.documents(s, d)
     curateFunnelOn(docs.filter(col("doc_id") % 2 === 0),
-      docs.filter(col("doc_id") % 2 =!= 0), budgetTokens, threshold)
+      docs.filter(col("doc_id") % 2 =!= 0), budgetTokens, contamThreshold)
   }
 
   /** Same over any (doc_id, text) corpus/reference pair. */
@@ -211,6 +212,11 @@ object CurateOps {
       .orderBy(col("cum_tokens"))
   }
 
+  /** DSIR's hashed feature count and inverse keep fraction, read by
+    * [[dsirSample]] and its oracle. */
+  private val dsirBuckets = 64
+  private val dsirKeepDenom = 4L
+
   /** DSIR — Data Selection via Importance Resampling (Xie et al.
     * 2023, arXiv:2302.03169): re-weight a raw corpus toward a TARGET
     * distribution using hashed n-gram features, then Gumbel-top-k
@@ -235,11 +241,10 @@ object CurateOps {
     * rationals, a boundary hit needs a ~1e-10 coincidence) and
     * weights/scores are then exact BIGINT micro-unit sums, published
     * as-is (`w6`, `score6` — no double forms after the quantize). */
-  def dsirSample(s: SparkSession, d: String, buckets: Int = 64,
-                 keepDenom: Long = 4L): DataFrame =
+  def dsirSample(s: SparkSession, d: String): DataFrame =
     dsirOn(Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("text")),
-      col("lang") === "en", buckets, keepDenom)
+      col("lang") === "en", dsirBuckets, dsirKeepDenom)
 
   /** Same over any (doc_id, lang, text) frame; `target` is the
     * boolean membership predicate of the target distribution,
@@ -321,11 +326,13 @@ object CurateOps {
     * (the ccnetBuckets pattern — never a hot-source window).
     * Selection within a source is coin order with a doc_id
     * tiebreak: a total order, replayable verbatim. */
-  def mixTemperature(s: SparkSession, d: String,
-                     keepDenom: Long = 2L): DataFrame =
+  def mixTemperature(s: SparkSession, d: String): DataFrame =
     mixTemperatureOn(
       Tables.documents(s, d).select(col("doc_id"), col("source")),
-      keepDenom)
+      mixKeepDenom)
+
+  /** The inverse keep fraction of [[mixTemperature]] and its oracle. */
+  private val mixKeepDenom = 2L
 
   /** Same over any (doc_id, source) frame. The overall target is
     * ceil(n/keepDenom); each source's quota is FLOOR-apportioned
@@ -369,6 +376,11 @@ object CurateOps {
       .orderBy(col("doc_id"))
   }
 
+  /** The shard count and hash pepper of [[shardExport]] and its
+    * oracle. */
+  private val shardCount = 8
+  private val pepper = "shard"
+
   /** SHARD EXPORT — the last step of every training-data pipeline:
     * assign each document to one of `nShards` balanced-in-expectation
     * shards and give it a position inside its shard under a
@@ -385,8 +397,7 @@ object CurateOps {
     * partitions are corpus/nShards sized; pick nShards to the
     * cluster (thousands at 100 TB) and the window never sees a
     * skewed key (md5 is uniform). */
-  def shardExport(docs: DataFrame, nShards: Int = 8,
-                  pepper: String = "shard"): DataFrame = {
+  def shardExport(docs: DataFrame, nShards: Int = shardCount): DataFrame = {
     val key = md5(concat(col("doc_id").cast("string"), lit("_" + pepper)))
     val coined = Tables.spread(docs)
       .select(col("doc_id"), key.as("k"))
@@ -401,17 +412,20 @@ object CurateOps {
 
   /** DuckDB replica of [[shardExport]]: same md5 coin, same 60-bit
     * modulus, same (key, doc_id) order. */
-  private[graft] def shardExportOracleSql(nShards: Int = 8,
-                                          pepper: String = "shard"): String =
+  private[graft] def shardExportOracleSql: String =
     s"""WITH k AS (SELECT doc_id,
        |    md5(doc_id::VARCHAR || '_$pepper') AS k FROM documents),
        |s AS (SELECT doc_id, k,
-       |    CAST(('0x' || substr(k, 1, 15))::UBIGINT % $nShards
+       |    CAST(('0x' || substr(k, 1, 15))::UBIGINT % $shardCount
        |      AS BIGINT) AS shard FROM k)
        |SELECT doc_id, shard,
        |  CAST(row_number() OVER (PARTITION BY shard
        |    ORDER BY k, doc_id) AS BIGINT) AS pos
        |FROM s ORDER BY shard, pos""".stripMargin
+
+  /** The sequence budget (tokens) of every pack face and oracle; the
+    * tokenizer-grain ones train [[TextOps.bpeRounds]] merge rounds. */
+  private val packBudget = 512
 
   /** SEQUENCE PACKING, document grain — the last step before an LLM
     * training run tokenizes its corpus (the GPT-style
@@ -435,9 +449,8 @@ object CurateOps {
     * (spec-pinned: this map's sequence range per doc equals exactly
     * the set of ctx_ids text_pack emits for it at the same budget).
     * [[packStats]] is the third grain (per-sequence audit). */
-  def packSequences(s: SparkSession, d: String,
-                    budget: Int = 512): DataFrame =
-    packSequencesOn(Tables.documents(s, d), budget)
+  def packSequences(s: SparkSession, d: String): DataFrame =
+    packSequencesOn(Tables.documents(s, d), packBudget)
 
   /** Same over any (doc_id, text) frame. */
   def packSequencesOn(docs: DataFrame, budget: Int): DataFrame = {
@@ -478,9 +491,8 @@ object CurateOps {
     * exactly what this face makes checkable (spec pins rounds = 0 ≡
     * the whitespace map on the same half; the oracle replays the
     * full train-and-apply chain under the cumsum). */
-  def packSequencesBpe(s: SparkSession, d: String, budget: Int = 512,
-                       rounds: Int = 3): DataFrame =
-    packSequencesBpeOn(Tables.documents(s, d), budget, rounds)
+  def packSequencesBpe(s: SparkSession, d: String): DataFrame =
+    packSequencesBpeOn(Tables.documents(s, d), packBudget, TextOps.bpeRounds)
 
   /** Same over any (doc_id, text) frame. */
   def packSequencesBpeOn(docs: DataFrame, budget: Int,
@@ -494,9 +506,8 @@ object CurateOps {
     * over [[packSequencesBpe]]'s map: same explode-and-clip integer
     * arithmetic, so the sequence fills provably tile the held-out
     * half's post-BPE token count. */
-  def packStatsBpe(s: SparkSession, d: String, budget: Int = 512,
-                   rounds: Int = 3): DataFrame =
-    packStatsFrom(packSequencesBpe(s, d, budget, rounds), budget)
+  def packStatsBpe(s: SparkSession, d: String): DataFrame =
+    packStatsFrom(packSequencesBpe(s, d), packBudget)
 
   /** The pack map aggregated to SEQUENCE grain — the table a training
     * job reads to size shards and audit fill: per `budget`-token
@@ -508,7 +519,8 @@ object CurateOps {
     * sequence window — pure integer arithmetic on [[packSequencesOn]]
     * values, so the sequence totals provably tile the corpus token
     * count. */
-  def packStats(s: SparkSession, d: String, budget: Int = 512): DataFrame =
+  def packStats(s: SparkSession, d: String,
+                budget: Int = packBudget): DataFrame =
     packStatsFrom(packSequencesOn(Tables.documents(s, d), budget), budget)
 
   /** The sequence-grain aggregation over ANY packing map (whitespace
@@ -598,27 +610,25 @@ object CurateOps {
   /** DuckDB replica of [[packSequencesOn]]: whitespace sizing +
     * cumsum + doc-grain tail (all shared builders — the four pack
     * oracles differ ONLY in which sizing/tail pair they compose). */
-  private[graft] def packSequencesOracleSql(budget: Int = 512): String =
-    wsSizingCte + packCumsumCte + packMapTail(budget)
+  private[graft] def packSequencesOracleSql: String =
+    wsSizingCte + packCumsumCte + packMapTail(packBudget)
 
   /** DuckDB replica of [[packStats]]. */
-  private[graft] def packStatsOracleSql(budget: Int = 512): String =
-    wsSizingCte + packCumsumCte + packStatsTail(budget)
+  private[graft] def packStatsOracleSql: String =
+    wsSizingCte + packCumsumCte + packStatsTail(packBudget)
 
   /** DuckDB replica of [[packSequencesBpe]]: tokenizer sizing +
     * the same shared cumsum and doc-grain tail. */
-  private[graft] def packSequencesBpeOracleSql(
-      budget: Int = 512, rounds: Int = 3): String =
-    bpeSizingCte(rounds) + packCumsumCte + packMapTail(budget)
+  private[graft] def packSequencesBpeOracleSql: String =
+    bpeSizingCte(TextOps.bpeRounds) + packCumsumCte + packMapTail(packBudget)
 
   /** DuckDB replica of [[packStatsBpe]]. */
-  private[graft] def packStatsBpeOracleSql(
-      budget: Int = 512, rounds: Int = 3): String =
-    bpeSizingCte(rounds) + packCumsumCte + packStatsTail(budget)
+  private[graft] def packStatsBpeOracleSql: String =
+    bpeSizingCte(TextOps.bpeRounds) + packCumsumCte + packStatsTail(packBudget)
 
   /** DuckDB replica of [[mixTemperature]]: same floor(1e6·√n)
     * weights, HUGEINT quota arithmetic, md5 coin order. */
-  private[graft] def mixTemperatureOracleSql(keepDenom: Long = 2L): String =
+  private[graft] def mixTemperatureOracleSql: String =
     s"""WITH c AS (SELECT source, count(*) AS n_s FROM documents
        |           GROUP BY 1),
        |w AS (SELECT source, n_s,
@@ -626,7 +636,7 @@ object CurateOps {
        |t AS (SELECT CAST(sum(w6) AS BIGINT) AS tw,
        |    CAST(sum(n_s) AS BIGINT) AS total FROM w),
        |q AS (SELECT source, n_s,
-       |    least(CAST(CAST((total + ${keepDenom - 1}) // $keepDenom
+       |    least(CAST(CAST((total + ${mixKeepDenom - 1}) // $mixKeepDenom
        |        AS HUGEINT) * w6 // tw AS BIGINT), n_s) AS quota
        |  FROM w, t),
        |u AS (SELECT doc_id, source,
@@ -643,10 +653,9 @@ object CurateOps {
     * 1e-6 floor quantization, Gumbel coin, and ceil cutoff; sums cast
     * to BIGINT so pandas never sees a HUGEINT (the rendering class
     * the gate's dtype check exists for). */
-  private[graft] def dsirOracleSql(buckets: Int = 64,
-                                   keepDenom: Long = 4L): String =
+  private[graft] def dsirOracleSql: String =
     s"""WITH tok AS (SELECT doc_id, lang = 'en' AS t,
-       |    CAST(('0x' || substr(md5(term), 1, 15))::UBIGINT % $buckets
+       |    CAST(('0x' || substr(md5(term), 1, 15))::UBIGINT % $dsirBuckets
        |      AS BIGINT) AS bkt
        |  FROM (SELECT doc_id, lang,
        |      unnest(string_split_regex(trim(text), '\\s+')) AS term
@@ -656,8 +665,8 @@ object CurateOps {
        |tt AS (SELECT CAST(sum(tb) AS BIGINT) AS tt,
        |    CAST(sum(rb) AS BIGINT) AS rt FROM c),
        |lam AS (SELECT bkt, CAST(floor(1000000.0 * ln(
-       |    ((tb + 1) * 1.0 / (tt.tt + $buckets)) /
-       |    ((rb + 1) * 1.0 / (tt.rt + $buckets)))) AS BIGINT) AS l6
+       |    ((tb + 1) * 1.0 / (tt.tt + $dsirBuckets)) /
+       |    ((rb + 1) * 1.0 / (tt.rt + $dsirBuckets)))) AS BIGINT) AS l6
        |  FROM c, tt),
        |w AS (SELECT doc_id, CAST(sum(c * l6) AS BIGINT) AS w6
        |  FROM (SELECT doc_id, bkt, count(*) AS c FROM tok GROUP BY 1, 2)
@@ -671,6 +680,6 @@ object CurateOps {
        |    OVER (ORDER BY score6 DESC, doc_id) AS rank FROM sc)
        |SELECT r.doc_id, d.lang, r.rank, r.w6, r.score6
        |FROM r JOIN documents d USING (doc_id), n
-       |WHERE r.rank <= (n.n + ${keepDenom - 1}) // $keepDenom
+       |WHERE r.rank <= (n.n + ${dsirKeepDenom - 1}) // $dsirKeepDenom
        |ORDER BY r.doc_id""".stripMargin
 }

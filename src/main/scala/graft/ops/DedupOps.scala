@@ -87,12 +87,15 @@ object DedupOps {
 
   // ---- shared text shingling ------------------------------------------
 
+  /** The shingle length (tokens) of the shared shingling. */
+  private val shingleK = 3
+
   /** (doc_id, hs, n): each doc's distinct k-token shingle hashes as a
     * sorted array — computed entirely inside the scan projection (no
     * shuffle), and the base for signatures, prefixes, and
     * verification alike. */
-  private[graft] def docShingleSets(docs: DataFrame, k: Int = 3): DataFrame =
-    docShingleSetsCarry(docs, k, Nil)
+  private[graft] def docShingleSets(docs: DataFrame): DataFrame =
+    docShingleSetsCarry(docs, shingleK, Nil)
 
   /** docShingleSets carrying extra per-doc columns through the scan
     * projection (e.g. a corpus-side tag) — same single-pass shape. */
@@ -123,12 +126,12 @@ object DedupOps {
     * lambda bodies re-evaluate their subtrees per element). Per-row,
     * no shuffle: signatures come out of the scan projection, with no
     * aggregation. */
-  private[graft] def shingleHashesExpr(t: Column, k: Int = 3): Column = {
+  private[graft] def shingleHashesExpr(t: Column): Column = {
     val n = size(t)
-    val starts = when(n >= k, sequence(lit(1), n - (k - 1)))
+    val starts = when(n >= shingleK, sequence(lit(1), n - (shingleK - 1)))
       .otherwise(array().cast("array<int>"))
     array_sort(array_distinct(
-      transform(starts, i => xxhash64(concat_ws(" ", slice(t, i, lit(k)))))))
+      transform(starts, i => xxhash64(concat_ws(" ", slice(t, i, lit(shingleK)))))))
   }
 
   /** The banding step shared by every MinHash face: band b's
@@ -200,14 +203,20 @@ object DedupOps {
     sh.groupBy((Seq("doc_id") ++ carry).map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
+  /** The near-duplicate Jaccard threshold and the MinHash banding
+    * (64 permutations in 16 bands) of the MinHash, incremental-index
+    * and decontamination faces. */
+  private val jaccardThreshold = 0.8
+  private val numPerm = 64
+  private val numBands = 16
+
   /** Candidate pairs whose exact Jaccard ≥ threshold, surfaced by
     * banded MinHash LSH (numPerm=64, 16 bands × 4 rows ⇒ pairs with
     * J≈0.8+ are caught with prob ≥ 1-(1-0.8⁴)¹⁶ ≈ 0.9994). */
   def minhashLsh(s: SparkSession, d: String,
-                 threshold: Double = 0.8,
-                 numPerm: Int = 64, bands: Int = 16,
                  maxBucket: Int = 1000): DataFrame =
-    minhashLshOn(Tables.documents(s, d), threshold, numPerm, bands, maxBucket)
+    minhashLshOn(Tables.documents(s, d), jaccardThreshold, numPerm, numBands,
+      maxBucket)
 
   /** Same over any (doc_id, text) frame. */
   def minhashLshOn(docs: DataFrame,
@@ -292,8 +301,6 @@ object DedupOps {
     * knowing nothing of the split, so any pair the fold misses (or
     * invents) breaks the cross-engine hash. */
   def incrementalIndex(s: SparkSession, d: String,
-                       threshold: Double = 0.8,
-                       numPerm: Int = 64, bands: Int = 16,
                        maxBucket: Int = Int.MaxValue): DataFrame = {
     val docs = Tables.documents(s, d)
     // the daily split: every 4th doc is "today's crawl"
@@ -304,10 +311,10 @@ object DedupOps {
     // ONE checkpointed signature/banding pass over history serve both the
     // index and the pair table
     val hSets = docShingleSets(history).localCheckpoint(false)
-    val hIndex = bandIndexOnSets(hSets, numPerm, bands).localCheckpoint(false)
+    val hIndex = bandIndexOnSets(hSets, numPerm, numBands).localCheckpoint(false)
     incrementalFold(hIndex,
-      lshPairsFromIndex(hIndex, hSets, threshold, maxBucket),
-      history, delta, threshold, numPerm, bands, maxBucket)
+      lshPairsFromIndex(hIndex, hSets, jaccardThreshold, maxBucket),
+      history, delta, jaccardThreshold, numPerm, numBands, maxBucket)
   }
 
   /** [[incrementalIndex]] with the persisted state crossing a REAL
@@ -324,41 +331,47 @@ object DedupOps {
     * misses or invents breaks the cross-engine hash. Parquet-reading
     * the index also un-pins its band-key partitioning, so the fold's
     * (band, bsig) joins re-shuffle from real files — the honest cost
-    * an index owner pays daily. State lands under `stateDir`; when
-    * none is given, a fresh per-invocation temp directory (deleted
-    * on JVM exit) — a FIXED default path would let two concurrent
-    * runs on the same corpus overwrite each other's state mid-read.
-    * A production owner passes the durable state path explicitly. */
+    * an index owner pays daily. State lands under `stateDir`, and
+    * the returned fold reads it lazily. When none is given, the
+    * state goes to a fresh per-invocation temp directory (a FIXED
+    * default path would let two concurrent runs on the same corpus
+    * overwrite each other's state mid-read); the fold is then
+    * materialized by an eager local checkpoint and the directory
+    * deleted before returning, so a long-lived JVM keeps no state
+    * directory per call. A production owner passes the durable state
+    * path explicitly. */
   def incrementalIndexPersisted(s: SparkSession, d: String,
-                                threshold: Double = 0.8,
-                                numPerm: Int = 64, bands: Int = 16,
-                                stateDir: String = "",
-                                maxBucket: Int = Int.MaxValue): DataFrame = {
+                                stateDir: String = ""): DataFrame =
+    if (stateDir.nonEmpty) persistedFold(s, d, stateDir)
+    else {
+      // the eager checkpoint materializes the fold, so nothing reads
+      // the state once its per-call directory is deleted
+      val tmp = graft.TempDirs.create("graft_inc_state_")
+      try persistedFold(s, d, tmp.toString).localCheckpoint(true)
+      finally graft.TempDirs.delete(tmp)
+    }
+
+  /** [[incrementalIndexPersisted]]'s fold over the state it writes to
+    * `dir`; the returned frame reads that state lazily. */
+  private def persistedFold(s: SparkSession, d: String,
+                            dir: String): DataFrame = {
+    val maxBucket = Int.MaxValue
     val docs = Tables.documents(s, d)
     val history = docs.filter(col("doc_id") % 4 =!= 0)
     val delta = docs.filter(col("doc_id") % 4 === 0)
-    // the returned fold READS the parquet state lazily, so the dir
-    // must outlive this call; the shared single-hook registry
-    // (TempDirs) reclaims it at JVM exit without accumulating one
-    // shutdown hook per invocation (ADVICE r15). A caller that
-    // materializes the result and wants the disk back sooner passes
-    // its own stateDir and deletes it (the dailyE2e posture).
-    val dir =
-      if (stateDir.nonEmpty) stateDir
-      else graft.TempDirs.create("graft_inc_state_").toString
     val hSets = docShingleSets(history).localCheckpoint(false)
-    val hIndex = bandIndexOnSets(hSets, numPerm, bands).localCheckpoint(false)
+    val hIndex = bandIndexOnSets(hSets, numPerm, numBands).localCheckpoint(false)
     hIndex.write.mode("overwrite").partitionBy("band")
       .parquet(s"$dir/band_index.parquet")
-    lshPairsFromIndex(hIndex, hSets, threshold, maxBucket)
+    lshPairsFromIndex(hIndex, hSets, jaccardThreshold, maxBucket)
       .write.mode("overwrite").parquet(s"$dir/pairs.parquet")
     // the fold sees ONLY the read-back state
     val rIndex = s.read.parquet(s"$dir/band_index.parquet")
       .select(col("doc_id"), col("band"), col("bsig"))
     val rPairs = s.read.parquet(s"$dir/pairs.parquet")
       .select(col("id1"), col("id2"), col("jaccard"))
-    incrementalFold(rIndex, rPairs, history, delta, threshold,
-      numPerm, bands, maxBucket)
+    incrementalFold(rIndex, rPairs, history, delta, jaccardThreshold,
+      numPerm, numBands, maxBucket)
   }
 
   /** The split-agnostic full-corpus near-dup recompute in DuckDB —
@@ -367,8 +380,7 @@ object DedupOps {
     * Jaccard over ALL qualifying pairs at `threshold`, knowing
     * nothing of any history/delta split or persisted state, so every
     * fold face must reproduce it pair for pair. */
-  private[graft] def minhashRecomputeOracleSql(
-      threshold: Double = 0.8): String =
+  private[graft] def minhashRecomputeOracleSql: String =
     s"""WITH tok AS (SELECT doc_id, string_split(trim(text), ' ') AS t
        |             FROM documents),
        |sh AS (SELECT DISTINCT doc_id,
@@ -383,7 +395,7 @@ object DedupOps {
        |SELECT id1, id2,
        |  round(common * 1.0 / (x.n + y.n - common), 4) AS jaccard
        |FROM pairs JOIN sz x ON x.doc_id = id1 JOIN sz y ON y.doc_id = id2
-       |WHERE round(common * 1.0 / (x.n + y.n - common), 4) >= $threshold
+       |WHERE round(common * 1.0 / (x.n + y.n - common), 4) >= $jaccardThreshold
        |ORDER BY id1, id2""".stripMargin
 
   /** The fold itself — see [[incrementalIndex]]. `histDocs` is used
@@ -529,9 +541,8 @@ object DedupOps {
     * — so a corpus document colliding with a hot reference bucket is
     * still flagged, while no bucket ever goes quadratic. */
   def decontaminate(corpus: DataFrame, reference: DataFrame,
-                    threshold: Double = 0.8,
-                    numPerm: Int = 64, bands: Int = 16,
-                    maxBucket: Int = 1000): DataFrame = {
+                    threshold: Double = jaccardThreshold): DataFrame = {
+    val maxBucket = 1000
     // ONE shared pipeline over the side-tagged union: every document
     // is shingled, signed, and band-ranked exactly once (doc ids must
     // be disjoint across the two corpora — they key the verify join).
@@ -542,7 +553,7 @@ object DedupOps {
     val sig = minhashSignatures(
       sets.select(col("doc_id"), col("__ref"), explode(col("hs")).as("h")),
       numPerm, carry = Seq("__ref"))
-    val bandSigs = bandCols(numPerm, bands, j => col(s"mh$j"))
+    val bandSigs = bandCols(numPerm, numBands, j => col(s"mh$j"))
     // caps are per (bucket, side): the corpus cap must not depend on
     // how many reference docs share the bucket and vice versa
     val w = Window.partitionBy(col("band"), col("bsig"), col("__ref"))
@@ -600,45 +611,28 @@ object DedupOps {
     * shuffles of the corpus, no signature aggregation, no corpus
     * exchange at any width. The only shuffles are output-sized (the
     * final distinct over flagged pairs, which collapses multi-band
-    * collisions) plus, if a finite cap is requested, one
-    * reference-sized ranking window.
+    * collisions).
     *
-    * The cap default is UNCAPPED (the reference is tiny by this
+    * The band index is UNCAPPED (the reference is tiny by this
     * operator's contract, so no bucket needs protection), which makes
-    * the verified output exactly [[decontaminate]]'s. Opting into a
-    * finite `maxBucket` trades recall for hot-bucket protection
-    * HARDER than the symmetric operator does: capped-out reference
-    * rows are dropped with NO overflow-representative candidates
-    * (emitting them map-side would need the corpus bucket minimum,
-    * i.e. a corpus shuffle — the thing this variant exists to avoid),
-    * so a corpus doc whose only colliding reference docs rank past
-    * the cap in every shared band is silently not flagged. If the
-    * reference is big enough to overflow buckets, use
-    * [[decontaminate]]. */
-  def decontaminateBroadcast(corpus: DataFrame, reference: DataFrame,
-                             threshold: Double = 0.8,
-                             numPerm: Int = 64, bands: Int = 16,
-                             maxBucket: Int = Int.MaxValue): DataFrame = {
+    * the verified output exactly [[decontaminate]]'s. A cap here
+    * could emit no overflow-representative candidates (that needs
+    * the corpus bucket minimum, i.e. a corpus shuffle — the thing
+    * this variant exists to avoid), so if the reference is big enough
+    * to overflow buckets, use [[decontaminate]]. */
+  def decontaminateBroadcast(corpus: DataFrame,
+                             reference: DataFrame): DataFrame = {
     def staged(df: DataFrame): DataFrame = graft.Tables.spread(df)
       .select(col("doc_id"), TextOps.toks(col("text")).as("__t"))
       .select(col("doc_id"), shingleHashesExpr(col("__t")).as("hs"))
     val ref = staged(reference)
     val refSets = ref.select(col("doc_id").as("ref_id"),
       col("hs").as("ref_hs"), size(col("hs")).as("ref_n"))
-    val bandIndex0 = ref.select(col("doc_id").as("ref_id"),
-      posexplode(array(bandSigsExpr(col("hs"), numPerm, bands): _*))
+    val bandIndex = ref.select(col("doc_id").as("ref_id"),
+      posexplode(array(bandSigsExpr(col("hs"), numPerm, numBands): _*))
         .as(Seq("band", "bsig")))
-    // uncapped (the default): no ranking window, the index is a pure
-    // projection of the reference scan
-    val bandIndex =
-      if (maxBucket == Int.MaxValue) bandIndex0
-      else {
-        val w = Window.partitionBy(col("band"), col("bsig")).orderBy(col("ref_id"))
-        bandIndex0.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") <= maxBucket).drop("__rn")
-      }
     val cor = staged(corpus).select(col("doc_id"), col("hs"),
-      posexplode(array(bandSigsExpr(col("hs"), numPerm, bands): _*))
+      posexplode(array(bandSigsExpr(col("hs"), numPerm, numBands): _*))
         .as(Seq("band", "bsig")))
     cor
       .join(broadcast(bandIndex), Seq("band", "bsig"))
@@ -647,7 +641,7 @@ object DedupOps {
         graft.functions.SetExprs.sortedIntersectCount(col("hs"), col("ref_hs")))
       .withColumn("jaccard", round(col("common").cast("double") /
         (size(col("hs")) + col("ref_n") - col("common")), 4))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= jaccardThreshold)
       .select(col("doc_id"), col("ref_id"), col("jaccard"))
       .distinct()
       .orderBy(col("doc_id"), col("ref_id"))
@@ -686,8 +680,6 @@ object DedupOps {
     * tier).
     */
   def decontaminateBloom(corpus: DataFrame, reference: DataFrame,
-                         threshold: Double = 0.8,
-                         numPerm: Int = 64, bands: Int = 16,
                          fpp: Double = 0.01): DataFrame = {
     def staged(df: DataFrame): DataFrame = Tables.spread(df)
       .select(col("doc_id"), TextOps.toks(col("text")).as("__t"))
@@ -695,16 +687,16 @@ object DedupOps {
     val ref = staged(reference).localCheckpoint(false)
     def bandKey: Column = xxhash64(col("band"), col("bsig"))
     val refBands = ref.select(col("doc_id").as("ref_id"),
-      posexplode(array(bandSigsExpr(col("hs"), numPerm, bands): _*))
+      posexplode(array(bandSigsExpr(col("hs"), numPerm, numBands): _*))
         .as(Seq("band", "bsig")))
     // posexplode of a fixed-size array: exactly bands keys per ref doc
-    val expected = math.max(1L, ref.count()) * bands
+    val expected = math.max(1L, ref.count()) * numBands
     // the codegen'd probe: a pure row-local predicate, so Catalyst
     // keeps it inside the corpus scan stage below the join
     val mightContain = graft.functions.BloomProbe.mightContain(
       refBands.select(bandKey.as("k")), "k", expected, fpp, bandKey)
     val corBands = staged(corpus).select(col("doc_id"), col("hs"),
-      posexplode(array(bandSigsExpr(col("hs"), numPerm, bands): _*))
+      posexplode(array(bandSigsExpr(col("hs"), numPerm, numBands): _*))
         .as(Seq("band", "bsig")))
       .filter(mightContain)
     val refSets = ref.select(col("doc_id").as("ref_id"),
@@ -722,10 +714,14 @@ object DedupOps {
         graft.functions.SetExprs.sortedIntersectCount(col("hs"), col("ref_hs")))
       .withColumn("jaccard", round(col("common").cast("double") /
         (size(col("hs")) + col("ref_n") - col("common")), 4))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= jaccardThreshold)
       .select(col("doc_id"), col("ref_id"), col("jaccard"))
       .orderBy(col("doc_id"), col("ref_id"))
   }
+
+  /** The posting cap of the containment and n-gram Jaccard faces;
+    * 0 keeps them exact. */
+  private val maxDf = 0
 
   /** Asymmetric n-gram CONTAINMENT decontamination: flag (corpus doc
     * A, reference item R) whenever |shingles(A) ∩ shingles(R)| / |shingles(R)|
@@ -755,9 +751,9 @@ object DedupOps {
     * self-join operators there is no overflow-representative rescue
     * across two tables, so a capped run is honestly APPROXIMATE
     * (recall loss on pairs whose every shared prefix shingle is hot) —
-    * the default 0 keeps the operator exact. */
-  def containment(s: SparkSession, d: String, threshold: Double = 0.6,
-                  maxDf: Int = 0): DataFrame = {
+    * this face runs with `maxDf` = 0, exact. */
+  def containment(s: SparkSession, d: String): DataFrame = {
+    val threshold = 0.6
     val docs = Tables.documents(s, d)
     containmentOn(docs.filter(col("doc_id") % 2 === 0),
       docs.filter(col("doc_id") % 2 =!= 0), threshold, maxDf)
@@ -904,8 +900,8 @@ object DedupOps {
     * only and fail verification against a correct engine — exactly
     * the completeness this face exists to prove. */
   def simhashPairsCheckedOn(docs: DataFrame, maxHamming: Int = 7,
-                            bands: Int = 4, maxBucket: Int = Int.MaxValue,
-                            threshold: Double = 0.8): DataFrame = {
+                            bands: Int = 4,
+                            maxBucket: Int = Int.MaxValue): DataFrame = {
     val sigBits = 60
     val tokHash = (tok: Column) =>
       conv(substring(md5(tok), 1, 15), 16, 10).cast("long")
@@ -931,7 +927,7 @@ object DedupOps {
       .select(col("doc_id"), sigFromHashes.as("sig"), col("hs"))
       .withColumn("n", size(col("hs")))
       .localCheckpoint(false)
-    simhashCore(staged, sigBits, maxHamming, bands, maxBucket, threshold)
+    simhashCore(staged, sigBits, maxHamming, bands, maxBucket, jaccardThreshold)
   }
 
   /** The checked faces' DuckDB oracle, parameterized by the hamming
@@ -1063,8 +1059,8 @@ object DedupOps {
     * sorted per-doc shingle array — zero extra shuffles — and only
     * those prefix postings are self-joined, with a length filter
     * (t·max ≤ min) ahead of exact set verification. */
-  def ngramJaccard(s: SparkSession, d: String, threshold: Double = 0.8,
-                   maxDf: Int = 0): DataFrame =
+  def ngramJaccard(s: SparkSession, d: String,
+                   threshold: Double = jaccardThreshold): DataFrame =
     ngramJaccardOn(Tables.documents(s, d), threshold, maxDf)
 
   /** Same over any (doc_id, text) frame. `maxDf` > 0 caps the posting
@@ -1159,12 +1155,13 @@ object DedupOps {
     * linearly with n, the one measured super-linear scaling in the
     * r7 SCALING run. The count behind it is one metadata-cheap
     * count(*) job, paid once before the bucketing plan is built. */
-  def embeddingPairsLsh(s: SparkSession, d: String,
-                        threshold: Double = 0.9, nBits: Int = 0,
-                        nTables: Int = 4, maxBucket: Int = 1000): DataFrame =
+  def embeddingPairsLsh(s: SparkSession, d: String, threshold: Double = 0.9,
+                        nBits: Int = 0, nTables: Int = 4): DataFrame = {
+    val maxBucket = 1000
     embeddingPairsLshOn(
       Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
       threshold, nBits, nTables, maxBucket)
+  }
 
   /** Same over any (vec_id, embedding) frame. */
   def embeddingPairsLshOn(emb: DataFrame, threshold: Double = 0.9,
@@ -1200,6 +1197,12 @@ object DedupOps {
 
   // ---- Semantic dedup (SemDeDup) ---------------------------------------
 
+  /** SemDeDup's pruning cosine (1e-4 units), k-means rounds and
+    * vectors per cluster, read by [[semanticDedup]] and its oracle. */
+  private val semTauMicro4 = 2000L
+  private val semIters = 2
+  private val semCell = 256L
+
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
     * embedding space, then prune semantic duplicates WITHIN each
     * cluster — pairs whose cosine clears `tau` are redundant
@@ -1233,11 +1236,11 @@ object DedupOps {
     * the sf1 candidate volume), and the many-cluster assignment is
     * [[MlOps.kmeansAssignArr]]'s broadcast-centroid row-local
     * argmin. */
-  def semanticDedup(s: SparkSession, d: String, tauMicro4: Long = 2000L,
-                    iters: Int = 2, cell: Long = 256L): DataFrame =
+  def semanticDedup(s: SparkSession, d: String,
+                    tauMicro4: Long = semTauMicro4): DataFrame =
     semanticDedupOn(
       Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-      tauMicro4, iters, cell)
+      tauMicro4, semIters, semCell)
 
   /** Same over any (vec_id, embedding) frame. `tauMicro4` is the
     * cosine threshold in 1e-4 units (2000 = 0.20). Seeding contract
@@ -1296,11 +1299,9 @@ object DedupOps {
     * shifted 1e-6 integer coordinates, exactly kmeansAssignArr), then
     * in-cluster pairs gated by the same HUGEINT cross-multiplication.
     */
-  private[graft] def semanticDedupOracleSql(tauMicro4: Long = 2000L,
-                                            iters: Int = 2,
-                                            cell: Long = 256L,
-                                            dims: Int = 64): String = {
-    val rounds = (1 to iters).map { r =>
+  private[graft] def semanticDedupOracleSql: String = {
+    val dims = 64
+    val rounds = (1 to semIters).map { r =>
       s"""s$r AS (SELECT v.vec_id, c.cluster,
          |    sum((v.v6 - c.c6) * (v.v6 - c.c6)) AS d2
          |  FROM v JOIN c${r - 1} c ON v.dim = c.dim GROUP BY 1, 2),
@@ -1310,8 +1311,8 @@ object DedupOps {
          |c$r AS (SELECT a.cluster, v.dim, sum(v.v6) // count(*) AS c6
          |  FROM v JOIN a$r a ON v.vec_id = a.vec_id GROUP BY 1, 2),""".stripMargin
     }.mkString("\n")
-    val f = iters + 1
-    s"""WITH p AS (SELECT greatest(4, CAST(ceil(count(*) / $cell.0)
+    val f = semIters + 1
+    s"""WITH p AS (SELECT greatest(4, CAST(ceil(count(*) / $semCell.0)
        |    AS BIGINT)) AS k FROM embeddings),
        |dims AS (SELECT unnest(range(1, ${dims + 1})) AS dim),
        |v AS (SELECT vec_id, dim,
@@ -1323,7 +1324,7 @@ object DedupOps {
        |$rounds
        |s$f AS (SELECT v.vec_id, c.cluster,
        |    sum((v.v6 - c.c6) * (v.v6 - c.c6)) AS d2
-       |  FROM v JOIN c$iters c ON v.dim = c.dim GROUP BY 1, 2),
+       |  FROM v JOIN c$semIters c ON v.dim = c.dim GROUP BY 1, 2),
        |asg AS (SELECT vec_id, cluster FROM (SELECT *, row_number()
        |    OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rk
        |    FROM s$f) WHERE rk = 1),
@@ -1340,7 +1341,7 @@ object DedupOps {
        |  JOIN nrm ni ON ni.vec_id = pr.i
        |  JOIN nrm nj ON nj.vec_id = pr.j
        |  WHERE dot > 0 AND CAST(dot AS HUGEINT) * dot * 100000000
-       |    >= CAST(${tauMicro4 * tauMicro4} AS HUGEINT) * ni.nn * nj.nn
+       |    >= CAST(${semTauMicro4 * semTauMicro4} AS HUGEINT) * ni.nn * nj.nn
        |  GROUP BY 1)
        |SELECT a.vec_id, a.cluster,
        |  coalesce(sh.n_dups, 0) AS n_dups, sh.i IS NULL AS kept
@@ -1510,6 +1511,9 @@ object DedupOps {
       .orderBy(col("doc_id"))
   }
 
+  /** The n-gram length (words) of the cross-corpus span faces. */
+  private val spanN = 10
+
   /** The CUT face of cross-corpus decontamination — the action
     * [[decontaminateSpans]]'s report drives, and the cross-corpus
     * analog of [[trimDupSpans]]: rebuild each corpus document WITHOUT
@@ -1528,25 +1532,24 @@ object DedupOps {
     * fold. At a tiny reference the semi join's right side broadcasts
     * (the decontaminateBroadcast regime falls out of AQE for free —
     * the gram-key frame is reference-sized). */
-  def decontaminateCut(corpus: DataFrame, reference: DataFrame,
-                       n: Int = 10): DataFrame = {
+  def decontaminateCut(corpus: DataFrame, reference: DataFrame): DataFrame = {
     def words(docs: DataFrame): DataFrame =
       Tables.spread(docs).select(col("doc_id"),
         split(col("text"), " ").as("ws"))
     val base = words(corpus).localCheckpoint(false)
-    val cg = base.filter(size(col("ws")) >= n)
+    val cg = base.filter(size(col("ws")) >= spanN)
       .select(col("doc_id"), posexplode(transform(
-        sequence(lit(0), size(col("ws")) - n),
-        i => xxhash64(concat_ws(" ", slice(col("ws"), i + 1, lit(n))))))
+        sequence(lit(0), size(col("ws")) - spanN),
+        i => xxhash64(concat_ws(" ", slice(col("ws"), i + 1, lit(spanN))))))
         .as(Seq("pos", "g")))
-    val rg = words(reference).filter(size(col("ws")) >= n)
+    val rg = words(reference).filter(size(col("ws")) >= spanN)
       .select(explode(transform(
-        sequence(lit(0), size(col("ws")) - n),
-        i => xxhash64(concat_ws(" ", slice(col("ws"), i + 1, lit(n)))))).as("g"))
+        sequence(lit(0), size(col("ws")) - spanN),
+        i => xxhash64(concat_ws(" ", slice(col("ws"), i + 1, lit(spanN)))))).as("g"))
       .distinct()
     val covered = cg.join(rg, Seq("g"), "left_semi")
       .select(col("doc_id"),
-        explode(sequence(col("pos"), col("pos") + (n - 1))).as("wpos"))
+        explode(sequence(col("pos"), col("pos") + (spanN - 1))).as("wpos"))
       .distinct()
     rebuildWithout(base, covered)
   }
@@ -1571,9 +1574,8 @@ object DedupOps {
     * the final text slice rejoins the corpus word arrays by doc_id.
     * Two matched grams merge into one span when their covered ranges
     * touch or overlap (next.pos ≤ prev.pos + n). */
-  def decontaminateSpans(corpus: DataFrame, reference: DataFrame,
-                         n: Int = 10): DataFrame =
-    locateSpans(corpus, reference, n, broadcastRef = false)
+  def decontaminateSpans(corpus: DataFrame, reference: DataFrame): DataFrame =
+    locateSpans(corpus, reference, spanN, broadcastRef = false)
 
   /** [[decontaminateSpans]] for the reference regime production
     * actually runs (the [[decontaminateBroadcast]] posture applied to
@@ -1588,9 +1590,9 @@ object DedupOps {
     * window — genuine output mass). Output contract and values are
     * identical to [[decontaminateSpans]] — the faces share one
     * oracle; only the plan shape tiers. */
-  def decontaminateSpansBroadcast(corpus: DataFrame, reference: DataFrame,
-                                  n: Int = 10): DataFrame =
-    locateSpans(corpus, reference, n, broadcastRef = true)
+  def decontaminateSpansBroadcast(corpus: DataFrame,
+                                  reference: DataFrame): DataFrame =
+    locateSpans(corpus, reference, spanN, broadcastRef = true)
 
   /** Both span locators: positioned gram hits of `corpus` against the
     * distinct (ref_id, gram) keys of `reference`, merged into maximal
@@ -1674,10 +1676,9 @@ object DedupOps {
     * probabilistic relative to true Jaccard. The banding recall curve
     * (P[candidate] = 1−(1−est^rows)^bands) is the declared recall
     * contract, as in every LSH face. */
-  def minhashEstPairs(docs: DataFrame, numPerm: Int = 64,
-                      bands: Int = 16, threshold: Double = 0.5): DataFrame = {
-    require(numPerm % bands == 0, s"bands must divide numPerm")
-    val rows = numPerm / bands
+  def minhashEstPairs(docs: DataFrame): DataFrame = {
+    val threshold = 0.5
+    val rows = numPerm / numBands
     // stage the token array, then the distinct shingle STRINGS, then
     // the signature — three projections so no lambda re-evaluates an
     // expensive subtree per element (the docShingleSets O(tokens²)
@@ -1720,7 +1721,7 @@ object DedupOps {
     // engine needs only an injective per-band encoding for ITS OWN
     // equi-join — arrays join by value in Spark, lists in DuckDB)
     val bnd = sigs.select(col("doc_id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
+      posexplode(transform(sequence(lit(0), lit(numBands - 1)),
         b => slice(col("sig"), b * rows + 1, lit(rows))))
         .as(Seq("band", "bsig")))
     val cand = bnd.as("a").join(bnd.as("b"),
@@ -1755,15 +1756,15 @@ object DedupOps {
     * output per colliding corpus doc (the genuine report mass);
     * aggregates are reference-keyed. Sub-n-word references report
     * n_grams = 0 (stated contract, oracle-matched). */
-  def decontaminateReport(corpus: DataFrame, reference: DataFrame,
-                          n: Int = 10): DataFrame = {
+  def decontaminateReport(corpus: DataFrame,
+                          reference: DataFrame): DataFrame = {
     def gramSet(docs: DataFrame, idAs: String): DataFrame =
       Tables.spread(docs)
         .select(col("doc_id").as(idAs), split(col("text"), " ").as("ws"))
-        .filter(size(col("ws")) >= n)
+        .filter(size(col("ws")) >= spanN)
         .select(col(idAs), explode(transform(
-          sequence(lit(0), size(col("ws")) - n),
-          i => xxhash64(concat_ws(" ", slice(col("ws"), i + 1, lit(n))))))
+          sequence(lit(0), size(col("ws")) - spanN),
+          i => xxhash64(concat_ws(" ", slice(col("ws"), i + 1, lit(spanN))))))
           .as("g"))
         .distinct()
     val rg = gramSet(reference, "ref_id").localCheckpoint(false)

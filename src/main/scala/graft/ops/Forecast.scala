@@ -26,10 +26,19 @@ object Forecast {
       .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
 
+  /** The settings the forecast faces share: the holdout horizon
+    * (days), the weekly season, the exponential-smoothing factors,
+    * and the event value above which the intermittent-demand faces
+    * count an event as a demand. */
+  private val horizon = 7
+  private val period = 7
+  private val alpha = 0.3
+  private val beta = 0.1
+  private val sparseThreshold = 300.0
+
   /** Forecast the last `horizon` days of each event_type series.
     * Output: event_type, day, actual, pred, lo, hi. */
-  def seasonalNaive(s: SparkSession, d: String,
-                    period: Int = 7, horizon: Int = 7): DataFrame =
+  def seasonalNaive(s: SparkSession, d: String): DataFrame =
     seasonalNaiveOn(dailyOf(s, d), period, horizon)
 
   /** Same over any (day, event_type, cnt) daily frame. */
@@ -78,8 +87,8 @@ object Forecast {
     * clamped flag rather than silently). One series-key shuffle for
     * the lag window, one calibration aggregate, one broadcast join
     * back — the snaive plan plus an order statistic. */
-  def conformalForecast(s: SparkSession, d: String, period: Int = 7,
-                        horizon: Int = 7, alphaPct: Int = 10): DataFrame = {
+  def conformalForecast(s: SparkSession, d: String): DataFrame = {
+    val alphaPct = 10
     val daily = Tables.events(s, d)
       .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
@@ -137,39 +146,49 @@ object Forecast {
     * identically — including `(1 - 0.3)` kept as a subtraction, since
     * the double literal 0.7 is NOT the same IEEE value — so the 4dp
     * forecasts match bit-for-bit. Output: (event_type, h, pred). */
-  def holtWinters(s: SparkSession, d: String, period: Int = 7,
-                  horizon: Int = 7, alpha: Double = 0.3,
-                  beta: Double = 0.1, gamma: Double = 0.2): DataFrame = {
-    import s.implicits._
-    val daily = Tables.events(s, d)
+  def holtWinters(s: SparkSession, d: String): DataFrame = {
+    val gamma = 0.2
+    perSeries(Tables.events(s, d)
       .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("event_type"), col("day"), col("cnt"))
-      .as[(String, java.sql.Timestamp, Long)]
-    daily.groupByKey(_._1)
-      .flatMapGroups { (k: String, it: Iterator[(String, java.sql.Timestamp, Long)]) =>
-        val ys = it.toArray.sortBy(_._2.getTime).map(_._3.toDouble)
-        val n = ys.length
-        if (n < 2 * period) Iterator.empty
-        else {
-          var level = ys.take(period).sum / period
-          val m2 = ys.slice(period, 2 * period).sum / period
-          var trend = (m2 - level) / period
-          val seas = Array.tabulate(period)(i => ys(i) - level)
-          var t = period
-          while (t < n) {
-            val y = ys(t)
-            val sOld = seas(t % period)
-            val newLevel = alpha * (y - sOld) + (1 - alpha) * (level + trend)
-            trend = beta * (newLevel - level) + (1 - beta) * trend
-            seas(t % period) = gamma * (y - newLevel) + (1 - gamma) * sOld
-            level = newLevel
-            t += 1
-          }
-          (1 to horizon).iterator.map { h =>
-            (k, h, level + h * trend + seas((n + h - 1) % period))
-          }
+      .agg(count(lit(1)).as("cnt"))) { ys =>
+      val n = ys.length
+      if (n < 2 * period) Iterator.empty
+      else {
+        var level = ys.take(period).sum / period
+        val m2 = ys.slice(period, 2 * period).sum / period
+        var trend = (m2 - level) / period
+        val seas = Array.tabulate(period)(i => ys(i) - level)
+        var t = period
+        while (t < n) {
+          val y = ys(t)
+          val sOld = seas(t % period)
+          val newLevel = alpha * (y - sOld) + (1 - alpha) * (level + trend)
+          trend = beta * (newLevel - level) + (1 - beta) * trend
+          seas(t % period) = gamma * (y - newLevel) + (1 - gamma) * sOld
+          level = newLevel
+          t += 1
         }
+        (1 to horizon).iterator.map { h =>
+          (h, level + h * trend + seas((n + h - 1) % period))
+        }
+      }
+    }
+  }
+
+  /** The per-series staging of the recursive smoothers: each event
+    * type's daily counts in day order go to `fit` (one task per
+    * series), whose (h, pred) forecasts publish as
+    * (event_type, h, pred) at 4dp. */
+  private def perSeries(daily: DataFrame)(
+      fit: Array[Double] => Iterator[(Int, Double)]): DataFrame = {
+    val s = daily.sparkSession
+    import s.implicits._
+    daily.select(col("event_type"), col("day"), col("cnt"))
+      .as[(String, java.sql.Timestamp, Long)]
+      .groupByKey(_._1)
+      .flatMapGroups { (k: String, it: Iterator[(String, java.sql.Timestamp, Long)]) =>
+        fit(it.toArray.sortBy(_._2.getTime).map(_._3.toDouble))
+          .map { case (h, pred) => (k, h, pred) }
       }
       .toDF("event_type", "h", "pred")
       .select(col("event_type"), col("h"), round(col("pred"), 4).as("pred"))
@@ -215,7 +234,7 @@ object Forecast {
     * Output: (event_type, day, actual, pred) over the holdout days,
     * the [[seasonalNaive]] shape minus the quantile band (an AR point
     * model has no residual-quantile interval by construction). */
-  def arForecast(s: SparkSession, d: String, horizon: Int = 7): DataFrame =
+  def arForecast(s: SparkSession, d: String): DataFrame =
     arForecastOn(dailyOf(s, d), horizon)
 
   /** Same over any (day, event_type, cnt) daily frame. */
@@ -260,15 +279,45 @@ object Forecast {
       p2 = p1; p1 = p
       p
     }
-    coef.select(col("event_type"), col("tday"),
+    withActuals(coef.select(col("event_type"), col("tday"),
         posexplode(array(preds: _*)).as(Seq("h0", "pred")))
       .select(col("event_type"),
         expr("timestampadd(DAY, h0 + 1, tday)").as("day"),
-        round(col("pred"), 4).as("pred"))
-      .join(daily.select(col("event_type"), col("day"),
+        round(col("pred"), 4).as("pred")), daily)
+  }
+
+  /** Holdout predictions (event_type, day, pred) beside the actual
+    * counts of `daily`, in (event_type, day) order. */
+  private def withActuals(preds: DataFrame, daily: DataFrame): DataFrame =
+    preds.join(daily.select(col("event_type"), col("day"),
         col("cnt").as("actual")), Seq("event_type", "day"))
       .select(col("event_type"), col("day"), col("actual"), col("pred"))
       .orderBy(col("event_type"), col("day"))
+
+  /** The holdout fit of the theta and Croston forecasters: each
+    * series' rows of `daily` up to `horizon` days before `span`'s
+    * `mx`, in day order, go to `fit` (one task per series), whose
+    * (h, pred) forecasts from the last train day publish as
+    * (event_type, day, pred) at 4dp. */
+  private def holdoutFit(daily: DataFrame, span: DataFrame, horizon: Int)(
+      fit: Array[(String, java.sql.Timestamp, Long)] =>
+        Iterator[(Int, Double)]): DataFrame = {
+    val s = daily.sparkSession
+    import s.implicits._
+    daily.crossJoin(broadcast(span))
+      .filter(col("day") <= col("mx") - expr(s"interval $horizon day"))
+      .select(col("event_type"), col("day"), col("cnt"))
+      .as[(String, java.sql.Timestamp, Long)]
+      .groupByKey(_._1).flatMapGroups {
+        (k: String, it: Iterator[(String, java.sql.Timestamp, Long)]) =>
+          val rows = it.toArray.sortBy(_._2.getTime)
+          val tday = rows.last._2
+          fit(rows).map { case (h, pred) => (k, tday, h, pred) }
+      }
+      .toDF("event_type", "tday", "h", "pred")
+      .select(col("event_type"),
+        expr("timestampadd(DAY, h, tday)").as("day"),
+        round(col("pred"), 4).as("pred"))
   }
 
   /** Theta-lite forecaster per series — the trend-capable classical
@@ -294,74 +343,77 @@ object Forecast {
     *
     * Output: (event_type, day, actual, pred) over the holdout days —
     * the [[arForecast]] shape. */
-  def thetaForecast(s: SparkSession, d: String, horizon: Int = 7,
-                    alpha: Double = 0.3): DataFrame =
+  def thetaForecast(s: SparkSession, d: String): DataFrame =
     thetaForecastOn(dailyOf(s, d), horizon, alpha)
 
   /** Same over any (day, event_type, cnt) daily frame. */
   def thetaForecastOn(daily: DataFrame, horizon: Int,
                       alpha: Double): DataFrame = {
-    val s = daily.sparkSession
-    import s.implicits._
     val mx = daily.agg(max(col("day")).as("mx"))
-    val train = daily.crossJoin(broadcast(mx))
-      .filter(col("day") <= col("mx") - expr(s"interval $horizon day"))
-      .select(col("event_type"), col("day"), col("cnt"))
-      .as[(String, java.sql.Timestamp, Long)]
-    val fc = train.groupByKey(_._1).flatMapGroups {
-      (k: String, it: Iterator[(String, java.sql.Timestamp, Long)]) =>
-        val rows = it.toArray.sortBy(_._2.getTime)
-        val ys = rows.map(_._3.toDouble)
-        val n = ys.length
-        if (n < 2) Iterator.empty
+    withActuals(holdoutFit(daily, mx, horizon) { rows =>
+      val ys = rows.map(_._3.toDouble)
+      val n = ys.length
+      if (n < 2) Iterator.empty
+      else {
+        // linear-fit moments: t and y are integer-valued, so the
+        // sums are EXACT doubles — aggregation-order independent
+        var st = 0.0; var sy = 0.0; var stt = 0.0; var sty = 0.0
+        var t = 0
+        while (t < n) {
+          val ti = t.toDouble
+          st += ti; sy += ys(t); stt += ti * ti; sty += ti * ys(t)
+          t += 1
+        }
+        val nn = n.toDouble
+        val den = nn * stt - st * st // > 0 for n ≥ 2 distinct days
+        if (den == 0.0) Iterator.empty
         else {
-          // linear-fit moments: t and y are integer-valued, so the
-          // sums are EXACT doubles — aggregation-order independent
-          var st = 0.0; var sy = 0.0; var stt = 0.0; var sty = 0.0
-          var t = 0
-          while (t < n) {
-            val ti = t.toDouble
-            st += ti; sy += ys(t); stt += ti * ti; sty += ti * ys(t)
-            t += 1
+          val b = (nn * sty - st * sy) / den
+          val a = (sy - b * st) / nn
+          // SES over the θ=2 line, e_0 = z_0 — sequential per series
+          var e = 0.0
+          var first = true
+          var t2 = 0
+          while (t2 < n) {
+            val z = 2.0 * ys(t2) - (a + b * t2)
+            e = if (first) { first = false; z }
+                else alpha * z + (1.0 - alpha) * e
+            t2 += 1
           }
-          val nn = n.toDouble
-          val den = nn * stt - st * st // > 0 for n ≥ 2 distinct days
-          if (den == 0.0) Iterator.empty
-          else {
-            val b = (nn * sty - st * sy) / den
-            val a = (sy - b * st) / nn
-            // SES over the θ=2 line, e_0 = z_0 — sequential per series
-            var e = 0.0
-            var first = true
-            var t2 = 0
-            while (t2 < n) {
-              val z = 2.0 * ys(t2) - (a + b * t2)
-              e = if (first) { first = false; z }
-                  else alpha * z + (1.0 - alpha) * e
-              t2 += 1
-            }
-            val tday = rows.last._2
-            (1 to horizon).iterator.map { h =>
-              (k, tday, h,
-                0.5 * (a + b * (n - 1 + h)) + 0.5 * e)
-            }
+          (1 to horizon).iterator.map { h =>
+            (h, 0.5 * (a + b * (n - 1 + h)) + 0.5 * e)
           }
         }
-    }.toDF("event_type", "tday", "h", "pred")
-    fc.select(col("event_type"),
-        expr("timestampadd(DAY, h, tday)").as("day"),
-        round(col("pred"), 4).as("pred"))
-      .join(daily.select(col("event_type"), col("day"),
-        col("cnt").as("actual")), Seq("event_type", "day"))
-      .select(col("event_type"), col("day"), col("actual"), col("pred"))
-      .orderBy(col("event_type"), col("day"))
+      }
+    }, daily)
+  }
+
+  /** The 0-filled sparse daily spine (days with `value` above
+    * [[sparseThreshold]], gap days as explicit zeros) — shared by
+    * [[croston]] and [[intermittencyClassify]] so the forecaster and
+    * its router see the identical series. */
+  private def sparseSpine(s: SparkSession, d: String): DataFrame = {
+    val ev = Tables.events(s, d)
+      .select(date_trunc("day", col("ts")).as("day"), col("event_type"),
+        col("value"))
+    val span = ev.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
+    val types = ev.select(col("event_type")).distinct()
+    val sparse = ev.filter(col("value") > sparseThreshold)
+      .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("cnt"))
+    types.crossJoin(broadcast(span))
+      .select(col("event_type"),
+        explode(expr("sequence(mn, mx, interval 1 day)")).as("day"))
+      .join(sparse, Seq("event_type", "day"), "left")
+      .select(col("event_type"), col("day"),
+        coalesce(col("cnt"), lit(0L)).as("cnt"))
   }
 
   /** Croston's method (1972) — the INTERMITTENT-demand forecaster the
     * rest of the family cannot handle: on a series that is mostly
     * zeros (spike/incident counts — here, daily events with value
-    * above `threshold`, 2-6 of 30 days at the gate SF), SES smooths
-    * toward zero between demands and seasonal-naive copies noise.
+    * above [[sparseThreshold]], 2-6 of 30 days at the gate SF), SES
+    * smooths toward zero between demands and seasonal-naive copies
+    * noise.
     * Croston maintains TWO exponential estimates — nonzero demand
     * SIZE z and inter-demand INTERVAL p (smoothed only on demand
     * days, from the pre-reset gap counter) — and forecasts the flat
@@ -378,65 +430,28 @@ object Forecast {
     * the p update); series with no train demand forecast 0. Output:
     * (event_type, day, actual, pred) over the holdout days, actuals
     * 0-filled. */
-  /** The 0-filled sparse daily spine (days with `value` above the
-    * threshold, gap days as explicit zeros) — shared by [[croston]]
-    * and [[intermittencyClassify]] so the forecaster and its router
-    * see the identical series. */
-  private def sparseSpine(s: SparkSession, d: String,
-                          threshold: Double): DataFrame = {
-    val ev = Tables.events(s, d)
-      .select(date_trunc("day", col("ts")).as("day"), col("event_type"),
-        col("value"))
-    val span = ev.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
-    val types = ev.select(col("event_type")).distinct()
-    val sparse = ev.filter(col("value") > threshold)
-      .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("cnt"))
-    types.crossJoin(broadcast(span))
-      .select(col("event_type"),
-        explode(expr("sequence(mn, mx, interval 1 day)")).as("day"))
-      .join(sparse, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"))
-  }
-
-  def croston(s: SparkSession, d: String, horizon: Int = 7,
-              alpha: Double = 0.3, threshold: Double = 300.0): DataFrame = {
-    import s.implicits._
+  def croston(s: SparkSession, d: String): DataFrame = {
     // NOT checkpointed, deliberately (r16 A/B): materializing the
     // spine measured slower (0.76 → 1.17 s) — cheap subtrees, AQE
     // exchange reuse, barrier jobs not amortized at this cost class
-    val filled = sparseSpine(s, d, threshold)
+    val filled = sparseSpine(s, d)
     val span = filled.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
-    val train = filled.crossJoin(broadcast(span))
-      .filter(col("day") <= col("mx") - expr(s"interval $horizon day"))
-      .select(col("event_type"), col("day"), col("cnt"))
-      .as[(String, java.sql.Timestamp, Long)]
-    val fc = train.groupByKey(_._1).flatMapGroups {
-      (k: String, it: Iterator[(String, java.sql.Timestamp, Long)]) =>
-        val rows = it.toArray.sortBy(_._2.getTime)
-        var q = 1.0; var z = 0.0; var p = 1.0; var first = true
-        rows.foreach { r =>
-          val y = r._3.toDouble
-          if (y > 0) {
-            if (first) { z = y; p = q; first = false }
-            else {
-              z = alpha * y + (1.0 - alpha) * z
-              p = alpha * q + (1.0 - alpha) * p
-            }
-            q = 1.0
-          } else q += 1.0
-        }
-        val f = if (first) 0.0 else z / p
-        val tday = rows.last._2
-        (1 to horizon).iterator.map(h => (k, tday, h, f))
-    }.toDF("event_type", "tday", "h", "pred")
-    fc.select(col("event_type"),
-        expr("timestampadd(DAY, h, tday)").as("day"),
-        round(col("pred"), 4).as("pred"))
-      .join(filled.select(col("event_type"), col("day"),
-        col("cnt").as("actual")), Seq("event_type", "day"))
-      .select(col("event_type"), col("day"), col("actual"), col("pred"))
-      .orderBy(col("event_type"), col("day"))
+    withActuals(holdoutFit(filled, span, horizon) { rows =>
+      var q = 1.0; var z = 0.0; var p = 1.0; var first = true
+      rows.foreach { r =>
+        val y = r._3.toDouble
+        if (y > 0) {
+          if (first) { z = y; p = q; first = false }
+          else {
+            z = alpha * y + (1.0 - alpha) * z
+            p = alpha * q + (1.0 - alpha) * p
+          }
+          q = 1.0
+        } else q += 1.0
+      }
+      val f = if (first) 0.0 else z / p
+      (1 to horizon).iterator.map(h => (h, f))
+    }, filled)
   }
 
   /** HIERARCHICAL forecast RECONCILIATION audit — the coherence
@@ -459,8 +474,7 @@ object Forecast {
     * `n_series` counts the types actually fit that day — a type
     * dropped by the det/n guard would silently hollow the bottom-up
     * sum, so the audit surfaces it. */
-  def reconcileForecast(s: SparkSession, d: String,
-                        horizon: Int = 7): DataFrame =
+  def reconcileForecast(s: SparkSession, d: String): DataFrame =
     reconcileForecastOn(Tables.events(s, d)
       .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("cnt")), horizon)
@@ -508,8 +522,8 @@ object Forecast {
     * MAE terms sum as exact DECIMALs (integer counts — no float
     * drift). Days whose lag-`period` source is absent predict 0
     * (the gap-day posture, mirrored in the oracle). */
-  def backtestRolling(s: SparkSession, d: String, period: Int = 7,
-                      nOrigins: Int = 3): DataFrame =
+  def backtestRolling(s: SparkSession, d: String): DataFrame = {
+    val nOrigins = 3
     backtestRollingOn(
       Tables.events(s, d)
         .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
@@ -517,6 +531,7 @@ object Forecast {
         .select(col("event_type"),
           expr("unix_micros(day) div 86400000000").as("ed"), col("cnt")),
       period, nOrigins)
+  }
 
   /** Same over any (event_type, ed, cnt) daily series. */
   def backtestRollingOn(daily: DataFrame, period: Int,
@@ -565,58 +580,47 @@ object Forecast {
     * (a second tiny h-recursion in the oracle) — never pow(), whose
     * libm results are only 1-ulp-accurate and may differ between
     * JVM and C runtimes. */
-  def holtDamped(s: SparkSession, d: String, horizon: Int = 7,
-                 alpha: Double = 0.3, beta: Double = 0.1,
-                 phi: Double = 0.9): DataFrame =
+  def holtDamped(s: SparkSession, d: String): DataFrame = {
+    val phi = 0.9
     holtDampedOn(Tables.events(s, d)
       .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
       .select(col("event_type"), col("day"), col("cnt")),
       horizon, alpha, beta, phi)
+  }
 
   /** Same over any (event_type, day, cnt) daily frame. */
   def holtDampedOn(dailyDf: DataFrame, horizon: Int,
-                   alpha: Double, beta: Double, phi: Double): DataFrame = {
-    val s = dailyDf.sparkSession
-    import s.implicits._
-    val daily = dailyDf
-      .select(col("event_type"), col("day"), col("cnt"))
-      .as[(String, java.sql.Timestamp, Long)]
-    daily.groupByKey(_._1)
-      .flatMapGroups { (k: String, it: Iterator[(String, java.sql.Timestamp, Long)]) =>
-        val ys = it.toArray.sortBy(_._2.getTime).map(_._3.toDouble)
-        val n = ys.length
-        if (n < 2) Iterator.empty
-        else {
-          var level = ys(0)
-          var trend = ys(1) - ys(0)
-          var t = 1
-          while (t < n) {
-            val y = ys(t)
-            val newLevel = alpha * y + (1 - alpha) * (level + phi * trend)
-            trend = beta * (newLevel - level) + (1 - beta) * (phi * trend)
-            level = newLevel
-            t += 1
-          }
-          // Σφ^i by repeated multiplication — mirrored in the oracle's
-          // h-recursion (phipow·φ appears twice there: same value,
-          // same tree) — never pow()
-          val phisums = new Array[Double](horizon + 1)
-          var phipow = phi
-          phisums(1) = phi
-          var h = 2
-          while (h <= horizon) {
-            phipow = phipow * phi
-            phisums(h) = phisums(h - 1) + phipow
-            h += 1
-          }
-          (1 to horizon).iterator.map(i => (k, i, level + phisums(i) * trend))
+                   alpha: Double, beta: Double, phi: Double): DataFrame =
+    perSeries(dailyDf) { ys =>
+      val n = ys.length
+      if (n < 2) Iterator.empty
+      else {
+        var level = ys(0)
+        var trend = ys(1) - ys(0)
+        var t = 1
+        while (t < n) {
+          val y = ys(t)
+          val newLevel = alpha * y + (1 - alpha) * (level + phi * trend)
+          trend = beta * (newLevel - level) + (1 - beta) * (phi * trend)
+          level = newLevel
+          t += 1
         }
+        // Σφ^i by repeated multiplication — mirrored in the oracle's
+        // h-recursion (phipow·φ appears twice there: same value,
+        // same tree) — never pow()
+        val phisums = new Array[Double](horizon + 1)
+        var phipow = phi
+        phisums(1) = phi
+        var h = 2
+        while (h <= horizon) {
+          phipow = phipow * phi
+          phisums(h) = phisums(h - 1) + phipow
+          h += 1
+        }
+        (1 to horizon).iterator.map(i => (i, level + phisums(i) * trend))
       }
-      .toDF("event_type", "h", "pred")
-      .select(col("event_type"), col("h"), round(col("pred"), 4).as("pred"))
-      .orderBy(col("event_type"), col("h"))
-  }
+    }
 
   /** INTERMITTENCY CLASSIFICATION (Syntetos-Boylan quadrants) — the
     * ROUTER in front of [[croston]]: Croston beats snaive only on
@@ -632,10 +636,9 @@ object Forecast {
     * integer sums per series (one aggregate over the calendar-bounded
     * spine); series with < 2 demands report null CV² and route to
     * 'insufficient'. */
-  def intermittencyClassify(s: SparkSession, d: String,
-                            threshold: Double = 300.0): DataFrame = {
+  def intermittencyClassify(s: SparkSession, d: String): DataFrame = {
     def dbl(c: Column): Column = c.cast("double")
-    val m = sparseSpine(s, d, threshold)
+    val m = sparseSpine(s, d)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_periods"),
         sum(when(col("cnt") > 0, 1L).otherwise(0L)).as("n_demands"),
@@ -681,7 +684,6 @@ object Forecast {
     * champion = rank-1 on (mae, model) per series, deterministic
     * cross-engine. */
   def compareModels(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // ONE daily aggregate feeds all three member fits (r16 backlog
     // item #1): the members previously each re-derived it from
     // events — 3 corpus scans+aggregates per entry for a frame of
@@ -689,16 +691,23 @@ object Forecast {
     // member fits are unchanged functions of it, so outputs are
     // identical.
     val daily = dailyOf(s, d).localCheckpoint(false)
-    val sn = seasonalNaiveOn(daily, 7, 7)
+    val sn = seasonalNaiveOn(daily, period, horizon)
       .select(col("event_type"), col("actual"), col("pred"))
       .withColumn("model", lit("snaive"))
-    val ar = arForecastOn(daily, 7)
+    val ar = arForecastOn(daily, horizon)
       .select(col("event_type"), col("actual"), col("pred"))
       .withColumn("model", lit("ar2"))
-    val th = thetaForecastOn(daily, 7, 0.3)
+    val th = thetaForecastOn(daily, horizon, alpha)
       .select(col("event_type"), col("actual"), col("pred"))
       .withColumn("model", lit("theta"))
-    val mae = sn.unionByName(ar).unionByName(th)
+    maeTable(sn.unionByName(ar).unionByName(th))
+  }
+
+  /** Per-series, per-model MAE over (event_type, model, actual, pred)
+    * holdout rows — |actual − pred| summed as an exact DECIMAL — with
+    * the rank-1 (mae, model) `best` flag. */
+  private def maeTable(preds: DataFrame): DataFrame = {
+    val mae = preds
       .groupBy(col("event_type"), col("model"))
       .agg(
         (sum(abs(col("actual") - col("pred")).cast("decimal(20,4)"))
@@ -733,15 +742,14 @@ object Forecast {
     * day-keyed join + one lazily-checkpointed frame feeding the four
     * scoring legs + one aggregate. */
   def ensembleForecast(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // shared checkpointed daily frame — see compareModels
     val daily = dailyOf(s, d).localCheckpoint(false)
-    val sn = seasonalNaiveOn(daily, 7, 7)
+    val sn = seasonalNaiveOn(daily, period, horizon)
       .select(col("event_type"), col("day"), col("actual"),
         col("pred").as("p_sn"))
-    val ar = arForecastOn(daily, 7)
+    val ar = arForecastOn(daily, horizon)
       .select(col("event_type"), col("day"), col("pred").as("p_ar"))
-    val th = thetaForecastOn(daily, 7, 0.3)
+    val th = thetaForecastOn(daily, horizon, alpha)
       .select(col("event_type"), col("day"), col("pred").as("p_th"))
     val j = sn.join(ar, Seq("event_type", "day"))
       .join(th, Seq("event_type", "day"))
@@ -751,22 +759,10 @@ object Forecast {
     def leg(name: String, p: Column): DataFrame =
       j.select(col("event_type"), col("actual"), p.as("pred"),
         lit(name).as("model"))
-    val allp = leg("snaive", col("p_sn"))
+    maeTable(leg("snaive", col("p_sn"))
       .unionByName(leg("ar2", col("p_ar")))
       .unionByName(leg("theta", col("p_th")))
-      .unionByName(leg("ensemble", col("p_ens")))
-    val mae = allp
-      .groupBy(col("event_type"), col("model"))
-      .agg(
-        (sum(abs(col("actual") - col("pred")).cast("decimal(20,4)"))
-          .cast("double") / count(lit(1))).as("__m"),
-        count(lit(1)).as("n_days"))
-      .select(col("event_type"), col("model"),
-        round(col("__m"), 4).as("mae"), col("n_days"))
-    val w = Window.partitionBy(col("event_type"))
-      .orderBy(col("mae").asc, col("model").asc)
-    mae.withColumn("best", row_number().over(w) === 1)
-      .orderBy(col("event_type"), col("model"))
+      .unionByName(leg("ensemble", col("p_ens"))))
   }
 
   /** Forecast evaluation: per-series MAE and interval coverage —

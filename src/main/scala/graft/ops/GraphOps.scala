@@ -16,12 +16,14 @@ object GraphOps {
     * lineitem (an edge per distinct (order, supplier) pair). See
     * [[pageRankOn]] for the iteration design and the cross-engine
     * arithmetic contract. */
-  def pageRank(s: SparkSession, d: String, iters: Int = 5,
-               topN: Int = 20): DataFrame =
+  def pageRank(s: SparkSession, d: String): DataFrame = {
+    val iters = 5
+    val topN = 20
     pageRankOn(Tables.lineitem(s, d)
       .select(concat(lit("o"), col("l_orderkey")).as("src"),
         concat(lit("s"), col("l_suppkey")).as("dst"))
       .distinct(), iters, topN)
+  }
 
   /** PageRank over any (src, dst) pair list. Pairs are symmetrized
     * (both directions added), so the graph is undirected and every
@@ -61,10 +63,8 @@ object GraphOps {
     * 50% slower than even that). Rounds are fixed and few; each is a
     * narrow join+agg on the node key — no all-pairs anything.
     */
-  def pageRankOn(pairs: DataFrame, iters: Int, topN: Int,
-                 dampingPct: Int = 85): DataFrame = {
-    require(dampingPct > 0 && dampingPct < 100,
-      s"dampingPct must be in (0, 100), got $dampingPct")
+  def pageRankOn(pairs: DataFrame, iters: Int, topN: Int): DataFrame = {
+    val dampingPct = 85
     val teleport = (100L - dampingPct) * 100000000L // (1-d)·10^10
     // edges feed the degree aggregate AND the join side; without the
     // barrier the pairs distinct re-evaluates for each.
@@ -112,6 +112,9 @@ object GraphOps {
       .limit(topN)
   }
 
+  /** The basket-size cap of every co-occurrence graph face. */
+  private val maxBasket = 16
+
   /** Triangle count + global clustering coefficient over the part
     * co-occurrence graph (parts appearing in the same order are
     * connected) — the third face of the edge-list family:
@@ -143,7 +146,7 @@ object GraphOps {
     * Output is one row: nodes, edges, wedge count Σ C(d,2),
     * triangles, and the global clustering coefficient
     * 3·triangles / wedges (4dp, exact-integer inputs). */
-  def triangles(s: SparkSession, d: String, maxBasket: Int = 16): DataFrame =
+  def triangles(s: SparkSession, d: String): DataFrame =
     trianglesOn(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
       maxBasket)
@@ -198,7 +201,7 @@ object GraphOps {
     * log2 is one ulp from misbinning every power of two). Cost: the
     * edge derivation + one node-key count + a bin-cardinality
     * aggregate; output is ~⌈log2 max-degree⌉ rows at any scale. */
-  def degreeDist(s: SparkSession, d: String, maxBasket: Int = 16): DataFrame =
+  def degreeDist(s: SparkSession, d: String): DataFrame =
     degreeDistOn(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
       maxBasket)
@@ -240,11 +243,12 @@ object GraphOps {
     * frame rides an eager localCheckpoint so each round is paid
     * once. Output: per hop distance, node count + id range —
     * rounds+1 rows at any scale. */
-  def bfs(s: SparkSession, d: String, rounds: Int = 4,
-          maxBasket: Int = 16): DataFrame =
+  def bfs(s: SparkSession, d: String): DataFrame = {
+    val rounds = 4
     bfsOn(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
       rounds, maxBasket)
+  }
 
   /** Same over any (basket, item) membership list. */
   def bfsOn(pairs: DataFrame, rounds: Int, maxBasket: Int): DataFrame = {
@@ -299,11 +303,13 @@ object GraphOps {
     * joins — O(Σ_{d≤cap} C(d,2)) shuffle rows, the same bound the
     * triangle count's orientation buys, chosen here by cutoff
     * because common-neighbor counting needs BOTH wedge arms. */
-  def linkPredict(s: SparkSession, d: String, maxBasket: Int = 16,
-                  maxCenterDeg: Int = 64, topN: Int = 50): DataFrame =
+  def linkPredict(s: SparkSession, d: String): DataFrame = {
+    val maxCenterDeg = 64
+    val topN = 50
     linkPredictOn(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
       maxBasket, maxCenterDeg, topN)
+  }
 
   /** Same over any (basket, item) membership list. */
   def linkPredictOn(pairs: DataFrame, maxBasket: Int, maxCenterDeg: Int,
@@ -340,8 +346,11 @@ object GraphOps {
       .limit(topN)
   }
 
-  /** Canonical (a < b) undirected edge set from basket co-membership,
-    * shared by the exact and sampled triangle faces. */
+  /** The k-core's minimum degree and peeling rounds, read by [[kCore]]
+    * and its oracle. */
+  private val kCoreK = 3
+  private val kCoreRounds = 4
+
   /** k-core peeling — the graph-DENSITY audit beside the triangle
     * faces (clustering) and PageRank (centrality): repeatedly remove
     * nodes of degree < k; what survives round r is inside the k-core
@@ -359,11 +368,10 @@ object GraphOps {
     * every materialized frame rides an EAGER localCheckpoint so each
     * round is paid exactly once, in order. Output: per round,
     * surviving node/edge counts — rounds+1 rows at any scale. */
-  def kCore(s: SparkSession, d: String, k: Int = 3, rounds: Int = 4,
-            maxBasket: Int = 16): DataFrame =
+  def kCore(s: SparkSession, d: String): DataFrame =
     kCoreOn(basketEdges(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
-      maxBasket), k, rounds)
+      maxBasket), kCoreK, kCoreRounds)
 
   /** Same over any canonical (a < b) undirected edge frame.
     *
@@ -443,18 +451,17 @@ object GraphOps {
     * re-evaluate the whole chain ~3^rounds times — observed as a
     * 15-minute oracle on the sf0.01 graph; materialization makes it
     * the same linear peel the Spark side runs. */
-  private[graft] def kCoreOracleSql(k: Int = 3, rounds: Int = 4,
-                                    maxBasket: Int = 16): String = {
-    val peels = (1 to rounds).map { r =>
+  private[graft] def kCoreOracleSql: String = {
+    val peels = (1 to kCoreRounds).map { r =>
       s"""d$r AS (SELECT node, count(*) AS deg FROM (
          |  SELECT a AS node FROM e${r - 1}
          |  UNION ALL SELECT b FROM e${r - 1}) GROUP BY 1),
-         |k$r AS MATERIALIZED (SELECT node FROM d$r WHERE deg >= $k),
+         |k$r AS MATERIALIZED (SELECT node FROM d$r WHERE deg >= $kCoreK),
          |e$r AS MATERIALIZED (SELECT a, b FROM e${r - 1}
          |  WHERE a IN (SELECT node FROM k$r)
          |    AND b IN (SELECT node FROM k$r))""".stripMargin
     }.mkString(",\n")
-    val stats = (0 to rounds).map { r =>
+    val stats = (0 to kCoreRounds).map { r =>
       s"""SELECT $r AS round,
          |  (SELECT count(DISTINCT node) FROM (
          |     SELECT a AS node FROM e$r UNION ALL SELECT b FROM e$r))
@@ -472,6 +479,9 @@ object GraphOps {
        |$stats
        |ORDER BY round""".stripMargin
   }
+
+  /** The label-propagation rounds of [[lpa]] and its oracle. */
+  private val lpaRounds = 3
 
   /** Label-propagation communities (Raghavan et al. 2007) — the
     * partition question between [[DedupOps.clusters]] (connected
@@ -493,11 +503,10 @@ object GraphOps {
     * aggregations. Output: the community SIZE HISTOGRAM (size →
     * n_communities) — bounded by the distinct-size count at any
     * scale, never a per-node dump. */
-  def lpa(s: SparkSession, d: String, rounds: Int = 3,
-          maxBasket: Int = 16): DataFrame =
+  def lpa(s: SparkSession, d: String): DataFrame =
     lpaOn(basketEdges(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
-      maxBasket), rounds)
+      maxBasket), lpaRounds)
 
   /** Same over any canonical (a < b) undirected edge frame. */
   def lpaOn(edges0: DataFrame, rounds: Int): DataFrame = {
@@ -535,9 +544,8 @@ object GraphOps {
     * as the Spark struct-max), every label frame MATERIALIZED (each
     * is referenced by the next round's join; default inlining would
     * re-derive the whole chain). */
-  private[graft] def lpaOracleSql(rounds: Int = 3,
-                                  maxBasket: Int = 16): String = {
-    val props = (1 to rounds).map { r =>
+  private[graft] def lpaOracleSql: String = {
+    val props = (1 to lpaRounds).map { r =>
       s"""c$r AS (SELECT e.dst AS node, l.lbl AS lbl, count(*) AS cnt
          |  FROM bidir e JOIN l${r - 1} l ON e.src = l.node
          |  GROUP BY 1, 2),
@@ -559,12 +567,14 @@ object GraphOps {
        |       FROM bidir),
        |$props,
        |csz AS (SELECT lbl, CAST(count(*) AS BIGINT) AS sz
-       |        FROM l$rounds GROUP BY 1)
+       |        FROM l$lpaRounds GROUP BY 1)
        |SELECT sz AS community_size,
        |  CAST(count(*) AS BIGINT) AS n_communities
        |FROM csz GROUP BY 1 ORDER BY 1""".stripMargin
   }
 
+  /** Canonical (a < b) undirected edge set from basket co-membership,
+    * shared by the exact and sampled triangle faces. */
   private def basketEdges(pairs: DataFrame, maxBasket: Int): DataFrame = {
     // Kept as distinct → count-window → self-join DELIBERATELY: the
     // r16 optimization pass A/B-tested the [[Baskets]] collect_set +
@@ -646,11 +656,12 @@ object GraphOps {
     * frontier stays node-cardinality). Dead ends self-absorb via
     * the left join's coalesce — the walk parks rather than dropping
     * the row, so output stays one row per start node at any L. */
-  def randomWalks(s: SparkSession, d: String, steps: Int = 3,
-                  maxBasket: Int = 16): DataFrame =
+  def randomWalks(s: SparkSession, d: String): DataFrame = {
+    val steps = 3
     randomWalksOn(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
       steps, maxBasket)
+  }
 
   /** Same over any (basket, item) membership list. */
   def randomWalksOn(pairs: DataFrame, steps: Int,

@@ -21,12 +21,15 @@ object MlOps {
     Tables.embeddings(s, d)
       .withColumn("features", array_to_vector(col("embedding")))
 
+  /** The cluster count of both MLlib k-means faces. */
+  private val clusterK = 8
+
   /** KMeans clustering of the embedding space (fixed seed). The
     * fitted centroids are broadcast by MLlib's transform — scoring
     * is a narrow map over the corpus. */
-  def cluster(s: SparkSession, d: String, k: Int = 8): DataFrame = {
+  def cluster(s: SparkSession, d: String): DataFrame = {
     val df = featurized(s, d).localCheckpoint(false)
-    val model = new KMeans().setK(k).setSeed(42L).setMaxIter(10)
+    val model = new KMeans().setK(clusterK).setSeed(42L).setMaxIter(10)
       .setFeaturesCol("features").fit(df)
     model.transform(df)
       .select(col("vec_id"), col("prediction").as("cluster"))
@@ -51,9 +54,9 @@ object MlOps {
     * tighter verdict would flag a correct model. A genuinely wrong
     * assignment is off by far more. The oracle is every vec_id +
     * TRUE. */
-  def clusterChecked(s: SparkSession, d: String, k: Int = 8): DataFrame = {
+  def clusterChecked(s: SparkSession, d: String): DataFrame = {
     val df = featurized(s, d).localCheckpoint(false)
-    val model = new KMeans().setK(k).setSeed(42L).setMaxIter(10)
+    val model = new KMeans().setK(clusterK).setSeed(42L).setMaxIter(10)
       .setFeaturesCol("features").fit(df)
     val centerDists = model.clusterCenters.map { c =>
       val cLit = array(c.toArray.map(lit): _*)
@@ -68,7 +71,7 @@ object MlOps {
       .withColumn("__d", array(centerDists: _*))
       .select(
         col("vec_id"),
-        (col("cluster") >= 0 && col("cluster") < k).as("cluster_in_range"),
+        (col("cluster") >= 0 && col("cluster") < clusterK).as("cluster_in_range"),
         (element_at(col("__d"), col("cluster") + 1) <=
           array_min(col("__d")) * (1 + 1e-6) + 1e-12)
           .as("assigned_is_argmin"))
@@ -139,9 +142,11 @@ object MlOps {
     * references it, and inlining its derivation per round is the 104-
     * scan pathology pageRank measured. Long-lived sessions own the
     * storage via the RDD reference (PrefixSum ownership contract). */
-  def kmeansPlan(s: SparkSession, d: String, k: Int = 3,
-                 iters: Int = 3): DataFrame =
+  def kmeansPlan(s: SparkSession, d: String): DataFrame = {
+    val k = 3
+    val iters = 3
     kmeansPlanOn(Tables.embeddings(s, d), k, iters)
+  }
 
   /** The 1e-6 fixed-point lattice of a float-array column: each
     * element rounded to 1e-6 units as a BIGINT and shifted +1e6 so
@@ -261,9 +266,9 @@ object MlOps {
     * class-cardinality work. At scale compose it with
     * [[graft.ops.SimilarityOps.knnClassifyIvf]] (measured 3.0×):
     * the eval is scorer-agnostic, the swap is one line. */
-  def evalClassification(preds: DataFrame,
-                         trueCol: String = "true_label",
-                         predCol: String = "pred_label"): DataFrame = {
+  def evalClassification(preds: DataFrame): DataFrame = {
+    val trueCol = "true_label"
+    val predCol = "pred_label"
     val t = preds.groupBy(col(trueCol).as("label"))
       .agg(count(lit(1)).as("n_true"),
         sum(when(col(predCol) === col(trueCol), 1L).otherwise(0L)).as("tp"))
@@ -472,6 +477,11 @@ object MlOps {
       .orderBy(col("category"), col("fold"))
   }
 
+  /** The gradient-descent rounds and learning rate of [[logregGd]]
+    * and its oracle. */
+  private val logregIters = 8
+  private val logregLr = 1.0
+
   /** Transparent logistic regression by fixed-round gradient descent
     * — the VALUE-ORACLED counterpart of [[classifyChecked]] (whose MLlib
     * L-BFGS fit is implementation-specific and therefore only
@@ -497,12 +507,11 @@ object MlOps {
     * floor boundary. Accuracy uses the SIGN of w·x+b (exact double
     * arithmetic — no exp near the 0.5 boundary), and logloss uses
     * the overflow-free ln(1+exp((1−2y)·z)) form. */
-  def logregGd(s: SparkSession, d: String, iters: Int = 8,
-               lr: Double = 1.0): DataFrame =
+  def logregGd(s: SparkSession, d: String): DataFrame =
     logregGdOn(Tables.events(s, d)
       .selectExpr("round(value / 100.0, 4) AS x",
         "CAST(CASE WHEN event_type = 'click' THEN 1.0 ELSE 0.0 END AS DOUBLE) AS y"),
-      iters, lr)
+      logregIters, logregLr)
 
   /** Same over any (x, y∈{0,1}) frame. */
   def logregGdOn(base0: DataFrame, iters: Int, lr: Double): DataFrame = {
@@ -554,13 +563,12 @@ object MlOps {
   /** The unrolled-iteration DuckDB replay of [[logregGdOn]] over the
     * events-backed face — built programmatically so the oracle and
     * any future iteration-count change cannot drift apart. */
-  private[graft] def logregOracleSql(iters: Int = 8,
-                                     lr: Double = 1.0): String = {
+  private[graft] def logregOracleSql: String = {
     val q6 = (e: String) => s"floor(($e) * 1e6) / 1e6"
-    val steps = (1 to iters).map { i =>
+    val steps = (1 to logregIters).map { i =>
       s"""s$i AS (SELECT
-         |  ${q6(s"w - $lr * CAST(gw AS DOUBLE) / n")} AS w,
-         |  ${q6(s"b - $lr * CAST(gb AS DOUBLE) / n")} AS b
+         |  ${q6(s"w - $logregLr * CAST(gw AS DOUBLE) / n")} AS w,
+         |  ${q6(s"b - $logregLr * CAST(gb AS DOUBLE) / n")} AS b
          |FROM (SELECT w, b, n,
          |    sum(CAST(${q6("(1.0/(1.0+exp(-(w*x+b))) - y) * x")}
          |      AS DECIMAL(20,6))) AS gw,
@@ -583,7 +591,7 @@ object MlOps {
        |    AS DECIMAL(20,6))) * 1000000 AS HUGEINT) * 20000
        |    + CAST(n AS HUGEINT) * 1000000) // (2 * CAST(n AS HUGEINT)
        |    * 1000000) AS BIGINT) / 10000.0 AS logloss
-       |FROM base, s$iters, nn GROUP BY w, b, n""".stripMargin
+       |FROM base, s$logregIters, nn GROUP BY w, b, n""".stripMargin
   }
 
   /** AdaBoost over decision stumps — the BOOSTED face of
@@ -623,13 +631,17 @@ object MlOps {
       round(col("o_totalprice"), 4).cast("double"),
       (col("o_orderstatus") === "F").cast("long"))
 
+  /** The boosting rounds of the AdaBoost and gradient-boosting faces
+    * and their oracles. */
+  private val boostRounds = 3
+
   /** Same over any frame: continuous `feature`, 0/1 `target`.
     * Contract: every round's best weighted error must satisfy
     * 0 < ε (a perfect stump would send α to ∞ — boosting is the
     * wrong tool for a separable single feature; ε ≥ ½ is impossible
     * by construction, the polarity mirror guarantees min(ε, 1−ε)). */
-  def adaboostStumpsOn(df: DataFrame, feature: Column, target: Column,
-                       rounds: Int = 3): DataFrame = {
+  def adaboostStumpsOn(df: DataFrame, feature: Column,
+                       target: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = df.select(feature.as("x"),
         when(target === 1L, 1.0).otherwise(-1.0).as("y"))
@@ -646,7 +658,7 @@ object MlOps {
     // per round: (pick frame, the round's aggregate — whose `hits`
     // column measures the ensemble BEFORE this round, i.e. round
     // t−1's accuracy, riding the pass round t needs anyway)
-    val staged = (1 to rounds).map { t =>
+    val staged = (1 to boostRounds).map { t =>
       val wd = col("w").cast(d6)
       val aggCols =
         Seq(sum(when(col("y") > 0, wd).otherwise(zero6)).as("pw"),
@@ -702,7 +714,7 @@ object MlOps {
     val outs = staged.zipWithIndex.map { case ((pick, _), i) =>
       val t = i + 1
       val acc =
-        if (t < rounds) staged(i + 1)._2.select(col("hits"))
+        if (t < boostRounds) staged(i + 1)._2.select(col("hits"))
         else finalAcc
       pick.crossJoin(broadcast(acc)).crossJoin(broadcast(n))
         .select(lit(t.toLong).as("round"), col("idx"), col("pol"),
@@ -747,8 +759,8 @@ object MlOps {
 
   /** Same over any frame: continuous `feature`, continuous
     * `target`. */
-  def gbtStumpsOn(df: DataFrame, feature: Column, target: Column,
-                  rounds: Int = 3): DataFrame = {
+  def gbtStumpsOn(df: DataFrame, feature: Column,
+                  target: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = df.select(feature.as("x"), target.as("y"))
       .localCheckpoint(false) // feeds the decile fit + every round
@@ -765,7 +777,7 @@ object MlOps {
       .withColumn("r", expr(q6("y - f0")))
       .select(Seq(col("x")) ++ (1 to 9).map(k => col(s"t$k")) ++
         Seq(col("r")): _*)
-    val outs = (1 to rounds).map { t =>
+    val outs = (1 to boostRounds).map { t =>
       val rd = col("r").cast(d6)
       val aggCols = Seq(sum(rd).as("st"), count(lit(1)).as("nt")) ++
         (1 to 9).flatMap(k => Seq(
@@ -828,10 +840,10 @@ object MlOps {
     * built programmatically, every CTE MATERIALIZED (each round's
     * base is referenced by the next aggregate, the residual update,
     * and the MSE — the inlining-blowup class). */
-  private[graft] def gbtOracleSql(rounds: Int = 3): String = {
+  private[graft] def gbtOracleSql: String = {
     val q6 = (e: String) => s"floor(($e) * 1e6) / 1e6"
     def rd(e: String) = s"CAST($e AS DECIMAL(20,6))"
-    val steps = (1 to rounds).map { t =>
+    val steps = (1 to boostRounds).map { t =>
       val p = t - 1
       val cands = (1 to 9).map { k =>
         s"SELECT $k AS idx, tt$k AS threshold, sl$k AS sl, nl$k AS nl, " +
@@ -870,7 +882,7 @@ object MlOps {
          |    (SELECT train_mse FROM mse$t) AS train_mse
          |  FROM pick$t)""".stripMargin
     }.mkString(",\n")
-    val unions = (1 to rounds).map(t => s"SELECT * FROM out$t")
+    val unions = (1 to boostRounds).map(t => s"SELECT * FROM out$t")
       .mkString("\nUNION ALL ")
     s"""WITH base00 AS MATERIALIZED (SELECT
        |    CAST(date_diff('day', DATE '1992-01-01', o_orderdate)
@@ -901,10 +913,10 @@ object MlOps {
     * exponentially — the graph_bfs lesson; the first cut exhausted
     * the process fd limit opening orders.parquet hundreds of
     * times. */
-  private[graft] def adaboostOracleSql(rounds: Int = 3): String = {
+  private[graft] def adaboostOracleSql: String = {
     val q6 = (e: String) => s"floor(($e) * 1e6) / 1e6"
     def wd(e: String) = s"CAST($e AS DECIMAL(20,6))"
-    val steps = (1 to rounds).map { t =>
+    val steps = (1 to boostRounds).map { t =>
       val p = t - 1
       val cands = (1 to 9).flatMap { k =>
         Seq(
@@ -954,7 +966,7 @@ object MlOps {
          |     FROM base$t) AS accuracy
          |  FROM mult$t)""".stripMargin
     }.mkString(",\n")
-    val unions = (1 to rounds).map(t => s"SELECT * FROM out$t")
+    val unions = (1 to boostRounds).map(t => s"SELECT * FROM out$t")
       .mkString("\nUNION ALL ")
     s"""WITH base0 AS MATERIALIZED (SELECT
        |    CAST(round(o_totalprice, 4) AS DOUBLE) AS x,

@@ -115,8 +115,8 @@ object WavCodec {
     * (non-PCM, non-8-bit, non-mono — the documented contract of this
     * kernel) return None, truncated payloads clamp to complete
     * frames, zero complete windows is junk. */
-  def envHash(b: Array[Byte], win: Int = 16): Option[Long] = {
-    if (win <= 0) return None
+  def envHash(b: Array[Byte]): Option[Long] = {
+    val win = 16
     if (b.length < 44) return None
     parseHeader(b).flatMap { h =>
       if (h.bits != 8 || h.channels != 1) None
@@ -699,8 +699,9 @@ object MultimodalOps {
     * identically; an unrounded threshold could flip a boundary row on
     * last-ulp float noise). Row-local flatMap end to end — no shuffle
     * before the caller's sink. */
-  def mediaGate(s: SparkSession, d: String,
-                minRms: Double = 0.55, minMeanG: Double = 128.0): DataFrame = {
+  def mediaGate(s: SparkSession, d: String): DataFrame = {
+    val minRms = 0.55
+    val minMeanG = 128.0
     import s.implicits._
     val ids = Tables.spread(Tables.documents(s, d).select(col("doc_id")))
       .as[Long]
@@ -720,6 +721,12 @@ object MultimodalOps {
       .orderBy(col("doc_id"))
   }
 
+  /** The keyframe stride and the shot-cut luma threshold (milli
+    * units) of [[videoSample]] and its oracle; the video fingerprint
+    * samples at the same stride. */
+  private val every = 3
+  private val cutTauMilli = 20000L
+
   /** Video FRAME SAMPLING — the decode → sample-every-k → per-frame
     * feature chain a video-curation pipeline runs (keyframe
     * extraction, shot detection, thumbnail scoring): each document
@@ -735,8 +742,7 @@ object MultimodalOps {
     * closed integer form and the entry is fully DuckDB-oracled —
     * including the codec's length-validation walk. Row-local
     * flatMap + one bounded per-key window; no corpus-wide shuffle. */
-  def videoSample(s: SparkSession, d: String, every: Int = 3,
-                  cutTauMilli: Long = 20000L): DataFrame = {
+  def videoSample(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val ids = Tables.spread(Tables.documents(s, d).select(col("doc_id")))
@@ -759,8 +765,7 @@ object MultimodalOps {
   /** DuckDB replica of [[videoSample]]: frame count and every pixel
     * recomputed from the synthesis formula over ranges — pure integer
     * arithmetic end to end, same truncating mean and lag window. */
-  private[graft] def videoSampleOracleSql(every: Int = 3,
-                                          cutTauMilli: Long = 20000L): String =
+  private[graft] def videoSampleOracleSql: String =
     s"""WITH p AS (SELECT doc_id, 8 + (doc_id % 8) AS nf FROM documents),
        |f AS (SELECT doc_id, nf, fi FROM p,
        |  LATERAL (SELECT unnest(range(0, nf)) AS fi)
@@ -800,12 +805,12 @@ object MultimodalOps {
     * corpus size. Because synthesis and sampling arithmetic are pure
     * closed-form integers, the WHOLE pipeline — codec included — is
     * DuckDB-oracled (the mm_extract precedent). */
-  def phashNearDup(s: SparkSession, d: String, grp: Int = 5): DataFrame = {
+  def phashNearDup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ids = Tables.spread(Tables.documents(s, d).select(col("doc_id")))
       .as[Long]
     val hashed = ids.flatMap { id =>
-      BmpCodec.ahash(MmSynth.bmpNearBytes(id, grp), 4, 4).map(hv => (id, hv))
+      BmpCodec.ahash(MmSynth.bmpNearBytes(id), 4, 4).map(hv => (id, hv))
     }.toDF("doc_id", "phash")
     val fams = hashed.groupBy(col("phash"))
       .agg(count(lit(1)).as("n_docs"))
@@ -826,12 +831,12 @@ object MultimodalOps {
     * the image face: row-local synth + hash, one fixed-width-key
     * count, one AQE-sized equi-join. Closed-form synth + pure integer
     * quantization ⇒ the whole pipeline is DuckDB-oracled. */
-  def audioFpNearDup(s: SparkSession, d: String, grp: Int = 5): DataFrame = {
+  def audioFpNearDup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ids = Tables.spread(Tables.documents(s, d).select(col("doc_id")))
       .as[Long]
     val hashed = ids.flatMap { id =>
-      WavCodec.envHash(MmSynth.wavNearBytes(id, grp)).map(hv => (id, hv))
+      WavCodec.envHash(MmSynth.wavNearBytes(id)).map(hv => (id, hv))
     }.toDF("doc_id", "fp")
     val fams = hashed.groupBy(col("fp"))
       .agg(count(lit(1)).as("n_docs"))
@@ -857,13 +862,12 @@ object MultimodalOps {
     * equi-join back — the dedup_exact posture at any corpus size.
     * Closed-form synth + integer luma deltas + standard md5 ⇒ the
     * whole pipeline, codec included, is DuckDB-oracled. */
-  def videoFpNearDup(s: SparkSession, d: String, grp: Int = 5,
-                     every: Int = 3): DataFrame = {
+  def videoFpNearDup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ids = Tables.spread(Tables.documents(s, d).select(col("doc_id")))
       .as[Long]
     val hashed = ids.flatMap { id =>
-      VideoCodec.lumaSeqFp(MmSynth.videoNearBytes(id, grp), every)
+      VideoCodec.lumaSeqFp(MmSynth.videoNearBytes(id), every)
         .map(hv => (id, hv))
     }.toDF("doc_id", "fp")
     val fams = hashed.groupBy(col("fp"))

@@ -44,9 +44,14 @@ import org.apache.spark.sql.functions._
   */
 object Recommend {
 
+  /** The co-occurrence floor, neighbor-list length and basket-size
+    * cap of the item-cosine faces; DIMSUM shares the cap. */
+  private val minCount = 2L
+  private val topK = 5
+  private val maxBasket = 16
+
   /** Exact neighbor lists over order→part baskets (lineitem). */
-  def itemCosine(s: SparkSession, d: String, minCount: Long = 2,
-                 topK: Int = 5, maxBasket: Int = 16): DataFrame =
+  def itemCosine(s: SparkSession, d: String): DataFrame =
     itemCosineOn(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
       minCount, topK, maxBasket)
@@ -124,9 +129,8 @@ object Recommend {
     * |ownership| · topK candidate rows — the neighbor lists cap the
     * fan-out, which is what makes the compose scale (an uncapped
     * item-similarity join would be ownership × co-item). */
-  def userItems(s: SparkSession, d: String, minCount: Long = 2,
-                topK: Int = 5, maxBasket: Int = 16,
-                topN: Int = 3): DataFrame = {
+  def userItems(s: SparkSession, d: String): DataFrame = {
+    val topN = 3
     val owned = Tables.orders(s, d)
       .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("cust"), col("l_partkey").as("item"))
@@ -152,11 +156,13 @@ object Recommend {
   }
 
   /** DIMSUM tier over order→part baskets. */
-  def itemCosineDimsum(s: SparkSession, d: String, gamma: Int = 16,
-                       topN: Int = 50, maxBasket: Int = 16): DataFrame =
+  def itemCosineDimsum(s: SparkSession, d: String): DataFrame = {
+    val gamma = 16
+    val topN = 50
     itemCosineDimsumOn(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
       gamma, topN, maxBasket)
+  }
 
   /** DIMSUM-sampled top-N strongest estimated pairs. Norms join the
     * membership BEFORE pair generation (DIMSUM needs ‖c_i‖ up

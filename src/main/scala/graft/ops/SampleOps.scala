@@ -115,10 +115,10 @@ object SampleOps {
 
   /** Assign each row a leakage-safe split label by key hash:
     * buckets [0, train) → "train", [train, train+holdout) → "val",
-    * the rest → "test". Defaults ≈ 80/10/10. */
-  def hashSplit(df: DataFrame, key: String, train: Int = 204,
-                holdout: Int = 26): DataFrame = {
-    require(train >= 0 && holdout >= 0 && train + holdout <= 256)
+    * the rest → "test": 204/26/26 of 256 buckets ≈ 80/10/10. */
+  def hashSplit(df: DataFrame, key: String): DataFrame = {
+    val train = 204
+    val holdout = 26
     val b = bucket(col(key))
     df.withColumn("split",
       when(below(b, train), "train")

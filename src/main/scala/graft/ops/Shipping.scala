@@ -90,9 +90,10 @@ object Shipping {
     * orders" audit. Offset-integer gates reach the lineitem scan as
     * pushed predicates BEFORE the orders join; counting is exact
     * LONG. One shuffle to the 2-row mode grain. */
-  def shipmodePriority(s: SparkSession, d: String,
-                       modeA: String = "SHIP", modeB: String = "RAIL",
-                       year: Int = 1997): DataFrame = {
+  def shipmodePriority(s: SparkSession, d: String): DataFrame = {
+    val modeA = "SHIP"
+    val modeB = "RAIL"
+    val year = 1997
     val li = withShipping(Tables.lineitem(s, d))
       .filter(col("l_shipmode").isin(modeA, modeB) &&
         col("__commit_off") < col("__receipt_off") &&

@@ -162,6 +162,16 @@ object SimilarityOps {
       .orderBy(col("label"))
   }
 
+  /** The ANN family's settings: neighbors per query, queries per
+    * audit and IVF cells probed per query. */
+  private val annK = 5
+  private val annQueries = 10
+  private val annProbe = 2
+
+  /** The LSH hyperplane count and the sampled IVF fit's build cap. */
+  private val lshBits = 4
+  private val sampleMaxVectors = 16384
+
   /** k-nearest-neighbor CLASSIFICATION over the embedding space —
     * the non-parametric baseline every embedding-quality check runs:
     * hold out every 10th vector, predict its label by majority vote
@@ -177,8 +187,8 @@ object SimilarityOps {
     * measured as such in SCALING.md); the 100 TB face is
     * [[knnClassifyIvf]] — the SAME [[knnVote]] over an IVF shortlist,
     * oracled and measured at ~3× per 10× data. */
-  def knnClassify(s: SparkSession, d: String, k: Int = 5): DataFrame =
-    knnClassifyOn(Tables.embeddings(s, d), k)
+  def knnClassify(s: SparkSession, d: String): DataFrame =
+    knnClassifyOn(Tables.embeddings(s, d), annK)
 
   /** Same over any (vec_id, embedding, label) frame. */
   def knnClassifyOn(emb: DataFrame, k: Int): DataFrame = {
@@ -229,9 +239,8 @@ object SimilarityOps {
     * on the cell id, which AQE broadcasts while the holdout is small
     * and degrades to a shuffled hash join at scale. Per-query work is
     * O(nProbe·√n) instead of O(n). */
-  def knnClassifyIvf(s: SparkSession, d: String,
-                     k: Int = 5, nProbe: Int = 2): DataFrame =
-    knnClassifyIvfOn(Tables.embeddings(s, d).localCheckpoint(false), k, nProbe)
+  def knnClassifyIvf(s: SparkSession, d: String): DataFrame =
+    knnClassifyIvfOn(Tables.embeddings(s, d).localCheckpoint(false), annK, annProbe)
 
   /** Same over any (vec_id, embedding, label) frame. */
   def knnClassifyIvfOn(emb: DataFrame, k: Int, nProbe: Int): DataFrame = {
@@ -283,6 +292,11 @@ object SimilarityOps {
       .orderBy(col("vec_id"))
   }
 
+  /** The output width and plane seed of [[randomProject]] and its
+    * oracle. */
+  private val rpOutDim = 8
+  private val rpSeed = 7L
+
   /** Johnson-Lindenstrauss random projection — the DIMENSIONALITY
     * tier of the compression ladder ([[quantizeInt8]] shrinks the
     * element type, this shrinks the element COUNT): project d=64 →
@@ -312,10 +326,9 @@ object SimilarityOps {
     * contract). The 1e-6 input quantization perturbs each coordinate
     * by < 2⁻¹⁹ of a unit vector — far inside the JL distortion the
     * spec bounds. */
-  def randomProject(s: SparkSession, d: String,
-                    outDim: Int = 8, seed: Long = 7L): DataFrame = {
-    val scale = 1.0 / math.sqrt(outDim.toDouble)
-    val proj = array(lshPlanes(outDim, seed).map { p =>
+  def randomProject(s: SparkSession, d: String): DataFrame = {
+    val scale = 1.0 / math.sqrt(rpOutDim.toDouble)
+    val proj = array(lshPlanes(rpOutDim, rpSeed).map { p =>
       // plane pre-quantized to 1e-6 integer units; the values
       // (< ~2^23) are exact as floats, so the codegen'd kernel reads
       // them losslessly. The vector side quantizes INSIDE the kernel.
@@ -337,24 +350,24 @@ object SimilarityOps {
     * free to differ: every term is an exact integer-valued double.
     * The BIGINT cast mirrors Spark's floor→LONG so a -0.0 floor
     * result cannot render as "-0.0" on one side only. */
-  private[graft] def rpOracleSql(outDim: Int = 8, seed: Long = 7L): String = {
-    val scale = (1.0 / math.sqrt(outDim.toDouble)).toString
+  private[graft] def rpOracleSql: String = {
+    val scale = (1.0 / math.sqrt(rpOutDim.toDouble)).toString
     val eq = "list_transform(CAST(embedding AS DOUBLE[]), x -> floor(x * 1000000.0))"
-    val elems = lshPlanes(outDim, seed).map { p =>
+    val elems = lshPlanes(rpOutDim, rpSeed).map { p =>
       val pq = p.map(v => math.floor(v.toDouble * 1000000.0).toString)
         .mkString("CAST([", ", ", "] AS DOUBLE[])")
       s"CAST(floor(list_dot_product($eq, $pq) * $scale / 100000000.0) AS BIGINT) / 10000.0"
     }.mkString("[", ",\n    ", "]")
     s"""WITH p AS (SELECT vec_id, $elems AS proj FROM embeddings)
        |SELECT vec_id, i - 1 AS pos, proj[i] AS value
-       |FROM p, LATERAL (SELECT unnest(range(1, ${outDim + 1})) AS i)
+       |FROM p, LATERAL (SELECT unnest(range(1, ${rpOutDim + 1})) AS i)
        |ORDER BY vec_id, pos""".stripMargin
   }
 
   /** Exact top-k: broadcast the query set, score every corpus vector,
     * rank per query. */
   def bruteForceTopK(s: SparkSession, d: String,
-                     k: Int = 5, nQueries: Int = 10): DataFrame = {
+                     k: Int = annK, nQueries: Int = annQueries): DataFrame = {
     val corpus = Tables.embeddings(s, d)
     rankTopK(corpus.crossJoin(broadcast(queries(corpus, nQueries)))
       .filter(col("vec_id") =!= col("q_id")), k)
@@ -385,9 +398,9 @@ object SimilarityOps {
     * integer comparison — no float ordering anywhere after the
     * rounding; a double score like 0.7·0.1235 = 0.08645 is a true
     * 4dp half-boundary an engine-side round() would split on. */
-  def mmrRerank(s: SparkSession, d: String, k: Int = 5,
-                shortlist: Int = 20, nQueries: Int = 10,
-                lam10: Int = 7): DataFrame =
+  def mmrRerank(s: SparkSession, d: String, k: Int = annK,
+                shortlist: Int = mmrShortlist, nQueries: Int = annQueries,
+                lam10: Int = mmrLam10): DataFrame =
     mmrRerankOn(Tables.embeddings(s, d), k, shortlist, nQueries, lam10)
 
   /** Same over any (vec_id, embedding) frame; queries = the
@@ -414,6 +427,11 @@ object SimilarityOps {
     mmrGreedy(short, k, lam10)
   }
 
+  /** The MMR shortlist width and relevance weight (tenths) of
+    * [[mmrRerankIvf]] and both MMR oracles. */
+  private val mmrShortlist = 20
+  private val mmrLam10 = 7
+
   /** The SCALE-tier face: same greedy re-rank over an IVF shortlist
     * ([[ivfTopK]] with k = the shortlist width) instead of the exact
     * scored corpus — the two-stage retrieval a 100 TB index actually
@@ -421,19 +439,17 @@ object SimilarityOps {
     * queries×shortlist-row broadcast join); rel re-integerizes from
     * the IVF face's own 4dp cosine, so the rel grid is identical to
     * the exact face's wherever both retrieve the same candidate. */
-  def mmrRerankIvf(s: SparkSession, d: String, k: Int = 5,
-                   shortlist: Int = 20, nQueries: Int = 10,
-                   lam10: Int = 7): DataFrame = {
+  def mmrRerankIvf(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     // broadcast the SMALL side: the shortlist is queries×shortlist
     // rows, the corpus is the 100 TB operand — corpus-side broadcast
     // would OOM at exactly the scale this IVF face exists for
     val short = emb.select(col("vec_id"), col("embedding"))
-      .join(broadcast(ivfTopK(s, d, k = shortlist, nQueries = nQueries)
+      .join(broadcast(ivfTopK(s, d, k = mmrShortlist, nQueries = annQueries)
         .select(col("q_id"), col("vec_id"),
           round(col("cosine") * 10000.0).cast("long").as("rel_i"))),
         Seq("vec_id"))
-    mmrGreedy(short, k, lam10)
+    mmrGreedy(short, annK, mmrLam10)
   }
 
   /** The config-bounded greedy stage shared by the exact and IVF
@@ -494,16 +510,14 @@ object SimilarityOps {
     * two paths — anti-membership and max-sim — the inlining-blowup
     * class). All selection arithmetic is BIGINT, so the replay is
     * exact given the shared round(cos·10⁴) integerization. */
-  private[graft] def mmrOracleSql(k: Int = 5, shortlist: Int = 20,
-                                  nQueries: Int = 10,
-                                  lam10: Int = 7): String = {
+  private[graft] def mmrOracleSql: String = {
     val prefix =
       s"""eq AS MATERIALIZED (SELECT vec_id, embedding,
          |    list_transform(CAST(embedding AS DOUBLE[]),
          |      x -> floor(x * 1000000.0)) AS qv
          |  FROM embeddings),
          |q AS MATERIALIZED (SELECT vec_id AS q_id, qv AS q_qv
-         |  FROM eq WHERE vec_id < $nQueries),
+         |  FROM eq WHERE vec_id < $annQueries),
          |sc AS MATERIALIZED (SELECT q_id, e.vec_id AS vec_id,
          |    e.embedding AS emb,
          |    CAST(round((CASE WHEN list_dot_product(q_qv, q_qv) = 0
@@ -516,8 +530,8 @@ object SimilarityOps {
          |short AS MATERIALIZED (SELECT q_id, vec_id, emb, rel_i
          |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id
          |      ORDER BY rel_i DESC, vec_id) AS rk FROM sc)
-         |  WHERE rk <= $shortlist)""".stripMargin
-    mmrGreedyOracle(prefix, k, lam10)
+         |  WHERE rk <= $mmrShortlist)""".stripMargin
+    mmrGreedyOracle(prefix, annK, mmrLam10)
   }
 
   /** DuckDB replay of [[mmrRerankIvf]]: the ann_ivf_topk assignment
@@ -525,16 +539,14 @@ object SimilarityOps {
     * tiebreaks) widened to the shortlist, rel re-integerized from
     * the IVF face's own 4dp cosine exactly as the Spark side does
     * (round(round(cos,4)·10⁴)), then the SAME greedy CTEs. */
-  private[graft] def mmrIvfOracleSql(k: Int = 5, shortlist: Int = 20,
-                                     nQueries: Int = 10, nProbe: Int = 2,
-                                     lam10: Int = 7): String = {
+  private[graft] def mmrIvfOracleSql: String = {
     val prefix =
-      s"""${ivfChainCtes(nQueries, nProbe)},
+      s"""${ivfChainCtes(annQueries, annProbe)},
          |short AS MATERIALIZED (SELECT r.q_id, r.vec_id, e.emb,
          |    CAST(round(r.cosine * 10000) AS BIGINT) AS rel_i
          |  FROM r JOIN e ON e.vec_id = r.vec_id
-         |  WHERE rank <= $shortlist)""".stripMargin
-    mmrGreedyOracle(prefix, k, lam10)
+         |  WHERE rank <= $mmrShortlist)""".stripMargin
+    mmrGreedyOracle(prefix, annK, mmrLam10)
   }
 
   /** The shared greedy-round CTEs over a preceding
@@ -609,9 +621,11 @@ object SimilarityOps {
     * IDCG sums the same quantized gain over the ideal prefix
     * (min(n_rel, k)) via a bounded sequence explode — closed-form
     * cross-engine, no float ever compared. */
-  def rankingEval(s: SparkSession, d: String, k: Int = 10,
-                  nQueries: Int = 20): DataFrame =
+  def rankingEval(s: SparkSession, d: String): DataFrame = {
+    val k = 10
+    val nQueries = 20
     rankingEvalOn(Tables.embeddings(s, d), k, nQueries)
+  }
 
   /** Same over any (vec_id, embedding, label) corpus. */
   def rankingEvalOn(emb: DataFrame, k: Int, nQueries: Int): DataFrame = {
@@ -689,9 +703,8 @@ object SimilarityOps {
     * corpus's iid vectors sign bits keep real signal (planted-signal
     * fixture recalls 1.0 in the spec); a production corpus reads
     * this table before switching its pre-rank to hamming. */
-  def binaryRecall(s: SparkSession, d: String, k: Int = 5,
-                   nQueries: Int = 10): DataFrame =
-    binaryRecallOn(Tables.embeddings(s, d), k, nQueries)
+  def binaryRecall(s: SparkSession, d: String): DataFrame =
+    binaryRecallOn(Tables.embeddings(s, d), annK, annQueries)
 
   /** Same over any (vec_id, embedding) frame; queries are the first
     * `nQueries` vec_ids. */
@@ -720,10 +733,10 @@ object SimilarityOps {
       .orderBy(col("q_id"))
   }
 
-  def mrlRecall(s: SparkSession, d: String, k: Int = 5,
-                nQueries: Int = 10,
-                tiers: Seq[Int] = Seq(16, 32)): DataFrame =
-    mrlRecallOn(Tables.embeddings(s, d), k, nQueries, tiers)
+  def mrlRecall(s: SparkSession, d: String): DataFrame = {
+    val tiers = Seq(16, 32)
+    mrlRecallOn(Tables.embeddings(s, d), annK, annQueries, tiers)
+  }
 
   /** Same over any (vec_id, embedding) frame; queries are the first
     * `nQueries` vec_ids. */
@@ -762,6 +775,12 @@ object SimilarityOps {
     Seq.fill(nBits)(Seq.fill(dim)(rng.nextGaussian().toFloat))
   }
 
+  /** The bucket occupancy [[adaptiveBits]] aims at and its clamp on
+    * the plane count, replayed by the embedding-LSH oracle. */
+  private val targetOccupancy = 32L
+  private val minBits = 4
+  private val maxBits = 16
+
   /** Corpus-adaptive hyperplane count: the smallest `bits` with
     * 2^bits ≥ n/targetOccupancy, clamped to [minBits, maxBits] — so
     * mean bucket occupancy stays ~targetOccupancy as the corpus
@@ -772,8 +791,7 @@ object SimilarityOps {
     * per seed), so plane i is identical at every bits ≥ i+1 and the
     * SQL oracle can embed maxBits planes and mask by a count-derived
     * bit width. */
-  private[graft] def adaptiveBits(n: Long, targetOccupancy: Long = 32,
-                                  minBits: Int = 4, maxBits: Int = 16): Int = {
+  private[graft] def adaptiveBits(n: Long): Int = {
     val cells = math.max(n / targetOccupancy, 2L)
     // ceil(log2(cells)) in exact integer arithmetic — the oracle
     // mirrors it as ceil(log2(greatest(count(*) // occ, 2)))
@@ -795,7 +813,8 @@ object SimilarityOps {
     * bucket id; only same-bucket candidates are scored. Recall trades
     * against nBits. */
   def lshTopK(s: SparkSession, d: String,
-              k: Int = 5, nQueries: Int = 10, nBits: Int = 4): DataFrame = {
+              k: Int = annK, nQueries: Int = annQueries,
+              nBits: Int = lshBits): DataFrame = {
     val corpus = Tables.embeddings(s, d)
       .withColumn("bucket", lshBucket(col("embedding"), nBits))
     val q = queries(Tables.embeddings(s, d), nQueries)
@@ -818,7 +837,8 @@ object SimilarityOps {
     * rounded to 4dp with a cell-id tiebreak so the fit is bit-stable
     * across engines and float-summation orders. */
   def ivfTopK(s: SparkSession, d: String,
-              k: Int = 5, nQueries: Int = 10, nProbe: Int = 2): DataFrame = {
+              k: Int = annK, nQueries: Int = annQueries,
+              nProbe: Int = annProbe): DataFrame = {
     // scanned four times (cell-count fit, two assignment passes, the
     // query subset) — checkpoint once
     val emb = Tables.embeddings(s, d).localCheckpoint(false)
@@ -942,8 +962,9 @@ object SimilarityOps {
     * measures the retrieval quality against brute force the same way
     * the other four tiers are audited. */
   def ivfTopKSampled(s: SparkSession, d: String,
-                     k: Int = 5, nQueries: Int = 10, nProbe: Int = 2,
-                     buildMaxVectors: Int = 16384): DataFrame = {
+                     k: Int = annK, nQueries: Int = annQueries,
+                     nProbe: Int = annProbe,
+                     buildMaxVectors: Int = sampleMaxVectors): DataFrame = {
     require(buildMaxVectors >= 8, s"buildMaxVectors too small: $buildMaxVectors")
     val emb = Tables.embeddings(s, d).localCheckpoint(false)
     val n = emb.count()
@@ -964,12 +985,15 @@ object SimilarityOps {
   /** Recall@k of the bounded-build IVF face (see `recallVsExact`):
     * what the sampled fit costs in retrieval quality, as a checked
     * number — the fifth tier joins the audit family. */
-  def ivfSampledRecall(s: SparkSession, d: String, k: Int = 5,
-                       nQueries: Int = 10, nProbe: Int = 2,
-                       buildMaxVectors: Int = 16384): DataFrame =
+  def ivfSampledRecall(s: SparkSession, d: String, k: Int = annK,
+                       nQueries: Int = annQueries, nProbe: Int = annProbe,
+                       buildMaxVectors: Int = sampleMaxVectors): DataFrame =
     recallVsExact(s, d,
       ivfTopKSampled(s, d, k, nQueries, nProbe, buildMaxVectors),
       k, nQueries)
+
+  /** The exemplars per cell of [[diversitySample]] and its oracle. */
+  private val perCell = 3
 
   /** Diversity sampling over embeddings — the curation question ANN
     * retrieval doesn't answer: not "what is similar to this query"
@@ -984,8 +1008,7 @@ object SimilarityOps {
     * corpus passes + one keyed window; output cells × perCell rows
     * at any corpus size, and the per-cell window partitions on the
     * cell key (never global). */
-  def diversitySample(s: SparkSession, d: String,
-                      perCell: Int = 3): DataFrame = {
+  def diversitySample(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d).localCheckpoint(false)
     val centroids = ivfCentroids(emb,
       emb.filter(col("vec_id") < cellCount(emb)))
@@ -1006,7 +1029,7 @@ object SimilarityOps {
   /** DuckDB replica of [[diversitySample]]: the ivfOracle fit CTEs
     * with the winning sim carried through, then the per-cell
     * exemplar window. */
-  private[graft] def diversityOracleSql(perCell: Int = 3): String = {
+  private[graft] def diversityOracleSql: String = {
     val avgs = (1 to dim).map(i => s"avg(emb[$i])").mkString(", ")
     s"""WITH nc AS (SELECT greatest(8, CAST(floor(sqrt(count(*))) AS BIGINT)) AS n
        |            FROM embeddings),
@@ -1057,8 +1080,9 @@ object SimilarityOps {
     * rescore) is exactly SQL-replicable. ADC partial scores are
     * 4dp-rounded then summed as DECIMAL: exact and associative, so
     * the candidate ranking cannot depend on partial-agg order. */
-  def pqTopK(s: SparkSession, d: String, k: Int = 5, nQueries: Int = 10,
-             m: Int = 8, nCodes: Int = 16, rerank: Int = 50): DataFrame = {
+  def pqTopK(s: SparkSession, d: String, k: Int = annK,
+             nQueries: Int = annQueries, m: Int = pqM,
+             nCodes: Int = pqCodes, rerank: Int = pqRerank): DataFrame = {
     val emb = Tables.embeddings(s, d).localCheckpoint(false)
     val (codes, dtable) = pqIndex(emb, nQueries, m, nCodes)
     adcRescore(codes.join(broadcast(dtable), Seq("j", "code"))
@@ -1157,9 +1181,10 @@ object SimilarityOps {
     * table; ADC rides the SAME DECIMAL-sum contract as pqTopK so
     * candidate ranking is aggregation-order free, and the whole
     * pipeline — both fits included — replays in the DuckDB oracle. */
-  def ivfPqTopK(s: SparkSession, d: String, k: Int = 5, nQueries: Int = 10,
-                nProbe: Int = 2, m: Int = 8, nCodes: Int = 16,
-                rerank: Int = 50): DataFrame = {
+  def ivfPqTopK(s: SparkSession, d: String, k: Int = annK,
+                nQueries: Int = annQueries, nProbe: Int = annProbe,
+                m: Int = pqM, nCodes: Int = pqCodes,
+                rerank: Int = pqRerank): DataFrame = {
     val emb = Tables.embeddings(s, d).localCheckpoint(false)
     val (cells, qCells) = ivfIndex(emb, emb,
       emb.filter(col("vec_id") < cellCount(emb)), nQueries, nProbe)
@@ -1195,8 +1220,8 @@ object SimilarityOps {
     }.mkString(" + ")
 
   /** DuckDB replica of lshTopK. */
-  private[graft] def lshOracleSql(k: Int = 5, nQueries: Int = 10,
-                                  nBits: Int = 4): String =
+  private[graft] def lshOracleSql(k: Int = annK, nQueries: Int = annQueries,
+                                  nBits: Int = lshBits): String =
     s"""WITH b AS (
        |  SELECT vec_id, embedding,
        |    ${bucketSql("embedding", nBits, 42L)} AS bucket
@@ -1217,11 +1242,9 @@ object SimilarityOps {
     * distinct candidate pairs, exact cosine ≥ threshold. Valid while
     * no bucket exceeds the Spark side's maxBucket cap (true at the
     * test SFs by a wide margin), since the cap is a no-op then. */
-  private[graft] def embeddingLshOracleSql(threshold: Double = 0.45,
-                                           nTables: Int = 4,
-                                           targetOccupancy: Long = 32,
-                                           minBits: Int = 4,
-                                           maxBits: Int = 16): String = {
+  private[graft] def embeddingLshOracleSql: String = {
+    val threshold = 0.45
+    val nTables = 4
     // bit width derives from count(*) IN SQL (mirroring adaptiveBits
     // exactly), and the prefix-stable planes let the statement embed
     // maxBits plane literals per table and mask the unused high bits
@@ -1253,9 +1276,9 @@ object SimilarityOps {
   /** DuckDB replica of pqTopK — the whole pipeline (seed codebooks,
     * refinement with FLOAT-cast means, encoding, DECIMAL ADC, exact
     * rescore) step for step, same 4dp rounding and tiebreaks. */
-  private[graft] def pqOracleSql(k: Int = 5, nQueries: Int = 10,
-                                 m: Int = 8, nCodes: Int = 16,
-                                 rerank: Int = 50): String = {
+  private[graft] def pqOracleSql(k: Int = annK, nQueries: Int = annQueries,
+                                 m: Int = pqM, nCodes: Int = pqCodes,
+                                 rerank: Int = pqRerank): String = {
     val sub = dim / m
     val avgs = (1 to sub).map(i => s"avg(sv[$i])").mkString(", ")
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
@@ -1339,8 +1362,8 @@ object SimilarityOps {
        |        ORDER BY cosine DESC, vec_id) AS rank FROM scored)""".stripMargin
   }
 
-  private[graft] def ivfOracleSql(k: Int = 5, nQueries: Int = 10,
-                                  nProbe: Int = 2): String =
+  private[graft] def ivfOracleSql(k: Int = annK, nQueries: Int = annQueries,
+                                  nProbe: Int = annProbe): String =
     s"""WITH ${ivfChainCtes(nQueries, nProbe)}
        |SELECT q_id, vec_id, cosine, rank FROM r
        |WHERE rank <= $k ORDER BY q_id, rank""".stripMargin
@@ -1395,19 +1418,17 @@ object SimilarityOps {
        |        ORDER BY cosine DESC, vec_id) AS rank FROM scored)""".stripMargin
   }
 
-  private[graft] def ivfSampledOracleSql(k: Int = 5, nQueries: Int = 10,
-                                         nProbe: Int = 2,
-                                         buildMaxVectors: Int = 16384): String =
+  private[graft] def ivfSampledOracleSql(
+      k: Int = annK, nQueries: Int = annQueries, nProbe: Int = annProbe,
+      buildMaxVectors: Int = sampleMaxVectors): String =
     s"""WITH ${ivfSampledChainCtes(nQueries, nProbe, buildMaxVectors)}
        |SELECT q_id, vec_id, cosine, rank FROM r
        |WHERE rank <= $k ORDER BY q_id, rank""".stripMargin
 
-  private[graft] def ivfSampledRecallOracleSql(
-      k: Int = 5, nQueries: Int = 10, nProbe: Int = 2,
-      buildMaxVectors: Int = 16384): String =
+  private[graft] def ivfSampledRecallOracleSql: String =
     annRecallOracleSql(
-      ivfSampledOracleSql(k, nQueries, nProbe, buildMaxVectors),
-      k, nQueries)
+      ivfSampledOracleSql(annK, annQueries, annProbe, sampleMaxVectors),
+      annK, annQueries)
 
   /** Measured recall@k of an ANN tier against the exact brute-force
     * face — the routed tiers' retrieval quality as CHECKED numbers
@@ -1439,32 +1460,36 @@ object SimilarityOps {
   }
 
   /** Recall@k of the probe-limited IVF tier (see [[recallVsExact]]). */
-  def ivfRecall(s: SparkSession, d: String, k: Int = 5,
-                nQueries: Int = 10, nProbe: Int = 2): DataFrame =
+  def ivfRecall(s: SparkSession, d: String, k: Int = annK,
+                nQueries: Int = annQueries, nProbe: Int = annProbe): DataFrame =
     recallVsExact(s, d, ivfTopK(s, d, k, nQueries, nProbe = nProbe),
       k, nQueries)
 
   /** Recall@k of the bucket-gated LSH tier (see [[recallVsExact]]). */
-  def lshRecall(s: SparkSession, d: String, k: Int = 5,
-                nQueries: Int = 10, nBits: Int = 4): DataFrame =
+  def lshRecall(s: SparkSession, d: String, k: Int = annK,
+                nQueries: Int = annQueries, nBits: Int = lshBits): DataFrame =
     recallVsExact(s, d, lshTopK(s, d, k, nQueries, nBits), k, nQueries)
 
+  /** The PQ sub-quantizers, codes per sub-quantizer and ADC rerank
+    * depth of the PQ recall faces and oracles. */
+  private val pqM = 8
+  private val pqCodes = 16
+  private val pqRerank = 50
+
   /** Recall@k of the PQ/ADC tier (see [[recallVsExact]]). */
-  def pqRecall(s: SparkSession, d: String, k: Int = 5,
-               nQueries: Int = 10, m: Int = 8, nCodes: Int = 16,
-               rerank: Int = 50): DataFrame =
-    recallVsExact(s, d, pqTopK(s, d, k, nQueries, m, nCodes, rerank),
+  def pqRecall(s: SparkSession, d: String, k: Int = annK,
+               nQueries: Int = annQueries, rerank: Int = pqRerank): DataFrame =
+    recallVsExact(s, d, pqTopK(s, d, k, nQueries, pqM, pqCodes, rerank),
       k, nQueries)
 
   /** Recall@k of the composed IVF·PQ tier (see [[recallVsExact]]) —
     * the audit now covers all four approximate tiers, so the two
     * recall losses (probe gating and ADC quantization) are measured
     * composed as well as separately. */
-  def ivfPqRecall(s: SparkSession, d: String, k: Int = 5,
-                  nQueries: Int = 10, nProbe: Int = 2, m: Int = 8,
-                  nCodes: Int = 16, rerank: Int = 50): DataFrame =
+  def ivfPqRecall(s: SparkSession, d: String, k: Int = annK,
+                  nQueries: Int = annQueries): DataFrame =
     recallVsExact(s, d,
-      ivfPqTopK(s, d, k, nQueries, nProbe, m, nCodes, rerank),
+      ivfPqTopK(s, d, k, nQueries, annProbe, pqM, pqCodes, pqRerank),
       k, nQueries)
 
   /** DuckDB replay of the ANN recall audits: the tier's OWN
@@ -1497,35 +1522,31 @@ object SimilarityOps {
        |FROM bq LEFT JOIN hits USING (q_id)
        |ORDER BY q_id""".stripMargin
 
-  private[graft] def ivfRecallOracleSql(k: Int = 5, nQueries: Int = 10,
-                                        nProbe: Int = 2): String =
-    annRecallOracleSql(ivfOracleSql(k, nQueries, nProbe), k, nQueries)
+  private[graft] def ivfRecallOracleSql: String =
+    annRecallOracleSql(ivfOracleSql(annK, annQueries, annProbe), annK,
+      annQueries)
 
-  private[graft] def lshRecallOracleSql(k: Int = 5, nQueries: Int = 10,
-                                        nBits: Int = 4): String =
-    annRecallOracleSql(lshOracleSql(k, nQueries, nBits), k, nQueries)
+  private[graft] def lshRecallOracleSql: String =
+    annRecallOracleSql(lshOracleSql(annK, annQueries, lshBits), annK,
+      annQueries)
 
-  private[graft] def pqRecallOracleSql(k: Int = 5, nQueries: Int = 10,
-                                       m: Int = 8, nCodes: Int = 16,
-                                       rerank: Int = 50): String =
-    annRecallOracleSql(pqOracleSql(k, nQueries, m, nCodes, rerank),
-      k, nQueries)
+  private[graft] def pqRecallOracleSql: String =
+    annRecallOracleSql(pqOracleSql(annK, annQueries, pqM, pqCodes, pqRerank),
+      annK, annQueries)
 
-  private[graft] def ivfPqRecallOracleSql(k: Int = 5, nQueries: Int = 10,
-                                          nProbe: Int = 2, m: Int = 8,
-                                          nCodes: Int = 16,
-                                          rerank: Int = 50): String =
+  private[graft] def ivfPqRecallOracleSql: String =
     annRecallOracleSql(
-      ivfPqOracleSql(k, nQueries, nProbe, m, nCodes, rerank), k, nQueries)
+      ivfPqOracleSql(annK, annQueries, annProbe, pqM, pqCodes, pqRerank),
+      annK, annQueries)
 
   /** DuckDB replica of [[ivfPqTopK]]: the ivfOracle cell CTEs and the
     * pqOracle codebook CTEs (names prefixed i/p to compose under one
     * WITH), then the cell-gated candidate join, the DECIMAL ADC sum,
     * and the exact rescore — every stage of both fits replayed. */
-  private[graft] def ivfPqOracleSql(k: Int = 5, nQueries: Int = 10,
-                                    nProbe: Int = 2, m: Int = 8,
-                                    nCodes: Int = 16,
-                                    rerank: Int = 50): String = {
+  private[graft] def ivfPqOracleSql(k: Int = annK, nQueries: Int = annQueries,
+                                    nProbe: Int = annProbe, m: Int = pqM,
+                                    nCodes: Int = pqCodes,
+                                    rerank: Int = pqRerank): String = {
     val sub = dim / m
     val cavgs = (1 to dim).map(i => s"avg(emb[$i])").mkString(", ")
     val pavgs = (1 to sub).map(i => s"avg(sv[$i])").mkString(", ")
@@ -1600,7 +1621,7 @@ object SimilarityOps {
     * 4dp assignment with lowest-cell tiebreak) restricted to the
     * corpus split, multi-probe shortlist for the holdout, then the
     * ml_knn_classify vote replayed over the shortlist. */
-  private[graft] def knnIvfOracleSql(k: Int = 5, nProbe: Int = 2): String = {
+  private[graft] def knnIvfOracleSql: String = {
     val avgs = (1 to dim).map(i => s"avg(emb[$i])").mkString(", ")
     s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
        |           FROM embeddings),
@@ -1631,19 +1652,22 @@ object SimilarityOps {
        |  FROM q CROSS JOIN cents ct),
        |qar AS (SELECT *, row_number() OVER (PARTITION BY q_id
        |          ORDER BY sim DESC, cell) AS rnk FROM qa),
-       |qc AS (SELECT q_id, true_label, q_emb, cell FROM qar WHERE rnk <= $nProbe),
+       |qc AS (SELECT q_id, true_label, q_emb, cell FROM qar WHERE rnk <= $annProbe),
        |scored AS (SELECT qc.q_id, qc.true_label, cl.vec_id, cl.label,
        |    round(${qcosSql("qc.q_emb", "cl.emb")}, 4) AS cosine
        |  FROM cells cl JOIN qc USING (cell)),
        |top AS (SELECT *, row_number() OVER (PARTITION BY q_id
        |          ORDER BY cosine DESC, vec_id) AS r FROM scored),
        |votes AS (SELECT q_id, true_label, label, count(*) AS votes
-       |          FROM top WHERE r <= $k GROUP BY 1, 2, 3),
+       |          FROM top WHERE r <= $annK GROUP BY 1, 2, 3),
        |best AS (SELECT *, row_number() OVER (PARTITION BY q_id
        |           ORDER BY votes DESC, label) AS vr FROM votes)
        |SELECT q_id, true_label, label AS pred_label, votes
        |FROM best WHERE vr = 1 ORDER BY q_id""".stripMargin
   }
+
+  /** The power-iteration rounds of every PCA face and oracle. */
+  private val pcaIters = 6
 
   /** Top principal component of the embedding space by power
     * iteration over an IN-PLAN covariance grid — the variance-
@@ -1670,8 +1694,8 @@ object SimilarityOps {
     * quotient; loadings normalize to max-component = ±1e6.
     * Deterministic to the bit on both engines; doubles appear only in
     * the final unit conversions. */
-  def pcaPower(s: SparkSession, d: String, iters: Int = 6): DataFrame =
-    pcaPowerOn(Tables.embeddings(s, d), iters)
+  def pcaPower(s: SparkSession, d: String): DataFrame =
+    pcaPowerOn(Tables.embeddings(s, d), pcaIters)
 
   /** The shared fit: returns (cx, cov, vf) — the centered exploded
     * frame, the checkpointed covariance grid, and the converged
@@ -1760,8 +1784,8 @@ object SimilarityOps {
     * one narrow map over the data). Same fixed-point contract as the
     * fit; the score surfaces in natural units via one exact double
     * division. */
-  def pcaProject(s: SparkSession, d: String, iters: Int = 6): DataFrame =
-    pcaProjectOn(Tables.embeddings(s, d), iters)
+  def pcaProject(s: SparkSession, d: String): DataFrame =
+    pcaProjectOn(Tables.embeddings(s, d), pcaIters)
 
   /** Same over any (vec_id, embedding) frame. */
   def pcaProjectOn(emb: DataFrame, iters: Int): DataFrame = {
@@ -1795,8 +1819,8 @@ object SimilarityOps {
     * corpus against the broadcast 64-long component — fit cost is
     * grid-sized, apply is corpus-linear. Output long format
     * (vec_id, pos, value), 1e-6-exact. */
-  def pcaRemoveTop(s: SparkSession, d: String, iters: Int = 6): DataFrame =
-    pcaRemoveTopOn(Tables.embeddings(s, d), iters)
+  def pcaRemoveTop(s: SparkSession, d: String): DataFrame =
+    pcaRemoveTopOn(Tables.embeddings(s, d), pcaIters)
 
   /** Same over any (vec_id, embedding) frame. */
   def pcaRemoveTopOn(emb: DataFrame, iters: Int): DataFrame = {
@@ -1823,16 +1847,16 @@ object SimilarityOps {
   /** DuckDB replay of [[pcaRemoveTopOn]] — the shared core CTEs plus
     * the per-vector coefficient and the per-dimension lattice
     * subtraction (HUGEINT stands in for DECIMAL(38,0)). */
-  private[graft] def pcaRemoveTopOracleSql(iters: Int = 6): String =
-    pcaCoreCtes(iters) + ",\n" +
+  private[graft] def pcaRemoveTopOracleSql: String =
+    pcaCoreCtes(pcaIters) + ",\n" +
       s"""dv AS (SELECT cx.vec_id,
          |    CAST(sum(cx.dx * v.v6) AS HUGEINT) AS dxv
-         |  FROM cx JOIN v$iters v ON cx.dim = v.dim GROUP BY 1),
-         |vv AS (SELECT sum(v6 * v6) AS vv FROM v$iters)
+         |  FROM cx JOIN v$pcaIters v ON cx.dim = v.dim GROUP BY 1),
+         |vv AS (SELECT sum(v6 * v6) AS vv FROM v$pcaIters)
          |SELECT cx.vec_id AS vec_id, cx.dim AS pos,
          |  CAST(CAST(cx.dx AS HUGEINT)
          |    - (dv.dxv * v.v6) // vv.vv AS DOUBLE) / 1000000.0 AS value
-         |FROM cx JOIN v$iters v ON cx.dim = v.dim
+         |FROM cx JOIN v$pcaIters v ON cx.dim = v.dim
          |     JOIN dv ON dv.vec_id = cx.vec_id, vv
          |ORDER BY cx.vec_id, pos""".stripMargin
 
@@ -1878,9 +1902,9 @@ object SimilarityOps {
        |$rounds""".stripMargin
   }
 
-  private[graft] def pcaOracleSql(iters: Int = 6): String = {
-    val last = s"v$iters"
-    pcaCoreCtes(iters) + ",\n" +
+  private[graft] def pcaOracleSql: String = {
+    val last = s"v$pcaIters"
+    pcaCoreCtes(pcaIters) + ",\n" +
       s"""wf AS (SELECT c.i, sum(CAST(c.c8 AS HUGEINT) * v.v6) AS w
          |       FROM c JOIN $last v ON c.j = v.dim GROUP BY 1),
          |st AS (SELECT sum(v.v6 * w.w) // sum(v.v6 * v.v6) AS lam8
@@ -1895,12 +1919,12 @@ object SimilarityOps {
 
   /** DuckDB replay of [[pcaProjectOn]] — the same core CTEs plus the
     * per-vector integer dot product with the converged component. */
-  private[graft] def pcaProjectOracleSql(iters: Int = 6): String =
-    pcaCoreCtes(iters) + "\n" +
+  private[graft] def pcaProjectOracleSql: String =
+    pcaCoreCtes(pcaIters) + "\n" +
       s"""SELECT cx.vec_id,
          |  CAST(sum(cx.dx * v.v6) AS DOUBLE) / 1000000000000.0
          |    AS pc1_score
-         |FROM cx JOIN v$iters v ON cx.dim = v.dim
+         |FROM cx JOIN v$pcaIters v ON cx.dim = v.dim
          |GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** Per-dimension STANDARDIZATION (z-scoring / diagonal whitening)

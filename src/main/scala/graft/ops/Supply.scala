@@ -94,10 +94,11 @@ object Supply {
     * supplier join; top-100 via TakeOrderedAndProject on the unique
     * (acctbal desc, n_name, s_name, p_partkey) order — never a full
     * sort. */
-  def minCostSupplier(s: SparkSession, d: String,
-                      regionName: String = "EUROPE",
-                      sizeLo: Int = 10, sizeHi: Int = 30,
-                      partType: String = "LARGE"): DataFrame = {
+  def minCostSupplier(s: SparkSession, d: String): DataFrame = {
+    val regionName = "EUROPE"
+    val sizeLo = 10
+    val sizeHi = 30
+    val partType = "LARGE"
     val p = Tables.part(s, d)
       .filter(col("p_size").between(sizeLo, sizeHi) &&
         col("p_type") === partType)
@@ -134,8 +135,8 @@ object Supply {
     * derived dim before any fact join; nation broadcasts; the
     * lineitem⋈ps composite-key join and the orders join are left to
     * AQE. */
-  def productTypeProfit(s: SparkSession, d: String,
-                        nameWord: String = "red"): DataFrame = {
+  def productTypeProfit(s: SparkSession, d: String): DataFrame = {
+    val nameWord = "red"
     val p = Tables.part(s, d)
       .filter(col("p_name").contains(nameWord))
       .select(col("p_partkey"))
@@ -154,6 +155,9 @@ object Supply {
       .orderBy(col("n_name"), col("o_year").desc)
   }
 
+  /** The nation of the Q11 and Q20 faces. */
+  private val nationName = "NATION_8"
+
   /** TPC-H Q11 (value concentration): parts whose supply value held
     * by one nation's suppliers exceeds fraction 1e-4 of that nation's
     * total. Value is integer CENTS (cost_cents·availqty ≤ ~1e9/row);
@@ -162,8 +166,7 @@ object Supply {
     * (HUGEINT in the oracle) — corpus-scale totals outgrow BIGINT
     * long before 100 TB. The total is a 1-row aggregate broadcast
     * back (the q15 scalar posture). */
-  def valueConcentration(s: SparkSession, d: String,
-                         nationName: String = "NATION_8"): DataFrame = {
+  def valueConcentration(s: SparkSession, d: String): DataFrame = {
     val natSupp = Tables.supplier(s, d)
       .join(broadcast(Tables.nation(s, d)
           .filter(col("n_name") === nationName)),
@@ -189,11 +192,10 @@ object Supply {
     * count(DISTINCT) shuffles (key, suppkey) pairs — dim-bounded,
     * 4/part. Group keys make the (cnt desc, brand, type, size) order
     * total. */
-  def supplierCounts(s: SparkSession, d: String,
-                     exclBrand: String = "Brand#1",
-                     exclType: String = "PROMO",
-                     sizes: Seq[Int] = Seq(49, 14, 23, 45, 19, 3, 36, 9))
-      : DataFrame = {
+  def supplierCounts(s: SparkSession, d: String): DataFrame = {
+    val exclBrand = "Brand#1"
+    val exclType = "PROMO"
+    val sizes = Seq(49, 14, 23, 45, 19, 3, 36, 9)
     val p = Tables.part(s, d)
       .filter(col("p_brand") =!= exclBrand && col("p_type") =!= exclType &&
         col("p_size").isin(sizes.map(Integer.valueOf): _*))
@@ -218,10 +220,9 @@ object Supply {
     * the exact integer 2·availqty > Σqty (quantities integral — no
     * 0.5·double boundary), and reaches supplier as a SEMI join: a
     * supplier with many qualifying parts counts once. */
-  def qtyThresholdSuppliers(s: SparkSession, d: String,
-                            namePrefix: String = "red",
-                            yr: Int = 1996,
-                            nationName: String = "NATION_8"): DataFrame = {
+  def qtyThresholdSuppliers(s: SparkSession, d: String): DataFrame = {
+    val namePrefix = "red"
+    val yr = 1996
     val p = Tables.part(s, d)
       .filter(col("p_name").startsWith(namePrefix))
       .select(col("p_partkey"))

@@ -45,7 +45,8 @@ object TextOps {
     * thing that changes). Novelty publishes through
     * [[ExactRatio.r4]]. Contract: candidates with fewer than k tokens
     * carry no grams and drop (matching the oracle's derivation). */
-  def novelty(s: SparkSession, d: String, k: Int = 3): DataFrame = {
+  def novelty(s: SparkSession, d: String): DataFrame = {
+    val k = 3
     val docs = Tables.documents(s, d)
     noveltyOn(docs.filter(col("doc_id") % 2 === 0),
       docs.filter(col("doc_id") % 2 =!= 0), k)
@@ -287,9 +288,12 @@ object TextOps {
     * 1024 counters — the fixed-memory frequency table a streaming or
     * multi-tenant profiler keeps when even the vocabulary doesn't
     * fit. */
-  def countMin(s: SparkSession, d: String, depth: Int = 4,
-               width: Int = 256, k: Int = 10): DataFrame =
+  def countMin(s: SparkSession, d: String): DataFrame = {
+    val depth = 4
+    val width = 256
+    val k = 10
     countMinOn(Tables.documents(s, d), depth, width, k)
+  }
 
   /** Same over any (doc_id, text) frame. */
   def countMinOn(corpus: DataFrame, depth: Int, width: Int,
@@ -328,9 +332,11 @@ object TextOps {
     * width. Chunk starts cover every token (the final windows may be
     * shorter than `chunkTokens`); emitted columns are
     * (doc_id, chunk_id, chunk, n_tokens). */
-  def chunk(s: SparkSession, d: String, chunkTokens: Int = 64,
-            overlap: Int = 16): DataFrame =
+  def chunk(s: SparkSession, d: String): DataFrame = {
+    val chunkTokens = 64
+    val overlap = 16
     chunkOn(Tables.documents(s, d), chunkTokens, overlap)
+  }
 
   /** Same over any (doc_id, text) frame. */
   def chunkOn(docs: DataFrame, chunkTokens: Int, overlap: Int): DataFrame = {
@@ -371,8 +377,10 @@ object TextOps {
     * doc_id, running-sum within each partition, then add each
     * partition's broadcast cumulative offset. The only global window
     * runs over one row per partition. */
-  def pack(s: SparkSession, d: String, ctxLen: Int = 128): DataFrame =
+  def pack(s: SparkSession, d: String): DataFrame = {
+    val ctxLen = 128
     packOn(Tables.documents(s, d), ctxLen)
+  }
 
   /** Same over any (doc_id, text) frame. */
   def packOn(docs: DataFrame, ctxLen: Int): DataFrame = {
@@ -798,6 +806,9 @@ object TextOps {
       .orderBy(col("doc_id"))
   }
 
+  /** The top-list length of the collocation and RAKE faces. */
+  private val topN = 20
+
   /** Collocation mining: the adjacent word pairs that stick together
     * far more than chance — pointwise mutual information over corpus
     * bigrams, PMI(a,b) = ln( p(a,b) / (p(a)·p(b)) ). The phrase
@@ -814,9 +825,10 @@ object TextOps {
     * the rare-pair PMI pathology (a pair seen once between two rare
     * words scores absurdly high) BEFORE the joins, which also keeps
     * the joined row count honest at scale. */
-  def collocations(s: SparkSession, d: String,
-                   topN: Int = 20, minCount: Int = 5): DataFrame =
+  def collocations(s: SparkSession, d: String): DataFrame = {
+    val minCount = 5
     collocationsOn(Tables.documents(s, d), topN, minCount)
+  }
 
   /** Same over any (doc_id, text) frame. */
   def collocationsOn(docs: DataFrame,
@@ -859,7 +871,7 @@ object TextOps {
     * phrase sums quantize to DECIMAL (order- and engine-independent);
     * the split pattern avoids lookaround (RE2-safe, shared verbatim
     * with the oracle). */
-  def rake(s: SparkSession, d: String, topN: Int = 20): DataFrame =
+  def rake(s: SparkSession, d: String): DataFrame =
     rakeOn(Tables.documents(s, d), topN)
 
   private val rakeSplit = "[.,;:!?]+|\\b(?:the|a|and|of|to|in|is)\\b"
@@ -937,10 +949,13 @@ object TextOps {
     * to DECIMAL before the per-doc sum — scores are identical under
     * any aggregation order and any engine's libm. Top-k is a
     * TakeOrdered on (score desc, doc_id): no global sort. */
-  def bm25(s: SparkSession, d: String,
-           terms: Seq[String] = Seq("spark", "stream", "vector"),
-           k: Int = 20, k1: Double = 1.2, b: Double = 0.75): DataFrame =
+  def bm25(s: SparkSession, d: String): DataFrame = {
+    val terms = Seq("spark", "stream", "vector")
+    val k = 20
+    val k1 = 1.2
+    val b = 0.75
     bm25On(Tables.documents(s, d), terms, k, k1, b)
+  }
 
   /** Same over any (doc_id, text) frame. */
   def bm25On(corpus: DataFrame, terms: Seq[String], k: Int,
@@ -1067,9 +1082,10 @@ object TextOps {
     * bans); per bucket: docs, exact margin range, accuracy. Single-
     * class degenerate docs (no runner-up) take a sentinel wide margin
     * and land in the top band, documented. */
-  def nbCalibration(s: SparkSession, d: String,
-                    buckets: Int = 5): DataFrame =
+  def nbCalibration(s: SparkSession, d: String): DataFrame = {
+    val buckets = 5
     nbCalibrationOn(Tables.documents(s, d), buckets)
+  }
 
   /** Same over any (doc_id, lang, text) frame. */
   def nbCalibrationOn(corpus: DataFrame, buckets: Int): DataFrame = {
@@ -1342,6 +1358,10 @@ object TextOps {
       .orderBy(col("lang"))
   }
 
+  /** The BPE merge rounds of the tokenizer faces, their oracle and
+    * the tokenizer-grain pack faces. */
+  private[graft] val bpeRounds = 3
+
   /** Distributed BPE-style merge training — the tokenizer-training
     * step of an LLM data pipeline (Sennrich et al. 2016's pair-merge
     * loop, at word granularity): each round counts every ADJACENT
@@ -1376,9 +1396,10 @@ object TextOps {
     * left-to-right non-overlapping, making the rewrite — and thus
     * the whole training loop — bit-identical cross-engine.
     */
-  def bpeMerges(s: SparkSession, d: String, rounds: Int = 3,
-                topTokens: Int = 10): DataFrame =
-    bpeMergesOn(Tables.documents(s, d), rounds, topTokens)
+  def bpeMerges(s: SparkSession, d: String): DataFrame = {
+    val topTokens = 10
+    bpeMergesOn(Tables.documents(s, d), bpeRounds, topTokens)
+  }
 
   private val bpeUs = "\u001f"
   private def bpeTokens(sc: Column): Column =
@@ -1447,8 +1468,8 @@ object TextOps {
     * round, so cost stays linear in corpus size. Oracle unrolls the
     * train CTEs on the even half and replays the identical
     * double-replace on the odd half. */
-  def bpeEncode(s: SparkSession, d: String, rounds: Int = 3): DataFrame =
-    bpeEncodeOn(Tables.documents(s, d), rounds)
+  def bpeEncode(s: SparkSession, d: String): DataFrame =
+    bpeEncodeOn(Tables.documents(s, d), bpeRounds)
 
   /** Same over any (doc_id, text) frame. */
   def bpeEncodeOn(docs: DataFrame, rounds: Int): DataFrame = {
@@ -1482,7 +1503,7 @@ object TextOps {
     * (the text previously inlined there verbatim) and the BPE
     * packing faces nest it as their token-stream CTE — one chain,
     * every consumer, no drift. */
-  private[graft] def bpeEncodeOracleSql(rounds: Int = 3): String = {
+  private[graft] def bpeEncodeOracleSql(rounds: Int = bpeRounds): String = {
     // rounds = 0 would emit an unparseable self-join ("FROM ap0 JOIN
     // ap0 ON ap0.doc_id = ap0.doc_id") in the cnts CTE — refuse it at
     // the generator rather than ship invalid SQL (ADVICE r15)

@@ -14,6 +14,7 @@ import org.apache.spark.sql.functions._
   * driver round-trip.
   */
 object TimeSeriesOps {
+  import graft.streaming.Versions.{epochs, keepVersions}
 
   /** Daily gap-filled resample of orders counts (reference cell 10:
     * epoch-truncate → reference range → left join → zero-fill). */
@@ -67,6 +68,11 @@ object TimeSeriesOps {
       (le.cast("double") >= lit(p) * n - slack)
   }
 
+  /** The GK sketch accuracy and the rank slack δ of both checked
+    * percentile faces. */
+  private val accuracy = 10000
+  private val delta = 0.005
+
   /** Driver-checkable SCALE face of [[dailyPercentiles]] (the
     * declared q_percentiles_approx trade, applied to the daily SLO
     * family): the GK sketch (percentile_approx — fixed-size mergeable
@@ -80,9 +86,7 @@ object TimeSeriesOps {
     * sketch outside its rank guarantee breaks the cross-engine hash,
     * promoting the approx tier from rows-only to a real correctness
     * gate ([[Analytics.percentilesChecked]]'s contract, rank-form). */
-  def dailyPercentilesChecked(s: SparkSession, d: String,
-                              accuracy: Int = 10000,
-                              delta: Double = 0.005): DataFrame = {
+  def dailyPercentilesChecked(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
       .select(date_trunc("day", col("ts")).as("day"), col("value"))
     val agg = ev.groupBy(col("day"))
@@ -266,7 +270,8 @@ object TimeSeriesOps {
     * forecasting pipeline derives before training. One shuffle on the
     * series key; the rolling frame is rows-based over the gapless
     * daily aggregate. */
-  def rollingFeatures(s: SparkSession, d: String, windowDays: Int = 7): DataFrame = {
+  def rollingFeatures(s: SparkSession, d: String): DataFrame = {
+    val windowDays = 7
     val daily = Tables.events(s, d)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
@@ -279,6 +284,11 @@ object TimeSeriesOps {
       .orderBy(col("event_type"), col("day"))
   }
 
+  /** The anomaly monitor's trailing window (days) and |z| threshold,
+    * read by [[anomalyZScore]] and both anomaly oracles. */
+  private val anomalyWindowDays = 7
+  private val anomalyThreshold = 2.0
+
   /** Per-series anomaly detection: z-score of each day's count
     * against its TRAILING window (the only window an online monitor
     * has — a centered window would peek at the future). Days whose
@@ -287,13 +297,12 @@ object TimeSeriesOps {
     * division. One shuffle on the series key, same partitioning as
     * every other per-series feature — at scale this composes with
     * them into a single window stage. */
-  def anomalyZScore(s: SparkSession, d: String, windowDays: Int = 7,
-                    threshold: Double = 2.0): DataFrame = {
+  def anomalyZScore(s: SparkSession, d: String): DataFrame = {
     val daily = Tables.events(s, d)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      .rowsBetween(-(windowDays - 1), 0)
+      .rowsBetween(-(anomalyWindowDays - 1), 0)
     val wN = Window.partitionBy(col("event_type")).orderBy(col("day"))
     val z = when(col("__sd") === 0, lit(0.0))
       .otherwise((col("cnt") - col("__mean")) / col("__sd"))
@@ -301,10 +310,10 @@ object TimeSeriesOps {
       .withColumn("__n", row_number().over(wN))
       .withColumn("__mean", avg(col("cnt")).over(w))
       .withColumn("__sd", coalesce(stddev_samp(col("cnt")).over(w), lit(0.0)))
-      .filter(col("__n") >= windowDays)
+      .filter(col("__n") >= anomalyWindowDays)
       .select(col("event_type"), col("day"), col("cnt"),
         round(z, 4).as("z"),
-        (abs(z) >= threshold).as("is_anomaly"))
+        (abs(z) >= anomalyThreshold).as("is_anomaly"))
       .orderBy(col("event_type"), col("day"))
   }
 
@@ -324,9 +333,11 @@ object TimeSeriesOps {
     * matches AT MOST one version; facts before the first version
     * null-fill (left join), which is the honest answer, not a row
     * drop. */
-  def pitJoin(facts: DataFrame, dim: DataFrame, keys: Seq[String],
-              factTs: String = "ts", from: String = "valid_from",
-              to: String = "valid_to"): DataFrame = {
+  def pitJoin(facts: DataFrame, dim: DataFrame,
+              keys: Seq[String]): DataFrame = {
+    val factTs = "ts"
+    val from = "valid_from"
+    val to = "valid_to"
     val f = facts.as("f")
     val dm = dim.as("d")
     val cond = keys.map(k => col(s"f.$k") === col(s"d.$k")).reduce(_ && _) &&
@@ -337,6 +348,9 @@ object TimeSeriesOps {
       .select(facts.columns.map(c => col(s"f.$c")) ++
         dimCols.map(c => col(s"d.$c")): _*)
   }
+
+  /** The smoothing factor of [[ewma]] and both EWMA oracles. */
+  private val ewmaAlpha = 0.3
 
   /** Exponentially weighted moving average per series — the smoothing
     * that weights recent observations most (the single-parameter
@@ -357,7 +371,7 @@ object TimeSeriesOps {
     * boundaries where Spark's decimal-string HALF_UP and DuckDB's
     * float round disagree by one ulp — the explicit form is four IEEE
     * ops and bit-identical by construction. */
-  def ewma(s: SparkSession, d: String, alpha: Double = 0.3): DataFrame = {
+  def ewma(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val daily = Tables.events(s, d)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
@@ -369,7 +383,7 @@ object TimeSeriesOps {
         val rows = it.toArray.sortBy(_._2.getTime)
         var e = 0.0
         rows.iterator.zipWithIndex.map { case ((_, day, y), i) =>
-          e = if (i == 0) y.toDouble else alpha * y + (1 - alpha) * e
+          e = if (i == 0) y.toDouble else ewmaAlpha * y + (1 - ewmaAlpha) * e
           (k, day, y, e)
         }
       }
@@ -404,6 +418,9 @@ object TimeSeriesOps {
         .agg(count(lit(1)).as("cnt")),
       period)
 
+  /** The weekly season of the strength and Fourier faces. */
+  private val seasonPeriod = 7
+
   /** Per-series trend/seasonality STRENGTH (the STL feature pair of
     * Wang-Smith-Hyndman / the tsfeatures literature): F_seasonal =
     * max(0, 1 − var(resid)/var(seasonal+resid)) and F_trend likewise
@@ -417,9 +434,8 @@ object TimeSeriesOps {
     * in double once (the q_ttest recipe), zero-variance denominators
     * define strength 0. Cost = the decompose plan + one series-key
     * aggregate. */
-  def seasonalStrength(s: SparkSession, d: String,
-                       period: Int = 7): DataFrame =
-    seasonalStrengthOn(seasonalDecompose(s, d, period))
+  def seasonalStrength(s: SparkSession, d: String): DataFrame =
+    seasonalStrengthOn(seasonalDecompose(s, d, seasonPeriod))
 
   /** Same over any (event_type, …, trend, seasonal, resid) frame. */
   def seasonalStrengthOn(dec: DataFrame): DataFrame = {
@@ -471,6 +487,12 @@ object TimeSeriesOps {
       .orderBy(col("event_type"), col("day"))
   }
 
+  /** The changepoint scan's window (days) and minimum score, read by
+    * [[changepoints]], both changepoint oracles and the versioned
+    * changepoint audit. */
+  private[graft] val changepointWindow = 7
+  private[graft] val changepointMinScore = 3.0
+
   /** Per-series CHANGEPOINT detection — the offline two-window scan:
     * at each day, compare the mean of the `w` days strictly BEFORE
     * against the mean of the `w` days FROM here (the candidate new
@@ -483,13 +505,12 @@ object TimeSeriesOps {
     * the raw shift so a flat series that jumps still flags. Two rows
     * frames on ONE (series, day) shuffle — composes with the other
     * per-series features into a single window stage. */
-  def changepoints(s: SparkSession, d: String, w: Int = 7,
-                   minScore: Double = 3.0): DataFrame =
+  def changepoints(s: SparkSession, d: String): DataFrame =
     changepointsOn(
       Tables.events(s, d)
         .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
         .agg(count(lit(1)).as("cnt")),
-      w, minScore)
+      changepointWindow, changepointMinScore)
 
   /** Same scan over any (event_type, day, cnt) daily frame. */
   def changepointsOn(daily: DataFrame, w: Int,
@@ -541,16 +562,15 @@ object TimeSeriesOps {
   /** DuckDB replica of [[anomalyZScore]] (the ts_anomaly oracle):
     * trailing-window z-score, shared stddev_samp parity, the
     * zero-variance window pins z = 0, warm-up days emit nothing. */
-  private[graft] def anomalyOracleSql(windowDays: Int = 7,
-                                      threshold: Double = 2.0): String =
-    anomalyCoreSql(windowDays) +
+  private[graft] def anomalyOracleSql: String =
+    anomalyCoreSql(anomalyWindowDays) +
       s"""
          |SELECT event_type, day, cnt,
          |  round(CASE WHEN sd = 0 THEN 0.0 ELSE (cnt - mean) / sd END, 4)
          |    AS z,
          |  (abs(CASE WHEN sd = 0 THEN 0.0 ELSE (cnt - mean) / sd END)
-         |    >= $threshold) AS is_anomaly
-         |FROM f WHERE n >= $windowDays
+         |    >= $anomalyThreshold) AS is_anomaly
+         |FROM f WHERE n >= $anomalyWindowDays
          |ORDER BY event_type, day""".stripMargin
 
   /** DuckDB replica of the versioned anomaly-monitor audit
@@ -562,10 +582,8 @@ object TimeSeriesOps {
     * the trailing window scores a day the moment it
     * arrives, so version k = the batch rows whose day sits in epochs
     * ≤ k — re-derived here through the SAME window chain. */
-  private[graft] def anomalyVersionsOracleSql(
-      epochs: Int = 5, keepVersions: Int = 3, windowDays: Int = 7,
-      threshold: Double = 2.0): String =
-    anomalyCoreSql(windowDays) +
+  private[graft] def anomalyVersionsOracleSql: String =
+    anomalyCoreSql(anomalyWindowDays) +
       s""",
          |ep AS (SELECT day,
          |    ((row_number() OVER (ORDER BY day) - 1) * $epochs)
@@ -577,9 +595,9 @@ object TimeSeriesOps {
          |  round(CASE WHEN sd = 0 THEN 0.0 ELSE (cnt - mean) / sd END, 4)
          |    AS z,
          |  (abs(CASE WHEN sd = 0 THEN 0.0 ELSE (cnt - mean) / sd END)
-         |    >= $threshold) AS is_anomaly
+         |    >= $anomalyThreshold) AS is_anomaly
          |FROM f JOIN ep USING (day) CROSS JOIN v
-         |WHERE n >= $windowDays AND epoch <= version
+         |WHERE n >= $anomalyWindowDays AND epoch <= version
          |ORDER BY version, event_type, day""".stripMargin
 
   /** The shared changepoint CTE chain (through the filtered `g`) —
@@ -606,13 +624,12 @@ object TimeSeriesOps {
        |  FROM f WHERE npre = $w AND npost = $w)""".stripMargin
 
   /** DuckDB replica of [[changepoints]] (the ts_changepoint oracle). */
-  private[graft] def changepointOracleSql(w: Int = 7,
-                                          minScore: Double = 3.0): String =
-    changepointCoreSql(w) +
+  private[graft] def changepointOracleSql: String =
+    changepointCoreSql(changepointWindow) +
       s"""
          |SELECT event_type, day, cnt,
          |  round(pre_mean, 4) AS pre_mean, round(post_mean, 4) AS post_mean,
-         |  round(score, 4) AS score, (abs(score) >= $minScore) AS is_change
+         |  round(score, 4) AS score, (abs(score) >= $changepointMinScore) AS is_change
          |FROM g ORDER BY event_type, day""".stripMargin
 
   /** DuckDB replica of the versioned changepoint-monitor audit
@@ -622,13 +639,11 @@ object TimeSeriesOps {
     * has finalized; version k therefore holds the batch rows whose
     * trigger day sits in epochs ≤ k, the inherent w−1-day emission
     * lag made an oracled value instead of a disclaimer. */
-  private[graft] def changepointVersionsOracleSql(
-      epochs: Int = 5, keepVersions: Int = 3, w: Int = 7,
-      minScore: Double = 3.0): String =
-    changepointCoreSql(w) +
+  private[graft] def changepointVersionsOracleSql: String =
+    changepointCoreSql(changepointWindow) +
       s""",
          |trig AS (SELECT event_type, day,
-         |    lead(day, ${w - 1}) OVER (PARTITION BY event_type
+         |    lead(day, ${changepointWindow - 1}) OVER (PARTITION BY event_type
          |      ORDER BY day) AS trigger_day
          |  FROM daily),
          |ep AS (SELECT day AS eday,
@@ -640,7 +655,7 @@ object TimeSeriesOps {
          |SELECT CAST(version AS BIGINT) AS version, g.event_type, g.day,
          |  cnt, round(pre_mean, 4) AS pre_mean,
          |  round(post_mean, 4) AS post_mean,
-         |  round(score, 4) AS score, (abs(score) >= $minScore) AS is_change
+         |  round(score, 4) AS score, (abs(score) >= $changepointMinScore) AS is_change
          |FROM g
          |JOIN trig ON trig.event_type = g.event_type AND trig.day = g.day
          |JOIN ep ON ep.eday = trig.trigger_day
@@ -677,8 +692,8 @@ object TimeSeriesOps {
   /** DuckDB replica of [[ewma]] (the ts_ewma oracle): the identical
     * recursion in a recursive CTE, the shared explicit 4dp floor
     * quantization. */
-  private[graft] def ewmaOracleSql(alpha: Double = 0.3): String =
-    ewmaCoreSql(alpha) +
+  private[graft] def ewmaOracleSql: String =
+    ewmaCoreSql(ewmaAlpha) +
       """
         |SELECT event_type, day, cnt, ewma
         |FROM rows_ ORDER BY event_type, day""".stripMargin
@@ -688,10 +703,8 @@ object TimeSeriesOps {
     * on days ≤ t and published values never revise, so version k =
     * the batch rows whose day sits in epochs ≤ k — the anomaly
     * audit's emission rule with the O(1)-state fold's values. */
-  private[graft] def ewmaVersionsOracleSql(
-      epochs: Int = 5, keepVersions: Int = 3,
-      alpha: Double = 0.3): String =
-    ewmaCoreSql(alpha) +
+  private[graft] def ewmaVersionsOracleSql: String =
+    ewmaCoreSql(ewmaAlpha) +
       s""",
          |ep AS (SELECT day AS eday,
          |    ((row_number() OVER (ORDER BY day) - 1) * $epochs)
@@ -704,6 +717,9 @@ object TimeSeriesOps {
          |FROM rows_ r JOIN ep ON ep.eday = r.day CROSS JOIN v
          |WHERE epoch <= version
          |ORDER BY version, event_type, r.day""".stripMargin
+
+  /** The largest lag of [[acf]], [[pacf]] and the pacf oracle. */
+  private val acfMaxLag = 7
 
   /** Per-series AUTOCORRELATION function at lags 1..`maxLag` — the
     * seasonality detector: a weekly series shows acf(7) ≫ acf(1..6),
@@ -718,12 +734,12 @@ object TimeSeriesOps {
     * can't move the 4th decimal — same discipline as the centroid and
     * decompose operators. One series-key shuffle for the lag window,
     * one for the #series×#lags aggregate. */
-  def acf(s: SparkSession, d: String, maxLag: Int = 7): DataFrame =
+  def acf(s: SparkSession, d: String): DataFrame =
     acfOn(
       Tables.events(s, d)
         .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
         .agg(count(lit(1)).as("cnt")),
-      maxLag)
+      acfMaxLag)
 
   /** Same over any (event_type, day, cnt) daily frame. */
   def acfOn(daily: DataFrame, maxLag: Int): DataFrame = {
@@ -768,10 +784,10 @@ object TimeSeriesOps {
     * rounding would re-introduce half-boundary risk). Work: the acf
     * aggregate + a K²-step scalar recursion per series — series-count
     * parallel, calendar-bounded. */
-  def pacf(s: SparkSession, d: String, maxLag: Int = 7): DataFrame =
+  def pacf(s: SparkSession, d: String): DataFrame =
     pacfOn(Tables.events(s, d)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt")), maxLag)
+      .agg(count(lit(1)).as("cnt")), acfMaxLag)
 
   /** Same over any (event_type, day, cnt) daily frame. */
   def pacfOn(daily: DataFrame, maxLag: Int): DataFrame = {
@@ -820,7 +836,7 @@ object TimeSeriesOps {
   /** The unrolled DuckDB replay of [[pacfOn]] over the events face —
     * built programmatically (the ml_logreg_gd posture) so recursion
     * depth and replay cannot drift apart. */
-  private[graft] def pacfOracleSql(maxLag: Int = 7): String = {
+  private[graft] def pacfOracleSql: String = {
     val q = (e: String) => s"floor(($e) * 1e6) / 1e6"
     val sb = new StringBuilder
     sb ++= s"""WITH daily AS (
@@ -834,7 +850,7 @@ object TimeSeriesOps {
       |      FROM daily d JOIN m USING (event_type)),
       |p AS (SELECT a.event_type, k.lg, a.cnt, a.mu, b.cnt AS ylag
       |      FROM r0 a
-      |      CROSS JOIN (SELECT unnest(range(1, ${maxLag + 1})) AS lg) k
+      |      CROSS JOIN (SELECT unnest(range(1, ${acfMaxLag + 1})) AS lg) k
       |      JOIN r0 b ON b.event_type = a.event_type AND b.rn = a.rn - k.lg),
       |num AS (SELECT event_type, lg,
       |          sum(CAST((cnt - mu) * (ylag - mu) AS DECIMAL(20,10))) AS nm
@@ -847,7 +863,7 @@ object TimeSeriesOps {
       |        FROM num JOIN den USING (event_type)),
       |rp AS (SELECT event_type,
       |""".stripMargin
-    sb ++= (1 to maxLag).map(k =>
+    sb ++= (1 to acfMaxLag).map(k =>
       s"  max(CASE WHEN lg = $k THEN acf END) AS r$k").mkString(",\n")
     sb ++= "\n  FROM acf GROUP BY 1),\n"
     // s1: φ11 and v1. Every recursion CTE is MATERIALIZED: left to
@@ -858,7 +874,7 @@ object TimeSeriesOps {
     // pins each step to its computed columns; values are identical.
     sb ++= s"s1 AS MATERIALIZED (SELECT *, ${q("r1")} AS p1_1,\n"
     sb ++= s"  ${q(s"1.0 - (${q("r1")}) * (${q("r1")})")} AS v1 FROM rp)"
-    for (k <- 2 to maxLag) {
+    for (k <- 2 to acfMaxLag) {
       val acc = (1 until k).map(j => s"p${k - 1}_$j * r${k - j}")
         .mkString(" + ")
       sb ++= s",\ns${k}a AS MATERIALIZED (SELECT *, CASE WHEN v${k - 1} = 0 THEN 0.0\n"
@@ -874,8 +890,8 @@ object TimeSeriesOps {
     }
     sb ++= "\nSELECT event_type, CAST(lag AS INT) AS lag,\n"
     sb ++= "  round(pk, 6) AS pacf FROM (\n"
-    sb ++= (1 to maxLag).map(k =>
-      s"  SELECT event_type, $k AS lag, p${k}_$k AS pk FROM s$maxLag")
+    sb ++= (1 to acfMaxLag).map(k =>
+      s"  SELECT event_type, $k AS lag, p${k}_$k AS pk FROM s$acfMaxLag")
       .mkString("\n  UNION ALL\n")
     sb ++= ")\nWHERE pk IS NOT NULL ORDER BY event_type, lag"
     sb.toString
@@ -896,13 +912,15 @@ object TimeSeriesOps {
     * a.dd + lag — Catalyst keys on the computed expression, never a
     * range scan), and the lag explode multiplies only the small daily
     * frame, not raw events. */
-  def crossCorr(s: SparkSession, d: String, maxLag: Int = 3): DataFrame =
+  def crossCorr(s: SparkSession, d: String): DataFrame = {
+    val maxLag = 3
     crossCorrOn(Tables.events(s, d)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
       .select(col("event_type"),
         datediff(col("day"), to_date(lit("2024-01-01"))).as("dd"),
         col("cnt")), maxLag)
+  }
 
   /** Same over any (event_type, dd, cnt) day-indexed frame. */
   def crossCorrOn(daily: DataFrame, maxLag: Int): DataFrame = {
@@ -941,7 +959,8 @@ object TimeSeriesOps {
   /** Lag/delta features per series: previous-day count, day-over-day
     * delta, and percent change — the residual features the reference's
     * seasonal-naive forecast builds on. Same single shuffle shape. */
-  def lagFeatures(s: SparkSession, d: String, lag_ : Int = 1): DataFrame = {
+  def lagFeatures(s: SparkSession, d: String): DataFrame = {
+    val lag_ = 1
     val daily = Tables.events(s, d)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
@@ -1000,12 +1019,14 @@ object TimeSeriesOps {
     * interpolated percentiles can sit one ulp apart across engines
     * and flip a boundary row). At 100 TB the same shape runs with
     * percentile_approx — the declared q_percentiles_approx trade. */
-  def outlierMad(s: SparkSession, d: String, k: Double = 3.5): DataFrame =
+  def outlierMad(s: SparkSession, d: String): DataFrame = {
+    val k = 3.5
     outlierMadOn(
       Tables.events(s, d)
         .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
         .agg(count(lit(1)).as("cnt")),
       k)
+  }
 
   /** Same over any (event_type, day, cnt) daily frame. */
   def outlierMadOn(daily: DataFrame, k: Double): DataFrame = {
@@ -1041,9 +1062,7 @@ object TimeSeriesOps {
     * exact entry's contract — flag agreement is NOT rank-bounded (a
     * boundary day can flip within tolerance), so this face verifies
     * the THRESHOLDS a 100 TB run would actually compute. */
-  def outlierMadChecked(s: SparkSession, d: String,
-                        accuracy: Int = 10000,
-                        delta: Double = 0.005): DataFrame = {
+  def outlierMadChecked(s: SparkSession, d: String): DataFrame = {
     val daily = Tables.events(s, d)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
@@ -1220,18 +1239,17 @@ object TimeSeriesOps {
     * large-argument range reduction is where libm implementations
     * drift, small arguments agree to ~1 ulp and round identically
     * at 4dp. Row-local over the daily frame; zero extra shuffles. */
-  def fourierFeatures(s: SparkSession, d: String,
-                      period: Int = 7): DataFrame = {
+  def fourierFeatures(s: SparkSession, d: String): DataFrame = {
     val daily = Tables.events(s, d)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
     val mn = daily.agg(min(col("day")).as("mn"))
     def term(k: Int): Column =
-      lit(2.0) * lit(math.Pi) * lit(k) * col("ph") / lit(period)
+      lit(2.0) * lit(math.Pi) * lit(k) * col("ph") / lit(seasonPeriod)
     daily.crossJoin(broadcast(mn))
       .withColumn("t",
         datediff(col("day"), to_date(col("mn"))).cast("int"))
-      .withColumn("ph", col("t") % period)
+      .withColumn("ph", col("t") % seasonPeriod)
       .select(col("event_type"), col("day"), col("cnt"), col("t"),
         round(sin(term(1)), 4).as("sin7_1"),
         round(cos(term(1)), 4).as("cos7_1"),
@@ -1256,11 +1274,13 @@ object TimeSeriesOps {
     * ranks on a (power desc, period) total order. Work: days ×
     * candidate-periods rows per series — calendar-bounded, the
     * pre-aggregation to daily counts is the only data-sized pass. */
-  def periodogram(s: SparkSession, d: String, pMin: Int = 2,
-                  pMax: Int = 14): DataFrame =
+  def periodogram(s: SparkSession, d: String): DataFrame = {
+    val pMin = 2
+    val pMax = 14
     periodogramOn(Tables.events(s, d)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt")), pMin, pMax)
+  }
 
   /** Same over any (event_type, day, cnt) daily frame. */
   def periodogramOn(daily: DataFrame, pMin: Int, pMax: Int): DataFrame = {
@@ -1362,6 +1382,9 @@ object TimeSeriesOps {
       .orderBy(col("type_a"), col("type_b"))
   }
 
+  /** The subsequence length of [[matrixProfile]] and its oracle. */
+  private val subseqLen = 7
+
   /** MATRIX PROFILE (Yeh et al., ICDM 2016) over each per-type daily
     * series — the all-pairs subsequence-similarity index behind motif
     * discovery ("which week-shaped pattern repeats?") and discord
@@ -1395,13 +1418,12 @@ object TimeSeriesOps {
     * at least one admissible partner (a middle window of anything
     * shorter has no j with |i−j| ≥ m, and a NULL profile cell is
     * worse than an absent series). Stated contract, oracle-matched. */
-  def matrixProfile(s: SparkSession, d: String, m: Int = 7,
-                    band: Int = -1): DataFrame =
+  def matrixProfile(s: SparkSession, d: String, band: Int = -1): DataFrame =
     matrixProfileOn(Tables.events(s, d)
       .groupBy(col("event_type"),
         date_trunc("day", col("ts")).as("day"))
       .agg((sum(round(col("value"), 4).cast("decimal(14,4)")) * 10000)
-        .cast("long").as("v_micro")), m, band)
+        .cast("long").as("v_micro")), subseqLen, band)
 
   /** Same over any (event_type, day, v_micro) daily frame.
     * `band` > 0 bounds the partner search to |i−j| ≤ band — the
@@ -1509,10 +1531,9 @@ object TimeSeriesOps {
     * argmin). `band` > 0 adds the horizon predicate to the hits CTE
     * — ONE shared chain for the full and banded faces, the
     * dtwOracleSql convention. */
-  private[graft] def matrixProfileOracleSql(m: Int = 7,
-                                            band: Int = -1): String = {
+  private[graft] def matrixProfileOracleSql(band: Int = -1): String = {
     val d2 = (i: String, j: String) =>
-      s"list_sum(list_transform(range(0, $m), k -> " +
+      s"list_sum(list_transform(range(0, $subseqLen), k -> " +
         s"(z[$i + k] - z[$j + k]) * (z[$i + k] - z[$j + k])))"
     s"""WITH daily AS (SELECT event_type,
        |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP_US))
@@ -1522,7 +1543,7 @@ object TimeSeriesOps {
        |  FROM events GROUP BY 1, 2),
        |ser AS (SELECT event_type, list(v ORDER BY day) AS vs,
        |    CAST(count(*) AS BIGINT) AS n FROM daily GROUP BY 1),
-       |big AS (SELECT * FROM ser WHERE n >= ${3 * m - 1}),
+       |big AS (SELECT * FROM ser WHERE n >= ${3 * subseqLen - 1}),
        |st AS (SELECT event_type, n, vs,
        |    CAST(list_sum(vs) AS BIGINT) // n AS mu FROM big),
        |vq AS (SELECT event_type, n, vs, mu,
@@ -1537,11 +1558,11 @@ object TimeSeriesOps {
        |        / sqrt(CAST(varq AS DOUBLE))) AS BIGINT) END) AS z
        |  FROM vq),
        |pos AS (SELECT event_type, n, z,
-       |    unnest(range(1, n - ${m - 2})) AS i FROM zc),
+       |    unnest(range(1, n - ${subseqLen - 2})) AS i FROM zc),
        |hits AS (SELECT event_type, i, j, ${d2("i", "j")} AS d2
        |  FROM (SELECT event_type, z, i,
-       |          unnest(range(1, n - ${m - 2})) AS j FROM pos)
-       |  WHERE abs(j - i) >= $m${
+       |          unnest(range(1, n - ${subseqLen - 2})) AS j FROM pos)
+       |  WHERE abs(j - i) >= $subseqLen${
         if (band > 0) s" AND abs(j - i) <= $band" else ""}),
        |mins AS (SELECT event_type, i, min(d2) AS md
        |         FROM hits GROUP BY 1, 2),

@@ -186,6 +186,10 @@ object Sources {
     } else residual(s.read.parquet(files: _*))
   }
 
+  /** The quantity band of the layout gate and its oracle. */
+  private val loQ = 1000L
+  private val hiQ = 2000L
+
   /** The data-skipping claim as an ORACLED registry entry (round 16,
     * VERDICT r15 ask #7 — [[writeSorted]]/[[writeStatsManifest]]/
     * [[readPruned]] proved pruning in LayoutSpec only; this promotes
@@ -206,9 +210,8 @@ object Sources {
     * one-row folds; working files land in a per-invocation temp dir
     * reclaimed before returning (the dailyE2e posture — the 2-row
     * audit is materialized first). */
-  def prunedChecksum(s: SparkSession, d: String,
-                     loQ: Long = 1000L, hiQ: Long = 2000L,
-                     numFiles: Int = 8): DataFrame = {
+  def prunedChecksum(s: SparkSession, d: String): DataFrame = {
+    val numFiles = 8
     val tmp = graft.TempDirs.create("graft_layout_gate_")
     try {
       val path = s"$tmp/li_sorted"
@@ -238,8 +241,7 @@ object Sources {
     * the band's checksum published under both labels — the Spark
     * side computes the two paths independently, so matching this
     * oracle is the equivalence proof. */
-  private[graft] def prunedChecksumOracleSql(loQ: Long = 1000L,
-                                             hiQ: Long = 2000L): String =
+  private[graft] def prunedChecksumOracleSql: String =
     s"""WITH f AS (SELECT CAST(list_sum([(strpos('0123456789abcdef', h[i]) - 1) *
        |      (CAST(1 AS BIGINT) << (4*(15 - i))) for i in range(1, 16)])
        |      AS BIGINT) AS hv

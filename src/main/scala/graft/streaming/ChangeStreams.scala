@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
   * only the newest `keepVersions` are retained, the time-travel
   * window a versioned store keeps. */
 object ChangeStreams {
+  import Versions.{epochs, keepVersions}
 
   /** Deterministic change feed for the versioned-snapshot audit:
     * events become CDC rows keyed on `user_id` — an `error` event is
@@ -38,9 +39,7 @@ object ChangeStreams {
     * over its (1/epochs-sized) change slice + one AQE-broadcast anti
     * join, so nothing here collects or materializes driver-side, and
     * the audit aggregates are single-row reductions. */
-  def snapshotVersionsBatch(s: SparkSession, d: String,
-                            epochs: Int = 5,
-                            keepVersions: Int = 3): DataFrame =
+  def snapshotVersionsBatch(s: SparkSession, d: String): DataFrame =
     snapshotVersionsOn(eventChanges(s, d, epochs), epochs, keepVersions)
 
   /** Same over any (user_id, v_micro, op, epoch, event_id) change
@@ -77,4 +76,15 @@ object ChangeStreams {
           round(col("__sv") / 10000.0, 4).as("sum_v"), col("max_key"))
     }.reduce(_ unionAll _).orderBy(col("version"))
   }
+}
+
+/** The one fold every versioned audit replays — the CDC snapshots,
+  * the sketch and event-stream audits and their DuckDB replicas:
+  * events split into `epochs` arrival micro-batches and the newest
+  * `keepVersions` versions are retained (1 <= keepVersions <= epochs;
+  * the PSI audit also needs epochs >= 2, epoch 0 being its
+  * reference). */
+private[graft] object Versions {
+  val epochs = 5
+  val keepVersions = 3
 }

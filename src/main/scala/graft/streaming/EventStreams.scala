@@ -16,6 +16,10 @@ import org.apache.spark.sql.functions._
   * through that epoch.
   */
 object EventStreams {
+  import Versions.{epochs, keepVersions}
+  import graft.ops.Analytics.{attributionConvType, attributionTouchTypes,
+    attributionWindowDays, funnelStages}
+  import graft.ops.TimeSeriesOps.{changepointMinScore, changepointWindow}
 
   // ---- tumbling-window aggregate --------------------------------------
 
@@ -40,12 +44,14 @@ object EventStreams {
     * dashboards want when tumbling windows are too jumpy. State cost
     * scales with the overlap factor; the slide, not the window,
     * decides the output cadence. */
-  def slidingCounts(events: DataFrame, win: String = "10 minutes",
-                    slide: String = "5 minutes"): DataFrame =
+  def slidingCounts(events: DataFrame): DataFrame = {
+    val win = "10 minutes"
+    val slide = "5 minutes"
     events
       .groupBy(window(col("ts"), win, slide), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("ws"), col("event_type"), col("n"))
+  }
 
   /** Batch face for the oracle gate. */
   def slidingCountsBatch(s: SparkSession, d: String): DataFrame =
@@ -85,10 +91,11 @@ object EventStreams {
     *    not a flag.
     */
   def enrich(events: DataFrame, dim: DataFrame,
-             key: String = "user_id",
-             broadcastDim: Boolean = true): DataFrame =
+             broadcastDim: Boolean = true): DataFrame = {
+    val key = "user_id"
     if (broadcastDim) events.join(broadcast(dim), Seq(key), "left")
     else events.join(dim.hint("shuffle_hash"), Seq(key), "left")
+  }
 
   /** Batch face for the oracle gate: segment lookup against the even
     * half of the customer dimension (the odd half's absence makes the
@@ -118,8 +125,8 @@ object EventStreams {
     * tell the engine when a buffered view can never match a future
     * click and can be dropped. Keyed on user_id, so the state and
     * the shuffle shard by user at any width. */
-  def clickViewJoin(clicks: DataFrame, views: DataFrame,
-                    within: String = "4 hours"): DataFrame =
+  def clickViewJoin(clicks: DataFrame, views: DataFrame): DataFrame = {
+    val within = "4 hours"
     clicks.alias("c").join(views.alias("v"),
       col("c.user_id") === col("v.user_id") &&
         col("v.ts") >= col("c.ts") - expr(s"INTERVAL $within") &&
@@ -127,6 +134,7 @@ object EventStreams {
       .select(col("c.user_id").as("user_id"),
         col("c.event_id").as("click_id"), col("c.ts").as("click_ts"),
         col("v.event_id").as("view_id"), col("v.ts").as("view_ts"))
+  }
 
   /** Batch face for the oracle gate. */
   def clickViewJoinBatch(s: SparkSession, d: String): DataFrame = {
@@ -157,8 +165,9 @@ object EventStreams {
     * complete mode), and the monitor's consumers key on `ws` anyway —
     * the batch face adds the ordering for the oracle. */
   def qualityMonitor(events: DataFrame,
-                     rules: Seq[(String, org.apache.spark.sql.Column)],
-                     win: String = "1 hour"): DataFrame = {
+                     rules: Seq[(String, org.apache.spark.sql.Column)])
+      : DataFrame = {
+    val win = "1 hour"
     val reserved = Set("ws", "window", "n_rows")
     require(rules.map(_._1).distinct.length == rules.length &&
         !rules.exists(r => reserved(r._1)),
@@ -201,24 +210,18 @@ object EventStreams {
     * advances whose fold tuple sits in epochs ≤ k. Each stage's
     * advance frame computes once (checkpointed) and every retained
     * version adds one filtered count. */
-  def funnelVersionsBatch(s: SparkSession, d: String, epochs: Int = 5,
-                          keepVersions: Int = 3,
-                          stages: Seq[String] =
-                            Seq("view", "click", "purchase")): DataFrame = {
-    require(epochs >= 1 && keepVersions >= 1 && keepVersions <= epochs,
-      s"need 1 <= keepVersions <= epochs: $keepVersions/$epochs")
-    require(stages.nonEmpty, "funnel needs at least one stage")
+  def funnelVersionsBatch(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-      .filter(col("event_type").isin(stages: _*))
+      .filter(col("event_type").isin(funnelStages: _*))
       .select(col("user_id"), col("event_type"),
         (col("event_id") % epochs).as("epoch"),
         unix_micros(col("ts")).as("tus"), col("event_id"))
     def tup(stageIdx: Int) = struct(col("epoch"), col("tus"),
       lit(stageIdx).as("sidx"), col("event_id"))
     // stage 1: the first qualifying event in FOLD order
-    val first = ev.filter(col("event_type") === stages.head)
+    val first = ev.filter(col("event_type") === funnelStages.head)
       .groupBy(col("user_id")).agg(min(tup(0)).as("__t"))
-    val reached = stages.tail.zipWithIndex.scanLeft(first) {
+    val reached = funnelStages.tail.zipWithIndex.scanLeft(first) {
       case (prev, (stage, i)) =>
         ev.filter(col("event_type") === stage)
           .join(prev.select(col("user_id"), col("__t").as("__pt")),
@@ -230,7 +233,7 @@ object EventStreams {
           .groupBy(col("user_id")).agg(min(tup(i + 1)).as("__t"))
     }.map(_.localCheckpoint(false)) // every retained version counts each frame
     (epochs - keepVersions until epochs).flatMap { k =>
-      stages.zip(reached).zipWithIndex.map { case ((stage, users), i) =>
+      funnelStages.zip(reached).zipWithIndex.map { case ((stage, users), i) =>
         users.filter(col("__t.epoch") <= k)
           .agg(count(lit(1)).as("n_users"))
           .select(lit(k.toLong).as("version"),
@@ -241,27 +244,21 @@ object EventStreams {
   }
 
   /** DuckDB replica of [[funnelVersionsBatch]], generated from the
-    * SAME (epochs, keepVersions, stages) parameters the Scala face
-    * takes — changing a default can no longer silently desynchronize
-    * the gate (ADVICE r15; the sibling anomaly/ewma/changepoint/
-    * conformal version oracles set the builder precedent). One CTE
+    * constants the Scala face reads ([[Versions]] and
+    * [[graft.ops.Analytics.funnelStages]]), so the two cannot
+    * disagree on a setting. One CTE
     * per stage: stage k's advance is the min fold tuple (epoch, µs,
     * sidx, id) among stage-k events past the stage-(k−1) advance
     * that also pass the event-time gate; each retained version
     * counts the advances whose tuple sits in epochs ≤ version. */
-  private[graft] def funnelVersionsOracleSql(
-      epochs: Int = 5, keepVersions: Int = 3,
-      stages: Seq[String] = Seq("view", "click", "purchase")): String = {
-    require(epochs >= 1 && keepVersions >= 1 && keepVersions <= epochs,
-      s"need 1 <= keepVersions <= epochs: $keepVersions/$epochs")
-    require(stages.nonEmpty, "funnel needs at least one stage")
-    val inList = stages.map(st => s"'$st'").mkString(", ")
+  private[graft] def funnelVersionsOracleSql: String = {
+    val inList = funnelStages.map(st => s"'$st'").mkString(", ")
     def tup(i: Int) =
       s"{'epoch': epoch, 'tus': tus, 'sidx': $i, 'event_id': event_id}"
     val first =
       s"""s1 AS (SELECT user_id, min(${tup(0)}) AS t
-         |  FROM ev WHERE event_type = '${stages.head}' GROUP BY 1)""".stripMargin
-    val rest = stages.tail.zipWithIndex.map { case (st, i) =>
+         |  FROM ev WHERE event_type = '${funnelStages.head}' GROUP BY 1)""".stripMargin
+    val rest = funnelStages.tail.zipWithIndex.map { case (st, i) =>
       s"""s${i + 2} AS (SELECT e.user_id, min(${tup(i + 1)}) AS t
          |  FROM ev e JOIN s${i + 1} ON e.user_id = s${i + 1}.user_id
          |  WHERE e.event_type = '$st'
@@ -269,7 +266,7 @@ object EventStreams {
          |    AND tus >= (s${i + 1}.t).tus
          |  GROUP BY 1)""".stripMargin
     }
-    val branches = stages.zipWithIndex.map { case (st, i) =>
+    val branches = funnelStages.zipWithIndex.map { case (st, i) =>
       s"""  SELECT version, ${i + 1} AS stage, '$st' AS event_type,
          |    count(*) FILTER (WHERE (t).epoch <= version) AS n_users
          |  FROM s${i + 1} CROSS JOIN v GROUP BY version""".stripMargin
@@ -310,19 +307,14 @@ object EventStreams {
     * late-data effect, here made an oracled value. One windowed pass
     * is shared by all versions (checkpointed conversion frame); each
     * version adds one filtered aggregate over it. */
-  def attributionVersionsBatch(s: SparkSession, d: String,
-                               epochs: Int = 5, keepVersions: Int = 3,
-                               touchTypes: Seq[String] = Seq("view", "click"),
-                               convType: String = "purchase",
-                               windowDays: Int = 7): DataFrame = {
-    require(epochs >= 1 && keepVersions >= 1 && keepVersions <= epochs,
-      s"need 1 <= keepVersions <= epochs: $keepVersions/$epochs")
+  def attributionVersionsBatch(s: SparkSession, d: String): DataFrame = {
     val tagged = Tables.events(s, d)
-      .filter(col("event_type").isin(touchTypes :+ convType: _*))
+      .filter(col("event_type")
+        .isin(attributionTouchTypes :+ attributionConvType: _*))
       .select(col("user_id"), col("event_id"),
         (col("event_id") % epochs).as("epoch"),
         unix_micros(col("ts")).as("tus"), col("event_type"),
-        when(col("event_type") === convType, 1).otherwise(0).as("tag"))
+        when(col("event_type") === attributionConvType, 1).otherwise(0).as("tag"))
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("epoch"), col("tus"), col("tag"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -336,7 +328,7 @@ object EventStreams {
       .select(col("epoch"),
         when(col("touch_ts").isNotNull &&
             col("tus") - col("touch_ts") <=
-              lit(windowDays * 86400000000L),
+              lit(attributionWindowDays * 86400000000L),
           col("touch_type")).otherwise(lit("none")).as("touch_type"))
       // every retained version aggregates this one pass
       .localCheckpoint(false)
@@ -382,15 +374,10 @@ object EventStreams {
     * version k = the batch rows whose day sits in epochs ≤ k — one
     * batch pass checkpointed, one filtered projection per
     * version. */
-  def anomalyVersionsBatch(s: SparkSession, d: String, epochs: Int = 5,
-                           keepVersions: Int = 3, windowDays: Int = 7,
-                           threshold: Double = 2.0): DataFrame = {
-    require(epochs >= 1 && keepVersions >= 1 && keepVersions <= epochs,
-      s"need 1 <= keepVersions <= epochs: $keepVersions/$epochs")
+  def anomalyVersionsBatch(s: SparkSession, d: String): DataFrame = {
     val days = graft.Tables.events(s, d)
       .select(date_trunc("day", col("ts")).as("day")).distinct()
-    val scored = graft.ops.TimeSeriesOps
-      .anomalyZScore(s, d, windowDays, threshold)
+    val scored = graft.ops.TimeSeriesOps.anomalyZScore(s, d)
       .join(broadcast(dayEpochs(days, epochs)), Seq("day"))
       .localCheckpoint(false) // every retained version filters this one pass
     (epochs - keepVersions until epochs).map { k =>
@@ -411,21 +398,18 @@ object EventStreams {
     * emission lag as an oracled value. Same shared [[dayEpochs]]
     * timeline, one checkpointed scored pass, one filtered projection
     * per retained version. */
-  def changepointVersionsBatch(s: SparkSession, d: String,
-                               epochs: Int = 5, keepVersions: Int = 3,
-                               w: Int = 7,
-                               minScore: Double = 3.0): DataFrame = {
-    require(epochs >= 1 && keepVersions >= 1 && keepVersions <= epochs,
-      s"need 1 <= keepVersions <= epochs: $keepVersions/$epochs")
+  def changepointVersionsBatch(s: SparkSession, d: String): DataFrame = {
     val daily = graft.Tables.events(s, d)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
     val trig = daily.select(col("event_type"), col("day"),
-      lead(col("day"), w - 1).over(Window.partitionBy(col("event_type"))
-        .orderBy(col("day"))).as("__trigger"))
+      lead(col("day"), changepointWindow - 1)
+        .over(Window.partitionBy(col("event_type")).orderBy(col("day")))
+        .as("__trigger"))
     val ep = dayEpochs(daily.select(col("day")).distinct(), epochs)
       .withColumnRenamed("day", "__trigger")
-    val scored = graft.ops.TimeSeriesOps.changepointsOn(daily, w, minScore)
+    val scored = graft.ops.TimeSeriesOps
+      .changepointsOn(daily, changepointWindow, changepointMinScore)
       .join(trig, Seq("event_type", "day"))
       .join(broadcast(ep), Seq("__trigger"))
       .localCheckpoint(false) // every retained version filters this one pass
@@ -445,14 +429,10 @@ object EventStreams {
     * emission rule carried onto the O(1)-state smoother. Shared
     * [[dayEpochs]] timeline, one checkpointed batch pass, one
     * filtered projection per retained version. */
-  def ewmaVersionsBatch(s: SparkSession, d: String, epochs: Int = 5,
-                        keepVersions: Int = 3,
-                        alpha: Double = 0.3): DataFrame = {
-    require(epochs >= 1 && keepVersions >= 1 && keepVersions <= epochs,
-      s"need 1 <= keepVersions <= epochs: $keepVersions/$epochs")
+  def ewmaVersionsBatch(s: SparkSession, d: String): DataFrame = {
     val days = graft.Tables.events(s, d)
       .select(date_trunc("day", col("ts")).as("day")).distinct()
-    val scored = graft.ops.TimeSeriesOps.ewma(s, d, alpha)
+    val scored = graft.ops.TimeSeriesOps.ewma(s, d)
       .join(broadcast(dayEpochs(days, epochs)), Seq("day"))
       .localCheckpoint(false) // every retained version filters this one pass
     (epochs - keepVersions until epochs).map { k =>
@@ -462,6 +442,14 @@ object EventStreams {
     }.reduce(_ unionAll _)
       .orderBy(col("version"), col("event_type"), col("day"))
   }
+
+  /** The conformal band's seasonal lag (days), miscoverage (%),
+    * calibration window and minimum calibration count, read by both
+    * conformal faces and both oracles. */
+  private val period = 7
+  private val alphaPct = 10
+  private val calWindow = 50
+  private val minCal = 10
 
   /** A ROLLING conformal band over daily counts — an adaptive fold
     * (seasonal-naive reference + FIFO calibration window), not the
@@ -477,9 +465,7 @@ object EventStreams {
     * the bounded preceding-frame residual list) on ONE series-key
     * shuffle — the calibration list is ≤ `calWindow` longs per row,
     * a bounded frame, never history. */
-  def conformalMonitorBatch(s: SparkSession, d: String, period: Int = 7,
-                            alphaPct: Int = 10, calWindow: Int = 50,
-                            minCal: Int = 10): DataFrame = {
+  def conformalMonitorBatch(s: SparkSession, d: String): DataFrame = {
     val keep = 100 - alphaPct
     val daily = Tables.events(s, d)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
@@ -515,16 +501,10 @@ object EventStreams {
     * arrival and never revise (q̂ reads only PRIOR residuals), so version k =
     * [[conformalMonitorBatch]]'s rows whose day sits in epochs ≤ k —
     * the anomaly/ewma emission rule on the bounded-state band. */
-  def conformalVersionsBatch(s: SparkSession, d: String, epochs: Int = 5,
-                             keepVersions: Int = 3, period: Int = 7,
-                             alphaPct: Int = 10, calWindow: Int = 50,
-                             minCal: Int = 10): DataFrame = {
-    require(epochs >= 1 && keepVersions >= 1 && keepVersions <= epochs,
-      s"need 1 <= keepVersions <= epochs: $keepVersions/$epochs")
+  def conformalVersionsBatch(s: SparkSession, d: String): DataFrame = {
     val days = graft.Tables.events(s, d)
       .select(date_trunc("day", col("ts")).as("day")).distinct()
-    val scored = conformalMonitorBatch(s, d, period, alphaPct,
-        calWindow, minCal)
+    val scored = conformalMonitorBatch(s, d)
       .join(broadcast(dayEpochs(days, epochs)), Seq("day"))
       .localCheckpoint(false) // every retained version filters this one pass
     (epochs - keepVersions until epochs).map { k =>
@@ -563,9 +543,7 @@ object EventStreams {
        |  FROM c WHERE len(cal) >= $minCal)""".stripMargin
 
   /** DuckDB replica of [[conformalMonitorBatch]]. */
-  private[graft] def conformalMonitorOracleSql(
-      period: Int = 7, alphaPct: Int = 10, calWindow: Int = 50,
-      minCal: Int = 10): String =
+  private[graft] def conformalMonitorOracleSql: String =
     conformalCoreSql(period, 100 - alphaPct, calWindow, minCal) +
       """
         |SELECT event_type, day, cnt, pred, pred - qhat AS lo,
@@ -575,10 +553,7 @@ object EventStreams {
 
   /** DuckDB replica of [[conformalVersionsBatch]]: the same chain
     * under the shared day-epoch timeline. */
-  private[graft] def conformalVersionsOracleSql(
-      epochs: Int = 5, keepVersions: Int = 3, period: Int = 7,
-      alphaPct: Int = 10, calWindow: Int = 50,
-      minCal: Int = 10): String =
+  private[graft] def conformalVersionsOracleSql: String =
     conformalCoreSql(period, 100 - alphaPct, calWindow, minCal) +
       s""",
          |ep AS (SELECT day AS eday,

@@ -23,6 +23,7 @@ import org.apache.spark.sql.functions._
   * merge by register-wise max (`hll_union_agg`).
   */
 object SketchStreams {
+  import Versions.{epochs, keepVersions}
 
   /** The md5 bucket hash — identical to TextOps.countMin's, so the
     * audited grids are the batch `text_count_min` grids. */
@@ -71,6 +72,9 @@ object SketchStreams {
       .select((col("doc_id") % epochs).as("epoch"),
         explode(graft.ops.TextOps.toks(lower(col("text")))).as("term"))
 
+  /** The exact top-k the Misra-Gries and Count-Min audits check. */
+  private val k = 3
+
   /** The oracled audit of a Misra-Gries fold's retained versions:
     * fold the epoch slices through [[mgMerge]] (each slice summarized
     * by one [[MisraGriesAgg]] pass), then for each retained version
@@ -81,11 +85,8 @@ object SketchStreams {
     * merge-order-sensitive, so the summary itself is not
     * cross-engine replayable — the GUARANTEE is, which is exactly
     * what the verdict booleans pin. */
-  def topkVersionsBatch(s: SparkSession, d: String, epochs: Int = 5,
-                        keepVersions: Int = 3, capacity: Int = 64,
-                        k: Int = 3): DataFrame = {
-    require(epochs >= 1 && keepVersions >= 1 && keepVersions <= epochs,
-      s"need 1 <= keepVersions <= epochs: $keepVersions/$epochs")
+  def topkVersionsBatch(s: SparkSession, d: String): DataFrame = {
+    val capacity = 64
     val mg = udaf(new MisraGriesAgg(capacity))
     // ONE corpus-scale tokenize, checkpointed; everything exact below reads
     // the (epoch, term, n) count frame — vocabulary-sized — instead
@@ -138,11 +139,9 @@ object SketchStreams {
     * three. Per (version, exact-top-k term): true count, CM
     * estimate, plus the version's grid census (n_cells ≤ d·w,
     * grid_total = depth·arrivals — the lossless-merge invariant). */
-  def countMinVersionsBatch(s: SparkSession, d: String, epochs: Int = 5,
-                            keepVersions: Int = 3, depth: Int = 4,
-                            width: Int = 256, k: Int = 3): DataFrame = {
-    require(epochs >= 1 && keepVersions >= 1 && keepVersions <= epochs,
-      s"need 1 <= keepVersions <= epochs: $keepVersions/$epochs")
+  def countMinVersionsBatch(s: SparkSession, d: String): DataFrame = {
+    val depth = 4
+    val width = 256
     // ONE corpus-scale tokenize+count; per-epoch cell grids and term
     // counts are vocabulary-sized from there, so each version's grid
     // is a filter+sum, not a corpus re-scan
@@ -192,11 +191,7 @@ object SketchStreams {
     * (≤ epochs·10 rows); each version is a filter+sum over it, and
     * psiFromCounts' unpartitioned window runs over 10 bins per
     * version — bounded by construction. */
-  def psiVersionsBatch(s: SparkSession, d: String, epochs: Int = 5,
-                       keepVersions: Int = 3): DataFrame = {
-    require(epochs >= 2 && keepVersions >= 1 && keepVersions < epochs,
-      s"need 1 <= keepVersions < epochs (epoch 0 is the reference): " +
-        s"$keepVersions/$epochs")
+  def psiVersionsBatch(s: SparkSession, d: String): DataFrame = {
     val staged = graft.Tables.events(s, d).select(
       (col("event_id") % epochs).as("epoch"),
       round(col("value"), 4).cast("double").as("x"))
@@ -242,10 +237,8 @@ object SketchStreams {
     * is sketch-internal (coupon promotion differs through a union),
     * so it surfaces only through the verdict, pinned TRUE in the
     * oracle at 5·rsd — the q_distinct_approx posture. */
-  def hllVersionsBatch(s: SparkSession, d: String, epochs: Int = 5,
-                       keepVersions: Int = 3, lgK: Int = 12): DataFrame = {
-    require(epochs >= 1 && keepVersions >= 1 && keepVersions <= epochs,
-      s"need 1 <= keepVersions <= epochs: $keepVersions/$epochs")
+  def hllVersionsBatch(s: SparkSession, d: String): DataFrame = {
+    val lgK = 12
     val rsd = 1.04 / math.sqrt((1L << lgK).toDouble)
     val ev = graft.Tables.events(s, d)
       .select((col("event_id") % epochs).as("epoch"),

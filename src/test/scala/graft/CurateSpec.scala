@@ -83,7 +83,6 @@ class CurateSpec extends SparkSpec {
   }
 
   test("canonicalPerCluster keeps the BEST copy, not the first-crawled") {
-    import org.apache.spark.sql.functions.col
     val clusters = Seq((10L, 10L), (11L, 10L), (12L, 10L), (20L, 20L))
       .toDF("doc_id", "cluster_id")
     val docs = Seq(
@@ -226,7 +225,6 @@ class CurateSpec extends SparkSpec {
        "stage — short doc at quality, copy at dedup, leaked doc at " +
        "decontamination, low-score doc at the budget") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val a = "the cat and the dog of the house went to the market in " +
       "the morning and it is a fine day for walking around the old " +
       "town square"                                  // 28 toks, hi score
@@ -257,7 +255,6 @@ class CurateSpec extends SparkSpec {
   test("sequence packing: hand intervals, boundary flags, and the " +
        "doc-grain map agrees with text_pack's context-grain spans") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val docs = Seq((1L, "a b c"), (2L, "d e"), (3L, "f"),
       (4L, "g h i j")).toDF("doc_id", "text")
     // budget 4: cum = 3,5,6,10; starts 0,3,5,6

@@ -64,6 +64,19 @@ class DedupSpec extends SparkSpec {
     assert(new java.io.File(s"$dir/band_index.parquet/band=0").exists())
   }
 
+  test("persisted index without a stateDir: the result reads nothing " +
+       "from its per-call state and still equals the in-memory fold") {
+    val rt = DedupOps.incrementalIndexPersisted(spark, sf)
+    // materialized before the temp state dir was deleted
+    assert(rt.inputFiles.isEmpty)
+    val pairs = rt.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val mem = DedupOps.incrementalIndex(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(pairs.toSeq === mem.toSeq)
+    assert(pairs.nonEmpty)
+  }
+
   test("capped fold: benign data identical to uncapped; a hot bucket " +
        "stays linked through representative pairs, never quadratic") {
     import spark.implicits._
@@ -354,7 +367,6 @@ class DedupSpec extends SparkSpec {
 
   test("containment catches a short eval item inside a long doc; Jaccard can't") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // a 6-token eval item pasted verbatim into a 60-token training
     // doc: containment = 1.0, Jaccard ≈ 4/56 — the planted case the
     // asymmetric metric exists for
@@ -613,7 +625,6 @@ class DedupSpec extends SparkSpec {
   test("cdc chunking: lengths tile the doc; a prefix insertion " +
        "re-synchronizes (shift robustness); fixed-size would not") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val words = (0 until 400).map(i => s"w${i * 7 % 131}")
     val base = words.mkString(" ")
     val shifted = "xx yy zz " + base       // 3 tokens inserted at front

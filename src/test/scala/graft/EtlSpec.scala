@@ -162,7 +162,6 @@ class EtlSpec extends SparkSpec {
 
   test("assignIds: dense 0..n-1 in key order, invariant to input layout") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val keys = Seq(907L, 3L, 512L, 44L, 108L, 2L, 777L, 61L)
     val df = keys.toDF("k")
     def ids(in: org.apache.spark.sql.DataFrame) =

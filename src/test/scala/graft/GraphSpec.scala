@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.GraphOps
-import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSpec {
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Recommend
-import org.apache.spark.sql.functions._
 
 class RecommendSpec extends SparkSpec {
 

@@ -574,7 +574,6 @@ class SimilaritySpec extends SparkSpec {
   test("mmr: a planted near-duplicate is demoted below the diverse " +
        "candidate; lambda=1 degenerates to plain top-k order") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // query 0 sits BETWEEN cluster X (vecs 1, 2 — identical) and
     // cluster Y (vec 3): all three have equal relevance ~0.7071, so
     // pos1 = vec 1 (id tiebreak), pos2 must be the DIVERSE vec 3

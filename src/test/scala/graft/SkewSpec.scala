@@ -4,7 +4,6 @@ import graft.ops.SkewOps
 import org.apache.spark.sql.functions._
 
 class SkewSpec extends SparkSpec {
-  import spark.implicits._
 
   test("saltedJoin returns exactly the plain join's rows") {
     val events = Tables.events(spark, sf)

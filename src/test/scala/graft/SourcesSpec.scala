@@ -2,10 +2,8 @@ package graft
 
 import graft.etl.Mapping
 import graft.sources.Sources
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.scalatest.funsuite.AnyFunSuite
 
 class SourcesSpec extends SparkSpec {
 

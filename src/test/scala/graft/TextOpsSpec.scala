@@ -665,7 +665,6 @@ class TextOpsSpec extends SparkSpec {
   test("novelty: a verbatim copy scores 0, half-shared grams score " +
        "exactly 0.5, alien vocabulary scores 1, sub-k docs drop") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val ref = Seq((100L, "a b c x y z")).toDF("doc_id", "text")
     // grams(ref) = {a b c, b c x, c x y, x y z}
     val cands = Seq(

@@ -282,7 +282,6 @@ class TimeSeriesSpec extends SparkSpec {
 
   test("fourier features: phase-0 pins (0,1), hand angles exact, " +
        "all terms bounded") {
-    import spark.implicits._
     val rows = TimeSeriesOps.fourierFeatures(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
