@@ -2973,7 +2973,7 @@ object SparkEntry {
     // from the RAW tables — the oracle knows nothing of the
     // bookmark, the parquet boundaries, or the splits
     "etl_daily_e2e" ->
-      graft.etl.DailyPipeline.dailyE2eOracleSql(),
+      graft.etl.DailyPipeline.dailyE2eOracleSql,
     // row canon = null-sentineled '|' join → md5 → first 15 hex as a
     // 60-bit int (list-comprehension polynomial — exact, no doubles);
     // XOR + HUGEINT SUM signatures rendered as strings
@@ -5259,8 +5259,8 @@ object SparkEntry {
     // Forecast (compareOracleSql/ensembleOracleSql — the
     // adaboostOracleSql discipline), so a member-fit edit lands in
     // both oracles atomically
-    "forecast_ensemble" -> graft.ops.Forecast.ensembleOracleSql(),
-    "forecast_compare" -> graft.ops.Forecast.compareOracleSql(),
+    "forecast_ensemble" -> graft.ops.Forecast.ensembleOracleSql,
+    "forecast_compare" -> graft.ops.Forecast.compareOracleSql,
     // theta-lite: linear fit from exact integer-valued moment sums
     // (expression trees repeated character for character), SES over
     // the θ=2 line as a recursive CTE with (1 - 0.3) kept as a
@@ -6002,10 +6002,10 @@ object SparkEntry {
       graft.ops.CurateOps.packSequencesBpeOracleSql,
     "curate_pack_bpe_stats" ->
       graft.ops.CurateOps.packStatsBpeOracleSql,
-    "text_ccnet_buckets" -> graft.ops.TextOps.ccnetBucketsOracleSql(),
-    "ann_lsh_topk" -> graft.ops.SimilarityOps.lshOracleSql(),
-    "ann_ivf_topk" -> graft.ops.SimilarityOps.ivfOracleSql(),
-    "ann_ivf_topk_sampled" -> graft.ops.SimilarityOps.ivfSampledOracleSql(),
+    "text_ccnet_buckets" -> graft.ops.TextOps.ccnetBucketsOracleSql,
+    "ann_lsh_topk" -> graft.ops.SimilarityOps.lshOracleSql,
+    "ann_ivf_topk" -> graft.ops.SimilarityOps.ivfOracleSql,
+    "ann_ivf_topk_sampled" -> graft.ops.SimilarityOps.ivfSampledOracleSql,
     "ann_ivf_recall" -> graft.ops.SimilarityOps.ivfRecallOracleSql,
     "ann_ivf_sampled_recall" ->
       graft.ops.SimilarityOps.ivfSampledRecallOracleSql,
@@ -6013,8 +6013,8 @@ object SparkEntry {
     "ann_pq_recall" -> graft.ops.SimilarityOps.pqRecallOracleSql,
     "ann_ivfpq_recall" -> graft.ops.SimilarityOps.ivfPqRecallOracleSql,
     "emb_project_rp" -> graft.ops.SimilarityOps.rpOracleSql,
-    "ann_pq_topk" -> graft.ops.SimilarityOps.pqOracleSql(),
-    "ann_ivfpq_topk" -> graft.ops.SimilarityOps.ivfPqOracleSql(),
+    "ann_pq_topk" -> graft.ops.SimilarityOps.pqOracleSql,
+    "ann_ivfpq_topk" -> graft.ops.SimilarityOps.ivfPqOracleSql,
     "emb_diversity_sample" -> graft.ops.SimilarityOps.diversityOracleSql,
     "graph_kcore" -> graft.ops.GraphOps.kCoreOracleSql,
     "graph_lpa" -> graft.ops.GraphOps.lpaOracleSql,
@@ -6120,7 +6120,7 @@ object SparkEntry {
     "emb_pca_power" -> SimilarityOps.pcaOracleSql,
     "emb_pca_project" -> SimilarityOps.pcaProjectOracleSql,
     "emb_pca_remove_top" -> SimilarityOps.pcaRemoveTopOracleSql,
-    "emb_standardize" -> SimilarityOps.standardizeOracleSql(),
+    "emb_standardize" -> SimilarityOps.standardizeOracleSql,
     // Generated from the same pattern table the operator folds over
     // (Java regex and RE2 agree on this subset); counts on the
     // original text, replacements applied in the same fixed order.

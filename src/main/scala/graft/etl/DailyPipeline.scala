@@ -121,7 +121,7 @@ object DailyPipeline {
     * nothing of the bookmark, the parquet boundaries, or the splits.
     * The dedup stage nests the shared split-agnostic recompute
     * ([[graft.ops.DedupOps.minhashRecomputeOracleSql]]) verbatim. */
-  private[graft] def dailyE2eOracleSql(): String = {
+  private[graft] def dailyE2eOracleSql: String = {
     val poly =
       """CAST(list_sum([(strpos('0123456789abcdef', h[i]) - 1) *
         |      (CAST(1 AS BIGINT) << (4*(15 - i))) for i in range(1, 16)])

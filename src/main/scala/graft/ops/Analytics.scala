@@ -125,7 +125,7 @@ object Analytics {
       .orderBy(col("day"))
 
   /** The q_funnel stages, which the versioned funnel audit replays. */
-  private[graft] val funnelStages = Seq("view", "click", "purchase")
+  private[graft] val funnelStageNames = Seq("view", "click", "purchase")
 
   /** Funnel analysis — the ordered-stage conversion count every
     * product-analytics pipeline runs on an events table: of the users
@@ -142,7 +142,7 @@ object Analytics {
     * full table. Output: one row per stage with the surviving user
     * count (conversion reads top-down). */
   def funnel(s: SparkSession, d: String): DataFrame =
-    funnelOn(Tables.events(s, d), funnelStages)
+    funnelOn(Tables.events(s, d), funnelStageNames)
 
   /** Same over any (user_id, event_type, ts) frame. */
   def funnelOn(events: DataFrame, stages: Seq[String]): DataFrame = {
@@ -191,7 +191,7 @@ object Analytics {
     * — the q_percentiles plan shape over frames that SHRINK with
     * funnel depth. */
   def funnelLatency(s: SparkSession, d: String): DataFrame =
-    funnelLatencyOn(Tables.events(s, d), funnelStages)
+    funnelLatencyOn(Tables.events(s, d), funnelStageNames)
 
   /** Same over any (user_id, event_type, ts) frame. */
   def funnelLatencyOn(events: DataFrame, stages: Seq[String]): DataFrame = {
@@ -262,7 +262,7 @@ object Analytics {
 
   /** The HLL relative standard deviation of the checked distinct
     * faces and the profiles. */
-  private val rsd = 0.02
+  private val hllRsd = 0.02
 
   /** Driver-checkable face of [[dauWau]]'s 100 TB variant: the
     * trailing-window distinct is where exact dedup hurts at scale
@@ -283,21 +283,21 @@ object Analytics {
       .distinct()
     val dau = ud.groupBy(col("day"))
       .agg(count(lit(1)).as("dau"),
-           approx_count_distinct(col("user_id"), rsd).as("__da"))
+           approx_count_distinct(col("user_id"), hllRsd).as("__da"))
     val support = ud.select(col("user_id"),
         explode(sequence(lit(0), lit(6))).as("off"), col("day"))
       .select(col("user_id"),
         expr("timestampadd(DAY, off, day)").as("day"))
     val wau = support.groupBy(col("day"))
       .agg(countDistinct(col("user_id")).as("wau"),
-           approx_count_distinct(col("user_id"), rsd).as("__wa"))
+           approx_count_distinct(col("user_id"), hllRsd).as("__wa"))
     dau.join(wau, "day")
       .select(col("day"), col("dau"), col("wau"),
         (abs(col("__da") - col("dau")).cast("double") <=
-          greatest(lit(5 * rsd) * col("dau"), lit(1.0)))
+          greatest(lit(5 * hllRsd) * col("dau"), lit(1.0)))
           .as("dau_within_tol"),
         (abs(col("__wa") - col("wau")).cast("double") <=
-          greatest(lit(5 * rsd) * col("wau"), lit(1.0)))
+          greatest(lit(5 * hllRsd) * col("wau"), lit(1.0)))
           .as("wau_within_tol"))
       .orderBy(col("day"))
   }
@@ -364,7 +364,7 @@ object Analytics {
 
   /** The length of the Q10, session-path, event-n-gram and
     * market-basket top lists. */
-  private val topN = 20
+  private val listTopN = 20
 
   /** TPC-H Q10 (returned-item reporting): which customers returned
     * the most revenue in a quarter — the churn-risk outreach list.
@@ -390,7 +390,7 @@ object Analytics {
         round(col("__rev").cast("double"), 4).as("revenue"),
         col("c_acctbal"), col("n_name"))
       .orderBy(col("revenue").desc, col("c_custkey"))
-      .limit(topN)
+      .limit(listTopN)
   }
 
   /** TPC-H Q6 (forecasting revenue change): the what-if scan — how
@@ -631,7 +631,7 @@ object Analytics {
     * aggregate, not via per-column scans).
     *
     * `approx = true` swaps the exact distinct for HLL++
-    * (approx_count_distinct at `rsd`): exact multi-distinct expands
+    * (approx_count_distinct at `hllRsd`): exact multi-distinct expands
     * the aggregate into one replicated pass per distinct column —
     * the one piece of this surface that does NOT survive 100 TB
     * column cardinalities — while the sketches are fixed-size,
@@ -649,7 +649,7 @@ object Analytics {
     val aggs = cols.flatMap { c => Seq(
       count(lit(1)).as(s"__n_$c"),
       sum(when(col(bqId(c)).isNull, 1L).otherwise(0L)).as(s"__null_$c"),
-      (if (approx) approx_count_distinct(col(bqId(c)), rsd)
+      (if (approx) approx_count_distinct(col(bqId(c)), hllRsd)
        else countDistinct(col(bqId(c)))).as(s"__dist_$c"))
     }
     val one = df.agg(aggs.head, aggs.tail: _*)
@@ -732,7 +732,7 @@ object Analytics {
       countDistinct(col(bqId(c))).as(s"__dist_$c"))
     }
     val approxAggs = cols.map { c =>
-      approx_count_distinct(col(bqId(c)), rsd).as(s"__adist_$c") }
+      approx_count_distinct(col(bqId(c)), hllRsd).as(s"__adist_$c") }
     val one = df.agg(exactAggs.head, exactAggs.tail: _*)
       .crossJoin(df.agg(approxAggs.head, approxAggs.tail: _*))
     val stacked = cols.map { c =>
@@ -740,7 +740,7 @@ object Analytics {
         s"${bqId(s"__dist_$c")}, " +
         s"CAST(abs(${bqId(s"__adist_$c")} - ${bqId(s"__dist_$c")}) " +
         s"AS DOUBLE) <= " +
-        s"greatest(${5 * rsd} * ${bqId(s"__dist_$c")}, 1.0d)"
+        s"greatest(${5 * hllRsd} * ${bqId(s"__dist_$c")}, 1.0d)"
     }.mkString(", ")
     one.selectExpr(
         s"stack(${cols.length}, $stacked) AS " +
@@ -763,14 +763,14 @@ object Analytics {
     Tables.events(s, d)
       .agg(countDistinct(col("user_id")).as("users_exact"),
            countDistinct(col("event_type")).as("types_exact"),
-           approx_count_distinct(col("user_id"), rsd).as("__ua"),
-           approx_count_distinct(col("event_type"), rsd).as("__ta"))
+           approx_count_distinct(col("user_id"), hllRsd).as("__ua"),
+           approx_count_distinct(col("event_type"), hllRsd).as("__ta"))
       .select(col("users_exact"), col("types_exact"),
         (abs(col("__ua") - col("users_exact")).cast("double") <=
-          greatest(lit(5 * rsd) * col("users_exact"), lit(1.0)))
+          greatest(lit(5 * hllRsd) * col("users_exact"), lit(1.0)))
           .as("users_within_tol"),
         (abs(col("__ta") - col("types_exact")).cast("double") <=
-          greatest(lit(5 * rsd) * col("types_exact"), lit(1.0)))
+          greatest(lit(5 * hllRsd) * col("types_exact"), lit(1.0)))
           .as("types_within_tol"))
 
   /** Per-type approximate percentiles (Greenwald-Khanna quantile
@@ -1056,8 +1056,8 @@ object Analytics {
   }
 
   /** The two arms the A/B tests (Welch, Mann-Whitney, KS) compare. */
-  private val typeA = "click"
-  private val typeB = "purchase"
+  private val armA = "click"
+  private val armB = "purchase"
 
   /** Welch's unequal-variance t-test between two series — the A/B
     * significance check run before trusting a mean difference. All
@@ -1068,7 +1068,7 @@ object Analytics {
     * double arithmetic, identical in any engine. Scalar output — the
     * plan is the same shape as a SUM at any data size. */
   def welchTTest(s: SparkSession, d: String): DataFrame =
-    welchTTestOn(Tables.events(s, d), typeA, typeB)
+    welchTTestOn(Tables.events(s, d), armA, armB)
 
   /** Same over any (event_type, value) frame. */
   def welchTTestOn(events: DataFrame, typeA: String, typeB: String): DataFrame = {
@@ -1255,7 +1255,7 @@ object Analytics {
     * distinct values + the prefix sum — the same exchange budget as a
     * groupBy. */
   def mannWhitney(s: SparkSession, d: String): DataFrame =
-    mannWhitneyOn(Tables.events(s, d), typeA, typeB)
+    mannWhitneyOn(Tables.events(s, d), armA, armB)
 
   /** Same over any (event_type, value) frame. */
   def mannWhitneyOn(events: DataFrame, typeA: String,
@@ -1311,7 +1311,7 @@ object Analytics {
     * engines (no libm transcendentals). Contract: both arms
     * non-empty. */
   def ksTest(s: SparkSession, d: String): DataFrame =
-    ksTestOn(Tables.events(s, d), typeA, typeB)
+    ksTestOn(Tables.events(s, d), armA, armB)
 
   /** Same over any (event_type, value) frame. */
   def ksTestOn(events: DataFrame, typeA: String,
@@ -1965,7 +1965,7 @@ object Analytics {
   def sessionPaths(s: SparkSession, d: String): DataFrame = {
     val gapMin = 2880
     val pathLen = 3
-    sessionPathsOn(Tables.events(s, d), gapMin, pathLen, topN)
+    sessionPathsOn(Tables.events(s, d), gapMin, pathLen, listTopN)
   }
 
   /** Same over any (user_id, ts, event_id, event_type) frame. */
@@ -2003,7 +2003,7 @@ object Analytics {
     * (ts, event_id) ordering is total, so the gram stream is
     * deterministic cross-engine. */
   def eventNgrams(s: SparkSession, d: String): DataFrame =
-    eventNgramsOn(Tables.events(s, d), topN)
+    eventNgramsOn(Tables.events(s, d), listTopN)
 
   /** Same over any (user_id, ts, event_id, event_type) frame. */
   def eventNgramsOn(events: DataFrame, topN: Int): DataFrame = {
@@ -2129,7 +2129,7 @@ object Analytics {
     val baskets = Tables.lineitem(s, d)
       .join(Tables.part(s, d), col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("basket"), col("p_brand").as("item"))
-    marketBasketOn(baskets, minCount, topN, maxBasket)
+    marketBasketOn(baskets, minCount, listTopN, maxBasket)
   }
 
   /** Same over any (basket, item) membership list. */

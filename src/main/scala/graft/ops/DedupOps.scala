@@ -207,7 +207,7 @@ object DedupOps {
     * (64 permutations in 16 bands) of the MinHash, incremental-index
     * and decontamination faces. */
   private val jaccardThreshold = 0.8
-  private val numPerm = 64
+  private val minhashPerms = 64
   private val numBands = 16
 
   /** Candidate pairs whose exact Jaccard ≥ threshold, surfaced by
@@ -215,34 +215,21 @@ object DedupOps {
     * J≈0.8+ are caught with prob ≥ 1-(1-0.8⁴)¹⁶ ≈ 0.9994). */
   def minhashLsh(s: SparkSession, d: String,
                  maxBucket: Int = 1000): DataFrame =
-    minhashLshOn(Tables.documents(s, d), jaccardThreshold, numPerm, numBands,
-      maxBucket)
+    minhashLshOn(Tables.documents(s, d), maxBucket)
 
   /** Same over any (doc_id, text) frame. */
-  def minhashLshOn(docs: DataFrame,
-                   threshold: Double = 0.8,
-                   numPerm: Int = 64, bands: Int = 16,
-                   maxBucket: Int = 1000): DataFrame =
+  def minhashLshOn(docs: DataFrame, maxBucket: Int = 1000): DataFrame = {
     // reused by signature build AND exact verification — materialize once
-    minhashLshOnSets(docShingleSets(docs).localCheckpoint(false),
-      threshold, numPerm, bands, maxBucket)
-
-  /** [[minhashLshOn]] over an already-staged (checkpointed) shingle-set
-    * frame — lets a caller that also needs the sets for another stage
-    * ([[incrementalIndex]]'s state construction) shingle the corpus
-    * exactly once. */
-  private def minhashLshOnSets(sets: DataFrame,
-                               threshold: Double, numPerm: Int,
-                               bands: Int, maxBucket: Int): DataFrame =
-    lshPairsFromIndex(bandIndexOnSets(sets, numPerm, bands), sets,
-      threshold, maxBucket)
+    val sets = docShingleSets(docs).localCheckpoint(false)
+    lshPairsFromIndex(bandIndexOnSets(sets, minhashPerms, numBands), sets,
+      maxBucket)
+  }
 
   /** The LSH self-join + verify stage over an explicit band-index
     * frame — shared by [[minhashLshOn]] (which builds the index
     * in-flight) and [[incrementalIndex]] (which reads a persisted
     * one, so the signature aggregation never reruns). */
   private def lshPairsFromIndex(index: DataFrame, sets: DataFrame,
-                                threshold: Double,
                                 maxBucket: Int): DataFrame = {
     // capBucketsRep checkpoints the ranked frame, so the 64-aggregate
     // signature pass runs once and both self-join sides (and the
@@ -257,7 +244,7 @@ object DedupOps {
       .union(overflow)
       .distinct()
     verifyJaccard(cand, sets)
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= jaccardThreshold)
       .orderBy(col("id1"), col("id2"))
   }
 
@@ -311,10 +298,10 @@ object DedupOps {
     // ONE checkpointed signature/banding pass over history serve both the
     // index and the pair table
     val hSets = docShingleSets(history).localCheckpoint(false)
-    val hIndex = bandIndexOnSets(hSets, numPerm, numBands).localCheckpoint(false)
+    val hIndex = bandIndexOnSets(hSets, minhashPerms, numBands).localCheckpoint(false)
     incrementalFold(hIndex,
-      lshPairsFromIndex(hIndex, hSets, jaccardThreshold, maxBucket),
-      history, delta, jaccardThreshold, numPerm, numBands, maxBucket)
+      lshPairsFromIndex(hIndex, hSets, maxBucket),
+      history, delta, jaccardThreshold, minhashPerms, numBands, maxBucket)
   }
 
   /** [[incrementalIndex]] with the persisted state crossing a REAL
@@ -360,10 +347,10 @@ object DedupOps {
     val history = docs.filter(col("doc_id") % 4 =!= 0)
     val delta = docs.filter(col("doc_id") % 4 === 0)
     val hSets = docShingleSets(history).localCheckpoint(false)
-    val hIndex = bandIndexOnSets(hSets, numPerm, numBands).localCheckpoint(false)
+    val hIndex = bandIndexOnSets(hSets, minhashPerms, numBands).localCheckpoint(false)
     hIndex.write.mode("overwrite").partitionBy("band")
       .parquet(s"$dir/band_index.parquet")
-    lshPairsFromIndex(hIndex, hSets, jaccardThreshold, maxBucket)
+    lshPairsFromIndex(hIndex, hSets, maxBucket)
       .write.mode("overwrite").parquet(s"$dir/pairs.parquet")
     // the fold sees ONLY the read-back state
     val rIndex = s.read.parquet(s"$dir/band_index.parquet")
@@ -371,7 +358,7 @@ object DedupOps {
     val rPairs = s.read.parquet(s"$dir/pairs.parquet")
       .select(col("id1"), col("id2"), col("jaccard"))
     incrementalFold(rIndex, rPairs, history, delta, jaccardThreshold,
-      numPerm, numBands, maxBucket)
+      minhashPerms, numBands, maxBucket)
   }
 
   /** The split-agnostic full-corpus near-dup recompute in DuckDB —
@@ -552,8 +539,8 @@ object DedupOps {
       .localCheckpoint(false)
     val sig = minhashSignatures(
       sets.select(col("doc_id"), col("__ref"), explode(col("hs")).as("h")),
-      numPerm, carry = Seq("__ref"))
-    val bandSigs = bandCols(numPerm, numBands, j => col(s"mh$j"))
+      minhashPerms, carry = Seq("__ref"))
+    val bandSigs = bandCols(minhashPerms, numBands, j => col(s"mh$j"))
     // caps are per (bucket, side): the corpus cap must not depend on
     // how many reference docs share the bucket and vice versa
     val w = Window.partitionBy(col("band"), col("bsig"), col("__ref"))
@@ -629,10 +616,10 @@ object DedupOps {
     val refSets = ref.select(col("doc_id").as("ref_id"),
       col("hs").as("ref_hs"), size(col("hs")).as("ref_n"))
     val bandIndex = ref.select(col("doc_id").as("ref_id"),
-      posexplode(array(bandSigsExpr(col("hs"), numPerm, numBands): _*))
+      posexplode(array(bandSigsExpr(col("hs"), minhashPerms, numBands): _*))
         .as(Seq("band", "bsig")))
     val cor = staged(corpus).select(col("doc_id"), col("hs"),
-      posexplode(array(bandSigsExpr(col("hs"), numPerm, numBands): _*))
+      posexplode(array(bandSigsExpr(col("hs"), minhashPerms, numBands): _*))
         .as(Seq("band", "bsig")))
     cor
       .join(broadcast(bandIndex), Seq("band", "bsig"))
@@ -687,7 +674,7 @@ object DedupOps {
     val ref = staged(reference).localCheckpoint(false)
     def bandKey: Column = xxhash64(col("band"), col("bsig"))
     val refBands = ref.select(col("doc_id").as("ref_id"),
-      posexplode(array(bandSigsExpr(col("hs"), numPerm, numBands): _*))
+      posexplode(array(bandSigsExpr(col("hs"), minhashPerms, numBands): _*))
         .as(Seq("band", "bsig")))
     // posexplode of a fixed-size array: exactly bands keys per ref doc
     val expected = math.max(1L, ref.count()) * numBands
@@ -696,7 +683,7 @@ object DedupOps {
     val mightContain = graft.functions.BloomProbe.mightContain(
       refBands.select(bandKey.as("k")), "k", expected, fpp, bandKey)
     val corBands = staged(corpus).select(col("doc_id"), col("hs"),
-      posexplode(array(bandSigsExpr(col("hs"), numPerm, numBands): _*))
+      posexplode(array(bandSigsExpr(col("hs"), minhashPerms, numBands): _*))
         .as(Seq("band", "bsig")))
       .filter(mightContain)
     val refSets = ref.select(col("doc_id").as("ref_id"),
@@ -721,7 +708,7 @@ object DedupOps {
 
   /** The posting cap of the containment and n-gram Jaccard faces;
     * 0 keeps them exact. */
-  private val maxDf = 0
+  private val postingCap = 0
 
   /** Asymmetric n-gram CONTAINMENT decontamination: flag (corpus doc
     * A, reference item R) whenever |shingles(A) ∩ shingles(R)| / |shingles(R)|
@@ -746,17 +733,17 @@ object DedupOps {
     *
     * Scale: join volume is Σ_R prefix(R) × df(shingle) — reference
     * prefixes against a linear corpus index, no corpus self-join.
-    * `maxDf` > 0 caps a shingle's corpus posting list (deterministic
+    * `postingCap` > 0 caps a shingle's corpus posting list (deterministic
     * lowest-ids-win) as the hot-shingle safety valve; unlike the
     * self-join operators there is no overflow-representative rescue
     * across two tables, so a capped run is honestly APPROXIMATE
     * (recall loss on pairs whose every shared prefix shingle is hot) —
-    * this face runs with `maxDf` = 0, exact. */
+    * this face runs with `postingCap` = 0, exact. */
   def containment(s: SparkSession, d: String): DataFrame = {
     val threshold = 0.6
     val docs = Tables.documents(s, d)
     containmentOn(docs.filter(col("doc_id") % 2 === 0),
-      docs.filter(col("doc_id") % 2 =!= 0), threshold, maxDf)
+      docs.filter(col("doc_id") % 2 =!= 0), threshold, postingCap)
   }
 
   /** Same over any (doc_id, text) corpus/reference frames. */
@@ -1061,7 +1048,7 @@ object DedupOps {
     * (t·max ≤ min) ahead of exact set verification. */
   def ngramJaccard(s: SparkSession, d: String,
                    threshold: Double = jaccardThreshold): DataFrame =
-    ngramJaccardOn(Tables.documents(s, d), threshold, maxDf)
+    ngramJaccardOn(Tables.documents(s, d), threshold, postingCap)
 
   /** Same over any (doc_id, text) frame. `maxDf` > 0 caps the posting
     * list of a prefix shingle (deterministic lowest-ids-win) — the
@@ -1678,7 +1665,7 @@ object DedupOps {
     * contract, as in every LSH face. */
   def minhashEstPairs(docs: DataFrame): DataFrame = {
     val threshold = 0.5
-    val rows = numPerm / numBands
+    val rows = minhashPerms / numBands
     // stage the token array, then the distinct shingle STRINGS, then
     // the signature — three projections so no lambda re-evaluates an
     // expensive subtree per element (the docShingleSets O(tokens²)
@@ -1707,15 +1694,15 @@ object DedupOps {
     // untouched.
     val shEx = sh.select(col("doc_id"), explode(col("sh")).as("s"))
     val uniq = shEx.select(col("s")).distinct()
-      .select(col("s"), transform(sequence(lit(0), lit(numPerm - 1)),
+      .select(col("s"), transform(sequence(lit(0), lit(minhashPerms - 1)),
         i => comp(col("s"), i)).as("v"))
-    val mins = (0 until numPerm).map(j =>
+    val mins = (0 until minhashPerms).map(j =>
       min(element_at(col("v"), j + 1)).as(s"mh$j"))
     val sigs = shEx.join(uniq, "s")
       .groupBy(col("doc_id"))
       .agg(mins.head, mins.tail: _*)
       .select(col("doc_id"),
-        array((0 until numPerm).map(j => col(s"mh$j")): _*).as("sig"))
+        array((0 until minhashPerms).map(j => col(s"mh$j")): _*).as("sig"))
       .localCheckpoint(false)
     // the band key is the rows-long component slice itself (each
     // engine needs only an injective per-band encoding for ITS OWN
@@ -1734,7 +1721,7 @@ object DedupOps {
       .join(sigs.select(col("doc_id").as("id2"), col("sig").as("s2")), "id2")
       .select(col("id1"), col("id2"),
         ExactRatio.r4(size(filter(zip_with(col("s1"), col("s2"),
-          (a, b) => a === b), x => x)), lit(numPerm)).as("est_jaccard"))
+          (a, b) => a === b), x => x)), lit(minhashPerms)).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
       .orderBy(col("id1"), col("id2"))
   }

@@ -30,16 +30,16 @@ object Forecast {
     * (days), the weekly season, the exponential-smoothing factors,
     * and the event value above which the intermittent-demand faces
     * count an event as a demand. */
-  private val horizon = 7
-  private val period = 7
-  private val alpha = 0.3
-  private val beta = 0.1
+  private val horizonDays = 7
+  private val seasonDays = 7
+  private val levelAlpha = 0.3
+  private val trendBeta = 0.1
   private val sparseThreshold = 300.0
 
-  /** Forecast the last `horizon` days of each event_type series.
+  /** Forecast the last `horizonDays` days of each event_type series.
     * Output: event_type, day, actual, pred, lo, hi. */
   def seasonalNaive(s: SparkSession, d: String): DataFrame =
-    seasonalNaiveOn(dailyOf(s, d), period, horizon)
+    seasonalNaiveOn(dailyOf(s, d), seasonDays, horizonDays)
 
   /** Same over any (day, event_type, cnt) daily frame. */
   def seasonalNaiveOn(daily: DataFrame,
@@ -93,11 +93,11 @@ object Forecast {
       .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-    val lagged = daily.withColumn("lagp", lag(col("cnt"), period).over(w))
+    val lagged = daily.withColumn("lagp", lag(col("cnt"), seasonDays).over(w))
     val mx = daily.agg(max(col("day")).as("mx"))
     val t = lagged.crossJoin(broadcast(mx)).localCheckpoint(false)
     val train = t
-      .filter(col("day") <= col("mx") - expr(s"interval $horizon day") &&
+      .filter(col("day") <= col("mx") - expr(s"interval $horizonDays day") &&
         col("lagp").isNotNull)
       .select(col("event_type"),
         abs(col("cnt") - col("lagp")).as("ar"), col("day"))
@@ -114,7 +114,7 @@ object Forecast {
       .select(col("event_type"), col("ar").as("qhat"),
         (expr(s"($keep * (n + 1) + 99) div 100") > col("n"))
           .as("clamped"))
-    t.filter(col("day") > col("mx") - expr(s"interval $horizon day") &&
+    t.filter(col("day") > col("mx") - expr(s"interval $horizonDays day") &&
         col("lagp").isNotNull)
       .join(broadcast(qhat), Seq("event_type"))
       .select(col("event_type"), col("day"), col("cnt").as("actual"),
@@ -130,7 +130,7 @@ object Forecast {
   /** Additive Holt-Winters (triple exponential smoothing) per series
     * — the classical-model step up from seasonal-naive: level, trend,
     * and a rotating seasonal vector updated by one recursion over the
-    * observed days, then `horizon` point forecasts
+    * observed days, then `horizonDays` point forecasts
     * level + h·trend + seas[(n+h-1) mod period].
     *
     * The recursion is inherently sequential PER SERIES, so it runs in
@@ -152,24 +152,24 @@ object Forecast {
       .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))) { ys =>
       val n = ys.length
-      if (n < 2 * period) Iterator.empty
+      if (n < 2 * seasonDays) Iterator.empty
       else {
-        var level = ys.take(period).sum / period
-        val m2 = ys.slice(period, 2 * period).sum / period
-        var trend = (m2 - level) / period
-        val seas = Array.tabulate(period)(i => ys(i) - level)
-        var t = period
+        var level = ys.take(seasonDays).sum / seasonDays
+        val m2 = ys.slice(seasonDays, 2 * seasonDays).sum / seasonDays
+        var trend = (m2 - level) / seasonDays
+        val seas = Array.tabulate(seasonDays)(i => ys(i) - level)
+        var t = seasonDays
         while (t < n) {
           val y = ys(t)
-          val sOld = seas(t % period)
-          val newLevel = alpha * (y - sOld) + (1 - alpha) * (level + trend)
-          trend = beta * (newLevel - level) + (1 - beta) * trend
-          seas(t % period) = gamma * (y - newLevel) + (1 - gamma) * sOld
+          val sOld = seas(t % seasonDays)
+          val newLevel = levelAlpha * (y - sOld) + (1 - levelAlpha) * (level + trend)
+          trend = trendBeta * (newLevel - level) + (1 - trendBeta) * trend
+          seas(t % seasonDays) = gamma * (y - newLevel) + (1 - gamma) * sOld
           level = newLevel
           t += 1
         }
-        (1 to horizon).iterator.map { h =>
-          (h, level + h * trend + seas((n + h - 1) % period))
+        (1 to horizonDays).iterator.map { h =>
+          (h, level + h * trend + seas((n + h - 1) % seasonDays))
         }
       }
     }
@@ -235,7 +235,7 @@ object Forecast {
     * the [[seasonalNaive]] shape minus the quantile band (an AR point
     * model has no residual-quantile interval by construction). */
   def arForecast(s: SparkSession, d: String): DataFrame =
-    arForecastOn(dailyOf(s, d), horizon)
+    arForecastOn(dailyOf(s, d), horizonDays)
 
   /** Same over any (day, event_type, cnt) daily frame. */
   def arForecastOn(daily: DataFrame, horizon: Int): DataFrame = {
@@ -344,7 +344,7 @@ object Forecast {
     * Output: (event_type, day, actual, pred) over the holdout days —
     * the [[arForecast]] shape. */
   def thetaForecast(s: SparkSession, d: String): DataFrame =
-    thetaForecastOn(dailyOf(s, d), horizon, alpha)
+    thetaForecastOn(dailyOf(s, d), horizonDays, levelAlpha)
 
   /** Same over any (day, event_type, cnt) daily frame. */
   def thetaForecastOn(daily: DataFrame, horizon: Int,
@@ -436,21 +436,21 @@ object Forecast {
     // exchange reuse, barrier jobs not amortized at this cost class
     val filled = sparseSpine(s, d)
     val span = filled.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
-    withActuals(holdoutFit(filled, span, horizon) { rows =>
+    withActuals(holdoutFit(filled, span, horizonDays) { rows =>
       var q = 1.0; var z = 0.0; var p = 1.0; var first = true
       rows.foreach { r =>
         val y = r._3.toDouble
         if (y > 0) {
           if (first) { z = y; p = q; first = false }
           else {
-            z = alpha * y + (1.0 - alpha) * z
-            p = alpha * q + (1.0 - alpha) * p
+            z = levelAlpha * y + (1.0 - levelAlpha) * z
+            p = levelAlpha * q + (1.0 - levelAlpha) * p
           }
           q = 1.0
         } else q += 1.0
       }
       val f = if (first) 0.0 else z / p
-      (1 to horizon).iterator.map(h => (h, f))
+      (1 to horizonDays).iterator.map(h => (h, f))
     }, filled)
   }
 
@@ -477,7 +477,7 @@ object Forecast {
   def reconcileForecast(s: SparkSession, d: String): DataFrame =
     reconcileForecastOn(Tables.events(s, d)
       .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("cnt")), horizon)
+      .agg(count(lit(1)).as("cnt")), horizonDays)
 
   /** Same over any (day, event_type, cnt) daily frame. */
   def reconcileForecastOn(daily: DataFrame, horizon: Int): DataFrame = {
@@ -530,7 +530,7 @@ object Forecast {
         .agg(count(lit(1)).as("cnt"))
         .select(col("event_type"),
           expr("unix_micros(day) div 86400000000").as("ed"), col("cnt")),
-      period, nOrigins)
+      seasonDays, nOrigins)
   }
 
   /** Same over any (event_type, ed, cnt) daily series. */
@@ -586,7 +586,7 @@ object Forecast {
       .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
       .select(col("event_type"), col("day"), col("cnt")),
-      horizon, alpha, beta, phi)
+      horizonDays, levelAlpha, trendBeta, phi)
   }
 
   /** Same over any (event_type, day, cnt) daily frame. */
@@ -691,13 +691,13 @@ object Forecast {
     // member fits are unchanged functions of it, so outputs are
     // identical.
     val daily = dailyOf(s, d).localCheckpoint(false)
-    val sn = seasonalNaiveOn(daily, period, horizon)
+    val sn = seasonalNaiveOn(daily, seasonDays, horizonDays)
       .select(col("event_type"), col("actual"), col("pred"))
       .withColumn("model", lit("snaive"))
-    val ar = arForecastOn(daily, horizon)
+    val ar = arForecastOn(daily, horizonDays)
       .select(col("event_type"), col("actual"), col("pred"))
       .withColumn("model", lit("ar2"))
-    val th = thetaForecastOn(daily, horizon, alpha)
+    val th = thetaForecastOn(daily, horizonDays, levelAlpha)
       .select(col("event_type"), col("actual"), col("pred"))
       .withColumn("model", lit("theta"))
     maeTable(sn.unionByName(ar).unionByName(th))
@@ -744,12 +744,12 @@ object Forecast {
   def ensembleForecast(s: SparkSession, d: String): DataFrame = {
     // shared checkpointed daily frame — see compareModels
     val daily = dailyOf(s, d).localCheckpoint(false)
-    val sn = seasonalNaiveOn(daily, period, horizon)
+    val sn = seasonalNaiveOn(daily, seasonDays, horizonDays)
       .select(col("event_type"), col("day"), col("actual"),
         col("pred").as("p_sn"))
-    val ar = arForecastOn(daily, horizon)
+    val ar = arForecastOn(daily, horizonDays)
       .select(col("event_type"), col("day"), col("pred").as("p_ar"))
-    val th = thetaForecastOn(daily, horizon, alpha)
+    val th = thetaForecastOn(daily, horizonDays, levelAlpha)
       .select(col("event_type"), col("day"), col("pred").as("p_th"))
     val j = sn.join(ar, Seq("event_type", "day"))
       .join(th, Seq("event_type", "day"))
@@ -902,7 +902,7 @@ object Forecast {
       |FROM mae ORDER BY event_type, model""".stripMargin
 
   /** Oracle for [[compareModels]]: the three members stacked. */
-  private[graft] def compareOracleSql(): String =
+  private[graft] def compareOracleSql: String =
     memberChainOracleSql + ",\n" +
       """allp AS (
         |  SELECT event_type, actual, pred, 'snaive' AS model FROM sn
@@ -912,7 +912,7 @@ object Forecast {
 
   /** Oracle for [[ensembleForecast]]: the members day-joined and the
     * mean-of-three scored beside them on the common holdout. */
-  private[graft] def ensembleOracleSql(): String =
+  private[graft] def ensembleOracleSql: String =
     memberChainOracleSql + ",\n" +
       """joined AS (
         |  SELECT sn.event_type, sn.day, sn.actual,

@@ -113,7 +113,7 @@ object GraphOps {
   }
 
   /** The basket-size cap of every co-occurrence graph face. */
-  private val maxBasket = 16
+  private val basketCap = 16
 
   /** Triangle count + global clustering coefficient over the part
     * co-occurrence graph (parts appearing in the same order are
@@ -126,7 +126,7 @@ object GraphOps {
     *
     * Edges derive from baskets: distinct (order, part), self-joined
     * per order with `part1 < part2` — an equi-join whose fanout is
-    * C(basket, 2), bounded by `maxBasket` (oversized baskets are
+    * C(basket, 2), bounded by `basketCap` (oversized baskets are
     * DROPPED with the bucket-cap posture: a hostile 10^5-item basket
     * would otherwise contribute 10^10 pairs; reference baskets hold
     * ≤ 7 items, so the cap is inert on this schema and exists for the
@@ -149,7 +149,7 @@ object GraphOps {
   def triangles(s: SparkSession, d: String): DataFrame =
     trianglesOn(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
-      maxBasket)
+      basketCap)
 
   /** Same over any (basket, item) membership list. */
   def trianglesOn(pairs: DataFrame, maxBasket: Int): DataFrame =
@@ -204,7 +204,7 @@ object GraphOps {
   def degreeDist(s: SparkSession, d: String): DataFrame =
     degreeDistOn(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
-      maxBasket)
+      basketCap)
 
   /** Same over any (basket, item) membership list. */
   def degreeDistOn(pairs: DataFrame, maxBasket: Int): DataFrame = {
@@ -247,7 +247,7 @@ object GraphOps {
     val rounds = 4
     bfsOn(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
-      rounds, maxBasket)
+      rounds, basketCap)
   }
 
   /** Same over any (basket, item) membership list. */
@@ -308,7 +308,7 @@ object GraphOps {
     val topN = 50
     linkPredictOn(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
-      maxBasket, maxCenterDeg, topN)
+      basketCap, maxCenterDeg, topN)
   }
 
   /** Same over any (basket, item) membership list. */
@@ -371,7 +371,7 @@ object GraphOps {
   def kCore(s: SparkSession, d: String): DataFrame =
     kCoreOn(basketEdges(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
-      maxBasket), kCoreK, kCoreRounds)
+      basketCap), kCoreK, kCoreRounds)
 
   /** Same over any canonical (a < b) undirected edge frame.
     *
@@ -472,7 +472,7 @@ object GraphOps {
        |             l_partkey AS item FROM lineitem),
        |sz AS (SELECT basket, count(*) AS bsz FROM m GROUP BY 1),
        |mm AS (SELECT m.basket, m.item FROM m JOIN sz USING (basket)
-       |       WHERE sz.bsz <= $maxBasket),
+       |       WHERE sz.bsz <= $basketCap),
        |e0 AS MATERIALIZED (SELECT DISTINCT x.item AS a, y.item AS b
        |       FROM mm x JOIN mm y USING (basket) WHERE x.item < y.item),
        |$peels
@@ -506,7 +506,7 @@ object GraphOps {
   def lpa(s: SparkSession, d: String): DataFrame =
     lpaOn(basketEdges(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
-      maxBasket), lpaRounds)
+      basketCap), lpaRounds)
 
   /** Same over any canonical (a < b) undirected edge frame. */
   def lpaOn(edges0: DataFrame, rounds: Int): DataFrame = {
@@ -558,7 +558,7 @@ object GraphOps {
        |             l_partkey AS item FROM lineitem),
        |sz AS (SELECT basket, count(*) AS bsz FROM m GROUP BY 1),
        |mm AS (SELECT m.basket, m.item FROM m JOIN sz USING (basket)
-       |       WHERE sz.bsz <= $maxBasket),
+       |       WHERE sz.bsz <= $basketCap),
        |e0 AS MATERIALIZED (SELECT DISTINCT x.item AS a, y.item AS b
        |       FROM mm x JOIN mm y USING (basket) WHERE x.item < y.item),
        |bidir AS MATERIALIZED (SELECT a AS src, b AS dst FROM e0
@@ -660,7 +660,7 @@ object GraphOps {
     val steps = 3
     randomWalksOn(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
-      steps, maxBasket)
+      steps, basketCap)
   }
 
   /** Same over any (basket, item) membership list. */

@@ -724,14 +724,14 @@ object MultimodalOps {
   /** The keyframe stride and the shot-cut luma threshold (milli
     * units) of [[videoSample]] and its oracle; the video fingerprint
     * samples at the same stride. */
-  private val every = 3
+  private val frameStride = 3
   private val cutTauMilli = 20000L
 
   /** Video FRAME SAMPLING — the decode → sample-every-k → per-frame
     * feature chain a video-curation pipeline runs (keyframe
     * extraction, shot detection, thumbnail scoring): each document
     * materializes a real [[VideoCodec]] container, the header walk
-    * yields the frame count, and only every `every`-th frame is
+    * yields the frame count, and only every `frameStride`-th frame is
     * decoded and scored (a production clip column never decodes every
     * frame — the sample IS the point). Per sampled frame: exact
     * integer mean luma (sum·1000 div px) and a shot-cut flag — the
@@ -748,7 +748,7 @@ object MultimodalOps {
     val ids = Tables.spread(Tables.documents(s, d).select(col("doc_id")))
       .as[Long]
     val frames = ids.flatMap { id =>
-      VideoCodec.sampleFrames(MmSynth.videoBytes(id), every).toSeq
+      VideoCodec.sampleFrames(MmSynth.videoBytes(id), frameStride).toSeq
         .flatMap { case (nf, fs) =>
           fs.map { case (f, m) => (id, nf, f, m) } }
     }.toDF("doc_id", "n_frames", "frame_idx", "mean_luma_milli")
@@ -769,7 +769,7 @@ object MultimodalOps {
     s"""WITH p AS (SELECT doc_id, 8 + (doc_id % 8) AS nf FROM documents),
        |f AS (SELECT doc_id, nf, fi FROM p,
        |  LATERAL (SELECT unnest(range(0, nf)) AS fi)
-       |  WHERE fi % $every = 0),
+       |  WHERE fi % $frameStride = 0),
        |px AS (SELECT doc_id, nf, fi,
        |    (doc_id * 7 + fi * 13 + x * 3 + y * 5) % 251 AS v
        |  FROM f, LATERAL (SELECT unnest(range(0, 8)) AS x),
@@ -867,7 +867,7 @@ object MultimodalOps {
     val ids = Tables.spread(Tables.documents(s, d).select(col("doc_id")))
       .as[Long]
     val hashed = ids.flatMap { id =>
-      VideoCodec.lumaSeqFp(MmSynth.videoNearBytes(id), every)
+      VideoCodec.lumaSeqFp(MmSynth.videoNearBytes(id), frameStride)
         .map(hv => (id, hv))
     }.toDF("doc_id", "fp")
     val fams = hashed.groupBy(col("fp"))

@@ -46,15 +46,15 @@ object Recommend {
 
   /** The co-occurrence floor, neighbor-list length and basket-size
     * cap of the item-cosine faces; DIMSUM shares the cap. */
-  private val minCount = 2L
-  private val topK = 5
-  private val maxBasket = 16
+  private val pairFloor = 2L
+  private val neighborCount = 5
+  private val basketCap = 16
 
   /** Exact neighbor lists over order→part baskets (lineitem). */
   def itemCosine(s: SparkSession, d: String): DataFrame =
     itemCosineOn(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
-      minCount, topK, maxBasket)
+      pairFloor, neighborCount, basketCap)
 
   /** Capped distinct membership — shared by both faces so exact and
     * sampled read the identical basket universe. Kept as distinct →
@@ -137,7 +137,7 @@ object Recommend {
       .distinct()
     val neighbors = symNeighbors(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
-      minCount, topK, maxBasket)
+      pairFloor, neighborCount, basketCap)
     val cand = owned.join(neighbors, "item")
       .groupBy(col("cust"), col("neighbor").as("rec_item"))
       .agg(sum(col("cosine").cast("decimal(14,4)")).as("__score"),
@@ -161,7 +161,7 @@ object Recommend {
     val topN = 50
     itemCosineDimsumOn(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item")),
-      gamma, topN, maxBasket)
+      gamma, topN, basketCap)
   }
 
   /** DIMSUM-sampled top-N strongest estimated pairs. Norms join the

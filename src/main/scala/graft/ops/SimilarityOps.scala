@@ -172,6 +172,12 @@ object SimilarityOps {
   private val lshBits = 4
   private val sampleMaxVectors = 16384
 
+  /** The PQ sub-quantizers, codes per sub-quantizer and ADC rerank
+    * depth of every PQ face and oracle. */
+  private val pqM = 8
+  private val pqCodes = 16
+  private val pqRerank = 50
+
   /** k-nearest-neighbor CLASSIFICATION over the embedding space —
     * the non-parametric baseline every embedding-quality check runs:
     * hold out every 10th vector, predict its label by majority vote
@@ -445,7 +451,7 @@ object SimilarityOps {
     // rows, the corpus is the 100 TB operand — corpus-side broadcast
     // would OOM at exactly the scale this IVF face exists for
     val short = emb.select(col("vec_id"), col("embedding"))
-      .join(broadcast(ivfTopK(s, d, k = mmrShortlist, nQueries = annQueries)
+      .join(broadcast(ivfTopK(s, d, k = mmrShortlist)
         .select(col("q_id"), col("vec_id"),
           round(col("cosine") * 10000.0).cast("long").as("rel_i"))),
         Seq("vec_id"))
@@ -541,7 +547,7 @@ object SimilarityOps {
     * (round(round(cos,4)·10⁴)), then the SAME greedy CTEs. */
   private[graft] def mmrIvfOracleSql: String = {
     val prefix =
-      s"""${ivfChainCtes(annQueries, annProbe)},
+      s"""$ivfChainCtes,
          |short AS MATERIALIZED (SELECT r.q_id, r.vec_id, e.emb,
          |    CAST(round(r.cosine * 10000) AS BIGINT) AS rel_i
          |  FROM r JOIN e ON e.vec_id = r.vec_id
@@ -1061,7 +1067,7 @@ object SimilarityOps {
   }
 
   /** Product quantization (PQ) — the memory-compression tier of ANN:
-    * each vector is stored as `m` small codes (here 8 × one-of-16 =
+    * each vector is stored as `pqM` small codes (here 8 × one-of-16 =
     * 8 bytes) instead of `dim` floats (256 bytes), and queries rank
     * candidates from a per-query distance TABLE (ADC: the approx dot
     * product is the sum of m table lookups) before exactly rescoring
@@ -1071,7 +1077,7 @@ object SimilarityOps {
     * until the rescore join.
     *
     * Fit mirrors the IVF recipe one level down: per SUBSPACE, seed
-    * codewords from the first `nCodes` vectors' slices, one
+    * codewords from the first `pqCodes` vectors' slices, one
     * refinement pass (assign by 4dp-rounded squared L2 with lowest-
     * code tiebreak → element-wise means cast to FLOAT), then encode.
     * The 4dp rounding + float cast make the fit bit-stable across
@@ -1081,10 +1087,9 @@ object SimilarityOps {
     * 4dp-rounded then summed as DECIMAL: exact and associative, so
     * the candidate ranking cannot depend on partial-agg order. */
   def pqTopK(s: SparkSession, d: String, k: Int = annK,
-             nQueries: Int = annQueries, m: Int = pqM,
-             nCodes: Int = pqCodes, rerank: Int = pqRerank): DataFrame = {
+             nQueries: Int = annQueries, rerank: Int = pqRerank): DataFrame = {
     val emb = Tables.embeddings(s, d).localCheckpoint(false)
-    val (codes, dtable) = pqIndex(emb, nQueries, m, nCodes)
+    val (codes, dtable) = pqIndex(emb, nQueries)
     adcRescore(codes.join(broadcast(dtable), Seq("j", "code"))
       .filter(col("vec_id") =!= col("q_id")), emb, k, nQueries, rerank)
   }
@@ -1093,17 +1098,15 @@ object SimilarityOps {
     * codebook over `emb` (seed codewords → one refinement → encode),
     * returned as (codes, dtable) — every vector's (vec_id, j, code)
     * and the ADC distance table (q_id, j, code, qdot) of the
-    * `vec_id < nQueries` queries, m × nCodes 4dp dot products each,
+    * `vec_id < nQueries` queries, pqM × pqCodes 4dp dot products each,
     * DECIMAL so a sum of lookups is exact under any aggregation
     * order. */
-  private def pqIndex(emb: DataFrame, nQueries: Int, m: Int,
-                      nCodes: Int): (DataFrame, DataFrame) = {
-    require(dim % m == 0, s"dim $dim must split into $m subspaces")
-    val sub = dim / m
+  private def pqIndex(emb: DataFrame, nQueries: Int): (DataFrame, DataFrame) = {
+    val sub = dim / pqM
     // one row per (vector, subspace): the slice the codebook quantizes
     def subvecs(df: DataFrame, idOut: String): DataFrame =
       df.select(col("vec_id").as(idOut),
-          explode(sequence(lit(0), lit(m - 1))).as("j"),
+          explode(sequence(lit(0), lit(pqM - 1))).as("j"),
           col("embedding"))
         .withColumn("sv", expr(s"slice(embedding, j * $sub + 1, $sub)"))
         .drop("embedding")
@@ -1126,7 +1129,7 @@ object SimilarityOps {
         .agg(first(col("sv")).as("sv"),
           min_by(col("code"), struct(col("__d2"), col("code"))).as("code"))
 
-    val seeds = corpusSub.filter(col("vec_id") < nCodes)
+    val seeds = corpusSub.filter(col("vec_id") < pqCodes)
       .select(col("j"), col("vec_id").cast("int").as("code"), col("sv").as("cw"))
     val refined = meanArrays(assign(seeds), Seq("j", "code"), "sv", "cw")
     val codes = assign(refined).select(col("vec_id"), col("j"), col("code"))
@@ -1182,13 +1185,11 @@ object SimilarityOps {
     * candidate ranking is aggregation-order free, and the whole
     * pipeline — both fits included — replays in the DuckDB oracle. */
   def ivfPqTopK(s: SparkSession, d: String, k: Int = annK,
-                nQueries: Int = annQueries, nProbe: Int = annProbe,
-                m: Int = pqM, nCodes: Int = pqCodes,
-                rerank: Int = pqRerank): DataFrame = {
+                nQueries: Int = annQueries): DataFrame = {
     val emb = Tables.embeddings(s, d).localCheckpoint(false)
     val (cells, qCells) = ivfIndex(emb, emb,
-      emb.filter(col("vec_id") < cellCount(emb)), nQueries, nProbe)
-    val (codes, dtable) = pqIndex(emb, nQueries, m, nCodes)
+      emb.filter(col("vec_id") < cellCount(emb)), nQueries, annProbe)
+    val (codes, dtable) = pqIndex(emb, nQueries)
     // cell-gated candidates → ADC → exact rescore
     val cand = cells.select(col("vec_id"), col("cell"))
       .join(broadcast(qCells.select(col("q_id"), col("cell"))), Seq("cell"))
@@ -1196,7 +1197,7 @@ object SimilarityOps {
       .select(col("q_id"), col("vec_id"))
     adcRescore(cand.join(codes, "vec_id")
       .join(broadcast(dtable), Seq("q_id", "j", "code")),
-      emb, k, nQueries, rerank)
+      emb, k, nQueries, pqRerank)
   }
 
   // ---- SQL oracle generators ------------------------------------------
@@ -1220,14 +1221,13 @@ object SimilarityOps {
     }.mkString(" + ")
 
   /** DuckDB replica of lshTopK. */
-  private[graft] def lshOracleSql(k: Int = annK, nQueries: Int = annQueries,
-                                  nBits: Int = lshBits): String =
+  private[graft] def lshOracleSql: String =
     s"""WITH b AS (
        |  SELECT vec_id, embedding,
-       |    ${bucketSql("embedding", nBits, 42L)} AS bucket
+       |    ${bucketSql("embedding", lshBits, 42L)} AS bucket
        |  FROM embeddings),
        |q AS (SELECT vec_id AS q_id, embedding AS q_emb, bucket
-       |      FROM b WHERE vec_id < $nQueries),
+       |      FROM b WHERE vec_id < $annQueries),
        |scored AS (
        |  SELECT q_id, c.vec_id AS vec_id,
        |    round(${qcosSql("CAST(q_emb AS DOUBLE[])", "CAST(c.embedding AS DOUBLE[])")}, 4) AS cosine
@@ -1235,7 +1235,7 @@ object SimilarityOps {
        |r AS (SELECT *, row_number() OVER (PARTITION BY q_id
        |        ORDER BY cosine DESC, vec_id) AS rank FROM scored)
        |SELECT q_id, vec_id, cosine, rank FROM r
-       |WHERE rank <= $k ORDER BY q_id, rank""".stripMargin
+       |WHERE rank <= $annK ORDER BY q_id, rank""".stripMargin
 
   /** DuckDB replica of DedupOps.embeddingPairsLsh: the same fixed-seed
     * hyperplanes per table (seed 42+t), OR-construction across tables,
@@ -1276,16 +1276,14 @@ object SimilarityOps {
   /** DuckDB replica of pqTopK — the whole pipeline (seed codebooks,
     * refinement with FLOAT-cast means, encoding, DECIMAL ADC, exact
     * rescore) step for step, same 4dp rounding and tiebreaks. */
-  private[graft] def pqOracleSql(k: Int = annK, nQueries: Int = annQueries,
-                                 m: Int = pqM, nCodes: Int = pqCodes,
-                                 rerank: Int = pqRerank): String = {
-    val sub = dim / m
+  private[graft] def pqOracleSql: String = {
+    val sub = dim / pqM
     val avgs = (1 to sub).map(i => s"avg(sv[$i])").mkString(", ")
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
        |sv AS (SELECT vec_id, j, emb[j*$sub+1 : j*$sub+$sub] AS sv
-       |       FROM e, LATERAL (SELECT unnest(range(0, $m)) AS j)),
+       |       FROM e, LATERAL (SELECT unnest(range(0, $pqM)) AS j)),
        |seeds AS (SELECT j, CAST(vec_id AS INT) AS code, sv AS cw
-       |          FROM sv WHERE vec_id < $nCodes),
+       |          FROM sv WHERE vec_id < $pqCodes),
        |a1 AS (SELECT s.vec_id, s.j, s.sv, c.code,
        |    round(list_dot_product(s.sv, s.sv) + list_dot_product(c.cw, c.cw)
        |          - 2 * list_dot_product(s.sv, c.cw), 4) AS d2
@@ -1305,13 +1303,13 @@ object SimilarityOps {
        |codes AS (SELECT vec_id, j, code FROM a2r WHERE rnk = 1),
        |dt AS (SELECT q.vec_id AS q_id, q.j, c.code,
        |    CAST(round(list_dot_product(q.sv, c.cw), 4) AS DECIMAL(14,4)) AS qdot
-       |  FROM sv q JOIN cw c ON q.j = c.j WHERE q.vec_id < $nQueries),
+       |  FROM sv q JOIN cw c ON q.j = c.j WHERE q.vec_id < $annQueries),
        |ap AS (SELECT q_id, vec_id, sum(qdot) AS adot
        |  FROM codes JOIN dt USING (j, code) WHERE vec_id <> q_id
        |  GROUP BY 1, 2),
        |apr AS (SELECT *, row_number() OVER (PARTITION BY q_id
        |          ORDER BY adot DESC, vec_id) AS r FROM ap),
-       |cand AS (SELECT q_id, vec_id FROM apr WHERE r <= $rerank),
+       |cand AS (SELECT q_id, vec_id FROM apr WHERE r <= $pqRerank),
        |resc AS (SELECT s.q_id, s.vec_id,
        |    round(${qcosSql("qe.emb", "ce.emb")}, 4) AS cosine
        |  FROM cand s JOIN e ce ON ce.vec_id = s.vec_id
@@ -1319,17 +1317,15 @@ object SimilarityOps {
        |rk AS (SELECT *, row_number() OVER (PARTITION BY q_id
        |        ORDER BY cosine DESC, vec_id) AS rank FROM resc)
        |SELECT q_id, vec_id, cosine, rank FROM rk
-       |WHERE rank <= $k ORDER BY q_id, rank""".stripMargin
+       |WHERE rank <= $annK ORDER BY q_id, rank""".stripMargin
   }
 
-  /** DuckDB replica of ivfTopK: same seed cells, one rounded-similarity
-    * assignment pass, float-cast centroid means, multi-probe search. */
   /** The shared IVF assignment+probe+rank CTE chain (nc → … → r),
     * consumed by [[ivfOracleSql]], [[mmrIvfOracleSql]], and
     * [[ivfRecallOracleSql]] — one builder so the fit/probe replay
     * cannot drift between the three faces (the forecast
     * compare/ensemble oracle discipline). */
-  private def ivfChainCtes(nQueries: Int, nProbe: Int): String = {
+  private def ivfChainCtes: String = {
     val avgs = (1 to dim).map(i => s"avg(emb[$i])").mkString(", ")
     s"""nc AS (SELECT greatest(8, CAST(floor(sqrt(count(*))) AS BIGINT)) AS n
        |            FROM embeddings),
@@ -1353,7 +1349,7 @@ object SimilarityOps {
        |          ORDER BY sim DESC, cell) AS rnk FROM a2),
        |cells AS (SELECT vec_id, emb, cell FROM a2r WHERE rnk = 1),
        |qc AS (SELECT vec_id AS q_id, emb AS q_emb, cell
-       |       FROM a2r WHERE rnk <= $nProbe AND vec_id < $nQueries),
+       |       FROM a2r WHERE rnk <= $annProbe AND vec_id < $annQueries),
        |scored AS (
        |  SELECT q_id, c.vec_id AS vec_id,
        |    round(${qcosSql("q_emb", "c.emb")}, 4) AS cosine
@@ -1362,11 +1358,12 @@ object SimilarityOps {
        |        ORDER BY cosine DESC, vec_id) AS rank FROM scored)""".stripMargin
   }
 
-  private[graft] def ivfOracleSql(k: Int = annK, nQueries: Int = annQueries,
-                                  nProbe: Int = annProbe): String =
-    s"""WITH ${ivfChainCtes(nQueries, nProbe)}
+  /** DuckDB replica of ivfTopK: same seed cells, one rounded-similarity
+    * assignment pass, float-cast centroid means, multi-probe search. */
+  private[graft] def ivfOracleSql: String =
+    s"""WITH $ivfChainCtes
        |SELECT q_id, vec_id, cosine, rank FROM r
-       |WHERE rank <= $k ORDER BY q_id, rank""".stripMargin
+       |WHERE rank <= $annK ORDER BY q_id, rank""".stripMargin
 
   /** The bounded-build chain ([[ivfTopKSampled]]) as CTEs: the md5
     * bucket cut, pinned cell count, sample-only refinement, then the
@@ -1374,13 +1371,12 @@ object SimilarityOps {
     * serving tail. Sizing arithmetic is all BIGINT (ceil-div via
     * (a+n−1)//n) and the bucket cut compares lowercase hex — the
     * SampleOps portability posture. */
-  private def ivfSampledChainCtes(nQueries: Int, nProbe: Int,
-                                  buildMaxVectors: Int): String = {
+  private def ivfSampledChainCtes: String = {
     val avgs = (1 to dim).map(i => s"avg(emb[$i])").mkString(", ")
     s"""p AS (SELECT count(*) AS n FROM embeddings),
        |b AS (SELECT CAST(least(256, greatest(1,
-       |        (256 * $buildMaxVectors + n - 1) // n)) AS BIGINT) AS bk,
-       |      greatest(8, CAST(floor(sqrt(least(n, $buildMaxVectors)))
+       |        (256 * $sampleMaxVectors + n - 1) // n)) AS BIGINT) AS bk,
+       |      greatest(8, CAST(floor(sqrt(least(n, $sampleMaxVectors)))
        |        AS BIGINT)) AS nn
        |      FROM p),
        |e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
@@ -1409,7 +1405,7 @@ object SimilarityOps {
        |          ORDER BY sim DESC, cell) AS rnk FROM a2),
        |cells AS (SELECT vec_id, emb, cell FROM a2r WHERE rnk = 1),
        |qc AS (SELECT vec_id AS q_id, emb AS q_emb, cell
-       |       FROM a2r WHERE rnk <= $nProbe AND vec_id < $nQueries),
+       |       FROM a2r WHERE rnk <= $annProbe AND vec_id < $annQueries),
        |scored AS (
        |  SELECT q_id, c.vec_id AS vec_id,
        |    round(${qcosSql("q_emb", "c.emb")}, 4) AS cosine
@@ -1418,17 +1414,13 @@ object SimilarityOps {
        |        ORDER BY cosine DESC, vec_id) AS rank FROM scored)""".stripMargin
   }
 
-  private[graft] def ivfSampledOracleSql(
-      k: Int = annK, nQueries: Int = annQueries, nProbe: Int = annProbe,
-      buildMaxVectors: Int = sampleMaxVectors): String =
-    s"""WITH ${ivfSampledChainCtes(nQueries, nProbe, buildMaxVectors)}
+  private[graft] def ivfSampledOracleSql: String =
+    s"""WITH $ivfSampledChainCtes
        |SELECT q_id, vec_id, cosine, rank FROM r
-       |WHERE rank <= $k ORDER BY q_id, rank""".stripMargin
+       |WHERE rank <= $annK ORDER BY q_id, rank""".stripMargin
 
   private[graft] def ivfSampledRecallOracleSql: String =
-    annRecallOracleSql(
-      ivfSampledOracleSql(annK, annQueries, annProbe, sampleMaxVectors),
-      annK, annQueries)
+    annRecallOracleSql(ivfSampledOracleSql)
 
   /** Measured recall@k of an ANN tier against the exact brute-force
     * face — the routed tiers' retrieval quality as CHECKED numbers
@@ -1470,16 +1462,10 @@ object SimilarityOps {
                 nQueries: Int = annQueries, nBits: Int = lshBits): DataFrame =
     recallVsExact(s, d, lshTopK(s, d, k, nQueries, nBits), k, nQueries)
 
-  /** The PQ sub-quantizers, codes per sub-quantizer and ADC rerank
-    * depth of the PQ recall faces and oracles. */
-  private val pqM = 8
-  private val pqCodes = 16
-  private val pqRerank = 50
-
   /** Recall@k of the PQ/ADC tier (see [[recallVsExact]]). */
   def pqRecall(s: SparkSession, d: String, k: Int = annK,
                nQueries: Int = annQueries, rerank: Int = pqRerank): DataFrame =
-    recallVsExact(s, d, pqTopK(s, d, k, nQueries, pqM, pqCodes, rerank),
+    recallVsExact(s, d, pqTopK(s, d, k, nQueries, rerank),
       k, nQueries)
 
   /** Recall@k of the composed IVF·PQ tier (see [[recallVsExact]]) —
@@ -1488,9 +1474,7 @@ object SimilarityOps {
     * composed as well as separately. */
   def ivfPqRecall(s: SparkSession, d: String, k: Int = annK,
                   nQueries: Int = annQueries): DataFrame =
-    recallVsExact(s, d,
-      ivfPqTopK(s, d, k, nQueries, annProbe, pqM, pqCodes, pqRerank),
-      k, nQueries)
+    recallVsExact(s, d, ivfPqTopK(s, d, k, nQueries), k, nQueries)
 
   /** DuckDB replay of the ANN recall audits: the tier's OWN
     * registered oracle text embedded verbatim as the `apx` subquery
@@ -1498,12 +1482,11 @@ object SimilarityOps {
     * registered entry's SQL), beside the exact brute-force replay on
     * the same quantized cosine grid; hits counted per query, recall
     * published on the half-up 4dp integer grid. */
-  private def annRecallOracleSql(apxSql: String, k: Int,
-                                 nQueries: Int): String =
+  private def annRecallOracleSql(apxSql: String): String =
     s"""WITH apx AS MATERIALIZED (
        |  SELECT q_id, vec_id FROM ($apxSql) __apx),
        |bq AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS q_emb
-       |       FROM embeddings WHERE vec_id < $nQueries),
+       |       FROM embeddings WHERE vec_id < $annQueries),
        |be AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
        |       FROM embeddings),
        |bscored AS (SELECT q_id, be.vec_id AS vec_id,
@@ -1511,43 +1494,35 @@ object SimilarityOps {
        |  FROM be CROSS JOIN bq WHERE be.vec_id <> bq.q_id),
        |br AS (SELECT *, row_number() OVER (PARTITION BY q_id
        |        ORDER BY cosine DESC, vec_id) AS rank FROM bscored),
-       |bfk AS (SELECT q_id, vec_id FROM br WHERE rank <= $k),
+       |bfk AS (SELECT q_id, vec_id FROM br WHERE rank <= $annK),
        |hits AS (SELECT q_id, count(*) AS hits
        |         FROM bfk SEMI JOIN apx USING (q_id, vec_id)
        |         GROUP BY q_id)
        |SELECT bq.q_id AS q_id,
        |  CAST(coalesce(hits, 0) AS BIGINT) AS hits,
-       |  CAST((CAST(coalesce(hits, 0) AS HUGEINT) * 20000 + $k)
-       |    // (2 * $k) AS BIGINT) / 10000.0 AS recall
+       |  CAST((CAST(coalesce(hits, 0) AS HUGEINT) * 20000 + $annK)
+       |    // (2 * $annK) AS BIGINT) / 10000.0 AS recall
        |FROM bq LEFT JOIN hits USING (q_id)
        |ORDER BY q_id""".stripMargin
 
   private[graft] def ivfRecallOracleSql: String =
-    annRecallOracleSql(ivfOracleSql(annK, annQueries, annProbe), annK,
-      annQueries)
+    annRecallOracleSql(ivfOracleSql)
 
   private[graft] def lshRecallOracleSql: String =
-    annRecallOracleSql(lshOracleSql(annK, annQueries, lshBits), annK,
-      annQueries)
+    annRecallOracleSql(lshOracleSql)
 
   private[graft] def pqRecallOracleSql: String =
-    annRecallOracleSql(pqOracleSql(annK, annQueries, pqM, pqCodes, pqRerank),
-      annK, annQueries)
+    annRecallOracleSql(pqOracleSql)
 
   private[graft] def ivfPqRecallOracleSql: String =
-    annRecallOracleSql(
-      ivfPqOracleSql(annK, annQueries, annProbe, pqM, pqCodes, pqRerank),
-      annK, annQueries)
+    annRecallOracleSql(ivfPqOracleSql)
 
   /** DuckDB replica of [[ivfPqTopK]]: the ivfOracle cell CTEs and the
     * pqOracle codebook CTEs (names prefixed i/p to compose under one
     * WITH), then the cell-gated candidate join, the DECIMAL ADC sum,
     * and the exact rescore — every stage of both fits replayed. */
-  private[graft] def ivfPqOracleSql(k: Int = annK, nQueries: Int = annQueries,
-                                    nProbe: Int = annProbe, m: Int = pqM,
-                                    nCodes: Int = pqCodes,
-                                    rerank: Int = pqRerank): String = {
-    val sub = dim / m
+  private[graft] def ivfPqOracleSql: String = {
+    val sub = dim / pqM
     val cavgs = (1 to dim).map(i => s"avg(emb[$i])").mkString(", ")
     val pavgs = (1 to sub).map(i => s"avg(sv[$i])").mkString(", ")
     s"""WITH nc AS (SELECT greatest(8, CAST(floor(sqrt(count(*))) AS BIGINT)) AS n
@@ -1571,11 +1546,11 @@ object SimilarityOps {
        |          ORDER BY sim DESC, cell) AS rnk FROM ia2),
        |cells AS (SELECT vec_id, cell FROM ia2r WHERE rnk = 1),
        |qc AS (SELECT vec_id AS q_id, cell
-       |       FROM ia2r WHERE rnk <= $nProbe AND vec_id < $nQueries),
+       |       FROM ia2r WHERE rnk <= $annProbe AND vec_id < $annQueries),
        |sv AS (SELECT vec_id, j, emb[j*$sub+1 : j*$sub+$sub] AS sv
-       |       FROM e, LATERAL (SELECT unnest(range(0, $m)) AS j)),
+       |       FROM e, LATERAL (SELECT unnest(range(0, $pqM)) AS j)),
        |pseeds AS (SELECT j, CAST(vec_id AS INT) AS code, sv AS cw
-       |           FROM sv WHERE vec_id < $nCodes),
+       |           FROM sv WHERE vec_id < $pqCodes),
        |pa1 AS (SELECT s.vec_id, s.j, s.sv, c.code,
        |    round(list_dot_product(s.sv, s.sv) + list_dot_product(c.cw, c.cw)
        |          - 2 * list_dot_product(s.sv, c.cw), 4) AS d2
@@ -1595,7 +1570,7 @@ object SimilarityOps {
        |codes AS (SELECT vec_id, j, code FROM pa2r WHERE rnk = 1),
        |dt AS (SELECT q.vec_id AS q_id, q.j, c.code,
        |    CAST(round(list_dot_product(q.sv, c.cw), 4) AS DECIMAL(14,4)) AS qdot
-       |  FROM sv q JOIN pcw c ON q.j = c.j WHERE q.vec_id < $nQueries),
+       |  FROM sv q JOIN pcw c ON q.j = c.j WHERE q.vec_id < $annQueries),
        |cand AS (SELECT qc.q_id, c.vec_id FROM cells c JOIN qc USING (cell)
        |         WHERE c.vec_id <> qc.q_id),
        |ap AS (SELECT cand.q_id, cand.vec_id, sum(dt.qdot) AS adot
@@ -1605,7 +1580,7 @@ object SimilarityOps {
        |  GROUP BY 1, 2),
        |apr AS (SELECT *, row_number() OVER (PARTITION BY q_id
        |          ORDER BY adot DESC, vec_id) AS r FROM ap),
-       |sl AS (SELECT q_id, vec_id FROM apr WHERE r <= $rerank),
+       |sl AS (SELECT q_id, vec_id FROM apr WHERE r <= $pqRerank),
        |resc AS (SELECT s.q_id, s.vec_id,
        |    round(${qcosSql("qe.emb", "ce.emb")}, 4) AS cosine
        |  FROM sl s JOIN e ce ON ce.vec_id = s.vec_id
@@ -1613,7 +1588,7 @@ object SimilarityOps {
        |rk AS (SELECT *, row_number() OVER (PARTITION BY q_id
        |        ORDER BY cosine DESC, vec_id) AS rank FROM resc)
        |SELECT q_id, vec_id, cosine, rank FROM rk
-       |WHERE rank <= $k ORDER BY q_id, rank""".stripMargin
+       |WHERE rank <= $annK ORDER BY q_id, rank""".stripMargin
   }
 
   /** DuckDB replica of [[knnClassifyIvf]]: the ivfOracle recipe (seed
@@ -1976,7 +1951,7 @@ object SimilarityOps {
     * center chain with a diagonal-only variance (no grid), the same
     * integer divisions, the same z formula shape and zero-variance
     * convention. */
-  private[graft] def standardizeOracleSql(): String =
+  private[graft] def standardizeOracleSql: String =
     s"""WITH dims AS (SELECT unnest(range(1, 65)) AS dim),
        |x AS (SELECT vec_id, dim - 1 AS dim,
        |    CAST(round(CAST(embedding[dim] AS DOUBLE) * 1000000, 0)

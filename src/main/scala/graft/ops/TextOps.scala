@@ -709,7 +709,7 @@ object TextOps {
 
   /** DuckDB replica of [[ccnetBuckets]]: the lmScore pipeline, a
     * per-language dense position, and the same integer tercile. */
-  private[graft] def ccnetBucketsOracleSql(): String =
+  private[graft] def ccnetBucketsOracleSql: String =
     """WITH tok AS (SELECT doc_id,
       |    unnest(string_split_regex(trim(text), '\s+')) AS tok
       |  FROM documents),
@@ -807,7 +807,7 @@ object TextOps {
   }
 
   /** The top-list length of the collocation and RAKE faces. */
-  private val topN = 20
+  private val phraseTopN = 20
 
   /** Collocation mining: the adjacent word pairs that stick together
     * far more than chance — pointwise mutual information over corpus
@@ -827,7 +827,7 @@ object TextOps {
     * the joined row count honest at scale. */
   def collocations(s: SparkSession, d: String): DataFrame = {
     val minCount = 5
-    collocationsOn(Tables.documents(s, d), topN, minCount)
+    collocationsOn(Tables.documents(s, d), phraseTopN, minCount)
   }
 
   /** Same over any (doc_id, text) frame. */
@@ -872,7 +872,7 @@ object TextOps {
     * the split pattern avoids lookaround (RE2-safe, shared verbatim
     * with the oracle). */
   def rake(s: SparkSession, d: String): DataFrame =
-    rakeOn(Tables.documents(s, d), topN)
+    rakeOn(Tables.documents(s, d), phraseTopN)
 
   private val rakeSplit = "[.,;:!?]+|\\b(?:the|a|and|of|to|in|is)\\b"
 

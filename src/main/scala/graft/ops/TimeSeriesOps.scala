@@ -71,7 +71,7 @@ object TimeSeriesOps {
   /** The GK sketch accuracy and the rank slack δ of both checked
     * percentile faces. */
   private val accuracy = 10000
-  private val delta = 0.005
+  private val rankSlack = 0.005
 
   /** Driver-checkable SCALE face of [[dailyPercentiles]] (the
     * declared q_percentiles_approx trade, applied to the daily SLO
@@ -111,11 +111,11 @@ object TimeSeriesOps {
         cnt(col("value") <= col("__a99")).as("__le99"))
       .select(col("day"), col("n"), col("p50"), col("p90"), col("p99"),
         col("max_value"),
-        rankVerdict(col("__lt50"), col("__le50"), col("n"), 0.5, delta)
+        rankVerdict(col("__lt50"), col("__le50"), col("n"), 0.5, rankSlack)
           .as("p50_within_tol"),
-        rankVerdict(col("__lt90"), col("__le90"), col("n"), 0.9, delta)
+        rankVerdict(col("__lt90"), col("__le90"), col("n"), 0.9, rankSlack)
           .as("p90_within_tol"),
-        rankVerdict(col("__lt99"), col("__le99"), col("n"), 0.99, delta)
+        rankVerdict(col("__lt99"), col("__le99"), col("n"), 0.99, rankSlack)
           .as("p99_within_tol"))
       .orderBy(col("day"))
   }
@@ -1099,9 +1099,9 @@ object TimeSeriesOps {
         cnt(col("adev_a") < col("__amad")).as("__lta"),
         cnt(col("adev_a") <= col("__amad")).as("__lea"))
       .select(col("event_type"), col("n_days"), col("med"), col("mad"),
-        rankVerdict(col("__ltm"), col("__lem"), col("n_days"), 0.5, delta)
+        rankVerdict(col("__ltm"), col("__lem"), col("n_days"), 0.5, rankSlack)
           .as("med_within_tol"),
-        rankVerdict(col("__lta"), col("__lea"), col("n_days"), 0.5, delta)
+        rankVerdict(col("__lta"), col("__lea"), col("n_days"), 0.5, rankSlack)
           .as("mad_within_tol"))
       .orderBy(col("event_type"))
   }

@@ -12,7 +12,6 @@ import org.apache.spark.sql.functions._
   * only the newest `keepVersions` are retained, the time-travel
   * window a versioned store keeps. */
 object ChangeStreams {
-  import Versions.{epochs, keepVersions}
 
   /** Deterministic change feed for the versioned-snapshot audit:
     * events become CDC rows keyed on `user_id` — an `error` event is
@@ -20,14 +19,13 @@ object ChangeStreams {
     * event's 1e-4 micro-unit value (exact BIGINT; a double survives
     * no cross-engine sum) — split into `epochs` micro-batches by
     * `event_id % epochs`, ordered within a batch by `event_id`. */
-  private[graft] def eventChanges(s: SparkSession, d: String,
-                                  epochs: Int): DataFrame =
+  private[graft] def eventChanges(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d).select(
       col("user_id"),
       round(col("value") * 10000).cast("long").as("v_micro"),
       when(col("event_type") === "error", lit("D")).otherwise(lit("U"))
         .as("op"),
-      (col("event_id") % epochs).as("epoch"),
+      (col("event_id") % Versions.epochs).as("epoch"),
       col("event_id"))
 
   /** The ORACLED versioned-snapshot audit: fold the change epochs
@@ -40,7 +38,8 @@ object ChangeStreams {
     * join, so nothing here collects or materializes driver-side, and
     * the audit aggregates are single-row reductions. */
   def snapshotVersionsBatch(s: SparkSession, d: String): DataFrame =
-    snapshotVersionsOn(eventChanges(s, d, epochs), epochs, keepVersions)
+    snapshotVersionsOn(eventChanges(s, d), Versions.epochs,
+      Versions.keepVersions)
 
   /** Same over any (user_id, v_micro, op, epoch, event_id) change
     * frame. */

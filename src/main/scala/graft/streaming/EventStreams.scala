@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
 object EventStreams {
   import Versions.{epochs, keepVersions}
   import graft.ops.Analytics.{attributionConvType, attributionTouchTypes,
-    attributionWindowDays, funnelStages}
+    attributionWindowDays, funnelStageNames}
   import graft.ops.TimeSeriesOps.{changepointMinScore, changepointWindow}
 
   // ---- tumbling-window aggregate --------------------------------------
@@ -212,16 +212,16 @@ object EventStreams {
     * version adds one filtered count. */
   def funnelVersionsBatch(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-      .filter(col("event_type").isin(funnelStages: _*))
+      .filter(col("event_type").isin(funnelStageNames: _*))
       .select(col("user_id"), col("event_type"),
         (col("event_id") % epochs).as("epoch"),
         unix_micros(col("ts")).as("tus"), col("event_id"))
     def tup(stageIdx: Int) = struct(col("epoch"), col("tus"),
       lit(stageIdx).as("sidx"), col("event_id"))
     // stage 1: the first qualifying event in FOLD order
-    val first = ev.filter(col("event_type") === funnelStages.head)
+    val first = ev.filter(col("event_type") === funnelStageNames.head)
       .groupBy(col("user_id")).agg(min(tup(0)).as("__t"))
-    val reached = funnelStages.tail.zipWithIndex.scanLeft(first) {
+    val reached = funnelStageNames.tail.zipWithIndex.scanLeft(first) {
       case (prev, (stage, i)) =>
         ev.filter(col("event_type") === stage)
           .join(prev.select(col("user_id"), col("__t").as("__pt")),
@@ -233,7 +233,7 @@ object EventStreams {
           .groupBy(col("user_id")).agg(min(tup(i + 1)).as("__t"))
     }.map(_.localCheckpoint(false)) // every retained version counts each frame
     (epochs - keepVersions until epochs).flatMap { k =>
-      funnelStages.zip(reached).zipWithIndex.map { case ((stage, users), i) =>
+      funnelStageNames.zip(reached).zipWithIndex.map { case ((stage, users), i) =>
         users.filter(col("__t.epoch") <= k)
           .agg(count(lit(1)).as("n_users"))
           .select(lit(k.toLong).as("version"),
@@ -245,20 +245,20 @@ object EventStreams {
 
   /** DuckDB replica of [[funnelVersionsBatch]], generated from the
     * constants the Scala face reads ([[Versions]] and
-    * [[graft.ops.Analytics.funnelStages]]), so the two cannot
+    * [[graft.ops.Analytics.funnelStageNames]]), so the two cannot
     * disagree on a setting. One CTE
     * per stage: stage k's advance is the min fold tuple (epoch, µs,
     * sidx, id) among stage-k events past the stage-(k−1) advance
     * that also pass the event-time gate; each retained version
     * counts the advances whose tuple sits in epochs ≤ version. */
   private[graft] def funnelVersionsOracleSql: String = {
-    val inList = funnelStages.map(st => s"'$st'").mkString(", ")
+    val inList = funnelStageNames.map(st => s"'$st'").mkString(", ")
     def tup(i: Int) =
       s"{'epoch': epoch, 'tus': tus, 'sidx': $i, 'event_id': event_id}"
     val first =
       s"""s1 AS (SELECT user_id, min(${tup(0)}) AS t
-         |  FROM ev WHERE event_type = '${funnelStages.head}' GROUP BY 1)""".stripMargin
-    val rest = funnelStages.tail.zipWithIndex.map { case (st, i) =>
+         |  FROM ev WHERE event_type = '${funnelStageNames.head}' GROUP BY 1)""".stripMargin
+    val rest = funnelStageNames.tail.zipWithIndex.map { case (st, i) =>
       s"""s${i + 2} AS (SELECT e.user_id, min(${tup(i + 1)}) AS t
          |  FROM ev e JOIN s${i + 1} ON e.user_id = s${i + 1}.user_id
          |  WHERE e.event_type = '$st'
@@ -266,7 +266,7 @@ object EventStreams {
          |    AND tus >= (s${i + 1}.t).tus
          |  GROUP BY 1)""".stripMargin
     }
-    val branches = funnelStages.zipWithIndex.map { case (st, i) =>
+    val branches = funnelStageNames.zipWithIndex.map { case (st, i) =>
       s"""  SELECT version, ${i + 1} AS stage, '$st' AS event_type,
          |    count(*) FILTER (WHERE (t).epoch <= version) AS n_users
          |  FROM s${i + 1} CROSS JOIN v GROUP BY version""".stripMargin
@@ -354,7 +354,7 @@ object EventStreams {
     * arrived" is exactly a day-prefix. The partition-less window runs
     * on the DISTINCT-DAY frame — calendar-bounded (≤366 rows/year),
     * the PSI-bins class of documented bounded global windows. */
-  private def dayEpochs(days: DataFrame, epochs: Int): DataFrame = {
+  private def dayEpochs(days: DataFrame): DataFrame = {
     val n = days.agg(count(lit(1)).as("__n"))
     days.withColumn("__rn",
         row_number().over(Window.orderBy(col("day"))))
@@ -378,7 +378,7 @@ object EventStreams {
     val days = graft.Tables.events(s, d)
       .select(date_trunc("day", col("ts")).as("day")).distinct()
     val scored = graft.ops.TimeSeriesOps.anomalyZScore(s, d)
-      .join(broadcast(dayEpochs(days, epochs)), Seq("day"))
+      .join(broadcast(dayEpochs(days)), Seq("day"))
       .localCheckpoint(false) // every retained version filters this one pass
     (epochs - keepVersions until epochs).map { k =>
       scored.filter(col("epoch") <= k)
@@ -406,7 +406,7 @@ object EventStreams {
       lead(col("day"), changepointWindow - 1)
         .over(Window.partitionBy(col("event_type")).orderBy(col("day")))
         .as("__trigger"))
-    val ep = dayEpochs(daily.select(col("day")).distinct(), epochs)
+    val ep = dayEpochs(daily.select(col("day")).distinct())
       .withColumnRenamed("day", "__trigger")
     val scored = graft.ops.TimeSeriesOps
       .changepointsOn(daily, changepointWindow, changepointMinScore)
@@ -433,7 +433,7 @@ object EventStreams {
     val days = graft.Tables.events(s, d)
       .select(date_trunc("day", col("ts")).as("day")).distinct()
     val scored = graft.ops.TimeSeriesOps.ewma(s, d)
-      .join(broadcast(dayEpochs(days, epochs)), Seq("day"))
+      .join(broadcast(dayEpochs(days)), Seq("day"))
       .localCheckpoint(false) // every retained version filters this one pass
     (epochs - keepVersions until epochs).map { k =>
       scored.filter(col("epoch") <= k)
@@ -446,24 +446,24 @@ object EventStreams {
   /** The conformal band's seasonal lag (days), miscoverage (%),
     * calibration window and minimum calibration count, read by both
     * conformal faces and both oracles. */
-  private val period = 7
+  private val seasonLag = 7
   private val alphaPct = 10
-  private val calWindow = 50
-  private val minCal = 10
+  private val calibrationWindow = 50
+  private val calibrationMin = 10
 
   /** A ROLLING conformal band over daily counts — an adaptive fold
     * (seasonal-naive reference + FIFO calibration window), not the
     * one-shot split of
     * `forecast_conformal`: per series day t (rank order), pred =
-    * the count `period` days back (row lag), residuals enter a
-    * FIFO window of the last `calWindow`, and the day emits once
-    * `minCal` residuals have accumulated, with q̂ = the
+    * the count `seasonLag` days back (row lag), residuals enter a
+    * FIFO window of the last `calibrationWindow`, and the day emits once
+    * `calibrationMin` residuals have accumulated, with q̂ = the
     * ⌈keep·(n+1)/100⌉-th smallest calibration residual — integer
     * rank arithmetic on INTEGER residuals, so every published value
     * (pred, lo, hi, covered, n_cal) is
     * exact cross-engine. Shape: two per-series windows (the lag and
     * the bounded preceding-frame residual list) on ONE series-key
-    * shuffle — the calibration list is ≤ `calWindow` longs per row,
+    * shuffle — the calibration list is ≤ `calibrationWindow` longs per row,
     * a bounded frame, never history. */
   def conformalMonitorBatch(s: SparkSession, d: String): DataFrame = {
     val keep = 100 - alphaPct
@@ -472,20 +472,20 @@ object EventStreams {
       .agg(count(lit(1)).as("cnt"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
     val withPred = daily
-      .withColumn("pred", lag(col("cnt"), period).over(w))
-      .filter(col("pred").isNotNull) // t > period: the residual rows
+      .withColumn("pred", lag(col("cnt"), seasonLag).over(w))
+      .filter(col("pred").isNotNull) // t > seasonLag: the residual rows
       .withColumn("resid", abs(col("cnt") - col("pred")))
     // every residual row carries one, so the bounded preceding frame
     // over THIS subframe is exactly the FIFO calibration window
     val wCal = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      .rowsBetween(-calWindow, -1)
+      .rowsBetween(-calibrationWindow, -1)
     val n = col("__ncal")
     // the exact rank arithmetic: k = min(⌈keep(n+1)/100⌉, n)
     val k = expr(s"least(((__ncal + 1) * $keep + 99) div 100, __ncal)")
     withPred
       .withColumn("__cal", collect_list(col("resid")).over(wCal))
       .withColumn("__ncal", size(col("__cal")).cast("long"))
-      .filter(n >= minCal)
+      .filter(n >= calibrationMin)
       .withColumn("__qhat",
         element_at(sort_array(col("__cal")), k.cast("int")))
       .select(col("event_type"), col("day"), col("cnt"), col("pred"),
@@ -505,7 +505,7 @@ object EventStreams {
     val days = graft.Tables.events(s, d)
       .select(date_trunc("day", col("ts")).as("day")).distinct()
     val scored = conformalMonitorBatch(s, d)
-      .join(broadcast(dayEpochs(days, epochs)), Seq("day"))
+      .join(broadcast(dayEpochs(days)), Seq("day"))
       .localCheckpoint(false) // every retained version filters this one pass
     (epochs - keepVersions until epochs).map { k =>
       scored.filter(col("epoch") <= k)
@@ -544,7 +544,7 @@ object EventStreams {
 
   /** DuckDB replica of [[conformalMonitorBatch]]. */
   private[graft] def conformalMonitorOracleSql: String =
-    conformalCoreSql(period, 100 - alphaPct, calWindow, minCal) +
+    conformalCoreSql(seasonLag, 100 - alphaPct, calibrationWindow, calibrationMin) +
       """
         |SELECT event_type, day, cnt, pred, pred - qhat AS lo,
         |  pred + qhat AS hi,
@@ -554,7 +554,7 @@ object EventStreams {
   /** DuckDB replica of [[conformalVersionsBatch]]: the same chain
     * under the shared day-epoch timeline. */
   private[graft] def conformalVersionsOracleSql: String =
-    conformalCoreSql(period, 100 - alphaPct, calWindow, minCal) +
+    conformalCoreSql(seasonLag, 100 - alphaPct, calibrationWindow, calibrationMin) +
       s""",
          |ep AS (SELECT day AS eday,
          |    ((row_number() OVER (ORDER BY day) - 1) * $epochs)

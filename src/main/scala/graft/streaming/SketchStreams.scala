@@ -66,8 +66,7 @@ object SketchStreams {
   /** (epoch, term) token stream of the documents corpus — the shared
     * replay input: epoch = doc_id % epochs stands in for arrival
     * micro-batch (deterministic, oracle-expressible). */
-  private def epochTerms(s: SparkSession, d: String,
-                         epochs: Int): DataFrame =
+  private def epochTerms(s: SparkSession, d: String): DataFrame =
     graft.Tables.spread(graft.Tables.documents(s, d))
       .select((col("doc_id") % epochs).as("epoch"),
         explode(graft.ops.TextOps.toks(lower(col("text")))).as("term"))
@@ -91,7 +90,7 @@ object SketchStreams {
     // ONE corpus-scale tokenize, checkpointed; everything exact below reads
     // the (epoch, term, n) count frame — vocabulary-sized — instead
     // of re-scanning tokens per version
-    val terms = epochTerms(s, d, epochs).localCheckpoint(false)
+    val terms = epochTerms(s, d).localCheckpoint(false)
     val counts = terms.groupBy(col("epoch"), col("term"))
       .agg(count(lit(1)).as("n")).localCheckpoint(false)
     val empty = terms.select(col("term"), lit(0L).as("est")).limit(0)
@@ -145,7 +144,7 @@ object SketchStreams {
     // ONE corpus-scale tokenize+count; per-epoch cell grids and term
     // counts are vocabulary-sized from there, so each version's grid
     // is a filter+sum, not a corpus re-scan
-    val counts = epochTerms(s, d, epochs)
+    val counts = epochTerms(s, d)
       .groupBy(col("epoch"), col("term"))
       .agg(count(lit(1)).as("n")).localCheckpoint(false)
     val cells = counts

@@ -161,24 +161,65 @@ bench = dict(sources('perfbench/src'))
 test = dict(sources('src/test'))
 objects = {m.group(2) for s in main.values() for m in OWNER.finditer(s)}
 
-defaults = []  # (path, line, owner, def, list index, param index, param)
-for path, src in sorted(main.items()):
+
+def indent_at(src, pos):
+    line_start = src.rfind('\n', 0, pos) + 1
+    line = src[line_start:pos]
+    return len(line) - len(line.lstrip())
+
+
+# every def of every corpus: path -> [(pos, indent, name, lists)], where
+# lists holds, per parameter list, [(param, default text or None)]
+defs = {}
+for path, src in list(main.items()) + list(bench.items()) + \
+        list(test.items()):
+    rows = defs.setdefault(path, [])
     for m in DEF.finditer(src):
-        for li, params in enumerate(param_lists(src, m.end())):
-            for pi, p in enumerate(params):
+        lists = []
+        for params in param_lists(src, m.end()):
+            row = []
+            for p in params:
                 pm = PARAM.match(p)
-                if pm and ASSIGN.search(p[pm.end():]):
-                    line = src.count('\n', 0, m.start()) + 1
-                    defaults.append((path, line, owner_of(src, m.start()),
-                                     m.group(1), li, pi, pm.group(1)))
+                if not pm:
+                    continue
+                eq = ASSIGN.search(p, pm.end())
+                row.append((pm.group(1),
+                            p[eq.end():].strip() if eq else None))
+            lists.append(row)
+        rows.append((m.start(), indent_at(src, m.start()), m.group(1),
+                     lists))
+
+defaults = []  # (path, line, owner, def, list index, param index, param)
+default_text = {}  # (path, def pos, param) -> default text
+for path, src in sorted(main.items()):
+    for pos, _, name, lists in defs[path]:
+        for li, params in enumerate(lists):
+            for pi, (param, dflt) in enumerate(params):
+                if dflt is not None:
+                    line = src.count('\n', 0, pos) + 1
+                    defaults.append((path, line, owner_of(src, pos), name,
+                                     li, pi, param, pos))
+                    default_text[(path, pos, param)] = dflt
 
 
-def setters(name, owner, corpus):
-    """(list index, param index or name) pairs set by some call of
-    `name` in corpus; '*' when a call eta-expands it."""
-    found = set()
+def enclosing(path, src, pos):
+    """The innermost def whose header precedes pos at a smaller indent
+    than pos's own line: the def a call at pos sits in."""
+    ind = indent_at(src, pos)
+    for d in reversed(defs[path]):
+        if d[0] < pos and d[1] < ind:
+            return d
+    return None
+
+
+def calls(name, owner, corpus):
+    """One record per argument that some call of `name` in corpus
+    passes: (path, list index, param index or name, argument text,
+    enclosing def). A call that eta-expands `name` gives
+    (path, '*', None, None, None)."""
+    found = []
     word = re.compile(r'\b' + re.escape(name) + r'\b')
-    for src in corpus.values():
+    for path, src in corpus.items():
         for m in word.finditer(src):
             before = src[max(0, m.start() - 200):m.start()].rstrip()
             if re.search(r'\bdef$', before):
@@ -188,42 +229,81 @@ def setters(name, owner, corpus):
                 continue
             i = skip_ws(src, m.end())
             if src.startswith('_', i) and not IDENT.match(src, i + 1):
-                found.add('*')
+                found.append((path, '*', None, None, None))
                 continue
             if i < len(src) and src[i] == '[':
                 i = skip_ws(src, group(src, i))
-            li = 0
+            li, encl = 0, None
             while i < len(src) and src[i] in '({':
+                if encl is None:
+                    encl = enclosing(path, src, m.start())
                 end = group(src, i)
                 args = [src[i + 1:end - 1]] if src[i] == '{' \
                     else split_top(src[i + 1:end - 1])
                 for ai, a in enumerate(args):
                     named = NAMED.match(a) if src[i] == '(' else None
-                    found.add((li, named.group(1) if named else ai))
+                    text = a[named.end():] if named else a
+                    found.append((path, li, named.group(1) if named else ai,
+                                  text.strip(), encl))
                 li += 1
                 i = skip_ws(src, end)
     return found
 
 
-def is_set(d, found):
-    _, _, _, _, li, pi, param = d
-    return '*' in found or (li, pi) in found or (li, param) in found
+def sets(d, rec, is_set_key):
+    """Whether call record rec sets default d. An argument that restates
+    d's own default text (in d's own file) sets nothing; one that
+    forwards a defaulted parameter of the calling def sets d only when
+    that parameter is set."""
+    path, li, key, text, encl = rec
+    if li == '*':
+        return True
+    if li != d[4] or key not in (d[5], d[6]):
+        return False
+    if path == d[0] and text == default_text[(d[0], d[7], d[6])]:
+        return False
+    if encl is not None and IDENT.fullmatch(text):
+        for params in encl[3]:
+            for param, dflt in params:
+                if param == text:
+                    fwd = (path, encl[0], param)
+                    return dflt is None or fwd not in default_text or \
+                        is_set_key(fwd)
+    return True
 
+
+def fixpoint(records):
+    """Keys (path, def pos, param) of the defaults some record sets,
+    closed over forwarding."""
+    done = set()
+    changed = True
+    while changed:
+        changed = False
+        for d in defaults:
+            key = (d[0], d[7], d[6])
+            if key not in done and any(
+                    sets(d, r, done.__contains__) for r in records[d]):
+                done.add(key)
+                changed = True
+    return done
+
+
+outside, everywhere, cache = {}, {}, {}
+for d in defaults:
+    ckey = (d[3], d[2])
+    if ckey not in cache:
+        o = calls(d[3], d[2], main) + calls(d[3], d[2], bench)
+        cache[ckey] = (o, o + calls(d[3], d[2], test))
+    outside[d], everywhere[d] = cache[ckey]
+set_outside, set_anywhere = fixpoint(outside), fixpoint(everywhere)
 
 unset, test_only = [], []
-cache = {}
 for d in defaults:
-    path, line, owner, name = d[:4]
-    key = (name, owner)
-    if key not in cache:
-        cache[key] = (setters(name, owner, main) |
-                      setters(name, owner, bench),
-                      setters(name, owner, test))
-    outside, in_test = cache[key]
-    if is_set(d, outside):
+    key = (d[0], d[7], d[6])
+    if key in set_outside:
         continue
-    row = f'{path}:{line}: {owner}.{name}({d[6]})'
-    (test_only if is_set(d, in_test) else unset).append(row)
+    row = f'{d[0]}:{d[1]}: {d[2]}.{d[3]}({d[6]})'
+    (test_only if key in set_anywhere else unset).append(row)
 
 print('(a) defaulted parameters that no call sets:')
 print('\n'.join(unset))
