@@ -1070,7 +1070,7 @@ object SimilarityOps {
     * each vector is stored as `pqM` small codes (here 8 × one-of-16 =
     * 8 bytes) instead of `dim` floats (256 bytes), and queries rank
     * candidates from a per-query distance TABLE (ADC: the approx dot
-    * product is the sum of m table lookups) before exactly rescoring
+    * product is the sum of pqM table lookups) before exactly rescoring
     * only the short list. At 100 TB this is the difference between an
     * index that fits in executor memory and one that doesn't — 32×
     * compression here, and the scan side never touches raw vectors
