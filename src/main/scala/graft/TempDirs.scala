@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.sql.DataFrame
 
 /** Per-invocation scratch directories with ONE JVM-wide cleanup hook
   * (ADVICE r15: a shutdown hook registered per call accumulates
@@ -42,5 +43,20 @@ object TempDirs {
   def delete(p: Path): Unit = {
     live.remove(p)
     rm(p)
+  }
+
+  /** Run `body` over a fresh directory and return its result COLLECTED
+    * and re-lifted, deleting the directory before returning: every
+    * lazy read of the directory is forced first, so repeated calls in
+    * a long-lived process hold no disk. Only for results bounded by
+    * construction — every row is collected into this JVM. */
+  def collected(prefix: String)(body: String => DataFrame): DataFrame = {
+    val tmp = create(prefix)
+    try {
+      val out = body(tmp.toString)
+      val rows = out.collect()
+      import scala.jdk.CollectionConverters._
+      out.sparkSession.createDataFrame(rows.toSeq.asJava, out.schema)
+    } finally delete(tmp)
   }
 }

@@ -44,18 +44,12 @@ object DailyPipeline {
     * incrementalIndexPersisted concurrency posture — reclaimed
     * BEFORE returning (the audit is materialized first), so repeated
     * invocations in a long-lived process hold no disk. */
-  def dailyE2e(s: SparkSession, d: String): DataFrame = {
-    val tmp = graft.TempDirs.create("graft_daily_e2e_")
-    try dailyE2eOn(s, d, tmp.toString)
-    finally graft.TempDirs.delete(tmp) // result is materialized — see below
-  }
+  def dailyE2e(s: SparkSession, d: String): DataFrame =
+    graft.TempDirs.collected("graft_daily_e2e_")(dailyE2eOn(s, d, _))
 
-  /** The chain body. The returned frame is the 3-row checksum audit
-    * COLLECTED and re-lifted (bounded by construction: one row per
-    * stage), so every lazy read of `tmp` — the ingest sink, the
-    * fold's parquet state — is forced before the caller's temp dir
-    * is reclaimed; without that, each invocation would leave its
-    * working state on disk until JVM exit (ADVICE r15). */
+  /** The chain body over the working directory `tmp`; the returned
+    * 3-row checksum audit (one row per stage) reads the ingest sink
+    * and the fold's parquet state under `tmp` lazily. */
   private def dailyE2eOn(s: SparkSession, d: String,
                          tmp: String): DataFrame = {
     val src = s"$tmp/incoming"
@@ -101,7 +95,7 @@ object DailyPipeline {
     val pairs = graft.ops.DedupOps.incrementalIndexPersisted(s, d,
         stateDir = s"$tmp/dedup_state")
       .withColumn("j4", round(col("jaccard") * 10000).cast("long"))
-    val audit = Mapping.tableChecksum(ingested,
+    Mapping.tableChecksum(ingested,
         Seq(col("event_id"), col("user_id"), col("event_type"),
           col("ed"), col("v")), "ingested_delta")
       .unionByName(Mapping.tableChecksum(merged,
@@ -110,10 +104,6 @@ object DailyPipeline {
       .unionByName(Mapping.tableChecksum(pairs,
         Seq(col("id1"), col("id2"), col("j4")), "dedup_pairs"))
       .orderBy(col("tbl"))
-    // force every read of tmp now; 3 rows by construction
-    val rows = audit.collect()
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.toSeq.asJava, audit.schema)
   }
 
   /** DuckDB oracle: each stage's checksum recomputed from the RAW

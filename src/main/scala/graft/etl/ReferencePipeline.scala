@@ -88,15 +88,8 @@ object ReferencePipeline {
     * bounded by construction) is COLLECTED and re-lifted before the
     * directory is deleted, so repeated invocations in a long-lived
     * process hold no disk (the [[DailyPipeline.dailyE2e]] posture). */
-  def run(s: SparkSession, d: String): DataFrame = {
-    val tmp = graft.TempDirs.create("graft_reference_e2e_")
-    try {
-      val out = runOn(s, d, tmp.toString)
-      val rows = out.collect()
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.toSeq.asJava, out.schema)
-    } finally graft.TempDirs.delete(tmp)
-  }
+  def run(s: SparkSession, d: String): DataFrame =
+    graft.TempDirs.collected("graft_reference_e2e_")(runOn(s, d, _))
 
   /** The chain body over the working directory `base`; the returned
     * frame reads the curated parquet under `base` lazily. */

@@ -1658,19 +1658,7 @@ object Analytics {
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("tus"), col("event_type"),
         when(col("event_type") === convType, 1).otherwise(0).as("tag"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("tus"), col("tag"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val conv = tagged
-      .withColumn("touch_ts",
-        last(when(col("tag") === 0, col("tus")), ignoreNulls = true).over(w))
-      .withColumn("touch_type",
-        last(when(col("tag") === 0, col("event_type")), ignoreNulls = true)
-          .over(w))
-      .filter(col("tag") === 1)
-      .select(when(col("touch_ts").isNotNull &&
-          col("tus") - col("touch_ts") <= lit(windowDays * 86400000000L),
-          col("touch_type")).otherwise(lit("none")).as("touch_type"))
+    val conv = lastTouchCredit(tagged, Nil, windowDays)
     val counts = conv.groupBy(col("touch_type"))
       .agg(count(lit(1)).as("n_purchases"))
     val tot = counts.agg(sum(col("n_purchases")).as("tot"))
@@ -1678,6 +1666,32 @@ object Analytics {
       .select(col("touch_type"), col("n_purchases"),
         ExactRatio.r4(col("n_purchases"), col("tot")).as("share"))
       .orderBy(col("touch_type"))
+  }
+
+  /** The last-touch credit of each conversion in a tagged (user_id,
+    * event_id, tus, event_type, tag) frame, tag 1 marking conversions
+    * and 0 touches: per user, in (`arrival` ++ (tus, tag, event_id))
+    * order, the latest touch is carried forward, and a conversion
+    * credits its `touch_type` when that touch lies within `windowDays`
+    * of it, else "none". Output: the `arrival` columns and
+    * `touch_type`, one row per conversion. The batch face passes no
+    * arrival columns; the versioned audit passes `epoch`, so the fold
+    * credits by arrival order. */
+  private[graft] def lastTouchCredit(tagged: DataFrame, arrival: Seq[Column],
+                                     windowDays: Int): DataFrame = {
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(arrival ++ Seq(col("tus"), col("tag"), col("event_id")): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    tagged
+      .withColumn("touch_ts",
+        last(when(col("tag") === 0, col("tus")), ignoreNulls = true).over(w))
+      .withColumn("touch_type",
+        last(when(col("tag") === 0, col("event_type")), ignoreNulls = true)
+          .over(w))
+      .filter(col("tag") === 1)
+      .select(arrival :+ when(col("touch_ts").isNotNull &&
+          col("tus") - col("touch_ts") <= lit(windowDays * 86400000000L),
+          col("touch_type")).otherwise(lit("none")).as("touch_type"): _*)
   }
 
   /** Poisson-bootstrap confidence intervals for per-type means — THE
@@ -2325,7 +2339,18 @@ object Analytics {
     val mid = staged.agg(expr("(min(ed) + max(ed)) div 2").as("mid"))
     val st = staged.crossJoin(broadcast(mid))
       .withColumn("period", when(col("ed") < col("mid"), 0).otherwise(1))
-    val dec = st.filter(col("period") === 0)
+    val counts = withPsiBin(st, col("period") === 0)
+      .groupBy(col("bin"))
+      .agg(sum(when(col("period") === 0, 1L).otherwise(0L)).as("n_ref"),
+        sum(when(col("period") === 1, 1L).otherwise(0L)).as("n_cur"))
+    psiFromCounts(counts)
+  }
+
+  /** Tags each row of a frame with a double `x` with its PSI `bin`, 0–9:
+    * how many of the reference rows' (`isRef`) nine deciles — exact
+    * percentiles, 4dp — `x` exceeds. */
+  private[graft] def withPsiBin(staged: DataFrame, isRef: Column): DataFrame = {
+    val dec = staged.filter(isRef)
       .agg(expr(
         "percentile(x, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))")
         .as("ts"))
@@ -2333,24 +2358,20 @@ object Analytics {
         round(element_at(col("ts"), i), 4).as(s"t$i")): _*)
     val bin = (1 to 9).map(k =>
       (col("x") > col(s"t$k")).cast("long")).reduce(_ + _)
-    val counts = st.crossJoin(broadcast(dec))
-      .withColumn("bin", bin)
-      .groupBy(col("bin"))
-      .agg(sum(when(col("period") === 0, 1L).otherwise(0L)).as("n_ref"),
-        sum(when(col("period") === 1, 1L).otherwise(0L)).as("n_cur"))
-    val bins = staged.sparkSession.range(10).select(col("id").as("bin"))
+    staged.crossJoin(broadcast(dec)).withColumn("bin", bin)
+  }
+
+  /** The PSI arithmetic over a (bin, n_ref, n_cur) count frame, bins
+    * without rows counting 0 on both sides — shared by the batch face
+    * and [[graft.streaming.SketchStreams]]' versioned audit so the two
+    * cannot drift. */
+  private[graft] def psiFromCounts(counts: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val bins = counts.sparkSession.range(10).select(col("id").as("bin"))
     val full = bins.join(counts, Seq("bin"), "left")
       .select(col("bin"),
         coalesce(col("n_ref"), lit(0L)).as("n_ref"),
         coalesce(col("n_cur"), lit(0L)).as("n_cur"))
-    psiFromCounts(full)
-  }
-
-  /** The PSI arithmetic over a complete (bin, n_ref, n_cur) frame —
-    * shared by the batch face and [[graft.streaming.EventStreams]]'
-    * streaming monitor so the two cannot drift. */
-  private[graft] def psiFromCounts(full: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val tot = full.agg(sum(col("n_ref")).as("nr"),
       sum(col("n_cur")).as("nc"))
     val p = (col("n_ref").cast("double") + 0.5) /

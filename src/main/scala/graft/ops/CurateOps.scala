@@ -22,22 +22,29 @@ object CurateOps {
   /** The decontamination Jaccard threshold of both curation chains. */
   private val contamThreshold = 0.8
 
+  /** The rows of a (doc_id, text, …) frame that pass the quality gate
+    * (TextOps.qualityScores' exact predicate). */
+  private def qualityGate(docs: DataFrame): DataFrame = docs.join(
+    TextOps.qualityScoresOn(docs.select(col("doc_id"), col("text")))
+      .filter(col("quality_flag") === "good").select(col("doc_id")),
+    "doc_id")
+
+  /** The exact-dedup survivors of a (doc_id, text) frame: the minimum
+    * doc_id per content digest ([[DedupOps.textDigest]]). */
+  private def exactSurvivors(docs: DataFrame): DataFrame = docs
+    .groupBy(DedupOps.textDigest.as("__h"))
+    .agg(min(col("doc_id")).as("doc_id"))
+    .select(col("doc_id"))
+
   def curate(corpus: DataFrame, reference: DataFrame): DataFrame = {
-    val good = corpus.join(
-      TextOps.qualityScoresOn(corpus.select(col("doc_id"), col("text")))
-        .filter(col("quality_flag") === "good").select(col("doc_id")),
-      "doc_id")
+    val good = qualityGate(corpus)
     // exact dedup: one shuffle on the content digest, then a
     // broadcast-friendly semi join back on the kept ids. The kept-id
     // set is checkpointed: `deduped` feeds BOTH the decontamination
     // shingle join and the final anti join, and without the barrier
     // the whole quality+dedup chain re-derived per consumer (53
     // parquet scans / 126 exchanges in the r16 before-plan).
-    val keep = good
-      .groupBy(sha2(col("text"), 256).as("__h"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"))
-      .localCheckpoint(false)
+    val keep = exactSurvivors(good).localCheckpoint(false)
     val deduped = corpus.join(keep, Seq("doc_id"), "left_semi")
     val contaminated = DedupOps.decontaminate(deduped, reference, contamThreshold)
       .select(col("doc_id")).distinct()
@@ -88,9 +95,7 @@ object CurateOps {
     val s1ids = stats.filter(col("quality_flag") === "good")
       .select(col("doc_id"))
     val s1 = corpus.join(s1ids, Seq("doc_id"), "left_semi")
-    val s2ids = s1.groupBy(sha2(col("text"), 256).as("__h"))
-      .agg(min(col("doc_id")).as("doc_id")).select(col("doc_id"))
-      .localCheckpoint(false)
+    val s2ids = exactSurvivors(s1).localCheckpoint(false)
     val s2 = corpus.join(s2ids, Seq("doc_id"), "left_semi")
     val s3ids = s2ids.join(
       DedupOps.decontaminate(s2, reference, threshold)
@@ -167,15 +172,8 @@ object CurateOps {
       .select(col("doc_id"))
     val pages = canon.join(firstPerPage, Seq("doc_id"), "left_semi")
       .localCheckpoint(false)
-    val good = pages.join(
-      TextOps.qualityScoresOn(pages.select(col("doc_id"), col("text")))
-        .filter(col("quality_flag") === "good").select(col("doc_id")),
-      "doc_id")
-    val keep = good
-      .groupBy(sha2(col("text"), 256).as("__h"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"))
-    good.join(keep, Seq("doc_id"), "left_semi")
+    val good = qualityGate(pages)
+    good.join(exactSurvivors(good), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("canonical"))
       .orderBy(col("doc_id"))
   }

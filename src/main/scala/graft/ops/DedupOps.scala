@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   *    baseline) and a multi-table random-hyperplane LSH face for the
   *    high-similarity regime real dedup runs in.
   *
-  * Every candidate-generating path takes a `maxBucket` cap: a
-  * duplicate-heavy key (boilerplate docs, a hot shingle) otherwise
+  * Every banded (LSH, SimHash) candidate path caps its buckets: a
+  * duplicate-heavy key (boilerplate docs, a hot band) otherwise
   * turns its bucket quadratic. The cap keeps the first `maxBucket`
   * members per bucket in doc-id order (deterministic, a no-op on
   * corpora whose buckets stay below it) — and every capped-out row
@@ -162,28 +162,40 @@ object DedupOps {
     * appends `jaccard`. */
   private def verifyJaccard(pairs: DataFrame, sets: DataFrame): DataFrame = {
     val keep = pairs.columns.map(col).toSeq
-    pairs
+    val joined = pairs
       .join(sets.select(col("doc_id").as("id1"), col("hs").as("hs1")), "id1")
       .join(sets.select(col("doc_id").as("id2"), col("hs").as("hs2")), "id2")
-      // shingle arrays are sorted+distinct by construction, so the
-      // overlap is one allocation-free merge (vs array_intersect's
-      // per-row hash set + output array) — this runs on EVERY
-      // candidate pair of every near-dup operator
-      .withColumn("common",
-        graft.functions.SetExprs.sortedIntersectCount(col("hs1"), col("hs2")))
-      .withColumn("jaccard", round(col("common").cast("double") /
-        (size(col("hs1")) + size(col("hs2")) - col("common")), 4))
+    // shingle arrays are sorted+distinct by construction, so the
+    // overlap is one allocation-free merge (vs array_intersect's
+    // per-row hash set + output array) — this runs on EVERY
+    // candidate pair of every near-dup operator
+    withJaccard(joined, col("hs1"), col("hs2"), size(col("hs2")))
       .select(keep :+ col("jaccard"): _*)
   }
 
+  /** Appends the exact Jaccard of two sorted+distinct shingle-set
+    * columns: `common`, their overlap, and `jaccard`, rounded to 4dp.
+    * `nB` is `b`'s size (a precomputed column where the frame carries
+    * one). */
+  private def withJaccard(df: DataFrame, a: Column, b: Column,
+                          nB: Column): DataFrame =
+    df.withColumn("common",
+        graft.functions.SetExprs.sortedIntersectCount(a, b))
+      .withColumn("jaccard", round(col("common").cast("double") /
+        (size(a) + nB - col("common")), 4))
+
   // ---- exact -----------------------------------------------------------
+
+  /** The content digest exact dedup groups on: two documents are
+    * exact copies when their texts' SHA-256 digests are equal. */
+  private[graft] def textDigest: Column = sha2(col("text"), 256)
 
   /** Exact dedup: group on sha2(text); keep the minimum doc_id.
     * Grouping on the 64-hex digest, not the raw text, keeps shuffle
     * rows narrow at scale. */
   def exact(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .groupBy(sha2(col("text"), 256).as("text_hash"))
+      .groupBy(textDigest.as("text_hash"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
       .select(col("keep_id"), col("n_copies"))
       .orderBy(col("keep_id"))
@@ -210,15 +222,20 @@ object DedupOps {
   private val minhashPerms = 64
   private val numBands = 16
 
+  /** The LSH bucket cap of the MinHash, decontamination and
+    * embedding-LSH faces: rows past it in one bucket pair only with
+    * the bucket's representative. */
+  private val lshBucketCap = 1000
+
   /** Candidate pairs whose exact Jaccard ≥ threshold, surfaced by
     * banded MinHash LSH (numPerm=64, 16 bands × 4 rows ⇒ pairs with
     * J≈0.8+ are caught with prob ≥ 1-(1-0.8⁴)¹⁶ ≈ 0.9994). */
   def minhashLsh(s: SparkSession, d: String,
-                 maxBucket: Int = 1000): DataFrame =
+                 maxBucket: Int = lshBucketCap): DataFrame =
     minhashLshOn(Tables.documents(s, d), maxBucket)
 
   /** Same over any (doc_id, text) frame. */
-  def minhashLshOn(docs: DataFrame, maxBucket: Int = 1000): DataFrame = {
+  def minhashLshOn(docs: DataFrame, maxBucket: Int = lshBucketCap): DataFrame = {
     // reused by signature build AND exact verification — materialize once
     val sets = docShingleSets(docs).localCheckpoint(false)
     lshPairsFromIndex(bandIndexOnSets(sets, minhashPerms, numBands), sets,
@@ -236,15 +253,24 @@ object DedupOps {
     // overflow frame) read the checkpointed copy
     val (banded, overflow) = capBucketsRep(
       index, Seq("band", "bsig"), "doc_id", maxBucket)
-    val cand = banded.as("a")
+    val selfJoin = banded.as("a")
       .join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
         col("a.doc_id") < col("b.doc_id"))
+    verifiedPairs(selfJoin, overflow, sets, jaccardThreshold)
+  }
+
+  /** The tail of the self-join near-dup faces: the `a`/`b` self-join's
+    * (id1, id2) pairs plus the over-cap representatives, deduplicated,
+    * verified by exact Jaccard and kept at ≥ `threshold`. */
+  private def verifiedPairs(selfJoin: DataFrame, overflow: DataFrame,
+                            sets: DataFrame, threshold: Double): DataFrame = {
+    val cand = selfJoin
       .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
       .union(overflow)
       .distinct()
     verifyJaccard(cand, sets)
-      .filter(col("jaccard") >= jaccardThreshold)
+      .filter(col("jaccard") >= threshold)
       .orderBy(col("id1"), col("id2"))
   }
 
@@ -529,7 +555,6 @@ object DedupOps {
     * still flagged, while no bucket ever goes quadratic. */
   def decontaminate(corpus: DataFrame, reference: DataFrame,
                     threshold: Double = jaccardThreshold): DataFrame = {
-    val maxBucket = 1000
     // ONE shared pipeline over the side-tagged union: every document
     // is shingled, signed, and band-ranked exactly once (doc ids must
     // be disjoint across the two corpora — they key the verify join).
@@ -548,7 +573,7 @@ object DedupOps {
     val ranked = sig.select(col("doc_id"), col("__ref"),
         posexplode(array(bandSigs: _*)).as(Seq("band", "bsig")))
       .withColumn("__rn", row_number().over(w)).localCheckpoint(false)
-    val kept = ranked.filter(col("__rn") <= maxBucket)
+    val kept = ranked.filter(col("__rn") <= lshBucketCap)
     val cKept = kept.filter(col("__ref") === 0)
     val rKept = kept.filter(col("__ref") === 1)
     // per-(bucket, side) minimum id == the row the window ranked
@@ -572,11 +597,11 @@ object DedupOps {
     //    whose only near-dup ranks past the cap in every colliding
     //    band would silently never be flagged.
     val candOverflowC = ranked
-      .filter(col("__ref") === 0 && col("__rn") > maxBucket)
+      .filter(col("__ref") === 0 && col("__rn") > lshBucketCap)
       .join(rMin, Seq("band", "bsig"))
       .select(col("doc_id").as("id1"), col("ref_id").as("id2"))
     val candOverflowR = ranked
-      .filter(col("__ref") === 1 && col("__rn") > maxBucket)
+      .filter(col("__ref") === 1 && col("__rn") > lshBucketCap)
       .join(cMin, Seq("band", "bsig"))
       .select(col("corpus_id").as("id1"), col("doc_id").as("id2"))
     val cand = candJoin.union(candOverflowC).union(candOverflowR).distinct()
@@ -585,6 +610,18 @@ object DedupOps {
       .select(col("id1").as("doc_id"), col("id2").as("ref_id"), col("jaccard"))
       .orderBy(col("doc_id"), col("ref_id"))
   }
+
+  /** The row-local staging of the map-side decontamination faces: each
+    * (doc_id, text) row's sorted shingle-hash set `hs`, computed in the
+    * scan projection. */
+  private def rowShingles(df: DataFrame): DataFrame = Tables.spread(df)
+    .select(col("doc_id"), TextOps.toks(col("text")).as("__t"))
+    .select(col("doc_id"), shingleHashesExpr(col("__t")).as("hs"))
+
+  /** One (band, bsig) row per MinHash band of the staged set `hs`. */
+  private def bandRows: Column =
+    posexplode(array(bandSigsExpr(col("hs"), minhashPerms, numBands): _*))
+      .as(Seq("band", "bsig"))
 
   /** Decontamination for the shape production actually runs: a TINY
     * reference (eval benchmarks are megabytes) against an arbitrarily
@@ -609,25 +646,15 @@ object DedupOps {
     * to overflow buckets, use [[decontaminate]]. */
   def decontaminateBroadcast(corpus: DataFrame,
                              reference: DataFrame): DataFrame = {
-    def staged(df: DataFrame): DataFrame = graft.Tables.spread(df)
-      .select(col("doc_id"), TextOps.toks(col("text")).as("__t"))
-      .select(col("doc_id"), shingleHashesExpr(col("__t")).as("hs"))
-    val ref = staged(reference)
+    val ref = rowShingles(reference)
     val refSets = ref.select(col("doc_id").as("ref_id"),
       col("hs").as("ref_hs"), size(col("hs")).as("ref_n"))
-    val bandIndex = ref.select(col("doc_id").as("ref_id"),
-      posexplode(array(bandSigsExpr(col("hs"), minhashPerms, numBands): _*))
-        .as(Seq("band", "bsig")))
-    val cor = staged(corpus).select(col("doc_id"), col("hs"),
-      posexplode(array(bandSigsExpr(col("hs"), minhashPerms, numBands): _*))
-        .as(Seq("band", "bsig")))
-    cor
+    val bandIndex = ref.select(col("doc_id").as("ref_id"), bandRows)
+    val cor = rowShingles(corpus).select(col("doc_id"), col("hs"), bandRows)
+    val cand = cor
       .join(broadcast(bandIndex), Seq("band", "bsig"))
       .join(broadcast(refSets), Seq("ref_id"))
-      .withColumn("common",
-        graft.functions.SetExprs.sortedIntersectCount(col("hs"), col("ref_hs")))
-      .withColumn("jaccard", round(col("common").cast("double") /
-        (size(col("hs")) + col("ref_n") - col("common")), 4))
+    withJaccard(cand, col("hs"), col("ref_hs"), col("ref_n"))
       .filter(col("jaccard") >= jaccardThreshold)
       .select(col("doc_id"), col("ref_id"), col("jaccard"))
       .distinct()
@@ -668,47 +695,33 @@ object DedupOps {
     */
   def decontaminateBloom(corpus: DataFrame, reference: DataFrame,
                          fpp: Double = 0.01): DataFrame = {
-    def staged(df: DataFrame): DataFrame = Tables.spread(df)
-      .select(col("doc_id"), TextOps.toks(col("text")).as("__t"))
-      .select(col("doc_id"), shingleHashesExpr(col("__t")).as("hs"))
-    val ref = staged(reference).localCheckpoint(false)
+    val ref = rowShingles(reference).localCheckpoint(false)
     def bandKey: Column = xxhash64(col("band"), col("bsig"))
-    val refBands = ref.select(col("doc_id").as("ref_id"),
-      posexplode(array(bandSigsExpr(col("hs"), minhashPerms, numBands): _*))
-        .as(Seq("band", "bsig")))
+    val refBands = ref.select(col("doc_id").as("ref_id"), bandRows)
     // posexplode of a fixed-size array: exactly bands keys per ref doc
     val expected = math.max(1L, ref.count()) * numBands
     // the codegen'd probe: a pure row-local predicate, so Catalyst
     // keeps it inside the corpus scan stage below the join
     val mightContain = graft.functions.BloomProbe.mightContain(
       refBands.select(bandKey.as("k")), "k", expected, fpp, bandKey)
-    val corBands = staged(corpus).select(col("doc_id"), col("hs"),
-      posexplode(array(bandSigsExpr(col("hs"), minhashPerms, numBands): _*))
-        .as(Seq("band", "bsig")))
+    val corBands = rowShingles(corpus).select(col("doc_id"), col("hs"), bandRows)
       .filter(mightContain)
     val refSets = ref.select(col("doc_id").as("ref_id"),
       col("hs").as("ref_hs"), size(col("hs")).as("ref_n"))
-    corBands
+    // collapse multi-band collisions BEFORE the verify so each
+    // candidate pair pays for one sorted-intersect, not one per
+    // colliding band (rows with equal (doc_id, ref_id) carry equal
+    // hs, so which survives is value-irrelevant)
+    val cand = corBands
       .join(refBands, Seq("band", "bsig"))
-      // collapse multi-band collisions BEFORE the verify so each
-      // candidate pair pays for one sorted-intersect, not one per
-      // colliding band (rows with equal (doc_id, ref_id) carry equal
-      // hs, so which survives is value-irrelevant)
       .select(col("doc_id"), col("ref_id"), col("hs"))
       .dropDuplicates(Seq("doc_id", "ref_id"))
       .join(refSets, Seq("ref_id"))
-      .withColumn("common",
-        graft.functions.SetExprs.sortedIntersectCount(col("hs"), col("ref_hs")))
-      .withColumn("jaccard", round(col("common").cast("double") /
-        (size(col("hs")) + col("ref_n") - col("common")), 4))
+    withJaccard(cand, col("hs"), col("ref_hs"), col("ref_n"))
       .filter(col("jaccard") >= jaccardThreshold)
       .select(col("doc_id"), col("ref_id"), col("jaccard"))
       .orderBy(col("doc_id"), col("ref_id"))
   }
-
-  /** The posting cap of the containment and n-gram Jaccard faces;
-    * 0 keeps them exact. */
-  private val postingCap = 0
 
   /** Asymmetric n-gram CONTAINMENT decontamination: flag (corpus doc
     * A, reference item R) whenever |shingles(A) ∩ shingles(R)| / |shingles(R)|
@@ -733,35 +746,25 @@ object DedupOps {
     *
     * Scale: join volume is Σ_R prefix(R) × df(shingle) — reference
     * prefixes against a linear corpus index, no corpus self-join.
-    * `postingCap` > 0 caps a shingle's corpus posting list (deterministic
-    * lowest-ids-win) as the hot-shingle safety valve; unlike the
-    * self-join operators there is no overflow-representative rescue
-    * across two tables, so a capped run is honestly APPROXIMATE
-    * (recall loss on pairs whose every shared prefix shingle is hot) —
-    * this face runs with `postingCap` = 0, exact. */
+    * The corpus posting lists are uncapped: unlike the self-join
+    * operators there is no overflow-representative rescue across two
+    * tables, so a cap would make the face approximate. */
   def containment(s: SparkSession, d: String): DataFrame = {
     val threshold = 0.6
     val docs = Tables.documents(s, d)
     containmentOn(docs.filter(col("doc_id") % 2 === 0),
-      docs.filter(col("doc_id") % 2 =!= 0), threshold, postingCap)
+      docs.filter(col("doc_id") % 2 =!= 0), threshold)
   }
 
   /** Same over any (doc_id, text) corpus/reference frames. */
   def containmentOn(corpus: DataFrame, reference: DataFrame,
-                    threshold: Double = 0.6, maxDf: Int = 0): DataFrame = {
+                    threshold: Double = 0.6): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"containment threshold must be in (0, 1], got $threshold")
     val cSets = docShingleSets(corpus).localCheckpoint(false)
     val rSets = docShingleSets(reference).localCheckpoint(false)
-    val cPost0 = cSets.select(col("doc_id"), col("n").as("cn"),
+    val cPost = cSets.select(col("doc_id"), col("n").as("cn"),
       posexplode(col("hs")).as(Seq("cp", "h")))
-    val cPost =
-      if (maxDf <= 0) cPost0
-      else {
-        val w = Window.partitionBy(col("h")).orderBy(col("doc_id"))
-        cPost0.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") <= maxDf).drop("__rn")
-      }
     val rPrefixLen =
       (col("n") - ceilSafe(lit(threshold) * col("n")) + 1).cast("int")
     val rPrefix = rSets.select(col("doc_id").as("ref_id"), col("n").as("rn"),
@@ -1048,15 +1051,12 @@ object DedupOps {
     * (t·max ≤ min) ahead of exact set verification. */
   def ngramJaccard(s: SparkSession, d: String,
                    threshold: Double = jaccardThreshold): DataFrame =
-    ngramJaccardOn(Tables.documents(s, d), threshold, postingCap)
+    ngramJaccardOn(Tables.documents(s, d), threshold)
 
-  /** Same over any (doc_id, text) frame. `maxDf` > 0 caps the posting
-    * list of a prefix shingle (deterministic lowest-ids-win) — the
-    * safety valve against a globally common shingle creating a hot
-    * quadratic key at corpus scale. 0 (the default) keeps the
-    * algorithm exact. */
-  def ngramJaccardOn(docs: DataFrame, threshold: Double = 0.8,
-                     maxDf: Int = 0): DataFrame = {
+  /** Same over any (doc_id, text) frame. The prefix posting lists are
+    * uncapped, which keeps the algorithm exact. */
+  def ngramJaccardOn(docs: DataFrame,
+                     threshold: Double = jaccardThreshold): DataFrame = {
     // one scan-side pass feeds prefix build and verification alike
     val sets = docShingleSets(docs).localCheckpoint(false)
     // every ceil of a threshold product goes through ceilSafe: an FP
@@ -1067,16 +1067,14 @@ object DedupOps {
       (col("n") - ceilSafe(lit(threshold) * col("n")) + 1).cast("int")
     // posexplode keeps each posting's position in the sorted set: the
     // PPJoin positional filter needs it below
-    val prefix0 = sets.select(col("doc_id"), col("n"),
+    val prefix = sets.select(col("doc_id"), col("n"),
       posexplode(slice(col("hs"), lit(1), greatest(prefixLen, lit(0))))
         .as(Seq("p", "h")))
-    // maxDf=0: derive the empty overflow frame from the data so the
-    // id1/id2 types always match doc_id's type — a hardcoded lit(0L)
-    // would silently widen the union's columns for non-long ids
-    val (prefix, overflow) =
-      if (maxDf > 0) capBucketsRep(prefix0, Seq("h"), "doc_id", maxDf)
-      else (prefix0, prefix0
-        .select(col("doc_id").as("id1"), col("doc_id").as("id2")).limit(0))
+    // no capped-out rows: derive the empty overflow frame from the data
+    // so the id1/id2 types always match doc_id's type — a hardcoded
+    // lit(0L) would silently widen the union's columns for non-long ids
+    val overflow = prefix
+      .select(col("doc_id").as("id1"), col("doc_id").as("id2")).limit(0)
     // overlap required for J ≥ t: common ≥ t·(na+nb)/(1+t); a shared
     // shingle at 0-based sorted positions (pa, pb) bounds the overlap
     // by min(na-pa, nb-pb) — common shingles can only come from the
@@ -1086,18 +1084,13 @@ object DedupOps {
     // cannot witness the threshold.
     val minOverlap =
       ceilSafe(lit(threshold) / (1 + threshold) * (col("a.n") + col("b.n")))
-    val cand = prefix.as("a")
+    val selfJoin = prefix.as("a")
       .join(prefix.as("b"), col("a.h") === col("b.h") &&
         col("a.doc_id") < col("b.doc_id") &&
         least(col("a.n"), col("b.n")) >=
           ceilSafe(lit(threshold) * greatest(col("a.n"), col("b.n"))) &&
         least(col("a.n") - col("a.p"), col("b.n") - col("b.p")) >= minOverlap)
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .union(overflow)
-      .distinct()
-    verifyJaccard(cand, sets)
-      .filter(col("jaccard") >= threshold)
-      .orderBy(col("id1"), col("id2"))
+    verifiedPairs(selfJoin, overflow, sets, threshold)
   }
 
   // ---- embedding cosine ------------------------------------------------
@@ -1127,6 +1120,10 @@ object DedupOps {
       .orderBy(col("id1"), col("id2"))
   }
 
+  /** The cosine threshold and table count of the embedding-LSH faces. */
+  private val embeddingLshCosine = 0.9
+  private val embeddingLshTables = 4
+
   /** Embedding near-dup pairs at scale: multi-table random-hyperplane
     * LSH (OR-construction). Each of `nTables` independent tables
     * buckets on `nBits` sign bits; a pair is a candidate if it
@@ -1142,18 +1139,19 @@ object DedupOps {
     * linearly with n, the one measured super-linear scaling in the
     * r7 SCALING run. The count behind it is one metadata-cheap
     * count(*) job, paid once before the bucketing plan is built. */
-  def embeddingPairsLsh(s: SparkSession, d: String, threshold: Double = 0.9,
-                        nBits: Int = 0, nTables: Int = 4): DataFrame = {
-    val maxBucket = 1000
+  def embeddingPairsLsh(s: SparkSession, d: String,
+                        threshold: Double = embeddingLshCosine,
+                        nBits: Int = 0,
+                        nTables: Int = embeddingLshTables): DataFrame =
     embeddingPairsLshOn(
       Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-      threshold, nBits, nTables, maxBucket)
-  }
+      threshold, nBits, nTables)
 
   /** Same over any (vec_id, embedding) frame. */
-  def embeddingPairsLshOn(emb: DataFrame, threshold: Double = 0.9,
-                          nBits: Int = 0, nTables: Int = 4,
-                          maxBucket: Int = 1000): DataFrame = {
+  def embeddingPairsLshOn(emb: DataFrame,
+                          threshold: Double = embeddingLshCosine,
+                          nBits: Int = 0,
+                          nTables: Int = embeddingLshTables): DataFrame = {
     val bits =
       if (nBits > 0) nBits else SimilarityOps.adaptiveBits(emb.count())
     val tables = (0 until nTables).map { t =>
@@ -1164,7 +1162,7 @@ object DedupOps {
     // capBucketsRep checkpoints the ranked frame — both self-join sides and
     // the overflow read one materialization of the bucketing pipeline
     val (bucketed, overflow) = capBucketsRep(tables,
-      Seq("table", "bucket"), "vec_id", maxBucket)
+      Seq("table", "bucket"), "vec_id", lshBucketCap)
     val cand = bucketed.as("a")
       .join(bucketed.as("b"),
         col("a.table") === col("b.table") &&

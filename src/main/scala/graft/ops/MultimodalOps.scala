@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Decoded audio features per WAV payload. */
@@ -89,16 +89,6 @@ object WavCodec {
         h.nFrames * 1000.0 / h.rate, rms)
     }
 
-  /** CLIP extraction — the audio face of frame sampling: cut frames
-    * [fromMs, toMs) out of a PCM payload and emit a minimal valid
-    * RIFF/WAVE file, so the codec is CLOSED under it ([[decode]]
-    * parses the output) and clip stages chain with the feature pass
-    * exactly like [[BmpCodec.resize]] chains with the image pass.
-    * Same chunk-walk validation and truncation contract as decode:
-    * malformed payloads return None, the requested range clamps to
-    * the frames actually present (an out-of-range request yields the
-    * empty-but-valid clip, not a failure), and all offset arithmetic
-    * stays in Long because every size field is hostile. */
   /** Volume-invariant energy-envelope fingerprint of an 8-bit mono
     * PCM WAV — the audio face of perceptual near-dup detection
     * (BmpCodec.ahash's sibling): re-encodes of the same take at a
@@ -117,7 +107,6 @@ object WavCodec {
     * frames, zero complete windows is junk. */
   def envHash(b: Array[Byte]): Option[Long] = {
     val win = 16
-    if (b.length < 44) return None
     parseHeader(b).flatMap { h =>
       if (h.bits != 8 || h.channels != 1) None
       else {
@@ -147,6 +136,16 @@ object WavCodec {
     }
   }
 
+  /** CLIP extraction — the audio face of frame sampling: cut frames
+    * [fromMs, toMs) out of a PCM payload and emit a minimal valid
+    * RIFF/WAVE file, so the codec is CLOSED under it ([[decode]]
+    * parses the output) and clip stages chain with the feature pass
+    * exactly like [[BmpCodec.resize]] chains with the image pass.
+    * Same chunk-walk validation and truncation contract as decode:
+    * malformed payloads return None, the requested range clamps to
+    * the frames actually present (an out-of-range request yields the
+    * empty-but-valid clip, not a failure), and all offset arithmetic
+    * stays in Long because every size field is hostile. */
   def clip(b: Array[Byte], fromMs: Long, toMs: Long): Option[Array[Byte]] = {
     if (fromMs < 0 || toMs < fromMs) return None
     parseHeader(b).flatMap { h =>
@@ -168,19 +167,28 @@ object WavCodec {
         val toF = math.min(nFrames, math.min(toMs, maxMs) * h.rate / 1000)
         val outFrames = math.max(0L, toF - fromF)
         val outBytes = (outFrames * h.bytesPerFrame).toInt
-        val out = java.nio.ByteBuffer.allocate(44 + outBytes)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        out.put("RIFF".getBytes("US-ASCII")).putInt(36 + outBytes)
-          .put("WAVE".getBytes("US-ASCII"))
-          .put("fmt ".getBytes("US-ASCII")).putInt(16)
-          .putShort(1).putShort(h.channels.toShort).putInt(h.rate)
-          .putInt(h.rate * h.bytesPerFrame).putShort(h.bytesPerFrame.toShort)
-          .putShort(h.bits.toShort)
-          .put("data".getBytes("US-ASCII")).putInt(outBytes)
+        val out = pcm(h.channels, h.rate, h.bits, outBytes)
         out.put(b, h.dataOff + (fromF * h.bytesPerFrame).toInt, outBytes)
         Some(out.array())
       }
     }
+  }
+
+  /** A PCM RIFF/WAVE file of `dataBytes` sample bytes: the 44-byte
+    * canonical header written, the buffer positioned at the first
+    * sample. [[clip]]'s output and [[MmSynth]]'s payloads. */
+  private[ops] def pcm(channels: Int, rate: Int, bits: Int,
+                       dataBytes: Int): java.nio.ByteBuffer = {
+    val bytesPerFrame = channels * bits / 8
+    java.nio.ByteBuffer.allocate(44 + dataBytes)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .put("RIFF".getBytes("US-ASCII")).putInt(36 + dataBytes)
+      .put("WAVE".getBytes("US-ASCII"))
+      .put("fmt ".getBytes("US-ASCII")).putInt(16)
+      .putShort(1).putShort(channels.toShort).putInt(rate)
+      .putInt(rate * bytesPerFrame).putShort(bytesPerFrame.toShort)
+      .putShort(bits.toShort)
+      .put("data".getBytes("US-ASCII")).putInt(dataBytes)
   }
 }
 
@@ -191,7 +199,19 @@ object WavCodec {
   * Malformed payloads return None (dropped, never a task failure);
   * every size field is treated as adversarial. */
 object BmpCodec {
-  def decode(id: Long, b: Array[Byte]): Option[BmpFeatures] = {
+  /** The parsed-and-validated header [[decode]], [[ahash]] and
+    * [[resize]] walk to — ONE parser, so the three can never disagree
+    * about which payloads are valid or which rows are present. `rows`
+    * is already clamped to the complete rows present; `heightRaw`
+    * keeps the stored sign (negative = top-down row order). */
+  private case class BmpHeader(dataOff: Int, width: Int, heightRaw: Int,
+                               stride: Long, rows: Long)
+
+  /** Bytes per stored pixel row of a 24-bit image `width` pixels wide:
+    * rows pad to 4-byte boundaries. */
+  private[ops] def stride(width: Long): Long = (width * 3 + 3) / 4 * 4
+
+  private def parseHeader(b: Array[Byte]): Option[BmpHeader] = {
     if (b.length < 54) return None
     def le32(o: Int): Int =
       (b(o) & 0xFF) | (b(o + 1) & 0xFF) << 8 |
@@ -210,48 +230,38 @@ object BmpCodec {
     val height = math.abs(heightRaw.toLong) // abs(Int.MinValue) is safe in Long
     if (width <= 0 || height == 0 || height > Int.MaxValue) return None
     if (dataOff < 54 || dataOff > b.length) return None
-    // rows pad to 4-byte boundaries; all arithmetic in Long — width
-    // is attacker-controlled and width*3 overflows Int at ~716M
-    val stride = (width.toLong * 3 + 3) / 4 * 4
+    // all arithmetic in Long — width is attacker-controlled and
+    // width*3 overflows Int at ~716M
+    val st = stride(width.toLong)
     // truncated payloads clamp to the complete rows present (the WAV
     // decoder's frames-clamp contract); a zero-row payload is junk
-    val rows = math.min(height, (b.length - dataOff) / stride)
+    val rows = math.min(height, (b.length - dataOff) / st)
     if (rows <= 0) return None
-    var (sr, sg, sb) = (0L, 0L, 0L)
-    var r = 0
-    while (r < rows) {
-      var base = dataOff + r * stride.toInt // stride*rows ≤ length, Int-safe
-      var x = 0
-      while (x < width) {
-        sb += b(base) & 0xFF
-        sg += b(base + 1) & 0xFF
-        sr += b(base + 2) & 0xFF
-        base += 3
-        x += 1
-      }
-      r += 1
-    }
-    val n = rows * width
-    Some(BmpFeatures(id, width, rows.toInt, bpp, n,
-      sr.toDouble / n, sg.toDouble / n, sb.toDouble / n))
+    Some(BmpHeader(dataOff, width, heightRaw, st, rows))
   }
 
-  /** Nearest-neighbor RESIZE of an uncompressed 24-bit BMP, emitted
-    * as a new valid 24-bit BMP — the codec is CLOSED under it
-    * ([[decode]] parses the output), so resize stages chain with the
-    * feature pass like any image-curation pipeline. Same adversarial
-    * posture as decode — and the SAME truncation contract: every
-    * input size field is hostile, malformed payloads return None,
-    * truncated pixel arrays CLAMP to the complete rows present (so
-    * resize agrees with decode about which rows exist), and output
-    * dimensions are capped (4096²·3B ≈ 50 MB) so a hostile request
-    * can't allocate the executor away. Source pixels are sampled in
-    * STORED row order (`srcY·rows/outH`, `srcX·width/outW` — pure
-    * integer floors), and the output header PRESERVES THE SIGN of the
-    * source height: a top-down (negative-height) input yields a
-    * top-down output, so any standards-conforming external reader
-    * renders the resize in the source's orientation — not just this
-    * codec family's orientation-agnostic decode. */
+  def decode(id: Long, b: Array[Byte]): Option[BmpFeatures] =
+    parseHeader(b).map { h =>
+      var (sr, sg, sb) = (0L, 0L, 0L)
+      var r = 0
+      while (r < h.rows) {
+        // stride*rows ≤ length, Int-safe
+        var base = h.dataOff + r * h.stride.toInt
+        var x = 0
+        while (x < h.width) {
+          sb += b(base) & 0xFF
+          sg += b(base + 1) & 0xFF
+          sr += b(base + 2) & 0xFF
+          base += 3
+          x += 1
+        }
+        r += 1
+      }
+      val n = h.rows * h.width
+      BmpFeatures(id, h.width, h.rows.toInt, 24, n,
+        sr.toDouble / n, sg.toDouble / n, sb.toDouble / n)
+    }
+
   /** Brightness-invariant average hash (aHash) of an uncompressed
     * 24-bit BMP — the perceptual signature behind image NEAR-dup
     * detection: re-encodes of the same image that differ byte-for-byte
@@ -271,102 +281,90 @@ object BmpCodec {
     * `tw·th` capped at 64 bits. */
   def ahash(b: Array[Byte], tw: Int, th: Int): Option[Long] = {
     if (tw <= 0 || th <= 0 || tw * th > 64) return None
-    if (b.length < 54) return None
-    def le32(o: Int): Int =
-      (b(o) & 0xFF) | (b(o + 1) & 0xFF) << 8 |
-        (b(o + 2) & 0xFF) << 16 | (b(o + 3) & 0xFF) << 24
-    def le16(o: Int): Int = (b(o) & 0xFF) | (b(o + 1) & 0xFF) << 8
-    if (b(0) != 'B' || b(1) != 'M') return None
-    val dataOff = le32(10)
-    val dibSize = le32(14)
-    val width = le32(18)
-    val heightRaw = le32(22)
-    val bpp = le16(28)
-    val compression = le32(30)
-    if (dibSize < 40 || bpp != 24 || compression != 0) return None
-    val height = math.abs(heightRaw.toLong)
-    if (width <= 0 || height == 0 || height > Int.MaxValue) return None
-    if (dataOff < 54 || dataOff > b.length) return None
-    val stride = (width.toLong * 3 + 3) / 4 * 4
-    val rows = math.min(height, (b.length - dataOff) / stride)
-    if (rows <= 0) return None
-    val n = tw * th
-    val v = new Array[Int](n)
-    var sum = 0L
-    var y = 0
-    while (y < th) {
-      val srcBase = dataOff + (y.toLong * rows / th).toInt * stride.toInt
-      var x = 0
-      while (x < tw) {
-        val g = b(srcBase + (x.toLong * width / tw).toInt * 3 + 1) & 0xFF
-        v(y * tw + x) = g
-        sum += g
-        x += 1
+    parseHeader(b).map { h =>
+      val n = tw * th
+      val v = new Array[Int](n)
+      var sum = 0L
+      var y = 0
+      while (y < th) {
+        val srcBase = h.dataOff + (y.toLong * h.rows / th).toInt * h.stride.toInt
+        var x = 0
+        while (x < tw) {
+          val g = b(srcBase + (x.toLong * h.width / tw).toInt * 3 + 1) & 0xFF
+          v(y * tw + x) = g
+          sum += g
+          x += 1
+        }
+        y += 1
       }
-      y += 1
+      var hash = 0L
+      var i = 0
+      while (i < n) {
+        if (v(i).toLong * n > sum) hash |= 1L << i
+        i += 1
+      }
+      hash
     }
-    var hash = 0L
-    var i = 0
-    while (i < n) {
-      if (v(i).toLong * n > sum) hash |= 1L << i
-      i += 1
-    }
-    Some(hash)
   }
 
+  /** Nearest-neighbor RESIZE of an uncompressed 24-bit BMP, emitted
+    * as a new valid 24-bit BMP — the codec is CLOSED under it
+    * ([[decode]] parses the output), so resize stages chain with the
+    * feature pass like any image-curation pipeline. Same adversarial
+    * posture as decode — and the SAME truncation contract: every
+    * input size field is hostile, malformed payloads return None,
+    * truncated pixel arrays CLAMP to the complete rows present (so
+    * resize agrees with decode about which rows exist), and output
+    * dimensions are capped (4096²·3B ≈ 50 MB) so a hostile request
+    * can't allocate the executor away. Source pixels are sampled in
+    * STORED row order (`srcY·rows/outH`, `srcX·width/outW` — pure
+    * integer floors), and the output header PRESERVES THE SIGN of the
+    * source height: a top-down (negative-height) input yields a
+    * top-down output, so any standards-conforming external reader
+    * renders the resize in the source's orientation — not just this
+    * codec family's orientation-agnostic decode. */
   def resize(b: Array[Byte], outW: Int, outH: Int): Option[Array[Byte]] = {
     if (outW <= 0 || outH <= 0 || outW > 4096 || outH > 4096) return None
-    if (b.length < 54) return None
-    def le32(o: Int): Int =
-      (b(o) & 0xFF) | (b(o + 1) & 0xFF) << 8 |
-        (b(o + 2) & 0xFF) << 16 | (b(o + 3) & 0xFF) << 24
-    def le16(o: Int): Int = (b(o) & 0xFF) | (b(o + 1) & 0xFF) << 8
-    if (b(0) != 'B' || b(1) != 'M') return None
-    val dataOff = le32(10)
-    val dibSize = le32(14)
-    val width = le32(18)
-    val heightRaw = le32(22)
-    val bpp = le16(28)
-    val compression = le32(30)
-    if (dibSize < 40 || bpp != 24 || compression != 0) return None
-    val height = math.abs(heightRaw.toLong)
-    if (width <= 0 || height == 0 || height > Int.MaxValue) return None
-    if (dataOff < 54 || dataOff > b.length) return None
-    val srcStride = (width.toLong * 3 + 3) / 4 * 4
-    val rows = math.min(height, (b.length - dataOff) / srcStride)
-    if (rows <= 0) return None
-    val dstStride = (outW * 3 + 3) / 4 * 4
-    val out = new Array[Byte](54 + dstStride * outH)
-    def put16(o: Int, v: Int): Unit = {
-      out(o) = v.toByte; out(o + 1) = (v >> 8).toByte
-    }
-    def put32(o: Int, v: Int): Unit = {
-      out(o) = v.toByte; out(o + 1) = (v >> 8).toByte
-      out(o + 2) = (v >> 16).toByte; out(o + 3) = (v >> 24).toByte
-    }
-    out(0) = 'B'; out(1) = 'M'
-    put32(2, out.length); put32(10, 54)
-    // stored row order is copied as-is, so the orientation FLAG must
-    // travel with it: keep the source's top-down/bottom-up sign
-    put32(14, 40); put32(18, outW)
-    put32(22, if (heightRaw < 0) -outH else outH)
-    put16(26, 1); put16(28, 24); put32(30, 0)
-    put32(34, dstStride * outH)
-    var y = 0
-    while (y < outH) {
-      val srcR = (y.toLong * rows / outH).toInt
-      val srcBase = dataOff + srcR * srcStride.toInt
-      val dstBase = 54 + y * dstStride
-      var x = 0
-      while (x < outW) {
-        val sx = srcBase + (x.toLong * width / outW).toInt * 3
-        val dx = dstBase + x * 3
-        out(dx) = b(sx); out(dx + 1) = b(sx + 1); out(dx + 2) = b(sx + 2)
-        x += 1
+    parseHeader(b).map { h =>
+      // stored row order is copied as-is, so the orientation FLAG must
+      // travel with it: keep the source's top-down/bottom-up sign
+      val out = rgb24(outW, outH, h.heightRaw < 0, 0)
+      val dstStride = stride(outW.toLong).toInt
+      var y = 0
+      while (y < outH) {
+        val srcR = (y.toLong * h.rows / outH).toInt
+        val srcBase = h.dataOff + srcR * h.stride.toInt
+        val dstBase = 54 + y * dstStride
+        var x = 0
+        while (x < outW) {
+          val sx = srcBase + (x.toLong * h.width / outW).toInt * 3
+          val dx = dstBase + x * 3
+          out(dx) = b(sx); out(dx + 1) = b(sx + 1); out(dx + 2) = b(sx + 2)
+          x += 1
+        }
+        y += 1
       }
-      y += 1
+      out
     }
-    Some(out)
+  }
+
+  /** A zeroed `w`×`h` uncompressed 24-bit BMP with its 54-byte header
+    * written: pixel rows start at offset 54, `stride(w)` bytes apart,
+    * stored top-down when `topDown`, else bottom-up; `ppm` is the
+    * resolution field (pixels per metre, both axes). [[resize]]'s
+    * output and [[MmSynth]]'s payloads. */
+  private[ops] def rgb24(w: Int, h: Int, topDown: Boolean,
+                         ppm: Int): Array[Byte] = {
+    val dataLen = stride(w.toLong).toInt * h
+    java.nio.ByteBuffer.allocate(54 + dataLen)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .put('B'.toByte).put('M'.toByte).putInt(54 + dataLen)
+      .putInt(0).putInt(54) // reserved, pixel data offset
+      .putInt(40).putInt(w).putInt(if (topDown) -h else h) // BITMAPINFOHEADER
+      .putShort(1).putShort(24) // planes, bpp
+      .putInt(0).putInt(dataLen) // BI_RGB, image size
+      .putInt(ppm).putInt(ppm).putInt(0).putInt(0) // resolution, palette
+      .array()
   }
 }
 
@@ -443,55 +441,68 @@ object VideoCodec {
 object MmSynth {
   import java.nio.{ByteBuffer, ByteOrder}
 
-  /** 8-bit mono PCM RIFF/WAVE at 8 kHz, 64 + (id % 64) frames,
-    * sample i = (id*31 + i*7) mod 256. */
-  def wavBytes(id: Long): Array[Byte] = {
-    val n = 64 + (id % 64).toInt
-    val buf = ByteBuffer.allocate(44 + n).order(ByteOrder.LITTLE_ENDIAN)
-    buf.put("RIFF".getBytes("US-ASCII")).putInt(36 + n)
-    buf.put("WAVE".getBytes("US-ASCII"))
-    buf.put("fmt ".getBytes("US-ASCII")).putInt(16)
-    buf.putShort(1).putShort(1) // PCM, mono
-    buf.putInt(8000).putInt(8000) // sample rate, byte rate
-    buf.putShort(1).putShort(8) // block align, bits
-    buf.put("data".getBytes("US-ASCII")).putInt(n)
+  /** 8-bit mono PCM RIFF/WAVE at 8 kHz of `n` frames; frame i holds
+    * `sample(i)`. */
+  private def wav(n: Int)(sample: Int => Byte): Array[Byte] = {
+    val buf = WavCodec.pcm(1, 8000, 8, n)
     var i = 0
-    while (i < n) { buf.put(((id * 31 + i * 7) % 256).toByte); i += 1 }
+    while (i < n) { buf.put(sample(i)); i += 1 }
     buf.array()
   }
+
+  /** Bottom-up 24-bit BI_RGB BMP, `w`×`h`, 2835 px/m; channel byte at
+    * (file row r, col x, channel c∈{0=B,1=G,2=R}) = `px(r, x, c)`. */
+  private def bmp(w: Int, h: Int)(px: (Int, Int, Int) => Byte): Array[Byte] = {
+    val out = BmpCodec.rgb24(w, h, false, 2835)
+    val stride = BmpCodec.stride(w.toLong).toInt
+    var r = 0
+    while (r < h) {
+      var x = 0
+      while (x < w) {
+        var c = 0
+        while (c < 3) { out(54 + r * stride + x * 3 + c) = px(r, x, c); c += 1 }
+        x += 1
+      }
+      r += 1
+    }
+    out
+  }
+
+  /** "GV01" grayscale video, 8×6 px, 4 fps, `nf` frames; pixel
+    * (frame f, col x, row y) = `px(f, x, y)`. */
+  private def gv01(nf: Int)(px: (Int, Int, Int) => Byte): Array[Byte] = {
+    val w = 8; val h = 6
+    val buf = ByteBuffer.allocate(12 + w * h * nf)
+      .order(ByteOrder.LITTLE_ENDIAN)
+    buf.put("GV01".getBytes("US-ASCII"))
+    buf.putShort(w.toShort).putShort(h.toShort)
+    buf.putShort(4.toShort).putShort(nf.toShort)
+    var f = 0
+    while (f < nf) {
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) { buf.put(px(f, x, y)); x += 1 }
+        y += 1
+      }
+      f += 1
+    }
+    buf.array()
+  }
+
+  /** 8-bit mono PCM RIFF/WAVE at 8 kHz, 64 + (id % 64) frames,
+    * sample i = (id*31 + i*7) mod 256. */
+  def wavBytes(id: Long): Array[Byte] =
+    wav(64 + (id % 64).toInt)(i => ((id * 31 + i * 7) % 256).toByte)
 
   /** 24-bit BI_RGB BMP, width 4 + (id % 13), height 3 + (id % 7),
     * channel byte at (file row r, col x, channel c∈{0=B,1=G,2=R}) =
     * (id + 5r + 3x + c) mod 256. The formula indexes FILE row order
     * (the order the decoder walks), so whether the image is stored
     * bottom-up is irrelevant to the per-channel means. */
-  def bmpBytes(id: Long): Array[Byte] = {
-    val w = 4 + (id % 13).toInt
-    val h = 3 + (id % 7).toInt
-    val stride = (w * 3 + 3) / 4 * 4
-    val dataLen = stride * h
-    val buf = ByteBuffer.allocate(54 + dataLen).order(ByteOrder.LITTLE_ENDIAN)
-    buf.put('B'.toByte).put('M'.toByte).putInt(54 + dataLen)
-    buf.putInt(0).putInt(54) // reserved, pixel data offset
-    buf.putInt(40).putInt(w).putInt(h) // BITMAPINFOHEADER
-    buf.putShort(1).putShort(24) // planes, bpp
-    buf.putInt(0).putInt(dataLen) // BI_RGB, image size
-    buf.putInt(2835).putInt(2835).putInt(0).putInt(0) // dpi, palette
-    var r = 0
-    while (r < h) {
-      val base = 54 + r * stride
-      var x = 0
-      while (x < w) {
-        val v = id + 5L * r + 3L * x
-        buf.put(base + x * 3, (v % 256).toByte)
-        buf.put(base + x * 3 + 1, ((v + 1) % 256).toByte)
-        buf.put(base + x * 3 + 2, ((v + 2) % 256).toByte)
-        x += 1
-      }
-      r += 1
-    }
-    buf.array()
-  }
+  def bmpBytes(id: Long): Array[Byte] =
+    bmp(4 + (id % 13).toInt, 3 + (id % 7).toInt)((r, x, c) =>
+      ((id + 5L * r + 3L * x + c) % 256).toByte)
 
   /** Planted NEAR-dup audio family — [[bmpNearBytes]]'s WAV sibling:
     * ids in the same group of `grp` render the SAME pseudo-random
@@ -507,22 +518,10 @@ object MmSynth {
   def wavNearBytes(id: Long, grp: Int = 5): Array[Byte] = {
     val base = id - id % grp
     val c = 1 + (id % grp).toInt
-    val n = 64 + (base % 64).toInt
-    val buf = ByteBuffer.allocate(44 + n).order(ByteOrder.LITTLE_ENDIAN)
-    buf.put("RIFF".getBytes("US-ASCII")).putInt(36 + n)
-    buf.put("WAVE".getBytes("US-ASCII"))
-    buf.put("fmt ".getBytes("US-ASCII")).putInt(16)
-    buf.putShort(1).putShort(1)
-    buf.putInt(8000).putInt(8000)
-    buf.putShort(1).putShort(8)
-    buf.put("data".getBytes("US-ASCII")).putInt(n)
-    var i = 0
-    while (i < n) {
+    wav(64 + (base % 64).toInt) { i =>
       val s = (((base % 1048573L) * 2654435761L + i * 40503L) % 41L).toInt - 20
-      buf.put((128 + c * s).toByte)
-      i += 1
+      (128 + c * s).toByte
     }
-    buf.array()
   }
 
   /** Planted NEAR-dup image family: ids in the same group of `grp`
@@ -541,61 +540,18 @@ object MmSynth {
   def bmpNearBytes(id: Long, grp: Int = 5): Array[Byte] = {
     val base = id - id % grp
     val jitter = (id % grp).toInt
-    val w = 4 + (base % 13).toInt
-    val h = 3 + (base % 7).toInt
-    val stride = (w * 3 + 3) / 4 * 4
-    val dataLen = stride * h
-    val buf = ByteBuffer.allocate(54 + dataLen).order(ByteOrder.LITTLE_ENDIAN)
-    buf.put('B'.toByte).put('M'.toByte).putInt(54 + dataLen)
-    buf.putInt(0).putInt(54)
-    buf.putInt(40).putInt(w).putInt(h)
-    buf.putShort(1).putShort(24)
-    buf.putInt(0).putInt(dataLen)
-    buf.putInt(2835).putInt(2835).putInt(0).putInt(0)
-    var r = 0
-    while (r < h) {
-      val rowBase = 54 + r * stride
-      var x = 0
-      while (x < w) {
-        val v = (((base % 1048573L) * 2654435761L + r * 40503L + x * 9973L)
-          % 251L).toInt + jitter
-        buf.put(rowBase + x * 3, v.toByte)
-        buf.put(rowBase + x * 3 + 1, v.toByte)
-        buf.put(rowBase + x * 3 + 2, v.toByte)
-        x += 1
-      }
-      r += 1
-    }
-    buf.array()
+    bmp(4 + (base % 13).toInt, 3 + (base % 7).toInt)((r, x, _) =>
+      ((((base % 1048573L) * 2654435761L + r * 40503L + x * 9973L)
+        % 251L).toInt + jitter).toByte)
   }
 
   /** "GV01" grayscale video, 8×6 px, 4 fps, 8 + (id % 8) frames;
     * pixel (frame f, col x, row y) = (id·7 + f·13 + x·3 + y·5)
     * mod 251 — every sampled frame's mean luma has a closed integer
     * form the oracle recomputes from ranges. */
-  def videoBytes(id: Long): Array[Byte] = {
-    val w = 8; val h = 6
-    val nf = 8 + (id % 8).toInt
-    val buf = ByteBuffer.allocate(12 + w * h * nf)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    buf.put("GV01".getBytes("US-ASCII"))
-    buf.putShort(w.toShort).putShort(h.toShort)
-    buf.putShort(4.toShort).putShort(nf.toShort)
-    var f = 0
-    while (f < nf) {
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          buf.put(((id * 7 + f * 13 + x * 3 + y * 5) % 251).toByte)
-          x += 1
-        }
-        y += 1
-      }
-      f += 1
-    }
-    buf.array()
-  }
+  def videoBytes(id: Long): Array[Byte] =
+    gv01(8 + (id % 8).toInt)((f, x, y) =>
+      ((id * 7 + f * 13 + x * 3 + y * 5) % 251).toByte)
 
   /** Planted NEAR-dup video family — [[bmpNearBytes]]'s GV01 sibling:
     * ids in the same group of `grp` render the SAME pseudo-random
@@ -612,29 +568,9 @@ object MmSynth {
   def videoNearBytes(id: Long, grp: Int = 5): Array[Byte] = {
     val base = id - id % grp
     val jitter = (id % grp).toInt
-    val w = 8; val h = 6
-    val nf = 8 + (base % 8).toInt
-    val buf = ByteBuffer.allocate(12 + w * h * nf)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    buf.put("GV01".getBytes("US-ASCII"))
-    buf.putShort(w.toShort).putShort(h.toShort)
-    buf.putShort(4.toShort).putShort(nf.toShort)
-    var f = 0
-    while (f < nf) {
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val v = (((base % 1048573L) * 2654435761L + f * 40503L +
-            x * 9973L + y * 7919L) % 251L).toInt + jitter
-          buf.put(v.toByte)
-          x += 1
-        }
-        y += 1
-      }
-      f += 1
-    }
-    buf.array()
+    gv01(8 + (base % 8).toInt)((f, x, y) =>
+      ((((base % 1048573L) * 2654435761L + f * 40503L +
+        x * 9973L + y * 7919L) % 251L).toInt + jitter).toByte)
   }
 }
 
@@ -644,6 +580,31 @@ object MmSynth {
   * fingerprints.
   */
 object MultimodalOps {
+
+  /** The corpus doc ids every multimodal entry synthesizes a payload
+    * for, spread so a narrow single-file corpus never decodes on one
+    * core. */
+  private def docIds(s: SparkSession, d: String): Dataset[Long] = {
+    import s.implicits._
+    Tables.spread(Tables.documents(s, d).select(col("doc_id"))).as[Long]
+  }
+
+  /** The near-dup family tail of the perceptual dedup faces: sign each
+    * document's payload (`sign`; None drops it), count carriers per
+    * fingerprint in column `key`, keep fingerprints with ≥ 2 and join
+    * them back to their members: (key, n_docs, doc_id). */
+  private def nearDupFamilies(s: SparkSession, d: String, key: String)(
+      sign: Long => Option[Long]): DataFrame = {
+    import s.implicits._
+    val hashed = docIds(s, d).flatMap(id => sign(id).map(hv => (id, hv)))
+      .toDF("doc_id", key)
+    val fams = hashed.groupBy(col(key))
+      .agg(count(lit(1)).as("n_docs"))
+      .filter(col("n_docs") >= 2)
+    hashed.join(fams, Seq(key))
+      .select(col(key), col("n_docs"), col("doc_id"))
+      .orderBy(col(key), col("doc_id"))
+  }
 
   /** The registry's multimodal entry: REAL codec work end to end.
     * Each document row materializes a byte-level media payload
@@ -663,9 +624,7 @@ object MultimodalOps {
     * single-file corpus from decoding on one core. */
   def extractReal(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ids = Tables.spread(Tables.documents(s, d).select(col("doc_id")))
-      .as[Long]
-    ids.flatMap { id =>
+    docIds(s, d).flatMap { id =>
       if (id % 2 == 0)
         WavCodec.decode(id, MmSynth.wavBytes(id)).map(f =>
           (id, "wav", f.channels, f.bits_per_sample, f.n_frames,
@@ -703,9 +662,7 @@ object MultimodalOps {
     val minRms = 0.55
     val minMeanG = 128.0
     import s.implicits._
-    val ids = Tables.spread(Tables.documents(s, d).select(col("doc_id")))
-      .as[Long]
-    ids.flatMap { id =>
+    docIds(s, d).flatMap { id =>
       if (id % 2 == 0)
         WavCodec.clip(MmSynth.wavBytes(id), 2L, 6L)
           .flatMap(cb => WavCodec.decode(id, cb))
@@ -745,9 +702,7 @@ object MultimodalOps {
   def videoSample(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val ids = Tables.spread(Tables.documents(s, d).select(col("doc_id")))
-      .as[Long]
-    val frames = ids.flatMap { id =>
+    val frames = docIds(s, d).flatMap { id =>
       VideoCodec.sampleFrames(MmSynth.videoBytes(id), frameStride).toSeq
         .flatMap { case (nf, fs) =>
           fs.map { case (f, m) => (id, nf, f, m) } }
@@ -805,20 +760,9 @@ object MultimodalOps {
     * corpus size. Because synthesis and sampling arithmetic are pure
     * closed-form integers, the WHOLE pipeline — codec included — is
     * DuckDB-oracled (the mm_extract precedent). */
-  def phashNearDup(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val ids = Tables.spread(Tables.documents(s, d).select(col("doc_id")))
-      .as[Long]
-    val hashed = ids.flatMap { id =>
-      BmpCodec.ahash(MmSynth.bmpNearBytes(id), 4, 4).map(hv => (id, hv))
-    }.toDF("doc_id", "phash")
-    val fams = hashed.groupBy(col("phash"))
-      .agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") >= 2)
-    hashed.join(fams, Seq("phash"))
-      .select(col("phash"), col("n_docs"), col("doc_id"))
-      .orderBy(col("phash"), col("doc_id"))
-  }
+  def phashNearDup(s: SparkSession, d: String): DataFrame =
+    nearDupFamilies(s, d, "phash")(id =>
+      BmpCodec.ahash(MmSynth.bmpNearBytes(id), 4, 4))
 
   /** Perceptual AUDIO near-dup detection — [[phashNearDup]]'s WAV
     * sibling: volume-changed re-encodes of the same take (every
@@ -831,20 +775,9 @@ object MultimodalOps {
     * the image face: row-local synth + hash, one fixed-width-key
     * count, one AQE-sized equi-join. Closed-form synth + pure integer
     * quantization ⇒ the whole pipeline is DuckDB-oracled. */
-  def audioFpNearDup(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val ids = Tables.spread(Tables.documents(s, d).select(col("doc_id")))
-      .as[Long]
-    val hashed = ids.flatMap { id =>
-      WavCodec.envHash(MmSynth.wavNearBytes(id)).map(hv => (id, hv))
-    }.toDF("doc_id", "fp")
-    val fams = hashed.groupBy(col("fp"))
-      .agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") >= 2)
-    hashed.join(fams, Seq("fp"))
-      .select(col("fp"), col("n_docs"), col("doc_id"))
-      .orderBy(col("fp"), col("doc_id"))
-  }
+  def audioFpNearDup(s: SparkSession, d: String): DataFrame =
+    nearDupFamilies(s, d, "fp")(id =>
+      WavCodec.envHash(MmSynth.wavNearBytes(id)))
 
   /** Perceptual VIDEO near-dup detection — the GV01 member completing
     * the multimodal dedup trio ([[phashNearDup]] images,
@@ -862,19 +795,7 @@ object MultimodalOps {
     * equi-join back — the dedup_exact posture at any corpus size.
     * Closed-form synth + integer luma deltas + standard md5 ⇒ the
     * whole pipeline, codec included, is DuckDB-oracled. */
-  def videoFpNearDup(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val ids = Tables.spread(Tables.documents(s, d).select(col("doc_id")))
-      .as[Long]
-    val hashed = ids.flatMap { id =>
-      VideoCodec.lumaSeqFp(MmSynth.videoNearBytes(id), frameStride)
-        .map(hv => (id, hv))
-    }.toDF("doc_id", "fp")
-    val fams = hashed.groupBy(col("fp"))
-      .agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") >= 2)
-    hashed.join(fams, Seq("fp"))
-      .select(col("fp"), col("n_docs"), col("doc_id"))
-      .orderBy(col("fp"), col("doc_id"))
-  }
+  def videoFpNearDup(s: SparkSession, d: String): DataFrame =
+    nearDupFamilies(s, d, "fp")(id =>
+      VideoCodec.lumaSeqFp(MmSynth.videoNearBytes(id), frameStride))
 }

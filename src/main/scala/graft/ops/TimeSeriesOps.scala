@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * driver round-trip.
   */
 object TimeSeriesOps {
-  import graft.streaming.Versions.{epochs, keepVersions}
+  import graft.streaming.Versions.{epochs, retainedSql}
 
   /** Daily gap-filled resample of orders counts (reference cell 10:
     * epoch-truncate → reference range → left join → zero-fill). */
@@ -589,7 +589,7 @@ object TimeSeriesOps {
          |    ((row_number() OVER (ORDER BY day) - 1) * $epochs)
          |      // (count(*) OVER ()) AS epoch
          |  FROM (SELECT DISTINCT day FROM daily)),
-         |v AS (SELECT unnest(range(${epochs - keepVersions}, $epochs))
+         |v AS (SELECT unnest($retainedSql)
          |        AS version)
          |SELECT CAST(version AS BIGINT) AS version, event_type, day, cnt,
          |  round(CASE WHEN sd = 0 THEN 0.0 ELSE (cnt - mean) / sd END, 4)
@@ -650,7 +650,7 @@ object TimeSeriesOps {
          |    ((row_number() OVER (ORDER BY day) - 1) * $epochs)
          |      // (count(*) OVER ()) AS epoch
          |  FROM (SELECT DISTINCT day FROM daily)),
-         |v AS (SELECT unnest(range(${epochs - keepVersions}, $epochs))
+         |v AS (SELECT unnest($retainedSql)
          |        AS version)
          |SELECT CAST(version AS BIGINT) AS version, g.event_type, g.day,
          |  cnt, round(pre_mean, 4) AS pre_mean,
@@ -710,7 +710,7 @@ object TimeSeriesOps {
          |    ((row_number() OVER (ORDER BY day) - 1) * $epochs)
          |      // (count(*) OVER ()) AS epoch
          |  FROM (SELECT DISTINCT day FROM daily)),
-         |v AS (SELECT unnest(range(${epochs - keepVersions}, $epochs))
+         |v AS (SELECT unnest($retainedSql)
          |        AS version)
          |SELECT CAST(version AS BIGINT) AS version, event_type, r.day,
          |  cnt, ewma

@@ -212,8 +212,7 @@ object Sources {
     * audit is materialized first). */
   def prunedChecksum(s: SparkSession, d: String): DataFrame = {
     val numFiles = 8
-    val tmp = graft.TempDirs.create("graft_layout_gate_")
-    try {
+    graft.TempDirs.collected("graft_layout_gate_") { tmp =>
       val path = s"$tmp/li_sorted"
       val staged = graft.Tables.lineitem(s, d).select(
         col("l_orderkey"), col("l_linenumber"),
@@ -226,15 +225,12 @@ object Sources {
         .filter(col("q100") >= loQ && col("q100") <= hiQ)
       val cols = Seq(col("l_orderkey"), col("l_linenumber"),
         col("q100"), col("epm"))
-      val audit = graft.etl.Mapping
+      graft.etl.Mapping
         .tableChecksum(fullFiltered, cols, "full_filtered")
         .unionByName(graft.etl.Mapping
           .tableChecksum(pruned, cols, "pruned_read"))
         .orderBy(col("tbl"))
-      val rows = audit.collect() // 2 rows by construction
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.toSeq.asJava, audit.schema)
-    } finally graft.TempDirs.delete(tmp)
+    }
   }
 
   /** DuckDB oracle of [[prunedChecksum]]: ONE raw-table recompute of

@@ -66,14 +66,14 @@ object ChangeStreams {
         keys = Seq("user_id"), opCol = "op", ord = Seq("event_id"))
         .localCheckpoint(false)
     }.drop(1)
-    (epochs - keepVersions until epochs).map { k =>
+    Versions.stack(epochs - keepVersions until epochs) { k =>
       snaps(k).agg(
           count(lit(1)).as("n_rows"),
           sum(col("v_micro")).as("__sv"),
           max(col("user_id")).as("max_key"))
         .select(lit(k.toLong).as("version"), col("n_rows"),
           round(col("__sv") / 10000.0, 4).as("sum_v"), col("max_key"))
-    }.reduce(_ unionAll _).orderBy(col("version"))
+    }.orderBy(col("version"))
   }
 }
 
@@ -86,4 +86,15 @@ object ChangeStreams {
 private[graft] object Versions {
   val epochs = 5
   val keepVersions = 3
+
+  /** The retained versions, oldest first. */
+  val retained: Range = epochs - keepVersions until epochs
+
+  /** [[retained]] as a DuckDB table function, for the oracles. */
+  val retainedSql: String = s"range(${retained.start}, ${retained.end})"
+
+  /** One audit frame per version of `versions`, stacked in version
+    * order. */
+  def stack(versions: Seq[Int])(audit: Int => DataFrame): DataFrame =
+    versions.map(audit).reduce(_ unionAll _)
 }

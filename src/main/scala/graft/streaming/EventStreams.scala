@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * through that epoch.
   */
 object EventStreams {
-  import Versions.{epochs, keepVersions}
+  import Versions.{epochs, retained, retainedSql, stack}
   import graft.ops.Analytics.{attributionConvType, attributionTouchTypes,
     attributionWindowDays, funnelStageNames}
   import graft.ops.TimeSeriesOps.{changepointMinScore, changepointWindow}
@@ -232,15 +232,15 @@ object EventStreams {
             col("tus") >= col("__pt.tus"))
           .groupBy(col("user_id")).agg(min(tup(i + 1)).as("__t"))
     }.map(_.localCheckpoint(false)) // every retained version counts each frame
-    (epochs - keepVersions until epochs).flatMap { k =>
+    stack(retained) { k =>
       funnelStageNames.zip(reached).zipWithIndex.map { case ((stage, users), i) =>
         users.filter(col("__t.epoch") <= k)
           .agg(count(lit(1)).as("n_users"))
           .select(lit(k.toLong).as("version"),
             lit(i + 1).as("stage"), lit(stage).as("event_type"),
             col("n_users"))
-      }
-    }.reduce(_ unionAll _).orderBy(col("version"), col("stage"))
+      }.reduce(_ unionAll _)
+    }.orderBy(col("version"), col("stage"))
   }
 
   /** DuckDB replica of [[funnelVersionsBatch]], generated from the
@@ -275,7 +275,7 @@ object EventStreams {
        |    epoch_us(CAST(ts AS TIMESTAMP_US)) AS tus, event_id
        |  FROM events WHERE event_type IN ($inList)),
        |${(first +: rest).mkString(",\n")},
-       |v AS (SELECT unnest(range(${epochs - keepVersions}, $epochs))
+       |v AS (SELECT unnest($retainedSql)
        |      AS version)
        |SELECT CAST(version AS BIGINT) AS version, stage, event_type,
        |  n_users
@@ -315,24 +315,11 @@ object EventStreams {
         (col("event_id") % epochs).as("epoch"),
         unix_micros(col("ts")).as("tus"), col("event_type"),
         when(col("event_type") === attributionConvType, 1).otherwise(0).as("tag"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("epoch"), col("tus"), col("tag"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val conv = tagged
-      .withColumn("touch_ts",
-        last(when(col("tag") === 0, col("tus")), ignoreNulls = true).over(w))
-      .withColumn("touch_type",
-        last(when(col("tag") === 0, col("event_type")), ignoreNulls = true)
-          .over(w))
-      .filter(col("tag") === 1)
-      .select(col("epoch"),
-        when(col("touch_ts").isNotNull &&
-            col("tus") - col("touch_ts") <=
-              lit(attributionWindowDays * 86400000000L),
-          col("touch_type")).otherwise(lit("none")).as("touch_type"))
-      // every retained version aggregates this one pass
+    // every retained version aggregates this one pass
+    val conv = graft.ops.Analytics
+      .lastTouchCredit(tagged, Seq(col("epoch")), attributionWindowDays)
       .localCheckpoint(false)
-    (epochs - keepVersions until epochs).map { k =>
+    stack(retained) { k =>
       val cnt = conv.filter(col("epoch") <= k)
         .groupBy(col("touch_type")).agg(count(lit(1)).as("n_purchases"))
       val tot = cnt.agg(sum(col("n_purchases")).as("tot"))
@@ -341,7 +328,7 @@ object EventStreams {
           col("n_purchases"),
           graft.ops.ExactRatio.r4(col("n_purchases"), col("tot"))
             .as("share"))
-    }.reduce(_ unionAll _).orderBy(col("version"), col("touch_type"))
+    }.orderBy(col("version"), col("touch_type"))
   }
 
   // ---- daily monitors, versioned ----------------------------------------
@@ -380,12 +367,11 @@ object EventStreams {
     val scored = graft.ops.TimeSeriesOps.anomalyZScore(s, d)
       .join(broadcast(dayEpochs(days)), Seq("day"))
       .localCheckpoint(false) // every retained version filters this one pass
-    (epochs - keepVersions until epochs).map { k =>
+    stack(retained) { k =>
       scored.filter(col("epoch") <= k)
         .select(lit(k.toLong).as("version"), col("event_type"),
           col("day"), col("cnt"), col("z"), col("is_anomaly"))
-    }.reduce(_ unionAll _)
-      .orderBy(col("version"), col("event_type"), col("day"))
+    }.orderBy(col("version"), col("event_type"), col("day"))
   }
 
   /** Versioned audit of a daily changepoint monitor
@@ -413,13 +399,12 @@ object EventStreams {
       .join(trig, Seq("event_type", "day"))
       .join(broadcast(ep), Seq("__trigger"))
       .localCheckpoint(false) // every retained version filters this one pass
-    (epochs - keepVersions until epochs).map { k =>
+    stack(retained) { k =>
       scored.filter(col("epoch") <= k)
         .select(lit(k.toLong).as("version"), col("event_type"),
           col("day"), col("cnt"), col("pre_mean"), col("post_mean"),
           col("score"), col("is_change"))
-    }.reduce(_ unionAll _)
-      .orderBy(col("version"), col("event_type"), col("day"))
+    }.orderBy(col("version"), col("event_type"), col("day"))
   }
 
   /** Versioned audit of a daily EWMA smoother
@@ -435,12 +420,11 @@ object EventStreams {
     val scored = graft.ops.TimeSeriesOps.ewma(s, d)
       .join(broadcast(dayEpochs(days)), Seq("day"))
       .localCheckpoint(false) // every retained version filters this one pass
-    (epochs - keepVersions until epochs).map { k =>
+    stack(retained) { k =>
       scored.filter(col("epoch") <= k)
         .select(lit(k.toLong).as("version"), col("event_type"),
           col("day"), col("cnt"), col("ewma"))
-    }.reduce(_ unionAll _)
-      .orderBy(col("version"), col("event_type"), col("day"))
+    }.orderBy(col("version"), col("event_type"), col("day"))
   }
 
   /** The conformal band's seasonal lag (days), miscoverage (%),
@@ -507,13 +491,12 @@ object EventStreams {
     val scored = conformalMonitorBatch(s, d)
       .join(broadcast(dayEpochs(days)), Seq("day"))
       .localCheckpoint(false) // every retained version filters this one pass
-    (epochs - keepVersions until epochs).map { k =>
+    stack(retained) { k =>
       scored.filter(col("epoch") <= k)
         .select(lit(k.toLong).as("version"), col("event_type"),
           col("day"), col("cnt"), col("pred"), col("lo"), col("hi"),
           col("covered"), col("n_cal"))
-    }.reduce(_ unionAll _)
-      .orderBy(col("version"), col("event_type"), col("day"))
+    }.orderBy(col("version"), col("event_type"), col("day"))
   }
 
   /** The rolling-band CTE chain both conformal oracles share:
@@ -560,7 +543,7 @@ object EventStreams {
          |    ((row_number() OVER (ORDER BY day) - 1) * $epochs)
          |      // (count(*) OVER ()) AS epoch
          |  FROM (SELECT DISTINCT day FROM daily)),
-         |v AS (SELECT unnest(range(${epochs - keepVersions}, $epochs))
+         |v AS (SELECT unnest($retainedSql)
          |        AS version)
          |SELECT CAST(version AS BIGINT) AS version, event_type, e.day,
          |  cnt, pred, pred - qhat AS lo, pred + qhat AS hi,

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * merge by register-wise max (`hll_union_agg`).
   */
 object SketchStreams {
-  import Versions.{epochs, keepVersions}
+  import Versions.{epochs, retained, stack}
 
   /** The md5 bucket hash — identical to TextOps.countMin's, so the
     * audited grids are the batch `text_count_min` grids. */
@@ -111,7 +111,7 @@ object SketchStreams {
         .select(explode(col("sk")).as(Seq("term", "est")))
       mgMerge(base, part, capacity).localCheckpoint(true)
     }.drop(1)
-    (epochs - keepVersions until epochs).map { v =>
+    stack(retained) { v =>
       val pc = counts.filter(col("epoch") <= v)
       val totals = pc.agg(sum(col("n")).as("__total"))
       val bound = expr(s"__total div $capacity")
@@ -126,8 +126,7 @@ object SketchStreams {
             .as("est_lower_ok"),
           (col("est").isNull || col("true_n") - col("est") <= bound)
             .as("est_within_bound"))
-    }.reduce(_ unionAll _)
-      .orderBy(col("version"), col("true_n").desc, col("term"))
+    }.orderBy(col("version"), col("true_n").desc, col("term"))
   }
 
   /** The oracled audit of a Count-Min fold's retained versions. CM
@@ -154,7 +153,7 @@ object SketchStreams {
       .groupBy(col("epoch"), col("i"), col("bucket"))
       .agg(sum(col("n")).as("cnt"))
       .localCheckpoint(false)
-    (epochs - keepVersions until epochs).map { v =>
+    stack(retained) { v =>
       val grid = cells.filter(col("epoch") <= v)
         .groupBy(col("i"), col("bucket")).agg(sum(col("cnt")).as("cnt"))
       val census = grid.agg(count(lit(1)).as("n_cells"),
@@ -171,8 +170,7 @@ object SketchStreams {
       probe.crossJoin(broadcast(census))
         .select(lit(v.toLong).as("version"), col("term"), col("true_n"),
           col("est_n"), col("n_cells"), col("grid_total"))
-    }.reduce(_ unionAll _)
-      .orderBy(col("version"), col("true_n").desc, col("term"))
+    }.orderBy(col("version"), col("true_n").desc, col("term"))
   }
 
   /** The oracled audit of a PSI histogram fold's retained versions
@@ -194,37 +192,22 @@ object SketchStreams {
     val staged = graft.Tables.events(s, d).select(
       (col("event_id") % epochs).as("epoch"),
       round(col("value"), 4).cast("double").as("x"))
-    val dec = staged.filter(col("epoch") === 0)
-      .agg(expr(
-        "percentile(x, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))")
-        .as("ts"))
-      .select((1 to 9).map(i =>
-        round(element_at(col("ts"), i), 4).as(s"t$i")): _*)
-    val bin = (1 to 9).map(k =>
-      (col("x") > col(s"t$k")).cast("long")).reduce(_ + _)
-    val counts = staged.crossJoin(broadcast(dec))
-      .withColumn("bin", bin)
+    val counts = graft.ops.Analytics.withPsiBin(staged, col("epoch") === 0)
       .groupBy(col("epoch"), col("bin"))
       .agg(count(lit(1)).as("n"))
       .localCheckpoint(false)
-    val bins = s.range(10).select(col("id").as("bin"))
-    (epochs - keepVersions until epochs).map { v =>
+    stack(retained) { v =>
       val cnt = counts.filter(col("epoch") <= v)
         .groupBy(col("bin"))
         .agg(sum(when(col("epoch") === 0, col("n")).otherwise(0L))
           .as("n_ref"),
           sum(when(col("epoch") > 0, col("n")).otherwise(0L))
             .as("n_cur"))
-      val full = bins.join(cnt, Seq("bin"), "left")
-        .select(col("bin"),
-          coalesce(col("n_ref"), lit(0L)).as("n_ref"),
-          coalesce(col("n_cur"), lit(0L)).as("n_cur"))
-      graft.ops.Analytics.psiFromCounts(full)
+      graft.ops.Analytics.psiFromCounts(cnt)
         .select(lit(v.toLong).as("version") +:
           Seq("bin", "n_ref", "n_cur", "p_ref", "p_cur",
             "psi_term", "psi", "drift").map(col): _*)
-    }.reduce(_ unionAll _)
-      .orderBy(col("version"), col("bin"))
+    }.orderBy(col("version"), col("bin"))
   }
 
   /** The oracled audit of an HLL fold's retained versions: per
@@ -260,7 +243,7 @@ object SketchStreams {
       .groupBy(col("event_type"), col("fe"))
       .agg(count(lit(1)).as("nu"))
       .localCheckpoint(false)
-    (epochs - keepVersions until epochs).map { v =>
+    stack(retained) { v =>
       val folded = skPerEpoch.filter(col("epoch") <= v)
         .groupBy(col("event_type"))
         .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("__est"))
@@ -273,7 +256,6 @@ object SketchStreams {
           (abs(col("__est") - col("exact_users")).cast("double") <=
             greatest(lit(5 * rsd) * col("exact_users"), lit(5.0)))
             .as("within_tol"))
-    }.reduce(_ unionAll _)
-      .orderBy(col("version"), col("event_type"))
+    }.orderBy(col("version"), col("event_type"))
   }
 }

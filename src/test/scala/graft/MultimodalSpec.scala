@@ -159,8 +159,9 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("BmpCodec clamps truncation and survives adversarial size fields") {
-    // truncated mid-row: only complete rows count
-    val img = bmpBytes(2, 3, (_, _) => (50, 60, 70))
+    // truncated mid-row: only complete rows count. Green varies by row,
+    // so a row read past the clamp changes a hash or a resized pixel.
+    val img = bmpBytes(2, 3, (_, y) => (50, 60 + 40 * y, 70))
     val stride = 8 // (2*3+3)/4*4
     val truncated = img.dropRight(stride + 2) // kills row 3 and part of row 2
     assert(BmpCodec.decode(1L, truncated).get.height === 1)
@@ -190,6 +191,22 @@ class MultimodalSpec extends SparkSpec {
     java.nio.ByteBuffer.wrap(pal).order(java.nio.ByteOrder.LITTLE_ENDIAN)
       .putShort(28, 8.toShort)
     assert(BmpCodec.decode(6L, pal) === None)
+    // ahash and resize share decode's header parser: each rejects
+    // exactly what decode rejects and samples only the rows decode
+    // counts. Resizing to 2 columns × 2·rows repeats each present row
+    // twice, and the hash of that grid equals the hash of the payload.
+    Seq(img, truncated, hugeWidth, topDown, minH, badOff, pal).foreach { v =>
+      val rows = BmpCodec.decode(0L, v).map(_.height)
+      assert(BmpCodec.ahash(v, 4, 4).isDefined === rows.isDefined)
+      assert(BmpCodec.resize(v, 2, 2).isDefined === rows.isDefined)
+      rows.foreach { r =>
+        val out = BmpCodec.resize(v, 2, 2 * r).get
+        for (y <- 0 until 2 * r)
+          assert(out.slice(54 + y * stride, 54 + y * stride + 6).toSeq ===
+            v.slice(54 + y / 2 * stride, 54 + y / 2 * stride + 6).toSeq)
+        assert(BmpCodec.ahash(v, 2, 2 * r) === BmpCodec.ahash(out, 2, 2 * r))
+      }
+    }
   }
 
   test("BmpCodec.resize: nearest-neighbor picks exact pixels, codec-closed") {
