@@ -5,13 +5,13 @@ package graft
 object Bench {
   /** Cold storage state for a timed entry: drop the SQL cache AND
     * every persistent RDD block left behind by earlier entries.
-    * Operators `localCheckpoint` intermediates and the returned plan
-    * cannot unpersist the blocks that back it;
-    * `clearCache()` alone only drops catalog-tracked Dataset caches,
-    * so checkpoint RDD blocks accumulated across a ~280-entry run and
-    * later heavy entries paid earlier entries' eviction/GC churn —
-    * r13's in-run graph_triangles read 2.9–5.0× its pin while the
-    * same entry timed alone read AT pin. BLOCKING unpersist: the wait
+    * Operators reuse intermediates through `graftbridge.Reuse`
+    * (`shared`, `roundCut`, `barrier`: all local checkpoints), whose
+    * blocks the returned plan cannot unpersist; `clearCache()` only
+    * drops catalog-tracked Dataset caches, so checkpoint blocks piled
+    * up across a ~280-entry run and later heavy entries paid earlier
+    * entries' eviction/GC churn (r13's in-run graph_triangles read
+    * 2.9–5.0× its pin). BLOCKING unpersist: the wait
     * lands here, BEFORE the caller starts its timer, so block
     * removal and its GC churn never run concurrently with the timed
     * query — an async removal would reintroduce exactly the

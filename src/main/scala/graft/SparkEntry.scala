@@ -1302,8 +1302,6 @@ object SparkEntry {
       graft.streaming.SketchStreams.psiVersionsBatch(s, d)),
   )
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
   /** The kNN classifier's vote pipeline WITHOUT the final ORDER BY —
     * shared verbatim by the ml_knn_classify oracle and (as a nested
     * CTE) the ml_eval_classification oracle, so the two can't drift:
@@ -1326,6 +1324,8 @@ object SparkEntry {
       |SELECT q_id, true_label, label AS pred_label, votes
       |FROM best WHERE vr = 1""".stripMargin
 
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = Map(
     "q1_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,

@@ -78,15 +78,6 @@ object Mapping {
   def dedupRows(df: DataFrame, cols: Seq[String]): DataFrame =
     df.select(cols.map(col): _*).distinct()
 
-  /** Data-quality expectations — the validation gate an ETL job runs
-    * before publishing a dataset: named boolean rules evaluated over
-    * every row in ONE aggregate pass (each rule a conditional count,
-    * map-side combinable — no per-rule scans, no driver loop),
-    * reported as (rule, n_violations, violation_rate). A row
-    * violates a rule when the predicate is NOT satisfied; null
-    * predicate results count as violations (an unknown is not a
-    * pass), which is what makes not-null rules expressible as plain
-    * predicates. */
   /** SCD2 (slowly-changing-dimension type 2) reconstruction from a
     * change log: per key, order the records, COLLAPSE consecutive
     * records whose tracked attributes did not change (no-op writes —
@@ -231,6 +222,15 @@ object Mapping {
       .drop("__fill")
   }
 
+  /** Data-quality expectations — the validation gate an ETL job runs
+    * before publishing a dataset: named boolean rules evaluated over
+    * every row in ONE aggregate pass (each rule a conditional count,
+    * map-side combinable — no per-rule scans, no driver loop),
+    * reported as (rule, n_violations, violation_rate). A row
+    * violates a rule when the predicate is NOT satisfied; null
+    * predicate results count as violations (an unknown is not a
+    * pass), which is what makes not-null rules expressible as plain
+    * predicates. */
   def expectations(df: DataFrame, rules: Seq[(String, Column)]): DataFrame = {
     require(rules.nonEmpty, "expectations needs at least one rule")
     // aggregates carry POSITIONAL aliases and rule names enter only
@@ -412,20 +412,6 @@ object Mapping {
       .orderBy(col("label"))
   }
 
-  /** Nested-JSON flattening — the array face of the reference's
-    * ResolveChoice/struct handling (2019reinvent_green.py:33 resolves
-    * scalar ambiguity; real event payloads carry ARRAYS of structs,
-    * and training pipelines need them as flat rows): parse `jsonCol`
-    * against a declared DDL schema, lift the scalar fields, and
-    * posexplode `arrayField` into one output row per element with the
-    * element's struct fields flattened alongside an `item_idx`.
-    *
-    * Row-local end to end — parse, lift, and explode all ride the
-    * scan (zero shuffles at any scale); output volume is the true
-    * element count, the same growth any downstream shuffle would pay
-    * anyway. Malformed JSON parses to null (PERMISSIVE) and
-    * posexplode drops the row — a corrupt line costs its row, never
-    * the scan. */
   /** k-anonymity GENERALIZATION — the ACTION the q_kanonymity audit
     * drives (the audit counts violating classes; this REPAIRS them):
     * coarsen the numeric quasi-identifier up a fixed generalization
@@ -479,6 +465,20 @@ object Mapping {
       .orderBy(col("cat"), col("bucket"))
   }
 
+  /** Nested-JSON flattening — the array face of the reference's
+    * ResolveChoice/struct handling (2019reinvent_green.py:33 resolves
+    * scalar ambiguity; real event payloads carry ARRAYS of structs,
+    * and training pipelines need them as flat rows): parse `jsonCol`
+    * against a declared DDL schema, lift the scalar fields, and
+    * posexplode `arrayField` into one output row per element with the
+    * element's struct fields flattened alongside an `item_idx`.
+    *
+    * Row-local end to end — parse, lift, and explode all ride the
+    * scan (zero shuffles at any scale); output volume is the true
+    * element count, the same growth any downstream shuffle would pay
+    * anyway. Malformed JSON parses to null (PERMISSIVE) and
+    * posexplode drops the row — a corrupt line costs its row, never
+    * the scan. */
   def flattenJson(df: DataFrame, jsonCol: String, ddl: String,
                   arrayField: String): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, StructType}

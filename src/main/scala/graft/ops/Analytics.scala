@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Reuse
 
 /** Batch SQL-analytics surface — the capabilities the reference
   * exercises through Athena in
@@ -327,7 +328,7 @@ object Analytics {
     val lgK = 14
     val rsd = 1.04 / math.sqrt(math.pow(2.0, lgK.toDouble))
     val u = ev.select(col("event_type"), col("user_id")).distinct()
-      .localCheckpoint(false) // feeds per-type agg + the overlap join
+      .transform(Reuse.shared) // feeds per-type agg + the overlap join
     val perType = u.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         hll_sketch_agg(col("user_id"), lit(lgK)).as("sk"))
@@ -625,6 +626,14 @@ object Analytics {
       .orderBy(col("event_type"), col("bin"))
   }
 
+  /** SQL-text quoting for builder-authored selectExpr fragments:
+    * column names with spaces/dots/hyphens parse only when backtick-
+    * quoted, and a quote inside a name must not corrupt the string
+    * literal the stacked profile carries it in. */
+  private def bqId(n: String): String = "`" + n.replace("`", "``") + "`"
+  private def sqLit(n: String): String =
+    "'" + n.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
   /** Single-pass column profile — the crawler's "discover stats" step:
     * row count, null count, and distinct count per column, one scan
     * for all columns (the metrics stack into long format after the
@@ -636,14 +645,6 @@ object Analytics {
     * the one piece of this surface that does NOT survive 100 TB
     * column cardinalities — while the sketches are fixed-size,
     * mergeable, and keep the whole profile map-side-combinable. */
-  /** SQL-text quoting for builder-authored selectExpr fragments:
-    * column names with spaces/dots/hyphens parse only when backtick-
-    * quoted, and a quote inside a name must not corrupt the string
-    * literal the stacked profile carries it in. */
-  private def bqId(n: String): String = "`" + n.replace("`", "``") + "`"
-  private def sqLit(n: String): String =
-    "'" + n.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
   def profile(df: DataFrame, cols: Seq[String],
               approx: Boolean = false): DataFrame = {
     val aggs = cols.flatMap { c => Seq(
@@ -1098,28 +1099,6 @@ object Analytics {
         (sea * sea / (col("n_a") - 1) + seb * seb / (col("n_b") - 1)), 4).as("dof"))
   }
 
-  /** CUPED variance reduction — the industry-standard upgrade to the
-    * plain A/B compare ([[welchTTest]] decides significance; CUPED
-    * shrinks the variance that decision fights): each user's
-    * PRE-period mean is a covariate, θ = cov(x,y)/var(x) is fit
-    * across users, and the post-period metric is adjusted to
-    * y − θ·(x − x̄) — removing the between-user baseline variance
-    * that both arms share. Reported per deterministic md5 arm
-    * (the [[SampleOps]] bucketing, so assignment is reproducible and
-    * engine-portable), with the global θ and the achieved variance
-    * reduction beside the raw/adjusted means.
-    *
-    * Shape: the pre/post boundary is the exact integer midpoint of
-    * the epoch-day range (one scalar agg, broadcast); per-user
-    * pre/post means come from ONE conditional aggregation keyed on
-    * user (4dp DECIMAL sums — order-independent), θ's moments from
-    * one user-cardinality aggregate of exact decimals, and the
-    * adjusted metric is a row-local expression under broadcast
-    * scalars — three narrow aggregations total, nothing wide ever
-    * shuffles twice. θ and x̄ round to 4dp BEFORE the adjustment and
-    * each y_adj re-quantizes to DECIMAL before the final sums (the
-    * rounded-metric rule: identical doubles in, identical doubles
-    * out, regardless of aggregation order). */
   /** Sample-ratio-mismatch check — the integrity gate that runs
     * BEFORE any A/B readout ([[cuped]], [[welchTTest]]) is believed:
     * if the realized arm split deviates from the designed 50/50
@@ -1149,6 +1128,28 @@ object Analytics {
           .cast("double") / (col("n_a") + col("n_b")), 4).as("chi2"))
       .withColumn("srm", col("chi2") > 3.8415)
 
+  /** CUPED variance reduction — the industry-standard upgrade to the
+    * plain A/B compare ([[welchTTest]] decides significance; CUPED
+    * shrinks the variance that decision fights): each user's
+    * PRE-period mean is a covariate, θ = cov(x,y)/var(x) is fit
+    * across users, and the post-period metric is adjusted to
+    * y − θ·(x − x̄) — removing the between-user baseline variance
+    * that both arms share. Reported per deterministic md5 arm
+    * (the [[SampleOps]] bucketing, so assignment is reproducible and
+    * engine-portable), with the global θ and the achieved variance
+    * reduction beside the raw/adjusted means.
+    *
+    * Shape: the pre/post boundary is the exact integer midpoint of
+    * the epoch-day range (one scalar agg, broadcast); per-user
+    * pre/post means come from ONE conditional aggregation keyed on
+    * user (4dp DECIMAL sums — order-independent), θ's moments from
+    * one user-cardinality aggregate of exact decimals, and the
+    * adjusted metric is a row-local expression under broadcast
+    * scalars — three narrow aggregations total, nothing wide ever
+    * shuffles twice. θ and x̄ round to 4dp BEFORE the adjustment and
+    * each y_adj re-quantizes to DECIMAL before the final sums (the
+    * rounded-metric rule: identical doubles in, identical doubles
+    * out, regardless of aggregation order). */
   def cuped(s: SparkSession, d: String): DataFrame =
     cupedOn(Tables.events(s, d))
 
@@ -1187,7 +1188,7 @@ object Analytics {
           col("nx")).as("xm"),
         floor(expr("cast(sy * 10000 as bigint)").cast("double") /
           col("ny")).as("ym"))
-      .localCheckpoint(false) // feeds the θ fit AND the adjusted pass
+      .transform(Reuse.shared) // feeds the θ fit AND the adjusted pass
     val q4 = (c: Column) => floor(c * lit(10000.0)) / 10000.0
     val fit = perUser.agg(
       count(lit(1)).as("n"),
@@ -1246,7 +1247,7 @@ object Analytics {
     * row rank is the single-partition window this repo structurally
     * forbids, while distinct 4dp values ride the shared distributed
     * [[PrefixSum]] (range partition → local sums → broadcast offsets;
-    * one lazy local checkpoint per call). Average ranks for ties are
+    * one `Reuse.shared` frame per call). Average ranks for ties are
     * exact in HALF-RANK integer units (2·rank̄ = 2·cum_below + n + 1),
     * tie correction Σ(n³−n) likewise integer; sums go through
     * DECIMAL(38,0) so 100 TB row counts can't overflow; the
@@ -1369,7 +1370,7 @@ object Analytics {
     // frame is R×C-cell-sized, so the checkpoint is label-cardinality
     // bytes
     val cells = df.groupBy(col(a), col(b)).agg(count(lit(1)).as("o"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val rt = cells.groupBy(col(a)).agg(sum(col("o")).as("ra"))
     val ct = cells.groupBy(col(b)).agg(sum(col("o")).as("cb"))
     val tot = cells.agg(sum(col("o")).as("n"))
@@ -1407,11 +1408,8 @@ object Analytics {
           round(col("__mis").cast("double") /
             sqrt(col("__ha").cast("double") * col("__hb").cast("double")),
             4)).otherwise(lit(0.0)).as("nmi"))
-      // the result is ONE row: eager-checkpoint it so the returned
-      // plan no longer reaches the cells checkpoint, whose blocks are
-      // then reclaimed without waiting for the caller to drop the
-      // result
-      .localCheckpoint(true)
+      // ONE row: the returned plan then no longer reaches `cells`
+      .transform(Reuse.barrier)
     out
   }
 
@@ -1892,7 +1890,7 @@ object Analytics {
       col(sens).as("b"))
     val global = rows.groupBy(col("b")).agg(count(lit(1)).as("gn"))
     val tot = global.agg(sum(col("gn")).as("N"),
-      count(lit(1)).as("m")).localCheckpoint(false)
+      count(lit(1)).as("m")).transform(Reuse.shared)
     val classes = rows.groupBy(col("cls"), col("b"))
       .agg(count(lit(1)).as("cn"))
     val sizes = classes.groupBy(col("cls")).agg(sum(col("cn")).as("sz"))
@@ -2154,7 +2152,7 @@ object Analytics {
     // self-join shape (guide §2.4; see Baskets). The staged frame
     // feeds the basket count, item counts, and pair counts.
     val sized = Baskets.sets(pairs, maxBasket)
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val nBaskets = sized.agg(count(lit(1)).as("n_baskets"))
     val itemCounts = Baskets.members(sized)
       .groupBy(col("item")).agg(count(lit(1)).as("n_item"))
@@ -2275,7 +2273,7 @@ object Analytics {
       .select(col("user_id"), date_trunc(unit, col("ts")).as("m"))
       .distinct()
       // four consumers: first-month, marker, classify, churn
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val first = um.groupBy(col("user_id")).agg(min(col("m")).as("m0"))
     val marker = um.select(col("user_id"),
       (col("m") + expr(s"interval 1 $unit")).as("m"),
@@ -2550,7 +2548,7 @@ object Analytics {
     val per = per0.crossJoin(broadcast(mx))
       .select(col("c"), (col("mx") - col("last_day")).as("r_days"),
         col("freq"), col("m_micro"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val nCust = per.agg(count(lit(1)).as("n"))
     def rankOf(metric: String, as: String): DataFrame =
       PrefixSum.exclusive(per.select(col("c"), col(metric)),

@@ -3,6 +3,7 @@ package graft.ops
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Reuse
 
 /** End-to-end corpus curation — the composed filter chain a training
   * pipeline runs before tokenization, demonstrating that the
@@ -44,7 +45,7 @@ object CurateOps {
     // shingle join and the final anti join, and without the barrier
     // the whole quality+dedup chain re-derived per consumer (53
     // parquet scans / 126 exchanges in the r16 before-plan).
-    val keep = exactSurvivors(good).localCheckpoint(false)
+    val keep = Reuse.shared(exactSurvivors(good))
     val deduped = corpus.join(keep, Seq("doc_id"), "left_semi")
     val contaminated = DedupOps.decontaminate(deduped, reference, contamThreshold)
       .select(col("doc_id")).distinct()
@@ -84,24 +85,23 @@ object CurateOps {
       corpus.select(col("doc_id"), col("text")))
       .select(col("doc_id"), col("quality_flag"),
         col("n_tokens").cast("long").as("nt"))
-      .localCheckpoint(false) // doc-id-sized; every stage sum reads it
+      .transform(Reuse.shared) // doc-id-sized; every stage sum reads it
     // Each stage's SURVIVOR ID SET is checkpointed once and the next
     // stage's text frame re-attaches by semi join: without the
     // barriers the five stage aggregates re-derived the whole chain
     // up to their stage (quality gate ×5, dedup ×4, the heavy
     // decontamination shingle join ×2 — 91 parquet scans / 270
-    // exchanges in the r16 before-plan). The sets are doc-id-sized;
-    // localCheckpoint frees with the RDD reference.
+    // exchanges in the r16 before-plan). The sets are doc-id-sized.
     val s1ids = stats.filter(col("quality_flag") === "good")
       .select(col("doc_id"))
     val s1 = corpus.join(s1ids, Seq("doc_id"), "left_semi")
-    val s2ids = exactSurvivors(s1).localCheckpoint(false)
+    val s2ids = Reuse.shared(exactSurvivors(s1))
     val s2 = corpus.join(s2ids, Seq("doc_id"), "left_semi")
     val s3ids = s2ids.join(
       DedupOps.decontaminate(s2, reference, threshold)
         .select(col("doc_id")).distinct(),
       Seq("doc_id"), "left_anti")
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val s3 = corpus.join(s3ids, Seq("doc_id"), "left_semi")
     val s4 = tokenBudget(s3, budgetTokens).select(col("doc_id"))
     def stage(no: Int, name: String, ids: DataFrame): DataFrame =
@@ -166,12 +166,12 @@ object CurateOps {
     // once (the curateFunnel posture; 8 source scans before)
     val canon = withUrls.withColumn("canonical",
       TextOps.canonicalUrl(col("url")))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val firstPerPage = canon
       .groupBy(col("canonical")).agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
     val pages = canon.join(firstPerPage, Seq("doc_id"), "left_semi")
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val good = qualityGate(pages)
     good.join(exactSurvivors(good), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("canonical"))
@@ -258,7 +258,7 @@ object CurateOps {
       .select(col("doc_id"), col("__t"),
         (conv(substring(md5(col("term")), 1, 15), 16, 10).cast("long")
           % buckets).as("bkt"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val counts = tok.groupBy(col("bkt")).agg(
       sum(when(col("__t"), 1L).otherwise(0L)).as("tb"),
       count(lit(1)).as("rb"))
@@ -285,12 +285,9 @@ object CurateOps {
         (conv(substring(md5(concat(col("doc_id").cast("string"),
           lit("_dsir"))), 1, 13), 16, 10).cast("double") + 0.5) /
           lit(4503599627370496.0))))).cast("long"))
-      // eager: materializes the doc-count-sized scored frame (forcing
-      // both checkpointed-tok consumers), so the returned plan no
-      // longer reaches the corpus-token-scale checkpoint and its
-      // blocks are reclaimed without waiting for the caller to drop
-      // the result
-      .localCheckpoint(true)
+      // doc-count-sized: the returned plan then no longer reaches
+      // the corpus-token-scale `tok`
+      .transform(Reuse.barrier)
     val nDocs = docs.count()
     val keepN = (nDocs + keepDenom - 1) / keepDenom
     PrefixSum.exclusive(scored,
@@ -345,7 +342,7 @@ object CurateOps {
     // the offset branch both read it, and without the barrier each
     // would re-run the full-corpus aggregation
     val counts = docs.groupBy(col("source")).agg(count(lit(1)).as("n_s"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val w = counts.withColumn("w6",
       floor(lit(1000000.0) * sqrt(col("n_s").cast("double"))).cast("long"))
     val tot = w.agg(sum(col("w6")).as("tw"), sum(col("n_s")).as("total"))

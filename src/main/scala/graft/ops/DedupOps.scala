@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Reuse
 
 /** Deduplication operators for a training-data pipeline, each a
   * different cost/recall point:
@@ -59,25 +60,21 @@ object DedupOps {
                             cap: Int): (DataFrame, DataFrame) = {
     if (cap == Int.MaxValue) {
       // cap can never fire: skip the per-bucket rank window (a full
-      // extra shuffle on the bucket keys) entirely — kept is the input
-      // (checkpointed: callers consume it multiple times), overflow is
-      // empty
-      val kept = df.localCheckpoint(false)
+      // extra shuffle on the bucket keys); callers read kept more
+      // than once, overflow is empty
+      val kept = Reuse.shared(df)
       val overflow = df.limit(0)
         .select(col(idCol).as("id1"), col(idCol).as("id2"))
       return (kept, overflow)
     }
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(idCol))
-    // Checkpointed HERE so kept and overflow share one
-    // materialization of the upstream pipeline (signature aggregation
-    // / bucketing): both returned frames are consumed downstream, and
-    // without the checkpoint whichever side the caller didn't
-    // materialize re-runs the whole expensive input plan a second
-    // time.
+    // shared HERE: both returned frames are consumed downstream, and
+    // without it whichever side the caller didn't materialize re-runs
+    // the upstream pipeline (signature aggregation / bucketing)
     val ranked = df.withColumn("__rn", row_number().over(w))
       // default frame = rows up to CURRENT ROW, so first = bucket min id
       .withColumn("__rep", first(col(idCol)).over(w))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val kept = ranked.filter(col("__rn") <= cap).drop("__rn", "__rep")
     // id order inside the window makes rep strictly < the capped id
     val overflow = ranked.filter(col("__rn") > cap)
@@ -237,7 +234,7 @@ object DedupOps {
   /** Same over any (doc_id, text) frame. */
   def minhashLshOn(docs: DataFrame, maxBucket: Int = lshBucketCap): DataFrame = {
     // reused by signature build AND exact verification — materialize once
-    val sets = docShingleSets(docs).localCheckpoint(false)
+    val sets = Reuse.shared(docShingleSets(docs))
     lshPairsFromIndex(bandIndexOnSets(sets, minhashPerms, numBands), sets,
       maxBucket)
   }
@@ -323,8 +320,8 @@ object DedupOps {
     // production both are parquet reads): ONE checkpointed shingle pass and
     // ONE checkpointed signature/banding pass over history serve both the
     // index and the pair table
-    val hSets = docShingleSets(history).localCheckpoint(false)
-    val hIndex = bandIndexOnSets(hSets, minhashPerms, numBands).localCheckpoint(false)
+    val hSets = Reuse.shared(docShingleSets(history))
+    val hIndex = Reuse.shared(bandIndexOnSets(hSets, minhashPerms, numBands))
     incrementalFold(hIndex,
       lshPairsFromIndex(hIndex, hSets, maxBucket),
       history, delta, jaccardThreshold, minhashPerms, numBands, maxBucket)
@@ -348,8 +345,8 @@ object DedupOps {
     * the returned fold reads it lazily. When none is given, the
     * state goes to a fresh per-invocation temp directory (a FIXED
     * default path would let two concurrent runs on the same corpus
-    * overwrite each other's state mid-read); the fold is then
-    * materialized by an eager local checkpoint and the directory
+    * overwrite each other's state mid-read); the fold is then a
+    * `Reuse.barrier` and the directory
     * deleted before returning, so a long-lived JVM keeps no state
     * directory per call. A production owner passes the durable state
     * path explicitly. */
@@ -357,10 +354,9 @@ object DedupOps {
                                 stateDir: String = ""): DataFrame =
     if (stateDir.nonEmpty) persistedFold(s, d, stateDir)
     else {
-      // the eager checkpoint materializes the fold, so nothing reads
-      // the state once its per-call directory is deleted
+      // nothing reads the state once its directory is deleted
       val tmp = graft.TempDirs.create("graft_inc_state_")
-      try persistedFold(s, d, tmp.toString).localCheckpoint(true)
+      try Reuse.barrier(persistedFold(s, d, tmp.toString))
       finally graft.TempDirs.delete(tmp)
     }
 
@@ -372,8 +368,8 @@ object DedupOps {
     val docs = Tables.documents(s, d)
     val history = docs.filter(col("doc_id") % 4 =!= 0)
     val delta = docs.filter(col("doc_id") % 4 === 0)
-    val hSets = docShingleSets(history).localCheckpoint(false)
-    val hIndex = bandIndexOnSets(hSets, minhashPerms, numBands).localCheckpoint(false)
+    val hSets = Reuse.shared(docShingleSets(history))
+    val hIndex = Reuse.shared(bandIndexOnSets(hSets, minhashPerms, numBands))
     hIndex.write.mode("overwrite").partitionBy("band")
       .parquet(s"$dir/band_index.parquet")
     lshPairsFromIndex(hIndex, hSets, maxBucket)
@@ -440,7 +436,7 @@ object DedupOps {
                       bands: Int, maxBucket: Int = Int.MaxValue): DataFrame = {
     // today's shingle sets feed signatures AND verification — one
     // materialization (the minhashLshOn posture)
-    val dSets = docShingleSets(delta).localCheckpoint(false)
+    val dSets = Reuse.shared(docShingleSets(delta))
     val dSig = minhashSignatures(
       dSets.select(col("doc_id"), explode(col("hs")).as("h")), numPerm)
     val bandSigs = bandCols(numPerm, bands, j => col(s"mh$j"))
@@ -448,7 +444,7 @@ object DedupOps {
     // checkpoint ends the signature aggregation after one run
     val dIndex = dSig.select(col("doc_id"),
         posexplode(array(bandSigs: _*)).as(Seq("band", "bsig")))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val cand = (if (maxBucket == Int.MaxValue) {
       // delta vs HISTORY: equi-join on the persisted index — at scale
       // the delta side is day-sized and broadcasts; ids interleave
@@ -473,9 +469,9 @@ object DedupOps {
       val w = Window.partitionBy(col("band"), col("bsig"))
         .orderBy(col("doc_id"))
       val rankedD = dIndex.withColumn("__rn", row_number().over(w))
-        .localCheckpoint(false)
+        .transform(Reuse.shared)
       val rankedH = histIndex
-        .withColumn("__rn", row_number().over(w)).localCheckpoint(false)
+        .withColumn("__rn", row_number().over(w)).transform(Reuse.shared)
       val dKept = rankedD.filter(col("__rn") <= maxBucket)
       val hKept = rankedH.filter(col("__rn") <= maxBucket)
       val dMin = rankedD.filter(col("__rn") === 1)
@@ -517,7 +513,7 @@ object DedupOps {
       // three consumers (both candIds arms + the verify join input):
       // without the barrier the banded candidate joins re-ran per
       // consumer. Candidate-pair-sized.
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     // verification sets: today's are in hand; history contributes
     // ONLY the candidate members, fetched by id
     val candIds = cand.select(col("id1").as("doc_id"))
@@ -526,7 +522,7 @@ object DedupOps {
     // the candidate-bounded history shingling so it runs once
     val hSets = docShingleSets(
       histDocs.join(candIds, Seq("doc_id"), "left_semi"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val newPairs = verifyJaccard(cand, dSets.unionByName(hSets))
       .filter(col("jaccard") >= threshold)
     // the updated pair table: yesterday's verified pairs are
@@ -561,7 +557,7 @@ object DedupOps {
     val tagged = corpus.select(col("doc_id"), col("text"), lit(0).as("__ref"))
       .unionByName(reference.select(col("doc_id"), col("text"), lit(1).as("__ref")))
     val sets = docShingleSetsCarry(tagged, 3, Seq("__ref"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val sig = minhashSignatures(
       sets.select(col("doc_id"), col("__ref"), explode(col("hs")).as("h")),
       minhashPerms, carry = Seq("__ref"))
@@ -572,7 +568,7 @@ object DedupOps {
       .orderBy(col("doc_id"))
     val ranked = sig.select(col("doc_id"), col("__ref"),
         posexplode(array(bandSigs: _*)).as(Seq("band", "bsig")))
-      .withColumn("__rn", row_number().over(w)).localCheckpoint(false)
+      .withColumn("__rn", row_number().over(w)).transform(Reuse.shared)
     val kept = ranked.filter(col("__rn") <= lshBucketCap)
     val cKept = kept.filter(col("__ref") === 0)
     val rKept = kept.filter(col("__ref") === 1)
@@ -695,7 +691,7 @@ object DedupOps {
     */
   def decontaminateBloom(corpus: DataFrame, reference: DataFrame,
                          fpp: Double = 0.01): DataFrame = {
-    val ref = rowShingles(reference).localCheckpoint(false)
+    val ref = Reuse.shared(rowShingles(reference))
     def bandKey: Column = xxhash64(col("band"), col("bsig"))
     val refBands = ref.select(col("doc_id").as("ref_id"), bandRows)
     // posexplode of a fixed-size array: exactly bands keys per ref doc
@@ -761,8 +757,8 @@ object DedupOps {
                     threshold: Double = 0.6): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"containment threshold must be in (0, 1], got $threshold")
-    val cSets = docShingleSets(corpus).localCheckpoint(false)
-    val rSets = docShingleSets(reference).localCheckpoint(false)
+    val cSets = Reuse.shared(docShingleSets(corpus))
+    val rSets = Reuse.shared(docShingleSets(reference))
     val cPost = cSets.select(col("doc_id"), col("n").as("cn"),
       posexplode(col("hs")).as(Seq("cp", "h")))
     val rPrefixLen =
@@ -816,7 +812,7 @@ object DedupOps {
         struct(col("id2").as("src"), col("id1").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(col("dst"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     // convergence via the label-sum invariant: propagation only ever
     // DECREASES labels, so the (exact, decimal) sum is strictly
     // monotone until the fixpoint — one cheap aggregate per round
@@ -826,15 +822,12 @@ object DedupOps {
       df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
           lit(0).cast("decimal(38,0)"))).first()
         .getDecimal(0)
-    // localCheckpoint(false) everywhere in the loop: the logical plan
-    // is truncated immediately, so plans stay round-constant. It is
-    // not free to build: under AQE (on by default) building each
-    // checkpointed frame already runs every shuffle stage below it;
-    // only the stage after the last exchange waits for labelSum
-    // (dedup_clusters at sf0.001: 26 jobs to build, 7 with AQE off)
+    // every round's labels are a round cut, so plans stay
+    // round-constant (dedup_clusters at sf0.001: 26 jobs to build,
+    // 7 with AQE off)
     var labels = edges.select(col("dst").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
-      .localCheckpoint(false)
+      .transform(Reuse.roundCut)
     var prevSum = labelSum(labels)
     var converged = false
     while (!converged) {
@@ -847,19 +840,14 @@ object DedupOps {
         .select(col("src").as("id"), col("label"))
         .union(labels)
         .groupBy(col("id")).agg(min(col("label")).as("label"))
-        // truncate lineage each round: without this the plan doubles
-        // per iteration and optimization time, not data, dominates
-        .localCheckpoint(false)
-      // this action runs the round's last stage, persists the
-      // checkpoint blocks and folds the convergence statistic; the
-      // round's shuffle stages ran when `next` was built (under AQE)
+        // without the cut the plan doubles per iteration and
+        // optimization time, not data, dominates
+        .transform(Reuse.roundCut)
+      // this action runs the round's last stage and folds the
+      // convergence statistic
       val s = labelSum(next)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
-      // `next` is materialized by the sum above; once `labels` is
-      // reassigned nothing reaches the previous round's checkpoint,
-      // and the ContextCleaner reclaims its blocks when it is
-      // garbage-collected
       labels = next
     }
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
@@ -916,7 +904,7 @@ object DedupOps {
         shingleHashesExpr(col("__t")).as("hs"))
       .select(col("doc_id"), sigFromHashes.as("sig"), col("hs"))
       .withColumn("n", size(col("hs")))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     simhashCore(staged, sigBits, maxHamming, bands, maxBucket, jaccardThreshold)
   }
 
@@ -1058,7 +1046,7 @@ object DedupOps {
   def ngramJaccardOn(docs: DataFrame,
                      threshold: Double = jaccardThreshold): DataFrame = {
     // one scan-side pass feeds prefix build and verification alike
-    val sets = docShingleSets(docs).localCheckpoint(false)
+    val sets = Reuse.shared(docShingleSets(docs))
     // every ceil of a threshold product goes through ceilSafe: an FP
     // overshoot here shortens the prefix / raises a bound and silently
     // prunes genuine J == threshold pairs (the shipped defaults happen
@@ -1242,7 +1230,7 @@ object DedupOps {
       .select(col("vec_id"),
         transform(col("embedding"),
           x => round(x.cast("double") * 1000000, 0).cast("long")).as("q6"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     // checkpoint the (vec_id, cluster) frame — 2 longs per row: the
     // pair join reads it on BOTH sides, and without the barrier each
     // side re-derives the whole iterate chain (the kmeansPlan
@@ -1252,7 +1240,7 @@ object DedupOps {
           transform(col("q6"), x => x + 1000000L).as("a6")),
         k, iters)
       .select("vec_id", "cluster")
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val withC = q.join(asg, "vec_id")
       .withColumn("nn",
         graft.functions.VectorExprs.dotLong(col("q6"), col("q6")))
@@ -1421,15 +1409,14 @@ object DedupOps {
   /** Shared word-n-gram inverted index: (doc_id, ws, n_ngrams) base,
     * positioned 64-bit gram stream, and the cross-doc duplicated gram
     * set. `base` is checkpointed — it feeds per-doc totals AND the
-    * gram explode (materialized by the caller's action, reclaimed
-    * with the returned plan). */
+    * gram explode. */
   private def gramIndex(docs: DataFrame, n: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     val base = Tables.spread(docs)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .withColumn("n_ngrams",
         greatest(size(col("ws")) - (n - 1), lit(0)).cast("long"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val grams = base.filter(size(col("ws")) >= n)
       .select(col("doc_id"), posexplode(transform(
         sequence(lit(0), size(col("ws")) - n),
@@ -1521,7 +1508,7 @@ object DedupOps {
     def words(docs: DataFrame): DataFrame =
       Tables.spread(docs).select(col("doc_id"),
         split(col("text"), " ").as("ws"))
-    val base = words(corpus).localCheckpoint(false)
+    val base = Reuse.shared(words(corpus))
     val cg = base.filter(size(col("ws")) >= spanN)
       .select(col("doc_id"), posexplode(transform(
         sequence(lit(0), size(col("ws")) - spanN),
@@ -1594,7 +1581,7 @@ object DedupOps {
     // positioned 1-based corpus grams; reference grams keep only the
     // key, distinct per (ref_id, gram) so a gram repeated inside one
     // reference doc can't multiply match rows
-    val base = withWords(corpus, "doc_id").localCheckpoint(false)
+    val base = Reuse.shared(withWords(corpus, "doc_id"))
     val cg = base.filter(size(col("ws")) >= n)
       .select(col("doc_id"), explode(transform(
         sequence(lit(1), size(col("ws")) - (n - 1)),
@@ -1701,7 +1688,7 @@ object DedupOps {
       .agg(mins.head, mins.tail: _*)
       .select(col("doc_id"),
         array((0 until minhashPerms).map(j => col(s"mh$j")): _*).as("sig"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     // the band key is the rows-long component slice itself (each
     // engine needs only an injective per-band encoding for ITS OWN
     // equi-join — arrays join by value in Spark, lists in DuckDB)
@@ -1752,7 +1739,7 @@ object DedupOps {
           i => xxhash64(concat_ws(" ", slice(col("ws"), i + 1, lit(spanN))))))
           .as("g"))
         .distinct()
-    val rg = gramSet(reference, "ref_id").localCheckpoint(false)
+    val rg = Reuse.shared(gramSet(reference, "ref_id"))
     val cg = gramSet(corpus, "doc_id")
     val totals = rg.groupBy(col("ref_id"))
       .agg(count(lit(1)).as("n_grams"))
@@ -1853,7 +1840,7 @@ object DedupOps {
       // barrier: bnds/t become STORED columns, so the chunk slicer's
       // element_at(bnds, j) reads O(1) instead of re-deriving the
       // boundary pipeline per access
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
       .withColumn("chunks",
         transform(sequence(lit(1), size(col("bnds")) - 1), j =>
           struct(

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Reuse
 
 /** Distributed quantile forecasting — the capability the reference
   * delegates to SageMaker DeepAR (GluePySparkMLFeatureEngineering
@@ -95,7 +96,7 @@ object Forecast {
     val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
     val lagged = daily.withColumn("lagp", lag(col("cnt"), seasonDays).over(w))
     val mx = daily.agg(max(col("day")).as("mx"))
-    val t = lagged.crossJoin(broadcast(mx)).localCheckpoint(false)
+    val t = Reuse.shared(lagged.crossJoin(broadcast(mx)))
     val train = t
       .filter(col("day") <= col("mx") - expr(s"interval $horizonDays day") &&
         col("lagp").isNotNull)
@@ -687,10 +688,8 @@ object Forecast {
     // ONE daily aggregate feeds all three member fits (r16 backlog
     // item #1): the members previously each re-derived it from
     // events — 3 corpus scans+aggregates per entry for a frame of
-    // days × event_types rows. The checkpoint is that small frame;
-    // member fits are unchanged functions of it, so outputs are
-    // identical.
-    val daily = dailyOf(s, d).localCheckpoint(false)
+    // days × event_types rows.
+    val daily = Reuse.shared(dailyOf(s, d))
     val sn = seasonalNaiveOn(daily, seasonDays, horizonDays)
       .select(col("event_type"), col("actual"), col("pred"))
       .withColumn("model", lit("snaive"))
@@ -743,7 +742,7 @@ object Forecast {
     * scoring legs + one aggregate. */
   def ensembleForecast(s: SparkSession, d: String): DataFrame = {
     // shared checkpointed daily frame — see compareModels
-    val daily = dailyOf(s, d).localCheckpoint(false)
+    val daily = Reuse.shared(dailyOf(s, d))
     val sn = seasonalNaiveOn(daily, seasonDays, horizonDays)
       .select(col("event_type"), col("day"), col("actual"),
         col("pred").as("p_sn"))
@@ -755,7 +754,7 @@ object Forecast {
       .join(th, Seq("event_type", "day"))
       .withColumn("p_ens",
         round((col("p_sn") + col("p_ar") + col("p_th")) / 3, 4))
-      .localCheckpoint(false) // holdout-sized; four scoring legs read it
+      .transform(Reuse.shared) // holdout-sized; four scoring legs read it
     def leg(name: String, p: Column): DataFrame =
       j.select(col("event_type"), col("actual"), p.as("pred"),
         lit(name).as("model"))

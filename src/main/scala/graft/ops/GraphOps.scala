@@ -3,6 +3,7 @@ package graft.ops
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Reuse
 
 /** Graph analytics over relation-shaped data. Companion to
   * [[DedupOps.clusters]] (connected components): where clustering
@@ -57,7 +58,7 @@ object GraphOps {
     * TakeOrdered top-k.
     *
     * 100 TB posture: the symmetrized edge+degree frame materializes
-    * ONCE through a lazy localCheckpoint and every round reads that
+    * ONCE through `Reuse.shared` and every round reads that
     * copy (without it Catalyst inlines the derivation per round —
     * 104 scans in the unrolled tree; an explicit cache() measured
     * 50% slower than even that). Rounds are fixed and few; each is a
@@ -77,17 +78,14 @@ object GraphOps {
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     // each of the five rounds references the edge/degree frame and
     // Catalyst would otherwise inline its whole derivation per round
-    // (measured: 104 parquet scans in the unrolled tree); a LAZY
-    // localCheckpoint truncates the lineage so every round reads the
-    // one materialized copy — the dedup_clusters pattern. Storage is
-    // one edge-width frame per call, freed with the RDD reference.
-    val withDeg = edges.join(outdeg, "src").localCheckpoint(false)
+    // (measured: 104 parquet scans in the unrolled tree)
+    val withDeg = Reuse.shared(edges.join(outdeg, "src"))
     val nodes = withDeg.select(col("src").as("node")).distinct()
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     // node count as a driver scalar — the iterative-operator
     // precedent (clusters' convergence sums, IVF's cell count): the
     // teleport constant folds into the per-round expression as a
@@ -153,9 +151,8 @@ object GraphOps {
 
   /** Same over any (basket, item) membership list. */
   def trianglesOn(pairs: DataFrame, maxBasket: Int): DataFrame =
-    triangleCore(basketEdges(pairs, maxBasket)
-      .localCheckpoint(false)) // edges feed degrees, wedges, AND the
-                               // closing join — materialize once
+    // edges feed degrees, wedges, AND the closing join
+    triangleCore(Reuse.shared(basketEdges(pairs, maxBasket)))
 
   /** The SCALE TIER of [[trianglesOn]] — the exact count's wedge join
     * is O(m^1.5) and is the registry's single heaviest query, the
@@ -179,7 +176,7 @@ object GraphOps {
       col("b").cast("string"))), 1, 15), 16, 10).cast("long") % 1000
     val kept = basketEdges(pairs, maxBasket)
       .filter(keep < permille)
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val p3 = permille.toLong * permille * permille
     triangleCore(kept).select(
       col("n_edges").as("n_edges_kept"),
@@ -212,11 +209,11 @@ object GraphOps {
     // count, and deg feeds both the bin aggregate and the total —
     // un-checkpointed, the edge derivation re-ran 4× (16 parquet
     // scans in the r16 before-plan; 2 after)
-    val edges = basketEdges(pairs, maxBasket).localCheckpoint(false)
+    val edges = Reuse.shared(basketEdges(pairs, maxBasket))
     val deg = edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val total = deg.agg(count(lit(1)).as("n_total"))
     deg.withColumn("bin", (length(expr("bin(deg)")) - 1).cast("long"))
       .groupBy(col("bin"))
@@ -240,9 +237,9 @@ object GraphOps {
     * short-circuits when the frontier empties (the kCore fixpoint
     * posture — remaining rounds are free, and the oracle's unrolled
     * rounds are empty too, so early exit cannot diverge). Every
-    * frame rides an eager localCheckpoint so each round is paid
-    * once. Output: per hop distance, node count + id range —
-    * rounds+1 rows at any scale. */
+    * frame is a `Reuse.barrier`, so each round is paid once. Output:
+    * per hop distance, node count + id range — rounds+1 rows at any
+    * scale. */
   def bfs(s: SparkSession, d: String): DataFrame = {
     val rounds = 4
     bfsOn(Tables.lineitem(s, d)
@@ -252,12 +249,12 @@ object GraphOps {
 
   /** Same over any (basket, item) membership list. */
   def bfsOn(pairs: DataFrame, rounds: Int, maxBasket: Int): DataFrame = {
-    val edges = basketEdges(pairs, maxBasket).localCheckpoint(false)
+    val edges = Reuse.shared(basketEdges(pairs, maxBasket))
     val adj = edges.select(col("a").as("n"), col("b").as("v"))
       .union(edges.select(col("b").as("n"), col("a").as("v")))
     val src = edges.agg(least(min(col("a")), min(col("b"))).as("node"))
     var visited = src.select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
+      .transform(Reuse.barrier)
     var frontier = visited.select(col("node"))
     var r = 1
     var live = true
@@ -266,11 +263,11 @@ object GraphOps {
         .select(col("v").as("node")).distinct()
         .join(visited, Seq("node"), "left_anti")
         .select(col("node"), lit(r.toLong).as("dist"))
-        .localCheckpoint(true)
+        .transform(Reuse.barrier)
       // O(1)-row driver action (the kCore convergence precedent)
       if (next.limit(1).count() == 0) live = false
       else {
-        visited = visited.union(next).localCheckpoint(true)
+        visited = Reuse.barrier(visited.union(next))
         frontier = next.select(col("node"))
       }
       r += 1
@@ -316,18 +313,18 @@ object GraphOps {
                     topN: Int): DataFrame = {
     // edges feed degrees, the wedge join, AND the anti join —
     // materialize once
-    val edges = basketEdges(pairs, maxBasket).localCheckpoint(false)
+    val edges = Reuse.shared(basketEdges(pairs, maxBasket))
     // deg serves three consumers (center filter + both endpoint
     // degree joins); adj is self-joined — checkpoint each once
     val deg = edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val adj = edges.select(col("a").as("n"), col("b").as("v"))
       .union(edges.select(col("b").as("n"), col("a").as("v")))
       .join(deg.filter(col("deg") <= maxCenterDeg)
         .select(col("node").as("n")), Seq("n"), "left_semi")
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val cand = adj.as("x").join(adj.as("y"), "n")
       .filter(col("x.v") < col("y.v"))
       .groupBy(col("x.v").as("a"), col("y.v").as("b"))
@@ -365,8 +362,8 @@ object GraphOps {
     * [[kCoreOn]] for the three regimes and why blind re-induction
     * measured 4-5× slower on the sf1 graph, where nothing peels).
     * Edge derivation shares [[basketEdges]]'s capped basket join;
-    * every materialized frame rides an EAGER localCheckpoint so each
-    * round is paid exactly once, in order. Output: per round,
+    * every materialized frame is a `Reuse.barrier`, so each round is
+    * paid exactly once, in order. Output: per round,
     * surviving node/edge counts — rounds+1 rows at any scale. */
   def kCore(s: SparkSession, d: String): DataFrame =
     kCoreOn(basketEdges(Tables.lineitem(s, d)
@@ -406,8 +403,8 @@ object GraphOps {
     def degOf(f: DataFrame): DataFrame =
       f.select(col("a").as("node")).union(f.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint(true)
-    var e = edges0.localCheckpoint(true)
+        .transform(Reuse.barrier)
+    var e = Reuse.barrier(edges0)
     var deg = degOf(e)
     var nNodes = deg.count()
     var nEdges = e.count()
@@ -431,7 +428,7 @@ object GraphOps {
               e.join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
                 .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
             }
-          }.select(col("a"), col("b")).localCheckpoint(true)
+          }.select(col("a"), col("b")).transform(Reuse.barrier)
           deg = degOf(e)
           nNodes = deg.count()
           nEdges = e.count()
@@ -519,10 +516,10 @@ object GraphOps {
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(col("src"))
-      .localCheckpoint(true)
+      .transform(Reuse.barrier)
     var labels = bidir.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
-      .localCheckpoint(true)
+      .transform(Reuse.barrier)
     for (_ <- 1 to rounds) {
       labels = bidir
         .join(labels.withColumnRenamed("node", "src"), Seq("src"))
@@ -530,7 +527,7 @@ object GraphOps {
         .groupBy(col("dst"))
         .agg(max(struct(col("cnt"), (-col("lbl")).as("nl"))).as("m"))
         .select(col("dst").as("node"), (-col("m.nl")).as("lbl"))
-        .localCheckpoint(true)
+        .transform(Reuse.barrier)
     }
     labels.groupBy(col("lbl")).agg(count(lit(1)).as("sz"))
       .groupBy(col("sz")).agg(count(lit(1)).as("n_communities"))
@@ -606,7 +603,7 @@ object GraphOps {
     val deg = edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     // orient each edge low→high by (deg, node); struct comparison is
     // lexicographic in both engines (DuckDB: row comparison)
     // dlo is dead after orientation (the wedge canonicalization and
@@ -622,7 +619,7 @@ object GraphOps {
           col("b")).otherwise(col("a")).as("hi"),
         when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
           col("db")).otherwise(col("da")).as("dhi"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     // wedges per shared low endpoint, canonicalized v < w by the SAME
     // (deg, node) order so the closing edge is probed in its stored
     // orientation
@@ -669,7 +666,7 @@ object GraphOps {
     require(steps >= 1 && steps <= 8, s"steps out of range: $steps")
     // adj materializes twice (ranked + degs): checkpoint the edge
     // derivation so each materialization reads it, not re-derives it
-    val edges = basketEdges(pairs, maxBasket).localCheckpoint(false)
+    val edges = Reuse.shared(basketEdges(pairs, maxBasket))
     val adj = edges.select(col("a").as("node"), col("b").as("nbr"))
       .unionAll(edges.select(col("b").as("node"), col("a").as("nbr")))
     // the coin must be WALKER-side: a join predicate mixing both
@@ -682,9 +679,9 @@ object GraphOps {
       .withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("node"))
           .orderBy(col("nbr"))) - 1)
-      .localCheckpoint(false) // every step joins this frame
+      .transform(Reuse.shared) // every step joins this frame
     val degs = adj.groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     var walk = degs.select(col("node").as("start")).distinct()
       .withColumn("cur", col("start"))
     val pathCols = scala.collection.mutable.ArrayBuffer[String]()

@@ -8,6 +8,7 @@ import org.apache.spark.ml.feature.StandardScaler
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Reuse
 
 /** MLlib pipelines over the embeddings table — the distributed
   * counterpart of the reference's feature-engineering → model
@@ -28,7 +29,7 @@ object MlOps {
     * fitted centroids are broadcast by MLlib's transform — scoring
     * is a narrow map over the corpus. */
   def cluster(s: SparkSession, d: String): DataFrame = {
-    val df = featurized(s, d).localCheckpoint(false)
+    val df = Reuse.shared(featurized(s, d))
     val model = new KMeans().setK(clusterK).setSeed(42L).setMaxIter(10)
       .setFeaturesCol("features").fit(df)
     model.transform(df)
@@ -55,7 +56,7 @@ object MlOps {
     * assignment is off by far more. The oracle is every vec_id +
     * TRUE. */
   def clusterChecked(s: SparkSession, d: String): DataFrame = {
-    val df = featurized(s, d).localCheckpoint(false)
+    val df = Reuse.shared(featurized(s, d))
     val model = new KMeans().setK(clusterK).setSeed(42L).setMaxIter(10)
       .setFeaturesCol("features").fit(df)
     val centerDists = model.clusterCenters.map { c =>
@@ -92,7 +93,7 @@ object MlOps {
     * probability mismatch flips a flag on some row and breaks the
     * cross-engine hash. */
   def classifyChecked(s: SparkSession, d: String): DataFrame = {
-    val df = featurized(s, d).localCheckpoint(false)
+    val df = Reuse.shared(featurized(s, d))
     val train = df.filter(col("vec_id") % 5 =!= 0)
     val test  = df.filter(col("vec_id") % 5 === 0)
     val pipeline = new Pipeline().setStages(Array(
@@ -138,10 +139,9 @@ object MlOps {
     * < 1e-6, far below the 4dp output. Output: per-cluster size, mean
     * squared distance, majority label (count-desc, label tiebreak).
     *
-    * The quantized frame rides a lazy localCheckpoint: every round
-    * references it, and inlining its derivation per round is the 104-
-    * scan pathology pageRank measured. Long-lived sessions own the
-    * storage via the RDD reference (PrefixSum ownership contract). */
+    * The quantized frame is `Reuse.shared`: every round references
+    * it, and inlining its derivation per round is the 104-scan
+    * pathology pageRank measured. */
   def kmeansPlan(s: SparkSession, d: String): DataFrame = {
     val k = 3
     val iters = 3
@@ -209,7 +209,7 @@ object MlOps {
         .agg(collect_list(struct(col("dim0"), col("c6d"))).as("__l"))
         .select(col("cluster"),
           transform(array_sort(col("__l")), x => x.getField("c6d")).as("c6"))
-        .localCheckpoint(false)
+        .transform(Reuse.roundCut)
     }
     assign(cFinal).drop("a6")
   }
@@ -220,10 +220,10 @@ object MlOps {
     val q = graft.Tables.spread(emb)
       .select(col("vec_id"), col("label"),
         lattice6(col("embedding")).as("a6"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     // af feeds sizes AND the label majority — materialize once
     val af = kmeansAssignArr(q.select(col("vec_id"), col("a6")), k, iters)
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val sizes = af.groupBy(col("cluster")).agg(count(lit(1)).as("n"),
       expr("sum(d2 div 1000000) div count(1)").as("__md6"))
     val lab = af.select(col("vec_id"), col("cluster"))
@@ -461,7 +461,7 @@ object MlOps {
     val cf = df.select(cat.as("category"), target.as("t"), fold.as("fold"))
       .groupBy(col("category"), col("fold"))
       .agg(count(lit(1)).as("n_cf"), sum(col("t")).as("s_cf"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val perCat = cf.groupBy(col("category"))
       .agg(sum(col("n_cf")).as("n_c"), sum(col("s_cf")).as("s_c"))
     val prior = cf.agg(
@@ -515,11 +515,11 @@ object MlOps {
 
   /** Same over any (x, y∈{0,1}) frame. */
   def logregGdOn(base0: DataFrame, iters: Int, lr: Double): DataFrame = {
-    val base = base0.localCheckpoint(false) // feeds every GD round + eval
+    val base = Reuse.shared(base0) // feeds every GD round + eval
     // 1 row, eager: every round AND the eval crossJoin it — without
     // the barrier the count subtree rode into each round's broadcast
     // (one extra base pass per round)
-    val n = base.agg(count(lit(1)).as("n")).localCheckpoint(true)
+    val n = Reuse.barrier(base.agg(count(lit(1)).as("n")))
     val spark = base.sparkSession
     var st = spark.range(1)
       .select(lit(0.0).as("w"), lit(0.0).as("b"))
@@ -532,15 +532,13 @@ object MlOps {
             " AS DECIMAL(20,6))")).as("gw"),
           sum(expr("CAST(" + q6("1.0/(1.0+exp(-(w*x+b))) - y") +
             " AS DECIMAL(20,6))")).as("gb"))
-      // each round's 1-row state rides an EAGER checkpoint (the
-      // adaboost posture): round k+1's plan then broadcasts a
-      // materialized row instead of nesting round k's whole aggregate
-      // subtree — the lazy chain re-planned every prior round inside
-      // each broadcast build
+      // each round's 1-row state is a barrier (the adaboost
+      // posture): round k+1 broadcasts a row instead of nesting round
+      // k's aggregate subtree, which re-planned every prior round
       st = g.select(
         expr(q6(s"w - $lr * CAST(gw AS DOUBLE) / n")).as("w"),
         expr(q6(s"b - $lr * CAST(gb AS DOUBLE) / n")).as("b"))
-        .localCheckpoint(true)
+        .transform(Reuse.barrier)
     }
     base.crossJoin(broadcast(st)).crossJoin(broadcast(n))
       .groupBy(col("w"), col("b"), col("n"))
@@ -645,9 +643,9 @@ object MlOps {
     import org.apache.spark.sql.expressions.Window
     val base = df.select(feature.as("x"),
         when(target === 1L, 1.0).otherwise(-1.0).as("y"))
-      .localCheckpoint(false) // feeds every round twice
-    val dec = deciles(base).localCheckpoint(true) // shared by all rounds
-    val n = base.agg(count(lit(1)).as("n")).localCheckpoint(true)
+      .transform(Reuse.shared) // feeds every round twice
+    val dec = Reuse.barrier(deciles(base)) // shared by all rounds
+    val n = Reuse.barrier(base.agg(count(lit(1)).as("n")))
     val d6 = "decimal(20,6)"
     val zero6 = lit(0).cast(d6)
     val q6 = (e: String) => s"floor(($e) * 1e6) / 1e6"
@@ -671,7 +669,7 @@ object MlOps {
         (1 to 9).map(k => min(col(s"t$k")).as(s"tt$k"))
       // 1 row, eager: the pick AND the accuracy readout both read it
       val one = cur.agg(aggCols.head, aggCols.tail: _*)
-        .localCheckpoint(true)
+        .transform(Reuse.barrier)
       // 18 candidates: predict-left-positive (pol=+1) misclassifies
       // left negatives + right positives; pol=−1 mirrors
       val cands = (1 to 9).flatMap { k =>
@@ -710,7 +708,7 @@ object MlOps {
       (pick, one)
     }
     // only the LAST round pays a dedicated hits pass
-    val finalAcc = cur.agg(hitsCol).localCheckpoint(true)
+    val finalAcc = Reuse.barrier(cur.agg(hitsCol))
     val outs = staged.zipWithIndex.map { case ((pick, _), i) =>
       val t = i + 1
       val acc =
@@ -763,8 +761,8 @@ object MlOps {
                   target: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = df.select(feature.as("x"), target.as("y"))
-      .localCheckpoint(false) // feeds the decile fit + every round
-    val dec = deciles(base).localCheckpoint(true) // shared by all rounds
+      .transform(Reuse.shared) // feeds the decile fit + every round
+    val dec = Reuse.barrier(deciles(base)) // shared by all rounds
     val d6 = "decimal(20,6)"
     val zero6 = lit(0).cast(d6)
     val q6 = (e: String) => s"floor(($e) * 1e6) / 1e6"
@@ -772,7 +770,7 @@ object MlOps {
     val f0 = base.agg(sum(col("y").cast("decimal(20,4)")).as("sy"),
         count(lit(1)).as("cnt"))
       .select(expr(q6("CAST(sy AS DOUBLE) / cnt")).as("f0"))
-      .localCheckpoint(true)
+      .transform(Reuse.barrier)
     var cur = base.crossJoin(broadcast(dec)).crossJoin(broadcast(f0))
       .withColumn("r", expr(q6("y - f0")))
       .select(Seq(col("x")) ++ (1 to 9).map(k => col(s"t$k")) ++
@@ -787,7 +785,7 @@ object MlOps {
             .as(s"nl$k"))) ++
         (1 to 9).map(k => min(col(s"t$k")).as(s"tt$k"))
       val one = cur.agg(aggCols.head, aggCols.tail: _*)
-        .localCheckpoint(true) // 1 row, eager — cuts the round chain
+        .transform(Reuse.barrier) // 1 row, eager — cuts the round chain
       val cands = (1 to 9).map { k =>
         struct(lit(k).as("idx"), col(s"tt$k").as("threshold"),
           col(s"sl$k").as("sl"), col(s"nl$k").as("nl"),
@@ -827,7 +825,7 @@ object MlOps {
           count(lit(1)).as("cnt"))
         .select(round(col("ssq").cast("double") / 1e12 / col("cnt"), 4)
           .as("train_mse"))
-        .localCheckpoint(true)
+        .transform(Reuse.barrier)
       pick.crossJoin(broadcast(mse))
         .select(lit(t.toLong).as("round"), col("idx"), col("threshold"),
           col("gamma_l"), col("gamma_r"), col("train_mse"))

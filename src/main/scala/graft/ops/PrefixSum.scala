@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Reuse
 
 /** The distributed prefix sum shared by sequence packing
   * (TextOps.packOn), token-budget curation (CurateOps.tokenBudget),
@@ -28,12 +29,10 @@ import org.apache.spark.sql.functions._
   * materialized partitioning that both branches read, making
   * correctness independent of the exchange-reuse optimization.
   *
-  * One local checkpoint per call (row-count-sized: keys + one long),
-  * reclaimed with the returned plan. `localCheckpoint(false)` does
-  * not defer everything: building the frame runs the range
-  * exchange's boundary-sampling job, and under AQE the exchange
-  * itself (q_mann_whitney at sf0.001: 4 jobs to build, 2 with AQE
-  * off).
+  * One `Reuse.shared` frame per call (row-count-sized: keys + one
+  * long). Building it also runs the range exchange's
+  * boundary-sampling job (q_mann_whitney at sf0.001: 4 jobs to build,
+  * 2 with AQE off).
   */
 private[graft] object PrefixSum {
 
@@ -62,7 +61,7 @@ private[graft] object PrefixSum {
                      values: Seq[Column]): DataFrame = {
     val parts = df.repartitionByRange(keys: _*)
       .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val wLocal = Window.partitionBy(col("__pid")).orderBy(keys: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
     val local = values.zipWithIndex.foldLeft(parts) { case (acc, (v, i)) =>

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Reuse
 
 /** Item-item collaborative filtering over co-occurrence baskets — the
   * "users who bought X also bought Y" neighbor lists that power
@@ -82,7 +83,7 @@ object Recommend {
   private[ops] def symNeighbors(pairs: DataFrame, minCount: Long,
                                 topK: Int, maxBasket: Int): DataFrame = {
     val members = cappedMembers(pairs, maxBasket)
-      .localCheckpoint(false) // feeds item counts + both sides of the pair join
+      .transform(Reuse.shared) // feeds item counts + both sides of the pair join
     val counts = members.groupBy(col("item")).agg(count(lit(1)).as("n"))
     val pairCounts = members.as("x").join(members.as("y"), "basket")
       .filter(col("x.item") < col("y.item"))
@@ -173,7 +174,7 @@ object Recommend {
                          maxBasket: Int): DataFrame = {
     require(gamma >= 1, s"gamma must be positive: $gamma")
     val members = cappedMembers(pairs, maxBasket)
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val counts = members.groupBy(col("item")).agg(count(lit(1)).as("n"))
     val withN = members
       .join(counts, "item") // AQE picks broadcast when the vocab is small

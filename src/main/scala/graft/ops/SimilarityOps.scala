@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Reuse
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -246,7 +247,7 @@ object SimilarityOps {
     * and degrades to a shuffled hash join at scale. Per-query work is
     * O(nProbe·√n) instead of O(n). */
   def knnClassifyIvf(s: SparkSession, d: String): DataFrame =
-    knnClassifyIvfOn(Tables.embeddings(s, d).localCheckpoint(false), annK, annProbe)
+    knnClassifyIvfOn(Reuse.shared(Tables.embeddings(s, d)), annK, annProbe)
 
   /** Same over any (vec_id, embedding, label) frame. */
   def knnClassifyIvfOn(emb: DataFrame, k: Int, nProbe: Int): DataFrame = {
@@ -466,7 +467,7 @@ object SimilarityOps {
   private def mmrGreedy(short0: DataFrame, k: Int,
                         lam10: Int): DataFrame = {
     // queries×shortlist rows: eager-checkpoint ends the corpus scan
-    val short = short0.localCheckpoint(true)
+    val short = Reuse.barrier(short0)
     // all ordered candidate pairs per query (shortlist² bounded)
     val pairs = short.select(col("q_id"), col("vec_id").as("ca"),
         col("embedding").as("ea"))
@@ -477,7 +478,7 @@ object SimilarityOps {
         // quantized cosine for the same .5-boundary determinism as rel_i
         round(cosine(col("ea"), col("eb")) * 10000.0)
           .cast("long").as("sim_i"))
-      .localCheckpoint(true)
+      .transform(Reuse.barrier)
     val wPick = Window.partitionBy(col("q_id"))
       .orderBy(col("score_i").desc, col("vec_id"))
     def pick(cands: DataFrame, pos: Int): DataFrame =
@@ -485,7 +486,7 @@ object SimilarityOps {
         .filter(col("__rk") === 1)
         .select(col("q_id"), lit(pos).as("pos"), col("vec_id"),
           col("rel_i"), col("ms_i"), col("score_i"))
-        .localCheckpoint(true)
+        .transform(Reuse.barrier)
     val slim = short.select(col("q_id"), col("vec_id"), col("rel_i"))
     var selected = pick(slim
       .withColumn("ms_i", lit(0L))
@@ -645,7 +646,7 @@ object SimilarityOps {
         round(cosine(col("q_emb"), col("embedding")), 4).as("cos"))
       .withColumn("rel",
         when(col("label") === col("q_label"), 1L).otherwise(0L))
-      .localCheckpoint(false) // feeds total-relevant + the ranked prefix
+      .transform(Reuse.shared) // feeds total-relevant + the ranked prefix
     val relTotal = scored.groupBy(col("q_id"))
       .agg(sum(col("rel")).as("n_rel"))
     val ranked = scored
@@ -684,17 +685,6 @@ object SimilarityOps {
       .orderBy(col("q_id"))
   }
 
-  /** Matryoshka-truncation recall — the evaluation behind shipping
-    * shortened embeddings (MRL-style): how much of the full-dimension
-    * top-k survives when vectors truncate to their first `t` dims
-    * (16 and 32 here)? One scored frame per tier over the SAME
-    * broadcast query set (the corpus is never self-joined — the
-    * bruteForceTopK posture), ranked per (tier, query) with the
-    * repo's (cosine 4dp desc, vec_id) tiebreak; recall@k counts
-    * tier-top rows that also appear in the 64-dim top via a left
-    * join, so a query with zero overlap still reports 0.0. Output is
-    * (dims, q_id, recall) — the table that tells you whether the 4×
-    * storage cut is free or costs retrieval quality. */
   /** 1-bit SIGN quantization retrieval check — the 32× extreme of
     * the scalar-compression ladder (int8 = 4×, JL-RP = 8× fewer
     * dims, PQ = 32× codes, this = 32× in one bit per dim) and the
@@ -723,7 +713,7 @@ object SimilarityOps {
         aggregate(zip_with(col("q_emb"), col("embedding"),
           (a, b) => when((a > 0) =!= (b > 0), 1).otherwise(0)),
           lit(0), (acc, x) => acc + x).as("ham"))
-      .localCheckpoint(false) // feeds both rankings
+      .transform(Reuse.shared) // feeds both rankings
     val wCos = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("vec_id"))
     val wHam = Window.partitionBy(col("q_id"))
@@ -739,6 +729,17 @@ object SimilarityOps {
       .orderBy(col("q_id"))
   }
 
+  /** Matryoshka-truncation recall — the evaluation behind shipping
+    * shortened embeddings (MRL-style): how much of the full-dimension
+    * top-k survives when vectors truncate to their first `t` dims
+    * (16 and 32 here)? One scored frame per tier over the SAME
+    * broadcast query set (the corpus is never self-joined — the
+    * bruteForceTopK posture), ranked per (tier, query) with the
+    * repo's (cosine 4dp desc, vec_id) tiebreak; recall@k counts
+    * tier-top rows that also appear in the 64-dim top via a left
+    * join, so a query with zero overlap still reports 0.0. Output is
+    * (dims, q_id, recall) — the table that tells you whether the 4×
+    * storage cut is free or costs retrieval quality. */
   def mrlRecall(s: SparkSession, d: String): DataFrame = {
     val tiers = Seq(16, 32)
     mrlRecallOn(Tables.embeddings(s, d), annK, annQueries, tiers)
@@ -847,7 +848,7 @@ object SimilarityOps {
               nProbe: Int = annProbe): DataFrame = {
     // scanned four times (cell-count fit, two assignment passes, the
     // query subset) — checkpoint once
-    val emb = Tables.embeddings(s, d).localCheckpoint(false)
+    val emb = Reuse.shared(Tables.embeddings(s, d))
     ivfSearch(emb, emb, emb.filter(col("vec_id") < cellCount(emb)),
       k, nQueries, nProbe)
   }
@@ -972,7 +973,7 @@ object SimilarityOps {
                      nProbe: Int = annProbe,
                      buildMaxVectors: Int = sampleMaxVectors): DataFrame = {
     require(buildMaxVectors >= 8, s"buildMaxVectors too small: $buildMaxVectors")
-    val emb = Tables.embeddings(s, d).localCheckpoint(false)
+    val emb = Reuse.shared(Tables.embeddings(s, d))
     val n = emb.count()
     val bk = math.min(256L, math.max(1L,
       (256L * buildMaxVectors + n - 1) / n))
@@ -1015,7 +1016,7 @@ object SimilarityOps {
     * at any corpus size, and the per-cell window partitions on the
     * cell key (never global). */
   def diversitySample(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d).localCheckpoint(false)
+    val emb = Reuse.shared(Tables.embeddings(s, d))
     val centroids = ivfCentroids(emb,
       emb.filter(col("vec_id") < cellCount(emb)))
     // the winning cell's sim — the max, whatever the cell tiebreak —
@@ -1088,7 +1089,7 @@ object SimilarityOps {
     * the candidate ranking cannot depend on partial-agg order. */
   def pqTopK(s: SparkSession, d: String, k: Int = annK,
              nQueries: Int = annQueries, rerank: Int = pqRerank): DataFrame = {
-    val emb = Tables.embeddings(s, d).localCheckpoint(false)
+    val emb = Reuse.shared(Tables.embeddings(s, d))
     val (codes, dtable) = pqIndex(emb, nQueries)
     adcRescore(codes.join(broadcast(dtable), Seq("j", "code"))
       .filter(col("vec_id") =!= col("q_id")), emb, k, nQueries, rerank)
@@ -1110,7 +1111,7 @@ object SimilarityOps {
           col("embedding"))
         .withColumn("sv", expr(s"slice(embedding, j * $sub + 1, $sub)"))
         .drop("embedding")
-    val corpusSub = subvecs(emb, "vec_id").localCheckpoint(false)
+    val corpusSub = Reuse.shared(subvecs(emb, "vec_id"))
 
     // 4dp-rounded squared L2 from the codegen'd dot kernel, written
     // (a·a + c·c) − 2(a·c) so the oracle can mirror the exact IEEE
@@ -1186,7 +1187,7 @@ object SimilarityOps {
     * pipeline — both fits included — replays in the DuckDB oracle. */
   def ivfPqTopK(s: SparkSession, d: String, k: Int = annK,
                 nQueries: Int = annQueries): DataFrame = {
-    val emb = Tables.embeddings(s, d).localCheckpoint(false)
+    val emb = Reuse.shared(Tables.embeddings(s, d))
     val (cells, qCells) = ivfIndex(emb, emb,
       emb.filter(col("vec_id") < cellCount(emb)), nQueries, annProbe)
     val (codes, dtable) = pqIndex(emb, nQueries)
@@ -1662,7 +1663,7 @@ object SimilarityOps {
     * ride DECIMAL(38,0) sums (exact, associative — aggregation order
     * irrelevant at 1000 executors), then scale to 1e-8-unit BIGINT
     * covariance codes. Each power round is a join against the d²-row
-    * grid (localCheckpoint'd once — the pageRank 104-scan lesson) +
+    * grid (`Reuse.shared` once — the pageRank 104-scan lesson) +
     * a max-|component| renormalization in pure integer division,
     * which both engines truncate toward zero identically (verified,
     * not assumed). The eigenvalue derives from the integer Rayleigh
@@ -1686,7 +1687,7 @@ object SimilarityOps {
       .agg(sum((col("dxi") * col("dxj")).cast("decimal(38,0)")).as("ss"),
         count(lit(1)).as("n"))
       .select(col("i"), col("j"), expr("ss div (n * 10000)").as("c8"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
 
     def renorm(w: DataFrame): DataFrame =
       w.crossJoin(w.agg(max(abs(col("w"))).as("m")))
@@ -1694,15 +1695,13 @@ object SimilarityOps {
 
     val v0 = cov.select(col("i").as("dim")).distinct()
       .select(col("dim"), lit(1000000L).as("v6"))
-    // each round's 64-row state rides its own localCheckpoint(false):
-    // without it the fold is a recomputation TREE — round r re-derives
-    // rounds 1..r−1 and renorm's scalar crossJoin doubles each level
-    // (measured: 17.6s at sf0.1 for what is 4096-row arithmetic;
-    // checkpointed: sub-second rounds). Under AQE the rounds' shuffle
-    // stages run while the frame is built (emb_pca_power at sf0.001:
-    // 32 jobs to build, 14 with AQE off)
+    // each round's 64-row state is cut: without it the fold is a
+    // recomputation TREE — round r re-derives rounds 1..r−1 and
+    // renorm's scalar crossJoin doubles each level (measured: 17.6s at
+    // sf0.1 for what is 4096-row arithmetic; cut: sub-second rounds;
+    // emb_pca_power at sf0.001: 32 jobs to build, 14 with AQE off)
     val vf = (1 to iters).foldLeft(v0) { (v, _) =>
-      renorm(applyCov(cov, v).localCheckpoint(false)).localCheckpoint(false)
+      Reuse.roundCut(renorm(Reuse.roundCut(applyCov(cov, v))))
     }
     (cx, cov, vf)
   }
@@ -1835,12 +1834,6 @@ object SimilarityOps {
          |     JOIN dv ON dv.vec_id = cx.vec_id, vv
          |ORDER BY cx.vec_id, pos""".stripMargin
 
-  /** DuckDB replay of [[pcaPowerOn]], generated beside the operator
-    * so the round count and every unit constant can't drift: the same
-    * quantization, the same integer covariance codes, the same
-    * unrolled renormalized power rounds, the same Rayleigh quotient.
-    * HUGEINT stands in for DECIMAL(38,0); both engines' integer
-    * division truncates toward zero. */
   /** Shared CTE chain (quantize → center → grid → power rounds) for
     * both generated PCA oracles. `cx` and `c` are MATERIALIZED (the
     * ml_gbt_stumps posture): without the hint DuckDB re-inlines the
@@ -1877,6 +1870,12 @@ object SimilarityOps {
        |$rounds""".stripMargin
   }
 
+  /** DuckDB replay of [[pcaPowerOn]], generated beside the operator
+    * so the round count and every unit constant can't drift: the same
+    * quantization, the same integer covariance codes, the same
+    * unrolled renormalized power rounds, the same Rayleigh quotient.
+    * HUGEINT stands in for DECIMAL(38,0); both engines' integer
+    * division truncates toward zero. */
   private[graft] def pcaOracleSql: String = {
     val last = s"v$pcaIters"
     pcaCoreCtes(pcaIters) + ",\n" +

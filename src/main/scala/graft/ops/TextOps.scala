@@ -3,6 +3,7 @@ package graft.ops
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Reuse
 
 /** Text-analysis operators for a large-scale training-data pipeline:
   * token counting, quality scoring, language ID, and winnowing
@@ -246,7 +247,7 @@ object TextOps {
     val mg = udaf(new graft.functions.MisraGriesAgg(capacity))
     val terms = graft.Tables.spread(Tables.documents(s, d))
       .select(explode(toks(lower(col("text")))).as("term"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val sketch = terms.agg(mg(col("term")).as("sk"))
       .select(explode(col("sk")).as(Seq("term", "est")))
     val totals = terms.agg(count(lit(1)).as("__total"))
@@ -581,7 +582,7 @@ object TextOps {
     // runs once per subtree
     val tok = graft.Tables.spread(docs)
       .select(col("doc_id"), explode(toks(col("text"))).as("tok"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val counts = tok.groupBy(col("tok")).agg(count(lit(1)).as("c"))
     val totals = counts.agg(sum(col("c")).as("n"), count(lit(1)).as("v"))
     tok.join(counts, "tok")
@@ -625,7 +626,7 @@ object TextOps {
     // tok feeds the model fit AND the scoring pass
     val tok = graft.Tables.spread(docs)
       .select(col("doc_id"), toks(col("text")).as("ws"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val train = tok.filter(col("doc_id") % 2 === 0)
     val uni = train.select(explode(col("ws")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cu"))
@@ -691,7 +692,7 @@ object TextOps {
     // and each would otherwise re-run the lmScore join chain
     val j = lmScoreOn(docs.select(col("doc_id"), col("text")))
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val offs = j.groupBy(col("lang")).agg(count(lit(1)).as("nl"))
       .withColumn("off", coalesce(sum(col("nl")).over(
         Window.orderBy(col("lang"))
@@ -835,7 +836,7 @@ object TextOps {
                      topN: Int = 20, minCount: Int = 5): DataFrame = {
     val tok = graft.Tables.spread(docs)
       .select(col("doc_id"), toks(col("text")).as("ws"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val uni = tok.select(explode(col("ws")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
     val totals = uni.agg(sum(col("c")).as("nt"))
@@ -1026,13 +1027,13 @@ object TextOps {
     // (vocabulary-sized) feeds class totals, the vocab, and the grid
     val docs = graft.Tables.spread(corpus)
       .select(col("doc_id"), col("lang"), toks(lower(col("text"))).as("ws"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val train = docs.filter(col("doc_id") % 10 < 8)
     val test  = docs.filter(col("doc_id") % 10 >= 8)
     val trainTerms = train.select(col("lang"), explode(col("ws")).as("term"))
     val ctk = trainTerms.groupBy(col("lang"), col("term"))
       .agg(count(lit(1)).as("ctk"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val classTotals = ctk.groupBy(col("lang")).agg(sum(col("ctk")).as("ct"))
     val vocab = ctk.select(col("term")).distinct()
     val vocabSize = vocab.agg(count(lit(1)).as("v"))
@@ -1105,7 +1106,7 @@ object TextOps {
         coalesce((col("s1") - col("s2")).cast("decimal(14,4)"),
           lit(9999.9999).cast("decimal(14,4)")).as("margin"))
       .withColumn("mi", (col("margin") * 10000).cast("long"))
-      .localCheckpoint(false) // feeds the range scalar AND the agg
+      .transform(Reuse.shared) // feeds the range scalar AND the agg
     val range = m.agg(min(col("mi")).as("lo"), max(col("mi")).as("hi"))
     m.crossJoin(broadcast(range))
       .withColumn("bucket",
@@ -1119,43 +1120,6 @@ object TextOps {
       .orderBy(col("bucket"))
   }
 
-  /** One-vs-rest ROC AUC per class over the in-plan NB classifier —
-    * the THRESHOLD-FREE eval beside [[nbCalibration]]'s argmax
-    * accuracy (accuracy moves with class balance and the argmax
-    * cut; AUC asks only whether the class-c score RANKS true-c docs
-    * above the rest — the discrimination question a router or
-    * re-weighting consumer actually cares about). Shares
-    * [[nbScoredOn]], so the eval and the classifier cannot drift.
-    *
-    * The ranked statistic is the within-doc ONE-VS-REST MARGIN
-    * (score_c − best other class's score), not the raw class
-    * log-score: raw NB scores are length-confounded ACROSS documents
-    * (every class's log-likelihood grows more negative with doc
-    * length, so cross-doc ranking measures length, not class
-    * evidence — observed: raw-score AUC ≈ 0.5 on the sf corpus while
-    * argmax accuracy beats chance decisively). The margin cancels
-    * the shared length term within each doc — the same top-1−top-2
-    * statistic [[nbCalibration]] banks on, here generalized per
-    * class — and stays an EXACT DECIMAL(14,4) difference (no
-    * softmax; libm exp is engine-varying).
-    *
-    * AUC is computed as the Mann-Whitney statistic (AUC =
-    * U/(n⁺·n⁻)), and the rank machinery is exactly
-    * [[Analytics.mannWhitney]]'s: per (class, distinct 4dp margin)
-    * counts ride the shared distributed [[PrefixSum]] — NEVER a
-    * per-row rank window (partition-less sort = the banned
-    * scale-killer), and the ranked frame is the distinct-VALUE
-    * lattice (bounded by the 4dp margin range), not the corpus.
-    * Per-class rank offsets subtract in one #classes-row broadcast:
-    * cum-within-class = global cum − the class's min cum (the
-    * exclusive prefix at each class's first value is by construction
-    * the total count of earlier classes). Tie handling is the exact
-    * average-rank formula in HALF-RANK integers (2·rank̄ =
-    * 2·cum_below + n + 1); sums ride DECIMAL(38,0); only the final
-    * AUC/Gini divisions run in double, identically ordered in the
-    * oracle. Degenerate classes (no positives or no negatives in the
-    * test split) report null rather than a NaN that differs by
-    * engine. */
   /** HASHING-TRICK feature vectorization (Weinberger et al. 2009) —
     * the fixed-width text featurizer that needs NO vocabulary pass:
     * term → bucket md5 % V with a ± sign from an independent hash
@@ -1222,14 +1186,14 @@ object TextOps {
       .select(col("doc_id"), col("lang"),
         (col("doc_id") % folds).as("fold"),
         toks(lower(col("text"))).as("ws"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val foldIds = sp.range(folds).select(col("id").as("fold"))
     // the one expensive frame — four rollups and the grid read it
     val ctkf = docs
       .select(col("lang"), col("fold"), explode(col("ws")).as("term"))
       .groupBy(col("lang"), col("term"), col("fold"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val ctk = ctkf.groupBy(col("lang"), col("term"))
       .agg(sum(col("c")).as("ctk"))
     val tt = ctkf.groupBy(col("term")).agg(sum(col("c")).as("tt"))
@@ -1240,7 +1204,7 @@ object TextOps {
       .join(ttf, Seq("term", "fold"), "left")
       .filter(col("tt") - coalesce(col("ttf"), lit(0L)) > 0)
       .select(col("term"), col("fold"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val vFold = vocabFold.groupBy(col("fold")).agg(count(lit(1)).as("v"))
     val ctf = ctkf.groupBy(col("lang"), col("fold"))
       .agg(sum(col("c")).as("ctf"))
@@ -1296,6 +1260,43 @@ object TextOps {
       .orderBy(col("fold"))
   }
 
+  /** One-vs-rest ROC AUC per class over the in-plan NB classifier —
+    * the THRESHOLD-FREE eval beside [[nbCalibration]]'s argmax
+    * accuracy (accuracy moves with class balance and the argmax
+    * cut; AUC asks only whether the class-c score RANKS true-c docs
+    * above the rest — the discrimination question a router or
+    * re-weighting consumer actually cares about). Shares
+    * [[nbScoredOn]], so the eval and the classifier cannot drift.
+    *
+    * The ranked statistic is the within-doc ONE-VS-REST MARGIN
+    * (score_c − best other class's score), not the raw class
+    * log-score: raw NB scores are length-confounded ACROSS documents
+    * (every class's log-likelihood grows more negative with doc
+    * length, so cross-doc ranking measures length, not class
+    * evidence — observed: raw-score AUC ≈ 0.5 on the sf corpus while
+    * argmax accuracy beats chance decisively). The margin cancels
+    * the shared length term within each doc — the same top-1−top-2
+    * statistic [[nbCalibration]] banks on, here generalized per
+    * class — and stays an EXACT DECIMAL(14,4) difference (no
+    * softmax; libm exp is engine-varying).
+    *
+    * AUC is computed as the Mann-Whitney statistic (AUC =
+    * U/(n⁺·n⁻)), and the rank machinery is exactly
+    * [[Analytics.mannWhitney]]'s: per (class, distinct 4dp margin)
+    * counts ride the shared distributed [[PrefixSum]] — NEVER a
+    * per-row rank window (partition-less sort = the banned
+    * scale-killer), and the ranked frame is the distinct-VALUE
+    * lattice (bounded by the 4dp margin range), not the corpus.
+    * Per-class rank offsets subtract in one #classes-row broadcast:
+    * cum-within-class = global cum − the class's min cum (the
+    * exclusive prefix at each class's first value is by construction
+    * the total count of earlier classes). Tie handling is the exact
+    * average-rank formula in HALF-RANK integers (2·rank̄ =
+    * 2·cum_below + n + 1); sums ride DECIMAL(38,0); only the final
+    * AUC/Gini divisions run in double, identically ordered in the
+    * oracle. Degenerate classes (no positives or no negatives in the
+    * test split) report null rather than a NaN that differs by
+    * engine. */
   def nbAuc(s: SparkSession, d: String): DataFrame =
     nbAucOn(Tables.documents(s, d))
 
@@ -1304,15 +1305,13 @@ object TextOps {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("score").desc, col("lang"))
-    // EAGER checkpoint: the frame feeds THREE sibling branches of one
-    // job (margins, top-1, top-2); a lazy checkpoint fills its blocks
-    // on first compute, so concurrent branch tasks would race and
-    // re-run its last stage up to 3x (under AQE the shuffle stages
-    // below it already ran at build; measured: 10.4s lazy vs ~4s
-    // eager at sf0.1). Eager pays it exactly once, before the joins.
+    // eager: the frame feeds THREE sibling branches of one job
+    // (margins, top-1, top-2), whose tasks would race to fill lazy
+    // blocks and re-run its last stage up to 3x (measured: 10.4s lazy
+    // vs ~4s eager at sf0.1)
     val ranked = nbScoredOn(corpus)
       .withColumn("rk", row_number().over(w))
-      .localCheckpoint(true)
+      .transform(Reuse.barrier)
     val top1 = ranked.filter(col("rk") === 1)
       .select(col("doc_id"), col("lang").as("lang1"),
         col("score").cast("decimal(14,4)").as("s1"))
@@ -1331,7 +1330,7 @@ object TextOps {
     val g = sc.groupBy(col("lang"), col("v"))
       .agg(sum(col("ip")).as("np"), count(lit(1)).as("n"))
     val c = PrefixSum.exclusive(g, Seq(col("lang"), col("v")), col("n"))
-      .localCheckpoint(false) // feeds the offsets scalar AND the agg
+      .transform(Reuse.shared) // feeds the offsets scalar AND the agg
     val off = c.groupBy(col("lang")).agg(min(col("__cum")).as("__o"))
     val agg = c.join(broadcast(off), "lang")
       .groupBy(col("lang"))
@@ -1379,12 +1378,11 @@ object TextOps {
     * (the text_lm_bigram pattern — no window, no sequence shuffle);
     * the winning pair is a 1-row TakeOrdered broadcast back onto a
     * row-local string rewrite. `rounds` scans of the corpus total,
-    * with a localCheckpoint(false) per round so the plan does not
-    * re-derive earlier rounds (the ml_kmeans_plan lesson). The
-    * rounds run while the frame is BUILT, not at its action: each
-    * round's rewrite needs its `top` broadcast, so building it runs
-    * the pair count (text_bpe_merges at sf0.001: 8 jobs to build, 4
-    * with AQE off).
+    * with a `Reuse.roundCut` per round so the plan does not re-derive
+    * earlier rounds (the ml_kmeans_plan lesson). The rounds run while
+    * the frame is BUILT, not at its action: each round's rewrite
+    * needs its `top` broadcast, so building it runs the pair count
+    * (text_bpe_merges at sf0.001: 8 jobs to build, 4 with AQE off).
     *
     * Merge application = greedy left-to-right non-overlapping, the
     * BPE standard. The corpus rides as one ``-delimited string
@@ -1432,7 +1430,7 @@ object TextOps {
 
   /** Same over any (doc_id, text) frame. */
   def bpeMergesOn(docs: DataFrame, rounds: Int, topTokens: Int): DataFrame = {
-    var corpus = bpeStage(Tables.spread(docs)).localCheckpoint(false)
+    var corpus = Reuse.roundCut(bpeStage(Tables.spread(docs)))
     var merges: DataFrame = null
     for (r <- 1 to rounds) {
       val top = bpePairCounts(corpus)
@@ -1441,7 +1439,7 @@ object TextOps {
       val row = top.select(lit(r).cast("long").as("rnd"),
         regexp_replace(col("pair"), " ", "_").as("item"), col("cnt"))
       merges = if (merges == null) row else merges.unionByName(row)
-      corpus = bpeApply(corpus, top).localCheckpoint(false)
+      corpus = Reuse.roundCut(bpeApply(corpus, top))
     }
     val vocab = corpus
       .select(explode(bpeTokens(col("s"))).as("item"))
@@ -1474,15 +1472,15 @@ object TextOps {
   /** Same over any (doc_id, text) frame. */
   def bpeEncodeOn(docs: DataFrame, rounds: Int): DataFrame = {
     val staged = bpeStage(Tables.spread(docs))
-    var train = staged.filter(col("doc_id") % 2 === 0).localCheckpoint(false)
+    var train = Reuse.roundCut(staged.filter(col("doc_id") % 2 === 0))
     var heldOut = staged.filter(col("doc_id") % 2 === 1)
-      .localCheckpoint(false)
+      .transform(Reuse.roundCut)
     for (_ <- 1 to rounds) {
       val top = bpePairCounts(train)
         .orderBy(col("cnt").desc, col("pair").asc).limit(1)
         .select(col("pair"), col("cnt"))
-      train = bpeApply(train, top).localCheckpoint(false)
-      heldOut = bpeApply(heldOut, top).localCheckpoint(false)
+      train = Reuse.roundCut(bpeApply(train, top))
+      heldOut = Reuse.roundCut(bpeApply(heldOut, top))
     }
     staged.filter(col("doc_id") % 2 === 1)
       .select(col("doc_id"), size(bpeTokens(col("s"))).as("n_before"))

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Reuse
 
 /** Time-series feature engineering — the reference's resample /
   * pivot / split pipeline (GluePySparkMLFeatureEngineering.ipynb
@@ -1066,10 +1067,9 @@ object TimeSeriesOps {
     val daily = Tables.events(s, d)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-      // three passes read the day frame (median fix, deviation build,
-      // rank counts) — calendar×series sized, eager-checkpoint ends
-      // the events scan once
-      .localCheckpoint(true)
+      // three passes read the calendar×series-sized day frame
+      // (median fix, deviation build, rank counts)
+      .transform(Reuse.barrier)
     val med = daily.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_days"),
         round(expr("percentile(cnt, 0.5)"), 4).as("med"),
@@ -1144,10 +1144,9 @@ object TimeSeriesOps {
 
   /** Same over any (event_type, dd, cnt) day-indexed frame. */
   def theilSenOn(daily0: DataFrame): DataFrame = {
-    // the daily frame is calendar-sized but feeds FOUR branches (both
-    // self-join sides, the residual join, and the slope chain) — an
-    // eager checkpoint makes the corpus aggregation run once
-    val daily = daily0.localCheckpoint(true)
+    // the calendar-sized daily frame feeds FOUR branches (both
+    // self-join sides, the residual join, and the slope chain)
+    val daily = Reuse.barrier(daily0)
     val a = daily.select(col("event_type"),
       col("dd").as("di"), col("cnt").as("yi"))
     val b = daily.select(col("event_type"),

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Reuse
 import org.apache.spark.sql.types.StructType
 
 /** Sources and sinks — the reference's I/O surface re-expressed:
@@ -110,7 +111,7 @@ object Sources {
     // both union branches below — without it the data would scan twice
     val stats = df.groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
-      .localCheckpoint()
+      .transform(Reuse.barrier)
     // a ZERO-ROW part file produces no input_file_name() group, so the
     // row-derived pass alone under-covers the directory — and an
     // uncovered file is exactly what readPruned's staleness check

@@ -4,6 +4,7 @@ import graft.Tables
 import graft.etl.Mapping
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Reuse
 
 /** Versioned CDC snapshots: fold a change feed, epoch by epoch,
   * into a snapshot through [[Mapping.applyChanges]]
@@ -49,22 +50,19 @@ object ChangeStreams {
       s"need 1 <= keepVersions <= epochs: $keepVersions/$epochs")
     // each retained version's audit re-reads its whole fold prefix;
     // checkpoint the shared leaf so the epoch slices scan it once
-    val ch = changes.localCheckpoint(false)
+    val ch = Reuse.shared(changes)
     val base0 = ch.select(col("user_id"), col("v_micro")).limit(0)
     // snaps(k) = snapshot AFTER folding epoch k (version id k).
-    // Each snapshot rides a localCheckpoint(false): version k+1's fold
-    // and version k's audit then read ONE materialized copy — the
-    // un-checkpointed chain re-evaluated the whole fold prefix per
-    // retained version (12 applyChanges windows for 5 epochs × 3
-    // versions instead of 5). Still zero driver-side collection, but
-    // not zero jobs before the action: under AQE building each
-    // checkpoint runs the fold's shuffle stages below it
-    // (cdc_snapshot_versions at sf0.001: 14 jobs to build, 5 with AQE
-    // off).
+    // Each snapshot is a round cut: version k+1's fold and version
+    // k's audit then read ONE materialized copy — the uncut chain
+    // re-evaluated the whole fold prefix per retained version (12
+    // applyChanges windows for 5 epochs × 3 versions instead of 5).
+    // Still zero driver-side collection (cdc_snapshot_versions at
+    // sf0.001: 14 jobs to build, 5 with AQE off).
     val snaps = (0 until epochs).scanLeft(base0) { (base, k) =>
       Mapping.applyChanges(base, ch.filter(col("epoch") === k),
         keys = Seq("user_id"), opCol = "op", ord = Seq("event_id"))
-        .localCheckpoint(false)
+        .transform(Reuse.roundCut)
     }.drop(1)
     Versions.stack(epochs - keepVersions until epochs) { k =>
       snaps(k).agg(

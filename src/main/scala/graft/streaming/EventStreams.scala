@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Reuse
 
 /** Stream-shaped operators over the events table, run in batch and
   * checked by the oracle: windowed aggregates, stream-static and
@@ -231,7 +232,7 @@ object EventStreams {
           .filter(tup(i + 1) > col("__pt") &&
             col("tus") >= col("__pt.tus"))
           .groupBy(col("user_id")).agg(min(tup(i + 1)).as("__t"))
-    }.map(_.localCheckpoint(false)) // every retained version counts each frame
+    }.map(Reuse.shared) // every retained version counts each frame
     stack(retained) { k =>
       funnelStageNames.zip(reached).zipWithIndex.map { case ((stage, users), i) =>
         users.filter(col("__t.epoch") <= k)
@@ -318,7 +319,7 @@ object EventStreams {
     // every retained version aggregates this one pass
     val conv = graft.ops.Analytics
       .lastTouchCredit(tagged, Seq(col("epoch")), attributionWindowDays)
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     stack(retained) { k =>
       val cnt = conv.filter(col("epoch") <= k)
         .groupBy(col("touch_type")).agg(count(lit(1)).as("n_purchases"))
@@ -366,7 +367,7 @@ object EventStreams {
       .select(date_trunc("day", col("ts")).as("day")).distinct()
     val scored = graft.ops.TimeSeriesOps.anomalyZScore(s, d)
       .join(broadcast(dayEpochs(days)), Seq("day"))
-      .localCheckpoint(false) // every retained version filters this one pass
+      .transform(Reuse.shared) // every retained version filters this one pass
     stack(retained) { k =>
       scored.filter(col("epoch") <= k)
         .select(lit(k.toLong).as("version"), col("event_type"),
@@ -398,7 +399,7 @@ object EventStreams {
       .changepointsOn(daily, changepointWindow, changepointMinScore)
       .join(trig, Seq("event_type", "day"))
       .join(broadcast(ep), Seq("__trigger"))
-      .localCheckpoint(false) // every retained version filters this one pass
+      .transform(Reuse.shared) // every retained version filters this one pass
     stack(retained) { k =>
       scored.filter(col("epoch") <= k)
         .select(lit(k.toLong).as("version"), col("event_type"),
@@ -419,7 +420,7 @@ object EventStreams {
       .select(date_trunc("day", col("ts")).as("day")).distinct()
     val scored = graft.ops.TimeSeriesOps.ewma(s, d)
       .join(broadcast(dayEpochs(days)), Seq("day"))
-      .localCheckpoint(false) // every retained version filters this one pass
+      .transform(Reuse.shared) // every retained version filters this one pass
     stack(retained) { k =>
       scored.filter(col("epoch") <= k)
         .select(lit(k.toLong).as("version"), col("event_type"),
@@ -490,7 +491,7 @@ object EventStreams {
       .select(date_trunc("day", col("ts")).as("day")).distinct()
     val scored = conformalMonitorBatch(s, d)
       .join(broadcast(dayEpochs(days)), Seq("day"))
-      .localCheckpoint(false) // every retained version filters this one pass
+      .transform(Reuse.shared) // every retained version filters this one pass
     stack(retained) { k =>
       scored.filter(col("epoch") <= k)
         .select(lit(k.toLong).as("version"), col("event_type"),

@@ -4,6 +4,7 @@ import graft.functions.MisraGriesAgg
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Reuse
 
 /** Versioned sketch audits: fold a feed's epochs through a mergeable
   * sketch, one published version per epoch, and emit audit rows for
@@ -90,9 +91,9 @@ object SketchStreams {
     // ONE corpus-scale tokenize, checkpointed; everything exact below reads
     // the (epoch, term, n) count frame — vocabulary-sized — instead
     // of re-scanning tokens per version
-    val terms = epochTerms(s, d).localCheckpoint(false)
+    val terms = Reuse.shared(epochTerms(s, d))
     val counts = terms.groupBy(col("epoch"), col("term"))
-      .agg(count(lit(1)).as("n")).localCheckpoint(false)
+      .agg(count(lit(1)).as("n")).transform(Reuse.shared)
     val empty = terms.select(col("term"), lit(0L).as("est")).limit(0)
     // ALL per-epoch slice summaries in ONE pass over the checkpointed
     // tokens (groupBy epoch + the same MisraGriesAgg — identical
@@ -102,14 +103,13 @@ object SketchStreams {
     // published verdict booleans are MG guarantee theorems, invariant
     // to partial-merge order, so the audit values cannot move.
     val parts = terms.groupBy(col("epoch")).agg(mg(col("term")).as("sk"))
-      .localCheckpoint(true) // epochs rows, each ≤ capacity entries
-    // each merged summary is ≤ capacity rows: EAGER-checkpoint it so
-    // version v's audit doesn't re-run the whole fold chain (the
-    // first cut re-derived every prefix — 13s at sf0.1 vs ~4s now)
+      .transform(Reuse.barrier) // epochs rows, each ≤ capacity entries
+    // each merged summary is ≤ capacity rows: version v's audit must
+    // not re-run the fold chain (13s at sf0.1 vs ~4s as a barrier)
     val summaries = (0 until epochs).scanLeft(empty) { (base, e) =>
       val part = parts.filter(col("epoch") === e)
         .select(explode(col("sk")).as(Seq("term", "est")))
-      mgMerge(base, part, capacity).localCheckpoint(true)
+      Reuse.barrier(mgMerge(base, part, capacity))
     }.drop(1)
     stack(retained) { v =>
       val pc = counts.filter(col("epoch") <= v)
@@ -145,14 +145,14 @@ object SketchStreams {
     // is a filter+sum, not a corpus re-scan
     val counts = epochTerms(s, d)
       .groupBy(col("epoch"), col("term"))
-      .agg(count(lit(1)).as("n")).localCheckpoint(false)
+      .agg(count(lit(1)).as("n")).transform(Reuse.shared)
     val cells = counts
       .withColumn("i", explode(sequence(lit(0), lit(depth - 1))))
       .select(col("epoch"), col("i"),
         cmBucket(col("i"), col("term"), width), col("n"))
       .groupBy(col("epoch"), col("i"), col("bucket"))
       .agg(sum(col("n")).as("cnt"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     stack(retained) { v =>
       val grid = cells.filter(col("epoch") <= v)
         .groupBy(col("i"), col("bucket")).agg(sum(col("cnt")).as("cnt"))
@@ -195,7 +195,7 @@ object SketchStreams {
     val counts = graft.ops.Analytics.withPsiBin(staged, col("epoch") === 0)
       .groupBy(col("epoch"), col("bin"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     stack(retained) { v =>
       val cnt = counts.filter(col("epoch") <= v)
         .groupBy(col("bin"))
@@ -237,12 +237,12 @@ object SketchStreams {
     // the per-version legs read them instead of re-deriving.
     val skPerEpoch = ev.groupBy(col("event_type"), col("epoch"))
       .agg(hll_sketch_agg(col("user_id"), lgK).as("sk"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     val firstSeen = ev.groupBy(col("event_type"), col("user_id"))
       .agg(min(col("epoch")).as("fe"))
       .groupBy(col("event_type"), col("fe"))
       .agg(count(lit(1)).as("nu"))
-      .localCheckpoint(false)
+      .transform(Reuse.shared)
     stack(retained) { v =>
       val folded = skPerEpoch.filter(col("epoch") <= v)
         .groupBy(col("event_type"))

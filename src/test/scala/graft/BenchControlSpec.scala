@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.graftbridge.Reuse
 import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,11 +15,11 @@ class BenchControlSpec extends AnyFunSuite with SparkSpec {
 
   test("clearStorage drops checkpoint RDD blocks clearCache leaves") {
     // The storage-clean contract (VERDICT r13 ask #1): operators
-    // localCheckpoint intermediates that the returned plan cannot
-    // unpersist; clearCache() only drops catalog-tracked Dataset
-    // caches, so checkpoint blocks accumulate across a bench run.
-    // clearStorage must sweep BOTH.
-    val ds = spark.range(100).localCheckpoint(true)
+    // reuse intermediates through Reuse, whose checkpoint blocks the
+    // returned plan cannot unpersist; clearCache() only drops
+    // catalog-tracked Dataset caches, so checkpoint blocks accumulate
+    // across a bench run. clearStorage must sweep BOTH.
+    val ds = Reuse.barrier(spark.range(100).toDF())
     ds.count() // materialize the checkpoint blocks
     spark.range(10).cache().count()
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty)

@@ -33,9 +33,13 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
   * No entry may read the context-wide CacheManager either: a
   * `.cache()` registers its plan there for EVERY session on the
   * context, so another session's run of the same operator would read
-  * (or clear) it. Operators reuse intermediates through
-  * `localCheckpoint` only, and each entry's plan must hold no
-  * `InMemoryRelation`.
+  * (or clear) it. Each entry's plan must hold no `InMemoryRelation`,
+  * and `src/main` reuses intermediates only through
+  * `org.apache.spark.sql.graftbridge.Reuse`: `shared` (lazy; read
+  * more than once by the plan being built), `roundCut` (lazy; a
+  * fixed-point loop's state) and `barrier` (eager; read by the driver
+  * next). It lives in Spark's `sql` package so that plans name each
+  * checkpoint's intent and the operator's line, not `Reuse.scala`.
   */
 class IsolationSpec extends SparkSpec {
 
@@ -49,6 +53,22 @@ class IsolationSpec extends SparkSpec {
   // alphabetically, each against reset state.
   private val names =
     "q_union_counts" +: SparkEntry.queries.keys.toSeq.filterNot(_ == "q_union_counts").sorted
+
+  test("src/main reuses intermediates only through Reuse") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val raw = """localCheckpoint\(|\.checkpoint\(|\.cache\(|\.persist\(""".r
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"no $root under ${sys.props("user.dir")}")
+    val reuse = root.resolve("org/apache/spark/sql/graftbridge/Reuse.scala")
+    val files = scala.util.Using.resource(Files.walk(root))(_.iterator.asScala.toList)
+    val hits = for {
+      f <- files if f.toString.endsWith(".scala") && f != reuse
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if raw.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("reuse outside Reuse:\n", "\n", ""))
+  }
 
   names.foreach { name =>
     test(s"$name runs against fresh session state") {

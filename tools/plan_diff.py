@@ -12,7 +12,7 @@ that carry no meaning, so both dumps are normalized first:
 - lambda class names and object hashes (`$$Lambda$5671/0x...@5ca15fbc`),
 - the random part of temp directory names (`graft_daily_e2e_123...`,
   UUIDs),
-- source line numbers (`at localCheckpoint at CurateOps.scala:40`), which
+- source line numbers (`at shared at CurateOps.scala:40`), which
   move whenever the file is edited above the call site.
 
 Each entry is then `same` (identical normalized text), `reordered` or
