@@ -22,9 +22,10 @@ class ReuseSpec extends SparkSpec {
   private def checkpointRdd(df: DataFrame) =
     df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }.get
 
-  /** (jobs started, jobs ended) by `body` on this thread, counted by
-    * a job group as DedupSpec's connected-components pin does;
-    * suites share one context and run concurrently. With AQE off. */
+  /** `body`'s result and the jobs it started and ended on this
+    * thread, with AQE off. Counted by a job group as DedupSpec's
+    * connected-components pin does: suites share one context and run
+    * concurrently. */
   private def jobsOf[T](body: => T): (T, Int, Int) = {
     val group = s"reuse-${java.util.UUID.randomUUID()}"
     val started, ended = new java.util.concurrent.atomic.AtomicInteger(0)
